@@ -204,15 +204,25 @@ object Bench {
     * The <1,900 B contract is enforced twice: the require here (trips
     * in every local run and spec) and BenchEmissionSpec's worst-case
     * render.
+    *
+    * A failed query must never make the record look better: the totals
+    * leave it out, so `shared_set_n` counts only the shared-set queries
+    * actually measured, and `failed` names the failures — capped at
+    * `failedBudget` bytes, the rest summarized as "+N more" (every
+    * failure is also named on stderr).
     */
   def finalLine(total: Double, walls: Map[String, Double],
       calPre: (Double, Double), calPost: (Double, Double),
       bwPre: (Double, Double), bwPost: (Double, Double),
-      contended: Boolean, sharedTotal: Double, retryTotal: Double,
-      sfDir: String): String = {
+      contended: Boolean, sharedTotal: Double, sharedN: Int,
+      retryTotal: Double, failed: Seq[String], sfDir: String): String = {
     val qs = flagships
       .map(k => "\"" + k + "\":" + f"${walls.getOrElse(k, -1.0)}%.3f")
       .mkString("{", ",", "}")
+    val quoted = failed.map("\"" + _ + "\"")
+    val fits = quoted.scanLeft(0)(_ + _.length + 1).tail.takeWhile(_ <= failedBudget).size
+    val shown = quoted.take(fits) ++
+      (if (fits < quoted.size) Seq(s"\"+${quoted.size - fits} more\"") else Nil)
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,""" +
         f""""cal_single_s":${calPre._1}%.3f,"cal_allcores_s":${calPre._2}%.3f,""" +
@@ -220,13 +230,16 @@ object Bench {
         f""""cal_membw_gbps":${bwPre._1}%.1f,"cal_membw_allcores_gbps":${bwPre._2}%.1f,""" +
         f""""cal_post_membw_gbps":${bwPost._1}%.1f,"cal_post_membw_allcores_gbps":${bwPost._2}%.1f,""" +
         f""""contended":$contended,"shared_set_total":$sharedTotal%.3f,""" +
-        f""""shared_set_n":${sharedSet69.size},"shared_set_retry_total":$retryTotal%.3f,""" +
-        f""""sf":"$sfDir"}"""
+        f""""shared_set_n":$sharedN,"shared_set_retry_total":$retryTotal%.3f,""" +
+        f""""failed":${shown.mkString("[", ",", "]")},"sf":"$sfDir"}"""
     require(line.getBytes("UTF-8").length < 1900,
       s"final bench line is ${line.getBytes("UTF-8").length} B >= 1900 B — " +
         "would outrun the driver's 2,000-byte tail capture (r17/r19 failure mode)")
     line
   }
+
+  /** Byte budget of the final line's `failed` names. */
+  private val failedBudget = 240
 
   private def heapUsedMb: Long = {
     val rt = Runtime.getRuntime
@@ -273,12 +286,14 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
     def run(name: String): Double = {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
         return -1.0
       }
       (System.nanoTime() - t0) / 1e9
@@ -518,9 +533,9 @@ object Bench {
     // Round-over-round comparison basis: the pinned 69-query set's
     // total, machine-readable so the trajectory stops recomputing it
     // from prose (r17 verdict task 5).
-    val sharedTotal = results
+    val sharedMeasured = results
       .collect { case (k, v, _, _, _) if sharedSet69.contains(k) && v >= 0 => v }
-      .sum
+    val sharedTotal = sharedMeasured.sum
     // Contamination self-labeling (r20, verdict task 2): the r19 driver
     // record read 42.1 s where the identical tree's quiet-box run read
     // 35.95 s, and the calibration pair already flagged it (post-single
@@ -600,7 +615,8 @@ object Bench {
     println(finalLine(total, results.map(r => r._1 -> r._2).toMap,
       (calSingle, calAll), (calSingle2, calAll2),
       (bwSingle, bwAll), (bwSingle2, bwAll2), contended, sharedTotal,
-      retryTotal, sfDir))
+      sharedMeasured.size, retryTotal, failed.toSeq, sfDir))
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

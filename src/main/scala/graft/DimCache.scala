@@ -1,25 +1,28 @@
 package graft
 
-/** Process-wide cache for driver-collected *dimensions* derived from a
-  * dataset directory: tokenizer vocabularies, BPE merge tables, embedding
-  * dimensionality guards.
+import java.nio.file.{Files, Path}
+
+/** The process's one memo: write-once values derived from a dataset
+  * directory — parquet reader relations, tokenizer vocabularies, BPE
+  * merge tables, ANN centroids, bounds and codebooks, and the persisted
+  * or staged artifacts built from them.
   *
-  * Why: these are bounded, deterministic values (a vocab is a dimension
-  * table, a dims-guard is a 1-row aggregate), but each costs a full Spark
-  * job to compute. Query *builders* need them at plan-construction time,
-  * so without a cache every invocation of `text_wordpiece` or
-  * `dedup_emb_cosine` pays the job again — in a 7-rep benchmark that is 7
-  * vocab builds for one measurement, and at 100 TB it is 7 corpus scans.
-  * Keyed on the dataset dir (plus the deriving parameters), the value is
-  * computed once per JVM per dataset — the same lifecycle as a broadcast
-  * dimension table.
+  * One-owner rule: every key has exactly ONE definition, a single
+  * `DimCache.cached` call site whose thunk is the only way that value
+  * is built; a module that needs the value calls that definition, never
+  * re-states the key with its own copy of the compute. Readers follow
+  * the same rule (`Tables`), and no other module keeps a map of its own.
+  * `DimCacheSpec` audits the sources for both.
   *
-  * Values must be deterministic functions of (dir, params): the testdata
-  * under a dir is immutable for the life of a run, so a stale entry is
-  * impossible in the driver/bench/verify lifecycles this library targets.
+  * Why a memo: each value costs a Spark job (a listing, a scan, an
+  * encode) yet is a bounded, deterministic function of (dir, params)
+  * that builders need at plan-construction time, so it is computed once
+  * per JVM per dataset — the lifecycle of a broadcast dimension table.
+  * The data under a dir is immutable for the life of a run, so an entry
+  * cannot go stale; a session-bound value keys on its session.
   */
 object DimCache {
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+  private val cache = new java.util.concurrent.ConcurrentHashMap[AnyRef, AnyRef]()
 
   /** A thunk evaluated at most once; `lazy val` gives the per-key
     * memoization lock, so the map's bin lock never holds a Spark job.
@@ -27,14 +30,13 @@ object DimCache {
   private final class Memo(f: () => AnyRef) { lazy val value: AnyRef = f() }
 
   /** Return the cached value for `key`, computing (and caching) it on
-    * first use. `compute` may run Spark jobs; concurrent first callers of
-    * the same key serialize on the entry's memo lock — NOT inside
+    * first use. `compute` may run Spark jobs and may itself call
+    * `cached`: it runs on the entry's memo lock, outside
     * `computeIfAbsent`, which would hold the hash-bin lock for the whole
-    * job (blocking unrelated keys in the same bin) and turn any
-    * re-entrant `cached` call from inside a compute into
+    * job and turn a nested call on a key in the same bin into
     * IllegalStateException("Recursive update").
     */
-  def cached[T <: AnyRef](key: String)(compute: => T): T =
+  def cached[T <: AnyRef](key: AnyRef)(compute: => T): T =
     cache.computeIfAbsent(key, _ => new Memo(() => {
       // Build evidence on stderr: exactly one line per key per JVM. In a
       // bench run this is the reuse proof — the line appears during the
@@ -44,6 +46,46 @@ object DimCache {
       compute
     })).asInstanceOf[Memo].value.asInstanceOf[T]
 
-  /** Test hook: drop all cached entries. */
-  def clear(): Unit = cache.clear()
+  /** Dataset tag of write-once artifacts and warehouse table names: the
+    * first 64 bits of SHA-256 over the dir path. Two processes (or one
+    * JVM) working on DIFFERENT dirs must not clobber each other's
+    * copies, and a 32-bit String.hashCode can collide across dirs.
+    */
+  def fingerprint(dir: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+
+  /** Where the write-once artifact `kind` of `dir` lives:
+    * `<java.io.tmpdir>/graft_<kind>_<fingerprint>`. Keyed on the dir
+    * alone, so a re-run overwrites its own copy instead of adding one;
+    * concurrent JVMs on the SAME dir are not a supported mode.
+    */
+  def artifactPath(kind: String, dir: String): String =
+    System.getProperty("java.io.tmpdir") + s"/graft_${kind}_${fingerprint(dir)}"
+
+  /** Scratch dirs, recursively deleted (best effort) at JVM exit, so
+    * repeated gate and audit runs do not pile staged copies up in the
+    * system temp dir.
+    */
+  private val tempDirs =
+    java.util.Collections.synchronizedList(new java.util.ArrayList[Path]())
+  locally {
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      tempDirs.forEach { root =>
+        try {
+          import scala.jdk.CollectionConverters._
+          val s = Files.walk(root)
+          try s.sorted(java.util.Comparator.reverseOrder())
+            .iterator().asScala.foreach(p => Files.deleteIfExists(p))
+          finally s.close()
+        } catch { case _: Exception => () }
+      }))
+  }
+
+  /** A fresh scratch dir named `prefix…`, deleted at JVM exit. */
+  def tempDir(prefix: String): String = {
+    val p = Files.createTempDirectory(prefix)
+    tempDirs.add(p)
+    p.toString
+  }
 }

@@ -135,33 +135,6 @@ object Explain {
     spark.stop()
   }
 
-  /** Staging dirs for the streaming-state audit, registered for
-    * best-effort recursive deletion at JVM exit (the StreamingGate r15
-    * pattern) — repeated audit runs must not accumulate table copies in
-    * java.io.tmpdir.
-    */
-  private val tempDirs =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[java.nio.file.Path]())
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tempDirs.forEach { root =>
-        try {
-          import scala.jdk.CollectionConverters._
-          val s = java.nio.file.Files.walk(root)
-          try s.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-          finally s.close()
-        } catch { case _: Exception => () }
-      }))
-  }
-  private def tempDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    tempDirs.add(p)
-    p.toString
-  }
-
   /** One analyzed (never started) streaming plan per stream_* gate row,
     * keyed by the gate's registered query name; `want` filters which
     * rows are built (staging dirs are created lazily, only for the
@@ -176,14 +149,14 @@ object Explain {
     import org.apache.spark.sql.DataFrame
     import graft.streaming.Streams
     lazy val evDir = {
-      val d = tempDir("graft-explain-stream")
+      val d = DimCache.tempDir("graft-explain-stream")
       Tables.events(spark, sfDir)
         .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
         .coalesce(1).write.mode("overwrite").parquet(d)
       d
     }
     lazy val docDir = {
-      val d = tempDir("graft-explain-docs")
+      val d = DimCache.tempDir("graft-explain-docs")
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text"))
         .withColumn("ts", expr("timestamp'2026-01-01 00:00:00'"))
@@ -191,7 +164,7 @@ object Explain {
       d
     }
     lazy val chgDir = {
-      val d = tempDir("graft-explain-scd2")
+      val d = DimCache.tempDir("graft-explain-scd2")
       Tables.orders(spark, sfDir).limit(64)
         .select(col("o_custkey").as("key"),
           expr("datediff(CAST(o_orderdate AS DATE), DATE'1970-01-01')")
@@ -202,9 +175,8 @@ object Explain {
       d
     }
     lazy val embStaged = {
-      val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      val d = tempDir("graft-explain-emb")
+      val emb = graft.queries.LlmOps.embVectors(spark, sfDir)
+      val d = DimCache.tempDir("graft-explain-emb")
       emb.limit(64).coalesce(1).write.mode("overwrite").parquet(d)
       (d, emb.schema)
     }
@@ -237,7 +209,7 @@ object Explain {
             .as("g8"))
           .distinct())),
       "stream_semantic_dedup" -> (() => {
-        val embTsDir = tempDir("graft-explain-embts")
+        val embTsDir = DimCache.tempDir("graft-explain-embts")
         Tables.embeddings(spark, sfDir).limit(64)
           .select(col("vec_id"),
             expr("timestamp'2024-01-01 00:00:00' + INTERVAL 1 SECOND * vec_id")
@@ -245,14 +217,7 @@ object Explain {
             expr("transform(embedding, x -> CAST(x AS DOUBLE))")
               .as("embedding"))
           .coalesce(1).write.mode("overwrite").parquet(embTsDir)
-        val cRows = graft.DimCache.cached(s"ivf-centroids:$sfDir:8") {
-          graft.operators.Similarity.centroidArrays(
-            graft.operators.Similarity.centroids(
-              Tables.embeddings(spark, sfDir).select(col("vec_id"),
-                expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-                  .as("embedding")),
-              nCells = 8))
-        }
+        val cRows = graft.queries.LlmOps.ivfCentroids(spark, sfDir)
         Streams.semanticDedupStream(spark,
           spark.readStream.schema(org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("vec_id",
@@ -266,29 +231,15 @@ object Explain {
           cRows, tau = 0.35)
       }),
       "stream_ivfsq8_encode" -> (() => {
-        val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-        val cRows = graft.DimCache.cached(s"ivf-centroids:$sfDir:8") {
-          graft.operators.Similarity.centroidArrays(
-            graft.operators.Similarity.centroids(
-              emb.select(col("vec_id"), col("e").as("embedding")),
-              nCells = 8))
-        }
-        val (mn, mx) = graft.DimCache.cached(s"sq8-bounds:$sfDir") {
-          graft.operators.Similarity.sq8Bounds(emb)
-        }
+        val (mn, mx) = graft.queries.LlmOps.sq8Bounds(spark, sfDir)
         val (d, schema) = embStaged
         graft.operators.Similarity.encodeIvfSq8(
           spark.readStream.schema(schema).parquet(d)
             .select(col("vec_id"), col("e").as("embedding")),
-          cRows, mn, mx)
+          graft.queries.LlmOps.ivfCentroids(spark, sfDir), mn, mx)
       }),
       "stream_binary_encode" -> (() => {
-        val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-        val (mn, mx) = graft.DimCache.cached(s"sq8-bounds:$sfDir") {
-          graft.operators.Similarity.sq8Bounds(emb)
-        }
+        val (mn, mx) = graft.queries.LlmOps.sq8Bounds(spark, sfDir)
         val (d, schema) = embStaged
         graft.operators.Similarity.encodeBinary(
           spark.readStream.schema(schema).parquet(d),
@@ -315,16 +266,10 @@ object Explain {
       "stream_postings" -> (() => Streams.postingsMaintain(spark, docs)),
       "stream_pq_encode" -> (() => {
         val (d, schema) = embStaged
-        // canonical key — shared with StreamingGate/LlmOps so a prior
-        // gate run in this JVM makes this a cache hit (and vice versa)
-        val cb = graft.DimCache.cached(s"pq-codebooks:$sfDir:8:16") {
-          graft.operators.Similarity.pqCodebooks(
-            Tables.embeddings(spark, sfDir).select(col("vec_id"),
-              expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e")),
-            8, 16, 8)
-        }
         graft.operators.Similarity.encodePq(
-          spark.readStream.schema(schema).parquet(d), cb, 8).drop("e")
+          spark.readStream.schema(schema).parquet(d),
+          graft.queries.LlmOps.pqCodebooks(spark, sfDir),
+          graft.queries.LlmOps.pqDsub(spark, sfDir)).drop("e")
       }),
       "stream_checkpoint_resume" -> (() => ev
         .select(col("event_id"), col("user_id"), col("event_type"),

@@ -141,23 +141,15 @@ object Scans {
 }
 
 object Tables {
-  // Per-(session, dir, table) READER memo (r22, the harness-floor item):
-  // every `spark.read.parquet(path)` builds a fresh InMemoryFileIndex
-  // and runs a footer/schema job — measured ~25-35 ms of driver + job
-  // floor PER TABLE REFERENCE per run (StageProfile: ndsh_q8 paid eight
-  // "parquet at Registry" stages before touching data). The memo reuses
-  // the RESOLVED RELATION — file listing and schema only, the exact
-  // thing the session's catalog file-index cache does for catalog
-  // tables (guide §6) — while every action still scans the parquet data
-  // itself with the same pushdown and pruning; no row or result is
-  // cached. Keyed on the session so a fresh SparkSession never sees a
-  // stale plan; testdata dirs are immutable for the life of a run (the
-  // DimCache contract).
-  private val readers = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
+  // Reader memo: a fresh `spark.read.parquet` lists files and runs a
+  // schema job per table reference (~25-35 ms of driver and job floor);
+  // the cached relation holds listing and schema only — every action
+  // still scans the data. Keyed on the session, so a fresh session never
+  // sees another session's plan.
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    readers.computeIfAbsent((spark, dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
+    DimCache.cached(("parquet", spark, dir, name)) {
+      spark.read.parquet(s"$dir/$name.parquet")
+    }
 
   def lineitem(s: SparkSession, d: String): DataFrame = table(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = table(s, d, "orders")
@@ -176,16 +168,15 @@ object Tables {
     * the same instants the ns-truncation path produced.
     */
   def events(s: SparkSession, d: String): DataFrame =
-    // memoize the NORMALIZED frame (the "#norm" key never collides with
-    // a real file name) so the ts-branch inspection also runs once
-    readers.computeIfAbsent((s, d, "events#norm"), _ => {
+    // the NORMALIZED frame, so the ts-branch inspection also runs once
+    DimCache.cached(("events", s, d)) {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val df = table(s, d, "events")
       df.schema("ts").dataType match {
         case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         case _        => df.withColumn("ts", col("ts").cast(TimestampType))
       }
-    })
+    }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

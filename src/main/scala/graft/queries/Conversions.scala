@@ -272,9 +272,7 @@ object Conversions {
     * ~2 tiles per dimension.
     */
   private def zorderedLineitemPath(s: SparkSession, dir: String): String = {
-    val tag = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    val path = System.getProperty("java.io.tmpdir") + s"/graft_zscan_$tag"
+    val path = graft.DimCache.artifactPath("zscan", dir)
     graft.DimCache.cached(s"zscan-layout:$dir") {
       graft.operators.ZOrder.clusterByZ(
         Tables.lineitem(s, dir).select(
@@ -371,11 +369,9 @@ object Conversions {
     */
   private[graft] def bloomedEventsPath(
       s: SparkSession, dir: String, bloom: Boolean, blockSize: Int): String = {
-    val tag = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
     val suffix = (if (bloom) "bloom" else "plain") +
       (if (blockSize == 64 * 1024) "" else s"_bs$blockSize")
-    val path = System.getProperty("java.io.tmpdir") + s"/graft_bscan_${suffix}_$tag"
+    val path = graft.DimCache.artifactPath(s"bscan_$suffix", dir)
     graft.DimCache.cached(s"bscan-layout:$suffix:$dir") {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),

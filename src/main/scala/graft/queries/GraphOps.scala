@@ -146,9 +146,7 @@ object GraphOps {
     */
   private def pagerankEdgesTable(s: SparkSession, dir: String): String =
     graft.DimCache.cached(s"pagerank-edges-bkt:$dir") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val tbl = s"graft_predges_bkt_$tag"
+      val tbl = s"graft_predges_bkt_${graft.DimCache.fingerprint(dir)}"
       s.sql(s"DROP TABLE IF EXISTS $tbl")
       val p = new org.apache.hadoop.fs.Path(
         s.conf.get("spark.sql.warehouse.dir") + "/" + tbl)
@@ -256,9 +254,7 @@ object GraphOps {
     */
   private def coPurchaseEdgesDir(s: SparkSession, dir: String): String =
     graft.DimCache.cached(s"copurchase-edges:$dir") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val p = System.getProperty("java.io.tmpdir") + s"/graft_cpedges_$tag"
+      val p = graft.DimCache.artifactPath("cpedges", dir)
       coPurchaseEdges(Tables.lineitem(s, dir), Tables.orders(s, dir))
         .write.mode("overwrite").parquet(p)
       p

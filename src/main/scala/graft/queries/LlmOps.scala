@@ -678,9 +678,7 @@ object LlmOps {
     */
   private def dedupIncrementalLsh(s: SparkSession, dir: String): DataFrame = {
     val idxDir = graft.DimCache.cached(s"lsh-index:$dir") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val p = System.getProperty("java.io.tmpdir") + s"/graft_lshidx_$tag"
+      val p = graft.DimCache.artifactPath("lshidx", dir)
       buildLshIndex(
         Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(10)) =!= 0), p)
       p
@@ -1049,12 +1047,80 @@ object LlmOps {
       (r.getInt(0), r.getInt(1))
     }
 
+  // The ANN dimensions of a dataset's embeddings table. Each is the ONE
+  // definition of its DimCache key: the batch builders here, the
+  // streaming twins in StreamingGate and Explain's streaming audit all
+  // read these, so a gate run and a batch run share one build.
+
+  /** The embeddings as (vec_id, e: array<double>). */
+  private[graft] def embVectors(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+
+  /** The 8 IVF centroids (strided Lehmer pick) as driver arrays: a
+    * bounded dimension whose uncached form cost every builder
+    * invocation two driver jobs (the pick and the collect).
+    */
+  private[graft] def ivfCentroids(s: SparkSession,
+      dir: String): IndexedSeq[(Int, Seq[Double])] =
+    graft.DimCache.cached(s"ivf-centroids:$dir:8") {
+      graft.operators.Similarity.centroidArrays(
+        graft.operators.Similarity.centroids(
+          embVectors(s, dir).select(col("vec_id"), col("e").as("embedding")),
+          nCells = 8))
+    }
+
+  /** Per-dimension (min, max): the SQ8 quantizer and the binary
+    * thresholds.
+    */
+  private[graft] def sq8Bounds(s: SparkSession,
+      dir: String): (IndexedSeq[Double], IndexedSeq[Double]) =
+    graft.DimCache.cached(s"sq8-bounds:$dir") {
+      graft.operators.Similarity.sq8Bounds(embVectors(s, dir))
+    }
+
+  /** The single-query top-k rows' query vector (vec_id = 0). */
+  private[graft] def queryVector(s: SparkSession, dir: String): IndexedSeq[Double] =
+    graft.DimCache.cached(s"sq8-query:$dir:0") {
+      embVectors(s, dir).filter(col("vec_id") === 0)
+        .select(col("e")).head().getSeq[Double](0).toIndexedSeq
+    }
+
+  /** Product quantization shape: M subspaces of K codewords, each
+    * subspace `pqDsub` = d / M wide.
+    */
+  private val PqM = 8
+  private val PqK = 16
+  private[graft] def pqDsub(s: SparkSession, dir: String): Int =
+    embDims(s, dir)._1 / PqM
+
+  /** PQ codebooks: the strided-pick exemplars per subspace. */
+  private[graft] def pqCodebooks(s: SparkSession,
+      dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
+    graft.DimCache.cached(s"pq-codebooks:$dir:$PqM:$PqK") {
+      graft.operators.Similarity.pqCodebooks(
+        embVectors(s, dir), PqM, PqK, pqDsub(s, dir))
+    }
+
+  /** The persisted PQ code index: the codes ARE the index structure, so
+    * encode once, persist, query many (FAISS persists its PQ codes for
+    * the same reason).
+    */
+  private def pqCodesPath(s: SparkSession, dir: String): String =
+    graft.DimCache.cached(s"pq-codes:$dir:$PqM:$PqK") {
+      val p = graft.DimCache.artifactPath("pqcodes", dir)
+      graft.operators.Similarity
+        .encodePq(embVectors(s, dir), pqCodebooks(s, dir), pqDsub(s, dir))
+        .drop("e") // codes only: the 8-bytes-per-vector contract
+        .write.mode("overwrite").parquet(p)
+      p
+    }
+
   /** Brute-force cosine top-k against a query vector (vec_id = 0) —
     * the correctness baseline for ANN. The query side is a 1-row
     * broadcast; scoring is a single map-side pass + TakeOrdered(k).
     */
   private def simCosineTopk(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val emb = embVectors(s, dir)
     val q = emb.filter(col("vec_id") === 0).select(col("e").as("qe"))
     import graft.functions.DotF64.dotf64
     emb
@@ -1294,17 +1360,9 @@ object LlmOps {
   private def simIvfTopk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("embedding"))
-    // The centroid pick is a bounded deterministic dimension of the
-    // dataset (8 rows), so collect it ONCE per JVM per dataset: uncached,
-    // every builder invocation (bench rep, verify run) paid two driver
-    // jobs (the strided pick + the collect) before the query even ran —
-    // the round-6→8 creep on this entry was exactly that per-invocation
-    // overhead. The cached arrays also rebuild `cents` as a LocalRelation,
-    // so the probe stage plans with zero extra jobs.
-    val cRows = graft.DimCache.cached(s"ivf-centroids:$dir:8") {
-      graft.operators.Similarity.centroidArrays(
-        graft.operators.Similarity.centroids(emb, nCells = 8))
-    }
+    // the cached arrays rebuild `cents` as a LocalRelation, so the probe
+    // stage plans with zero extra jobs
+    val cRows = ivfCentroids(s, dir)
     val cents = cRows.toDF("cell_id", "centroid")
     // assignCells already carries each row's embedding as `e` — no
     // re-join against the scan needed
@@ -1369,7 +1427,7 @@ object LlmOps {
     */
   private def simMmrRerank(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.DotF64.dotf64
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val emb = embVectors(s, dir)
     val qv = emb.filter(col("vec_id") === 0).select(col("e").as("qe"))
     val cand = emb
       .filter(col("vec_id") =!= 0)
@@ -1676,16 +1734,11 @@ object LlmOps {
     * faithful end to end.
     */
   private def simSq8Topk(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val emb = embVectors(s, dir)
     val (dmin, dmax) = embDims(s, dir)
     require(dmin == dmax, s"SQ8 needs uniform dims, got [$dmin,$dmax]")
-    val (mn, mx) = graft.DimCache.cached(s"sq8-bounds:$dir") {
-      graft.operators.Similarity.sq8Bounds(emb)
-    }
-    val q0 = graft.DimCache.cached(s"sq8-query:$dir:0") {
-      emb.filter(col("vec_id") === 0)
-        .select(col("e")).head().getSeq[Double](0).toIndexedSeq
-    }
+    val (mn, mx) = sq8Bounds(s, dir)
+    val q0 = queryVector(s, dir)
     graft.operators.Similarity.sq8TopK(
       s.read.parquet(sq8CodesPath(s, dir, emb, mn, mx)),
       q0, mn, mx, queryVecId = 0L, k = 10)
@@ -1699,9 +1752,7 @@ object LlmOps {
       emb: DataFrame, mn: IndexedSeq[Double],
       mx: IndexedSeq[Double]): String =
     graft.DimCache.cached(s"sq8-codes:$dir") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val p = System.getProperty("java.io.tmpdir") + s"/graft_sq8codes_$tag"
+      val p = graft.DimCache.artifactPath("sq8codes", dir)
       graft.operators.Similarity.encodeSq8(emb, mn, mx)
         .drop("e") // codes only: the byte-per-dimension contract
         .write.mode("overwrite").parquet(p)
@@ -1727,12 +1778,10 @@ object LlmOps {
   private def simSq8Recall(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.DotF64.dotf64
     import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val emb = embVectors(s, dir)
     val (dmin, dmax) = embDims(s, dir)
     require(dmin == dmax, s"SQ8 needs uniform dims, got [$dmin,$dmax]")
-    val (mn, mx) = graft.DimCache.cached(s"sq8-bounds:$dir") {
-      graft.operators.Similarity.sq8Bounds(emb)
-    }
+    val (mn, mx) = sq8Bounds(s, dir)
     val q = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"), col("e").as("qe"))
     val wq = Window.partitionBy(col("qid"))
@@ -1879,9 +1928,7 @@ object LlmOps {
   private def binaryCodesPath(s: SparkSession, dir: String,
       emb: DataFrame, thr: IndexedSeq[Double]): String =
     graft.DimCache.cached(s"bq-codes:$dir") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val p = System.getProperty("java.io.tmpdir") + s"/graft_bqcodes_$tag"
+      val p = graft.DimCache.artifactPath("bqcodes", dir)
       graft.operators.Similarity.encodeBinary(emb, thr)
         .write.mode("overwrite").parquet(p)
       p
@@ -1899,18 +1946,13 @@ object LlmOps {
     * proving the stored bit index end to end.
     */
   private def simBinaryTopk(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val emb = embVectors(s, dir)
     val (dmin, dmax) = embDims(s, dir)
     require(dmin == dmax && dmax % 2 == 0,
       s"binary quantization needs uniform even dims, got [$dmin,$dmax]")
-    val (mn, mx) = graft.DimCache.cached(s"sq8-bounds:$dir") {
-      graft.operators.Similarity.sq8Bounds(emb)
-    }
+    val (mn, mx) = sq8Bounds(s, dir)
     val thr = graft.operators.Similarity.binaryThresholds(mn, mx)
-    val q0 = graft.DimCache.cached(s"sq8-query:$dir:0") {
-      emb.filter(col("vec_id") === 0)
-        .select(col("e")).head().getSeq[Double](0).toIndexedSeq
-    }
+    val q0 = queryVector(s, dir)
     graft.operators.Similarity.binaryTopK(
       s.read.parquet(binaryCodesPath(s, dir, emb, thr)), emb, q0, thr,
       queryVecId = 0L, nCand = 64, k = 10)
@@ -1985,13 +2027,11 @@ object LlmOps {
     import graft.functions.DotF64.dotf64
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val emb = embVectors(s, dir)
     val (dmin, dmax) = embDims(s, dir)
     require(dmin == dmax && dmax % 2 == 0,
       s"binary quantization needs uniform even dims, got [$dmin,$dmax]")
-    val (mn, mx) = graft.DimCache.cached(s"sq8-bounds:$dir") {
-      graft.operators.Similarity.sq8Bounds(emb)
-    }
+    val (mn, mx) = sq8Bounds(s, dir)
     val thr = graft.operators.Similarity.binaryThresholds(mn, mx)
     val qcodes = recallQueryVectors(dir, emb).map { case (qid, qv) =>
       val (lo, hi) = graft.operators.Similarity.binaryCode(qv, thr)
@@ -2094,9 +2134,7 @@ object LlmOps {
   private def prefixIdxPath(s: SparkSession, dir: String,
       emb: DataFrame, dPrefix: Int): String =
     graft.DimCache.cached(s"mrl-prefix:$dir") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val p = System.getProperty("java.io.tmpdir") + s"/graft_mrlprefix_$tag"
+      val p = graft.DimCache.artifactPath("mrlprefix", dir)
       graft.operators.Similarity.encodePrefix(emb, dPrefix)
         .write.mode("overwrite").parquet(p)
       p
@@ -2112,15 +2150,12 @@ object LlmOps {
     * raw table with identical ascending IEEE folds.
     */
   private def simMatryoshkaTopk(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val emb = embVectors(s, dir)
     val (dmin, dmax) = embDims(s, dir)
     require(dmin == dmax && dmax % 4 == 0,
       s"matryoshka prefix needs uniform dims divisible by 4, got [$dmin,$dmax]")
     val dPrefix = dmax / 4
-    val q0 = graft.DimCache.cached(s"sq8-query:$dir:0") {
-      emb.filter(col("vec_id") === 0)
-        .select(col("e")).head().getSeq[Double](0).toIndexedSeq
-    }
+    val q0 = queryVector(s, dir)
     graft.operators.Similarity.matryoshkaTopK(
       s.read.parquet(prefixIdxPath(s, dir, emb, dPrefix)), emb, q0, dPrefix,
       queryVecId = 0L, nCand = 64, k = 10)
@@ -2173,7 +2208,7 @@ object LlmOps {
   private def simMatryoshkaRecall(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.DotF64.dotf64
     import org.apache.spark.sql.expressions.Window
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val emb = embVectors(s, dir)
     val (dmin, dmax) = embDims(s, dir)
     require(dmin == dmax && dmax % 4 == 0,
       s"matryoshka prefix needs uniform dims divisible by 4, got [$dmin,$dmax]")
@@ -2288,9 +2323,7 @@ object LlmOps {
       embE: DataFrame, cRows: IndexedSeq[(Int, Seq[Double])],
       mn: IndexedSeq[Double], mx: IndexedSeq[Double]): String =
     graft.DimCache.cached(s"ivfsq8-codes:$dir") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val p = System.getProperty("java.io.tmpdir") + s"/graft_ivfsq8_$tag"
+      val p = graft.DimCache.artifactPath("ivfsq8", dir)
       graft.operators.Similarity
         .encodeIvfSq8(embE.select(col("vec_id"), col("e").as("embedding")),
           cRows, mn, mx)
@@ -2312,21 +2345,12 @@ object LlmOps {
     * partitioned index end-to-end.
     */
   private def simIvfSq8Topk(s: SparkSession, dir: String): DataFrame = {
-    val embE = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val embE = embVectors(s, dir)
     val (dmin, dmax) = embDims(s, dir)
     require(dmin == dmax, s"SQ8 needs uniform dims, got [$dmin,$dmax]")
-    val (mn, mx) = graft.DimCache.cached(s"sq8-bounds:$dir") {
-      graft.operators.Similarity.sq8Bounds(embE)
-    }
-    val cRows = graft.DimCache.cached(s"ivf-centroids:$dir:8") {
-      graft.operators.Similarity.centroidArrays(
-        graft.operators.Similarity.centroids(
-          embE.select(col("vec_id"), col("e").as("embedding")), nCells = 8))
-    }
-    val q0 = graft.DimCache.cached(s"sq8-query:$dir:0") {
-      embE.filter(col("vec_id") === 0)
-        .select(col("e")).head().getSeq[Double](0).toIndexedSeq
-    }
+    val (mn, mx) = sq8Bounds(s, dir)
+    val cRows = ivfCentroids(s, dir)
+    val q0 = queryVector(s, dir)
     val probed = graft.operators.Similarity.probeCellIds(q0, cRows, nProbe = 2)
     graft.operators.Similarity.ivfSq8TopK(
       s.read.parquet(ivfSq8CodesPath(s, dir, embE, cRows, mn, mx)),
@@ -2362,12 +2386,8 @@ object LlmOps {
     import graft.functions.DotF64.dotf64
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val embE = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
-    val cRows = graft.DimCache.cached(s"ivf-centroids:$dir:8") {
-      graft.operators.Similarity.centroidArrays(
-        graft.operators.Similarity.centroids(
-          embE.select(col("vec_id"), col("e").as("embedding")), nCells = 8))
-    }
+    val embE = embVectors(s, dir)
+    val cRows = ivfCentroids(s, dir)
     val qprobe = recallQueryVectors(dir, embE).flatMap { case (qid, qv) =>
       graft.operators.Similarity.probeCellIds(qv, cRows, nProbe = 2)
         .map(c => (qid, c, qv))
@@ -2499,17 +2519,11 @@ object LlmOps {
     import graft.functions.DotF64.dotf64
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val embE = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val embE = embVectors(s, dir)
     val (dmin, dmax) = embDims(s, dir)
     require(dmin == dmax, s"SQ8 needs uniform dims, got [$dmin,$dmax]")
-    val (mn, mx) = graft.DimCache.cached(s"sq8-bounds:$dir") {
-      graft.operators.Similarity.sq8Bounds(embE)
-    }
-    val cRows = graft.DimCache.cached(s"ivf-centroids:$dir:8") {
-      graft.operators.Similarity.centroidArrays(
-        graft.operators.Similarity.centroids(
-          embE.select(col("vec_id"), col("e").as("embedding")), nCells = 8))
-    }
+    val (mn, mx) = sq8Bounds(s, dir)
+    val cRows = ivfCentroids(s, dir)
     val qrows = recallQueryVectors(dir, embE)
     val qprobe = qrows.flatMap { case (qid, qv) =>
       graft.operators.Similarity.probeCellIds(qv, cRows, nProbe = 2)
@@ -2666,21 +2680,12 @@ object LlmOps {
     * a 50-row broadcast.
     */
   private def simIvfSq8Rerank(s: SparkSession, dir: String): DataFrame = {
-    val embE = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val embE = embVectors(s, dir)
     val (dmin, dmax) = embDims(s, dir)
     require(dmin == dmax, s"SQ8 needs uniform dims, got [$dmin,$dmax]")
-    val (mn, mx) = graft.DimCache.cached(s"sq8-bounds:$dir") {
-      graft.operators.Similarity.sq8Bounds(embE)
-    }
-    val cRows = graft.DimCache.cached(s"ivf-centroids:$dir:8") {
-      graft.operators.Similarity.centroidArrays(
-        graft.operators.Similarity.centroids(
-          embE.select(col("vec_id"), col("e").as("embedding")), nCells = 8))
-    }
-    val q0 = graft.DimCache.cached(s"sq8-query:$dir:0") {
-      embE.filter(col("vec_id") === 0)
-        .select(col("e")).head().getSeq[Double](0).toIndexedSeq
-    }
+    val (mn, mx) = sq8Bounds(s, dir)
+    val cRows = ivfCentroids(s, dir)
+    val q0 = queryVector(s, dir)
     val probed = graft.operators.Similarity.probeCellIds(q0, cRows, nProbe = 2)
     val cand = graft.operators.Similarity.ivfSq8TopK(
       s.read.parquet(ivfSq8CodesPath(s, dir, embE, cRows, mn, mx)),
@@ -2871,37 +2876,21 @@ object LlmOps {
       |FROM scored ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
 
   private def simIvfpqTopk(s: SparkSession, dir: String): DataFrame = {
-    val M = 8
-    val K = 16
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val M = PqM
+    val K = PqK
     val (dmin, dmax) = embDims(s, dir)
     require(dmin == dmax && dmin % M == 0,
       s"PQ needs uniform dims divisible by $M, got [$dmin,$dmax]")
     val dsub = dmin / M
-    val cb = graft.DimCache.cached(s"pq-codebooks:$dir:$M:$K") {
-      graft.operators.Similarity.pqCodebooks(emb, M, K, dsub)
-    }
+    val cb = pqCodebooks(s, dir)
     // query vector + ADC table are bounded query-side dimensions (one
     // 1-row job + M×K Scala folds), cached like the codebooks
     val table = graft.DimCache.cached(s"pq-adc:$dir:$M:$K:0") {
-      val q0 = emb.filter(col("vec_id") === 0)
-        .select(col("e")).head().getSeq[Double](0).toIndexedSeq
-      graft.operators.Similarity.adcTable(q0, cb, dsub)
+      graft.operators.Similarity.adcTable(queryVector(s, dir), cb, dsub)
     }
-    // The codes ARE the index structure — encode once, persist, query
-    // many (FAISS persists its PQ codes for the same reason;
-    // write-once/read-many like join_bucketed's layout). The oracle
-    // recomputes codes from the RAW embeddings, so the green row also
-    // proves the stored index faithful.
-    val codesPath = graft.DimCache.cached(s"pq-codes:$dir:$M:$K") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val p = System.getProperty("java.io.tmpdir") + s"/graft_pqcodes_$tag"
-      graft.operators.Similarity.encodePq(emb, cb, dsub)
-        .drop("e") // codes only: the 8-bytes-per-vector contract
-        .write.mode("overwrite").parquet(p)
-      p
-    }
+    // the oracle recomputes codes from the RAW embeddings, so the green
+    // row also proves the stored index faithful
+    val codesPath = pqCodesPath(s, dir)
     graft.operators.Similarity.pqTopK(
       s.read.parquet(codesPath), table, queryVecId = 0L, k = 10)
   }
@@ -2921,9 +2910,9 @@ object LlmOps {
   private def simPqRecall(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val M = 8
-    val K = 16
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val M = PqM
+    val K = PqK
+    val emb = embVectors(s, dir)
     val (dmin, dmax) = embDims(s, dir)
     // dmin == 64 exactly (not just divisible by M): the DuckDB twin
     // hardcodes dsub = 8 (range(1, 9), e[m*8+j]), so any other
@@ -2932,18 +2921,8 @@ object LlmOps {
     require(dmin == dmax && dmin == 64,
       s"PQ recall twins assume d = 64 (dsub = 8 literal in SQL), got [$dmin,$dmax]")
     val dsub = dmin / M
-    val cb = graft.DimCache.cached(s"pq-codebooks:$dir:$M:$K") {
-      graft.operators.Similarity.pqCodebooks(emb, M, K, dsub)
-    }
-    val codesPath = graft.DimCache.cached(s"pq-codes:$dir:$M:$K") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val p = System.getProperty("java.io.tmpdir") + s"/graft_pqcodes_$tag"
-      graft.operators.Similarity.encodePq(emb, cb, dsub)
-        .drop("e")
-        .write.mode("overwrite").parquet(p)
-      p
-    }
+    val cb = pqCodebooks(s, dir)
+    val codesPath = pqCodesPath(s, dir)
     // per-qid ADC tables flattened m-major (index m·K + c) — the same
     // driver-side IEEE folds adcTable always runs
     val qtbl = recallQueryVectors(dir, emb).map { case (qid, qv) =>
@@ -2991,9 +2970,9 @@ object LlmOps {
   private def simPqRerankRecall(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val M = 8
-    val K = 16
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val M = PqM
+    val K = PqK
+    val emb = embVectors(s, dir)
     val (dmin, dmax) = embDims(s, dir)
     // dmin == 64 exactly (not just divisible by M): the DuckDB twin
     // hardcodes dsub = 8 (range(1, 9), e[m*8+j]), so any other
@@ -3002,18 +2981,8 @@ object LlmOps {
     require(dmin == dmax && dmin == 64,
       s"PQ recall twins assume d = 64 (dsub = 8 literal in SQL), got [$dmin,$dmax]")
     val dsub = dmin / M
-    val cb = graft.DimCache.cached(s"pq-codebooks:$dir:$M:$K") {
-      graft.operators.Similarity.pqCodebooks(emb, M, K, dsub)
-    }
-    val codesPath = graft.DimCache.cached(s"pq-codes:$dir:$M:$K") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val p = System.getProperty("java.io.tmpdir") + s"/graft_pqcodes_$tag"
-      graft.operators.Similarity.encodePq(emb, cb, dsub)
-        .drop("e")
-        .write.mode("overwrite").parquet(p)
-      p
-    }
+    val cb = pqCodebooks(s, dir)
+    val codesPath = pqCodesPath(s, dir)
     val qtbl = recallQueryVectors(dir, emb).map { case (qid, qv) =>
       (qid, graft.operators.Similarity.adcTable(qv, cb, dsub).flatten)
     }.toDF("qid", "tbl")
@@ -3317,10 +3286,7 @@ object LlmOps {
   private def clusterKmeansStep(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), embDouble.as("embedding"))
-    val cRows = graft.DimCache.cached(s"ivf-centroids:$dir:8") {
-      graft.operators.Similarity.centroidArrays(
-        graft.operators.Similarity.centroids(emb, nCells = 8))
-    }
+    val cRows = ivfCentroids(s, dir)
     graft.operators.Similarity.assignCells(emb, cRows)
       .select(col("cell_id"), posexplode(col("e")).as(Seq("dim", "x")))
       .groupBy(col("cell_id"), col("dim"))
@@ -3413,10 +3379,7 @@ object LlmOps {
         s"min=$dimsMin max=$dimsMax")
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), embDouble.as("embedding"))
-    val cRows = graft.DimCache.cached(s"ivf-centroids:$dir:8") {
-      graft.operators.Similarity.centroidArrays(
-        graft.operators.Similarity.centroids(emb, nCells = 8))
-    }
+    val cRows = ivfCentroids(s, dir)
     graft.operators.Similarity.semanticDedupKeep(emb, cRows, tau = 0.35)
   }
 
@@ -3737,7 +3700,7 @@ object LlmOps {
       |WHERE rn <= 3""".stripMargin
 
   private def simKnnJoin(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    val emb = embVectors(s, dir)
     val qRows = graft.DimCache.cached(s"knn-queries:$dir:8") {
       emb.filter(col("vec_id") < 8).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -3822,9 +3785,7 @@ object LlmOps {
     */
   private def lshPairsDir(s: SparkSession, dir: String): String =
     graft.DimCache.cached(s"lsh-pairs:$dir") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val p = System.getProperty("java.io.tmpdir") + s"/graft_lshpairs_$tag"
+      val p = graft.DimCache.artifactPath("lshpairs", dir)
       dedupMinhashLshPortable(s, dir).select(col("id_a"), col("id_b"))
         .write.mode("overwrite").parquet(p)
       p
@@ -3842,9 +3803,7 @@ object LlmOps {
     */
   private def lshKeepersDir(s: SparkSession, dir: String): String =
     graft.DimCache.cached(s"lsh-keepers:$dir") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val p = System.getProperty("java.io.tmpdir") + s"/graft_lshkeep_$tag"
+      val p = graft.DimCache.artifactPath("lshkeep", dir)
       graft.operators.Dedup.resolveKeepers(
           s.read.parquet(lshPairsDir(s, dir)))
         .write.mode("overwrite").parquet(p)

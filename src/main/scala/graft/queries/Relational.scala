@@ -417,13 +417,9 @@ object Relational {
     * bucketed copy is faithful.
     */
   private def joinBucketed(s: SparkSession, dir: String): DataFrame = {
-    // table names carry a dataset-dir fingerprint: two processes (or one
-    // JVM) verifying DIFFERENT sf dirs must not clobber each other's
-    // bucketed copies in the shared warehouse; a 64-bit SHA-256 prefix —
-    // a 32-bit String.hashCode can collide across dirs, silently joining
-    // (and reset()-deleting) another dataset's bucketed copy
-    val tag = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    // table names carry the dataset-dir fingerprint, so verifying
+    // another sf dir never joins (or reset()-deletes) this one's copies
+    val tag = graft.DimCache.fingerprint(dir)
     val liTbl = s"graft_li_bkt_$tag"
     val ordTbl = s"graft_ord_bkt_$tag"
     graft.DimCache.cached(s"bucketed-li-ord:$dir") {

@@ -120,9 +120,7 @@ object Retrieval {
     */
   private def indexPostingsDelta(s: SparkSession, dir: String): DataFrame = {
     val idxDir = graft.DimCache.cached(s"postings-index:$dir") {
-      val tag = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val p = System.getProperty("java.io.tmpdir") + s"/graft_postidx_$tag"
+      val p = graft.DimCache.artifactPath("postidx", dir)
       val base = Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(10)) =!= 0)
       val pairs = base

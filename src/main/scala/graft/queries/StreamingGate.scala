@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import graft.{DimCache, Q, Tables}
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -56,33 +54,6 @@ object StreamingGate {
   private def sink(base: String): String =
     s"${base}_${sinkSeq.incrementAndGet()}"
 
-  /** Every gate temp dir is registered here and recursively deleted at
-    * JVM exit — a Verify+Explain pass over the 24 gate queries would
-    * otherwise leak dozens of staged-table copies into java.io.tmpdir
-    * (each invocation stages events + checkpoint + sink dirs).
-    */
-  private val tempDirs =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[java.nio.file.Path]())
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tempDirs.forEach { root =>
-        try {
-          import scala.jdk.CollectionConverters._
-          val s = Files.walk(root)
-          try s.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(p => Files.deleteIfExists(p))
-          finally s.close()
-        } catch { case _: Exception => () } // best-effort cleanup
-      }))
-  }
-
-  private def tempDir(prefix: String): String = {
-    val p = Files.createTempDirectory(prefix)
-    tempDirs.add(p)
-    p.toString
-  }
-
   /** Stage the events table (normalized µs timestamps) as a replay dir.
     * Cached per (dir, parts): the staged copy is a deterministic
     * function of the immutable dataset dir, so one copy per JVM serves
@@ -90,7 +61,7 @@ object StreamingGate {
     */
   private def stageEvents(s: SparkSession, dir: String, parts: Int): String =
     DimCache.cached(s"gate-stage-events:$dir:$parts") {
-      val d = tempDir("graft-gate-events")
+      val d = DimCache.tempDir("graft-gate-events")
       Tables.events(s, dir)
         .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
         .repartition(parts)
@@ -107,7 +78,7 @@ object StreamingGate {
     */
   private def stageEventsSorted(s: SparkSession, dir: String): String =
     DimCache.cached(s"gate-stage-events-sorted:$dir") {
-      val d = tempDir("graft-gate-events-sorted")
+      val d = DimCache.tempDir("graft-gate-events-sorted")
       Tables.events(s, dir)
         .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
         .orderBy(col("ts"), col("event_id"))
@@ -183,7 +154,7 @@ object StreamingGate {
     */
   private def streamScd2(s: SparkSession, dir: String): DataFrame = {
     val d = DimCache.cached(s"gate-stage-scd2:$dir") {
-      val t = tempDir("graft-gate-scd2")
+      val t = DimCache.tempDir("graft-gate-scd2")
       Tables.orders(s, dir)
         .select(col("o_custkey").as("key"),
           datediff(col("o_orderdate").cast(DateType),
@@ -237,7 +208,7 @@ object StreamingGate {
     */
   private def streamPostings(s: SparkSession, dir: String): DataFrame = {
     val d = DimCache.cached(s"gate-stage-post:$dir") {
-      val t = tempDir("graft-gate-post")
+      val t = DimCache.tempDir("graft-gate-post")
       Tables.documents(s, dir).select(col("doc_id"), col("text"))
         .repartition(6).write.mode("overwrite").parquet(t)
       t
@@ -321,7 +292,7 @@ object StreamingGate {
         count(lit(1)).as("n0"),
         sum(floor(col("value") * 100).cast(LongType)).as("cents0"))
     val d = DimCache.cached(s"gate-stage-start-state:$dir") {
-      val t = tempDir("graft-gate-start-state")
+      val t = DimCache.tempDir("graft-gate-start-state")
       ev.filter(col("ts") >= cutoff)
         .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
         .repartition(4)
@@ -477,7 +448,7 @@ object StreamingGate {
     */
   private def streamDedupExact(s: SparkSession, dir: String): DataFrame = {
     val d = DimCache.cached(s"gate-stage-dupes:$dir") {
-      val t = tempDir("graft-gate-dupes")
+      val t = DimCache.tempDir("graft-gate-dupes")
       val ev = Tables.events(s, dir)
         .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
       ev.union(ev.filter(col("event_id") % 3 === 0))
@@ -553,7 +524,7 @@ object StreamingGate {
         .as("e"))
       .select(col("e.*"))
     val d = DimCache.cached(s"gate-stage-asof:$dir") {
-      val t = tempDir("graft-gate-asof")
+      val t = DimCache.tempDir("graft-gate-asof")
       ev.union(sentinels).repartition(4).write.mode("overwrite").parquet(t)
       t
     }
@@ -762,7 +733,7 @@ object StreamingGate {
     */
   private def streamSemanticDedup(s: SparkSession, dir: String): DataFrame = {
     val d = DimCache.cached(s"gate-stage-embts:$dir") {
-      val t = tempDir("graft-gate-embts")
+      val t = DimCache.tempDir("graft-gate-embts")
       Tables.embeddings(s, dir)
         .select(col("vec_id"),
           expr("timestamp'2024-01-01 00:00:00' + INTERVAL 1 SECOND * vec_id")
@@ -772,16 +743,8 @@ object StreamingGate {
         .coalesce(1).write.mode("overwrite").parquet(t)
       t
     }
-    // same cache key as the batch operator — one centroid build per JVM
-    // serves both twins
-    val cRows = DimCache.cached(s"ivf-centroids:$dir:8") {
-      graft.operators.Similarity.centroidArrays(
-        graft.operators.Similarity.centroids(
-          Tables.embeddings(s, dir).select(col("vec_id"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-              .as("embedding")),
-          nCells = 8))
-    }
+    // the batch operator's centroids: one build per JVM serves both twins
+    val cRows = LlmOps.ivfCentroids(s, dir)
     val stream = s.readStream.schema(
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("vec_id", LongType),
@@ -865,7 +828,7 @@ object StreamingGate {
     */
   private def streamDecontaminate(s: SparkSession, dir: String): DataFrame = {
     val d = DimCache.cached(s"gate-stage-docts:$dir") {
-      val t = tempDir("graft-gate-docts")
+      val t = DimCache.tempDir("graft-gate-docts")
       Tables.documents(s, dir)
         .select(col("doc_id"), col("text"),
           expr("timestamp'2024-01-01 00:00:00' + INTERVAL 1 SECOND * doc_id")
@@ -918,7 +881,7 @@ object StreamingGate {
 
   private def streamNearDedup(s: SparkSession, dir: String): DataFrame = {
     val d = DimCache.cached(s"gate-stage-neardup:$dir") {
-      val t = tempDir("graft-gate-neardup")
+      val t = DimCache.tempDir("graft-gate-neardup")
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val doubled = docs
         .union(docs.select((col("doc_id") + lit(1000000L)).as("doc_id"),
@@ -1037,9 +1000,9 @@ object StreamingGate {
     * offset-log/sink-commit contract every 100 TB ingest leans on.)
     */
   private def streamCheckpointResume(s: SparkSession, dir: String): DataFrame = {
-    val in = tempDir("graft-gate-cpr-in")
-    val out = tempDir("graft-gate-cpr-out")
-    val cp = tempDir("graft-gate-cpr-cp")
+    val in = DimCache.tempDir("graft-gate-cpr-in")
+    val out = DimCache.tempDir("graft-gate-cpr-out")
+    val cp = DimCache.tempDir("graft-gate-cpr-cp")
     Tables.events(s, dir)
       .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
       .repartition(6).write.mode("overwrite").parquet(in)
@@ -1076,22 +1039,23 @@ object StreamingGate {
     * recomputes every per-subspace argmin with the identical
     * ascending-index IEEE fold and first-min tiebreak.
     */
-  private def streamPqEncode(s: SparkSession, dir: String): DataFrame = {
-    val M = 8; val K = 16; val dsub = 8
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-    val cb = graft.DimCache.cached(s"pq-codebooks:$dir:$M:$K") {
-      graft.operators.Similarity.pqCodebooks(emb, M, K, dsub)
-    }
+  private def streamPqEncode(s: SparkSession, dir: String): DataFrame =
+    Streams.runToCompletion(
+      s, graft.operators.Similarity.encodePq(stagedEmbeddings(s, dir),
+        LlmOps.pqCodebooks(s, dir), LlmOps.pqDsub(s, dir)).drop("e"),
+      sink("gate_pq"), mode = "append")
+
+  /** The embeddings (vec_id, e) staged as a 4-file replay dir, shared by
+    * the three vector-encode gate rows.
+    */
+  private def stagedEmbeddings(s: SparkSession, dir: String): DataFrame = {
+    val emb = LlmOps.embVectors(s, dir)
     val d = DimCache.cached(s"gate-stage-pq:$dir") {
-      val t = tempDir("graft-gate-pq")
+      val t = DimCache.tempDir("graft-gate-pq")
       emb.repartition(4).write.mode("overwrite").parquet(t)
       t
     }
-    val stream = s.readStream.schema(emb.schema).parquet(d)
-    Streams.runToCompletion(
-      s, graft.operators.Similarity.encodePq(stream, cb, dsub).drop("e"),
-      sink("gate_pq"), mode = "append")
+    s.readStream.schema(emb.schema).parquet(d)
   }
 
   /** Streaming ingest for the IVF,SQ8 composed index (the
@@ -1105,26 +1069,12 @@ object StreamingGate {
     * oracle recomputes assignment + quantizer from the raw table.
     */
   private def streamIvfSq8Encode(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-    val cRows = DimCache.cached(s"ivf-centroids:$dir:8") {
-      graft.operators.Similarity.centroidArrays(
-        graft.operators.Similarity.centroids(
-          emb.select(col("vec_id"), col("e").as("embedding")), nCells = 8))
-    }
-    val (mn, mx) = DimCache.cached(s"sq8-bounds:$dir") {
-      graft.operators.Similarity.sq8Bounds(emb)
-    }
-    val d = DimCache.cached(s"gate-stage-pq:$dir") {
-      val t = tempDir("graft-gate-pq")
-      emb.repartition(4).write.mode("overwrite").parquet(t)
-      t
-    }
-    val stream = s.readStream.schema(emb.schema).parquet(d)
+    val (mn, mx) = LlmOps.sq8Bounds(s, dir)
     Streams.runToCompletion(
       s, graft.operators.Similarity
-        .encodeIvfSq8(stream.select(col("vec_id"), col("e").as("embedding")),
-          cRows, mn, mx)
+        .encodeIvfSq8(stagedEmbeddings(s, dir)
+          .select(col("vec_id"), col("e").as("embedding")),
+          LlmOps.ivfCentroids(s, dir), mn, mx)
         .select(col("vec_id"), col("cell_id"),
           graft.ArrCanon.joined(expr("transform(codes, c -> CAST(c AS INT))"))
             .as("codes_str")),
@@ -1141,20 +1091,10 @@ object StreamingGate {
     * thresholds → pack from the raw table with identical arithmetic.
     */
   private def streamBinaryEncode(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-    val (mn, mx) = DimCache.cached(s"sq8-bounds:$dir") {
-      graft.operators.Similarity.sq8Bounds(emb)
-    }
-    val thr = graft.operators.Similarity.binaryThresholds(mn, mx)
-    val d = DimCache.cached(s"gate-stage-pq:$dir") {
-      val t = tempDir("graft-gate-pq")
-      emb.repartition(4).write.mode("overwrite").parquet(t)
-      t
-    }
-    val stream = s.readStream.schema(emb.schema).parquet(d)
+    val (mn, mx) = LlmOps.sq8Bounds(s, dir)
     Streams.runToCompletion(
-      s, graft.operators.Similarity.encodeBinary(stream, thr),
+      s, graft.operators.Similarity.encodeBinary(stagedEmbeddings(s, dir),
+        graft.operators.Similarity.binaryThresholds(mn, mx)),
       sink("gate_bqenc"), mode = "append")
   }
 

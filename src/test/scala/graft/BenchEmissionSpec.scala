@@ -14,13 +14,15 @@ class BenchEmissionSpec extends AnyFunSuite {
 
   test("final line stays <1,900 B at worst-case field widths") {
     // every numeric field at an absurdly wide rendering: 5-digit totals,
-    // negative sentinels, a long sf path — wider than any real run
+    // negative sentinels, a long sf path, every headline query failed —
+    // wider than any real run
     val walls = Bench.flagships.map(_ -> 99999.999).toMap
     val line = Bench.finalLine(
       total = 99999.999, walls = walls,
       calPre = (99999.999, 99999.999), calPost = (99999.999, 99999.999),
       bwPre = (99999.9, 99999.9), bwPost = (99999.9, 99999.9),
-      contended = true, sharedTotal = 99999.999, retryTotal = 99999.999,
+      contended = true, sharedTotal = 99999.999, sharedN = 69,
+      retryTotal = 99999.999, failed = Bench.headline,
       sfDir = "/root/testdata/sf0.1/some/unusually/deep/dataset/directory")
     val n = line.getBytes("UTF-8").length
     assert(n < 1900, s"final line $n B — driver tail capture would truncate it")
@@ -34,8 +36,8 @@ class BenchEmissionSpec extends AnyFunSuite {
       total = 42.112, walls = Map("ndsh_q1" -> 0.385, "ndsh_q6" -> 0.156),
       calPre = (0.418, 0.509), calPost = (0.667, 0.749),
       bwPre = (21.3, 48.7), bwPost = (14.2, 31.9),
-      contended = true, sharedTotal = 42.112, retryTotal = 36.001,
-      sfDir = "/root/testdata/sf0.1")
+      contended = true, sharedTotal = 42.112, sharedN = 69,
+      retryTotal = 36.001, failed = Nil, sfDir = "/data/sf0.1")
     val node = mapper.readTree(line)
     assert(node.get("metric").asText() == "total")
     assert(node.get("value").asDouble() == 42.112)
@@ -51,6 +53,30 @@ class BenchEmissionSpec extends AnyFunSuite {
     assert(node.get("cal_post_single_s").asDouble() == 0.667)
     assert(node.get("cal_membw_allcores_gbps").asDouble() == 48.7)
     assert(node.get("cal_post_membw_allcores_gbps").asDouble() == 31.9)
+    assert(node.get("failed").isArray && node.get("failed").size() == 0)
+  }
+
+  test("a failed query is named, and the measured count drops") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(Bench.finalLine(
+      total = 30.0, walls = Map("ndsh_q1" -> 0.385),
+      calPre = (0.4, 0.5), calPost = (0.4, 0.5),
+      bwPre = (20.0, 40.0), bwPost = (20.0, 40.0),
+      contended = false, sharedTotal = 30.0, sharedN = 68,
+      retryTotal = -1.0, failed = Seq("ndsh_q5"), sfDir = "/data/sf0.1"))
+    assert(node.get("shared_set_n").asInt() == 68)
+    assert(node.get("failed").get(0).asText() == "ndsh_q5")
+    assert(node.get("queries").get("ndsh_q5").asDouble() == -1.0)
+    // past the byte budget the list ends in a count of the names left out
+    val all = mapper.readTree(Bench.finalLine(
+      total = 0.0, walls = Map.empty, calPre = (0, 0), calPost = (0, 0),
+      bwPre = (0, 0), bwPost = (0, 0), contended = false, sharedTotal = 0.0,
+      sharedN = 0, retryTotal = -1.0, failed = Bench.headline, sfDir = "/d"))
+      .get("failed")
+    val shown = all.size() - 1
+    assert(shown > 0 && shown < Bench.headline.size)
+    assert(all.get(shown).asText() == s"+${Bench.headline.size - shown} more")
+    assert((0 until shown).map(all.get(_).asText()) == Bench.headline.take(shown))
   }
 
   test("flagship set is fixed, small, and inside the headline") {
