@@ -188,31 +188,18 @@ object AmplifiedBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
-    val t0 = System.nanoTime()
-    val ampDir = buildAmplified(spark, sfDir, factor)
+    val (ampDir, built) = Harness.measure("amplify")(buildAmplified(spark, sfDir, factor))
     System.err.println(
-      f"[amp] built ${factor}x dataset at $ampDir in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+      f"[amp] built ${factor}x dataset at $ampDir in ${built.secs}%.1fs")
 
-    def run(name: String, dir: String): Double = {
-      val s0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
+    def run(name: String, dir: String): Double =
+      try Harness.timed(name)(SparkEntry.queries(name)(spark, dir)).secs
       catch { case e: Throwable =>
         System.err.println(s"[amp] $name failed on $dir: ${e.getMessage}")
-        return -1.0
+        -1.0
       }
-      (System.nanoTime() - s0) / 1e9
-    }
 
     // Bench.scala's group harness shape: per-(query, dir) warmup then
     // timed reps with a cache-clear + GC between groups, so broadcasts
@@ -231,7 +218,7 @@ object AmplifiedBench {
     // cleanup() runs OUTSIDE the caller's gc_ms sampling span: its two
     // forced System.gc() full collections are deliberate harness pauses,
     // not the organic GC pressure the telemetry column exists to expose.
-    def timed(name: String, dir: String): Double = {
+    def medianSecs(name: String, dir: String): Double = {
       run(name, dir)
       val ts = Seq.fill(reps)(run(name, dir))
       if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(reps / 2)
@@ -284,7 +271,7 @@ object AmplifiedBench {
       pb.environment().put("SPARK_GRAFT_AMP_ONLY", query)
       pb.environment().put("SPARK_GRAFT_AMP_REUSE", "1")
       pb.environment().put("SPARK_GRAFT_AMP_NO_ADJ", "1")
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+      pb.environment().put("SPARK_GRAFT_CPUS", Harness.cpus.toString)
       pb.redirectErrorStream(false)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       val p = pb.start()
@@ -317,11 +304,11 @@ object AmplifiedBench {
     val pending = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     val rows = selection.filter(n => only.forall(_.contains(n))).map { n =>
       val gc0 = gcMs()
-      val base = timed(n, sfDir)
+      val base = medianSecs(n, sfDir)
       val gcBase = gcMs() - gc0
       cleanup()
       val gc1 = gcMs()
-      val amp = timed(n, ampDir)
+      val amp = medianSecs(n, ampDir)
       val gcAmp = gcMs() - gc1
       cleanup()
       val ratio = if (base > 0 && amp > 0) amp / base else -1.0

@@ -1,13 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver contract: one JSON line with per-query wall
   * seconds on SPARK_GRAFT_SF_DIR. Headline set = the NDS-H ports plus the
   * heavier LLM-pipeline operators (LSH dedup, cosine top-k).
   *
-  * Timing forces full materialization through a noop datasource write
-  * (a bare count() would let Catalyst prune the projections).
+  * Each rep is one `Harness.timed` span: the builder call through the
+  * completed noop write.
   *
   * Harness shape (round 8, after the round-7 driver run drifted ~1.6×
   * on queries whose code had not changed): each query is measured as a
@@ -269,7 +267,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Local-iteration hook: SPARK_GRAFT_BENCH_ONLY=q1,q2 measures just
     // those queries under the identical group harness. The driver leaves
     // it unset, so official BENCH_r{N} numbers always cover the full set.
@@ -277,27 +274,16 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .map(only => headline.filter(only.contains))
       .getOrElse(headline)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def run(name: String): Double = {
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    def run(name: String): Double =
+      try Harness.timed(name)(SparkEntry.queries(name)(spark, sfDir)).secs
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         failed += name
-        return -1.0
+        -1.0
       }
-      (System.nanoTime() - t0) / 1e9
-    }
 
     // Drop caches and give the ContextCleaner a GC to ride: dead
     // broadcasts/accumulators are weak-ref-triggered, and nothing else
@@ -451,75 +437,22 @@ object Bench {
           f"membw=$bw%.1fGB/s")
       (n, med, gcDelta, heap, bw)
     }
-    // Layout-pruning evidence for the z-order scan: rows the parquet
-    // scan actually READ (post row-group min/max skipping) vs the full
-    // table — the factor file-level stats bought on this hardware.
-    if (selected.contains("scan_zorder_pruned")) {
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      val df = SparkEntry.queries("scan_zorder_pruned")(spark, sfDir)
+    // Pruning evidence for the z-order scan, the bloom-filter point
+    // lookup and the IVF,SQ8 index: rows the parquet scan actually READ
+    // (after row-group min/max or bloom skipping, or the probe's
+    // cell_id partition filter) vs the full table — the factor the
+    // layout bought on this hardware at this scale.
+    Seq(
+      ("scan_zorder_pruned", "rows_read", () => Tables.lineitem(spark, sfDir)),
+      ("scan_bloom_pruned", "rows_read", () => Tables.events(spark, sfDir)),
+      ("sim_ivfsq8_topk", "index_rows_read", () => Tables.embeddings(spark, sfDir))
+    ).filter(e => selected.contains(e._1)).foreach { case (name, label, table) =>
+      val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect()
-      def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-        case q: QueryStageExec => scans(q.plan)
-        case f: FileSourceScanExec => Seq(f)
-        case other => other.children.flatMap(scans)
-      }
-      val read = scans(df.queryExecution.executedPlan)
-        .map(_.metrics("numOutputRows").value)
-        .sum
-      val total = Tables.lineitem(spark, sfDir).count()
+      val read = Harness.rowsScanned(df)
+      val total = table().count()
       System.err.println(
-        f"[bench] scan_zorder_pruned rows_read=$read total_rows=$total " +
-          f"pruned_factor=${total.toDouble / math.max(read, 1L)}%.1f")
-    }
-    // Same evidence for the bloom-filter point-lookup layout: rows the
-    // scan materialized (post bloom row-group skipping) vs the copy's
-    // full row count (the un-prunable control reads everything —
-    // causality proven in ZOrderSpec; this line measures the factor on
-    // driver hardware at driver scale).
-    if (selected.contains("scan_bloom_pruned")) {
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      val df = SparkEntry.queries("scan_bloom_pruned")(spark, sfDir)
-      df.collect()
-      def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-        case q: QueryStageExec => scans(q.plan)
-        case f: FileSourceScanExec => Seq(f)
-        case other => other.children.flatMap(scans)
-      }
-      val read = scans(df.queryExecution.executedPlan)
-        .map(_.metrics("numOutputRows").value)
-        .sum
-      val total = Tables.events(spark, sfDir).count()
-      System.err.println(
-        f"[bench] scan_bloom_pruned rows_read=$read total_rows=$total " +
-          f"pruned_factor=${total.toDouble / math.max(read, 1L)}%.1f")
-    }
-    // Same evidence for the IVF,SQ8 composed index: rows the
-    // partition-pruned byte-code scan materialized (the probe's literal
-    // cell_id IN (...) is a PartitionFilter, so unprobed cells' FILES
-    // are never opened) vs the full index row count — nProbe/nCells
-    // measured on driver hardware, the coarse half of the index's
-    // multiplicative pruning × compression pair.
-    if (selected.contains("sim_ivfsq8_topk")) {
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      val df = SparkEntry.queries("sim_ivfsq8_topk")(spark, sfDir)
-      df.collect()
-      def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-        case q: QueryStageExec => scans(q.plan)
-        case f: FileSourceScanExec => Seq(f)
-        case other => other.children.flatMap(scans)
-      }
-      val read = scans(df.queryExecution.executedPlan)
-        .map(_.metrics("numOutputRows").value)
-        .sum
-      val total = Tables.embeddings(spark, sfDir).count()
-      System.err.println(
-        f"[bench] sim_ivfsq8_topk index_rows_read=$read total_rows=$total " +
+        f"[bench] $name $label=$read total_rows=$total " +
           f"pruned_factor=${total.toDouble / math.max(read, 1L)}%.1f")
     }
     // Post-sweep calibration arm (see the pre-sweep comment): the pair

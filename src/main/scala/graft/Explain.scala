@@ -24,16 +24,10 @@ object Explain {
         SparkEntry.queries.keys.toSeq.filterNot(_.startsWith("stream_")).sorted
       else if (args.length > 1) args.drop(1).toSeq
       else Bench.headline
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      // AQE hides codegen annotations until execution; plans are audited
-      // pre-execution, so disable it here (Bench/Verify keep it on)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
+    // AQE hides codegen annotations until execution; plans are audited
+    // pre-execution, so turn it off for this session only
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(

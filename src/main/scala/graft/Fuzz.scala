@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.Random
 
 /** Differential query fuzzer: generates seeded-random queries from a
@@ -457,14 +456,7 @@ object Fuzz {
     val outDir = args.lift(1).getOrElse("target/fuzz_out")
     val nQueries = args.lift(2).map(_.toInt).getOrElse(60)
     val seed = args.lift(3).map(_.toLong).getOrElse(20260812L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     Tables.lineitem(spark, sfDir).createOrReplaceTempView("lineitem")
     Tables.orders(spark, sfDir).createOrReplaceTempView("orders")
     Tables.events(spark, sfDir).createOrReplaceTempView("events")

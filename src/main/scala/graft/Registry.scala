@@ -121,7 +121,7 @@ object Scans {
   /** Fan a NARROW scan out to the session's parallelism before an
     * expensive per-row map (shingle/minhash folds, tokenization): the
     * sf-scale parquet inputs hold ONE row group per file, so every
-    * first-pass map otherwise runs in a single task (StageProfile:
+    * first-pass map otherwise runs in a single task (stage profile:
     * 600 ms of shingle hashing on 1 of 32 cores). Scale-adaptive, not a
     * constant: a scan that already splits into at least half the
     * default parallelism is returned untouched, so at production scale

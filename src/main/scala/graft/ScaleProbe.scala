@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale probe, two axes per factor N:
@@ -32,14 +32,7 @@ object ScaleProbe {
       case "none" => Array.empty[Int]
       case s => s.split(",").map(_.trim.toInt)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val baseN = docs.count()
@@ -52,17 +45,31 @@ object ScaleProbe {
     def axis(name: String)(body: => Unit): Unit =
       if (onlyAxes.forall(_.contains(name))) body
 
-    def probe(name: String, f: Int, big: org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val pairs = queries.LlmOps
-        .lshCandidatePairs(big, maxBucket = 1000)
-        .filter(col("est_jaccard") >= 0.75)
-        .select(col("id_a"), col("id_b"))
-      val deduped = operators.Dedup.dedupCorpus(big, pairs)
-      val outN = deduped.count()
-      val secs = (System.nanoTime() - t0) / 1e9
+    // Replica builders. Copy i of a key column moves to the disjoint id
+    // range i·1e9; copy i of a text salts every token with `_r<i>`, so no
+    // shingle is shared across copies; copy i of a vector column flips
+    // signs by a per-copy ±1 mask — an isometry that keeps within-copy
+    // cosines exactly and scatters copies apart. Copy 0 is the base.
+    def replicas(df: DataFrame, f: Int)(copy: Int => Seq[Column]): DataFrame =
+      (0 until f).map(i => df.select(copy(i): _*)).reduce(_ union _)
+    def shifted(c: String, i: Int): Column = (col(c) + lit(i.toLong * 1000000000L)).as(c)
+    def salted(i: Int): Column =
+      if (i == 0) col("text")
+      else expr(s"concat_ws(' ', transform(split(text, ' '), t -> concat(t, '_r$i')))")
+    def signMasked(c: String, i: Int): Column =
+      (if (i == 0) col(c)
+       else expr(s"transform($c, (x, j) -> x * CASE WHEN pmod(hash(j, $i), 2) = 0 THEN 1.0D ELSE -1.0D END)")).as(c)
+
+    def probe(name: String, f: Int, big: DataFrame): Unit = {
+      val (outN, t) = Harness.measure(name) {
+        val pairs = queries.LlmOps
+          .lshCandidatePairs(big, maxBucket = 1000)
+          .filter(col("est_jaccard") >= 0.75)
+          .select(col("id_a"), col("id_b"))
+        operators.Dedup.dedupCorpus(big, pairs).count()
+      }
       println(
-        f"""{"probe":"$name","factor":$f,"n_docs":${baseN * f},"out_docs":$outN,"secs":$secs%.2f}""")
+        f"""{"probe":"$name","factor":$f,"n_docs":${baseN * f},"out_docs":$outN,"secs":${t.secs}%.2f}""")
     }
 
     // pack_sequences skew axis: replicate into ONE lang stream (every
@@ -75,22 +82,16 @@ object ScaleProbe {
       val langDocs = Tables
         .documents(spark, sfDir)
         .select(col("doc_id"), col("lang"), col("text"))
-      val big = (0 until f)
-        .map(i => langDocs.select(
-          (col("doc_id") + lit(i.toLong * 1000000000L)).as("doc_id"),
-          col("lang"), col("text")))
-        .reduce(_ union _)
+      val big = replicas(langDocs, f)(i => Seq(shifted("doc_id", i), col("lang"), col("text")))
         .select(col("doc_id"), col("lang"),
           size(split(coalesce(col("text"), lit("")), " ")).cast("long").as("n_toks"))
-      val t0 = System.nanoTime()
-      val packed = operators.Packing
-        .packGreedy(big, "lang", Seq("doc_id"), "n_toks", budget = 200L)
-      val nPacks = packed
-        .groupBy(col("lang")).agg(max(col("pack_id"))).count()
-      val rows = packed.count()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val ((nPacks, rows), t) = Harness.measure("pack_sequences") {
+        val packed = operators.Packing
+          .packGreedy(big, "lang", Seq("doc_id"), "n_toks", budget = 200L)
+        (packed.groupBy(col("lang")).agg(max(col("pack_id"))).count(), packed.count())
+      }
       println(
-        f"""{"probe":"pack_sequences","factor":$f,"n_docs":${baseN * f},"rows":$rows,"streams":$nPacks,"secs":$secs%.2f}""")
+        f"""{"probe":"pack_sequences","factor":$f,"n_docs":${baseN * f},"rows":$rows,"streams":$nPacks,"secs":${t.secs}%.2f}""")
     }
 
     // tfidf skew axis: a corpus-wide hot token appended to EVERY doc of
@@ -99,22 +100,12 @@ object ScaleProbe {
     // pre-aggregates per (doc, tok) map-side; the hot token stresses the
     // df aggregation and the join fan-out on the "tok" key.
     def probeTfidf(f: Int): Unit = {
-      val big = (0 until f)
-        .map { i =>
-          val t =
-            if (i == 0) concat(col("text"), lit(" hottoken"))
-            else expr(
-              s"concat(concat_ws(' ', transform(split(text, ' '), t -> concat(t, '_r$i'))), ' hottoken')")
-          docs.select(
-            (col("doc_id") + lit(i.toLong * 1000000000L)).as("doc_id"),
-            t.as("text"))
-        }
-        .reduce(_ union _)
-      val t0 = System.nanoTime()
-      val out = queries.LlmOps.tfidfTopkOver(big, k = 5).count()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val big = replicas(docs, f)(i =>
+        Seq(shifted("doc_id", i), concat(salted(i), lit(" hottoken")).as("text")))
+      val (out, t) = Harness.measure("tfidf_topk_hot")(
+        queries.LlmOps.tfidfTopkOver(big, k = 5).count())
       println(
-        f"""{"probe":"tfidf_topk_hot","factor":$f,"n_docs":${baseN * f},"out_rows":$out,"secs":$secs%.2f}""")
+        f"""{"probe":"tfidf_topk_hot","factor":$f,"n_docs":${baseN * f},"out_rows":$out,"secs":${t.secs}%.2f}""")
     }
 
     // incremental-dedup axis: the DELTA stays fixed (the base corpus'
@@ -128,25 +119,14 @@ object ScaleProbe {
     // amortized cost, not the steady state.
     def probeIncremental(f: Int): Unit = {
       val corpusBase = docs.filter(col("doc_id") % 10 =!= 0)
-      val corpus = (0 until f)
-        .map { i =>
-          val t =
-            if (i == 0) col("text")
-            else expr(s"concat_ws(' ', transform(split(text, ' '), t -> concat(t, '_r$i')))")
-          corpusBase.select(
-            (col("doc_id") + lit(i.toLong * 1000000000L)).as("doc_id"), t.as("text"))
-        }
-        .reduce(_ union _)
+      val corpus = replicas(corpusBase, f)(i => Seq(shifted("doc_id", i), salted(i).as("text")))
       val delta = docs.filter(col("doc_id") % 10 === 0)
       val p = System.getProperty("java.io.tmpdir") + s"/graft_lshidx_probe_$f"
-      val tb0 = System.nanoTime()
-      queries.LlmOps.buildLshIndex(corpus, p)
-      val buildSecs = (System.nanoTime() - tb0) / 1e9
-      val t0 = System.nanoTime()
-      val nPairs = queries.LlmOps.incrementalLshPairs(spark, delta, p).count()
-      val deltaSecs = (System.nanoTime() - t0) / 1e9
+      val (_, build) = Harness.measure("lsh_index")(queries.LlmOps.buildLshIndex(corpus, p))
+      val (nPairs, t) = Harness.measure("incremental_lsh")(
+        queries.LlmOps.incrementalLshPairs(spark, delta, p).count())
       println(
-        f"""{"probe":"incremental_lsh","factor":$f,"corpus_docs":${corpus.count()},"pairs":$nPairs,"build_secs":$buildSecs%.2f,"delta_secs":$deltaSecs%.2f}""")
+        f"""{"probe":"incremental_lsh","factor":$f,"corpus_docs":${corpus.count()},"pairs":$nPairs,"build_secs":${build.secs}%.2f,"delta_secs":${t.secs}%.2f}""")
     }
 
     // substring-dedup axis, worst case: identical replicas make EVERY
@@ -157,13 +137,11 @@ object ScaleProbe {
     // the replication), so wall time should track the linear explode +
     // flag-join volume, never a pair blowup. out_spans = windowable
     // docs × f is the correctness invariant printed alongside.
-    def probeSubstring(f: Int, big: org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val spans = queries.LlmOps.substringSpans(big, W = 8)
-      val outSpans = spans.count()
-      val secs = (System.nanoTime() - t0) / 1e9
+    def probeSubstring(f: Int, big: DataFrame): Unit = {
+      val (outSpans, t) = Harness.measure("substring_spans")(
+        queries.LlmOps.substringSpans(big, W = 8).count())
       println(
-        f"""{"probe":"substring_spans","factor":$f,"n_docs":${baseN * f},"out_spans":$outSpans,"secs":$secs%.2f}""")
+        f"""{"probe":"substring_spans","factor":$f,"n_docs":${baseN * f},"out_spans":$outSpans,"secs":${t.secs}%.2f}""")
     }
 
     // pca axis: replicate the EMBEDDINGS table N× (fresh vec_ids). The
@@ -178,21 +156,16 @@ object ScaleProbe {
       .select(col("vec_id"), col("embedding"))
     val pcaRef = new scala.collection.mutable.HashMap[Long, Long]()
     def probePca(f: Int): Unit = {
-      val big = (0 until f)
-        .map(i => embBase.select(
-          (col("vec_id") + lit(i.toLong * 1000000000L)).as("vec_id"),
-          col("embedding")))
-        .reduce(_ union _)
-      val t0 = System.nanoTime()
-      val v = operators.Similarity.pcaPowerTopComponent(big, iters = 5)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val secs = (System.nanoTime() - t0) / 1e9
+      val big = replicas(embBase, f)(i => Seq(shifted("vec_id", i), col("embedding")))
+      val (v, t) = Harness.measure("pca_power")(
+        operators.Similarity.pcaPowerTopComponent(big, iters = 5)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap)
       if (f == factors.min) pcaRef ++= v
       val maxDev =
         if (pcaRef.isEmpty) 0L
         else v.map { case (d, x) => math.abs(x - pcaRef.getOrElse(d, x)) }.max
       println(
-        f"""{"probe":"pca_power","factor":$f,"n_vecs":${embBase.count() * f},"max_dev_micro":$maxDev,"secs":$secs%.2f}""")
+        f"""{"probe":"pca_power","factor":$f,"n_vecs":${embBase.count() * f},"max_dev_micro":$maxDev,"secs":${t.secs}%.2f}""")
     }
 
     // CMS axis: counters over an N×-replicated corpus must be EXACTLY
@@ -202,11 +175,9 @@ object ScaleProbe {
     // exact N-multiplicity). State is the fixed 4×1024 matrix at every
     // factor, so wall time tracks the token stream, never the sketch.
     val cmsRef = new scala.collection.mutable.HashMap[(Int, Long), Long]()
-    def probeCms(f: Int, big: org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val cells = queries.Curation.cmsCellCounts(big)
-        .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val secs = (System.nanoTime() - t0) / 1e9
+    def probeCms(f: Int, big: DataFrame): Unit = {
+      val (cells, t) = Harness.measure("cms_cells")(queries.Curation.cmsCellCounts(big)
+        .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap)
       if (f == factors.min) cmsRef ++= cells.map { case (k, v) => k -> (v / f) }
       val maxDev =
         if (cmsRef.isEmpty) -1L
@@ -214,7 +185,7 @@ object ScaleProbe {
           math.abs(v - f * cmsRef.getOrElse(k, 0L))
         }.maxOption.getOrElse(-1L)
       println(
-        f"""{"probe":"cms_cells","factor":$f,"cells":${cells.size},"max_dev":$maxDev,"secs":$secs%.2f}""")
+        f"""{"probe":"cms_cells","factor":$f,"cells":${cells.size},"max_dev":$maxDev,"secs":${t.secs}%.2f}""")
     }
 
     // bm25 axis: replicate the corpus N× (fresh doc_ids). Every factor
@@ -225,12 +196,10 @@ object ScaleProbe {
     // simultaneously a determinism witness and the shard-merge
     // property (a replicated corpus IS f merged shards).
     val bm25Ref = new scala.collection.mutable.HashMap[Long, Long]()
-    def probeBm25(f: Int, big: org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val scores = queries.Retrieval.bm25ScoresOver(big)
+    def probeBm25(f: Int, big: DataFrame): Unit = {
+      val (scores, t) = Harness.measure("bm25_invariance")(queries.Retrieval.bm25ScoresOver(big)
         .filter(col("doc_id") < 1000000000L)
-        .collect().map(r => r.getLong(0) -> r.getAs[Long]("bm25_micro")).toMap
-      val secs = (System.nanoTime() - t0) / 1e9
+        .collect().map(r => r.getLong(0) -> r.getAs[Long]("bm25_micro")).toMap)
       if (f == factors.min) bm25Ref ++= scores
       // missing keys are tracked as their own failure signal — folding
       // them into the dev via a Long.MinValue sentinel would overflow
@@ -245,7 +214,7 @@ object ScaleProbe {
           math.abs(v - bm25Ref(k))
         }.maxOption.getOrElse(-1L)
       println(
-        f"""{"probe":"bm25_invariance","factor":$f,"scored_docs":${scores.size},"max_dev":$maxDev,"unseen_docs":$unseen,"secs":$secs%.2f}""")
+        f"""{"probe":"bm25_invariance","factor":$f,"scored_docs":${scores.size},"max_dev":$maxDev,"unseen_docs":$unseen,"secs":${t.secs}%.2f}""")
     }
 
     // postings axis: under N× replication the vocabulary is fixed, df
@@ -253,12 +222,10 @@ object ScaleProbe {
     // list stays ≤ 20 entries — the bounded-row-width guarantee that
     // makes a stop-word token safe at any corpus size.
     val dfRef = new scala.collection.mutable.HashMap[String, Long]()
-    def probePostings(f: Int, big: org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      val rows = queries.Retrieval.postingsOver(big)
+    def probePostings(f: Int, big: DataFrame): Unit = {
+      val (rows, t) = Harness.measure("postings")(queries.Retrieval.postingsOver(big)
         .collect().map(r => (r.getString(0),
-          r.getAs[Long]("df"), r.getAs[String]("postings"))).toSeq
-      val secs = (System.nanoTime() - t0) / 1e9
+          r.getAs[Long]("df"), r.getAs[String]("postings"))).toSeq)
       if (f == factors.min) dfRef ++= rows.map(r => r._1 -> r._2 / f)
       // compare ONLY tokens already visible at the reference factor:
       // postingsOver prunes df < 5, so replication legitimately grows
@@ -271,7 +238,7 @@ object ScaleProbe {
         }.maxOption.getOrElse(-1L)
       val maxLen = rows.map(_._3.count(_ == '|') + 1).maxOption.getOrElse(0)
       println(
-        f"""{"probe":"postings","factor":$f,"vocab":${rows.size},"max_df_dev":$maxDev,"max_postings":$maxLen,"secs":$secs%.2f}""")
+        f"""{"probe":"postings","factor":$f,"vocab":${rows.size},"max_df_dev":$maxDev,"max_postings":$maxLen,"secs":${t.secs}%.2f}""")
     }
 
     // triangles axis: replicate ORDERS (shifted orderkeys, identical
@@ -298,14 +265,12 @@ object ScaleProbe {
       val bigL = (0 until f).map(i => li.select(
           (col("l_orderkey") + lit(i.toLong * orderkeyShift)).as("l_orderkey"),
           col("l_partkey"))).reduce(_ union _)
-      val t0 = System.nanoTime()
-      val r = queries.GraphOps.trianglesOver(bigL, bigO).head()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (r, t) = Harness.measure("triangles")(queries.GraphOps.trianglesOver(bigL, bigO).head())
       val tri = r.getAs[Long]("n_triangles")
       if (f == factors.min) triRef = tri
       val dev = if (triRef < 0) -1L else math.abs(tri - triRef)
       println(
-        f"""{"probe":"triangles","factor":$f,"lineitem_rows":${f * lineitemBaseRows},"n_triangles":$tri,"dev":$dev,"secs":$secs%.2f}""")
+        f"""{"probe":"triangles","factor":$f,"lineitem_rows":${f * lineitemBaseRows},"n_triangles":$tri,"dev":$dev,"secs":${t.secs}%.2f}""")
     }
 
     // wedge-cap axis: a synthetic star hub whose degree GROWS with the
@@ -325,14 +290,12 @@ object ScaleProbe {
       val clique = spark.range(1, 6).as[Long].flatMap(i =>
         ((i + 1) to 6).map(j => (i + 1000000000L, j + 1000000000L)))
         .toDF("a", "b")
-      val t0 = System.nanoTime()
-      val candidates = queries.GraphOps
-        .cappedWedgeCandidates(hub.unionByName(clique)).count()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (candidates, t) = Harness.measure("wedge_cap")(queries.GraphOps
+        .cappedWedgeCandidates(hub.unionByName(clique)).count())
       val m = math.min(d, cap)
       val hubBound = m * (m - 1) / 2
       println(
-        f"""{"probe":"wedge_cap","factor":$f,"hub_degree":$d,"candidates":$candidates,"hub_bound":$hubBound,"secs":$secs%.2f}""")
+        f"""{"probe":"wedge_cap","factor":$f,"hub_degree":$d,"candidates":$candidates,"hub_bound":$hubBound,"secs":${t.secs}%.2f}""")
     }
 
     // funnel invariance axis: replicate the FULL (doc_id, text, lang)
@@ -346,18 +309,12 @@ object ScaleProbe {
     def probeFunnel(f: Int): Unit = {
       val full = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text"), col("lang"))
-      val big = (0 until f)
-        .map(i => full.select(
-          (col("doc_id") + lit(i.toLong * 1000000000L)).as("doc_id"),
-          col("text"), col("lang")))
-        .reduce(_ union _)
-      val t0 = System.nanoTime()
-      val rows = queries.PipelineOps.funnelOver(big)
+      val big = replicas(full, f)(i => Seq(shifted("doc_id", i), col("text"), col("lang")))
+      val (rows, t) = Harness.measure("funnel_invariance")(queries.PipelineOps.funnelOver(big)
         .collect()
         .map(r => (r.getAs[String]("stage"),
           (r.getAs[Long]("n_docs"), r.getAs[Long]("n_tokens"))))
-        .toMap
-      val secs = (System.nanoTime() - t0) / 1e9
+        .toMap)
       if (f == factors.min && funnelBase.isEmpty) funnelBase ++= rows
       val devs = rows.map { case (stage, (nd, nt)) =>
         val (bd, bt) = funnelBase.getOrElse(stage, (-1L, -1L))
@@ -365,7 +322,7 @@ object ScaleProbe {
         math.max(math.abs(nd - bd * scale), math.abs(nt - bt * scale))
       }.max
       println(
-        f"""{"probe":"funnel_invariance","factor":$f,"final_docs":${rows("5_decontaminated")._1},"max_dev":$devs,"secs":$secs%.2f}""")
+        f"""{"probe":"funnel_invariance","factor":$f,"final_docs":${rows("5_decontaminated")._1},"max_dev":$devs,"secs":${t.secs}%.2f}""")
     }
 
     // grouped-scan skew axis (r14, the weighted-median done-criterion
@@ -395,16 +352,15 @@ object ScaleProbe {
           col("l_linenumber"), col("l_partkey"), col("l_suppkey"),
           col("l_quantity"))
       }.reduce(_ unionByName _)
-      val t0 = System.nanoTime()
-      val rows = queries.Aggregates.weightedMedianOver(big).collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (rows, t) = Harness.measure("weighted_median_skew")(
+        queries.Aggregates.weightedMedianOver(big).collect()
+          .map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap)
       if (f == factors.min) wmBase = rows
       val coldDev = rows.iterator
         .filter { case (k, _) => k != "N" }
         .count { case (k, v) => !wmBase.get(k).contains(v) }
       println(
-        f"""{"probe":"weighted_median_skew","factor":$f,"hot_weight":${rows("N")._1},"cold_dev":$coldDev,"secs":$secs%.2f}""")
+        f"""{"probe":"weighted_median_skew","factor":$f,"hot_weight":${rows("N")._1},"cold_dev":$coldDev,"secs":${t.secs}%.2f}""")
     }
 
     // streaming-state axis (r14): replay an f×-replicated event stream
@@ -427,25 +383,22 @@ object ScaleProbe {
       import graft.streaming.Streams
       val ev = Tables.events(spark, sfDir)
         .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
-      val big = (0 until f).map(i => ev.select(
-          (col("event_id") + lit(i.toLong * 1000000000L)).as("event_id"),
-          col("ts"), col("user_id"), col("event_type"), col("value"),
-          col("props")))
-        .reduce(_ union _)
+      val big = replicas(ev, f)(i =>
+        ev.columns.toSeq.map(c => if (c == "event_id") shifted(c, i) else col(c)))
       val d = java.nio.file.Files
         .createTempDirectory(s"graft-probe-stream-$f").toString
       big.repartition(8).write.mode("overwrite").parquet(d)
-      val t0 = System.nanoTime()
-      val cells = Streams.runToCompletion(spark,
-          Streams.cmsCounters(Streams.readEventStream(spark, d)),
-          s"probe_stream_cms_$f", "complete")
-        .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
-      val kmv = Streams.runToCompletion(spark,
-          Streams.kmvWindowDistinct(Streams.readEventStream(spark, d)),
-          s"probe_stream_kmv_$f", "complete")
-        .select(expr("unix_micros(win_start)"), col("est_distinct"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val secs = (System.nanoTime() - t0) / 1e9
+      val ((cells, kmv), t) = Harness.measure("stream_sketch") {
+        (Streams.runToCompletion(spark,
+            Streams.cmsCounters(Streams.readEventStream(spark, d)),
+            s"probe_stream_cms_$f", "complete")
+          .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap,
+        Streams.runToCompletion(spark,
+            Streams.kmvWindowDistinct(Streams.readEventStream(spark, d)),
+            s"probe_stream_kmv_$f", "complete")
+          .select(expr("unix_micros(win_start)"), col("est_distinct"))
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      }
       if (f == factors.min) {
         streamCmsRef ++= cells.map { case (k, v) => k -> (v / f) }
         streamKmvRef = kmv
@@ -457,7 +410,7 @@ object ScaleProbe {
         !streamKmvRef.get(w).contains(e)
       }
       println(
-        f"""{"probe":"stream_sketch","factor":$f,"events":${big.count()},"cms_cells":${cells.size},"cms_dev":$cmsDev,"kmv_windows":${kmv.size},"kmv_dev":$kmvDev,"secs":$secs%.2f}""")
+        f"""{"probe":"stream_sketch","factor":$f,"events":${big.count()},"cms_cells":${cells.size},"cms_dev":$cmsDev,"kmv_windows":${kmv.size},"kmv_dev":$kmvDev,"secs":${t.secs}%.2f}""")
     }
 
     // SemDeDup k ∝ N axis (r18, verdict task 2): `semanticDedupKeep`'s
@@ -477,32 +430,27 @@ object ScaleProbe {
     //     bound — grows ~linearly in N;
     //   - true near pairs (sum n_near / 2) ≈ f × base (isometry law);
     //   - wall sublinear-to-linear in N.
+    // the embeddings as double vectors, the input of every vector axis
+    val baseEmb = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
+    def semDedupStats(big: DataFrame, cRows: IndexedSeq[(Int, Seq[Double])],
+        tau: Double) =
+      operators.Similarity.semanticDedupKeep(big, cRows, tau)
+        .agg(count(lit(1)).as("n"),
+          sum(when(col("kept"), 1L).otherwise(0L)).as("kept"),
+          sum(col("n_near")).as("near2")).head()
     var semBaseNearPairs = -1L
     var semBaseAllPairs = -1L // cell-free ≥τ pair count of the base corpus
     val tauSem = 0.35 // the gate instance's τ
     def probeSemDedup(f: Int): Unit = {
-      val baseEmb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-      val big = (0 until f).map { i =>
-        val e =
-          if (i == 0) col("embedding")
-          else expr(
-            s"transform(embedding, (x, j) -> x * CASE WHEN pmod(hash(j, $i), 2) = 0 THEN 1.0D ELSE -1.0D END)")
-        baseEmb.select((col("vec_id") + lit(i.toLong * 1000000000L)).as("vec_id"),
-          e.as("embedding"))
-      }.reduce(_ union _)
+      val big = replicas(baseEmb, f)(i => Seq(shifted("vec_id", i), signMasked("embedding", i)))
       val k = 8 * f
       // centroid pick is the offline once-per-index-build step (the gate
       // DimCaches it); untimed here for the same reason
       val cRows = operators.Similarity.centroidArrays(
         operators.Similarity.centroids(big, nCells = k))
-      val t0 = System.nanoTime()
-      val stats = operators.Similarity.semanticDedupKeep(big, cRows, tau = tauSem)
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("kept"), 1L).otherwise(0L)).as("kept"),
-          sum(col("n_near")).as("near2")).head()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (stats, t) = Harness.measure("semdedup_k_prop_n")(semDedupStats(big, cRows, tauSem))
       val (nVecs, kept, nearPairs) =
         (stats.getLong(0), stats.getLong(1), stats.getLong(2) / 2)
       if (f == factors.min) semBaseNearPairs = nearPairs / f
@@ -559,7 +507,7 @@ object ScaleProbe {
         if (semBaseAllPairs <= 0) -1.0
         else 100.0 * within / (f.toDouble * semBaseAllPairs)
       println(
-        f"""{"probe":"semdedup_k_prop_n","factor":$f,"n_vecs":$nVecs,"k":$k,"max_cell_pop":${cells.getLong(0)},"cand_pairs":${cells.getLong(1)},"near_pairs":$nearPairs,"within_replica_pairs":$within,"cross_replica_pairs":$cross,"within_per_replica":${within / f},"base_all_pairs":$semBaseAllPairs,"pair_recall_pct":$recallPct%.1f,"base_near_pairs":$semBaseNearPairs,"kept":$kept,"secs":$secs%.2f}""")
+        f"""{"probe":"semdedup_k_prop_n","factor":$f,"n_vecs":$nVecs,"k":$k,"max_cell_pop":${cells.getLong(0)},"cand_pairs":${cells.getLong(1)},"near_pairs":$nearPairs,"within_replica_pairs":$within,"cross_replica_pairs":$cross,"within_per_replica":${within / f},"base_all_pairs":$semBaseAllPairs,"pair_recall_pct":$recallPct%.1f,"base_near_pairs":$semBaseNearPairs,"kept":$kept,"secs":${t.secs}%.2f}""")
     }
 
     // Planted-dup arm of the SemDeDup axis: the low-τ arm above measures
@@ -571,36 +519,21 @@ object ScaleProbe {
     // must stay ~flat as k ∝ N — the measured form of "high-τ dups
     // survive cluster refinement".
     def probeSemDedupPlanted(f: Int): Unit = {
-      val baseEmb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
       val nBase = baseEmb.count()
       val planted = baseEmb.select(
         (col("vec_id") + lit(500000000L)).as("vec_id"),
         expr("transform(embedding, (x, j) -> x * CASE WHEN j % 2 = 0 THEN 1.001D ELSE 0.999D END)")
           .as("embedding"))
       val rep = baseEmb.union(planted)
-      val big = (0 until f).map { i =>
-        val e =
-          if (i == 0) col("embedding")
-          else expr(
-            s"transform(embedding, (x, j) -> x * CASE WHEN pmod(hash(j, $i), 2) = 0 THEN 1.0D ELSE -1.0D END)")
-        rep.select((col("vec_id") + lit(i.toLong * 1000000000L)).as("vec_id"),
-          e.as("embedding"))
-      }.reduce(_ union _)
+      val big = replicas(rep, f)(i => Seq(shifted("vec_id", i), signMasked("embedding", i)))
       val k = 8 * f
       val cRows = operators.Similarity.centroidArrays(
         operators.Similarity.centroids(big, nCells = k))
-      val t0 = System.nanoTime()
-      val stats = operators.Similarity.semanticDedupKeep(big, cRows, tau = 0.95)
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("kept"), 1L).otherwise(0L)).as("kept"),
-          sum(col("n_near")).as("near2")).head()
-      val secs = (System.nanoTime() - t0) / 1e9
+      val (stats, t) = Harness.measure("semdedup_planted_recall")(semDedupStats(big, cRows, 0.95))
       val found = stats.getLong(2) / 2
       val plantedPairs = nBase * f
       println(
-        f"""{"probe":"semdedup_planted_recall","factor":$f,"n_vecs":${stats.getLong(0)},"k":$k,"planted_pairs":$plantedPairs,"found_pairs":$found,"recall_pct":${100.0 * found / plantedPairs}%.1f,"kept":${stats.getLong(1)},"secs":$secs%.2f}""")
+        f"""{"probe":"semdedup_planted_recall","factor":$f,"n_vecs":${stats.getLong(0)},"k":$k,"planted_pairs":$plantedPairs,"found_pairs":$found,"recall_pct":${100.0 * found / plantedPairs}%.1f,"kept":${stats.getLong(1)},"secs":${t.secs}%.2f}""")
     }
 
     // Streaming SemDeDup axis (r19, verdict task 4): the batch twin has
@@ -634,7 +567,7 @@ object ScaleProbe {
         sp.map(_.memoryUsedBytes).lastOption.getOrElse(-1L))
     }
     def runSsd(stage: String, cRows: IndexedSeq[(Int, Seq[Double])],
-        tag: String): (org.apache.spark.sql.DataFrame, Long, Long) = {
+        tag: String): (DataFrame, Long, Long) = {
       import graft.streaming.Streams
       val stream = spark.readStream.schema(ssdSchema).parquet(stage)
       val q = Streams.semanticDedupStream(spark, stream, cRows, tau = 0.35)
@@ -646,17 +579,7 @@ object ScaleProbe {
       (spark.table(tag), cells, mem)
     }
     def probeStreamSemDedup(f: Int): Unit = {
-      val baseEmb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
-      val big = (0 until f).map { i =>
-        val e =
-          if (i == 0) col("embedding")
-          else expr(
-            s"transform(embedding, (x, j) -> x * CASE WHEN pmod(hash(j, $i), 2) = 0 THEN 1.0D ELSE -1.0D END)")
-        baseEmb.select((col("vec_id") + lit(i.toLong * 1000000000L)).as("vec_id"),
-          e.as("embedding"))
-      }.reduce(_ union _)
+      val big = replicas(baseEmb, f)(i => Seq(shifted("vec_id", i), signMasked("embedding", i)))
       val k = 8 * f
       val cRows = operators.Similarity.centroidArrays(
         operators.Similarity.centroids(big, nCells = k))
@@ -669,14 +592,13 @@ object ScaleProbe {
       big.select(col("vec_id"),
           expr("timestamp'2024-01-01 00:00:00'").as("ts"), col("embedding"))
         .coalesce(1).write.mode("overwrite").parquet(stage)
-      val t0 = System.nanoTime()
-      val (res, stateCells, stateMem) = runSsd(stage, cRows, s"probe_ssd_$f")
-      val nOut = res.count()
-      val kept = res.filter(col("kept")).count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val usPerEvent = secs * 1e6 / math.max(nOut, 1L)
+      val ((nOut, kept, stateCells, stateMem), t) = Harness.measure("stream_semdedup") {
+        val (res, cells, mem) = runSsd(stage, cRows, s"probe_ssd_$f")
+        (res.count(), res.filter(col("kept")).count(), cells, mem)
+      }
+      val usPerEvent = t.secs * 1e6 / math.max(nOut, 1L)
       println(
-        f"""{"probe":"stream_semdedup","factor":$f,"n_vecs":$nOut,"k":$k,"kept":$kept,"state_cells":$stateCells,"state_mem_kb":${stateMem / 1024},"state_mem_bytes_per_vec":${stateMem / math.max(nOut, 1L)},"secs":$secs%.2f,"us_per_event":$usPerEvent%.1f}""")
+        f"""{"probe":"stream_semdedup","factor":$f,"n_vecs":$nOut,"k":$k,"kept":$kept,"state_cells":$stateCells,"state_mem_kb":${stateMem / 1024},"state_mem_bytes_per_vec":${stateMem / math.max(nOut, 1L)},"secs":${t.secs}%.2f,"us_per_event":$usPerEvent%.1f}""")
     }
 
     // stream_ohlc state axis (r20, r19 verdict task 6): the r19
@@ -720,13 +642,14 @@ object ScaleProbe {
         val tag = s"probe_ohlc_${name}_$f"
         val stream = spark.readStream.schema(Streams.eventSchema)
           .option("maxFilesPerTrigger", "2").parquet(d)
-        val t0 = System.nanoTime()
-        val q = Streams.ohlcWindows(stream).writeStream
-          .outputMode("complete").format("memory").queryName(tag)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val secs = (System.nanoTime() - t0) / 1e9
+        val (q, t) = Harness.measure(s"stream_ohlc_state $name") {
+          val q = Streams.ohlcWindows(stream).writeStream
+            .outputMode("complete").format("memory").queryName(tag)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          q
+        }
         val sp = q.recentProgress.flatMap(_.stateOperators)
         val stateRows = sp.map(_.numRowsTotal).lastOption.getOrElse(-1L)
         val a = spark.table(tag).agg(count(lit(1)).as("bars"),
@@ -747,7 +670,7 @@ object ScaleProbe {
             math.abs(fp - bfp * keyScale)).max
         spark.catalog.dropTempView(tag)
         println(
-          f"""{"probe":"stream_ohlc_state","arm":"$name","factor":$f,"events":${big.count()},"state_rows":$stateRows,"bars":$bars,"n_sum":$nSum,"fingerprint":$fp,"max_dev":$dev,"secs":$secs%.2f}""")
+          f"""{"probe":"stream_ohlc_state","arm":"$name","factor":$f,"events":${big.count()},"state_rows":$stateRows,"bars":$bars,"n_sum":$nSum,"fingerprint":$fp,"max_dev":$dev,"secs":${t.secs}%.2f}""")
       }
       arm("same_keys", shiftUsers = false)
       arm("fresh_keys", shiftUsers = true)
@@ -768,9 +691,6 @@ object ScaleProbe {
     // toward ~200 (batch-2 + batch-3 entries in invoked cells) — the
     // store is bounded by the horizon, not the stream's history.
     def probeStreamSemDedupEviction(): Unit = {
-      val baseEmb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
       val cRows = operators.Similarity.centroidArrays(
         operators.Similarity.centroids(baseEmb, nCells = 8))
       val stage = java.nio.file.Files
@@ -779,7 +699,7 @@ object ScaleProbe {
         .createTempDirectory("graft-probe-ssde-ckpt").toString
       val out = java.nio.file.Files
         .createTempDirectory("graft-probe-ssde-out").toString
-      def writeBatch(df: org.apache.spark.sql.DataFrame, tsExpr: String): Unit =
+      def writeBatch(df: DataFrame, tsExpr: String): Unit =
         df.select(col("vec_id"), expr(tsExpr).as("ts"), col("embedding"))
           .coalesce(1).write.mode("append").parquet(stage)
       // memory sinks can't resume from a checkpoint; the three-run
@@ -835,29 +755,20 @@ object ScaleProbe {
       */
     def probeBinaryBudget(f: Int): Unit = {
       import org.apache.spark.sql.expressions.Window
-      val baseEmb = Tables.embeddings(spark, sfDir)
-        .select(col("vec_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
-      val big = (0 until f).map { i =>
-        val e =
-          if (i == 0) col("e")
-          else expr(
-            s"transform(e, (x, j) -> x * CASE WHEN pmod(hash(j, $i), 2) = 0 THEN 1.0D ELSE -1.0D END)")
-        baseEmb.select(
-          (col("vec_id") + lit(i.toLong * 1000000000L)).as("vec_id"),
-          e.as("e"))
-      }.reduce(_ union _).localCheckpoint(false)
+      val embE = baseEmb.withColumnRenamed("embedding", "e")
+      val big = replicas(embE, f)(i => Seq(shifted("vec_id", i), signMasked("e", i)))
+        .localCheckpoint(false)
       val corpus = big.filter(col("vec_id") >= 8) // replicas included
       val nVecs = big.count()
       // train on the full replicated corpus (the index build step)
       val (mn, mx) = operators.Similarity.sq8Bounds(big)
       val thr = operators.Similarity.binaryThresholds(mn, mx)
-      val qrows = baseEmb.filter(col("vec_id") < 8)
+      val qrows = embE.filter(col("vec_id") < 8)
         .select(col("vec_id"), col("e")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq))
         .sortBy(_._1)
       import spark.implicits._
-      val q = baseEmb.filter(col("vec_id") < 8)
+      val q = embE.filter(col("vec_id") < 8)
         .select(col("vec_id").as("qid"), col("e").as("qe"))
       def cosQ(e: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
         import graft.functions.DotF64.dotf64
@@ -866,7 +777,7 @@ object ScaleProbe {
       }
       val wq = Window.partitionBy(col("qid"))
         .orderBy(col("cos").desc, col("vec_id"))
-      def top10(scored: org.apache.spark.sql.DataFrame) = scored
+      def top10(scored: DataFrame) = scored
         .withColumn("rn", row_number().over(wq))
         .filter(col("rn") <= 10)
         .select(col("qid"), col("vec_id"))
@@ -896,19 +807,15 @@ object ScaleProbe {
         val hits = exact.join(approx, Seq("qid", "vec_id")).count()
         hits.toDouble / (10 * qrows.length)
       }
-      val t0 = System.nanoTime()
-      val rFixed = recallAt(64)
-      val rScaled = recallAt(64 * f)
-      val secs = (System.nanoTime() - t0) / 1e9
+      val ((rFixed, rScaled), t) =
+        Harness.measure("binary_recall_budget")((recallAt(64), recallAt(64 * f)))
       println(
-        f"""{"probe":"binary_recall_budget","factor":$f,"n_vecs":$nVecs,"ncand_fixed":64,"recall_fixed_pct":${rFixed * 100}%.1f,"ncand_scaled":${64 * f},"recall_scaled_pct":${rScaled * 100}%.1f,"secs":$secs%.2f}""")
+        f"""{"probe":"binary_recall_budget","factor":$f,"n_vecs":$nVecs,"ncand_fixed":64,"recall_fixed_pct":${rFixed * 100}%.1f,"ncand_scaled":${64 * f},"recall_scaled_pct":${rScaled * 100}%.1f,"secs":${t.secs}%.2f}""")
     }
 
     factors.foreach { f =>
       // worst case: identical replicas — every bucket holds all N copies
-      val replicated = (0 until f)
-        .map(i => docs.select((col("doc_id") + lit(i.toLong * 1000000000L)).as("doc_id"), col("text")))
-        .reduce(_ union _)
+      val replicated = replicas(docs, f)(i => Seq(shifted("doc_id", i), col("text")))
       axis("lsh_dedup") { probe("lsh_dedup", f, replicated) }
       axis("binary_recall_budget") { probeBinaryBudget(f) }
       axis("semdedup_k_prop_n") { probeSemDedup(f) }
@@ -933,14 +840,7 @@ object ScaleProbe {
       // realistic: salt every token per replica so all shingles differ
       // across replicas (replica 0 keeps the original text, so the base
       // corpus is a strict subset at every factor)
-      val distinct = (0 until f)
-        .map { i =>
-          val t =
-            if (i == 0) col("text")
-            else expr(s"concat_ws(' ', transform(split(text, ' '), t -> concat(t, '_r$i')))")
-          docs.select((col("doc_id") + lit(i.toLong * 1000000000L)).as("doc_id"), t.as("text"))
-        }
-        .reduce(_ union _)
+      val distinct = replicas(docs, f)(i => Seq(shifted("doc_id", i), salted(i).as("text")))
       axis("lsh_dedup_distinct") { probe("lsh_dedup_distinct", f, distinct) }
     }
 
@@ -958,7 +858,7 @@ object ScaleProbe {
     // offsets axes: same range partitioning and per-partition
     // distinct-group walk, counting entries instead of subtotaling them.
     // Group key FIRST in the range ordering, exactly like scanCore.
-    def offsetsEntries(df: org.apache.spark.sql.DataFrame,
+    def offsetsEntries(df: DataFrame,
         groupCol: String, ord: Seq[org.apache.spark.sql.Column]): Long = {
       val keyed = col(groupCol) +: ord
       val sorted = df
@@ -978,12 +878,11 @@ object ScaleProbe {
       try {
         spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
         val li = Tables.lineitem(spark, sfDir)
-        val t0 = System.nanoTime()
-        val medians = queries.Aggregates.weightedMedianOver(li).collect()
-        val secs = (System.nanoTime() - t0) / 1e9
+        val (medians, t) = Harness.measure("grouped_scan_offsets")(
+          queries.Aggregates.weightedMedianOver(li).collect())
         val entries = offsetsEntries(li, "l_returnflag", wmOrd)
         val groups = li.select(col("l_returnflag")).distinct().count()
-        println(f"""{"probe":"grouped_scan_offsets","partitions":$parts,"groups":$groups,"offsets_entries":$entries,"bound_p_plus_g":${parts + groups - 1},"bound_p_times_g":${parts * groups},"median_rows":${medians.length},"secs":$secs%.2f}""")
+        println(f"""{"probe":"grouped_scan_offsets","partitions":$parts,"groups":$groups,"offsets_entries":$entries,"bound_p_plus_g":${parts + groups - 1},"bound_p_times_g":${parts * groups},"median_rows":${medians.length},"secs":${t.secs}%.2f}""")
       } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
     axis("stream_semdedup_eviction") { probeStreamSemDedupEviction() }
@@ -1005,16 +904,10 @@ object ScaleProbe {
             col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"),
             col("l_partkey"), col("l_suppkey"),
             col("l_quantity").cast("long").as("wt"))
-        val t0 = System.nanoTime()
-        val scanned = operators.GlobalOrder.groupedCumSum(
-          li, Seq("gk"),
-          Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"),
-            col("l_partkey"), col("l_suppkey")),
-          col("wt"), "cum")
-        val n = scanned.count()
-        val secs = (System.nanoTime() - t0) / 1e9
+        val (n, t) = Harness.measure("grouped_scan_offsets_highg")(
+          operators.GlobalOrder.groupedCumSum(li, Seq("gk"), wmOrd, col("wt"), "cum").count())
         val entries = offsetsEntries(li, "gk", wmOrd)
-        println(f"""{"probe":"grouped_scan_offsets_highg","partitions":$parts,"groups":$g,"offsets_entries":$entries,"bound_p_plus_g":${parts + g - 1},"rows":$n,"secs":$secs%.2f}""")
+        println(f"""{"probe":"grouped_scan_offsets_highg","partitions":$parts,"groups":$g,"offsets_entries":$entries,"bound_p_plus_g":${parts + g - 1},"rows":$n,"secs":${t.secs}%.2f}""")
       } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
     axis("grouped_scan_offsets_highg") { Seq(32, 512).foreach(probeGroupedScanHighG) }
@@ -1029,14 +922,6 @@ object ScaleProbe {
     // filter checks and footer entries per file — the tradeoff a 128 MB
     // production layout sits on, now a measured curve not a prose claim.
     def probeBloomBlockSize(): Unit = {
-      import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-        case q: QueryStageExec => scans(q.plan)
-        case f: FileSourceScanExec => Seq(f)
-        case other => other.children.flatMap(scans)
-      }
       val probes = queries.Conversions.bloomProbeIds(spark, sfDir)
       val total = Tables.events(spark, sfDir).count()
       Seq(64 * 1024, 1024 * 1024).foreach { bs =>
@@ -1048,14 +933,11 @@ object ScaleProbe {
             .filter(col("event_id") === id)
             .select(col("event_id"), col("user_id"))
           df.collect()
-          scans(df.queryExecution.executedPlan)
-            .map(_.metrics("numOutputRows").value).sum
+          Harness.rowsScanned(df)
         }.sum
         sweep()
-        val t0 = System.nanoTime()
-        var read = 0L
-        (1 to 5).foreach(_ => read = sweep())
-        val secs = (System.nanoTime() - t0) / 1e9 / 5
+        val (read, t) = Harness.measure("bloom_blocksize")((1 to 5).map(_ => sweep()).last)
+        val secs = t.secs / 5
         val prunedFactor = total.toDouble * probes.size / math.max(read, 1L)
         println(
           f"""{"probe":"bloom_blocksize","block_bytes":$bs,"total_rows":$total,"probes":${probes.size},"rows_read":$read,"pruned_factor":$prunedFactor%.1f,"sweep_secs":$secs%.3f}""")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** RocksDB state-store parity sweep over the ENTIRE streaming gate
   * (r18, verdict task 3 — extending the r17 single-row
   * `StreamEvictionSpec` parity to all 25 rows).
@@ -32,14 +30,7 @@ object StreamParity {
       "StreamParity must run WITHOUT SPARK_GRAFT_STATE_PROVIDER set — " +
         "the base leg would silently route through RocksDB too")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val names = SparkEntry.queries.keys.filter(_.startsWith("stream_")).toSeq.sorted
     var failures = 0
@@ -47,9 +38,7 @@ object StreamParity {
       def rows(): Seq[String] =
         SparkEntry.queries(n)(spark, sfDir).collect().map(_.toString).sorted.toSeq
       System.clearProperty("graft.stateProvider")
-      val t0 = System.nanoTime()
-      val base = rows()
-      val tBase = (System.nanoTime() - t0) / 1e9
+      val (base, sBase) = Harness.measure(s"$n default")(rows())
       // symmetric to provider_applied below: the base leg must NOT have
       // routed through RocksDB (applyStateProvider unsets the conf when
       // no flag is present, so any RocksDB residue here is a leak)
@@ -57,12 +46,9 @@ object StreamParity {
         .getOption("spark.sql.streaming.stateStore.providerClass")
         .exists(_.contains("RocksDBStateStoreProvider"))
       System.setProperty("graft.stateProvider", "rocksdb")
-      val (rocks, tRocks) =
-        try {
-          val t1 = System.nanoTime()
-          val r = rows()
-          (r, (System.nanoTime() - t1) / 1e9)
-        } finally System.clearProperty("graft.stateProvider")
+      val (rocks, sRocks) =
+        try Harness.measure(s"$n rocksdb")(rows())
+        finally System.clearProperty("graft.stateProvider")
       // the flagged run really routed through the provider switch:
       // applyStateProvider sets the conf inside the query's own replay
       // and nothing unsets it until the next unflagged run
@@ -81,7 +67,7 @@ object StreamParity {
           s""","first_diff":"${d.replace("\"", "'").take(160)}""""
         }
       println(
-        f"""{"query":"$n","rows":${base.size},"rocksdb_rows":${rocks.size},"parity":$parity,"provider_applied":$applied,"base_default_provider":$baseDefault,"base_secs":$tBase%.2f,"rocksdb_secs":$tRocks%.2f$firstDiff}""")
+        f"""{"query":"$n","rows":${base.size},"rocksdb_rows":${rocks.size},"parity":$parity,"provider_applied":$applied,"base_default_provider":$baseDefault,"base_secs":${sBase.secs}%.2f,"rocksdb_secs":${sRocks.secs}%.2f$firstDiff}""")
     }
     println(
       s"""{"parity_summary":{"queries":${names.size},"failures":$failures}}""")

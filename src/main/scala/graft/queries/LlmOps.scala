@@ -150,10 +150,14 @@ object LlmOps {
     // candidatePairSets: column pruning specializes the self-join's two
     // banded branches into different subtrees, so without the cuts the
     // corpus is shingled+minhashed once per branch plus once for the
-    // mh_b attach. Values unchanged.
+    // mh_b attach. Values unchanged. Both cuts are eager, for the reason
+    // the shared tf cut is (Retrieval.tfOverShared): lazy, the first
+    // consumer job materialized each cut and dropped its plan while
+    // AQE's sibling consumers still reported that plan's metrics, and
+    // the driver logged "Failed to update accumulator".
     val sigs = withShingles(graft.Scans.fanOut(docs))
       .select(col("doc_id"), minhashSig(16).as("mh"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     // The signature array rides the LEFT side of the self-join only (a
     // map-side projection; the right side is compact (band, bucket, id)
     // rows), and the per-pair reduction takes first(mh_a) while grouping
@@ -174,7 +178,7 @@ object LlmOps {
         count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
       .filter(col("bucket_n") <= maxBucket)
       .drop("bucket_n")
-      .localCheckpoint(false)
+      .localCheckpoint()
     val l = capped
       .select(col("band"), col("bucket"), col("doc_id").as("id_a"), col("mh").as("mh_a"))
     val r = capped.select(col("band"), col("bucket"), col("doc_id").as("id_b"))
@@ -212,7 +216,7 @@ object LlmOps {
     */
   private[queries] def lshPortablePairs(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // sigs/capped lineage cuts — see lshCandidatePairs (r21).
+    // sigs/capped eager lineage cuts — see lshCandidatePairs (r21).
     val sigs = withShingles(graft.Scans.fanOut(docs))
       .select(col("doc_id"),
         graft.functions.PolyHash31.polyhash31(col("tk")).as("ph"))
@@ -222,7 +226,7 @@ object LlmOps {
           |  array_min(zip_with(pp, ww,
           |    (h, w) -> (CAST(p AS BIGINT) * w + h) % 1000000007)))""".stripMargin)
         .as("mh"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val banded = sigs
       .select(col("doc_id"), col("mh"),
         posexplode(expr(
@@ -236,7 +240,7 @@ object LlmOps {
         count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
       .filter(col("bucket_n") <= 1000)
       .drop("bucket_n")
-      .localCheckpoint(false)
+      .localCheckpoint()
     val l = capped
       .select(col("band"), col("bucket"), col("doc_id").as("id_a"), col("mh").as("mh_a"))
     val r = capped.select(col("band"), col("bucket"), col("doc_id").as("id_b"))
@@ -543,15 +547,15 @@ object LlmOps {
     // banded frame (≤ 4 band replicas) makes every consumer read the
     // one materialization — the same localCheckpoint lineage-cut the
     // label-prop loop and the PageRank edge frame already use; values
-    // unchanged.
+    // unchanged. Both cuts are eager — see lshCandidatePairs.
     val prehashed = prehashedShingles(graft.Scans.fanOut(docs))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val capped = bandedBuckets(prehashed)
       .withColumn("bucket_n",
         count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
       .filter(col("bucket_n") <= maxBucket)
       .drop("bucket_n")
-      .localCheckpoint(false)
+      .localCheckpoint()
     val a = capped.select(col("band"), col("bucket"), col("doc_id").as("id_a"), col("hs").as("ha"))
     val b = capped.select(col("band"), col("bucket"), col("doc_id").as("id_b"))
     val pairs = a.join(b, Seq("band", "bucket"))
@@ -885,7 +889,7 @@ object LlmOps {
     // r22: fan the char-heavy window-hash pass out of its single-task
     // scan (Scans.fanOut — no-op at production split counts) and cut
     // lineage at occ: it feeds BOTH the dup count and the flag join, so
-    // the hash pass otherwise executed twice per run (StageProfile:
+    // the hash pass otherwise executed twice per run (stage profile:
     // 215 + 132 ms single-task stages).
     val occ = graft.Scans.fanOut(docs)
       .select(col("doc_id"), split(col("text"), " ").as("tk"))

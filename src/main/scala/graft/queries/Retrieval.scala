@@ -248,7 +248,7 @@ object Retrieval {
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("tf"))
 
-  /** One SHARED tf materialization (r22): StageProfile caught the
+  /** One SHARED tf materialization (r22): the stage profile caught the
     * tokenize+aggregate subtree executing FOUR times inside
     * text_bm25_topk — corpusQueryTerms' `length(tok) >= 4` filter pushes
     * below the tf aggregate and SPECIALIZES that branch's subtree (no
@@ -258,9 +258,18 @@ object Retrieval {
     * query-term pick) read one materialization — the same r21 cut the
     * LSH family uses; values unchanged (the filter now applies above
     * the read, same rows survive).
+    *
+    * The cut is EAGER: the builder materializes tf before any consumer
+    * is planned. A lazy cut was materialized by whichever consumer job
+    * ran first, which then dropped the cut plan while the sibling
+    * consumers AQE had started in the same action still reported that
+    * plan's SQL metrics — once the driver had collected those
+    * accumulators, every such task logged "Failed to update
+    * accumulator (Unknown class)", and the siblings blocked on the
+    * block being written instead of sharing it.
     */
   private def tfOverShared(documents: DataFrame): DataFrame =
-    tfOver(documents).localCheckpoint(false)
+    tfOver(documents).localCheckpoint()
 
   def bm25ScoresOver(documents: DataFrame): DataFrame =
     bm25ScoresOverTf(tfOverShared(documents))

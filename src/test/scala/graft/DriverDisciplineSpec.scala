@@ -22,8 +22,7 @@ class DriverDisciplineSpec extends AnyFunSuite {
   private val golden = Map(
     "AmplifiedBench.scala" -> 1, // temp-view drop list (bounded: catalog)
     "StreamParity.scala" -> 1, // parity sweep sink compare (bounded: gate sink rows at sf0.01, a diagnostic main off the query path)
-    "Bench.scala" -> 3, // evidence blocks: pruned-scan results (4..k rows; r19 adds the ivfsq8 10-row top-k)
-    "MicroBench.scala" -> 1, // micro-harness result row
+    "Bench.scala" -> 1, // pruned-scan evidence: the z-order, bloom and ivfsq8 results (4..k rows, at most the ivfsq8 10-row top-k)
     "ScaleProbe.scala" -> 11, // probe harness: per-factor invariant rows + bloom_blocksize point-lookup evidence (bounded: ≤4 probe rows per sweep) + the r19 binary-budget axis's 8 query vectors (the recallQueryVectors bound)
     "functions/Bpe.scala" -> 1, // merge table (<= 200 learned pairs)
     "functions/Wordpiece.scala" -> 1, // vocab page (capped broadcast)
