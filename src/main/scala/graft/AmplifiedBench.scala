@@ -3,26 +3,24 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale-up evidence harness: runs a selected query set at 1× and at an
+/** The scale sweep: runs a selected query set at 1× and at an
   * N×-amplified copy of the same scale factor, reporting per-query wall
   * seconds and the scaling ratio (reference benches SF ∈ {0.01, 0.1, 1},
   * `cpp/benchmarks/ndsh/q01.cpp:182`; /root/testdata is read-only with
   * no sf1 directory, so the 10× set is built here from sf0.1 — the
   * honest equivalent).
   *
-  * Amplification is FK-CONSISTENT key-shifted replication (the
-  * ScaleProbe pattern promoted to whole-dataset scope): copy `i` of
+  * Amplification is FK-CONSISTENT key-shifted replication: copy `i` of
   * every SF-scaled table shifts each key that references another
   * SF-scaled table by `i × (max(key) + 1)` — so copy i's orders join
   * copy i's customers and nobody else's, and per-copy join/group
   * cardinalities match a real larger SF. Bounded dimensions (nation,
   * region) are NOT replicated, exactly as TPC-H holds them constant
-  * across SF. Document texts are salted per replica (realistic-growth
-  * axis: shingles differ across replicas, so LSH bucket occupancy grows
-  * the way a real corpus grows — the identical-replica worst case is
-  * ScaleProbe's separate axis). Embedding vectors are kept identical
-  * (payload, not key) — ANN timing depends on corpus size, not vector
-  * novelty.
+  * across SF. Document texts are salted per replica (shingles differ
+  * across replicas, so LSH bucket occupancy grows the way a real corpus
+  * grows; the identical-replica laws are specs, see `replicate`).
+  * Embedding vectors are kept identical (payload, not key) — ANN timing
+  * depends on corpus size, not vector novelty.
   *
   * Expected law: wall(N×) ≤ ~N × wall(1×) for every query (shuffles and
   * scans are linear; broadcast sides are the UNREPLICATED dims or
@@ -30,11 +28,12 @@ import org.apache.spark.sql.functions._
   * the regression this harness exists to catch before a real cluster
   * does.
   *
-  * Usage: runMain graft.AmplifiedBench [sfDir] [factor] [reps]
+  * Usage: runMain graft.AmplifiedBench [sfDir] [factor] [reps] [q1,q2,...]
+  * (the last argument restricts the sweep to those selection rows).
   * Output: one JSON line per (query, factor); any row whose ratio
-  * exceeds the adjudication threshold gets a SECOND line at the end of
-  * the run (`"adjudication_deferred":true`) carrying the fresh-JVM
-  * child's own base/amp/ratio, measured after the sweep drained.
+  * exceeds [[AdjudicationRatio]] gets a SECOND line at the end of the
+  * run (`"adjudication_deferred":true`) carrying the fresh-JVM child's
+  * own base/amp/ratio, measured after the sweep drained.
   */
 object AmplifiedBench {
 
@@ -106,53 +105,68 @@ object AmplifiedBench {
       // flat. A ratio approaching 10 would mean the bloom stopped
       // pruning and DATA reads went linear — the regression this row
       // exists to catch.
-      "scan_bloom_pruned")
+      "scan_bloom_pruned",
+      // The scale axes these rows carry: the greedy packer's one forward
+      // scan per lang stream, tf-idf's df aggregate and tok join, the
+      // persisted-index delta query (its index builds in the warmup, so
+      // expect the delta's cost to grow far slower than the corpus),
+      // LSH dedup on a corpus whose salted replicas share no shingle,
+      // and the fixed-size stream CMS state.
+      "pack_sequences", "text_tfidf_topk", "dedup_incremental_lsh",
+      "dedup_minhash_lsh", "stream_cms")
 
-  /** Writes the factor-amplified dataset as `{table}.parquet` under a
-    * temp dir honoring the same directory contract as /root/testdata,
-    * so every registered query runs on it unchanged.
+  /** A sweep row whose ratio exceeds this re-runs in a fresh JVM after
+    * the sweep has drained.
     */
-  def buildAmplified(spark: SparkSession, sfDir: String, f: Int): String = {
-    val out = System.getProperty("java.io.tmpdir") + s"/graft_amp_${f}x"
-    // Reuse hook for the fresh-JVM adjudication child (r17): the child
-    // re-measures ONE query on the identical amplified dataset the sweep
-    // just used — rebuilding it would both waste minutes and break
-    // "same input, fresh heap" as the only changed variable.
-    val marker = java.nio.file.Paths.get(out, "_SUCCESS_GRAFT")
-    if (sys.env.contains("SPARK_GRAFT_AMP_REUSE") &&
-        java.nio.file.Files.exists(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == sfDir) {
-      System.err.println(s"[amp] reusing existing ${f}x dataset at $out")
-      return out
-    }
-    def shiftOf(df: DataFrame, key: String): Long =
-      df.agg(max(col(key))).head().getLong(0) + 1L
+  private val AdjudicationRatio = 3.0
 
+  /** Idle pause between the drained sweep and the first child. */
+  private val SettleMs = 8000L
+
+  /** The per-copy step of a key column: `max(key) + 1`, so shifted
+    * copies occupy disjoint id ranges.
+    */
+  private[graft] def keyStep(df: DataFrame, key: String): Long =
+    df.agg(max(col(key))).head().getLong(0) + 1L
+
+  /** `f` copies of `df`, unioned. Copy `i` moves each column in `shifts`
+    * by `i × step`; with `salt`, copy `i > 0` also suffixes every token
+    * of `text` with `_r<i>`, so no shingle is shared across copies.
+    * Copy 0 is `df` itself. Without `salt` every document of copy `i`
+    * is an exact duplicate of its copy-0 original — the input of the
+    * replication-invariance specs.
+    */
+  private[graft] def replicate(df: DataFrame, f: Int, shifts: Map[String, Long],
+      salt: Boolean = false): DataFrame =
+    (0 until f).map { i =>
+      df.select(df.columns.toSeq.map { c =>
+        shifts.get(c) match {
+          case Some(step) => (col(c) + lit(i * step)).as(c)
+          case None if salt && c == "text" && i > 0 => expr(
+            s"concat_ws(' ', transform(split(text, ' '), t -> concat(t, '_r$i')))").as(c)
+          case None => col(c)
+        }
+      }: _*)
+    }.reduce(_ unionByName _)
+
+  /** Where the factor-`f` copy of `sfDir` lives. */
+  private def amplifiedDir(sfDir: String, f: Int): String =
+    DimCache.artifactPath(s"amp${f}x", sfDir)
+
+  /** Writes the factor-amplified dataset as `{table}.parquet` under
+    * [[amplifiedDir]], honoring the same directory contract as
+    * /root/testdata, so every registered query runs on it unchanged.
+    */
+  private def buildAmplified(spark: SparkSession, sfDir: String, f: Int): String = {
+    val out = amplifiedDir(sfDir, f)
     val cust = Tables.customer(spark, sfDir)
     val ord = Tables.orders(spark, sfDir)
     val sup = Tables.supplier(spark, sfDir)
     val prt = Tables.part(spark, sfDir)
-    val cShift = shiftOf(cust, "c_custkey")
-    val oShift = shiftOf(ord, "o_orderkey")
-    val sShift = shiftOf(sup, "s_suppkey")
-    val pShift = shiftOf(prt, "p_partkey")
-
-    /** Replicate with each (column → per-copy shift step) applied. */
-    def amp(df: DataFrame, shifts: Map[String, Long],
-            saltText: Boolean = false): DataFrame =
-      (0 until f).map { i =>
-        val shifted = df.columns.foldLeft(df) { (d, c) =>
-          shifts.get(c) match {
-            case Some(step) =>
-              d.withColumn(c, col(c) + lit(i.toLong * step))
-            case None if saltText && c == "text" && i > 0 =>
-              d.withColumn(c, expr(
-                s"concat_ws(' ', transform(split(text, ' '), t -> concat(t, '_r$i')))"))
-            case None => d
-          }
-        }
-        shifted
-      }.reduce(_ unionByName _)
+    val cShift = keyStep(cust, "c_custkey")
+    val oShift = keyStep(ord, "o_orderkey")
+    val sShift = keyStep(sup, "s_suppkey")
+    val pShift = keyStep(prt, "p_partkey")
 
     def write(name: String, df: DataFrame): Unit =
       df.write.mode("overwrite").parquet(s"$out/$name.parquet")
@@ -160,39 +174,49 @@ object AmplifiedBench {
     // bounded dims: constant across SF, exactly like TPC-H
     write("nation", Tables.nation(spark, sfDir))
     write("region", Tables.region(spark, sfDir))
-    write("customer", amp(cust, Map("c_custkey" -> cShift)))
-    write("supplier", amp(sup, Map("s_suppkey" -> sShift)))
-    write("part", amp(prt, Map("p_partkey" -> pShift)))
+    write("customer", replicate(cust, f, Map("c_custkey" -> cShift)))
+    write("supplier", replicate(sup, f, Map("s_suppkey" -> sShift)))
+    write("part", replicate(prt, f, Map("p_partkey" -> pShift)))
     write("orders",
-      amp(ord, Map("o_orderkey" -> oShift, "o_custkey" -> cShift)))
-    write("lineitem", amp(Tables.lineitem(spark, sfDir), Map(
+      replicate(ord, f, Map("o_orderkey" -> oShift, "o_custkey" -> cShift)))
+    write("lineitem", replicate(Tables.lineitem(spark, sfDir), f, Map(
       "l_orderkey" -> oShift, "l_partkey" -> pShift, "l_suppkey" -> sShift)))
     val ev = Tables.events(spark, sfDir)
-    write("events", amp(ev, Map(
-      "event_id" -> shiftOf(ev, "event_id"),
+    write("events", replicate(ev, f, Map(
+      "event_id" -> keyStep(ev, "event_id"),
       "user_id" -> cShift))) // user_id joins c_custkey — same step
     val docs = Tables.documents(spark, sfDir)
     write("documents",
-      amp(docs, Map("doc_id" -> shiftOf(docs, "doc_id")), saltText = true))
+      replicate(docs, f, Map("doc_id" -> keyStep(docs, "doc_id")), salt = true))
     val emb = Tables.embeddings(spark, sfDir)
-    write("embeddings", amp(emb, Map("vec_id" -> shiftOf(emb, "vec_id"))))
-    // completeness marker for the reuse hook (parquet's own _SUCCESS is
-    // per-table; this one certifies the whole directory)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(out, "_SUCCESS_GRAFT"),
-      sfDir.getBytes("UTF-8"))
+    write("embeddings", replicate(emb, f, Map("vec_id" -> keyStep(emb, "vec_id"))))
     out
   }
+
+  /** A fresh-JVM adjudication child is launched with this as its fifth
+    * argument: it reuses the parent's dataset and never adjudicates.
+    */
+  private val ChildFlag = "--adjudication-child"
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
+    val only = args.lift(3).map(_.split(",").map(_.trim).toSet)
+    val child = args.lift(4).contains(ChildFlag)
     val spark = Harness.session()
 
-    val (ampDir, built) = Harness.measure("amplify")(buildAmplified(spark, sfDir, factor))
-    System.err.println(
-      f"[amp] built ${factor}x dataset at $ampDir in ${built.secs}%.1fs")
+    // The child re-measures one query on the identical dataset the sweep
+    // just used: rebuilding it would waste minutes and break "same input,
+    // fresh heap" as the only changed variable.
+    val ampDir =
+      if (child) amplifiedDir(sfDir, factor)
+      else {
+        val (dir, built) = Harness.measure("amplify")(buildAmplified(spark, sfDir, factor))
+        System.err.println(
+          f"[amp] built ${factor}x dataset at $dir in ${built.secs}%.1fs")
+        dir
+      }
 
     def run(name: String, dir: String): Double =
       try Harness.timed(name)(SparkEntry.queries(name)(spark, dir)).secs
@@ -224,37 +248,23 @@ object AmplifiedBench {
       if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(reps / 2)
     }
 
-    // Local-iteration filter, same contract as Verify's SPARK_GRAFT_ONLY.
-    val only = sys.env.get("SPARK_GRAFT_AMP_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // Per-row heap/GC telemetry (r16): the 50-query r16 sweep measured
-    // sketch_cms_topk at 13.5x while a fresh JVM measures the same
-    // query at 1.2x in harness order — late-sweep GC pressure, not the
-    // plan. These columns make that adjudication a lookup instead of a
-    // re-run: a high ratio WITH a gc jump is sweep context; without, code.
+    // Per-row heap/GC telemetry: a high ratio WITH a gc jump is sweep
+    // context (late-sweep GC pressure), without one it is the plan.
     def gcMs(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).sum
     }
-    // Machine-enforced adjudication (r17 task 3, DEFERRED in r19 —
-    // verdict task 1): any sweep row whose ratio exceeds the threshold
-    // re-runs in a fresh child JVM on the identical amplified dataset
-    // (SPARK_GRAFT_AMP_REUSE). In r17–r18 the child launched INSIDE the
-    // sweep, so it competed with the parent's hot heap and 32 busy
-    // threads — join_skew_salted's r18 child read 8.66 where a
-    // standalone run read 4.72, and a hand run was needed to settle it.
-    // Now adjudication queues during the sweep and the children run
-    // only AFTER the sweep fully drains: temp views dropped, cache
-    // cleared, the parent's SparkSession STOPPED, heap GC'd, and a
-    // settle pause — the parent is an idle waiter while each child
-    // measures. The child re-measures BASE and AMP itself, so its ratio
-    // is internally consistent (same JVM, same dataset, fresh heap).
-    val adjThreshold = sys.env.get("SPARK_GRAFT_AMP_ADJ_THRESHOLD")
-      .map(_.toDouble).getOrElse(3.0)
-    val settleMs = sys.env.get("SPARK_GRAFT_AMP_SETTLE_MS")
-      .map(_.toLong).getOrElse(8000L)
-    val noAdj = sys.env.contains("SPARK_GRAFT_AMP_NO_ADJ")
+    // Adjudication: any sweep row whose ratio exceeds AdjudicationRatio
+    // re-runs in a fresh child JVM on the identical amplified dataset.
+    // A child launched INSIDE the sweep competed with the parent's hot
+    // heap and busy threads (join_skew_salted read 8.66 there where a
+    // standalone run read 4.72), so adjudication queues during the sweep
+    // and the children run only AFTER the sweep fully drains: temp views
+    // dropped, cache cleared, the parent's SparkSession STOPPED, heap
+    // GC'd, and a settle pause — the parent is an idle waiter while each
+    // child measures. The child re-measures BASE and AMP itself, so its
+    // ratio is internally consistent (same JVM, same dataset, fresh heap).
     // child row: (base_secs, amp_secs, ratio) parsed from its one data line
     def freshJvmRun(query: String): Option[(Double, Double, Double)] = {
       import scala.jdk.CollectionConverters._
@@ -266,13 +276,10 @@ object AmplifiedBench {
           a.startsWith("-XX:") || a.startsWith("-Dspark."))
       val cmd = (Seq(javaBin) ++ jvmFlags ++ Seq(
         "-cp", System.getProperty("java.class.path"),
-        "graft.AmplifiedBench", sfDir, factor.toString, reps.toString)).asJava
+        "graft.AmplifiedBench", sfDir, factor.toString, reps.toString,
+        query, ChildFlag)).asJava
       val pb = new ProcessBuilder(cmd)
-      pb.environment().put("SPARK_GRAFT_AMP_ONLY", query)
-      pb.environment().put("SPARK_GRAFT_AMP_REUSE", "1")
-      pb.environment().put("SPARK_GRAFT_AMP_NO_ADJ", "1")
       pb.environment().put("SPARK_GRAFT_CPUS", Harness.cpus.toString)
-      pb.redirectErrorStream(false)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       val p = pb.start()
       val outLines = scala.io.Source.fromInputStream(p.getInputStream)
@@ -287,18 +294,16 @@ object AmplifiedBench {
           yield (b, a, r)
       }
     }
-    // Inclusion-rule header (r20, r19 verdict task 7): the sweep covers
-    // a SELECTION, not the full bench headline — until now the rule
-    // lived in code comments, so a reader of the artifact alone could
-    // mistake partial coverage for full. The first output line names
-    // the rule and lists the headline queries NOT swept, computed at
-    // runtime so it can never drift from the actual sets.
+    // Inclusion-rule header: the sweep covers a SELECTION, not the full
+    // bench headline, so the first output line names the rule and lists
+    // the headline queries NOT swept, computed at runtime so it can never
+    // drift from the actual sets.
     if (only.isEmpty) {
       val excluded = Bench.headline.filterNot(selection.contains)
       println(
         s"""{"meta":"selection_rule","swept":${selection.size},""" +
           s""""headline_excluded_n":${excluded.size},""" +
-          s""""rule":"sweep = NDS-H 22 + grouped-scan rewires + heaviest driver-bench rows + pandas-API shapes + ANN index read paths + state-store streaming replays; excluded headline families: recall-certification rows (8-query broadcast windows, work bounded by the fixed query set), rows with their own ScaleProbe axis (pack_sequences, tfidf, incremental LSH), light fixed-overhead-dominated scan/agg/join rows, and DimCache'd bounded-result rows",""" +
+          s""""rule":"sweep = NDS-H 22 + grouped-scan rewires + heaviest driver-bench rows + pandas-API shapes + ANN index read paths + state-store streaming replays + the packing, tf-idf, LSH dedup and stream-CMS scale rows; excluded headline families: recall-certification rows (8-query broadcast windows, work bounded by the fixed query set), light fixed-overhead-dominated scan/agg/join rows, and DimCache'd bounded-result rows",""" +
           s""""headline_excluded":[${excluded.map("\"" + _ + "\"").mkString(",")}]}""")
     }
     val pending = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
@@ -314,12 +319,12 @@ object AmplifiedBench {
       val ratio = if (base > 0 && amp > 0) amp / base else -1.0
       val rt = Runtime.getRuntime
       val heapMb = (rt.totalMemory - rt.freeMemory) / 1048576
-      // gc_base_ms/gc_amp_ms split (r17 ADVICE): a base-side GC spike
-      // DEFLATES the ratio, an amp-side spike inflates it — one summed
-      // column could not say which group the pressure hit.
-      if (!noAdj && ratio > adjThreshold) {
+      // gc_base_ms/gc_amp_ms split: a base-side GC spike DEFLATES the
+      // ratio, an amp-side spike inflates it — one summed column could
+      // not say which group the pressure hit.
+      if (!child && ratio > AdjudicationRatio) {
         System.err.println(
-          f"[amp] $n sweep ratio $ratio%.2f > $adjThreshold%.1f — " +
+          f"[amp] $n sweep ratio $ratio%.2f > $AdjudicationRatio%.1f — " +
             "queued for post-drain fresh-JVM adjudication")
         pending += ((n, ratio))
       }
@@ -335,18 +340,18 @@ object AmplifiedBench {
       spark.stop()
       System.gc()
       System.err.println(
-        s"[amp] sweep drained; settling ${settleMs}ms before " +
+        s"[amp] sweep drained; settling ${SettleMs}ms before " +
           s"${pending.size} adjudication child(ren)")
-      Thread.sleep(settleMs)
+      Thread.sleep(SettleMs)
       pending.foreach { case (n, sweepRatio) =>
         freshJvmRun(n) match {
           case Some((b, a, fr)) =>
             // fr < 0 means the child ran but its query FAILED — that
-            // must not read as exoneration (r17 ADVICE): a failed
-            // re-run proves nothing about the sweep reading.
+            // must not read as exoneration: a failed re-run proves
+            // nothing about the sweep reading.
             val verdict =
               if (fr < 0) "child_failed"
-              else if (fr <= adjThreshold) "sweep_context"
+              else if (fr <= AdjudicationRatio) "sweep_context"
               else "code"
             println(
               f"""{"query":"$n","adjudication_deferred":true,"sweep_ratio":$sweepRatio%.2f,"fresh_base_secs":$b%.3f,"fresh_amp_secs":$a%.3f,"fresh_ratio":$fr%.2f,"adjudication":"$verdict"}""")

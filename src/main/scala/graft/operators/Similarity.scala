@@ -149,9 +149,9 @@ object Similarity {
     * Scale contract: k ∝ corpus (the paper runs 50k cells over 5B
     * embeddings) keeps per-cell population — and the per-cell pairwise
     * quadratic — constant; assignment never shuffles, the pair join
-    * shuffles once on cell_id. MEASURED (r18, `ScaleProbe` axes
-    * `semdedup_k_prop_n` / `semdedup_planted_recall`, factors 1/4/10 at
-    * k = 8·f — SCALING.md "Round-18 probe"): max cell population
+    * shuffles once on cell_id. MEASURED (r18, the retired
+    * `semdedup_k_prop_n` / `semdedup_planted_recall` ladders, factors
+    * 1/4/10 at k = 8·f — SCALING.md "Round-18 probe"): max cell population
     * 292→327 (bounded), candidate pairs exactly linear (×10.0 at 10×),
     * wall sublinear, and planted cos≈1 dup recall 99.9% flat across the
     * k ladder — recall is a τ property, cost is the linear k ∝ N law.

@@ -629,12 +629,8 @@ object Aggregates {
   private def weightedMedian(s: SparkSession, dir: String): DataFrame =
     weightedMedianOver(Tables.lineitem(s, dir))
 
-  /** The weighted-median build over any lineitem-shaped frame — public
-    * so ScaleProbe's grouped-scan skew axis can replicate the input
-    * into one hot group and pin near-linear wall + cold-group
-    * invariance.
-    */
-  def weightedMedianOver(lineitem: DataFrame): DataFrame = {
+  /** The weighted-median build over any lineitem-shaped frame. */
+  private[graft] def weightedMedianOver(lineitem: DataFrame): DataFrame = {
     // Crossing-partition lookup (r22, on top of r21's price-only order):
     // the full prefix scan appended cum/tot to EVERY row, then filtered
     // and re-aggregated the whole frame just to keep one row per group.

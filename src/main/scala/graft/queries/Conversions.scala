@@ -356,21 +356,8 @@ object Conversions {
     * bloom-less control.
     */
   private[graft] def bloomedEventsPath(
-      s: SparkSession, dir: String, bloom: Boolean): String =
-    bloomedEventsPath(s, dir, bloom, blockSize = 64 * 1024)
-
-  /** blockSize-parameterized variant (r18, verdict task 6): the gate
-    * layout stays 64 KB groups (several groups even at sf0.01 so the
-    * pruning experiment has groups to skip); the `bloom_blocksize`
-    * ScaleProbe axis writes a second, larger-group copy to measure how
-    * group size trades pruned_factor against per-group overhead — the
-    * production question (128 MB groups) answered with two measured
-    * points instead of theory.
-    */
-  private[graft] def bloomedEventsPath(
-      s: SparkSession, dir: String, bloom: Boolean, blockSize: Int): String = {
-    val suffix = (if (bloom) "bloom" else "plain") +
-      (if (blockSize == 64 * 1024) "" else s"_bs$blockSize")
+      s: SparkSession, dir: String, bloom: Boolean): String = {
+    val suffix = if (bloom) "bloom" else "plain"
     val path = graft.DimCache.artifactPath(s"bscan_$suffix", dir)
     graft.DimCache.cached(s"bscan-layout:$suffix:$dir") {
       val ev = Tables.events(s, dir)
@@ -386,7 +373,7 @@ object Conversions {
         .repartition(2, xxhash64(col("event_id")))
         .sortWithinPartitions(xxhash64(col("event_id")))
         .write.mode("overwrite")
-        .option("parquet.block.size", blockSize)
+        .option("parquet.block.size", 64 * 1024)
         .option("parquet.enable.dictionary", "false")
       val w =
         if (bloom) scattered

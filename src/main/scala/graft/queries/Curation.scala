@@ -26,9 +26,10 @@ object Curation {
 
   private val P = 1000000007L
 
-  /** Non-empty whitespace tokens of `text` (both engines' shared cut). */
-  private def toks = expr(
-    "filter(split(coalesce(text, ''), ' '), t -> length(t) > 0)")
+  /** Non-empty whitespace tokens of `text` (both engines' shared cut;
+    * `split` never yields a null element, so removing '' is the cut).
+    */
+  private def toks = expr("array_remove(split(coalesce(text, ''), ' '), '')")
 
   /** DuckDB mirror of [[graft.functions.PolyHash31]] for one token
     * expression: fold codepoints through (h*31 + c) mod P.
@@ -63,11 +64,9 @@ object Curation {
   }
 
   /** The d×w counter cells of the CMS over any (text) frame's token
-    * stream — exposed for ScaleProbe's linearity axis (counters of an
-    * N×-replicated corpus must be EXACTLY N× the base counters: counts
-    * are linear, which is also the cell-wise shard-merge property).
+    * stream.
     */
-  private[graft] def cmsCellCounts(docs: DataFrame): DataFrame =
+  private def cmsCellCounts(docs: DataFrame): DataFrame =
     docs
       .select(graft.functions.PolyHash31.polyhash31(toks)
         .getField("pp").as("hs"))

@@ -260,10 +260,6 @@ object GraphOps {
       p
     }
 
-  private[graft] def trianglesOver(lineitem: DataFrame,
-      orders: DataFrame): DataFrame =
-    trianglesFromEdges(coPurchaseEdges(lineitem, orders))
-
   /** The triangle/clustering computation over an already-materialized
     * canonical (a < b) edge set — the analytic a steady-state graph
     * pipeline re-pays.
@@ -517,16 +513,16 @@ object GraphOps {
     * IDENTICAL cap. Below the cap (every sane sf here) the output is
     * bit-identical to the uncapped operator.
     */
-  val wedgeCap = 1000
+  private[graft] val wedgeCap = 1000
 
   /** The capped wedge-candidate frame over an undirected edge list
     * (a, b) with a < b: doubled, per-vertex neighbor lists truncated to
     * the [[wedgeCap]] smallest neighbors, then the self-join on the
-    * shared center. Public so ScaleProbe can pin the boundedness law:
-    * a degree-d hub emits min(d, cap)·(min(d, cap) − 1)/2 candidates —
-    * constant once d crosses the cap, never Σd².
+    * shared center. A degree-d hub emits min(d, cap)·(min(d, cap) − 1)/2
+    * candidates — constant once d crosses the cap, never Σd²
+    * (AnalyticsSpec).
     */
-  def cappedWedgeCandidates(e0: DataFrame): DataFrame = {
+  private[graft] def cappedWedgeCandidates(e0: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val edges = e0.unionByName(
       e0.select(col("b").as("a"), col("a").as("b")))

@@ -695,7 +695,7 @@ object LlmOps {
     * under `path`/buckets plus the (doc_id, hs) signature store under
     * `path`/sigs. See [[dedupIncrementalLsh]].
     */
-  private[graft] def buildLshIndex(corpus: DataFrame, path: String): Unit = {
+  private def buildLshIndex(corpus: DataFrame, path: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     val pre = prehashedShingles(corpus)
     bandedBuckets(pre)
@@ -715,7 +715,7 @@ object LlmOps {
     * corpus signature re-attaches by id after — the same
     * never-hash-arrays shape as [[ngramJaccardPairs]].
     */
-  private[graft] def incrementalLshPairs(
+  private def incrementalLshPairs(
       s: SparkSession, deltaDocs: DataFrame, idxDir: String): DataFrame = {
     val delta = prehashedShingles(deltaDocs)
     val pairs = bandedBuckets(delta)
@@ -4250,10 +4250,8 @@ object LlmOps {
   private def textTfidfTopk(s: SparkSession, dir: String): DataFrame =
     tfidfTopkOver(Tables.documents(s, dir), k = 5)
 
-  /** The tf-idf top-k pipeline over an arbitrary (doc_id, text) frame —
-    * public so ScaleProbe can drive it on enlarged corpora.
-    */
-  def tfidfTopkOver(documents: DataFrame, k: Int): DataFrame = {
+  /** The tf-idf top-k pipeline over an arbitrary (doc_id, text) frame. */
+  private def tfidfTopkOver(documents: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tf = documents
       .select(col("doc_id"),

@@ -45,12 +45,11 @@ object PipelineOps {
   private def pipelineFunnel(s: SparkSession, dir: String): DataFrame =
     funnelOver(Tables.documents(s, dir))
 
-  /** The funnel over ANY (doc_id, text, lang) corpus — public so
-    * ScaleProbe can pin the replication-invariance law: under k×
+  /** The funnel over ANY (doc_id, text, lang) corpus. Under k×
     * replication with fresh ids and identical texts, stages 0-2 scale
-    * exactly ×k while stages 3-5 are EXACTLY unchanged (exact dedup
+    * exactly ×k while stages 3-5 are EXACTLY unchanged: exact dedup
     * collapses every replica onto the original min id, so the
-    * downstream corpus is identical).
+    * downstream corpus is identical (PipelineSpec).
     */
   private[graft] def funnelOver(docs: DataFrame): DataFrame = {
     // stage 1: quality gate (>= 10 tokens, short-token ratio <= 0.4) —

@@ -26,10 +26,11 @@ import org.apache.spark.sql.types._
 object Retrieval {
 
   /** Shared token cut (same contract as tf-idf): split on single space,
-    * drop empties.
+    * drop empties. `split` never yields a null element, so removing ''
+    * keeps exactly the non-empty tokens without an interpreted lambda.
     */
   private def tokens(c: org.apache.spark.sql.Column) =
-    filter(split(coalesce(c, lit("")), " "), t => length(t) > 0)
+    array_remove(split(coalesce(c, lit("")), " "), "")
 
   private val tokensSqlFrom =
     """SELECT doc_id, unnest(string_split(coalesce(text, ''), ' ')) AS tok
@@ -55,11 +56,8 @@ object Retrieval {
   private def indexPostings(s: SparkSession, dir: String): DataFrame =
     postingsOver(Tables.documents(s, dir))
 
-  /** The postings build over any (doc_id, text) corpus — public so
-    * ScaleProbe can pin df-linearity and the posting cap under
-    * replication.
-    */
-  def postingsOver(documents: DataFrame): DataFrame = {
+  /** The postings build over any (doc_id, text) corpus. */
+  private[graft] def postingsOver(documents: DataFrame): DataFrame = {
     val pairs = documents
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .distinct()
@@ -213,11 +211,6 @@ object Retrieval {
       .orderBy(col("bm25_micro").desc, col("doc_id"))
       .limit(10)
 
-  /** The full per-doc BM25 score frame over any (doc_id, text) corpus —
-    * public so ScaleProbe can pin the replication-invariance property
-    * (every factor in the micro-score formula scales linearly with
-    * corpus replication, so per-doc scores are EXACTLY unchanged).
-    */
   /** The data-derived query-term set shared by BM25 and the snippet
     * stage: the five length ≥ 4 tokens ranked 10..14 by df. Bounded
     * pick: TakeOrdered(14) over the vocab (never a vocab-wide
@@ -271,7 +264,12 @@ object Retrieval {
   private def tfOverShared(documents: DataFrame): DataFrame =
     tfOver(documents).localCheckpoint()
 
-  def bm25ScoresOver(documents: DataFrame): DataFrame =
+  /** The full per-doc BM25 score frame over any (doc_id, text) corpus.
+    * Every factor of the micro-score formula scales linearly under
+    * corpus replication, so per-doc scores are exactly unchanged
+    * (RetrievalSpec).
+    */
+  private[graft] def bm25ScoresOver(documents: DataFrame): DataFrame =
     bm25ScoresOverTf(tfOverShared(documents))
 
   private def bm25ScoresOverTf(tf: DataFrame): DataFrame = {

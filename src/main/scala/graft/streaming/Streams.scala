@@ -858,8 +858,8 @@ object Streams {
     import spark.implicits._
     val pairs = docs
       .select(col("doc_id"), explode(expr(
-        """array_distinct(filter(split(coalesce(text, ''), ' '),
-          |  t -> length(t) > 0))""".stripMargin)).as("tok"))
+        "array_distinct(array_remove(split(coalesce(text, ''), ' '), ''))"))
+        .as("tok"))
       .as[(Long, String)]
     pairs
       .groupByKey(_._2)

@@ -280,6 +280,22 @@ class AnalyticsSpec extends AnyFunSuite {
     got.foreach(r => assert(!e0((r.getAs[Long]("u"), r.getAs[Long]("v")))))
   }
 
+  test("link prediction: a hub's wedge candidates stay at the capped bound") {
+    import spark.implicits._
+    val cap = queries.GraphOps.wedgeCap.toLong
+    // a 6-clique: each of its 6 centers has 5 neighbors, C(5, 2) = 10
+    // candidates each; the hub's leaves have degree 1 and add none
+    val clique = (for (i <- 1L to 6L; j <- (i + 1) to 6L)
+      yield (i + 1000000L, j + 1000000L)).toDF("a", "b")
+    Seq(1, 2).foreach { f =>
+      val d = 600L * f // under the cap at 1x, past it at 2x
+      val hub = spark.range(1, d + 1).select(lit(0L).as("a"), col("id").as("b"))
+      val m = math.min(d, cap)
+      val got = queries.GraphOps.cappedWedgeCandidates(hub.unionByName(clique)).count()
+      assert(got == m * (m - 1) / 2 + 60, s"hub degree $d")
+    }
+  }
+
   test("label propagation: members conserve nodes, labels are node ids") {
     val rows = SparkEntry.queries("graph_label_prop")(spark, sf).collect()
     assert(rows.nonEmpty)
@@ -342,6 +358,25 @@ class AnalyticsSpec extends AnyFunSuite {
       assert(atOrBelow * 2 >= tot, s"group $rf: $med too low")
       assert(rows.exists(_._1 == med), s"group $rf: $med not an element")
     }
+  }
+
+  test("weighted median: cold groups are invariant under a hot replicated group") {
+    // copy 1 of lineitem lands entirely in group N, so A and R keep
+    // exactly their copy-0 rows while N spreads over more range partitions
+    val li = Tables.lineitem(spark, sf)
+      .select(col("l_returnflag"), col("l_extendedprice"), col("l_orderkey"),
+        col("l_quantity"))
+    val step = AmplifiedBench.keyStep(li, "l_orderkey")
+    val hot = AmplifiedBench.replicate(li, 2, Map("l_orderkey" -> step))
+      .withColumn("l_returnflag",
+        when(col("l_orderkey") >= step, lit("N")).otherwise(col("l_returnflag")))
+    def medians(d: org.apache.spark.sql.DataFrame) =
+      queries.Aggregates.weightedMedianOver(d).collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
+    val (base, got) = withConf(spreadPartitions: _*)((medians(li), medians(hot)))
+    assert(base.size == 3 && base.contains("N"))
+    assert(got - "N" == base - "N")
+    assert(got("N")._1 == base("N")._1 + base.values.map(_._1).sum)
   }
 
   test("weighted median is tie-order-invariant (price-only scan order)") {

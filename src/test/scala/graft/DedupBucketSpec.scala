@@ -37,6 +37,24 @@ class DedupBucketSpec extends AnyFunSuite {
     assert(removed.exceptAll(inPairs).isEmpty)
   }
 
+  test("LSH dedup keepers are invariant on an identically replicated corpus") {
+    // each copy-1 doc is an exact duplicate of its copy-0 original, so it
+    // joins the original's component, whose min id is the copy-0 keeper
+    val docs = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+    val doubled = AmplifiedBench.replicate(docs, 2,
+      Map("doc_id" -> AmplifiedBench.keyStep(docs, "doc_id")))
+    def keepers(d: org.apache.spark.sql.DataFrame): Set[Long] = {
+      val pairs = queries.LlmOps.lshCandidatePairs(d, maxBucket = 1000)
+        .filter(col("est_jaccard") >= 0.75)
+        .select(col("id_a"), col("id_b"))
+      Dedup.dedupCorpus(d, pairs).select(col("doc_id")).collect()
+        .map(_.getLong(0)).toSet
+    }
+    val base = keepers(docs)
+    assert(base.nonEmpty)
+    assert(keepers(doubled) == base)
+  }
+
   test("resolveKeepers residue is bounded regardless of iteration count") {
     // a 200-node chain needs many propagation rounds; persisted-RDD
     // residue must stay a small constant, not grow per iteration

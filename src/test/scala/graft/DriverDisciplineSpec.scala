@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * in the code and (b) update the golden in the same reviewable diff.
   *
   * Scope: `.collect()` exactly. `head()`/`take(k)` are bounded by
-  * construction; harness mains (Bench/ScaleProbe/…) are driver TOOLS,
+  * construction; harness mains (Bench/AmplifiedBench/…) are driver TOOLS,
   * not operators, but stay pinned so growth there is conscious too.
   */
 class DriverDisciplineSpec extends AnyFunSuite {
@@ -23,7 +23,6 @@ class DriverDisciplineSpec extends AnyFunSuite {
     "AmplifiedBench.scala" -> 1, // temp-view drop list (bounded: catalog)
     "StreamParity.scala" -> 1, // parity sweep sink compare (bounded: gate sink rows at sf0.01, a diagnostic main off the query path)
     "Bench.scala" -> 1, // pruned-scan evidence: the z-order, bloom and ivfsq8 results (4..k rows, at most the ivfsq8 10-row top-k)
-    "ScaleProbe.scala" -> 11, // probe harness: per-factor invariant rows + bloom_blocksize point-lookup evidence (bounded: ≤4 probe rows per sweep) + the r19 binary-budget axis's 8 query vectors (the recallQueryVectors bound)
     "functions/Bpe.scala" -> 1, // merge table (<= 200 learned pairs)
     "functions/Wordpiece.scala" -> 1, // vocab page (capped broadcast)
     "operators/GlobalOrder.scala" -> 5, // offsets maps (O(P+G), probed r16; r21 adds groupedRankFamily's partials — same #partitions × #groups bound, executor-capped like the others; r22 adds groupedOrderStats' partials (same bound) and its crossing results (≤ #groups × #targets rows))

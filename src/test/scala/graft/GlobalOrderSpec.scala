@@ -283,6 +283,29 @@ class GlobalOrderSpec extends AnyFunSuite {
     assert(messages(exCard).exists(_.contains("maxGroups=16")))
   }
 
+  test("grouped scan offsets: at most P + G - 1 (partition, group) entries") {
+    // range partitioning on (group, order...) keeps each group in one
+    // contiguous run of partitions, so the driver collects O(P + G)
+    // partials, not P × G
+    val li = Tables.lineitem(spark, sf)
+    val doubled = AmplifiedBench.replicate(li, 2,
+      Map("l_orderkey" -> AmplifiedBench.keyStep(li, "l_orderkey")))
+    val ord = Seq(col("l_extendedprice"), col("l_orderkey"),
+      col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
+    withConf(spreadPartitions: _*) {
+      Seq(col("l_returnflag"), pmod(col("l_partkey"), lit(40))).foreach { key =>
+        val in = doubled.withColumn("g", key)
+        val scanned = GlobalOrder.groupedCumSum(
+          in, Seq("g"), ord, col("l_quantity").cast(LongType), "cum")
+        val p = scanned.rdd.getNumPartitions
+        val g = in.select(col("g")).distinct().count()
+        val entries = scanned.select(spark_partition_id(), col("g")).distinct().count()
+        assert(p == 16 && g > 1)
+        assert(entries <= p + g - 1, s"$entries entries for P = $p, G = $g")
+      }
+    }
+  }
+
   test("ntileFromRowNumber equals SQL ntile for every frame size and k") {
     // The formula (first n mod k tiles take n/k + 1 rows) must agree
     // with the engine's ntile on EVERY (n, k), including the n < k edge

@@ -15,6 +15,25 @@ object TestSpark {
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the session confs `kvs` set, restoring them after. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  /** Range scans keep their partitions apart: 16 shuffle partitions
+    * that AQE may not coalesce, so a group spans several of them even
+    * at sf0.001.
+    */
+  val spreadPartitions: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "16",
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
 }
 
 class NdshSpec extends AnyFunSuite {

@@ -68,4 +68,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(docs(3) == counts("after_exact_dedup"))
     assert(docs(4) <= docs(3) && counts("after_near_dedup") <= docs(3))
   }
+
+  test("funnel: stages 0-2 double and stages 3-5 hold under identical 2x replication") {
+    val docs = Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text"), col("lang"))
+    // a multiple of 100, so the doc_id % 100 benchmark stand-in picks the
+    // same texts in both copies
+    val doubled = AmplifiedBench.replicate(docs, 2, Map("doc_id" -> 1000000000L))
+    def stages(d: org.apache.spark.sql.DataFrame) =
+      queries.PipelineOps.funnelOver(d).collect()
+        .map(r => r.getAs[String]("stage") ->
+          ((r.getAs[Long]("n_docs"), r.getAs[Long]("n_tokens"))))
+        .toMap
+    val base = stages(docs)
+    val big = stages(doubled)
+    assert(base("5_decontaminated")._1 > 0)
+    assert(big.keySet == base.keySet)
+    base.foreach { case (stage, (nd, nt)) =>
+      val k = if (stage < "3") 2L else 1L
+      assert(big(stage) == ((k * nd, k * nt)), s"stage $stage")
+    }
+  }
 }

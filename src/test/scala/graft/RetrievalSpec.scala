@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariants of the retrieval pair (inverted index + BM25) that the
@@ -27,6 +29,41 @@ class RetrievalSpec extends AnyFunSuite {
       assert(ids == ids.sorted && ids.distinct.length == ids.length,
         s"postings not a sorted set: $posting")
     }
+  }
+
+  /** The sf corpus and its identical 2× replica (fresh ids, same texts). */
+  private def corpus = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+  private lazy val step = AmplifiedBench.keyStep(corpus, "doc_id")
+  private def doubled = AmplifiedBench.replicate(corpus, 2, Map("doc_id" -> step))
+
+  test("index_postings: df doubles and the 20-posting cap holds under 2x replication") {
+    def index(d: DataFrame) = queries.Retrieval.postingsOver(d).collect()
+      .map(r => r.getAs[String]("tok") ->
+        ((r.getAs[Long]("df"), r.getAs[String]("postings").split("\\|").length)))
+      .toMap
+    val base = index(corpus)
+    val big = index(doubled)
+    assert(base.nonEmpty)
+    // df < 5 is pruned, so replication may add tokens: the law is per
+    // token visible at 1x
+    base.foreach { case (tok, (df, _)) =>
+      assert(big.get(tok).map(_._1).contains(2 * df), s"$tok: df $df at 1x")
+    }
+    assert(big.values.exists(_._1 > 20), "no token reaches the cap")
+    big.foreach { case (tok, (df, n)) =>
+      assert(n == math.min(df, 20L), s"$tok: $n postings at df $df")
+    }
+  }
+
+  test("bm25: per-doc scores are unchanged under identical 2x replication") {
+    // tf and dl are per doc; df, N and the summed length all double, so
+    // every term's micro-score ratio is exactly invariant
+    def scores(d: DataFrame) = queries.Retrieval.bm25ScoresOver(d)
+      .select(col("doc_id"), col("bm25_micro")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val base = scores(corpus)
+    assert(base.nonEmpty)
+    assert(scores(doubled) == base ++ base.map { case (id, s) => (id + step) -> s })
   }
 
   test("bm25: every hit matches >=1 of 5 query terms, scores ranked desc") {
