@@ -236,6 +236,27 @@ object Bench {
     line
   }
 
+  /** The per-query telemetry line: gc, heap and group-membw maps, then
+    * the walls map LAST among the maps (only two short scalars follow
+    * it), so a capture that keeps only the tail of the line still holds
+    * the walls. `results` rows are (query, median wall s, gc ms, heap MB,
+    * group membw GB/s); a group reads clean at `bwCleanGbps` or above.
+    */
+  def telemetryLine(results: Seq[(String, Double, Long, Long, Double)],
+      bwCleanGbps: Double, calRecheck: (Double, Double)): String = {
+    def map[V](f: ((String, Double, Long, Long, Double)) => V): String =
+      results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
+    val walls = map(r => f"${r._2}%.3f")
+    val gcs = map(_._3)
+    val heaps = map(_._4)
+    // per-group membw and its mechanical clean flag
+    val bws = map(r => f"${r._5}%.1f")
+    val bwClean = map(_._5 >= bwCleanGbps)
+    f"""{"telemetry":"per_query","gc_ms":$gcs,"heap_mb":$heaps,""" +
+      f""""membw_group_gbps":$bws,"membw_group_clean":$bwClean,"walls":$walls,""" +
+      f""""cal_recheck_single_s":${calRecheck._1}%.3f,"cal_recheck_allcores_s":${calRecheck._2}%.3f}"""
+  }
+
   /** Byte budget of the final line's `failed` names. */
   private val failedBudget = 240
 
@@ -511,40 +532,14 @@ object Bench {
         .map(run).filter(_ >= 0).sum
       System.err.println(f"[bench] shared-set settle retry total=$retryTotal%.3fs")
     }
-    val qs = results
-      .map { case (k, v, _, _, _) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val gcs = results
-      .map { case (k, _, g, _, _) => "\"" + k + "\":" + g }
-      .mkString("{", ",", "}")
-    val heaps = results
-      .map { case (k, _, _, h, _) => "\"" + k + "\":" + h }
-      .mkString("{", ",", "}")
-    // r22 (verdict task 2): per-group membw + a mechanical clean flag on
-    // the sacrificial telemetry line (additions-only; the byte-bounded
-    // final line is unchanged).
-    val bws = results
-      .map { case (k, _, _, _, b) => "\"" + k + "\":" + f"$b%.1f" }
-      .mkString("{", ",", "}")
-    val bwClean = results
-      .map { case (k, _, _, _, b) =>
-        "\"" + k + "\":" + (b >= groupBwCleanGbps) }
-      .mkString("{", ",", "}")
-    // Emission (r20, verdict task 1 — supersedes the r18 two-line
-    // split, which still let the final line GROW with the headline and
-    // regrew the parsed:null failure at 81 queries): the full per-query
-    // walls + gc/heap telemetry go FIRST on their own line (greppable,
-    // sacrificial under the driver's 2,000-byte tail capture), and the
-    // FINAL line is the fixed-field record rendered by `finalLine` —
-    // its size is independent of headline growth and byte-asserted
-    // <1,900 B. cal_single_s/cal_allcores_s keep their r15 meaning
-    // (pre-sweep) so the round-over-round tax comparison stays one
-    // column; cal_recheck_* (post-settle, only taken when contended)
-    // rides the telemetry line.
-    println(
-      f"""{"telemetry":"per_query","walls":$qs,"gc_ms":$gcs,"heap_mb":$heaps,""" +
-        f""""membw_group_gbps":$bws,"membw_group_clean":$bwClean,""" +
-        f""""cal_recheck_single_s":${calRe._1}%.3f,"cal_recheck_allcores_s":${calRe._2}%.3f}""")
+    // Emission: the per-query telemetry rides its own line
+    // (`telemetryLine`, sacrificial under the driver's 2,000-byte tail
+    // capture), and the FINAL line is the fixed-field record rendered by
+    // `finalLine` — its size is independent of headline growth and
+    // byte-asserted <1,900 B. cal_single_s/cal_allcores_s keep their
+    // pre-sweep meaning; cal_recheck_* (post-settle, only taken when
+    // contended) rides the telemetry line.
+    println(telemetryLine(results, groupBwCleanGbps, calRe))
     println(finalLine(total, results.map(r => r._1 -> r._2).toMap,
       (calSingle, calAll), (calSingle2, calAll2),
       (bwSingle, bwAll), (bwSingle2, bwAll2), contended, sharedTotal,

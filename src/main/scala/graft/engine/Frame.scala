@@ -20,7 +20,6 @@ import org.apache.spark.sql.types._
   * `core/reshape.py:547,721,1061`, `core/cut.py:16`.
   */
 final case class Frame(df: DataFrame) {
-  import Frame._
 
   // --- projection / filter -------------------------------------------
   def select(cols: String*): Frame = Frame(df.select(cols.map(col): _*))

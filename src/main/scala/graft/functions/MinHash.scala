@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** minhash64 (reference `cpp/include/nvtext/minhash.hpp:119`,
   * `minhash_ngrams` :166): k-permutation MinHash signature of a string

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Wordpiece / BPE-style subword tokenization (reference
@@ -97,7 +97,7 @@ object Wordpiece {
     * invocations (benchmark reps, verify runs) don't re-run the corpus
     * aggregation.
     */
-  def vocabFor(s: SparkSession, dir: String, docs: => DataFrame, minFreq: Long): Set[String] =
+  def vocabFor(dir: String, docs: => DataFrame, minFreq: Long): Set[String] =
     graft.DimCache.cached(s"wordpiece-vocab:$dir:$minFreq")(buildVocab(docs, minFreq))
 
   /** documents → (doc_id, pieces array) using a broadcast vocab. */

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -57,7 +57,7 @@ object Multimodal extends Serializable {
   /** Feature extraction over media records — one pass per partition,
     * constant memory, no driver involvement.
     */
-  def extractFeatures(spark: SparkSession, media: DataFrame): DataFrame = {
+  def extractFeatures(media: DataFrame): DataFrame = {
     val outSchema = StructType(Seq(
       StructField("media_id", LongType, nullable = false),
       StructField("height", IntegerType),

@@ -1,12 +1,23 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Similarity-search library surface: brute-force cosine (correctness
-  * baseline), and an IVF (inverted-file) index as the 100 TB scale path —
-  * complementing the hyperplane-LSH bucketing in LlmOps.
+/** Similarity search, written once: every ANN tier (IVF, SQ8, IVF,SQ8,
+  * PQ/ADC, binary, matryoshka prefix, and the SRP-LSH buckets in
+  * LlmOps) supplies only its own encoder and approximate score, and
+  * shares one core for the rest:
+  *   - [[cosine]], the one cosine expression (DotF64 folds);
+  *   - [[bruteForceTopK]], the exact single-query baseline;
+  *   - [[refineTopK]], the retrieve-and-refine stage 2 (candidates ⋈
+  *     raw vectors → exact cosine → top-k);
+  *   - [[exactScores]], [[topKPerQuery]], [[refineScores]] and
+  *     [[recallAt]], the per-query recall@k certifier over a query
+  *     sample, under a cosine or squared-L2 [[Metric]];
+  *   - [[literal]] and [[unitLiterals]], the query-side and
+  *     centroid-side literal arrays.
   *
   * IVF: k centroids are chosen deterministically from the data (strided
   * sample), broadcast, and every vector is assigned to its nearest
@@ -25,7 +36,24 @@ object Similarity {
 
   private def norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** dot(a, b) / (‖a‖·‖b‖). Symmetric bit for bit: DotF64 sums in
+    * ascending index order and IEEE multiplication commutes, so
+    * `cosine(a, b) == cosine(b, a)`, and a norm computed once per row
+    * gives the same double as the per-pair form.
+    */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+
+  /** A vector as a literal array column (a query shipped to the scan). */
+  def literal(v: Seq[Double]): Column = array(v.map(lit): _*)
+
+  /** Rows unit-normalized driver-side as a literal array of arrays (a
+    * zero row stays zero): the centroid and query-set literals whose
+    * per-row dot products are cosines up to the row's own norm.
+    */
+  def unitLiterals(rows: Seq[Seq[Double]]): Column = array(rows.map { v =>
+    val n = math.sqrt(v.map(x => x * x).sum)
+    array(v.map(x => lit(if (n == 0d) 0d else x / n)): _*)
+  }: _*)
 
   /** Brute-force top-k against one query vector (map-side score +
     * TakeOrdered; zero shuffle of the corpus).
@@ -38,6 +66,76 @@ object Similarity {
       .select(col("vec_id"), cosine(col("e"), col("qe")).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)
+  }
+
+  /** Retrieve-and-refine stage 2: the candidate set `cand` (vec_id plus
+    * the tier's stage-1 columns, carried through) joins the raw vectors
+    * `emb` (vec_id, e) and is re-scored by exact cosine to `query` →
+    * top-k by (cosine desc, vec_id). The broadcast side is the bounded
+    * candidate set, so the corpus never shuffles.
+    */
+  def refineTopK(cand: DataFrame, emb: DataFrame, query: IndexedSeq[Double],
+      k: Int): DataFrame = {
+    val carried = cand.columns.filter(_ != "vec_id").map(col).toSeq
+    emb.join(broadcast(cand), "vec_id")
+      .select((col("vec_id") +: carried) :+
+        cosine(literal(query), col("e")).as("cosine"): _*)
+      .orderBy(col("cosine").desc, col("vec_id"))
+      .limit(k)
+  }
+
+  // ------------------------------------------------- recall certification
+
+  /** A pair score over (query, vector) arrays and the direction it
+    * ranks in.
+    */
+  final case class Metric(score: (Column, Column) => Column, ascending: Boolean) {
+    def order: Column = if (ascending) col("score").asc else col("score").desc
+  }
+  val CosineMetric: Metric = Metric(cosine, ascending = false)
+  val L2Metric: Metric = Metric(graft.functions.L2SqF64.l2sqf64, ascending = true)
+
+  /** The exact arm: every corpus vector (vec_id, e) scored against every
+    * query (qid, qe) of a broadcast sample → (qid, vec_id, score).
+    */
+  def exactScores(corpus: DataFrame, queries: DataFrame, metric: Metric): DataFrame =
+    corpus.crossJoin(broadcast(queries))
+      .select(col("qid"), col("vec_id"), metric.score(col("qe"), col("e")).as("score"))
+
+  /** Per-query top-k window: the k best (qid, vec_id) rows of `scored`
+    * under `by`, ties to the lower vec_id.
+    */
+  def topKPerQuery(scored: DataFrame, k: Int, by: Column): DataFrame =
+    scored
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(by, col("vec_id"))))
+      .filter(col("rn") <= k)
+      .select(col("qid"), col("vec_id"))
+
+  /** Multi-query refine: per-query candidates (qid, vec_id) ⋈ raw
+    * vectors ⋈ their query → (qid, vec_id, score) at full precision.
+    */
+  def refineScores(cand: DataFrame, emb: DataFrame, queries: DataFrame,
+      metric: Metric): DataFrame =
+    emb.join(broadcast(cand), "vec_id")
+      .join(broadcast(queries), "qid")
+      .select(col("qid"), col("vec_id"), metric.score(col("qe"), col("e")).as("score"))
+
+  /** Recall@k certification: per query, the overlap of the exact and the
+    * approximate top-k (each a (qid, vec_id, score) frame ranked by
+    * (score, vec_id) in the metric's direction). Every qid of `queries`
+    * reports, 0 hits when its approximate arm is empty. Output
+    * (qid, n_hits, recall_ppm) with recall_ppm = n_hits·10⁶ div k.
+    */
+  def recallAt(queries: DataFrame, exact: DataFrame, approx: DataFrame, k: Int,
+      metric: Metric): DataFrame = {
+    val hits = topKPerQuery(exact, k, metric.order)
+      .join(topKPerQuery(approx, k, metric.order), Seq("qid", "vec_id"))
+      .groupBy(col("qid")).agg(count(lit(1)).as("nh"))
+    queries.select(col("qid"))
+      .join(hits, Seq("qid"), "left")
+      .select(col("qid"), coalesce(col("nh"), lit(0L)).as("n_hits"))
+      .withColumn("recall_ppm", expr(s"(n_hits * 1000000) div $k"))
   }
 
   /** Deterministic IVF centroids: a pseudo-random (hash-ordered, so
@@ -54,7 +152,6 @@ object Similarity {
     * BIGINT overflow for vec_id up to ~1.9e14.
     */
   def centroids(emb: DataFrame, nCells: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     emb
       .orderBy(pmod(col("vec_id") * lit(48271L), lit(2147483647L)), col("vec_id"))
       .limit(nCells)
@@ -116,11 +213,7 @@ object Similarity {
       emb: DataFrame, cRows: IndexedSeq[(Int, Seq[Double])]): DataFrame = {
     require(cRows.nonEmpty, "assignCells: empty centroid set")
     val cellIds = array(cRows.map(r => lit(r._1)): _*)
-    val unitCents = array(cRows.map { r =>
-      val v = r._2
-      val n = math.sqrt(v.map(x => x * x).sum)
-      array(v.map(x => lit(if (n == 0d) 0d else x / n)): _*)
-    }: _*)
+    val unitCents = unitLiterals(cRows.map(_._2))
     emb
       .select(col("vec_id"), toDouble(col("embedding")).as("e"))
       // sims materialized in its own projection: referencing it twice
@@ -397,15 +490,10 @@ object Similarity {
   def ivfSq8TopK(index: DataFrame, query: IndexedSeq[Double],
       mn: IndexedSeq[Double], mx: IndexedSeq[Double],
       probed: Seq[Int], queryVecId: Long, k: Int): DataFrame = {
-    val qArr = array(query.map(lit): _*)
     index.filter(col("cell_id").isin(probed: _*))
       .filter(col("vec_id") =!= queryVecId)
       .withColumn("xhat", sq8Dequantize(mn, mx))
-      .select(col("vec_id"),
-        (graft.functions.DotF64.dotf64(qArr, col("xhat")) /
-          (sqrt(graft.functions.DotF64.dotf64(qArr, qArr)) *
-            sqrt(graft.functions.DotF64.dotf64(col("xhat"), col("xhat")))))
-          .as("cosine"))
+      .select(col("vec_id"), cosine(literal(query), col("xhat")).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)
   }
@@ -436,15 +524,9 @@ object Similarity {
   def sq8TopK(encoded: DataFrame, query: IndexedSeq[Double],
       mn: IndexedSeq[Double], mx: IndexedSeq[Double],
       queryVecId: Long, k: Int): DataFrame = {
-    val qArr = array(query.map(lit): _*)
-    val xhat = sq8Dequantize(mn, mx)
     encoded.filter(col("vec_id") =!= queryVecId)
-      .withColumn("xhat", xhat)
-      .select(col("vec_id"),
-        (graft.functions.DotF64.dotf64(qArr, col("xhat")) /
-          (sqrt(graft.functions.DotF64.dotf64(qArr, qArr)) *
-            sqrt(graft.functions.DotF64.dotf64(col("xhat"), col("xhat")))))
-          .as("cosine"))
+      .withColumn("xhat", sq8Dequantize(mn, mx))
+      .select(col("vec_id"), cosine(literal(query), col("xhat")).as("cosine"))
       .orderBy(col("cosine").desc, col("vec_id"))
       .limit(k)
       .select(col("vec_id"), round(col("cosine"), 6).as("sq8_cosine_6dp"))
@@ -543,13 +625,7 @@ object Similarity {
           bit_count(col("hi").bitwiseXOR(lit(qhi)))).cast(LongType).as("hamming"))
       .orderBy(col("hamming").asc, col("vec_id"))
       .limit(nCand)
-    val qArr = array(query.map(lit): _*)
-    emb.join(broadcast(cand), "vec_id")
-      .select(col("vec_id"), col("hamming"),
-        (dot(qArr, col("e")) / (sqrt(dot(qArr, qArr)) * norm(col("e"))))
-          .as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(k)
+    refineTopK(cand, emb, query, k)
       .select(col("vec_id"), col("hamming"),
         round(col("cosine"), 6).as("bq_cosine_6dp"))
   }
@@ -591,20 +667,12 @@ object Similarity {
   def matryoshkaTopK(prefixIdx: DataFrame, emb: DataFrame,
       query: IndexedSeq[Double], dPrefix: Int, queryVecId: Long,
       nCand: Int, k: Int): DataFrame = {
-    val qp = array(query.take(dPrefix).map(lit): _*)
     val cand = prefixIdx.filter(col("vec_id") =!= queryVecId)
       .select(col("vec_id"),
-        (dot(qp, col("ep")) / (sqrt(dot(qp, qp)) * norm(col("ep"))))
-          .as("pcos"))
+        cosine(literal(query.take(dPrefix)), col("ep")).as("pcos"))
       .orderBy(col("pcos").desc, col("vec_id"))
       .limit(nCand)
-    val qArr = array(query.map(lit): _*)
-    emb.join(broadcast(cand), "vec_id")
-      .select(col("vec_id"), col("pcos"),
-        (dot(qArr, col("e")) / (sqrt(dot(qArr, qArr)) * norm(col("e"))))
-          .as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(k)
+    refineTopK(cand, emb, query, k)
       .select(col("vec_id"),
         round(col("pcos"), 6).as("prefix_cosine_6dp"),
         round(col("cosine"), 6).as("mrl_cosine_6dp"))
@@ -614,7 +682,6 @@ object Similarity {
     * rank candidates only within them.
     */
   def ivfTopK(
-      spark: SparkSession,
       assigned: DataFrame,
       cents: DataFrame,
       queryVecId: Long,
@@ -871,10 +938,7 @@ object Similarity {
     */
   def kmeansObjective(emb: DataFrame,
       cRows: IndexedSeq[(Int, Seq[Double])]): Double = {
-    val unitCents = array(cRows.map { r =>
-      val n = math.sqrt(r._2.map(x => x * x).sum)
-      array(r._2.map(x => lit(if (n == 0d) 0d else x / n)): _*)
-    }: _*)
+    val unitCents = unitLiterals(cRows.map(_._2))
     emb
       .select(col("vec_id"), toDouble(col("embedding")).as("e"))
       .select(array_max(transform(unitCents, cu => dot(col("e"), cu))).as("m"))

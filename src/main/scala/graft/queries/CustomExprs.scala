@@ -161,7 +161,7 @@ object CustomExprs {
     val docs = Tables.documents(s, dir)
     // Vocab = a per-dataset dimension, built once per JVM (DimCache):
     // repeated builder invocations (bench reps) pay only the tokenize.
-    val vocab = graft.functions.Wordpiece.vocabFor(s, dir, docs, minFreq = 50)
+    val vocab = graft.functions.Wordpiece.vocabFor(dir, docs, minFreq = 50)
     graft.functions.Wordpiece
       .tokenize(s, docs, vocab)
       .select(col("doc_id"),
@@ -240,7 +240,7 @@ object CustomExprs {
     */
   private def textFertility(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val vocab = graft.functions.Wordpiece.vocabFor(s, dir, docs, minFreq = 50)
+    val vocab = graft.functions.Wordpiece.vocabFor(dir, docs, minFreq = 50)
     graft.functions.Wordpiece
       .tokenize(s, docs, vocab)
       .select(col("doc_id"), size(col("pieces")).cast("long").as("np"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Agg, Q, Tables}
+import graft.{Q, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -196,8 +196,6 @@ object Extras {
     * the batch twin of streaming session windows (session_window).
     */
   private def sessionize(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val wCum = w.rowsBetween(Window.unboundedPreceding, 0)
     Tables
       .events(s, dir)
       .select(col("user_id"), col("event_id"), expr("unix_micros(ts)").as("us"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.operators.Similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -809,7 +810,6 @@ object LlmOps {
     mixTokenBudgetOf(Tables.documents(s, dir), budget = 1200L)
 
   private[graft] def mixTokenBudgetOf(docs: DataFrame, budget: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = docs
       .select(
         col("doc_id"),
@@ -1051,6 +1051,21 @@ object LlmOps {
       (r.getInt(0), r.getInt(1))
     }
 
+  /** The one embedding width of the dataset, for a tier that assumes a
+    * single dimensionality (a table mixing widths is a data bug a
+    * silent min(len) fold would hide), divisible by `multipleOf`. The
+    * error names the tier and the widths it saw.
+    */
+  private def uniformDims(s: SparkSession, dir: String, tier: String,
+      multipleOf: Int = 1): Int = {
+    val (dmin, dmax) = embDims(s, dir)
+    require(dmin == dmax && dmin % multipleOf == 0,
+      s"$tier needs uniform dims" +
+        (if (multipleOf > 1) s" divisible by $multipleOf" else "") +
+        s", got [$dmin,$dmax]")
+    dmin
+  }
+
   // The ANN dimensions of a dataset's embeddings table. Each is the ONE
   // definition of its DimCache key: the batch builders here, the
   // streaming twins in StreamingGate and Explain's streaming audit all
@@ -1067,8 +1082,8 @@ object LlmOps {
   private[graft] def ivfCentroids(s: SparkSession,
       dir: String): IndexedSeq[(Int, Seq[Double])] =
     graft.DimCache.cached(s"ivf-centroids:$dir:8") {
-      graft.operators.Similarity.centroidArrays(
-        graft.operators.Similarity.centroids(
+      Similarity.centroidArrays(
+        Similarity.centroids(
           embVectors(s, dir).select(col("vec_id"), col("e").as("embedding")),
           nCells = 8))
     }
@@ -1079,15 +1094,65 @@ object LlmOps {
   private[graft] def sq8Bounds(s: SparkSession,
       dir: String): (IndexedSeq[Double], IndexedSeq[Double]) =
     graft.DimCache.cached(s"sq8-bounds:$dir") {
-      graft.operators.Similarity.sq8Bounds(embVectors(s, dir))
+      Similarity.sq8Bounds(embVectors(s, dir))
+    }
+
+  /** The query sample: vec_id < 8 as (vec_id, e, label), sorted by
+    * vec_id and collected once per (JVM, dataset) — a bounded 8×d
+    * dimension. The recall rows, the k-NN join and hard-negative
+    * mining query with all 8; the single-query rows use vec_id 0.
+    */
+  private def querySample(s: SparkSession,
+      dir: String): IndexedSeq[(Long, IndexedSeq[Double], Int)] =
+    graft.DimCache.cached(s"query-sample:$dir:8") {
+      Tables.embeddings(s, dir).filter(col("vec_id") < 8)
+        .select(col("vec_id"), embDouble.as("e"), col("label")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq, r.getInt(2)))
+        .sortBy(_._1).toIndexedSeq
     }
 
   /** The single-query top-k rows' query vector (vec_id = 0). */
-  private[graft] def queryVector(s: SparkSession, dir: String): IndexedSeq[Double] =
-    graft.DimCache.cached(s"sq8-query:$dir:0") {
-      embVectors(s, dir).filter(col("vec_id") === 0)
-        .select(col("e")).head().getSeq[Double](0).toIndexedSeq
+  private def queryVector(s: SparkSession, dir: String): IndexedSeq[Double] =
+    querySample(s, dir).collectFirst { case (0L, e, _) => e }
+      .getOrElse(throw new NoSuchElementException(s"no vec_id 0 in $dir"))
+
+  /** The recall rows' queries as a broadcastable (qid, qe) frame: the
+    * sample's rows, read from the scan so qid keeps its nullable type.
+    */
+  private def recallQueries(s: SparkSession, dir: String): DataFrame =
+    embVectors(s, dir).filter(col("vec_id") < 8)
+      .select(col("vec_id").as("qid"), col("e").as("qe"))
+
+  /** Recall@10 of a tier's approximate arm (qid, vec_id, score) against
+    * the exact arm over the corpus (vec_id ≥ 8) for the 8 sample
+    * queries.
+    */
+  private def recallAt10(s: SparkSession, dir: String, approx: DataFrame,
+      metric: Similarity.Metric): DataFrame = {
+    val q = recallQueries(s, dir)
+    val corpus = embVectors(s, dir).filter(col("vec_id") >= 8)
+    Similarity.recallAt(q, Similarity.exactScores(corpus, q, metric), approx, 10, metric)
+  }
+
+  /** The persisted ANN indexes: a tier's codes, encoded once per (JVM,
+    * dataset) and written as parquet at `DimCache.artifactPath(kind,
+    * dir)`, are read back by its top-k and recall rows (FAISS persists
+    * its codes for the same reason). `partitionBy` lays the files out
+    * by a column, so a filter on it skips whole files. Keyed on the
+    * dataset dir alone: concurrent JVMs on the SAME dataset are not a
+    * supported mode (one could overwrite the dir mid-read); if that
+    * ever becomes one, add a JVM pid or session nonce to the path.
+    */
+  private def annIndex(s: SparkSession, kind: String, dir: String,
+      partitionBy: Option[String] = None)(encode: => DataFrame): DataFrame = {
+    val path = graft.DimCache.cached(s"ann-index:$kind:$dir") {
+      val p = graft.DimCache.artifactPath(kind, dir)
+      val w = encode.write.mode("overwrite")
+      partitionBy.fold(w)(c => w.partitionBy(c)).parquet(p)
+      p
     }
+    s.read.parquet(path)
+  }
 
   /** Product quantization shape: M subspaces of K codewords, each
     * subspace `pqDsub` = d / M wide.
@@ -1101,44 +1166,23 @@ object LlmOps {
   private[graft] def pqCodebooks(s: SparkSession,
       dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
     graft.DimCache.cached(s"pq-codebooks:$dir:$PqM:$PqK") {
-      graft.operators.Similarity.pqCodebooks(
+      Similarity.pqCodebooks(
         embVectors(s, dir), PqM, PqK, pqDsub(s, dir))
     }
 
-  /** The persisted PQ code index: the codes ARE the index structure, so
-    * encode once, persist, query many (FAISS persists its PQ codes for
-    * the same reason).
-    */
-  private def pqCodesPath(s: SparkSession, dir: String): String =
-    graft.DimCache.cached(s"pq-codes:$dir:$PqM:$PqK") {
-      val p = graft.DimCache.artifactPath("pqcodes", dir)
-      graft.operators.Similarity
-        .encodePq(embVectors(s, dir), pqCodebooks(s, dir), pqDsub(s, dir))
-        .drop("e") // codes only: the 8-bytes-per-vector contract
-        .write.mode("overwrite").parquet(p)
-      p
+  /** The PQ index: codes only, the 8-bytes-per-vector contract. */
+  private def pqIndex(s: SparkSession, dir: String): DataFrame =
+    annIndex(s, "pqcodes", dir) {
+      Similarity.encodePq(embVectors(s, dir), pqCodebooks(s, dir), pqDsub(s, dir)).drop("e")
     }
 
   /** Brute-force cosine top-k against a query vector (vec_id = 0) —
     * the correctness baseline for ANN. The query side is a 1-row
     * broadcast; scoring is a single map-side pass + TakeOrdered(k).
     */
-  private def simCosineTopk(s: SparkSession, dir: String): DataFrame = {
-    val emb = embVectors(s, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("e").as("qe"))
-    import graft.functions.DotF64.dotf64
-    emb
-      .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(
-        col("vec_id"),
-        (dotf64(col("e"), col("qe")) /
-          (sqrt(dotf64(col("e"), col("e"))) * sqrt(dotf64(col("qe"), col("qe")))))
-          .as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(10)
+  private def simCosineTopk(s: SparkSession, dir: String): DataFrame =
+    Similarity.bruteForceTopK(Tables.embeddings(s, dir), queryVecId = 0L, k = 10)
       .select(col("vec_id"), round(col("cosine"), 6).as("cosine_6dp"))
-  }
 
   private val simCosineTopkSql =
     """WITH e AS (SELECT vec_id,
@@ -1168,41 +1212,54 @@ object LlmOps {
     * the whole bucketing is replicated in DuckDB and the query is fully
     * oracle-checked — candidate statistics, not just row counts.
     */
-  private def simAnnLshBuckets(s: SparkSession, dir: String): DataFrame = {
-    // Weights depend only on (p, j): computed HERE with the exact
-    // integer formula the oracle evaluates inline, and shipped as
-    // literal arrays — each plane projection is one native DotF64 pass
-    // instead of a `dims`-term interpreted fold (the literal-planes
-    // shape of dedup_emb_cosine). The index assumes ONE fixed
-    // dimensionality (an embedding table mixing widths is a data bug a
-    // silent min(len) fold would hide), so the width comes from a
-    // min/max aggregate that fails on ragged input.
-    import graft.functions.DotF64.dotf64
-    val (dims, dimsMax) = embDims(s, dir)
-    require(dims == dimsMax,
-      s"ragged embedding dimensionality: min=$dims max=$dimsMax")
-    // The LCG seed stride (p * 1024 + j) keeps per-plane seed ranges
-    // disjoint only while dims <= 1024; wider embeddings would silently
-    // correlate the hyperplanes (both engines agree, so the oracle would
-    // stay green while bucket quality degrades). dims >= 1 also keeps the
-    // per-row index folds off the sequence(0, -1) ANSI trap.
-    require(dims >= 1 && dims <= 1024,
-      s"plane seed stride supports 1 <= dims <= 1024, got $dims")
-    def weight(p: Int, j: Int): Double =
-      if ((((1103515245L * (p * 1024 + j) + 12345L) % 2147483648L >> 16) & 1L) == 1L)
-        1.0 else -1.0
-    val bucket = (0 until 8)
-      .map { p =>
-        val plane = array((0 until dims).map(j => lit(weight(p, j))): _*)
-        (dotf64(col("e"), plane) > lit(0.0)).cast(IntegerType) * lit(1 << p)
-      }
-      .reduce(_ + _)
+  private def simAnnLshBuckets(s: SparkSession, dir: String): DataFrame =
     Tables
       .embeddings(s, dir)
       .select(col("vec_id"), embDouble.as("e"))
-      .select(col("vec_id"), bucket.as("bucket"))
+      .select(col("vec_id"), planeBucket8(s, dir).as("bucket"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_vectors"), min(col("vec_id")).as("min_vec_id"))
+
+  /** The ±1 weight of dimension j in random hyperplane p: bit 16 of the
+    * portable LCG value at `p * stride + j` (the stride keeps per-plane
+    * seed ranges disjoint while dims <= stride). The same integer
+    * expression the DuckDB twins evaluate inline.
+    */
+  private def hyperplaneSign(p: Int, j: Int, stride: Int): Double =
+    if ((((1103515245L * (p * stride + j) + 12345L) % 2147483648L >> 16) & 1L) == 1L)
+      1.0 else -1.0
+
+  /** Planes 0 until n as literal arrays of their `dims` signs: each
+    * projection is then one native DotF64 pass instead of a `dims`-term
+    * interpreted fold; e[j]*(±1.0) multiplies exactly like the oracle's
+    * term and DotF64 folds ascending, so the buckets are bit-identical.
+    */
+  private def hyperplanes(n: Int, dims: Int, stride: Int): IndexedSeq[Column] =
+    (0 until n).map(p => array((0 until dims).map(j => lit(hyperplaneSign(p, j, stride))): _*))
+
+  /** The sign bits of vector `v` against `planes`, plane i at bit
+    * weight `bit(i)`.
+    */
+  private def signBits(v: Column, planes: Seq[Column], bit: Int => Int): Column =
+    planes.zipWithIndex
+      .map { case (plane, i) =>
+        (graft.functions.DotF64.dotf64(v, plane) > lit(0.0))
+          .cast(IntegerType) * lit(bit(i))
+      }
+      .reduce(_ + _)
+
+  /** The 8-plane bucket of `sim_ann_lsh_buckets` and `dedup_semantic`:
+    * plane p at bit weight 2^p, seed stride 1024.
+    */
+  private def planeBucket8(s: SparkSession, dir: String): Column = {
+    val dims = uniformDims(s, dir, "hyperplane bucketing")
+    // Wider embeddings would silently correlate the hyperplanes (both
+    // engines agree, so the oracle would stay green while bucket
+    // quality degrades). dims >= 1 also keeps the per-row index folds
+    // off the sequence(0, -1) ANSI trap.
+    require(dims >= 1 && dims <= 1024,
+      s"plane seed stride supports 1 <= dims <= 1024, got $dims")
+    signBits(col("e"), hyperplanes(8, dims, 1024), p => 1 << p)
   }
 
   /** DuckDB twin of the hyperplane bucketing: the per-plane dot product
@@ -1248,36 +1305,18 @@ object LlmOps {
   private def dedupEmbCosine(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.DotF64.dotf64
     import org.apache.spark.sql.expressions.Window
-    // ±1 weight for (plane, dim j): bit 16 of the LCG value at plane*64+j.
-    // The weights are a deterministic function of (plane, dim) alone, so
-    // they are computed HERE (same integer formula the DuckDB oracle
-    // evaluates inline) and shipped as literal arrays — each plane's
-    // projection is then one native DotF64 pass instead of a 64-term
-    // interpreted lambda fold. e[j]*(±1.0) multiplies exactly like the
-    // oracle's term, and DotF64 folds ascending — bit-identical buckets.
-    def weight(plane: Int, j: Int): Double =
-      if ((((1103515245L * (plane * 64 + j) + 12345L) % 2147483648L >> 16) & 1L) == 1L)
-        1.0 else -1.0
-    val planes: Seq[Column] = (0 until 8).map { p =>
-      array((0 until 64).map(j => lit(weight(p, j))): _*)
-    }
+    // 2 bands × 4 planes of stride 64, the first plane of a band at the
+    // highest bit (the oracle's acc*2+bit fold)
+    val planes = hyperplanes(8, 64, 64)
     def bandBucket(band: Int): Column =
-      (0 until 4)
-        .map { i =>
-          (dotf64(col("e"), planes(band * 4 + i)) > lit(0.0))
-            .cast(IntegerType) * lit(1 << (3 - i))
-        }
-        .reduce(_ + _)
+      signBits(col("e"), planes.slice(band * 4, band * 4 + 4), i => 1 << (3 - i))
     val bucketArr = array(bandBucket(0), bandBucket(1))
     // The plane arrays are exactly 64-wide: DotF64 folds min(len) terms,
     // so a wider embedding table would SILENTLY project onto the first
     // 64 dims (both engines agree — the oracle stays green while bucket
-    // quality quietly degrades). Fail loudly instead, like the
-    // ragged-dims guards in the sim_ann/semantic paths.
-    val (dimsMin, dimsMax) = embDims(s, dir)
-    require(dimsMin == 64 && dimsMax == 64,
-      s"dedupEmbCosine planes are built for 64-dim embeddings, got " +
-        s"min=$dimsMin max=$dimsMax")
+    // quality quietly degrades). Fail loudly instead.
+    val dims = uniformDims(s, dir, "dedupEmbCosine planes")
+    require(dims == 64, s"dedupEmbCosine planes are built for 64-dim embeddings, got $dims")
     val banded0 = Tables
       .embeddings(s, dir)
       .select(col("vec_id"), embDouble.as("e"))
@@ -1370,43 +1409,12 @@ object LlmOps {
     val cents = cRows.toDF("cell_id", "centroid")
     // assignCells already carries each row's embedding as `e` — no
     // re-join against the scan needed
-    val assigned = graft.operators.Similarity.assignCells(emb, cRows)
-    graft.operators.Similarity
-      .ivfTopK(s, assigned, cents, queryVecId = 0L, k = 10, nProbe = 2)
+    val assigned = Similarity.assignCells(emb, cRows)
+    Similarity
+      .ivfTopK(assigned, cents, queryVecId = 0L, k = 10, nProbe = 2)
       .select(col("vec_id"), round(col("cosine"), 6).as("cosine_6dp"))
   }
 
-  /** IVF-PQ-style product quantization (FAISS practice, public
-    * algorithm): 8 subspaces × 16 codewords from the deterministic
-    * Lehmer exemplar pick, map-side encode (8 small ints replace the
-    * 64-float vector — the 32× memory lever that keeps ANN candidate
-    * state in executor memory at 100 TB), then ADC top-k: the query at
-    * full precision, every corpus row scored from codes alone. Fully
-    * oracled — every fold, argmin tie, and subspace-sum order is
-    * mirrored bit-exact in the DuckDB twin (see pqTopK scaladoc).
-    */
-  /** ANN recall audit: recall@10 of single-probe SRP-LSH retrieval vs
-    * the exact brute-force top-10, per query vector (vec_id < 8 are the
-    * queries, the rest the corpus) — the self-certification number every
-    * ANN deployment reports. Buckets are 4 signed-hyperplane bits (16
-    * buckets — sized so the synthetic near-orthogonal corpus still puts
-    * tens of candidates per bucket; production uses 16-24 bits + multi-
-    * probe, same shape). The ±1 plane weights are the portable LCG
-    * parity of [[dedupEmbCosine]] (plane index p·64+j), so candidate
-    * generation, scoring, ranking, and the recall arithmetic are ALL
-    * replicated by the DuckDB twin — the audit itself is oracle-checked.
-    *
-    * Exactness: both engines fold dots ascending (DotF64 = list_reduce),
-    * so scores are bit-identical IEEE doubles and the (cos desc, vec_id)
-    * ranking matches; recall counts are integers.
-    *
-    * Scale shape: bucket assignment is map-side (literal planes); the 8
-    * queries broadcast; the exact side is one corpus scan × |Q| with a
-    * qid-partitioned top-k window (bounded by the AUDIT's query-sample
-    * size by design — auditing recall on a sample, not the full query
-    * log, is the production pattern); the LSH side only scores the
-    * bucket-matched slice. No corpus×corpus joins anywhere.
-    */
   /** MMR (maximal-marginal-relevance) diversity rerank — Carbonell &
     * Goldstein 1998, the standard redundancy-vs-relevance rerank a RAG
     * retrieval stack runs between candidate generation and the context
@@ -1430,16 +1438,13 @@ object LlmOps {
     * the retrieved page, never corpus-side).
     */
   private def simMmrRerank(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.DotF64.dotf64
     val emb = embVectors(s, dir)
     val qv = emb.filter(col("vec_id") === 0).select(col("e").as("qe"))
     val cand = emb
       .filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(qv))
       .select(col("vec_id"), col("e"),
-        floor((dotf64(col("e"), col("qe")) /
-            (sqrt(dotf64(col("e"), col("e"))) *
-              sqrt(dotf64(col("qe"), col("qe"))))) * lit(1e6))
+        floor(Similarity.cosine(col("e"), col("qe")) * lit(1e6))
           .cast(LongType).as("rel"))
       .orderBy(col("rel").desc, col("vec_id"))
       .limit(50)
@@ -1537,65 +1542,46 @@ object LlmOps {
     s"$candPrefix,\n$steps\n$sel"
   }
 
+  /** ANN recall audit: recall@10 of single-probe SRP-LSH retrieval vs
+    * the exact brute-force top-10, per query vector (vec_id < 8 are the
+    * queries, the rest the corpus) — the self-certification number every
+    * ANN deployment reports. Buckets are 4 signed-hyperplane bits (16
+    * buckets — sized so the synthetic near-orthogonal corpus still puts
+    * tens of candidates per bucket; production uses 16-24 bits + multi-
+    * probe, same shape). The ±1 plane weights are the portable LCG
+    * parity of [[dedupEmbCosine]] (plane index p·64+j), so candidate
+    * generation, scoring, ranking, and the recall arithmetic are ALL
+    * replicated by the DuckDB twin — the audit itself is oracle-checked.
+    *
+    * Exactness: both engines fold dots ascending (DotF64 = list_reduce),
+    * so scores are bit-identical IEEE doubles and the (cos desc, vec_id)
+    * ranking matches; recall counts are integers.
+    *
+    * Scale shape: bucket assignment is map-side (literal planes); the 8
+    * queries broadcast; the exact side is one corpus scan × |Q| with a
+    * qid-partitioned top-k window (bounded by the AUDIT's query-sample
+    * size by design — auditing recall on a sample, not the full query
+    * log, is the production pattern); the LSH side only scores the
+    * bucket-matched slice. No corpus×corpus joins anywhere.
+    */
   private def simLshRecall(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.DotF64.dotf64
-    import org.apache.spark.sql.expressions.Window
-    val (dimsMin, dimsMax) = embDims(s, dir)
-    require(dimsMin == 64 && dimsMax == 64,
-      s"simLshRecall planes are built for 64-dim embeddings, got " +
-        s"min=$dimsMin max=$dimsMax")
-    def weight(p: Int, j: Int): Double =
-      if ((((1103515245L * (p * 64 + j) + 12345L) % 2147483648L >> 16) & 1L) == 1L)
-        1.0 else -1.0
-    val planes: Seq[Column] = (0 until 4).map { p =>
-      array((0 until 64).map(j => lit(weight(p, j))): _*)
-    }
-    val bucket = (0 until 4)
-      .map { i =>
-        (dotf64(col("e"), planes(i)) > lit(0.0))
-          .cast(IntegerType) * lit(1 << (3 - i))
-      }
-      .reduce(_ + _)
-    val e = Tables
-      .embeddings(s, dir)
-      .select(col("vec_id"), embDouble.as("e"))
-      .withColumn("bucket", bucket)
-      .withColumn("n2", dotf64(col("e"), col("e")))
-    val q = e
-      .filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("e").as("qe"),
-        col("bucket").as("qbucket"), col("n2").as("qn2"))
-    val scored = e
+    val dims = uniformDims(s, dir, "simLshRecall planes")
+    require(dims == 64, s"simLshRecall planes are built for 64-dim embeddings, got $dims")
+    val planes = hyperplanes(4, 64, 64)
+    def bucketOf(v: Column): Column = signBits(v, planes, i => 1 << (3 - i))
+    val q = recallQueries(s, dir).withColumn("qbucket", bucketOf(col("qe")))
+    val approx = embVectors(s, dir)
       .filter(col("vec_id") >= 8)
+      .withColumn("bucket", bucketOf(col("e")))
       .crossJoin(broadcast(q))
-      .select(
-        col("qid"), col("vec_id"),
-        (dotf64(col("e"), col("qe")) / (sqrt(col("n2")) * sqrt(col("qn2"))))
-          .as("cos"),
-        (col("bucket") === col("qbucket")).as("in_bucket"))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    val exact = scored
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 10)
-      .select(col("qid"), col("vec_id"))
-    val cand = scored.filter(col("in_bucket"))
-    val approx = cand
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 10)
-      .select(col("qid"), col("vec_id"))
-    val nCand = cand.groupBy(col("qid")).agg(count(lit(1)).as("nc"))
-    val hits = exact
-      .join(approx, Seq("qid", "vec_id"))
-      .groupBy(col("qid"))
-      .agg(count(lit(1)).as("nh"))
-    q.select(col("qid"))
+      .filter(col("bucket") === col("qbucket"))
+      .select(col("qid"), col("vec_id"),
+        Similarity.cosine(col("qe"), col("e")).as("score"))
+    val nCand = approx.groupBy(col("qid")).agg(count(lit(1)).as("nc"))
+    recallAt10(s, dir, approx, Similarity.CosineMetric)
       .join(nCand, Seq("qid"), "left")
-      .join(hits, Seq("qid"), "left")
-      .select(col("qid"),
-        coalesce(col("nc"), lit(0L)).as("n_candidates"),
-        coalesce(col("nh"), lit(0L)).as("n_hits"))
-      .withColumn("recall_ppm", expr("(n_hits * 1000000) div 10"))
+      .select(col("qid"), coalesce(col("nc"), lit(0L)).as("n_candidates"),
+        col("n_hits"), col("recall_ppm"))
   }
 
   private val simLshRecallSql =
@@ -1738,29 +1724,19 @@ object LlmOps {
     * faithful end to end.
     */
   private def simSq8Topk(s: SparkSession, dir: String): DataFrame = {
-    val emb = embVectors(s, dir)
-    val (dmin, dmax) = embDims(s, dir)
-    require(dmin == dmax, s"SQ8 needs uniform dims, got [$dmin,$dmax]")
+    uniformDims(s, dir, "SQ8")
     val (mn, mx) = sq8Bounds(s, dir)
-    val q0 = queryVector(s, dir)
-    graft.operators.Similarity.sq8TopK(
-      s.read.parquet(sq8CodesPath(s, dir, emb, mn, mx)),
-      q0, mn, mx, queryVecId = 0L, k = 10)
+    Similarity.sq8TopK(sq8Index(s, dir), queryVector(s, dir), mn, mx,
+      queryVecId = 0L, k = 10)
   }
 
-  /** The persisted SQ8 byte-code index: encode once per (JVM, dataset),
-    * write codes-only parquet, query many (shared by `sim_sq8_topk` and
-    * the recall certification below — both read the SAME stored index).
+  /** The SQ8 index: codes only, the byte-per-dimension contract (shared
+    * by `sim_sq8_topk` and its recall row).
     */
-  private def sq8CodesPath(s: SparkSession, dir: String,
-      emb: DataFrame, mn: IndexedSeq[Double],
-      mx: IndexedSeq[Double]): String =
-    graft.DimCache.cached(s"sq8-codes:$dir") {
-      val p = graft.DimCache.artifactPath("sq8codes", dir)
-      graft.operators.Similarity.encodeSq8(emb, mn, mx)
-        .drop("e") // codes only: the byte-per-dimension contract
-        .write.mode("overwrite").parquet(p)
-      p
+  private def sq8Index(s: SparkSession, dir: String): DataFrame =
+    annIndex(s, "sq8codes", dir) {
+      val (mn, mx) = sq8Bounds(s, dir)
+      Similarity.encodeSq8(embVectors(s, dir), mn, mx).drop("e")
     }
 
   /** SQ8 recall self-certification (`sim_lsh_recall` precedent, r18
@@ -1780,40 +1756,15 @@ object LlmOps {
     * than the 8-query fanout.
     */
   private def simSq8Recall(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.DotF64.dotf64
-    import org.apache.spark.sql.expressions.Window
-    val emb = embVectors(s, dir)
-    val (dmin, dmax) = embDims(s, dir)
-    require(dmin == dmax, s"SQ8 needs uniform dims, got [$dmin,$dmax]")
+    uniformDims(s, dir, "SQ8")
     val (mn, mx) = sq8Bounds(s, dir)
-    val q = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("e").as("qe"))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    def top10(scored: DataFrame): DataFrame = scored
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 10)
-      .select(col("qid"), col("vec_id"))
-    val exact = top10(emb.filter(col("vec_id") >= 8)
-      .crossJoin(broadcast(q))
-      .select(col("qid"), col("vec_id"),
-        (dotf64(col("qe"), col("e")) /
-          (sqrt(dotf64(col("qe"), col("qe"))) *
-            sqrt(dotf64(col("e"), col("e"))))).as("cos")))
-    val approx = top10(s.read.parquet(sq8CodesPath(s, dir, emb, mn, mx))
+    val approx = sq8Index(s, dir)
       .filter(col("vec_id") >= 8)
-      .withColumn("xhat", graft.operators.Similarity.sq8Dequantize(mn, mx))
-      .crossJoin(broadcast(q))
+      .withColumn("xhat", Similarity.sq8Dequantize(mn, mx))
+      .crossJoin(broadcast(recallQueries(s, dir)))
       .select(col("qid"), col("vec_id"),
-        (dotf64(col("qe"), col("xhat")) /
-          (sqrt(dotf64(col("qe"), col("qe"))) *
-            sqrt(dotf64(col("xhat"), col("xhat"))))).as("cos")))
-    val hits = exact.join(approx, Seq("qid", "vec_id"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("nh"))
-    q.select(col("qid"))
-      .join(hits, Seq("qid"), "left")
-      .select(col("qid"), coalesce(col("nh"), lit(0L)).as("n_hits"))
-      .withColumn("recall_ppm", expr("(n_hits * 1000000) div 10"))
+        Similarity.cosine(col("qe"), col("xhat")).as("score"))
+    recallAt10(s, dir, approx, Similarity.CosineMetric)
   }
 
   /** DuckDB twin: the `sim_sq8_topk` bounds/quantize/dequantize CTEs
@@ -1917,25 +1868,22 @@ object LlmOps {
 
   // ----------------------------------------------- binary quantization
 
-  /** The persisted binary (1-bit/dim) index: two packed BIGINT halves
-    * per vector, written once per (JVM, dataset) — 16 bytes/row where
-    * the raw table stores 64 floats (16×), queried by pure integer
-    * XOR+popcount. Shared by `sim_binary_topk` and its recall row.
-    *
-    * Like every persisted-index path here (pqcodes, ivfsq8, prefix),
-    * the tmpdir location is keyed on the dataset dir alone — the
-    * write-once-per-(JVM, dataset) convention. Concurrent JVMs against
-    * the SAME dataset are not a supported mode (one could overwrite
-    * the dir mid-read, r19 ADVICE); if that ever becomes one, add a
-    * JVM pid / session nonce to the path.
+  /** The binary quantization thresholds: the midpoints of the SQ8
+    * bounds, so the binary index shares SQ8's train pass.
     */
-  private def binaryCodesPath(s: SparkSession, dir: String,
-      emb: DataFrame, thr: IndexedSeq[Double]): String =
-    graft.DimCache.cached(s"bq-codes:$dir") {
-      val p = graft.DimCache.artifactPath("bqcodes", dir)
-      graft.operators.Similarity.encodeBinary(emb, thr)
-        .write.mode("overwrite").parquet(p)
-      p
+  private def binaryThresholds(s: SparkSession, dir: String): IndexedSeq[Double] = {
+    val (mn, mx) = sq8Bounds(s, dir)
+    Similarity.binaryThresholds(mn, mx)
+  }
+
+  /** The binary (1-bit/dim) index: two packed BIGINT halves per vector —
+    * 16 bytes/row where the raw table stores 64 floats (16×), queried
+    * by pure integer XOR+popcount. Shared by `sim_binary_topk` and its
+    * recall row.
+    */
+  private def binaryIndex(s: SparkSession, dir: String): DataFrame =
+    annIndex(s, "bqcodes", dir) {
+      Similarity.encodeBinary(embVectors(s, dir), binaryThresholds(s, dir))
     }
 
   /** Binary-quantization retrieve-and-refine (the vector-DB "BQ +
@@ -1950,15 +1898,9 @@ object LlmOps {
     * proving the stored bit index end to end.
     */
   private def simBinaryTopk(s: SparkSession, dir: String): DataFrame = {
-    val emb = embVectors(s, dir)
-    val (dmin, dmax) = embDims(s, dir)
-    require(dmin == dmax && dmax % 2 == 0,
-      s"binary quantization needs uniform even dims, got [$dmin,$dmax]")
-    val (mn, mx) = sq8Bounds(s, dir)
-    val thr = graft.operators.Similarity.binaryThresholds(mn, mx)
-    val q0 = queryVector(s, dir)
-    graft.operators.Similarity.binaryTopK(
-      s.read.parquet(binaryCodesPath(s, dir, emb, thr)), emb, q0, thr,
+    uniformDims(s, dir, "binary quantization", 2)
+    Similarity.binaryTopK(binaryIndex(s, dir), embVectors(s, dir),
+      queryVector(s, dir), binaryThresholds(s, dir),
       queryVecId = 0L, nCand = 64, k = 10)
   }
 
@@ -2028,54 +1970,24 @@ object LlmOps {
     * family's recall row.
     */
   private def simBinaryRecall(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.DotF64.dotf64
-    import org.apache.spark.sql.expressions.Window
     import s.implicits._
-    val emb = embVectors(s, dir)
-    val (dmin, dmax) = embDims(s, dir)
-    require(dmin == dmax && dmax % 2 == 0,
-      s"binary quantization needs uniform even dims, got [$dmin,$dmax]")
-    val (mn, mx) = sq8Bounds(s, dir)
-    val thr = graft.operators.Similarity.binaryThresholds(mn, mx)
-    val qcodes = recallQueryVectors(dir, emb).map { case (qid, qv) =>
-      val (lo, hi) = graft.operators.Similarity.binaryCode(qv, thr)
+    uniformDims(s, dir, "binary quantization", 2)
+    val thr = binaryThresholds(s, dir)
+    val qcodes = querySample(s, dir).map { case (qid, qv, _) =>
+      val (lo, hi) = Similarity.binaryCode(qv, thr)
       (qid, lo, hi)
     }.toDF("qid", "qlo", "qhi")
-    val wham = Window.partitionBy(col("qid"))
-      .orderBy(col("hamming").asc, col("vec_id"))
-    val cand = s.read.parquet(binaryCodesPath(s, dir, emb, thr))
+    val cand = Similarity.topKPerQuery(binaryIndex(s, dir)
       .filter(col("vec_id") >= 8)
       .crossJoin(broadcast(qcodes))
       .select(col("qid"), col("vec_id"),
         (bit_count(col("lo").bitwiseXOR(col("qlo"))) +
           bit_count(col("hi").bitwiseXOR(col("qhi"))))
-          .cast(LongType).as("hamming"))
-      .withColumn("rn", row_number().over(wham))
-      .filter(col("rn") <= 64)
-      .select(col("qid"), col("vec_id"))
-    val q = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("e").as("qe"))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    def top10(scored: DataFrame): DataFrame = scored
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 10)
-      .select(col("qid"), col("vec_id"))
-    def cosQ(e: Column): Column =
-      dotf64(col("qe"), e) /
-        (sqrt(dotf64(col("qe"), col("qe"))) * sqrt(dotf64(e, e)))
-    val exact = top10(emb.filter(col("vec_id") >= 8)
-      .crossJoin(broadcast(q))
-      .select(col("qid"), col("vec_id"), cosQ(col("e")).as("cos")))
-    val approx = top10(emb.join(broadcast(cand), "vec_id")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("vec_id"), cosQ(col("e")).as("cos")))
-    val hits = exact.join(approx, Seq("qid", "vec_id"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("nh"))
-    q.select(col("qid"))
-      .join(hits, Seq("qid"), "left")
-      .select(col("qid"), coalesce(col("nh"), lit(0L)).as("n_hits"))
-      .withColumn("recall_ppm", expr("(n_hits * 1000000) div 10"))
+          .cast(LongType).as("hamming")),
+      64, col("hamming").asc)
+    val approx = Similarity.refineScores(cand, embVectors(s, dir),
+      recallQueries(s, dir), Similarity.CosineMetric)
+    recallAt10(s, dir, approx, Similarity.CosineMetric)
   }
 
   /** DuckDB twin: the binary pack CTEs, per-qid Hamming-64 windows,
@@ -2131,17 +2043,13 @@ object LlmOps {
 
   // ------------------------------------------------ matryoshka prefix ANN
 
-  /** The persisted matryoshka prefix index: the first d/4 dimensions
-    * as their own stored column — stage-1 scans read a quarter of the
-    * float bytes (shared by `sim_matryoshka_topk` and its recall row).
+  /** The matryoshka prefix index: the first d/4 dimensions as their
+    * own stored column — stage-1 scans read a quarter of the float
+    * bytes (shared by `sim_matryoshka_topk` and its recall row).
     */
-  private def prefixIdxPath(s: SparkSession, dir: String,
-      emb: DataFrame, dPrefix: Int): String =
-    graft.DimCache.cached(s"mrl-prefix:$dir") {
-      val p = graft.DimCache.artifactPath("mrlprefix", dir)
-      graft.operators.Similarity.encodePrefix(emb, dPrefix)
-        .write.mode("overwrite").parquet(p)
-      p
+  private def prefixIndex(s: SparkSession, dir: String, dPrefix: Int): DataFrame =
+    annIndex(s, "mrlprefix", dir) {
+      Similarity.encodePrefix(embVectors(s, dir), dPrefix)
     }
 
   /** Matryoshka retrieve-and-refine (Kusupati et al. 2022 MRL;
@@ -2154,15 +2062,9 @@ object LlmOps {
     * raw table with identical ascending IEEE folds.
     */
   private def simMatryoshkaTopk(s: SparkSession, dir: String): DataFrame = {
-    val emb = embVectors(s, dir)
-    val (dmin, dmax) = embDims(s, dir)
-    require(dmin == dmax && dmax % 4 == 0,
-      s"matryoshka prefix needs uniform dims divisible by 4, got [$dmin,$dmax]")
-    val dPrefix = dmax / 4
-    val q0 = queryVector(s, dir)
-    graft.operators.Similarity.matryoshkaTopK(
-      s.read.parquet(prefixIdxPath(s, dir, emb, dPrefix)), emb, q0, dPrefix,
-      queryVecId = 0L, nCand = 64, k = 10)
+    val dPrefix = uniformDims(s, dir, "matryoshka prefix", 4) / 4
+    Similarity.matryoshkaTopK(prefixIndex(s, dir, dPrefix), embVectors(s, dir),
+      queryVector(s, dir), dPrefix, queryVecId = 0L, nCand = 64, k = 10)
   }
 
   /** DuckDB twin: prefix truncation in SQL, the prefix-cosine
@@ -2210,49 +2112,18 @@ object LlmOps {
     * truncation loses at the candidate cut.
     */
   private def simMatryoshkaRecall(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.DotF64.dotf64
-    import org.apache.spark.sql.expressions.Window
-    val emb = embVectors(s, dir)
-    val (dmin, dmax) = embDims(s, dir)
-    require(dmin == dmax && dmax % 4 == 0,
-      s"matryoshka prefix needs uniform dims divisible by 4, got [$dmin,$dmax]")
-    val dPrefix = dmax / 4
-    val q = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("e").as("qe"))
+    val dPrefix = uniformDims(s, dir, "matryoshka prefix", 4) / 4
+    val q = recallQueries(s, dir)
     val qp = q.select(col("qid"), slice(col("qe"), 1, dPrefix).as("qp"))
-    val wp = Window.partitionBy(col("qid"))
-      .orderBy(col("pcos").desc, col("vec_id"))
-    val cand = s.read.parquet(prefixIdxPath(s, dir, emb, dPrefix))
+    val cand = Similarity.topKPerQuery(prefixIndex(s, dir, dPrefix)
       .filter(col("vec_id") >= 8)
       .crossJoin(broadcast(qp))
       .select(col("qid"), col("vec_id"),
-        (dotf64(col("qp"), col("ep")) /
-          (sqrt(dotf64(col("qp"), col("qp"))) *
-            sqrt(dotf64(col("ep"), col("ep"))))).as("pcos"))
-      .withColumn("rn", row_number().over(wp))
-      .filter(col("rn") <= 64)
-      .select(col("qid"), col("vec_id"))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    def top10(scored: DataFrame): DataFrame = scored
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 10)
-      .select(col("qid"), col("vec_id"))
-    def cosQ(e: Column): Column =
-      dotf64(col("qe"), e) /
-        (sqrt(dotf64(col("qe"), col("qe"))) * sqrt(dotf64(e, e)))
-    val exact = top10(emb.filter(col("vec_id") >= 8)
-      .crossJoin(broadcast(q))
-      .select(col("qid"), col("vec_id"), cosQ(col("e")).as("cos")))
-    val approx = top10(emb.join(broadcast(cand), "vec_id")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("vec_id"), cosQ(col("e")).as("cos")))
-    val hits = exact.join(approx, Seq("qid", "vec_id"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("nh"))
-    q.select(col("qid"))
-      .join(hits, Seq("qid"), "left")
-      .select(col("qid"), coalesce(col("nh"), lit(0L)).as("n_hits"))
-      .withColumn("recall_ppm", expr("(n_hits * 1000000) div 10"))
+        Similarity.cosine(col("qp"), col("ep")).as("pcos")),
+      64, col("pcos").desc)
+    val approx = Similarity.refineScores(cand, embVectors(s, dir), q,
+      Similarity.CosineMetric)
+    recallAt10(s, dir, approx, Similarity.CosineMetric)
   }
 
   /** DuckDB twin: per-qid prefix-cosine-64 windows over the truncated
@@ -2323,16 +2194,12 @@ object LlmOps {
     * PartitionFilter that skips index FILES, not rows (shared by
     * `sim_ivfsq8_topk` and its recall certification).
     */
-  private def ivfSq8CodesPath(s: SparkSession, dir: String,
-      embE: DataFrame, cRows: IndexedSeq[(Int, Seq[Double])],
-      mn: IndexedSeq[Double], mx: IndexedSeq[Double]): String =
-    graft.DimCache.cached(s"ivfsq8-codes:$dir") {
-      val p = graft.DimCache.artifactPath("ivfsq8", dir)
-      graft.operators.Similarity
-        .encodeIvfSq8(embE.select(col("vec_id"), col("e").as("embedding")),
-          cRows, mn, mx)
-        .write.mode("overwrite").partitionBy("cell_id").parquet(p)
-      p
+  private def ivfSq8Index(s: SparkSession, dir: String): DataFrame =
+    annIndex(s, "ivfsq8", dir, partitionBy = Some("cell_id")) {
+      val (mn, mx) = sq8Bounds(s, dir)
+      Similarity.encodeIvfSq8(
+        embVectors(s, dir).select(col("vec_id"), col("e").as("embedding")),
+        ivfCentroids(s, dir), mn, mx)
     }
 
   /** IVF,SQ8 composed ANN (FAISS `IVF8,SQ8` practice): the coarse
@@ -2348,32 +2215,30 @@ object LlmOps {
     * identical IEEE arithmetic, so the green row proves the PERSISTED
     * partitioned index end-to-end.
     */
-  private def simIvfSq8Topk(s: SparkSession, dir: String): DataFrame = {
-    val embE = embVectors(s, dir)
-    val (dmin, dmax) = embDims(s, dir)
-    require(dmin == dmax, s"SQ8 needs uniform dims, got [$dmin,$dmax]")
-    val (mn, mx) = sq8Bounds(s, dir)
-    val cRows = ivfCentroids(s, dir)
-    val q0 = queryVector(s, dir)
-    val probed = graft.operators.Similarity.probeCellIds(q0, cRows, nProbe = 2)
-    graft.operators.Similarity.ivfSq8TopK(
-      s.read.parquet(ivfSq8CodesPath(s, dir, embE, cRows, mn, mx)),
-      q0, mn, mx, probed, queryVecId = 0L, k = 10)
+  private def simIvfSq8Topk(s: SparkSession, dir: String): DataFrame =
+    ivfSq8Probe(s, dir, k = 10)
       .select(col("vec_id"), round(col("cosine"), 6).as("ivfsq8_cosine_6dp"))
+
+  /** The single-query IVF,SQ8 top-k (vec_id 0, nProbe = 2 of 8). */
+  private def ivfSq8Probe(s: SparkSession, dir: String, k: Int): DataFrame = {
+    uniformDims(s, dir, "SQ8")
+    val (mn, mx) = sq8Bounds(s, dir)
+    val q0 = queryVector(s, dir)
+    val probed = Similarity.probeCellIds(q0, ivfCentroids(s, dir), nProbe = 2)
+    Similarity.ivfSq8TopK(ivfSq8Index(s, dir), q0, mn, mx, probed,
+      queryVecId = 0L, k = k)
   }
 
-  /** The recall-audit query sample (vec_id < 8), collected once per
-    * (JVM, dataset) — the bounded 8×d dimension every per-query
-    * driver-side probe shares (`sim_ivf_recall`, `sim_ivfsq8_recall`).
+  /** The recall rows' per-query probes: (qid, cell_id, qe) for the
+    * nProbe = 2 nearest cells of each sample query.
     */
-  private def recallQueryVectors(dir: String,
-      embE: DataFrame): IndexedSeq[(Long, IndexedSeq[Double])] =
-    graft.DimCache.cached(s"ivfsq8-queries:$dir") {
-      embE.filter(col("vec_id") < 8)
-        .select(col("vec_id"), col("e")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq))
-        .sortBy(_._1).toIndexedSeq
-    }
+  private def recallProbes(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val cRows = ivfCentroids(s, dir)
+    querySample(s, dir).flatMap { case (qid, qv, _) =>
+      Similarity.probeCellIds(qv, cRows, nProbe = 2).map(c => (qid, c, qv))
+    }.toDF("qid", "cell_id", "qe")
+  }
 
   /** Recall certification for the plain IVF index (completing the ANN
     * self-certification matrix: SRP-LSH r10, SQ8 r18, IVF,SQ8 r19 —
@@ -2387,40 +2252,14 @@ object LlmOps {
     * literal, no corpus self-join.
     */
   private def simIvfRecall(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.DotF64.dotf64
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    val embE = embVectors(s, dir)
-    val cRows = ivfCentroids(s, dir)
-    val qprobe = recallQueryVectors(dir, embE).flatMap { case (qid, qv) =>
-      graft.operators.Similarity.probeCellIds(qv, cRows, nProbe = 2)
-        .map(c => (qid, c, qv))
-    }.toDF("qid", "cell_id", "qe")
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    def top10(scored: DataFrame): DataFrame = scored
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 10)
-      .select(col("qid"), col("vec_id"))
-    val q = embE.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("e").as("qe"))
-    def cos(qe: Column, e: Column): Column =
-      dotf64(qe, e) / (sqrt(dotf64(qe, qe)) * sqrt(dotf64(e, e)))
-    val exact = top10(embE.filter(col("vec_id") >= 8)
-      .crossJoin(broadcast(q))
-      .select(col("qid"), col("vec_id"), cos(col("qe"), col("e")).as("cos")))
-    val assigned = graft.operators.Similarity
-      .assignCells(embE.select(col("vec_id"), col("e").as("embedding")), cRows)
+    val approx = Similarity
+      .assignCells(embVectors(s, dir).select(col("vec_id"), col("e").as("embedding")),
+        ivfCentroids(s, dir))
       .filter(col("vec_id") >= 8)
-    val approx = top10(assigned
-      .join(broadcast(qprobe), Seq("cell_id"))
-      .select(col("qid"), col("vec_id"), cos(col("qe"), col("e")).as("cos")))
-    val hits = exact.join(approx, Seq("qid", "vec_id"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("nh"))
-    q.select(col("qid"))
-      .join(hits, Seq("qid"), "left")
-      .select(col("qid"), coalesce(col("nh"), lit(0L)).as("n_hits"))
-      .withColumn("recall_ppm", expr("(n_hits * 1000000) div 10"))
+      .join(broadcast(recallProbes(s, dir)), Seq("cell_id"))
+      .select(col("qid"), col("vec_id"),
+        Similarity.cosine(col("qe"), col("e")).as("score"))
+    recallAt10(s, dir, approx, Similarity.CosineMetric)
   }
 
   /** DuckDB twin: the `sim_ivfsq8_recall` CTEs with the quantize /
@@ -2520,48 +2359,15 @@ object LlmOps {
     * the 8-query window.
     */
   private def simIvfSq8Recall(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.DotF64.dotf64
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    val embE = embVectors(s, dir)
-    val (dmin, dmax) = embDims(s, dir)
-    require(dmin == dmax, s"SQ8 needs uniform dims, got [$dmin,$dmax]")
+    uniformDims(s, dir, "SQ8")
     val (mn, mx) = sq8Bounds(s, dir)
-    val cRows = ivfCentroids(s, dir)
-    val qrows = recallQueryVectors(dir, embE)
-    val qprobe = qrows.flatMap { case (qid, qv) =>
-      graft.operators.Similarity.probeCellIds(qv, cRows, nProbe = 2)
-        .map(c => (qid, c, qv))
-    }.toDF("qid", "cell_id", "qe")
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    def top10(scored: DataFrame): DataFrame = scored
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 10)
-      .select(col("qid"), col("vec_id"))
-    val q = embE.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("e").as("qe"))
-    val exact = top10(embE.filter(col("vec_id") >= 8)
-      .crossJoin(broadcast(q))
+    val approx = ivfSq8Index(s, dir)
+      .filter(col("vec_id") >= 8)
+      .join(broadcast(recallProbes(s, dir)), Seq("cell_id"))
+      .withColumn("xhat", Similarity.sq8Dequantize(mn, mx))
       .select(col("qid"), col("vec_id"),
-        (dotf64(col("qe"), col("e")) /
-          (sqrt(dotf64(col("qe"), col("qe"))) *
-            sqrt(dotf64(col("e"), col("e"))))).as("cos")))
-    val approx = top10(
-      s.read.parquet(ivfSq8CodesPath(s, dir, embE, cRows, mn, mx))
-        .filter(col("vec_id") >= 8)
-        .join(broadcast(qprobe), Seq("cell_id"))
-        .withColumn("xhat", graft.operators.Similarity.sq8Dequantize(mn, mx))
-        .select(col("qid"), col("vec_id"),
-          (dotf64(col("qe"), col("xhat")) /
-            (sqrt(dotf64(col("qe"), col("qe"))) *
-              sqrt(dotf64(col("xhat"), col("xhat"))))).as("cos")))
-    val hits = exact.join(approx, Seq("qid", "vec_id"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("nh"))
-    q.select(col("qid"))
-      .join(hits, Seq("qid"), "left")
-      .select(col("qid"), coalesce(col("nh"), lit(0L)).as("n_hits"))
-      .withColumn("recall_ppm", expr("(n_hits * 1000000) div 10"))
+        Similarity.cosine(col("qe"), col("xhat")).as("score"))
+    recallAt10(s, dir, approx, Similarity.CosineMetric)
   }
 
   /** DuckDB twin of the composed pipeline: the `sim_ivf_topk` centroid
@@ -2679,33 +2485,14 @@ object LlmOps {
     * quantization error from the final ranking — recall limited only
     * by stage-1 candidate recall, while raw-vector IO drops from
     * |corpus| to k'. Plan: pruned byte scan → TakeOrdered(50) →
-    * broadcast-semi join against the raw scan (the id-keyed refine
-    * read) → exact cosine → TakeOrdered(10); the only join is against
-    * a 50-row broadcast.
+    * broadcast join against the raw scan (the id-keyed refine read,
+    * [[Similarity.refineTopK]]) → exact cosine → TakeOrdered(10); the
+    * only join is against a 50-row broadcast.
     */
-  private def simIvfSq8Rerank(s: SparkSession, dir: String): DataFrame = {
-    val embE = embVectors(s, dir)
-    val (dmin, dmax) = embDims(s, dir)
-    require(dmin == dmax, s"SQ8 needs uniform dims, got [$dmin,$dmax]")
-    val (mn, mx) = sq8Bounds(s, dir)
-    val cRows = ivfCentroids(s, dir)
-    val q0 = queryVector(s, dir)
-    val probed = graft.operators.Similarity.probeCellIds(q0, cRows, nProbe = 2)
-    val cand = graft.operators.Similarity.ivfSq8TopK(
-      s.read.parquet(ivfSq8CodesPath(s, dir, embE, cRows, mn, mx)),
-      q0, mn, mx, probed, queryVecId = 0L, k = 50)
-      .select(col("vec_id"))
-    import graft.functions.DotF64.dotf64
-    val qArr = array(q0.map(lit): _*)
-    embE.join(broadcast(cand), Seq("vec_id"), "left_semi")
-      .select(col("vec_id"),
-        (dotf64(qArr, col("e")) /
-          (sqrt(dotf64(qArr, qArr)) * sqrt(dotf64(col("e"), col("e")))))
-          .as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-      .limit(10)
+  private def simIvfSq8Rerank(s: SparkSession, dir: String): DataFrame =
+    Similarity.refineTopK(ivfSq8Probe(s, dir, k = 50).select(col("vec_id")),
+      embVectors(s, dir), queryVector(s, dir), k = 10)
       .select(col("vec_id"), round(col("cosine"), 6).as("rerank_cosine_6dp"))
-  }
 
   /** DuckDB twin: the `sim_ivfsq8_topk` CTEs with the scored stage
     * LIMIT 50 (identical quantized ordering, so the candidate SET
@@ -2879,24 +2666,52 @@ object LlmOps {
       |SELECT vec_id, round(cosine, 6) AS ivfsq8_cosine_6dp
       |FROM scored ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
 
+  /** IVF-PQ-style product quantization (FAISS practice, public
+    * algorithm): 8 subspaces × 16 codewords from the deterministic
+    * Lehmer exemplar pick, map-side encode (8 small ints replace the
+    * 64-float vector — the 32× memory lever that keeps ANN candidate
+    * state in executor memory at 100 TB), then ADC top-k: the query at
+    * full precision, every corpus row scored from codes alone. Fully
+    * oracled — every fold, argmin tie, and subspace-sum order is
+    * mirrored bit-exact in the DuckDB twin (see pqTopK scaladoc).
+    */
   private def simIvfpqTopk(s: SparkSession, dir: String): DataFrame = {
-    val M = PqM
-    val K = PqK
-    val (dmin, dmax) = embDims(s, dir)
-    require(dmin == dmax && dmin % M == 0,
-      s"PQ needs uniform dims divisible by $M, got [$dmin,$dmax]")
-    val dsub = dmin / M
-    val cb = pqCodebooks(s, dir)
-    // query vector + ADC table are bounded query-side dimensions (one
-    // 1-row job + M×K Scala folds), cached like the codebooks
-    val table = graft.DimCache.cached(s"pq-adc:$dir:$M:$K:0") {
-      graft.operators.Similarity.adcTable(queryVector(s, dir), cb, dsub)
+    val dsub = uniformDims(s, dir, "PQ", PqM) / PqM
+    // the ADC table is a bounded query-side dimension (M×K Scala
+    // folds), cached like the codebooks
+    val table = graft.DimCache.cached(s"pq-adc:$dir:$PqM:$PqK:0") {
+      Similarity.adcTable(queryVector(s, dir), pqCodebooks(s, dir), dsub)
     }
     // the oracle recomputes codes from the RAW embeddings, so the green
     // row also proves the stored index faithful
-    val codesPath = pqCodesPath(s, dir)
-    graft.operators.Similarity.pqTopK(
-      s.read.parquet(codesPath), table, queryVecId = 0L, k = 10)
+    Similarity.pqTopK(pqIndex(s, dir), table, queryVecId = 0L, k = 10)
+  }
+
+  /** ADC distances of every corpus vector (vec_id ≥ 8) to each sample
+    * query from the PQ index alone → (qid, vec_id, score): per-qid ADC
+    * tables flattened m-major (index m·K + c), the same driver-side
+    * IEEE folds adcTable always runs, shipped as one broadcast 8-row
+    * frame.
+    */
+  private def pqRecallAdc(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    // d = 64 exactly (not just divisible by M): the DuckDB twins
+    // hardcode dsub = 8 (range(1, 9), e[m*8+j]), so any other
+    // M-divisible dim would pass a looser guard yet silently diverge
+    // from the oracle
+    val dims = uniformDims(s, dir, "PQ recall", PqM)
+    require(dims == 64, s"PQ recall twins assume d = 64 (dsub = 8 literal in SQL), got $dims")
+    val cb = pqCodebooks(s, dir)
+    val qtbl = querySample(s, dir).map { case (qid, qv, _) =>
+      (qid, Similarity.adcTable(qv, cb, dims / PqM).flatten)
+    }.toDF("qid", "tbl")
+    val adc = (0 until PqM)
+      .map(m => element_at(col("tbl"), col(s"c$m") + lit(m * PqK) + 1))
+      .reduce(_ + _)
+    pqIndex(s, dir)
+      .filter(col("vec_id") >= 8)
+      .crossJoin(broadcast(qtbl))
+      .select(col("qid"), col("vec_id"), adc.as("score"))
   }
 
   /** PQ/ADC recall certification — the LAST un-certified tier of the
@@ -2911,56 +2726,8 @@ object LlmOps {
     * broadcast 8-row frame; no corpus self-join, the usual 8-query
     * window fanout.
     */
-  private def simPqRecall(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    val M = PqM
-    val K = PqK
-    val emb = embVectors(s, dir)
-    val (dmin, dmax) = embDims(s, dir)
-    // dmin == 64 exactly (not just divisible by M): the DuckDB twin
-    // hardcodes dsub = 8 (range(1, 9), e[m*8+j]), so any other
-    // M-divisible dim would pass a looser guard yet silently diverge
-    // from the oracle (r19 ADVICE)
-    require(dmin == dmax && dmin == 64,
-      s"PQ recall twins assume d = 64 (dsub = 8 literal in SQL), got [$dmin,$dmax]")
-    val dsub = dmin / M
-    val cb = pqCodebooks(s, dir)
-    val codesPath = pqCodesPath(s, dir)
-    // per-qid ADC tables flattened m-major (index m·K + c) — the same
-    // driver-side IEEE folds adcTable always runs
-    val qtbl = recallQueryVectors(dir, emb).map { case (qid, qv) =>
-      (qid, graft.operators.Similarity.adcTable(qv, cb, dsub).flatten)
-    }.toDF("qid", "tbl")
-    val adcCol = (0 until M)
-      .map(m => element_at(col("tbl"), col(s"c$m") + lit(m * K) + 1))
-      .reduce(_ + _)
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("a").asc, col("vec_id"))
-    def top10(scored: DataFrame): DataFrame = scored
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= 10)
-      .select(col("qid"), col("vec_id"))
-    val approx = top10(s.read.parquet(codesPath)
-      .filter(col("vec_id") >= 8)
-      .crossJoin(broadcast(qtbl))
-      .select(col("qid"), col("vec_id"), adcCol.as("a")))
-    val q = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("e").as("qe"))
-    // fused codegen L2 (r22): bit-identical fold to the composed
-    // aggregate(zip_with) chain it replaces (ExpressionsSpec) — the
-    // exact arm scores every (query, vector) pair per rep
-    val exact = top10(emb.filter(col("vec_id") >= 8)
-      .crossJoin(broadcast(q))
-      .select(col("qid"), col("vec_id"),
-        graft.functions.L2SqF64.l2sqf64(col("qe"), col("e")).as("a")))
-    val hits = exact.join(approx, Seq("qid", "vec_id"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("nh"))
-    q.select(col("qid"))
-      .join(hits, Seq("qid"), "left")
-      .select(col("qid"), coalesce(col("nh"), lit(0L)).as("n_hits"))
-      .withColumn("recall_ppm", expr("(n_hits * 1000000) div 10"))
-  }
+  private def simPqRecall(s: SparkSession, dir: String): DataFrame =
+    recallAt10(s, dir, pqRecallAdc(s, dir), Similarity.L2Metric)
 
   /** PQ retrieve-and-refine recall — the quantitative answer to
     * `sim_pq_recall`'s 0.30: the SAME persisted 8-byte codes retrieve
@@ -2972,54 +2739,10 @@ object LlmOps {
     * and refined recall at 32× + 50 raw-vector reads per query.
     */
   private def simPqRerankRecall(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import s.implicits._
-    val M = PqM
-    val K = PqK
-    val emb = embVectors(s, dir)
-    val (dmin, dmax) = embDims(s, dir)
-    // dmin == 64 exactly (not just divisible by M): the DuckDB twin
-    // hardcodes dsub = 8 (range(1, 9), e[m*8+j]), so any other
-    // M-divisible dim would pass a looser guard yet silently diverge
-    // from the oracle (r19 ADVICE)
-    require(dmin == dmax && dmin == 64,
-      s"PQ recall twins assume d = 64 (dsub = 8 literal in SQL), got [$dmin,$dmax]")
-    val dsub = dmin / M
-    val cb = pqCodebooks(s, dir)
-    val codesPath = pqCodesPath(s, dir)
-    val qtbl = recallQueryVectors(dir, emb).map { case (qid, qv) =>
-      (qid, graft.operators.Similarity.adcTable(qv, cb, dsub).flatten)
-    }.toDF("qid", "tbl")
-    val adcCol = (0 until M)
-      .map(m => element_at(col("tbl"), col(s"c$m") + lit(m * K) + 1))
-      .reduce(_ + _)
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("a").asc, col("vec_id"))
-    def topN(scored: DataFrame, n: Int): DataFrame = scored
-      .withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= n)
-      .select(col("qid"), col("vec_id"))
-    val cand = topN(s.read.parquet(codesPath)
-      .filter(col("vec_id") >= 8)
-      .crossJoin(broadcast(qtbl))
-      .select(col("qid"), col("vec_id"), adcCol.as("a")), 50)
-    val q = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("e").as("qe"))
-    // fused codegen L2 (r22) — see simPqRecall
-    def l2Col: Column =
-      graft.functions.L2SqF64.l2sqf64(col("qe"), col("e"))
-    val approx = topN(emb.join(broadcast(cand), "vec_id")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("vec_id"), l2Col.as("a")), 10)
-    val exact = topN(emb.filter(col("vec_id") >= 8)
-      .crossJoin(broadcast(q))
-      .select(col("qid"), col("vec_id"), l2Col.as("a")), 10)
-    val hits = exact.join(approx, Seq("qid", "vec_id"))
-      .groupBy(col("qid")).agg(count(lit(1)).as("nh"))
-    q.select(col("qid"))
-      .join(hits, Seq("qid"), "left")
-      .select(col("qid"), coalesce(col("nh"), lit(0L)).as("n_hits"))
-      .withColumn("recall_ppm", expr("(n_hits * 1000000) div 10"))
+    val cand = Similarity.topKPerQuery(pqRecallAdc(s, dir), 50, col("score").asc)
+    val approx = Similarity.refineScores(cand, embVectors(s, dir),
+      recallQueries(s, dir), Similarity.L2Metric)
+    recallAt10(s, dir, approx, Similarity.L2Metric)
   }
 
   /** DuckDB twin: the `sim_pq_recall` CTEs with an ADC-50 candidate
@@ -3291,7 +3014,7 @@ object LlmOps {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), embDouble.as("embedding"))
     val cRows = ivfCentroids(s, dir)
-    graft.operators.Similarity.assignCells(emb, cRows)
+    Similarity.assignCells(emb, cRows)
       .select(col("cell_id"), posexplode(col("e")).as(Seq("dim", "x")))
       .groupBy(col("cell_id"), col("dim"))
       .agg(count(lit(1)).as("n"), graft.Agg.dsum(col("x"), 6).as("sx"))
@@ -3377,14 +3100,11 @@ object LlmOps {
     * centroid cosine is rounded for display.
     */
   private def dedupSemanticKeep(s: SparkSession, dir: String): DataFrame = {
-    val (dimsMin, dimsMax) = embDims(s, dir)
-    require(dimsMin == dimsMax,
-      s"dedupSemanticKeep needs fixed-width embeddings, got " +
-        s"min=$dimsMin max=$dimsMax")
+    uniformDims(s, dir, "dedupSemanticKeep")
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), embDouble.as("embedding"))
     val cRows = ivfCentroids(s, dir)
-    graft.operators.Similarity.semanticDedupKeep(emb, cRows, tau = 0.35)
+    Similarity.semanticDedupKeep(emb, cRows, tau = 0.35)
   }
 
   /** DuckDB twin: the `cluster_kmeans_step` centroid/assignment CTEs
@@ -3513,7 +3233,7 @@ object LlmOps {
     * 5 corpus scans and d-way partial-sum exchanges in between.
     */
   private def embPcaPower(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Similarity.pcaPowerTopComponent(
+    Similarity.pcaPowerTopComponent(
       Tables.embeddings(s, dir), iters = 5)
 
   private val embPcaPowerSql = {
@@ -3558,7 +3278,7 @@ object LlmOps {
     * iterative chain in the gate.
     */
   private def embPcaTwo(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Similarity.pcaPowerTwoComponents(
+    Similarity.pcaPowerTwoComponents(
       Tables.embeddings(s, dir), iters = 5)
 
   private val embPcaTwoSql = {
@@ -3610,19 +3330,6 @@ object LlmOps {
        |        AS v2_micro FROM bu5, bm5) b USING (dim)""".stripMargin
   }
 
-  /** Batched k-NN similarity join — top-3 cosine neighbors for EVERY
-    * query in a query set at once (vec_id < 8 here), the shape batch
-    * inference / RAG retrieval actually runs, vs the single-query
-    * `sim_cosine_topk`. Query vectors are a bounded dimension: collected
-    * once ([[graft.DimCache]]), unit-normalized driver-side, shipped as
-    * literals, so scoring is a pure Project over the corpus scan — one
-    * dot per (row, query), no join, no row explosion surviving past the
-    * aggregation. Ranking is the bounded [[graft.agg.TopKAgg]] (O(k)
-    * state, map-side combine): the exchange moves ≤ |Q|×k pairs per map
-    * partition, never scored rows — the 100 TB contract. Scores rank on
-    * the 6-dp fixed-point floor so cross-engine order is exact by
-    * construction (ties → lowest vec_id).
-    */
   /** Hard-negative mining for contrastive training — for every query
     * vector (vec_id < 8), the 3 most-cosine-similar corpus vectors with
     * a DIFFERENT label: the "looks like the anchor but isn't its class"
@@ -3637,17 +3344,10 @@ object LlmOps {
   private def simHardNegatives(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), embDouble.as("e"), col("label"))
-    val qRows = graft.DimCache.cached(s"hardneg-queries:$dir:8") {
-      emb.filter(col("vec_id") < 8).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1), r.getInt(2)))
-        .sortBy(_._1).toIndexedSeq
-    }
+    val qRows = querySample(s, dir)
     val qIds = array(qRows.map(r => lit(r._1)): _*)
     val qLabels = array(qRows.map(r => lit(r._3)): _*)
-    val qUnits = array(qRows.map { r =>
-      val n = math.sqrt(r._2.map(x => x * x).sum)
-      array(r._2.map(x => lit(if (n == 0d) 0d else x / n)): _*)
-    }: _*)
+    val qUnits = Similarity.unitLiterals(qRows.map(_._2))
     val topk = udaf(new graft.agg.TopKAgg(3))
     emb.filter(col("vec_id") >= 8)
       .withColumn("ne",
@@ -3703,18 +3403,24 @@ object LlmOps {
       |    PARTITION BY q_id ORDER BY fp DESC, vec_id) AS rn FROM scored)
       |WHERE rn <= 3""".stripMargin
 
+  /** Batched k-NN similarity join — top-3 cosine neighbors for EVERY
+    * query in a query set at once (vec_id < 8 here), the shape batch
+    * inference / RAG retrieval actually runs, vs the single-query
+    * `sim_cosine_topk`. Query vectors are a bounded dimension: collected
+    * once ([[graft.DimCache]]), unit-normalized driver-side, shipped as
+    * literals, so scoring is a pure Project over the corpus scan — one
+    * dot per (row, query), no join, no row explosion surviving past the
+    * aggregation. Ranking is the bounded [[graft.agg.TopKAgg]] (O(k)
+    * state, map-side combine): the exchange moves ≤ |Q|×k pairs per map
+    * partition, never scored rows — the 100 TB contract. Scores rank on
+    * the 6-dp fixed-point floor so cross-engine order is exact by
+    * construction (ties → lowest vec_id).
+    */
   private def simKnnJoin(s: SparkSession, dir: String): DataFrame = {
     val emb = embVectors(s, dir)
-    val qRows = graft.DimCache.cached(s"knn-queries:$dir:8") {
-      emb.filter(col("vec_id") < 8).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1)))
-        .sortBy(_._1).toIndexedSeq
-    }
+    val qRows = querySample(s, dir)
     val qIds = array(qRows.map(r => lit(r._1)): _*)
-    val qUnits = array(qRows.map { r =>
-      val n = math.sqrt(r._2.map(x => x * x).sum)
-      array(r._2.map(x => lit(if (n == 0d) 0d else x / n)): _*)
-    }: _*)
+    val qUnits = Similarity.unitLiterals(qRows.map(_._2))
     val topk = udaf(new graft.agg.TopKAgg(3))
     emb.filter(col("vec_id") >= 8)
       .withColumn("ne",
@@ -4059,27 +3765,8 @@ object LlmOps {
     * the members' bucket partitioning.
     */
   private def dedupSemantic(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.DotF64.dotf64
     import org.apache.spark.sql.expressions.Window
-    val (dims, dimsMax) = embDims(s, dir)
-    require(dims == dimsMax,
-      s"ragged embedding dimensionality: min=$dims max=$dimsMax")
-    // The LCG seed stride (p * 1024 + j) keeps per-plane seed ranges
-    // disjoint only while dims <= 1024; wider embeddings would silently
-    // correlate the hyperplanes (both engines agree, so the oracle would
-    // stay green while bucket quality degrades). dims >= 1 also keeps the
-    // per-row index folds off the sequence(0, -1) ANSI trap.
-    require(dims >= 1 && dims <= 1024,
-      s"plane seed stride supports 1 <= dims <= 1024, got $dims")
-    def weight(p: Int, j: Int): Double =
-      if ((((1103515245L * (p * 1024 + j) + 12345L) % 2147483648L >> 16) & 1L) == 1L)
-        1.0 else -1.0
-    val bucket = (0 until 8)
-      .map { p =>
-        val plane = array((0 until dims).map(j => lit(weight(p, j))): _*)
-        (dotf64(col("e"), plane) > lit(0.0)).cast(IntegerType) * lit(1 << p)
-      }
-      .reduce(_ + _)
+    val bucket = planeBucket8(s, dir)
     val emb = Tables
       .embeddings(s, dir)
       .select(col("vec_id"), embDouble.as("e"))

@@ -193,7 +193,7 @@ object Relational {
       |WHERE rn <= 3 OR rnd <= 2""".stripMargin
 
   /** sequence (filling.hpp:180): generated range with derived columns. */
-  private def sequenceRange(s: SparkSession, dir: String): DataFrame =
+  private def sequenceRange(s: SparkSession): DataFrame =
     s.range(1, 1001)
       .select(
         col("id"),
@@ -1173,7 +1173,7 @@ object Relational {
     "slice_offset_limit" -> Q(sliceOffsetLimit _, sliceOffsetLimitSql),
     "slice_stride" -> Q(sliceStride _, sliceStrideSql),
     "group_head_tail" -> Q(groupHeadTail _, groupHeadTailSql),
-    "sequence_range" -> Q(sequenceRange _, sequenceRangeSql),
+    "sequence_range" -> Q((s, _) => sequenceRange(s), sequenceRangeSql),
     "repeat_rows" -> Q(repeatRows _, repeatRowsSql),
     "tile_rows" -> Q(tileRows _, tileRowsSql),
     "join_inner" -> Q(joinInner _, joinInnerSql),

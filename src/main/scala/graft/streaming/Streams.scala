@@ -536,11 +536,7 @@ object Streams {
     import spark.implicits._
     require(cRows.nonEmpty, "semanticDedupStream: empty centroid set")
     val cellIds = array(cRows.map(r => lit(r._1)): _*)
-    val unitCents = array(cRows.map { r =>
-      val v = r._2
-      val n = math.sqrt(v.map(x => x * x).sum)
-      array(v.map(x => lit(if (n == 0d) 0d else x / n)): _*)
-    }: _*)
+    val unitCents = graft.operators.Similarity.unitLiterals(cRows.map(_._2))
     def dotLoop(a: Array[Double], b: Array[Double]): Double = {
       var acc = 0.0; var j = 0
       while (j < a.length) { acc += a(j) * b(j); j += 1 }

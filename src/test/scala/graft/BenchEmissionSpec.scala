@@ -79,6 +79,24 @@ class BenchEmissionSpec extends AnyFunSuite {
     assert((0 until shown).map(all.get(_).asText()) == Bench.headline.take(shown))
   }
 
+  test("telemetry line puts the walls last among its per-query maps") {
+    // the driver keeps only the tail of the output: with the walls
+    // first, a cut line left the heap map where the walls should be
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val line = Bench.telemetryLine(
+      Seq(("ndsh_q1", 0.385, 12L, 900L, 150.0), ("ndsh_q5", 1.25, 40L, 1200L, 90.0)),
+      bwCleanGbps = 140.0, calRecheck = (-1.0, -1.0))
+    val node = mapper.readTree(line)
+    import scala.jdk.CollectionConverters._
+    val maps = node.fieldNames().asScala.filter(node.get(_).isObject).toSeq
+    assert(maps.last == "walls", s"per-query maps in emitted order: $maps")
+    assert(maps.toSet == Set("gc_ms", "heap_mb", "membw_group_gbps",
+      "membw_group_clean", "walls"))
+    assert(node.get("walls").get("ndsh_q5").asDouble() == 1.25)
+    assert(node.get("heap_mb").get("ndsh_q5").asLong() == 1200L)
+    assert(!node.get("membw_group_clean").get("ndsh_q5").asBoolean())
+  }
+
   test("flagship set is fixed, small, and inside the headline") {
     assert(Bench.flagships == Seq("ndsh_q1", "ndsh_q5", "ndsh_q6", "ndsh_q9"))
     assert(Bench.flagships.forall(Bench.headline.contains))

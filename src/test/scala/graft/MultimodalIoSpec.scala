@@ -25,9 +25,9 @@ class MultimodalIoSpec extends AnyFunSuite {
   }
 
   test("feature extraction runs partition-parallel with stable results") {
-    val f1 = Multimodal.extractFeatures(spark, media).orderBy(col("media_id")).collect()
+    val f1 = Multimodal.extractFeatures(media).orderBy(col("media_id")).collect()
     val f2 = Multimodal
-      .extractFeatures(spark, media.repartition(7))
+      .extractFeatures(media.repartition(7))
       .orderBy(col("media_id"))
       .collect()
     assert(f1.map(_.toSeq).sameElements(f2.map(_.toSeq)))

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Similarity, Skew}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -109,7 +110,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(rSq8 == 1.0, s"SQ8 mid-domain recall $rSq8 (sq8=$sq8 brute=$brute)")
     val cents = Similarity.centroids(embRaw, 16).cache()
     val assigned = Similarity.assignCells(embRaw, cents).cache()
-    val ivf = Similarity.ivfTopK(spark, assigned, cents, mid, 10, nProbe = 6)
+    val ivf = Similarity.ivfTopK(assigned, cents, mid, 10, nProbe = 6)
       .collect().map(_.getLong(0)).toSet
     val rIvf = brute.intersect(ivf).size.toDouble / brute.size
     assert(rIvf >= 0.5, s"IVF mid-domain recall $rIvf (ivf=$ivf brute=$brute)")
@@ -350,10 +351,59 @@ class ScaleOpsSpec extends AnyFunSuite {
       s"assignCells plan explodes the corpus:\n$plan")
     assert(assigned.count() == emb.count())
     val ivf = Similarity
-      .ivfTopK(spark, assigned, cents, 0L, 10, nProbe = 6)
+      .ivfTopK(assigned, cents, 0L, 10, nProbe = 6)
       .collect().map(_.getLong(0)).toSet
     val recall = brute.intersect(ivf).size.toDouble / brute.size
     assert(recall >= 0.5, s"recall $recall (ivf=$ivf brute=$brute)")
+  }
+
+  /** The recall certifier every ANN tier's recall row reports through:
+    * an approximate arm equal to the exact one hits all k per query,
+    * under both metrics, and a query whose approximate arm is empty
+    * still reports — with 0 hits — instead of dropping out of the join.
+    */
+  test("recallAt: approx == exact hits k per qid; an empty approx arm reports 0") {
+    val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
+    val q = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("qid"), col("e").as("qe"))
+    val corpus = emb.filter(col("vec_id") >= 8)
+    def recall(m: Similarity.Metric, approx: DataFrame => DataFrame): Map[Long, (Long, Long)] = {
+      val exact = Similarity.exactScores(corpus, q, m)
+      Similarity.recallAt(q, exact, approx(exact), 10, m).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    }
+    Seq(Similarity.CosineMetric, Similarity.L2Metric).foreach { m =>
+      val same = recall(m, identity)
+      assert(same.keySet == (0L until 8L).toSet)
+      assert(same.values.forall(_ == (10L, 1000000L)), s"$m: $same")
+    }
+    val holed = recall(Similarity.CosineMetric, _.filter(col("qid") =!= 3L))
+    assert(holed.keySet == (0L until 8L).toSet, s"a qid dropped out: $holed")
+    assert(holed(3L) == (0L, 0L))
+    assert((holed - 3L).values.forall(_ == (10L, 1000000L)))
+  }
+
+  /** The premise of merging the cosine copies: `cosine(a, b)`,
+    * `cosine(b, a)` and the form with each norm computed once per row
+    * are the same double, bit for bit, on every sampled pair.
+    */
+  test("cosine is bit-symmetric and equals the hoisted-norm form") {
+    import graft.functions.DotF64.dotf64
+    val emb = Tables.embeddings(spark, sf).select(col("vec_id"),
+      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
+    val a = emb.filter(col("vec_id") < 16)
+      .select(col("e").as("ea"), dotf64(col("e"), col("e")).as("na2"))
+    val b = emb.select(col("e").as("eb"), dotf64(col("e"), col("e")).as("nb2"))
+    val rows = b.crossJoin(a).select(
+      Similarity.cosine(col("ea"), col("eb")),
+      Similarity.cosine(col("eb"), col("ea")),
+      dotf64(col("eb"), col("ea")) / (sqrt(col("nb2")) * sqrt(col("na2")))).collect()
+    assert(rows.length == 16 * 500)
+    rows.foreach { r =>
+      val (ab, ba, hoisted) = (r.getDouble(0), r.getDouble(1), r.getDouble(2))
+      assert(ab == ba && ab == hoisted, s"cosine drifted: $ab $ba $hoisted")
+    }
   }
 
   test("segmented sort: sortWithinPartitions orders inside each range") {
@@ -518,7 +568,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val recalls = (0L until 8L).map { q =>
       val brute = Similarity.bruteForceTopK(emb, q, 10)
         .collect().map(_.getLong(0)).toSet
-      val ivf = Similarity.ivfTopK(spark, assigned, cents, q, 10, nProbe = 3)
+      val ivf = Similarity.ivfTopK(assigned, cents, q, 10, nProbe = 3)
         .collect().map(_.getLong(0)).toSet
       brute.intersect(ivf).size.toDouble / brute.size
     }
