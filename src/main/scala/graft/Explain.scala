@@ -208,8 +208,7 @@ object Explain {
           .select(col("vec_id"),
             expr("timestamp'2024-01-01 00:00:00' + INTERVAL 1 SECOND * vec_id")
               .as("ts"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-              .as("embedding"))
+            graft.operators.Similarity.embDouble.as("embedding"))
           .coalesce(1).write.mode("overwrite").parquet(embTsDir)
         val cRows = graft.queries.LlmOps.ivfCentroids(spark, sfDir)
         Streams.semanticDedupStream(spark,

@@ -26,8 +26,12 @@ import org.apache.spark.sql.types._
   */
 object Similarity {
 
-  private def toDouble(c: Column): Column =
-    transform(c, x => x.cast(DoubleType))
+  /** The `embedding` column widened to array<double>: the array cast
+    * applies the same element Cast as `transform(embedding, x -> CAST(x
+    * AS DOUBLE))`, so every value is bit-identical, without the lambda
+    * (ArrayTransform has no generated code).
+    */
+  def embDouble: Column = col("embedding").cast(ArrayType(DoubleType))
 
   // native codegen dot (graft.functions.DotF64) — ~6× the composed
   // aggregate(zip_with) HOF formulation on candidate-pair scoring
@@ -59,7 +63,7 @@ object Similarity {
     * TakeOrdered; zero shuffle of the corpus).
     */
   def bruteForceTopK(emb: DataFrame, queryVecId: Long, k: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), toDouble(col("embedding")).as("e"))
+    val e = emb.select(col("vec_id"), embDouble.as("e"))
     val q = e.filter(col("vec_id") === queryVecId).select(col("e").as("qe"))
     e.filter(col("vec_id") =!= queryVecId)
       .crossJoin(broadcast(q))
@@ -165,7 +169,7 @@ object Similarity {
         (row_number().over(
           Window.partitionBy(col("vec_id") * lit(0)).orderBy(col("vec_id"))) - 1)
           .cast(IntegerType))
-      .select(col("cell_id"), toDouble(col("embedding")).as("centroid"))
+      .select(col("cell_id"), embDouble.as("centroid"))
   }
 
   /** Assign every vector to its nearest centroid — a TRUE map-side argmax.
@@ -215,7 +219,7 @@ object Similarity {
     val cellIds = array(cRows.map(r => lit(r._1)): _*)
     val unitCents = unitLiterals(cRows.map(_._2))
     emb
-      .select(col("vec_id"), toDouble(col("embedding")).as("e"))
+      .select(col("vec_id"), embDouble.as("e"))
       // sims materialized in its own projection: referencing it twice
       // below must NOT recompute the dot products (multi-referenced
       // aliases survive CollapseProject; a lambda would re-evaluate)
@@ -940,7 +944,7 @@ object Similarity {
       cRows: IndexedSeq[(Int, Seq[Double])]): Double = {
     val unitCents = unitLiterals(cRows.map(_._2))
     emb
-      .select(col("vec_id"), toDouble(col("embedding")).as("e"))
+      .select(col("vec_id"), embDouble.as("e"))
       .select(array_max(transform(unitCents, cu => dot(col("e"), cu))).as("m"))
       .agg(graft.Agg.dsum(col("m"), 6).as("j"))
       .head().getDouble(0)

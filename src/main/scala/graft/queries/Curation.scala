@@ -146,9 +146,10 @@ object Curation {
   private def dsirImportance(s: SparkSession, dir: String): DataFrame = {
     // The hashed-gram frame feeds BOTH the distribution build and the
     // scoring join; neither branch has an exchange below it, so without
-    // a lineage cut the per-token polyhash ran twice per run (r21, the
-    // candidatePairSets pattern). Checkpoint the compact pre-explode
-    // frame (doc-cardinality rows carrying the hash arrays).
+    // a lineage cut the per-token polyhash ran twice per run (r21, like
+    // the signature cut of Banding.candidatePairs). Checkpoint the
+    // compact pre-explode frame (doc-cardinality rows carrying the hash
+    // arrays).
     val hashed = Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
         graft.functions.PolyHash31.polyhash31(toks).getField("pp").as("hs"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.Similarity
+import graft.operators.{Banding, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -91,7 +91,7 @@ object LlmOps {
     withShingles(Tables.documents(s, dir))
       // one NATIVE char fold per shingle (PolyHash31 codegen pass); the
       // seeded fold factors as (p·31^len + P) mod M — see
-      // ngramJaccardPairs for the algebra. ph is materialized in its own
+      // polyBandBuckets for the algebra. ph is materialized in its own
       // projection so both field extractions share one evaluation.
       .select(col("doc_id"),
         graft.functions.PolyHash31.polyhash31(col("tk")).as("ph"))
@@ -104,27 +104,7 @@ object LlmOps {
           .as("minhash_portable"))
 
   private val dedupMinhashPortableSql =
-    s"""WITH grams AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(1, greatest(len(string_split(text, ' ')) - 2, 0) + 1),
-      |      i -> concat(string_split(text, ' ')[i], '_',
-      |                  string_split(text, ' ')[i + 1], '_',
-      |                  string_split(text, ' ')[i + 2]))) AS tk
-      |  FROM documents)
-      |, prehashed AS (
-      |  SELECT doc_id,
-      |    list_transform(tk, g ->
-      |      list_reduce(
-      |        list_prepend(CAST(0 AS BIGINT),
-      |          list_transform(range(1, length(g) + 1),
-      |                         i -> CAST(ascii(substring(g, i, 1)) AS BIGINT))),
-      |        (h, c) -> (h * 31 + c) % 1000000007)) AS pp,
-      |    list_transform(tk, g ->
-      |      list_reduce(
-      |        list_prepend(CAST(1 AS BIGINT), range(1, length(g) + 1)),
-      |        (w, i) -> (w * 31) % 1000000007)) AS ww
-      |  FROM grams)
+    s"""WITH ${prehashCtes("documents")}
       |SELECT doc_id,
       |  ${graft.ArrCanon.joinedSql(
         """list_transform(range(0, 16), p ->
@@ -134,78 +114,37 @@ object LlmOps {
 
   /** MinHash-LSH near-dup candidate pairs: 4 bands × 4 rows; docs sharing
     * any band bucket become candidates; est. jaccard = matching minhash
-    * fraction. Scales as O(n · bands) shuffle on band keys.
-    *
-    * Hot-bucket cap: a degenerate bucket (empty docs, boilerplate) makes
-    * the within-bucket self-join quadratic in that bucket alone, so
-    * buckets holding more than `maxBucket` docs are dropped before the
-    * join. That is the standard recall trade — members of an over-full
-    * bucket are overwhelmingly mutual near-dups of one template and are
-    * still found through their other 3 bands. The bucket-size aggregation
-    * shuffles the same (band, bucket) key the join shuffles, so AQE lines
-    * the exchanges up.
+    * fraction. Scales as O(n · bands) shuffle on band keys. Banding, the
+    * hot-bucket cap (buckets holding more than `maxBucket` docs are
+    * dropped) and the pair distinct are [[Banding.candidatePairs]].
     */
-  private[graft] def lshCandidatePairs(docs: DataFrame, maxBucket: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Lineage cuts on sigs/capped (r21) — same rationale as
-    // candidatePairSets: column pruning specializes the self-join's two
-    // banded branches into different subtrees, so without the cuts the
-    // corpus is shingled+minhashed once per branch plus once for the
-    // mh_b attach. Values unchanged. Both cuts are eager, for the reason
-    // the shared tf cut is (Retrieval.tfOverShared): lazy, the first
-    // consumer job materialized each cut and dropped its plan while
-    // AQE's sibling consumers still reported that plan's metrics, and
-    // the driver logged "Failed to update accumulator".
-    val sigs = withShingles(graft.Scans.fanOut(docs))
-      .select(col("doc_id"), minhashSig(16).as("mh"))
-      .localCheckpoint()
-    // The signature array rides the LEFT side of the self-join only (a
-    // map-side projection; the right side is compact (band, bucket, id)
-    // rows), and the per-pair reduction takes first(mh_a) while grouping
-    // on ids alone — so the pair distinct never hashes arrays and the
-    // corpus is minhashed twice total (left + b-side attach), not once
-    // per reference. The hot-bucket cap is a windowed count over the same
-    // (band, bucket) key the join shuffles — one exchange serves both,
-    // instead of a separate aggregate + semi-join.
-    val banded = sigs
-      .select(
-        col("doc_id"),
-        col("mh"),
-        posexplode(expr(
-          "transform(sequence(0, 3), b -> xxhash64(mh[b*4], mh[b*4+1], mh[b*4+2], mh[b*4+3]))"))
-          .as(Seq("band", "bucket")))
-    val capped = banded
-      .withColumn("bucket_n",
-        count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
-      .filter(col("bucket_n") <= maxBucket)
-      .drop("bucket_n")
-      .localCheckpoint()
-    val l = capped
-      .select(col("band"), col("bucket"), col("doc_id").as("id_a"), col("mh").as("mh_a"))
-    val r = capped.select(col("band"), col("bucket"), col("doc_id").as("id_b"))
-    val pairs = l.join(r, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(first(col("mh_a")).as("mh_a"))
-    pairs
-      .join(sigs.select(col("doc_id").as("id_b"), col("mh").as("mh_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        expr("size(filter(zip_with(mh_a, mh_b, (x, y) -> x = y), v -> v)) / CAST(16 AS DOUBLE)")
-          .as("est_jaccard"))
-  }
+  private[graft] def lshCandidatePairs(docs: DataFrame, maxBucket: Int): DataFrame =
+    bandAgreement(Banding.candidatePairs(
+      withShingles(graft.Scans.fanOut(docs)).select(col("doc_id"), minhashSig(16).as("mh")),
+      "doc_id", Seq("mh"),
+      expr("transform(sequence(0, 3), b -> xxhash64(mh[b*4], mh[b*4+1], mh[b*4+2], mh[b*4+3]))"),
+      maxBucket))
+
+  /** (id_a, id_b, est_jaccard): the fraction of the 16 signature slots
+    * on which the pair's `mh_a` and `mh_b` agree.
+    */
+  private def bandAgreement(pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a"), col("id_b"),
+      expr("size(filter(zip_with(mh_a, mh_b, (x, y) -> x = y), v -> v)) / CAST(16 AS DOUBLE)")
+        .as("est_jaccard"))
 
   private def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
     lshCandidatePairs(Tables.documents(s, dir), maxBucket = 1000)
       .filter(col("est_jaccard") >= 0.75)
 
   /** Fully-oracled twin of the COMPLETE MinHash-LSH pipeline — the same
-    * shape as [[lshCandidatePairs]] (4 bands × 4 rows, windowed
-    * hot-bucket cap sharing the join exchange, arrays one-sided,
-    * signature agreement as the jaccard estimate, 0.75 threshold) with
-    * the portable polynomial permutation family in place of native
-    * XXH64, so DuckDB replicates signatures, buckets, cap, candidate
-    * generation, AND the estimate bit-for-bit. `dedup_minhash_lsh`
-    * stays as the native-speed path; this row proves the pipeline.
+    * shape as [[lshCandidatePairs]] (4 bands × 4 rows, the shared
+    * banding core, signature agreement as the jaccard estimate, 0.75
+    * threshold) with the portable polynomial permutation family in
+    * place of native XXH64, so DuckDB replicates signatures, buckets,
+    * cap, candidate generation, AND the estimate bit-for-bit.
+    * `dedup_minhash_lsh` stays as the native-speed path; this row
+    * proves the pipeline.
     */
   private def dedupMinhashLshPortable(s: SparkSession, dir: String): DataFrame =
     lshPortablePairs(Tables.documents(s, dir))
@@ -216,8 +155,6 @@ object LlmOps {
     * a filtered corpus.
     */
   private[queries] def lshPortablePairs(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // sigs/capped eager lineage cuts — see lshCandidatePairs (r21).
     val sigs = withShingles(graft.Scans.fanOut(docs))
       .select(col("doc_id"),
         graft.functions.PolyHash31.polyhash31(col("tk")).as("ph"))
@@ -227,43 +164,20 @@ object LlmOps {
           |  array_min(zip_with(pp, ww,
           |    (h, w) -> (CAST(p AS BIGINT) * w + h) % 1000000007)))""".stripMargin)
         .as("mh"))
-      .localCheckpoint()
-    val banded = sigs
-      .select(col("doc_id"), col("mh"),
-        posexplode(expr(
-          """transform(sequence(0, 3), b ->
-            |  (((mh[b*4] * 31 + mh[b*4+1]) % 1000000007 * 31 + mh[b*4+2])
-            |    % 1000000007 * 31 + mh[b*4+3]) % 1000000007)""".stripMargin))
-          .as(Seq("band", "bucket")))
-      .filter(col("bucket").isNotNull) // empty shingle set: no candidates
-    val capped = banded
-      .withColumn("bucket_n",
-        count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
-      .filter(col("bucket_n") <= 1000)
-      .drop("bucket_n")
-      .localCheckpoint()
-    val l = capped
-      .select(col("band"), col("bucket"), col("doc_id").as("id_a"), col("mh").as("mh_a"))
-    val r = capped.select(col("band"), col("bucket"), col("doc_id").as("id_b"))
-    val pairs = l.join(r, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(first(col("mh_a")).as("mh_a"))
-    pairs
-      .join(sigs.select(col("doc_id").as("id_b"), col("mh").as("mh_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        expr("size(filter(zip_with(mh_a, mh_b, (x, y) -> x = y), v -> v)) / CAST(16 AS DOUBLE)")
-          .as("est_jaccard"))
+    val buckets = expr(
+      """transform(sequence(0, 3), b ->
+        |  (((mh[b*4] * 31 + mh[b*4+1]) % 1000000007 * 31 + mh[b*4+2])
+        |    % 1000000007 * 31 + mh[b*4+3]) % 1000000007)""".stripMargin)
+    bandAgreement(Banding.candidatePairs(sigs, "doc_id", Seq("mh"), buckets, maxBucket = 1000))
       .filter(col("est_jaccard") >= 0.75)
   }
 
-  /** The portable-LSH oracle pipeline as a CTE-chain FRAGMENT over `src`
-    * (any CTE/table with doc_id + text), ending in `lshcand(id_a, id_b,
-    * est_jaccard)` with the 0.75 threshold applied — embeddable in larger
-    * oracle statements (the funnel query composes it over a filtered
-    * corpus).
+  /** DuckDB twin of [[withShingles]] followed by the seed-0 PolyHash31
+    * fold over `src` (any CTE or table with doc_id + text):
+    * `grams(doc_id, tk)` and `prehashed(doc_id, tk, pp, ww)`, where `pp`
+    * is each shingle's char fold and `ww` its 31^len, both mod 1e9+7.
     */
-  private[queries] def lshPortableCtes(src: String): String =
+  private[queries] def prehashCtes(src: String): String =
     s"""grams AS (
       |  SELECT doc_id,
       |    list_distinct(list_transform(
@@ -273,7 +187,7 @@ object LlmOps {
       |                  string_split(text, ' ')[i + 2]))) AS tk
       |  FROM $src),
       |prehashed AS (
-      |  SELECT doc_id,
+      |  SELECT doc_id, tk,
       |    list_transform(tk, g ->
       |      list_reduce(
       |        list_prepend(CAST(0 AS BIGINT),
@@ -284,7 +198,16 @@ object LlmOps {
       |      list_reduce(
       |        list_prepend(CAST(1 AS BIGINT), range(1, length(g) + 1)),
       |        (w, i) -> (w * 31) % 1000000007)) AS ww
-      |  FROM grams),
+      |  FROM grams)""".stripMargin
+
+  /** The portable-LSH oracle pipeline as a CTE-chain FRAGMENT over `src`
+    * (any CTE/table with doc_id + text), ending in `lshcand(id_a, id_b,
+    * est_jaccard)` with the 0.75 threshold applied — embeddable in larger
+    * oracle statements (the funnel query composes it over a filtered
+    * corpus).
+    */
+  private[queries] def lshPortableCtes(src: String): String =
+    s"""${prehashCtes(src)},
       |sigs AS (
       |  SELECT doc_id,
       |    list_transform(range(0, 16), p ->
@@ -421,28 +344,12 @@ object LlmOps {
         .as("simhash16"))
 
   private val dedupSimhashPortableSql =
-    """WITH grams AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(1, greatest(len(string_split(text, ' ')) - 2, 0) + 1),
-      |      i -> concat(string_split(text, ' ')[i], '_',
-      |                  string_split(text, ' ')[i + 1], '_',
-      |                  string_split(text, ' ')[i + 2]))) AS tk
-      |  FROM documents),
-      |hashed AS (
-      |  SELECT doc_id,
-      |    list_transform(tk, g ->
-      |      list_reduce(
-      |        list_prepend(CAST(0 AS BIGINT),
-      |          list_transform(range(1, length(g) + 1),
-      |                         i -> CAST(ascii(substring(g, i, 1)) AS BIGINT))),
-      |        (h, c) -> (h * 31 + c) % 1000000007)) AS hs
-      |  FROM grams)
+    s"""WITH ${prehashCtes("documents")}
       |SELECT doc_id,
       |  list_reduce(list_prepend(0, list_transform(range(0, 16), b ->
-      |    CASE WHEN len(list_filter(hs, h -> ((h >> b) & 1) = 1)) * 2 > len(hs)
+      |    CASE WHEN len(list_filter(pp, h -> ((h >> b) & 1) = 1)) * 2 > len(pp)
       |    THEN (1 << b) ELSE 0 END)), (acc, v) -> acc | v) AS simhash16
-      |FROM hashed""".stripMargin
+      |FROM prehashed""".stripMargin
 
   /** n-gram jaccard dedup: EXACT token-3-gram-set jaccard computed only
     * on LSH candidate pairs — the verify stage wired the way the MinHash
@@ -462,28 +369,6 @@ object LlmOps {
   private def dedupNgramJaccard(s: SparkSession, dir: String): DataFrame =
     ngramJaccardPairs(Tables.documents(s, dir), maxBucket = 1000)
 
-  /** See [[dedupNgramJaccard]]'s doc above. The band self-join is shaped
-    * exactly like [[lshCandidatePairs]]: a windowed hot-bucket cap rides
-    * the same (band, bucket) exchange the join shuffles (a degenerate
-    * boilerplate bucket would otherwise go quadratic alone), the payload
-    * rides the LEFT side only (the right side is compact
-    * (band, bucket, id) rows), the per-pair distinct groups on bare ids
-    * taking first(ha), and the b-side set re-attaches by id after —
-    * so pair dedup never hashes arrays and quadratic blowup is bounded
-    * per bucket. The cap is mirrored in the DuckDB oracle (QUALIFY), so
-    * it is part of the checked semantics, not a silent drop.
-    *
-    * The payload that rides the exchange and the verify join is the
-    * DISTINCT int64 poly-hash set of the shingles (`hs`), NOT the string
-    * 3-gram arrays — the hashes are already computed for banding, a
-    * bigint weighs a fraction of a `tokA_tokB_tokC` string, and the
-    * oracle computes the identical fold so the check stays bit-exact.
-    * Jaccard over hashed sets equals jaccard over shingle sets unless
-    * two distinct shingles of the SAME doc pair collide mod 1e9+7
-    * (union ≤ ~2·10³ shingles → collision odds ~10⁻³ per pair, and both
-    * engines agree regardless); the verify stage was always an
-    * estimate-of-exact step, so the contract is unchanged.
-    */
   /** Per-document distinct hashed-shingle sets: (doc_id, hs, pp, ww)
     * where `pp`/`ww` are the seed-0 poly-hash and 31^len arrays the band
     * hashes are derived from. Shared by the self-join dedup
@@ -509,63 +394,43 @@ object LlmOps {
     * bucket values — and the DuckDB oracle — are bit-identical to the
     * naive per-band fold. The pp/ww arrays are materialized in their
     * own projection ([[prehashedShingles]]): a lambda reference would
-    * re-run the fold per band. Output: (doc_id, hs, band, bucket).
+    * re-run the fold per band. Null for a doc with no shingles.
     */
-  private def bandedBuckets(prehashed: DataFrame): DataFrame =
-    prehashed
-      .select(col("doc_id"), col("hs"),
-        posexplode(expr(
-          """transform(sequence(0, 3), b ->
-            |  array_min(zip_with(pp, ww,
-            |    (p, w) -> (CAST(b AS BIGINT) * w + p) % 1000000007)))""".stripMargin))
-          .as(Seq("band", "bucket")))
-      .filter(col("bucket").isNotNull) // docs with no shingles: no candidates
+  private def polyBandBuckets: Column = expr(
+    """transform(sequence(0, 3), b ->
+      |  array_min(zip_with(pp, ww,
+      |    (p, w) -> (CAST(b AS BIGINT) * w + p) % 1000000007)))""".stripMargin)
 
-  private[graft] def ngramJaccardPairs(docs: DataFrame, maxBucket: Int): DataFrame = {
+  /** Exact jaccard of the pair's hashed-shingle sets `hs_a` and `hs_b`. */
+  private def setJaccard: Column =
+    size(array_intersect(col("hs_a"), col("hs_b"))).cast(DoubleType) /
+      size(array_union(col("hs_a"), col("hs_b")))
+
+  /** See [[dedupNgramJaccard]]. The payload that rides the exchange and
+    * the verify join is the DISTINCT int64 poly-hash set of the shingles
+    * (`hs`), NOT the string 3-gram arrays — the hashes are already
+    * computed for banding, a bigint weighs a fraction of a
+    * `tokA_tokB_tokC` string, and the oracle computes the identical fold
+    * so the check stays bit-exact. Jaccard over hashed sets equals
+    * jaccard over shingle sets unless two distinct shingles of the SAME
+    * doc pair collide mod 1e9+7 (union ≤ ~2·10³ shingles → collision
+    * odds ~10⁻³ per pair, and both engines agree regardless); the verify
+    * stage was always an estimate-of-exact step, so the contract is
+    * unchanged.
+    */
+  private[graft] def ngramJaccardPairs(docs: DataFrame, maxBucket: Int): DataFrame =
     candidatePairSets(docs, maxBucket)
-      .select(
-        col("id_a"),
-        col("id_b"),
-        (size(array_intersect(col("ha"), col("hb"))).cast(DoubleType) /
-          size(array_union(col("ha"), col("hb")))).as("jaccard3"))
+      .select(col("id_a"), col("id_b"), setJaccard.as("jaccard3"))
       .filter(col("jaccard3") >= 0.2)
-  }
 
   /** Shared candidate stage of the n-gram verify family: banded LSH
     * candidate pairs with both docs' distinct hashed-shingle sets
-    * attached — (id_a, id_b, ha, hb). Shape documented at
-    * [[ngramJaccardPairs]]; consumed by the jaccard and containment
-    * verifiers.
+    * attached — (id_a, id_b, hs_a, hs_b); consumed by the jaccard and
+    * containment verifiers.
     */
-  private def candidatePairSets(docs: DataFrame, maxBucket: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Lineage cuts (r21): without them the char-fold shingle hashing ran
-    // THREE times per run — column pruning specializes the self-join's
-    // two banded branches into different subtrees (the a side keeps hs,
-    // the b side doesn't), so neither the exchange nor the scan is
-    // reused, and the hb re-attach recomputes the fold a third time.
-    // Checkpointing prehashed (1× corpus hash sets) and the capped
-    // banded frame (≤ 4 band replicas) makes every consumer read the
-    // one materialization — the same localCheckpoint lineage-cut the
-    // label-prop loop and the PageRank edge frame already use; values
-    // unchanged. Both cuts are eager — see lshCandidatePairs.
-    val prehashed = prehashedShingles(graft.Scans.fanOut(docs))
-      .localCheckpoint()
-    val capped = bandedBuckets(prehashed)
-      .withColumn("bucket_n",
-        count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
-      .filter(col("bucket_n") <= maxBucket)
-      .drop("bucket_n")
-      .localCheckpoint()
-    val a = capped.select(col("band"), col("bucket"), col("doc_id").as("id_a"), col("hs").as("ha"))
-    val b = capped.select(col("band"), col("bucket"), col("doc_id").as("id_b"))
-    val pairs = a.join(b, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(first(col("ha")).as("ha"))
-    pairs
-      .join(prehashed.select(col("doc_id").as("id_b"), col("hs").as("hb")), "id_b")
-  }
+  private def candidatePairSets(docs: DataFrame, maxBucket: Int): DataFrame =
+    Banding.candidatePairs(prehashedShingles(graft.Scans.fanOut(docs)),
+      "doc_id", Seq("hs"), polyBandBuckets, maxBucket)
 
   /** Containment near-dup — the ASYMMETRIC verify metric over the same
     * banded candidates as [[ngramJaccardPairs]]: cont_a = |A∩B|/|A| is
@@ -585,8 +450,8 @@ object LlmOps {
   private[graft] def containmentPairs(docs: DataFrame, maxBucket: Int): DataFrame =
     candidatePairSets(docs, maxBucket)
       .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("ha"), col("hb"))).cast(DoubleType).as("inter"),
-        size(col("ha")).as("na"), size(col("hb")).as("nb"))
+        size(array_intersect(col("hs_a"), col("hs_b"))).cast(DoubleType).as("inter"),
+        size(col("hs_a")).as("na"), size(col("hs_b")).as("nb"))
       .select(col("id_a"), col("id_b"),
         round(col("inter") / col("na"), 6).as("cont_a_6dp"),
         round(col("inter") / col("nb"), 6).as("cont_b_6dp"))
@@ -595,32 +460,13 @@ object LlmOps {
   private def dedupContainment(s: SparkSession, dir: String): DataFrame =
     containmentPairs(Tables.documents(s, dir), maxBucket = 1000)
 
-  /** Shared CTE prefix (grams → prehashed → hsets → banded → capped →
-    * pairs) of the n-gram verify family's DuckDB twins — the SQL mirror
-    * of [[candidatePairSets]].
+  /** The n-gram family's DuckDB band CTEs over `documents`: the shared
+    * prehash, then `hsets(doc_id, hs)` and the uncapped
+    * `banded(doc_id, band, bucket)` — the SQL mirror of
+    * [[prehashedShingles]] and [[polyBandBuckets]].
     */
-  private val ngramCandidateCtes =
-    """WITH grams AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(1, greatest(len(string_split(text, ' ')) - 2, 0) + 1),
-      |      i -> concat(string_split(text, ' ')[i], '_',
-      |                  string_split(text, ' ')[i + 1], '_',
-      |                  string_split(text, ' ')[i + 2]))) AS g3
-      |  FROM documents),
-      |prehashed AS (
-      |  SELECT doc_id, g3,
-      |    list_transform(g3, g ->
-      |      list_reduce(
-      |        list_prepend(CAST(0 AS BIGINT),
-      |          list_transform(range(1, length(g) + 1),
-      |                         i -> CAST(ascii(substring(g, i, 1)) AS BIGINT))),
-      |        (h, c) -> (h * 31 + c) % 1000000007)) AS pp,
-      |    list_transform(g3, g ->
-      |      list_reduce(
-      |        list_prepend(CAST(1 AS BIGINT), range(1, length(g) + 1)),
-      |        (w, i) -> (w * 31) % 1000000007)) AS ww
-      |  FROM grams),
+  private val ngramBandCtes =
+    s"""WITH ${prehashCtes("documents")},
       |hsets AS (
       |  SELECT doc_id, list_distinct(pp) AS hs FROM prehashed),
       |banded AS (
@@ -628,7 +474,13 @@ object LlmOps {
       |    list_min(list_transform(range(1, len(pp) + 1),
       |      i -> (CAST(band AS BIGINT) * ww[i] + pp[i]) % 1000000007)) AS bucket
       |  FROM prehashed CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) bands
-      |  WHERE len(g3) > 0),
+      |  WHERE len(tk) > 0)""".stripMargin
+
+  /** [[ngramBandCtes]] plus the capped self-join `pairs(id_a, id_b)` —
+    * the SQL mirror of [[candidatePairSets]].
+    */
+  private val ngramCandidateCtes =
+    ngramBandCtes + """,
       |capped AS (
       |  SELECT * FROM banded
       |  QUALIFY count(*) OVER (PARTITION BY band, bucket) <= 1000),
@@ -697,46 +549,29 @@ object LlmOps {
     * `path`/sigs. See [[dedupIncrementalLsh]].
     */
   private def buildLshIndex(corpus: DataFrame, path: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
     val pre = prehashedShingles(corpus)
-    bandedBuckets(pre)
-      .withColumn("bucket_n",
-        count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
-      .filter(col("bucket_n") <= 1000)
-      .select(col("band"), col("bucket"), col("doc_id"))
+    Banding.capHotBuckets(Banding.bands(pre, "doc_id", Nil, polyBandBuckets), 1000)
       .write.mode("overwrite").parquet(path + "/buckets")
     pre.select(col("doc_id"), col("hs"))
       .write.mode("overwrite").parquet(path + "/sigs")
   }
 
-  /** The steady-state delta query of [[dedupIncrementalLsh]]. Delta
-    * signatures ride the left side of the bucket join; the index side
-    * is compact ids (a small delta broadcasts, so the index streams
-    * map-side). Pair-distinct groups on bare ids taking first(ha); the
-    * corpus signature re-attaches by id after — the same
-    * never-hash-arrays shape as [[ngramJaccardPairs]].
+  /** The steady-state delta query of [[dedupIncrementalLsh]]: the delta
+    * is the a side of the bucket join, the index side is compact ids (a
+    * small delta broadcasts, so the index streams map-side), and the
+    * corpus signature re-attaches by id after the pair distinct.
     */
   private def incrementalLshPairs(
       s: SparkSession, deltaDocs: DataFrame, idxDir: String): DataFrame = {
-    val delta = prehashedShingles(deltaDocs)
-    val pairs = bandedBuckets(delta)
-      .select(col("band"), col("bucket"),
-        col("doc_id").as("id_d"), col("hs").as("ha"))
-      .join(
-        s.read.parquet(idxDir + "/buckets").withColumnRenamed("doc_id", "id_c"),
-        Seq("band", "bucket"))
-      .groupBy(col("id_d"), col("id_c"))
-      .agg(first(col("ha")).as("ha"))
-    pairs
-      .join(
-        s.read.parquet(idxDir + "/sigs")
-          .select(col("doc_id").as("id_c"), col("hs").as("hb")),
-        "id_c")
-      .select(
-        col("id_d"),
-        col("id_c"),
-        (size(array_intersect(col("ha"), col("hb"))).cast(DoubleType) /
-          size(array_union(col("ha"), col("hb")))).as("jaccard3"))
+    val delta = Banding.aSide(
+      Banding.bands(prehashedShingles(deltaDocs), "doc_id", Seq("hs"), polyBandBuckets),
+      "doc_id", Seq("hs"))
+    val joined = delta.join(
+      s.read.parquet(idxDir + "/buckets").withColumnRenamed("doc_id", "id_b"),
+      Seq("band", "bucket"))
+    Banding.withB(Banding.distinctPairs(joined, Seq("hs")),
+        s.read.parquet(idxDir + "/sigs"), "doc_id", Seq("hs"))
+      .select(col("id_a").as("id_d"), col("id_b").as("id_c"), setJaccard.as("jaccard3"))
       .filter(col("jaccard3") >= 0.2)
   }
 
@@ -744,35 +579,7 @@ object LlmOps {
     * the self-join oracle, split into corpus (capped) and delta sides.
     */
   private val dedupIncrementalLshSql =
-    """WITH grams AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(1, greatest(len(string_split(text, ' ')) - 2, 0) + 1),
-      |      i -> concat(string_split(text, ' ')[i], '_',
-      |                  string_split(text, ' ')[i + 1], '_',
-      |                  string_split(text, ' ')[i + 2]))) AS g3
-      |  FROM documents),
-      |prehashed AS (
-      |  SELECT doc_id, g3,
-      |    list_transform(g3, g ->
-      |      list_reduce(
-      |        list_prepend(CAST(0 AS BIGINT),
-      |          list_transform(range(1, length(g) + 1),
-      |                         i -> CAST(ascii(substring(g, i, 1)) AS BIGINT))),
-      |        (h, c) -> (h * 31 + c) % 1000000007)) AS pp,
-      |    list_transform(g3, g ->
-      |      list_reduce(
-      |        list_prepend(CAST(1 AS BIGINT), range(1, length(g) + 1)),
-      |        (w, i) -> (w * 31) % 1000000007)) AS ww
-      |  FROM grams),
-      |hsets AS (
-      |  SELECT doc_id, list_distinct(pp) AS hs FROM prehashed),
-      |banded AS (
-      |  SELECT doc_id, band,
-      |    list_min(list_transform(range(1, len(pp) + 1),
-      |      i -> (CAST(band AS BIGINT) * ww[i] + pp[i]) % 1000000007)) AS bucket
-      |  FROM prehashed CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) bands
-      |  WHERE len(g3) > 0),
+    ngramBandCtes + """,
       |corpus AS (
       |  SELECT * FROM banded WHERE doc_id % 10 != 0
       |  QUALIFY count(*) OVER (PARTITION BY band, bucket) <= 1000),
@@ -1032,9 +839,6 @@ object LlmOps {
 
   // -------------------------------------------------------- similarity
 
-  private def embDouble: Column =
-    expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-
   /** (min, max) embedding width of the dataset's embeddings table — the
     * shared input of the ragged-dims guards below. One 1-row aggregate
     * per dataset per JVM ([[graft.DimCache]]): the guards run at query
@@ -1045,7 +849,7 @@ object LlmOps {
     graft.DimCache.cached(s"emb-dims:$dir") {
       val r = Tables
         .embeddings(s, dir)
-        .select(embDouble.as("e"))
+        .select(Similarity.embDouble.as("e"))
         .agg(min(size(col("e"))), max(size(col("e"))))
         .head()
       (r.getInt(0), r.getInt(1))
@@ -1073,7 +877,7 @@ object LlmOps {
 
   /** The embeddings as (vec_id, e: array<double>). */
   private[graft] def embVectors(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("e"))
+    Tables.embeddings(s, dir).select(col("vec_id"), Similarity.embDouble.as("e"))
 
   /** The 8 IVF centroids (strided Lehmer pick) as driver arrays: a
     * bounded dimension whose uncached form cost every builder
@@ -1106,7 +910,7 @@ object LlmOps {
       dir: String): IndexedSeq[(Long, IndexedSeq[Double], Int)] =
     graft.DimCache.cached(s"query-sample:$dir:8") {
       Tables.embeddings(s, dir).filter(col("vec_id") < 8)
-        .select(col("vec_id"), embDouble.as("e"), col("label")).collect()
+        .select(col("vec_id"), Similarity.embDouble.as("e"), col("label")).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq, r.getInt(2)))
         .sortBy(_._1).toIndexedSeq
     }
@@ -1215,7 +1019,7 @@ object LlmOps {
   private def simAnnLshBuckets(s: SparkSession, dir: String): DataFrame =
     Tables
       .embeddings(s, dir)
-      .select(col("vec_id"), embDouble.as("e"))
+      .select(col("vec_id"), Similarity.embDouble.as("e"))
       .select(col("vec_id"), planeBucket8(s, dir).as("bucket"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_vectors"), min(col("vec_id")).as("min_vec_id"))
@@ -1228,6 +1032,13 @@ object LlmOps {
   private def hyperplaneSign(p: Int, j: Int, stride: Int): Double =
     if ((((1103515245L * (p * stride + j) + 12345L) % 2147483648L >> 16) & 1L) == 1L)
       1.0 else -1.0
+
+  /** DuckDB twin of [[hyperplaneSign]] at the seed index `seed`, an SQL
+    * expression such as `p * 1024 + j`.
+    */
+  private def hyperplaneSignSql(seed: String): String =
+    s"(CASE WHEN ((1103515245 * ($seed) + 12345) % 2147483648 >> 16) & 1 = 1 " +
+      "THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)"
 
   /** Planes 0 until n as literal arrays of their `dims` signs: each
     * projection is then one native DotF64 pass instead of a `dims`-term
@@ -1269,7 +1080,7 @@ object LlmOps {
     * `(dot > 0) * (1 << p)` sum.
     */
   private val simAnnLshBucketsSql =
-    """WITH e AS (
+    s"""WITH e AS (
       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
       |  FROM embeddings),
       |b AS (
@@ -1278,7 +1089,7 @@ object LlmOps {
       |      CASE WHEN
       |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
       |          list_transform(range(0, len(e)), j ->
-      |            e[j + 1] * (CASE WHEN ((1103515245 * (p * 1024 + j) + 12345) % 2147483648 >> 16) & 1 = 1 THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END))),
+      |            e[j + 1] * ${hyperplaneSignSql("p * 1024 + j")})),
       |          (a, v) -> a + v) > CAST(0.0 AS DOUBLE)
       |      THEN CAST(1 AS INTEGER) << p ELSE 0 END)),
       |      (a, v) -> a + v) AS bucket
@@ -1298,62 +1109,37 @@ object LlmOps {
     * Recall at the similarity threshold (0.4 here — the synthetic embeddings are near-orthogonal, so "near-dup" is data-relative) is 1-(1-p₄)² ≈ 0.8-0.95 (p = 1-θ/π per plane) —
     * the standard SRP-LSH trade. 100 TB note: planes-per-band tunes
     * bucket granularity (4 bits → 16 buckets/band here; production sizes
-    * 16-24 bits so buckets stay executor-local), and the hot-bucket cap
-    * of `lshCandidatePairs` applies unchanged if the embedding space is
-    * degenerate.
+    * 16-24 bits so buckets stay executor-local), and the banding core's
+    * hot-bucket cap (200 vectors) bounds a degenerate embedding region;
+    * the oracle mirrors the cap.
     */
   private def dedupEmbCosine(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.DotF64.dotf64
-    import org.apache.spark.sql.expressions.Window
     // 2 bands × 4 planes of stride 64, the first plane of a band at the
     // highest bit (the oracle's acc*2+bit fold)
     val planes = hyperplanes(8, 64, 64)
     def bandBucket(band: Int): Column =
       signBits(col("e"), planes.slice(band * 4, band * 4 + 4), i => 1 << (3 - i))
-    val bucketArr = array(bandBucket(0), bandBucket(1))
     // The plane arrays are exactly 64-wide: DotF64 folds min(len) terms,
     // so a wider embedding table would SILENTLY project onto the first
     // 64 dims (both engines agree — the oracle stays green while bucket
     // quality quietly degrades). Fail loudly instead.
     val dims = uniformDims(s, dir, "dedupEmbCosine planes")
     require(dims == 64, s"dedupEmbCosine planes are built for 64-dim embeddings, got $dims")
-    val banded0 = Tables
-      .embeddings(s, dir)
-      .select(col("vec_id"), embDouble.as("e"))
-      // squared norm hoisted per vector (identical arithmetic to the
-      // per-pair form, just computed once); native dot = the oracle's
-      // ascending-index fold, bit for bit
-      .select(col("vec_id"), col("e"), dotf64(col("e"), col("e")).as("n2"),
-        posexplode(bucketArr).as(Seq("band", "bucket")))
-    // hot-bucket cap, same shape as the MinHash LSH pipeline: a
-    // degenerate embedding region (all-zero vectors, one dominant
-    // cluster) would make a single bucket quadratic; the windowed count
-    // rides the (band, bucket) exchange the self-join needs anyway.
-    // Mirrored in the oracle, so the cap is part of the checked
-    // semantics, not a silent drop.
-    val e = banded0
-      .withColumn("bucket_n",
-        count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
-      .filter(col("bucket_n") <= 200)
-      .drop("bucket_n")
-    val a = e.select(col("band"), col("bucket"), col("vec_id").as("id_a"),
-      col("e").as("ea"), col("n2").as("na2"))
-    val b = e.select(col("band"), col("bucket"), col("vec_id").as("id_b"),
-      col("e").as("eb"), col("n2").as("nb2"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(
-        col("id_a"),
-        col("id_b"),
-        (dotf64(col("ea"), col("eb")) / (sqrt(col("na2")) * sqrt(col("nb2"))))
-          .as("cos"))
+    // squared norm hoisted per vector (identical arithmetic to the
+    // per-pair form, just computed once); native dot = the oracle's
+    // ascending-index fold, bit for bit
+    val sigs = embVectors(s, dir).select(col("vec_id"), col("e"), dotf64(col("e"), col("e")).as("n2"))
+    Banding.candidatePairs(sigs, "vec_id", Seq("e", "n2"),
+        array(bandBucket(0), bandBucket(1)), maxBucket = 200)
+      .select(col("id_a"), col("id_b"),
+        (dotf64(col("e_a"), col("e_b")) / (sqrt(col("n2_a")) * sqrt(col("n2_b")))).as("cos"))
       .filter(col("cos") >= 0.4)
       .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cosine_6dp"))
-      .distinct()
   }
 
   private val dedupEmbCosineSql =
-    """WITH e00 AS (
+    s"""WITH e00 AS (
       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
       |  FROM embeddings),
       |e0 AS (
@@ -1367,7 +1153,7 @@ object LlmOps {
       |      CASE WHEN
       |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
       |          list_transform(range(0, 64), j ->
-      |            e[j + 1] * (CASE WHEN ((1103515245 * ((band * 4 + i) * 64 + j) + 12345) % 2147483648 >> 16) & 1 = 1 THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END))),
+      |            e[j + 1] * ${hyperplaneSignSql("(band * 4 + i) * 64 + j")})),
       |          (a, v) -> a + v)
       |        > CAST(0.0 AS DOUBLE) THEN 1 ELSE 0 END)),
       |      (acc, bit) -> acc * 2 + bit) AS bucket
@@ -1402,7 +1188,7 @@ object LlmOps {
     */
   private def simIvfTopk(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), embDouble.as("embedding"))
+    val emb = Tables.embeddings(s, dir).select(col("vec_id"), Similarity.embDouble.as("embedding"))
     // the cached arrays rebuild `cents` as a LocalRelation, so the probe
     // stage plans with zero extra jobs
     val cRows = ivfCentroids(s, dir)
@@ -1585,7 +1371,7 @@ object LlmOps {
   }
 
   private val simLshRecallSql =
-    """WITH e0 AS (
+    s"""WITH e0 AS (
       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
       |  FROM embeddings),
       |e1 AS (
@@ -1596,7 +1382,7 @@ object LlmOps {
       |      CASE WHEN
       |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
       |          list_transform(range(0, 64), j ->
-      |            e[j + 1] * (CASE WHEN ((1103515245 * (i * 64 + j) + 12345) % 2147483648 >> 16) & 1 = 1 THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END))),
+      |            e[j + 1] * ${hyperplaneSignSql("i * 64 + j")})),
       |          (a, v) -> a + v)
       |        > CAST(0.0 AS DOUBLE) THEN 1 ELSE 0 END)),
       |      (acc, bit) -> acc * 2 + bit) AS bucket
@@ -3012,7 +2798,7 @@ object LlmOps {
     */
   private def clusterKmeansStep(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), embDouble.as("embedding"))
+      .select(col("vec_id"), Similarity.embDouble.as("embedding"))
     val cRows = ivfCentroids(s, dir)
     Similarity.assignCells(emb, cRows)
       .select(col("cell_id"), posexplode(col("e")).as(Seq("dim", "x")))
@@ -3102,7 +2888,7 @@ object LlmOps {
   private def dedupSemanticKeep(s: SparkSession, dir: String): DataFrame = {
     uniformDims(s, dir, "dedupSemanticKeep")
     val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), embDouble.as("embedding"))
+      .select(col("vec_id"), Similarity.embDouble.as("embedding"))
     val cRows = ivfCentroids(s, dir)
     Similarity.semanticDedupKeep(emb, cRows, tau = 0.35)
   }
@@ -3189,7 +2975,7 @@ object LlmOps {
   private def decontaminateSemantic(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.DotF64.dotf64
     val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"), embDouble.as("e"))
+      .select(col("vec_id"), col("label"), Similarity.embDouble.as("e"))
     val bench = emb.filter(col("label") === 7)
       .select(col("e").as("be"))
       .select(col("be"), sqrt(dotf64(col("be"), col("be"))).as("bn"))
@@ -3343,7 +3129,7 @@ object LlmOps {
     */
   private def simHardNegatives(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), embDouble.as("e"), col("label"))
+      .select(col("vec_id"), Similarity.embDouble.as("e"), col("label"))
     val qRows = querySample(s, dir)
     val qIds = array(qRows.map(r => lit(r._1)): _*)
     val qLabels = array(qRows.map(r => lit(r._3)): _*)
@@ -3697,7 +3483,7 @@ object LlmOps {
   private def embQuantize(s: SparkSession, dir: String): DataFrame =
     Tables
       .embeddings(s, dir)
-      .select(col("vec_id"), embDouble.as("e"))
+      .select(col("vec_id"), Similarity.embDouble.as("e"))
       .select(col("vec_id"), col("e"),
         expr("array_max(transform(e, x -> abs(x)))").as("scale"))
       .select(col("vec_id"), col("e"), col("scale"),
@@ -3769,7 +3555,7 @@ object LlmOps {
     val bucket = planeBucket8(s, dir)
     val emb = Tables
       .embeddings(s, dir)
-      .select(col("vec_id"), embDouble.as("e"))
+      .select(col("vec_id"), Similarity.embDouble.as("e"))
       .select(col("vec_id"), col("e"), bucket.as("bucket"))
     val sums = emb
       .select(col("bucket"), posexplode(col("e")).as(Seq("j", "x")))
@@ -3801,7 +3587,7 @@ object LlmOps {
     * same ascending dist² fold, same (dist2, vec_id) keeper ranking.
     */
   private val dedupSemanticSql =
-    """WITH e0 AS (
+    s"""WITH e0 AS (
       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
       |  FROM embeddings),
       |b AS (
@@ -3810,7 +3596,7 @@ object LlmOps {
       |      CASE WHEN
       |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
       |          list_transform(range(0, len(e)), j ->
-      |            e[j + 1] * (CASE WHEN ((1103515245 * (p * 1024 + j) + 12345) % 2147483648 >> 16) & 1 = 1 THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END))),
+      |            e[j + 1] * ${hyperplaneSignSql("p * 1024 + j")})),
       |          (a, v) -> a + v) > CAST(0.0 AS DOUBLE)
       |      THEN CAST(1 AS INTEGER) << p ELSE 0 END)),
       |      (a, v) -> a + v) AS bucket

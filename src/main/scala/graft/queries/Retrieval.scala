@@ -550,7 +550,7 @@ object Retrieval {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("lex_rank"))
     val emb = Tables.embeddings(s, dir).select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
+      graft.operators.Similarity.embDouble.as("e"))
     // query norm hoisted into the 1-row broadcast (r21): sqrt(qe·qe) is
     // constant per query but was re-evaluated for every corpus row; the
     // product sqrt(e·e) * qn multiplies the same two doubles in the

@@ -738,7 +738,7 @@ object StreamingGate {
         .select(col("vec_id"),
           expr("timestamp'2024-01-01 00:00:00' + INTERVAL 1 SECOND * vec_id")
             .as("ts"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("embedding"))
+          graft.operators.Similarity.embDouble.as("embedding"))
         .orderBy(col("vec_id"))
         .coalesce(1).write.mode("overwrite").parquet(t)
       t
@@ -906,27 +906,7 @@ object StreamingGate {
     s"""WITH all_docs AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL SELECT doc_id + 1000000, text FROM documents),
-      |grams AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(1, greatest(len(string_split(text, ' ')) - 2, 0) + 1),
-      |      i -> concat(string_split(text, ' ')[i], '_',
-      |                  string_split(text, ' ')[i + 1], '_',
-      |                  string_split(text, ' ')[i + 2]))) AS tk
-      |  FROM all_docs),
-      |prehashed AS (
-      |  SELECT doc_id,
-      |    list_transform(tk, g ->
-      |      list_reduce(
-      |        list_prepend(CAST(0 AS BIGINT),
-      |          list_transform(range(1, length(g) + 1),
-      |                         i -> CAST(ascii(substring(g, i, 1)) AS BIGINT))),
-      |        (h, c) -> (h * 31 + c) % 1000000007)) AS pp,
-      |    list_transform(tk, g ->
-      |      list_reduce(
-      |        list_prepend(CAST(1 AS BIGINT), range(1, length(g) + 1)),
-      |        (w, i) -> (w * 31) % 1000000007)) AS ww
-      |  FROM grams),
+      |${LlmOps.prehashCtes("all_docs")},
       |sigs AS (
       |  SELECT CASE WHEN coalesce(len(pp), 0) = 0
       |    THEN 'doc:' || CAST(doc_id AS VARCHAR)

@@ -44,7 +44,6 @@ class AnalyticsSpec extends AnyFunSuite {
   }
 
   test("TWAP stays inside each day's value range") {
-    import org.apache.spark.sql.expressions.Window
     val ev = Tables.events(spark, sf)
       .select(col("user_id"),
         expr("unix_micros(ts) div 86400000000").as("day"),
@@ -400,5 +399,39 @@ class AnalyticsSpec extends AnyFunSuite {
         (r.getAs[Long]("total_weight"), r.getAs[Double]("wmedian_price")))
       .toMap
     assert(got == Map("A" -> ((8L, 5.0)), "B" -> ((8L, 2.0))), got.toString)
+  }
+
+  // The two registry rows below have no oracle (the digest's centroids
+  // and Spark's sampler RNG are not replayable in DuckDB), so their
+  // contracts are pinned here.
+
+  test("agg_tdigest_quantiles: rank error against exact quantiles within 0.02") {
+    // the same rank measure and bound as the one-sided oracle row
+    // agg_tdigest_vs_exact: the share of the group at or below the estimate
+    val prices = Tables.lineitem(spark, sf)
+      .select(col("l_returnflag"), col("l_extendedprice").cast("double"))
+      .collect().groupBy(_.getString(0))
+      .map { case (rf, rs) => rf -> rs.map(_.getDouble(1)) }
+    val rows = SparkEntry.queries("agg_tdigest_quantiles")(spark, sf).collect()
+    assert(rows.map(_.getString(0)).toSet == prices.keySet)
+    for (r <- rows; (q, i) <- Seq(0.5, 0.9, 0.99).zipWithIndex) {
+      val ps = prices(r.getString(0))
+      val rank = ps.count(_ <= r.getDouble(i + 1)).toDouble / ps.length
+      assert(math.abs(rank - q) <= 0.02,
+        f"${r.getString(0)} q=$q: estimate ${r.getDouble(i + 1)} sits at rank $rank%.4f")
+    }
+  }
+
+  test("sample_rows: about 10% of orders, and the same rows on every call") {
+    val n = Tables.orders(spark, sf).count()
+    val a = SparkEntry.queries("sample_rows")(spark, sf)
+    val b = SparkEntry.queries("sample_rows")(spark, sf)
+    // Bernoulli(0.1) count: within 4 standard deviations of n/10
+    val k = a.count()
+    val sd = math.sqrt(n * 0.1 * 0.9)
+    assert(math.abs(k - n * 0.1) <= 4 * sd, s"$k of $n rows sampled")
+    assert(k > 0)
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+      "the seeded sample must return the same rows on every call")
   }
 }

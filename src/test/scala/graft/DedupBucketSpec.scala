@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Dedup
+import graft.operators.{Banding, Dedup}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -118,6 +118,34 @@ class DedupBucketSpec extends AnyFunSuite {
     assert(!cappedPairs.exists { case (a, b) => a <= 40L && b <= 40L })
     // ...while the genuine near-dup pair in a small bucket survives
     assert(cappedPairs.contains((100L, 101L)))
+  }
+
+  test("banding core: a bucket of exactly maxBucket is kept, one more is dropped") {
+    // one band: bucket 7 holds 3 ids, bucket 8 holds 4
+    val sigs = spark
+      .createDataFrame((1L to 3L).map(i => (i, 7L)) ++ (11L to 14L).map(i => (i, 8L)))
+      .toDF("id", "g")
+    def pairs(maxBucket: Int): Set[(Long, Long)] =
+      Banding.candidatePairs(sigs, "id", Seq("g"), array(col("g")), maxBucket)
+        .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
+    val small = Set((1L, 2L), (1L, 3L), (2L, 3L))
+    val large = for (a <- 11L to 14L; b <- a + 1 to 14L) yield (a, b)
+    assert(pairs(3) == small)
+    assert(pairs(4) == small ++ large)
+    assert(pairs(2).isEmpty)
+  }
+
+  test("banding core: a pair sharing several bands comes out once, payloads by id") {
+    // ids 2 and 5 share both bands; id 9 shares band 1 with them only
+    val sigs = spark
+      .createDataFrame(Seq((5L, 1L, 1L, "p5"), (2L, 1L, 1L, "p2"), (9L, 2L, 1L, "p9")))
+      .toDF("id", "g", "h", "p")
+    val rows = Banding.candidatePairs(sigs, "id", Seq("p"),
+        array(col("g"), col("h")), maxBucket = 10)
+      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"),
+        r.getAs[String]("p_a"), r.getAs[String]("p_b")))
+    assert(rows.sortBy(r => (r._1, r._2)).toSeq ==
+      Seq((2L, 5L, "p2", "p5"), (2L, 9L, "p2", "p9"), (5L, 9L, "p5", "p9")))
   }
 
   test("ngram-jaccard verify stage: hot-bucket cap bounds per-bucket pairs") {

@@ -16,10 +16,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class EagerCutSpec extends AnyFunSuite {
   import TestSpark._
 
-  // the shared tf consumers and the three LSH candidate pipelines
+  // the LSH rows that run the banding core's self-join
+  private val lshRows = Seq("dedup_minhash_lsh", "dedup_minhash_lsh_portable",
+    "dedup_ngram_jaccard", "dedup_containment", "dedup_emb_cosine")
+
+  // the shared tf consumers and the LSH rows
   private val eagerCuts = Seq("text_bm25_topk", "text_snippet_extract",
-    "text_query_expansion", "dedup_minhash_lsh", "dedup_minhash_lsh_portable",
-    "dedup_ngram_jaccard", "dedup_containment")
+    "text_query_expansion") ++ lshRows
 
   test("every shared cut is materialized when the builder returns") {
     eagerCuts.foreach { q =>
@@ -27,6 +30,19 @@ class EagerCutSpec extends AnyFunSuite {
         .collect { case l: LogicalRDD => l.rdd }
       assert(cuts.nonEmpty, s"$q: no lineage cut in the plan")
       assert(cuts.forall(_.isCheckpointed), s"$q: a cut is still lazy when the builder returns")
+    }
+  }
+
+  test("each LSH row carries only the banding core's two cuts") {
+    // the core cuts the signature frame and the capped (band, bucket)
+    // frame; an RDD names the source line that created it, so a cut
+    // taken anywhere else shows up by its call site
+    lshRows.foreach { q =>
+      val cuts = SparkEntry.queries(q)(spark, sf).queryExecution.analyzed
+        .collect { case l: LogicalRDD => l.rdd }
+        .distinctBy(_.id)
+      assert(cuts.size == 2 && cuts.forall(_.toString.contains("at Banding.scala:")),
+        s"$q: expected the banding core's two cuts, got ${cuts.mkString("; ")}")
     }
   }
 

@@ -320,7 +320,7 @@ class ExpressionsSpec extends AnyFunSuite {
     // element rounding sequence (subtract, multiply, add), ascending.
     import graft.functions.L2SqF64.l2sqf64
     val rnd = new scala.util.Random(7)
-    val rows = (1 to 64).map { i =>
+    val rows = (1 to 64).map { _ =>
       val n = 1 + rnd.nextInt(96)
       (Seq.fill(n)(rnd.nextDouble() * 2e3 - 1e3),
         Seq.fill(n)(rnd.nextDouble() * 2e3 - 1e3))

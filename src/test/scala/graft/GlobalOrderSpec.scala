@@ -265,7 +265,7 @@ class GlobalOrderSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       GlobalOrder.groupedOrderStats(
         fx, Seq("seg"), col("x"), lit(0.5),
-        Seq("m"), tot => Seq(1L), "tot")
+        Seq("m"), _ => Seq(1L), "tot")
     }
     // target outside [1, tot]
     val exT = intercept[Throwable] {
@@ -278,7 +278,7 @@ class GlobalOrderSpec extends AnyFunSuite {
     val exCard = intercept[Throwable] {
       GlobalOrder.groupedOrderStats(
         fx, Seq("c_custkey"), col("x"), lit(1),
-        Seq("m"), tot => Seq(1L), "tot", maxGroups = 16)
+        Seq("m"), _ => Seq(1L), "tot", maxGroups = 16)
     }
     assert(messages(exCard).exists(_.contains("maxGroups=16")))
   }
@@ -316,7 +316,6 @@ class GlobalOrderSpec extends AnyFunSuite {
       val q = n / k; val r = n % k; val cut = r * (q + 1)
       if (rn <= cut) (rn - 1) / (q + 1) + 1 else r + (rn - cut - 1) / q + 1
     }
-    import spark.implicits._
     for (n <- Seq(1, 2, 3, 4, 5, 7, 12, 97); k <- Seq(2, 3, 4, 7)) {
       val df = spark.range(1, n + 1).select(col("id").as("rn"))
       val got = df
@@ -340,7 +339,6 @@ class GlobalOrderSpec extends AnyFunSuite {
     // partition boundaries (only group ++ tie ++ tiebreak is total) -
     // the stitch logic (dense merge, carried run-head) is exactly what
     // a plain Window computes trivially on one partition.
-    import spark.implicits._
     val n = 5000
     val df = spark.range(n).select(
       (col("id") % 3).cast("string").as("g"),

@@ -153,7 +153,7 @@ class OperatorsSpec extends AnyFunSuite {
     for (width <- Seq(3L, 10L, 100L)) {
       val bucketed = graft.operators.RangeJoin
         .joinRange(probe, iv, "d", "s", "e", width)
-        .select(naive.columns.map(col): _*)
+        .select(naive.columns.toIndexedSeq.map(col): _*)
       assert(bucketed.exceptAll(naive).isEmpty && naive.exceptAll(bucketed).isEmpty,
         s"width=$width diverged")
     }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.{Murmur3x64_128, XxHash32Expr}
-import graft.queries.LlmOps
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed

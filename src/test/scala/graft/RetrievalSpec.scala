@@ -125,7 +125,6 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("query expansion: novel terms, weight recomputes, ranked desc") {
-    import org.apache.spark.sql.functions.col
     val rows = SparkEntry.queries("text_query_expansion")(spark, sf).collect()
     assert(rows.length == 5)
     val bm25Terms = SparkEntry.queries("text_bm25_topk")(spark, sf)

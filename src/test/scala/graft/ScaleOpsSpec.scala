@@ -218,9 +218,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     // force RESTRICTED to the stage-1 candidate set — every point of
     // recall loss is stage 1's Hamming cut, none is the rerank. The
     // twin recomputes both stages driver-side from the collected rows.
-    val all = rows.map { r =>
-      (r.getSeq[Double](0).toIndexedSeq, r.getLong(1), r.getLong(2))
-    }
     val byId = emb.collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toIndexedSeq).toMap
     def cosD(a: IndexedSeq[Double], b: IndexedSeq[Double]): Double = {
@@ -542,7 +539,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     val stepped = Similarity.kmeansStep(emb, dup)
     // all duplicated cells lose every assignment to the first (ties to
     // lowest cell_id), so cells 1..7 must come back unchanged
-    assert(stepped.tail.forall { case (id, v) => v == c.head._2 },
+    assert(stepped.tail.forall { case (_, v) => v == c.head._2 },
       "empty cells should retain their previous centroid")
     emb.unpersist()
   }
