@@ -563,9 +563,9 @@ object LlmOps {
     */
   private def incrementalLshPairs(
       s: SparkSession, deltaDocs: DataFrame, idxDir: String): DataFrame = {
-    val delta = Banding.aSide(
-      Banding.bands(prehashedShingles(deltaDocs), "doc_id", Seq("hs"), polyBandBuckets),
-      "doc_id", Seq("hs"))
+    val delta =
+      Banding.bands(prehashedShingles(deltaDocs), "doc_id", Seq("hs"), polyBandBuckets)
+        .select(col("band"), col("bucket"), col("doc_id").as("id_a"), col("hs").as("hs_a"))
     val joined = delta.join(
       s.read.parquet(idxDir + "/buckets").withColumnRenamed("doc_id", "id_b"),
       Seq("band", "bucket"))
@@ -1111,7 +1111,9 @@ object LlmOps {
     * bucket granularity (4 bits → 16 buckets/band here; production sizes
     * 16-24 bits so buckets stay executor-local), and the banding core's
     * hot-bucket cap (200 vectors) bounds a degenerate embedding region;
-    * the oracle mirrors the cap.
+    * the oracle mirrors the cap. The cosine is cheaper than the pair
+    * distinct over 64-double payloads, so the row takes the core's
+    * verify-then-distinct route ([[Banding.verifiedPairs]]).
     */
   private def dedupEmbCosine(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.DotF64.dotf64
@@ -1130,12 +1132,13 @@ object LlmOps {
     // per-pair form, just computed once); native dot = the oracle's
     // ascending-index fold, bit for bit
     val sigs = embVectors(s, dir).select(col("vec_id"), col("e"), dotf64(col("e"), col("e")).as("n2"))
-    Banding.candidatePairs(sigs, "vec_id", Seq("e", "n2"),
-        array(bandBucket(0), bandBucket(1)), maxBucket = 200)
-      .select(col("id_a"), col("id_b"),
-        (dotf64(col("e_a"), col("e_b")) / (sqrt(col("n2_a")) * sqrt(col("n2_b")))).as("cos"))
-      .filter(col("cos") >= 0.4)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cosine_6dp"))
+    Banding.verifiedPairs(sigs, "vec_id", Seq("e", "n2"),
+        array(bandBucket(0), bandBucket(1)), maxBucket = 200) {
+      _.select(col("id_a"), col("id_b"),
+          (dotf64(col("e_a"), col("e_b")) / (sqrt(col("n2_a")) * sqrt(col("n2_b")))).as("cos"))
+        .filter(col("cos") >= 0.4)
+        .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cosine_6dp"))
+    }
   }
 
   private val dedupEmbCosineSql =

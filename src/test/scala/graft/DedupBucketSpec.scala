@@ -148,6 +148,36 @@ class DedupBucketSpec extends AnyFunSuite {
       Seq((2L, 5L, "p2", "p5"), (2L, 9L, "p2", "p9"), (5L, 9L, "p5", "p9")))
   }
 
+  test("banding core: with no payload the pairs are the distinct id pairs") {
+    val sigs = spark.createDataFrame(Seq((5L, 1L, 1L), (2L, 1L, 1L), (9L, 2L, 1L)))
+      .toDF("id", "g", "h")
+    val pairs = Banding.candidatePairs(sigs, "id", Nil, array(col("g"), col("h")), 10)
+    // ids 2 and 5 share both bands and still come out once
+    assert(pairs.collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).sorted.toSeq ==
+      Seq((2L, 5L), (2L, 9L), (5L, 9L)))
+  }
+
+  test("banding core: the verify-first route sees both payloads and dedups after") {
+    // ids 2 and 5 share both bands, so they reach the verifier twice
+    val sigs = spark
+      .createDataFrame(Seq((5L, 1L, 1L, "p5"), (2L, 1L, 1L, "p2"), (9L, 2L, 1L, "p9"),
+        (7L, 3L, 3L, "p7")))
+      .toDF("id", "g", "h", "p")
+    var joinedRows = 0L
+    val rows = Banding.verifiedPairs(sigs, "id", Seq("p"), array(col("g"), col("h")), 10) {
+      joined =>
+        joinedRows = joined.count()
+        joined.select(col("id_a"), col("id_b"), concat(col("p_a"), col("p_b")).as("pp"))
+    }.collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[String]("pp")))
+    assert(joinedRows == 4)
+    assert(rows.sortBy(r => (r._1, r._2)).toSeq ==
+      Seq((2L, 5L, "p2p5"), (2L, 9L, "p2p9"), (5L, 9L, "p5p9")))
+    // a bucket over the cap is dropped on this route too
+    val capped = Banding.verifiedPairs(sigs, "id", Seq("p"), array(col("g"), col("h")), 2)(
+      _.select(col("id_a"), col("id_b")))
+    assert(capped.collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((2L, 5L)))
+  }
+
   test("ngram-jaccard verify stage: hot-bucket cap bounds per-bucket pairs") {
     // same degenerate-template corpus as the LSH test: without the cap the
     // 40-doc template bucket yields 40*39/2 = 780 quadratic pairs

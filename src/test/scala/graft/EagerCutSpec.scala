@@ -16,9 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class EagerCutSpec extends AnyFunSuite {
   import TestSpark._
 
-  // the LSH rows that run the banding core's self-join
+  // the LSH rows that run the banding core's distinct-first route
   private val lshRows = Seq("dedup_minhash_lsh", "dedup_minhash_lsh_portable",
-    "dedup_ngram_jaccard", "dedup_containment", "dedup_emb_cosine")
+    "dedup_ngram_jaccard", "dedup_containment")
 
   // the shared tf consumers and the LSH rows
   private val eagerCuts = Seq("text_bm25_topk", "text_snippet_extract",
@@ -33,16 +33,17 @@ class EagerCutSpec extends AnyFunSuite {
     }
   }
 
-  test("each LSH row carries only the banding core's two cuts") {
-    // the core cuts the signature frame and the capped (band, bucket)
-    // frame; an RDD names the source line that created it, so a cut
-    // taken anywhere else shows up by its call site
-    lshRows.foreach { q =>
+  test("each LSH row carries only the banding core's cuts") {
+    // the distinct-first route cuts the signature frame and the capped
+    // (band, bucket) frame, the verify-first route of dedup_emb_cosine
+    // cuts nothing; an RDD names the source line that created it, so a
+    // cut taken anywhere else shows up by its call site
+    (lshRows.map(_ -> 2) :+ ("dedup_emb_cosine" -> 0)).foreach { case (q, n) =>
       val cuts = SparkEntry.queries(q)(spark, sf).queryExecution.analyzed
         .collect { case l: LogicalRDD => l.rdd }
         .distinctBy(_.id)
-      assert(cuts.size == 2 && cuts.forall(_.toString.contains("at Banding.scala:")),
-        s"$q: expected the banding core's two cuts, got ${cuts.mkString("; ")}")
+      assert(cuts.size == n && cuts.forall(_.toString.contains("at Banding.scala:")),
+        s"$q: expected the banding core's $n cuts, got ${cuts.mkString("; ")}")
     }
   }
 
