@@ -149,16 +149,12 @@ object AmplifiedBench {
       }: _*)
     }.reduce(_ unionByName _)
 
-  /** Where the factor-`f` copy of `sfDir` lives. */
-  private def amplifiedDir(sfDir: String, f: Int): String =
-    DimCache.artifactPath(s"amp${f}x", sfDir)
-
-  /** Writes the factor-amplified dataset as `{table}.parquet` under
-    * [[amplifiedDir]], honoring the same directory contract as
-    * /root/testdata, so every registered query runs on it unchanged.
+  /** Writes the factor-amplified dataset as `{table}.parquet` under this
+    * JVM's artifact dir `amp<f>x`, with the input dir's layout, so every
+    * registered query runs on it unchanged.
     */
   private def buildAmplified(spark: SparkSession, sfDir: String, f: Int): String = {
-    val out = amplifiedDir(sfDir, f)
+    val out = DimCache.artifactPath(s"amp${f}x", sfDir)
     val cust = Tables.customer(spark, sfDir)
     val ord = Tables.orders(spark, sfDir)
     val sup = Tables.supplier(spark, sfDir)
@@ -194,7 +190,8 @@ object AmplifiedBench {
   }
 
   /** A fresh-JVM adjudication child is launched with this as its fifth
-    * argument: it reuses the parent's dataset and never adjudicates.
+    * argument and the parent's amplified dataset dir as its sixth: it
+    * reuses that dataset and never adjudicates.
     */
   private val ChildFlag = "--adjudication-child"
 
@@ -204,13 +201,16 @@ object AmplifiedBench {
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val only = args.lift(3).map(_.split(",").map(_.trim).toSet)
     val child = args.lift(4).contains(ChildFlag)
+    require(!child || args.length > 5, s"$ChildFlag needs the amplified dataset dir")
     val spark = Harness.session()
 
     // The child re-measures one query on the identical dataset the sweep
     // just used: rebuilding it would waste minutes and break "same input,
-    // fresh heap" as the only changed variable.
+    // fresh heap" as the only changed variable. The dir is under the
+    // parent's artifact root, which the child cannot derive, so the
+    // parent passes it.
     val ampDir =
-      if (child) amplifiedDir(sfDir, factor)
+      if (child) args(5)
       else {
         val (dir, built) = Harness.measure("amplify")(buildAmplified(spark, sfDir, factor))
         System.err.println(
@@ -277,7 +277,7 @@ object AmplifiedBench {
       val cmd = (Seq(javaBin) ++ jvmFlags ++ Seq(
         "-cp", System.getProperty("java.class.path"),
         "graft.AmplifiedBench", sfDir, factor.toString, reps.toString,
-        query, ChildFlag)).asJava
+        query, ChildFlag, ampDir)).asJava
       val pb = new ProcessBuilder(cmd)
       pb.environment().put("SPARK_GRAFT_CPUS", Harness.cpus.toString)
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)

@@ -56,12 +56,15 @@ object DimCache {
       .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
 
   /** Where the write-once artifact `kind` of `dir` lives:
-    * `<java.io.tmpdir>/graft_<kind>_<fingerprint>`. Keyed on the dir
-    * alone, so a re-run overwrites its own copy instead of adding one;
-    * concurrent JVMs on the SAME dir are not a supported mode.
+    * `<root>/<kind>_<fingerprint>` under this JVM's own artifact root, a
+    * [[tempDir]] deleted at exit. Two JVMs on the same dir never write
+    * one path (a shared path failed one writer with `_temporary/0 does
+    * not exist`), and no run leaves a copy behind.
     */
   def artifactPath(kind: String, dir: String): String =
-    System.getProperty("java.io.tmpdir") + s"/graft_${kind}_${fingerprint(dir)}"
+    s"$artifactRoot/${kind}_${fingerprint(dir)}"
+
+  private lazy val artifactRoot: String = tempDir("graft_artifacts_")
 
   /** Scratch dirs, recursively deleted (best effort) at JVM exit, so
     * repeated gate and audit runs do not pile staged copies up in the

@@ -87,21 +87,18 @@ object Banding {
     * column `p`.
     *
     * Lineage cuts: the signature frame and the capped bands are each
-    * materialized once. Without them, column pruning specializes the
-    * self-join's two branches into different subtrees (the a side keeps
-    * the payload, the b side does not), so neither the exchange nor the
-    * scan is reused and the signatures are computed once per branch
-    * plus once for the b-side re-attach. Both cuts are eager, for the
-    * reason the shared tf cut is (`Retrieval.tfOverShared`): lazy, the
-    * first consumer job materialized each cut and dropped its plan
-    * while AQE's sibling consumers still reported that plan's metrics,
-    * and the driver logged "Failed to update accumulator".
+    * materialized once, as `Materialize.shared` cuts. Without them,
+    * column pruning specializes the self-join's two branches into
+    * different subtrees (the a side keeps the payload, the b side does
+    * not), so neither the exchange nor the scan is reused and the
+    * signatures are computed once per branch plus once for the b-side
+    * re-attach.
     */
   def candidatePairs(sigs: DataFrame, id: String, payload: Seq[String],
       buckets: Column, maxBucket: Int): DataFrame = {
-    val cutSigs = sigs.localCheckpoint()
-    val capped = capHotBuckets(bands(cutSigs, id, payload, buckets), maxBucket)
-      .localCheckpoint()
+    val cutSigs = graft.Materialize.shared(sigs, "Banding.signatures")
+    val capped = graft.Materialize.shared(
+      capHotBuckets(bands(cutSigs, id, payload, buckets), maxBucket), "Banding.cappedBands")
     withB(distinctPairs(selfJoin(capped, id, payload, Nil), payload), cutSigs, id, payload)
   }
 

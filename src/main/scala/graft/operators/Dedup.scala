@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -18,42 +19,23 @@ object Dedup {
   /** pairs(id_a, id_b) → (doc_id, keeper) where keeper is the smallest
     * doc id in the connected near-dup cluster. Singleton docs are their
     * own keeper (absent from the output; join with a default).
+    *
+    * Every frame the loop pins is released when the call returns except
+    * the final labels cut backing the result, and all of them when it
+    * throws (`Materialize.releasing`); each round's scope frees that
+    * round's `hopped` cache once the next labels are materialized.
     */
-  /** Persistent-RDD ids reachable from `r`'s lineage (r included).
-    * private[graft]: the training pipeline's near-dedup stage uses the
-    * same walker to release the LSH candidate stage's lineage-cut
-    * caches (r21) once resolveKeepers has consumed them.
-    */
-  private[graft] def persistedAncestors(r: org.apache.spark.rdd.RDD[_]): Set[Int] = {
-    val seen = scala.collection.mutable.Set.empty[Int]
-    def walk(x: org.apache.spark.rdd.RDD[_]): Unit =
-      if (seen.add(x.id)) x.dependencies.foreach(d => walk(d.rdd))
-    walk(r)
-    seen.toSet
-  }
-
-  def resolveKeepers(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
-    // RDD ids pinned BY THIS CALL (caches + localCheckpoint blocks). We
-    // must not diff the global getPersistentRDDs snapshot instead: caller
-    // caches whose buffers first materialize inside our loop actions would
-    // look "new" and get wrongly unpersisted. Caller-cached buffers that sit
-    // in the input's lineage (and thus in our frames' lineage too) are
-    // excluded via protectedIds.
-    val protectedIds = sc.getPersistentRDDs.keySet ++ persistedAncestors(pairs.rdd)
-    val mine = scala.collection.mutable.Set.empty[Int]
+  def resolveKeepers(pairs: DataFrame, maxIter: Int = 10): DataFrame = Materialize.releasing {
     // Both edge directions via one map-side explode — NOT
     // union(pairs, pairs.swapped), which would execute the (possibly
     // expensive: a whole LSH pipeline) upstream plan twice before the
     // cache materializes.
-    val edges = pairs
+    val edges = Materialize.cached(pairs
       .select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-      .cache()
-    mine ++= (persistedAncestors(edges.rdd) -- protectedIds)
+      .distinct(), "Dedup.edges")
     var labels = edges
       .groupBy(col("src").as("id"))
       .agg(least(min(col("dst")), first(col("src"))).as("label"))
@@ -68,62 +50,47 @@ object Dedup {
       .head().getDecimal(0)
     var prevSum = labelSum(labels)
     while (iter < maxIter && !converged) {
-      // propagate: my new label = min(my label, labels of my neighbors)
-      val neighborLabels = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("label")).as("nlabel"))
-      // cached: BOTH sides of the pointer-doubling self-join below read
-      // hopped — uncached, the join+groupBy propagate plan would execute
-      // twice per round
-      val hopped = labels
-        .join(neighborLabels, Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        .cache()
-      mine ++= (persistedAncestors(hopped.rdd) -- protectedIds)
-      // pointer doubling: shortcut to my label's own label. label(v) is a
-      // reachable id and only ever decreases, so label(label(v)) is also
-      // reachable and ≤ label(v) — taking it keeps the min-of-component
-      // fixed point while letting the known-min frontier double per round
-      // instead of advancing one hop.
-      val parents = hopped
-        .select(col("id").as("label"), col("label").as("plabel"))
-      // localCheckpoint truncates the lineage each round — without it the
-      // plan deepens per iteration (re-resolved from scratch on any
-      // recompute, and analysis cost itself grows superlinearly)
-      val next = hopped
-        .join(parents, Seq("label"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("plabel"), col("label"))).as("label"))
-        .localCheckpoint(false)
-        .cache()
-      mine ++= (persistedAncestors(next.rdd) -- protectedIds)
-      val curSum = labelSum(next) // also materializes the checkpoint
-      hopped.unpersist()
-      labels.unpersist() // predecessor served its two passes; release it
+      val (next, curSum) = Materialize.releasing {
+        // propagate: my new label = min(my label, labels of my neighbors)
+        val neighborLabels = edges
+          .join(labels.withColumnRenamed("id", "dst"), "dst")
+          .groupBy(col("src").as("id"))
+          .agg(min(col("label")).as("nlabel"))
+        // cached: BOTH sides of the pointer-doubling self-join below read
+        // hopped — uncached, the join+groupBy propagate plan would execute
+        // twice per round
+        val hopped = Materialize.cached(labels
+          .join(neighborLabels, Seq("id"), "left")
+          .select(col("id"),
+            least(col("label"), coalesce(col("nlabel"), col("label"))).as("label")),
+          "Dedup.hopped")
+        // pointer doubling: shortcut to my label's own label. label(v) is a
+        // reachable id and only ever decreases, so label(label(v)) is also
+        // reachable and ≤ label(v) — taking it keeps the min-of-component
+        // fixed point while letting the known-min frontier double per round
+        // instead of advancing one hop.
+        val parents = hopped
+          .select(col("id").as("label"), col("label").as("plabel"))
+        // a `step` cut truncates the lineage each round — without it the
+        // plan deepens per iteration (re-resolved from scratch on any
+        // recompute, and analysis cost itself grows superlinearly)
+        val next = Materialize.step(hopped
+          .join(parents, Seq("label"), "left")
+          .select(col("id"),
+            least(col("label"), coalesce(col("plabel"), col("label"))).as("label")),
+          "Dedup.labels")
+        (next, labelSum(next)) // also materializes the cut
+      }
       converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
       labels = next
       iter += 1
     }
-    edges.unpersist()
-    if (!converged) {
-      val persistedNow = sc.getPersistentRDDs
-      mine.foreach(id => persistedNow.get(id).foreach(_.unpersist(false)))
+    if (!converged)
       throw new IllegalStateException(
         s"resolveKeepers did not converge within $maxIter iterations — " +
           s"component diameter exceeds 2^$maxIter; raise maxIter")
-    }
-    val out = labels.select(col("id").as("doc_id"), col("label").as("keeper"))
-    // df.unpersist() frees cache entries but NOT the MEMORY_AND_DISK
-    // blocks localCheckpoint pinned for dead iterations (ContextCleaner
-    // frees those only after GC). Drop every block this call itself pinned
-    // except the ones still backing the returned frame's lineage.
-    val live = persistedAncestors(out.rdd)
-    val persisted = sc.getPersistentRDDs
-    (mine.toSet -- live).foreach(id => persisted.get(id).foreach(_.unpersist(false)))
-    out
+    labels.select(col("id").as("doc_id"), col("label").as("keeper"))
   }
 
   /** Full pipeline: docs + candidate pairs → deduplicated corpus

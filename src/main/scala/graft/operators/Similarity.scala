@@ -845,7 +845,7 @@ object Similarity {
     // re-resolved the whole compound tree per step — measurable driver
     // overhead even though execution was already linear). Values are
     // unchanged: checkpointing only truncates lineage.
-    val xqc = xq.localCheckpoint(false)
+    val xqc = graft.Materialize.step(xq, "Similarity.pcaInput")
     // r21 iteration shape. Two changes, values bit-identical throughout:
     //   1. the projection `ds` is the fused codegen dot (DotI64 — the
     //      same long multiply-add the interpreted zip_with fold

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.Materialize
 import graft.operators.Dedup
 import graft.queries.LlmOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -65,31 +66,16 @@ object TrainingDataPipeline {
   }
 
   /** Stage 4: near-dup dedup via MinHash-LSH candidates + component
-    * resolution (keeps one doc per near-dup cluster).
+    * resolution (keeps one doc per near-dup cluster). The candidate
+    * stage's cuts (signatures, capped bands) are consumed by
+    * resolveKeepers' eager label loop and released on return, so a
+    * long-running pipeline does not hold one signature frame per corpus
+    * pass.
     */
-  def nearDedup(spark: SparkSession, docs: DataFrame, cfg: Config): DataFrame = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val pairs = LlmOps
-      .lshCandidatePairs(docs, maxBucket = cfg.lshMaxBucket)
+  def nearDedup(docs: DataFrame, cfg: Config): DataFrame = Materialize.releasing {
+    Dedup.dedupCorpus(docs, LlmOps.lshCandidatePairs(docs, maxBucket = cfg.lshMaxBucket)
       .filter(col("est_jaccard") >= cfg.lshJaccardThreshold)
-    val keepers = Dedup.resolveKeepers(pairs.select(col("id_a"), col("id_b")))
-    // The LSH candidate stage's lineage-cut caches (sigs + capped bands,
-    // r21) were fully consumed by resolveKeepers' eager label loop, and
-    // keepers is checkpoint-truncated (its .rdd walks a LogicalRDD plan,
-    // no stages to trigger) — release every block this stage newly
-    // pinned except those still backing keepers, so a long-running
-    // pipeline doesn't hold one cached signature frame per corpus pass
-    // (the round-1 judge's stage-cache regression, re-applied to the
-    // candidate stage).
-    val live = Dedup.persistedAncestors(keepers.rdd)
-    val persisted = sc.getPersistentRDDs
-    (persisted.keySet -- before -- live)
-      .foreach(id => persisted.get(id).foreach(_.unpersist(false)))
-    docs
-      .join(keepers, Seq("doc_id"), "left")
-      .filter(col("keeper").isNull || col("keeper") === col("doc_id"))
-      .drop("keeper")
+      .select(col("id_a"), col("id_b")))
   }
 
   /** Stage 5: tokenize into whitespace tokens + wordpiece subwords. */
@@ -161,13 +147,17 @@ object TrainingDataPipeline {
 
   /** Full pipeline; returns (clean corpus with tokens, per-stage counts). */
   def run(spark: SparkSession, docs: DataFrame,
-      cfg: Config = Config()): (DataFrame, Map[String, Long]) = {
-    val q = qualityFilter(docs, cfg).cache()
-    val lang = q.filter(col("lang") === cfg.lang).cache()
-    val exact = exactDedup(lang).cache()
-    val near = nearDedup(spark, exact, cfg).cache()
+      cfg: Config = Config()): (DataFrame, Map[String, Long]) = Materialize.releasing {
+    // Stage caches serve the counts below and the next stage's first
+    // pass; the scope releases them on return except `decon`, which
+    // backs the returned (lazy) tokenized frame.
+    val q = Materialize.cached(qualityFilter(docs, cfg), "TrainingDataPipeline.quality")
+    val lang = Materialize.cached(q.filter(col("lang") === cfg.lang), "TrainingDataPipeline.lang")
+    val exact = Materialize.cached(exactDedup(lang), "TrainingDataPipeline.exact")
+    val near = Materialize.cached(nearDedup(exact, cfg), "TrainingDataPipeline.near")
     val bench = docs.filter(pmod(col("doc_id"), lit(cfg.benchMod)) === 0)
-    val decon = decontaminate(near, bench, cfg.decontaminateGramLen).cache()
+    val decon = Materialize.cached(
+      decontaminate(near, bench, cfg.decontaminateGramLen), "TrainingDataPipeline.decon")
     val packed = packStage(decon, cfg.packBudget)
     val tokenized = tokenizeStage(spark, decon, cfg)
       .join(embedStage(decon), "doc_id")
@@ -180,14 +170,6 @@ object TrainingDataPipeline {
       "after_exact_dedup" -> exact.count(),
       "after_near_dedup" -> near.count(),
       "after_decontamination" -> decon.count())
-    // Intermediate stage caches exist only to serve the counts above and
-    // the downstream stage's first pass — release them so a long-running
-    // job doesn't accumulate one cached corpus per stage. `decon` stays
-    // cached: it backs the returned (lazy) tokenized frame.
-    q.unpersist()
-    lang.unpersist()
-    exact.unpersist()
-    near.unpersist()
     (tokenized, counts)
   }
 }

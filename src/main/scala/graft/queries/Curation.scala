@@ -147,13 +147,13 @@ object Curation {
     // The hashed-gram frame feeds BOTH the distribution build and the
     // scoring join; neither branch has an exchange below it, so without
     // a lineage cut the per-token polyhash ran twice per run (r21, like
-    // the signature cut of Banding.candidatePairs). Checkpoint the
-    // compact pre-explode frame (doc-cardinality rows carrying the hash
-    // arrays).
-    val hashed = Tables.documents(s, dir)
+    // the signature cut of Banding.candidatePairs). Cut the compact
+    // pre-explode frame (doc-cardinality rows carrying the hash arrays);
+    // one action reads it twice, so the cut is eager.
+    val hashed = graft.Materialize.shared(Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
-        graft.functions.PolyHash31.polyhash31(toks).getField("pp").as("hs"))
-      .localCheckpoint(false)
+        graft.functions.PolyHash31.polyhash31(toks).getField("pp").as("hs")),
+      "Curation.dsirHashed")
     val grams = hashed
       .select(col("doc_id"), col("lang"), explode(col("hs")).as("h"))
       .withColumn("b", col("h") % 1024)

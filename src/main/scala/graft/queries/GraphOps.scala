@@ -73,10 +73,10 @@ object GraphOps {
     // recompute re-executes) the whole orders⋈lineitem build, the
     // unrolled 5-iteration plan grows superlinearly in analysis cost,
     // and the bench pays it per rep (r9: 4.3 s / 5.4 GB heap on the
-    // driver). localCheckpoint is the same lineage-cut Dedup's
-    // label-propagation loop uses; at cluster scale this is the
-    // hash-partitioned edge RDD every Pregel round reuses.
-    pagerankIterate(pagerankEdges(orders, lineitem).localCheckpoint(), iters)
+    // driver). At cluster scale this is the hash-partitioned edge RDD
+    // every Pregel round reuses.
+    pagerankIterate(
+      graft.Materialize.shared(pagerankEdges(orders, lineitem), "GraphOps.pagerankEdges"), iters)
   }
 
   /** The iteration path over an already-materialized edge list — what a
@@ -93,18 +93,16 @@ object GraphOps {
       // unknown so Catalyst would default to SMJ and pay a full edge-list
       // sort per iteration; hash-building on the rank partition streams
       // the edges unsorted — the Pregel message-join shape.
-      rank = ew
+      // per-iteration `step` cut: truncates the plan the analyzer
+      // re-resolves per step without forcing an extra job per
+      // iteration — the rank frame is node-cardinality, tiny next to
+      // the edge list. Values unchanged.
+      rank = graft.Materialize.step(ew
         .join(rank.hint("shuffle_hash"), col("src") === col("node"))
         .groupBy(col("dst"))
         .agg(sum(expr("(r * w) div ow")).as("contrib"))
         .select(col("dst").as("node"),
-          (lit(150000L) + expr("(85 * contrib) div 100")).as("r"))
-        // per-iteration lineage cut (the powerIterate pattern, but
-        // LAZY like Dedup's label loop): truncates the plan the
-        // analyzer re-resolves per step without forcing an extra job
-        // per iteration — the rank frame is node-cardinality, tiny
-        // next to the edge list. Values unchanged.
-        .localCheckpoint(false)
+          (lit(150000L) + expr("(85 * contrib) div 100")).as("r")), "GraphOps.ranks")
     }
     rank.select(
       when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
@@ -147,20 +145,17 @@ object GraphOps {
   private def pagerankEdgesTable(s: SparkSession, dir: String): String =
     graft.DimCache.cached(s"pagerank-edges-bkt:$dir") {
       val tbl = s"graft_predges_bkt_${graft.DimCache.fingerprint(dir)}"
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val p = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir") + "/" + tbl)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-      // One materialization feeds both the row count (bucket sizing)
-      // and the write; unpersisted right after — build-time state only.
-      val edges = pagerankEdges(Tables.orders(s, dir), Tables.lineitem(s, dir))
-        .localCheckpoint()
-      val buckets = math.min(4096L,
-        math.max(4L, edges.count() / 256000L)).toInt
-      graft.sources.Bucketed.writeBucketed(
-        edges.repartition(buckets, col("src")), tbl, "src", buckets)
-      edges.unpersist()
+      // One cut feeds both the row count (bucket sizing) and the write;
+      // released right after — build-time state only. The table's files
+      // sit under this JVM's artifact root, so two JVMs never share them.
+      graft.Materialize.releasing {
+        val edges = graft.Materialize.shared(
+          pagerankEdges(Tables.orders(s, dir), Tables.lineitem(s, dir)), "GraphOps.pagerankEdges")
+        val buckets = math.min(4096L,
+          math.max(4L, edges.count() / 256000L)).toInt
+        graft.sources.Bucketed.writeBucketed(edges.repartition(buckets, col("src")), tbl,
+          "src", buckets, Some(graft.DimCache.artifactPath("predges", dir)))
+      }
       tbl
     }
 
@@ -222,7 +217,7 @@ object GraphOps {
     * (long, long) pairs. No driver state, no iteration.
     */
   /** quarter-windowed part co-purchase edges, key-canonical (a < b),
-    * distinct, lineage-cut — shared by the triangle and
+    * distinct — written once, shared by the triangle and
     * label-propagation families so the graph definition can't
     * desynchronize between them.
     */
@@ -240,7 +235,6 @@ object GraphOps {
       .join(inWindow, col("l1.l_orderkey") === col("o_orderkey"))
       .select(col("l1.l_partkey").as("a"), col("l2.l_partkey").as("b"))
       .distinct()
-      .localCheckpoint()
   }
 
   /** The distinct co-purchase edge set as a persisted artifact, written
@@ -268,7 +262,7 @@ object GraphOps {
     val deg = e0.select(col("a").as("v"))
       .unionByName(e0.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
-    val e = e0
+    val e = graft.Materialize.shared(e0
       .join(deg.select(col("v").as("a"), col("d").as("da")), "a")
       .join(deg.select(col("v").as("b"), col("d").as("db")), "b")
       .select(
@@ -277,8 +271,7 @@ object GraphOps {
           .otherwise(col("b")).as("s"),
         when(col("da") < col("db") ||
           (col("da") === col("db") && col("a") < col("b")), col("b"))
-          .otherwise(col("a")).as("t"))
-      .localCheckpoint()
+          .otherwise(col("a")).as("t")), "GraphOps.orientedEdges")
     // wedges enumerate at each vertex's OUT-edges (bounded O(√m) by the
     // degree orientation); the closing edge is probed in the
     // key-canonical a<b set — NOT the oriented set, whose direction
@@ -319,7 +312,7 @@ object GraphOps {
     * the edge list (reusable edge partitioning — the Pregel shape
     * PageRank uses) + one (node, label) count aggregate + a top-1-per-
     * node window (WindowGroupLimit prunes map-side). Labels are
-    * node-cardinality frames, localCheckpoint'd lazily per iteration
+    * node-cardinality frames, `step`-cut per iteration
     * like PageRank's ranks. Fixed iteration count, no convergence
     * collect.
     */
@@ -334,23 +327,21 @@ object GraphOps {
     */
   private def labelAssignments(s: SparkSession, dir: String): DataFrame = {
     val e0 = s.read.parquet(coPurchaseEdgesDir(s, dir))
-    val edges = e0.unionByName(
-      e0.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
+    val edges = graft.Materialize.shared(
+      e0.unionByName(e0.select(col("b").as("a"), col("a").as("b"))), "GraphOps.labelEdges")
     var labels = edges.select(col("a").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
     for (_ <- 1 to 3) {
       val w = Window.partitionBy(col("node"))
         .orderBy(col("c").desc, col("lbl").asc)
-      labels = edges
+      labels = graft.Materialize.step(edges
         .join(labels.hint("shuffle_hash"), col("b") === col("node"))
         .groupBy(col("a"), col("lbl"))
         .agg(count(lit(1)).as("c"))
         .select(col("a").as("node"), col("lbl"), col("c"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
-        .select(col("node"), col("lbl"))
-        .localCheckpoint(false)
+        .select(col("node"), col("lbl")), "GraphOps.labels")
     }
     labels
   }

@@ -697,14 +697,14 @@ object LlmOps {
     // scan (Scans.fanOut — no-op at production split counts) and cut
     // lineage at occ: it feeds BOTH the dup count and the flag join, so
     // the hash pass otherwise executed twice per run (stage profile:
-    // 215 + 132 ms single-task stages).
-    val occ = graft.Scans.fanOut(docs)
+    // 215 + 132 ms single-task stages). One action reads it twice, so
+    // the cut is eager.
+    val occ = graft.Materialize.shared(graft.Scans.fanOut(docs)
       .select(col("doc_id"), split(col("text"), " ").as("tk"))
       .filter(size(col("tk")) >= W)
       .select(col("doc_id"),
         posexplode(graft.functions.WindowHash64.windowHash64(col("tk"), W))
-          .as(Seq("p", "h")))
-      .localCheckpoint(false)
+          .as(Seq("p", "h"))), "LlmOps.substringOcc")
     val dup = occ.groupBy(col("h"))
       .agg(count(lit(1)).as("n"))
       .filter(col("n") > 1)
@@ -942,10 +942,9 @@ object LlmOps {
     * dataset) and written as parquet at `DimCache.artifactPath(kind,
     * dir)`, are read back by its top-k and recall rows (FAISS persists
     * its codes for the same reason). `partitionBy` lays the files out
-    * by a column, so a filter on it skips whole files. Keyed on the
-    * dataset dir alone: concurrent JVMs on the SAME dataset are not a
-    * supported mode (one could overwrite the dir mid-read); if that
-    * ever becomes one, add a JVM pid or session nonce to the path.
+    * by a column, so a filter on it skips whole files. The path is
+    * under this JVM's artifact root, so concurrent JVMs on the same
+    * dataset each write their own copy.
     */
   private def annIndex(s: SparkSession, kind: String, dir: String,
       partitionBy: Option[String] = None)(encode: => DataFrame): DataFrame = {

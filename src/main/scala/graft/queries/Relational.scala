@@ -418,32 +418,21 @@ object Relational {
     */
   private def joinBucketed(s: SparkSession, dir: String): DataFrame = {
     // table names carry the dataset-dir fingerprint, so verifying
-    // another sf dir never joins (or reset()-deletes) this one's copies
+    // another sf dir never joins this one's copies
     val tag = graft.DimCache.fingerprint(dir)
     val liTbl = s"graft_li_bkt_$tag"
     val ordTbl = s"graft_ord_bkt_$tag"
     graft.DimCache.cached(s"bucketed-li-ord:$dir") {
-      // A fresh JVM has an empty in-memory catalog, but the warehouse
-      // DIRECTORY survives from previous runs — saveAsTable(overwrite)
-      // refuses an existing location it doesn't own, so drop both the
-      // catalog entry and any stale directory before writing.
-      def reset(t: String): Unit = {
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val p = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir") + "/" + t)
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      reset(liTbl)
-      reset(ordTbl)
+      // the files sit under this JVM's artifact root, so two JVMs (and
+      // runs) never share a table location
       graft.sources.Bucketed.writeBucketed(
         Tables.lineitem(s, dir)
           .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag")),
-        liTbl, "l_orderkey", 8)
+        liTbl, "l_orderkey", 8, Some(graft.DimCache.artifactPath("li_bkt", dir)))
       graft.sources.Bucketed.writeBucketed(
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_orderpriority")),
-        ordTbl, "o_orderkey", 8)
+        ordTbl, "o_orderkey", 8, Some(graft.DimCache.artifactPath("ord_bkt", dir)))
       java.lang.Boolean.TRUE
     }
     // merge hint: at verify SF the orders side is broadcast-sized, and a

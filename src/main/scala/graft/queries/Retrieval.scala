@@ -250,19 +250,11 @@ object Retrieval {
     * cut makes every consumer (dl, dfq, the scoring join, the snippet's
     * query-term pick) read one materialization — the same r21 cut the
     * LSH family uses; values unchanged (the filter now applies above
-    * the read, same rows survive).
-    *
-    * The cut is EAGER: the builder materializes tf before any consumer
-    * is planned. A lazy cut was materialized by whichever consumer job
-    * ran first, which then dropped the cut plan while the sibling
-    * consumers AQE had started in the same action still reported that
-    * plan's SQL metrics — once the driver had collected those
-    * accumulators, every such task logged "Failed to update
-    * accumulator (Unknown class)", and the siblings blocked on the
-    * block being written instead of sharing it.
+    * the read, same rows survive). A `Materialize.shared` cut: eager,
+    * so no consumer job materializes it under its siblings.
     */
   private def tfOverShared(documents: DataFrame): DataFrame =
-    tfOver(documents).localCheckpoint()
+    graft.Materialize.shared(tfOver(documents), "Retrieval.tf")
 
   /** The full per-doc BM25 score frame over any (doc_id, text) corpus.
     * Every factor of the micro-score formula scales linearly under
@@ -578,23 +570,14 @@ object Retrieval {
 
   private def rrfFused(s: SparkSession, dir: String): DataFrame = {
     val (lexRanked, denseRanked) = rrfArms(s, dir)
-    // Overlap the arms (r22, guide §2.6): the lexical arm is the full
-    // BM25 pipeline and the dense arm a corpus cosine scan — independent
-    // until the fuse, yet one action ran them back to back (the fuse
-    // stage only materializes both subtrees sequentially). Submit each
-    // arm's ≤50-row materialization from its own driver thread so the
-    // dense arm's stages back-fill the lexical arm's idle tail; the fuse
-    // then joins two tiny checkpointed frames. Values unchanged — the
-    // arms never shared a subtree (tf is the lexical arm's own exchange).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val (lexCk, denseCk) =
-      try {
-        val lexF = scala.concurrent.Future(lexRanked.localCheckpoint())(ec)
-        val denseF = scala.concurrent.Future(denseRanked.localCheckpoint())(ec)
-        (scala.concurrent.Await.result(lexF, scala.concurrent.duration.Duration.Inf),
-          scala.concurrent.Await.result(denseF, scala.concurrent.duration.Duration.Inf))
-      } finally ec.shutdown()
+    // Overlap the arms (r22): the lexical arm is the full BM25 pipeline
+    // and the dense arm a corpus cosine scan — independent until the
+    // fuse, yet one action ran them back to back. Materializing both
+    // concurrently lets the dense arm's stages back-fill the lexical
+    // arm's idle tail; the fuse then joins two tiny cut frames. Values
+    // unchanged — the arms never shared a subtree.
+    val Seq(lexCk, denseCk) =
+      graft.Materialize.shared(Seq(lexRanked, denseRanked), "Retrieval.rrfArms")
     lexCk
       .join(denseCk, Seq("doc_id"), "full")
       .select(col("doc_id"),

@@ -22,16 +22,19 @@ object Bucketed {
   /** Write `df` as a bucketed, bucket-sorted table registered in the
     * session catalog. `buckets` should be sized so each bucket's data
     * per file fits an executor's memory comfortably (at 100 TB with
-    * 1000 executors: thousands of buckets, not dozens).
+    * 1000 executors: thousands of buckets, not dozens). With a `path`
+    * the table is external and its files live there.
     */
   def writeBucketed(
       df: DataFrame,
       table: String,
       key: String,
-      buckets: Int): Unit =
-    df.write
+      buckets: Int,
+      path: Option[String] = None): Unit = {
+    val w = df.write
       .mode("overwrite")
       .bucketBy(buckets, key)
       .sortBy(key)
-      .saveAsTable(table)
+    path.fold(w)(w.option("path", _)).saveAsTable(table)
+  }
 }

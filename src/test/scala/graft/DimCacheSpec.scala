@@ -38,6 +38,16 @@ class DimCacheSpec extends AnyFunSuite {
     assert(DimCache.cached("BB")("other") == "bb")
   }
 
+  test("artifact paths lie under this JVM's own root") {
+    // a path keyed on the dir alone was shared by every JVM on the
+    // machine, and two writers of one artifact failed one of them
+    val p = Paths.get(DimCache.artifactPath("spec", sf))
+    val jvmRoot = p.getParent
+    assert(Files.isDirectory(jvmRoot) && jvmRoot.getFileName.toString.startsWith("graft_artifacts_"))
+    assert(jvmRoot.getParent == Paths.get(System.getProperty("java.io.tmpdir")))
+    assert(Paths.get(DimCache.artifactPath("other", "/elsewhere")).getParent == jvmRoot)
+  }
+
   private val root = Paths.get("src/main/scala/graft")
 
   /** (path relative to `root`, contents) of every main source file. */

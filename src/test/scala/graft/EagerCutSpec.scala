@@ -20,9 +20,11 @@ class EagerCutSpec extends AnyFunSuite {
   private val lshRows = Seq("dedup_minhash_lsh", "dedup_minhash_lsh_portable",
     "dedup_ngram_jaccard", "dedup_containment")
 
-  // the shared tf consumers and the LSH rows
+  // the shared tf consumers, the two rows whose one action reads a cut
+  // twice (DSIR's hashed grams, the substring-span window hashes) and
+  // the LSH rows
   private val eagerCuts = Seq("text_bm25_topk", "text_snippet_extract",
-    "text_query_expansion") ++ lshRows
+    "text_query_expansion", "dsir_importance", "dedup_substring_spans") ++ lshRows
 
   test("every shared cut is materialized when the builder returns") {
     eagerCuts.foreach { q =>
@@ -36,14 +38,17 @@ class EagerCutSpec extends AnyFunSuite {
   test("each LSH row carries only the banding core's cuts") {
     // the distinct-first route cuts the signature frame and the capped
     // (band, bucket) frame, the verify-first route of dedup_emb_cosine
-    // cuts nothing; an RDD names the source line that created it, so a
-    // cut taken anywhere else shows up by its call site
-    (lshRows.map(_ -> 2) :+ ("dedup_emb_cosine" -> 0)).foreach { case (q, n) =>
-      val cuts = SparkEntry.queries(q)(spark, sf).queryExecution.analyzed
-        .collect { case l: LogicalRDD => l.rdd }
-        .distinctBy(_.id)
-      assert(cuts.size == n && cuts.forall(_.toString.contains("at Banding.scala:")),
-        s"$q: expected the banding core's $n cuts, got ${cuts.mkString("; ")}")
+    // cuts nothing; a cut's RDD carries the site name it was taken
+    // under, so a cut taken anywhere else shows up by its site
+    val banding = Set("Banding.signatures", "Banding.cappedBands")
+    (lshRows.map(_ -> banding) :+ ("dedup_emb_cosine" -> Set.empty[String])).foreach {
+      case (q, sites) =>
+        val cuts = SparkEntry.queries(q)(spark, sf).queryExecution.analyzed
+          .collect { case l: LogicalRDD => l.rdd }
+          .distinctBy(_.id)
+        val named = cuts.map(_.toString.replaceAll(".* at ", ""))
+        assert(cuts.size == sites.size && named.toSet == sites,
+          s"$q: expected the banding core's cuts $sites, got ${cuts.mkString("; ")}")
     }
   }
 
