@@ -201,14 +201,11 @@ object AmplifiedBench {
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val only = args.lift(3).map(_.split(",").map(_.trim).toSet)
     val child = args.lift(4).contains(ChildFlag)
-    require(!child || args.length > 5, s"$ChildFlag needs the amplified dataset dir")
     val spark = Harness.session()
 
     // The child re-measures one query on the identical dataset the sweep
     // just used: rebuilding it would waste minutes and break "same input,
-    // fresh heap" as the only changed variable. The dir is under the
-    // parent's artifact root, which the child cannot derive, so the
-    // parent passes it.
+    // fresh heap" as the only changed variable.
     val ampDir =
       if (child) args(5)
       else {

@@ -8,7 +8,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.storage.StorageLevel
 
 /** When the engine materializes an intermediate: the only module that
@@ -22,10 +21,12 @@ import org.apache.spark.storage.StorageLevel
   *    reported its SQL metrics ("Failed to update accumulator"). Its
   *    blocks are the only copy: after executor loss the next consumer
   *    fails with `CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`.
-  *  - [[step]]: a lazy local cut, for loop state whose consumers run one
-  *    after another (ranks, labels, the PCA input): it truncates the plan
-  *    each iteration re-resolves without a job of its own. Executor loss
-  *    fails it like [[shared]].
+  *  - [[step]]: a lazy local cut, materialized by its first consumer
+  *    without a job of its own: loop state whose consumers run one after
+  *    another (ranks, labels, the PCA input), and two frames one action
+  *    reads twice where the eager cut measured slower and the lazy one
+  *    logged no accumulator error (DSIR's hashed grams, the substring
+  *    window hashes). Executor loss fails it like [[shared]].
   *  - [[cached]]: a `persist`, recomputed from its lineage on executor
   *    loss. It exists only inside a [[releasing]] scope: Spark's cache
   *    manager matches a cached frame by its plan, so a cache that
@@ -56,54 +57,47 @@ object Materialize {
   def step(df: DataFrame, site: String): DataFrame = pin(cut(df, site, eager = false))
 
   /** `df` persisted under the name `site`, released when the innermost
-    * [[releasing]] scope ends unless the scope's result reads it.
+    * [[releasing]] scope ends.
     */
   def cached(df: DataFrame, site: String): DataFrame = {
-    val scope = open.get
-    require(scope != null, s"$site: a cached frame exists only inside Materialize.releasing")
+    require(open.get != null, s"$site: a cached frame exists only inside Materialize.releasing")
     df.sparkSession.sharedState.cacheManager
       .cacheQuery(castToImpl(df), Some(site), StorageLevel.MEMORY_AND_DISK)
-    scope.caches += df
+    open.get.caches += df
     df
   }
 
   /** Runs `body` and frees every block pinned inside it (cuts and caches,
-    * in nested calls too) except those that back its result: every cut
-    * the result's lineage reaches, since a released cut cannot be
-    * recomputed, and every cache the result reads directly. The frames
-    * of a result are the result itself or those in a tuple of it. What
-    * is kept passes to the enclosing scope; if `body` throws, nothing is
-    * kept.
+    * in nested calls too) except the cuts its result's lineage reaches,
+    * since a released cut cannot be recomputed. No cache outlives the
+    * scope: a result that must keep its input materialized reads a cut.
+    * The frames of a result are the result itself or those in a tuple of
+    * it. What is kept passes to the enclosing scope; if `body` throws,
+    * nothing is kept.
     */
   def releasing[T](body: => T): T = {
-    val outer = open.get
-    val scope = new Scope
+    val scope = new Scope(open.get)
     open.set(scope)
-    val out =
-      try body
-      catch { case e: Throwable => scope.release(Nil, null); throw e }
-      finally open.set(outer)
-    scope.release(frames(out), outer)
-    out
+    try { val out = body; scope.release(frames(out)); out }
+    catch { case e: Throwable => scope.release(Nil); throw e }
+    finally open.set(scope.outer)
   }
 
-  private final class Scope {
+  /** The blocks pinned inside one [[releasing]] call; `outer` is the
+    * enclosing call's scope, or null.
+    */
+  private final class Scope(val outer: Scope) {
     val cuts = mutable.ArrayBuffer.empty[RDD[_]]
     val caches = mutable.ArrayBuffer.empty[DataFrame]
 
-    /** Frees what `result` does not need and hands the rest to `outer`. */
-    def release(result: Seq[DataFrame], outer: Scope): Unit = {
-      val reached = result.flatMap(cutRdds(_).flatMap(ancestors)).toSet
-      val read = result.flatMap(_.queryExecution.withCachedData.collect {
-        case m: InMemoryRelation => m.cacheBuilder
-      })
-      def isRead(c: DataFrame) = c.sparkSession.sharedState.cacheManager
-        .lookupCachedData(castToImpl(c)).exists(d => read.exists(_ eq d.cachedRepresentation.cacheBuilder))
-      val (liveCuts, deadCuts) = cuts.partition(r => reached(r.id))
-      val (liveCaches, deadCaches) = caches.partition(isRead)
-      deadCuts.foreach(_.unpersist(blocking = false))
-      deadCaches.foreach(_.unpersist(blocking = false))
-      if (outer != null) { outer.cuts ++= liveCuts; outer.caches ++= liveCaches }
+    /** Frees what `result` does not need and hands its cuts to `outer`. */
+    def release(result: Seq[DataFrame]): Unit = {
+      val reached = mutable.Set.empty[Int] // ids of every RDD the result's cuts reach
+      def walk(r: RDD[_]): Unit = if (reached.add(r.id)) r.dependencies.foreach(d => walk(d.rdd))
+      result.flatMap(cutRdds).foreach(walk)
+      cuts.filterNot(r => reached(r.id)).foreach(_.unpersist(blocking = false))
+      caches.foreach(_.unpersist(blocking = false))
+      if (outer != null) outer.cuts ++= cuts.filter(r => reached(r.id))
     }
   }
 
@@ -118,22 +112,13 @@ object Materialize {
   private def cutRdds(df: DataFrame): Seq[RDD[_]] =
     df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
 
-  /** Ids of `r` and every RDD its lineage reaches. */
-  private def ancestors(r: RDD[_]): Set[Int] = {
-    val seen = mutable.Set.empty[Int]
-    def walk(x: RDD[_]): Unit = if (seen.add(x.id)) x.dependencies.foreach(d => walk(d.rdd))
-    walk(r)
-    seen.toSet
-  }
-
-  /** `df`'s local cut, with `site` as the short call site of the RDDs
-    * and jobs it creates (the property `SparkContext.setCallSite` sets).
+  /** `df`'s local cut, with `site` as the call site of the RDDs and
+    * jobs it creates.
     */
   private def cut(df: DataFrame, site: String, eager: Boolean): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    val prev = sc.getLocalProperty("callSite.short")
-    sc.setLocalProperty("callSite.short", site)
-    try df.localCheckpoint(eager) finally sc.setLocalProperty("callSite.short", prev)
+    sc.setCallSite(site)
+    try df.localCheckpoint(eager) finally sc.clearCallSite()
   }
 
   private def pin(cut: DataFrame): DataFrame = {

@@ -149,14 +149,14 @@ object TrainingDataPipeline {
   def run(spark: SparkSession, docs: DataFrame,
       cfg: Config = Config()): (DataFrame, Map[String, Long]) = Materialize.releasing {
     // Stage caches serve the counts below and the next stage's first
-    // pass; the scope releases them on return except `decon`, which
-    // backs the returned (lazy) tokenized frame.
+    // pass; the scope releases them all on return. `decon` backs the
+    // returned (lazy) tokenized frame, so it is a cut the scope keeps.
     val q = Materialize.cached(qualityFilter(docs, cfg), "TrainingDataPipeline.quality")
     val lang = Materialize.cached(q.filter(col("lang") === cfg.lang), "TrainingDataPipeline.lang")
     val exact = Materialize.cached(exactDedup(lang), "TrainingDataPipeline.exact")
     val near = Materialize.cached(nearDedup(exact, cfg), "TrainingDataPipeline.near")
     val bench = docs.filter(pmod(col("doc_id"), lit(cfg.benchMod)) === 0)
-    val decon = Materialize.cached(
+    val decon = Materialize.shared(
       decontaminate(near, bench, cfg.decontaminateGramLen), "TrainingDataPipeline.decon")
     val packed = packStage(decon, cfg.packBudget)
     val tokenized = tokenizeStage(spark, decon, cfg)

@@ -148,9 +148,10 @@ object Curation {
     // scoring join; neither branch has an exchange below it, so without
     // a lineage cut the per-token polyhash ran twice per run (r21, like
     // the signature cut of Banding.candidatePairs). Cut the compact
-    // pre-explode frame (doc-cardinality rows carrying the hash arrays);
-    // one action reads it twice, so the cut is eager.
-    val hashed = graft.Materialize.shared(Tables.documents(s, dir)
+    // pre-explode frame (doc-cardinality rows carrying the hash arrays).
+    // Lazy: an eager cut cost a job and 8% of the cold call (sf0.1, 4
+    // cores), and the lazy cut logged no accumulator-update error.
+    val hashed = graft.Materialize.step(Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
         graft.functions.PolyHash31.polyhash31(toks).getField("pp").as("hs")),
       "Curation.dsirHashed")

@@ -154,7 +154,7 @@ object GraphOps {
         val buckets = math.min(4096L,
           math.max(4L, edges.count() / 256000L)).toInt
         graft.sources.Bucketed.writeBucketed(edges.repartition(buckets, col("src")), tbl,
-          "src", buckets, Some(graft.DimCache.artifactPath("predges", dir)))
+          "src", buckets, graft.DimCache.artifactPath("predges", dir))
       }
       tbl
     }

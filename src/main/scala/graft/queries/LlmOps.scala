@@ -697,9 +697,10 @@ object LlmOps {
     // scan (Scans.fanOut — no-op at production split counts) and cut
     // lineage at occ: it feeds BOTH the dup count and the flag join, so
     // the hash pass otherwise executed twice per run (stage profile:
-    // 215 + 132 ms single-task stages). One action reads it twice, so
-    // the cut is eager.
-    val occ = graft.Materialize.shared(graft.Scans.fanOut(docs)
+    // 215 + 132 ms single-task stages). Lazy: an eager cut cost a job and
+    // 6% of the warm call (sf0.1, 4 cores), and the lazy cut logged no
+    // accumulator-update error.
+    val occ = graft.Materialize.step(graft.Scans.fanOut(docs)
       .select(col("doc_id"), split(col("text"), " ").as("tk"))
       .filter(size(col("tk")) >= W)
       .select(col("doc_id"),

@@ -428,11 +428,11 @@ object Relational {
       graft.sources.Bucketed.writeBucketed(
         Tables.lineitem(s, dir)
           .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag")),
-        liTbl, "l_orderkey", 8, Some(graft.DimCache.artifactPath("li_bkt", dir)))
+        liTbl, "l_orderkey", 8, graft.DimCache.artifactPath("li_bkt", dir))
       graft.sources.Bucketed.writeBucketed(
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_orderpriority")),
-        ordTbl, "o_orderkey", 8, Some(graft.DimCache.artifactPath("ord_bkt", dir)))
+        ordTbl, "o_orderkey", 8, graft.DimCache.artifactPath("ord_bkt", dir))
       java.lang.Boolean.TRUE
     }
     // merge hint: at verify SF the orders side is broadcast-sized, and a

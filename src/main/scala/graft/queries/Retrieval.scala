@@ -235,13 +235,8 @@ object Retrieval {
       .select(col("tok"), col("df"))
   }
 
-  private def tfOver(documents: DataFrame): DataFrame =
-    documents
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-      .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-
-  /** One SHARED tf materialization (r22): the stage profile caught the
+  /** Per-doc term frequencies (doc_id, tok, tf), as one SHARED
+    * materialization (r22): the stage profile caught the
     * tokenize+aggregate subtree executing FOUR times inside
     * text_bm25_topk — corpusQueryTerms' `length(tok) >= 4` filter pushes
     * below the tf aggregate and SPECIALIZES that branch's subtree (no
@@ -254,7 +249,10 @@ object Retrieval {
     * so no consumer job materializes it under its siblings.
     */
   private def tfOverShared(documents: DataFrame): DataFrame =
-    graft.Materialize.shared(tfOver(documents), "Retrieval.tf")
+    graft.Materialize.shared(documents
+      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
+      .groupBy(col("doc_id"), col("tok"))
+      .agg(count(lit(1)).as("tf")), "Retrieval.tf")
 
   /** The full per-doc BM25 score frame over any (doc_id, text) corpus.
     * Every factor of the micro-score formula scales linearly under

@@ -20,21 +20,21 @@ import org.apache.spark.sql.DataFrame
 object Bucketed {
 
   /** Write `df` as a bucketed, bucket-sorted table registered in the
-    * session catalog. `buckets` should be sized so each bucket's data
-    * per file fits an executor's memory comfortably (at 100 TB with
-    * 1000 executors: thousands of buckets, not dozens). With a `path`
-    * the table is external and its files live there.
+    * session catalog as an external table whose files live at `path`.
+    * `buckets` should be sized so each bucket's data per file fits an
+    * executor's memory comfortably (at 100 TB with 1000 executors:
+    * thousands of buckets, not dozens).
     */
   def writeBucketed(
       df: DataFrame,
       table: String,
       key: String,
       buckets: Int,
-      path: Option[String] = None): Unit = {
-    val w = df.write
+      path: String): Unit =
+    df.write
       .mode("overwrite")
       .bucketBy(buckets, key)
       .sortBy(key)
-    path.fold(w)(w.option("path", _)).saveAsTable(table)
-  }
+      .option("path", path)
+      .saveAsTable(table)
 }

@@ -19,8 +19,8 @@ class BucketedJoinSpec extends AnyFunSuite {
     val o = Tables
       .orders(spark, sf)
       .select(col("o_orderkey"), col("o_totalprice"))
-    sources.Bucketed.writeBucketed(l, "li_bucketed", "l_orderkey", 8)
-    sources.Bucketed.writeBucketed(o, "or_bucketed", "o_orderkey", 8)
+    sources.Bucketed.writeBucketed(l, "li_bucketed", "l_orderkey", 8, DimCache.tempDir("li_bucketed"))
+    sources.Bucketed.writeBucketed(o, "or_bucketed", "o_orderkey", 8, DimCache.tempDir("or_bucketed"))
     // Force the join shape the bucketing exists for: SMJ, not broadcast.
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     try {

@@ -90,7 +90,7 @@ class MaterializeSpec extends AnyFunSuite {
   test("only Materialize cuts, caches or releases in the main sources") {
     val root = Paths.get("src/main/scala")
     assume(Files.isDirectory(root), s"run from the repo root (cwd=${Paths.get("").toAbsolutePath})")
-    val call = """\.(localCheckpoint|cache|persist|unpersist)\(|getPersistentRDDs""".r
+    val call = """\.(localCheckpoint|cache|persist|unpersist|cacheQuery|uncacheQuery)\b|getPersistentRDDs""".r
     val comment = """^\s*(//|\*|/\*)""".r
     val hits = Files.walk(root).iterator().asScala.toSeq
       .filter(_.toString.endsWith(".scala"))
