@@ -97,6 +97,14 @@ object ArrCanon {
           coalesce(replace(x.cast(StringType), lit("|"), lit("\\|")),
             lit("\u0001")))))
 
+  /** [[joined]] for an integer array, without the lambda: an integer's
+    * string form never contains '|', so only a null element needs the
+    * sentinel, which is `array_join`'s null replacement.
+    */
+  def joinedInts(c: Column): Column =
+    when(c.isNull, lit(null)).otherwise(
+      array_join(c.cast(ArrayType(StringType)), "|", "\u0001"))
+
   /** DuckDB side mirror of [[joined]]. */
   def joinedSql(e: String): String =
     s"""CASE WHEN ($e) IS NULL THEN NULL ELSE coalesce(array_to_string(

@@ -16,8 +16,9 @@ import org.apache.spark.sql.types._
   *   - [[exactScores]], [[topKPerQuery]], [[refineScores]] and
   *     [[recallAt]], the per-query recall@k certifier over a query
   *     sample, under a cosine or squared-L2 [[Metric]];
-  *   - [[literal]] and [[unitLiterals]], the query-side and
-  *     centroid-side literal arrays.
+  *   - [[literal]], the query-side literal array, and [[unitDots]],
+  *     the native dot fan-out against unit-normalized centroid or
+  *     query rows.
   *
   * IVF: k centroids are chosen deterministically from the data (strided
   * sample), broadcast, and every vector is assigned to its nearest
@@ -50,14 +51,29 @@ object Similarity {
   /** A vector as a literal array column (a query shipped to the scan). */
   def literal(v: Seq[Double]): Column = array(v.map(lit): _*)
 
-  /** Rows unit-normalized driver-side as a literal array of arrays (a
-    * zero row stays zero): the centroid and query-set literals whose
-    * per-row dot products are cosines up to the row's own norm.
+  /** Rows unit-normalized driver-side (a zero row stays zero): the
+    * centroid and query-set matrices whose per-row dot products are
+    * cosines up to the row's own norm.
     */
-  def unitLiterals(rows: Seq[Seq[Double]]): Column = array(rows.map { v =>
+  def unitRows(rows: Seq[Seq[Double]]): IndexedSeq[IndexedSeq[Double]] = rows.map { v =>
     val n = math.sqrt(v.map(x => x * x).sum)
-    array(v.map(x => lit(if (n == 0d) 0d else x / n)): _*)
-  }: _*)
+    v.map(x => if (n == 0d) 0d else x / n).toIndexedSeq
+  }.toIndexedSeq
+
+  /** `e`'s dot product with each of `rows` unit-normalized
+    * ([[unitRows]]), in row order: one native fan-out
+    * ([[graft.functions.DotRows]]), each element DotF64's fold.
+    */
+  def unitDots(e: Column, rows: Seq[Seq[Double]]): Column =
+    graft.functions.DotRows.dotRows(e, unitRows(rows))
+
+  /** The cell id of the largest of `sims` (one per cell, in `cRows`
+    * order); a tie goes to the first, the lowest cell id, since
+    * centroids ship sorted and `array_position` returns the first match.
+    */
+  def nearestCell(sims: Column, cRows: IndexedSeq[(Int, Seq[Double])]): Column =
+    element_at(array(cRows.map(r => lit(r._1)): _*),
+      array_position(sims, array_max(sims)).cast(IntegerType))
 
   /** Brute-force top-k against one query vector (map-side score +
     * TakeOrdered; zero shuffle of the corpus).
@@ -175,9 +191,9 @@ object Similarity {
   /** Assign every vector to its nearest centroid — a TRUE map-side argmax.
     *
     * Centroids are a bounded design dimension (nCells ≪ corpus), so they
-    * are collected, unit-normalized driver-side, and shipped as literal
-    * array columns. Each row computes one dot product per centroid inside
-    * a higher-order `transform` and picks the argmax with
+    * are collected, unit-normalized driver-side, and shipped with the
+    * plan. Each row computes one dot product per centroid in one native
+    * fan-out ([[unitDots]]) and picks the argmax with
     * `array_position(sims, array_max(sims))` — the plan is a pure
     * Project over the scan: no crossJoin row explosion, no Exchange.
     * (The round-1 formulation shuffled |corpus|×nCells rows through a
@@ -216,17 +232,14 @@ object Similarity {
   def assignCellsWithSim(
       emb: DataFrame, cRows: IndexedSeq[(Int, Seq[Double])]): DataFrame = {
     require(cRows.nonEmpty, "assignCells: empty centroid set")
-    val cellIds = array(cRows.map(r => lit(r._1)): _*)
-    val unitCents = unitLiterals(cRows.map(_._2))
     emb
       .select(col("vec_id"), embDouble.as("e"))
       // sims materialized in its own projection: referencing it twice
       // below must NOT recompute the dot products (multi-referenced
-      // aliases survive CollapseProject; a lambda would re-evaluate)
-      .withColumn("sims", transform(unitCents, cu => dot(col("e"), cu)))
+      // aliases survive CollapseProject)
+      .withColumn("sims", unitDots(col("e"), cRows.map(_._2)))
       .select(col("vec_id"), col("e"),
-        element_at(cellIds, array_position(col("sims"), array_max(col("sims")))
-          .cast(IntegerType)).as("cell_id"),
+        nearestCell(col("sims"), cRows).as("cell_id"),
         array_max(col("sims")).as("top_sim"))
       .select(col("vec_id"), col("cell_id"), col("e"), col("top_sim"))
   }
@@ -289,19 +302,6 @@ object Similarity {
 
   // -------------------------------------------------- product quantization
 
-  /** Elementwise squared-L2 between two equal-length double arrays, as
-    * the ascending-index fold `acc + (x_i - y_i)²` — one IEEE rounding
-    * per subtract/multiply/add, mirrored verbatim by DuckDB's
-    * `list_reduce`, so distances are bit-identical cross-engine (the
-    * same contract DotF64 gives the dot-product paths). The compact HOF
-    * tree beats an unrolled arithmetic chain here: encode runs once per
-    * vector at WRITE time, and a 1000-term unrolled projection costs
-    * more in per-plan codegen than it saves in evaluation.
-    */
-  private def l2(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, v) => acc + v)
-
   /** Deterministic PQ codebooks: the same Lehmer-strided pick as
     * [[centroids]] selects `k` exemplar vectors (renumbered by vec_id),
     * and codeword `(m)(c)` is exemplar c's m-th length-`dsub` subvector.
@@ -327,26 +327,19 @@ object Similarity {
   }
 
   /** Map-side PQ encode: each vector gains `c0..c{M-1}` — the index of
-    * its nearest codeword per subspace (argmin over k literal codewords;
-    * ties to the lowest index via array_position-first-match). A pure
+    * its nearest codeword per subspace in squared L2, ties to the lowest
+    * index ([[graft.functions.PqEncode]]: the ascending-index fold
+    * `acc + (x_j - w_j)²` that DuckDB's `list_reduce` mirrors, so codes
+    * are bit-identical cross-engine). A pure
     * Project over the scan: no Exchange, no join. At 100 TB this is the
     * similarity family's memory lever — M small ints replace the float
     * vector for candidate generation (64×f32 → 8 codes = 32× smaller),
     * so the ANN working set fits executor memory long after raw
     * embeddings stop fitting anywhere.
     */
-  def encodePq(emb: DataFrame, cb: IndexedSeq[IndexedSeq[IndexedSeq[Double]]], dsub: Int): DataFrame = {
-    // distance arrays materialized in their own projection so the
-    // argmin's two references don't recompute the folds
-    val distCols = cb.indices.map { m =>
-      val sub = slice(col("e"), m * dsub + 1, dsub)
-      array(cb(m).map(w => l2(sub, array(w.map(lit): _*))): _*).as(s"d$m")
-    }
-    emb.select(Seq(col("vec_id"), col("e")) ++ distCols: _*)
-      .select(Seq(col("vec_id"), col("e")) ++ cb.indices.map(m =>
-        (array_position(col(s"d$m"), array_min(col(s"d$m"))) - 1)
-          .cast(IntegerType).as(s"c$m")): _*)
-  }
+  def encodePq(emb: DataFrame, cb: IndexedSeq[IndexedSeq[IndexedSeq[Double]]], dsub: Int): DataFrame =
+    emb.select(Seq(col("vec_id"), col("e")) ++ cb.indices.map(m =>
+      graft.functions.PqEncode.pqEncode(col("e"), cb(m), m * dsub).as(s"c$m")): _*)
 
   /** The query-side ADC lookup table — `T(m)(c)` = squared-L2 between
     * the query's m-th subvector and codeword c, computed driver-side in
@@ -414,8 +407,8 @@ object Similarity {
     * oracled `sim_sq8_recall` row — and 0.9–1.0 on the sf0.001 spec
     * corpus) while the corpus working set drops 4×,
     * where PQ trades more recall for more compression. A pure Project
-    * over the scan — no Exchange, no join; the bounds ship as literal
-    * arrays exactly like centroids/codebooks.
+    * over the scan — no Exchange, no join; the bounds ship with the
+    * plan exactly like centroids/codebooks.
     *
     * Quantization arithmetic (mirrored verbatim by the DuckDB oracle,
     * both engines IEEE): code_j = floor((x_j − mn_j)/sc_j·255 + 0.5)
@@ -428,21 +421,11 @@ object Similarity {
 
   /** The SQ8 quantizer as a reusable Column over `e` — shared by the
     * flat index ([[encodeSq8]]) and the IVF-composed index
-    * ([[encodeIvfSq8]]) so both persist byte-identical codes.
+    * ([[encodeIvfSq8]]) so both persist byte-identical codes
+    * ([[graft.functions.Sq8Encode]]).
     */
-  def sq8Codes(mn: IndexedSeq[Double], mx: IndexedSeq[Double]): Column = {
-    val mnArr = array(mn.map(lit): _*)
-    val scArr = array(mn.indices.map(j => lit(mx(j) - mn(j))): _*)
-    zip_with(col("e"),
-      sequence(lit(0), lit(mn.size - 1)),
-      (x, j) => {
-        val m = element_at(mnArr, j.cast(IntegerType) + 1)
-        val sc = element_at(scArr, j.cast(IntegerType) + 1)
-        when(sc === 0d, lit(-128))
-          .otherwise(floor((x - m) / sc * 255d + 0.5d) - 128L)
-          .cast(ByteType)
-      })
-  }
+  def sq8Codes(mn: IndexedSeq[Double], mx: IndexedSeq[Double]): Column =
+    graft.functions.Sq8Encode.sq8Encode(col("e"), mn, mx)
 
   // ------------------------------------------------------------- IVF,SQ8
 
@@ -512,18 +495,12 @@ object Similarity {
     */
   /** Dequantize a `codes` byte array back to x̂ (x̂_j = mn_j +
     * (code_j + 128)/255·sc_j) — the shared reconstruction of
-    * [[sq8TopK]] and the recall-certification query; the bounds ship
-    * as literal arrays like centroids/codebooks.
+    * [[sq8TopK]] and the recall-certification query
+    * ([[graft.functions.Sq8Decode]]); the bounds ship with the plan like
+    * centroids/codebooks.
     */
-  def sq8Dequantize(mn: IndexedSeq[Double], mx: IndexedSeq[Double]): Column = {
-    val mnArr = array(mn.map(lit): _*)
-    val scArr = array(mn.indices.map(j => lit(mx(j) - mn(j))): _*)
-    zip_with(col("codes"),
-      sequence(lit(0), lit(mn.size - 1)),
-      (c, j) => element_at(mnArr, j.cast(IntegerType) + 1) +
-        (c.cast(DoubleType) + 128d) / 255d *
-          element_at(scArr, j.cast(IntegerType) + 1))
-  }
+  def sq8Dequantize(mn: IndexedSeq[Double], mx: IndexedSeq[Double]): Column =
+    graft.functions.Sq8Decode.sq8Decode(col("codes"), mn, mx)
 
   def sq8TopK(encoded: DataFrame, query: IndexedSeq[Double],
       mn: IndexedSeq[Double], mx: IndexedSeq[Double],
@@ -555,9 +532,9 @@ object Similarity {
     * `acc·2 + bit` (bit_j = e_j > thr_j), so each half is < 2³², safely
     * inside BIGINT in both engines (packing all 64 bits into one long
     * would put dimension 1 in the sign bit and make the fold
-    * engine-dependent). A pure Project over the scan — no Exchange, no
-    * join; the thresholds ship as literal arrays like
-    * centroids/codebooks. At 100 TB this is the similarity family's
+    * engine-dependent; [[graft.functions.BinaryPack]]). A pure Project
+    * over the scan — no Exchange, no join; the thresholds ship with the
+    * plan like centroids/codebooks. At 100 TB this is the similarity family's
     * deepest memory lever shy of PQ: 16 bytes/row replace 64 floats
     * (16×), and candidate scoring becomes two XOR+popcount integer ops
     * — no float math at all until the rerank stage.
@@ -566,13 +543,8 @@ object Similarity {
     require(thr.size % 2 == 0, s"encodeBinary: need even dims, got ${thr.size}")
     val half = thr.size / 2
     require(half <= 62, s"encodeBinary: half-width $half overflows BIGINT")
-    def pack(offset: Int): Column = {
-      val thrArr = array((0 until half).map(j => lit(thr(offset + j))): _*)
-      aggregate(
-        zip_with(slice(col("e"), offset + 1, half), thrArr,
-          (x, t) => when(x > t, 1L).otherwise(0L)),
-        lit(0L), (acc, b) => acc * 2L + b)
-    }
+    def pack(offset: Int): Column =
+      graft.functions.BinaryPack.binaryPack(col("e"), thr.slice(offset, offset + half), offset)
     emb.select(col("vec_id"), pack(0).as("lo"), pack(half).as("hi"))
   }
 
@@ -942,10 +914,9 @@ object Similarity {
     */
   def kmeansObjective(emb: DataFrame,
       cRows: IndexedSeq[(Int, Seq[Double])]): Double = {
-    val unitCents = unitLiterals(cRows.map(_._2))
     emb
       .select(col("vec_id"), embDouble.as("e"))
-      .select(array_max(transform(unitCents, cu => dot(col("e"), cu))).as("m"))
+      .select(array_max(unitDots(col("e"), cRows.map(_._2))).as("m"))
       .agg(graft.Agg.dsum(col("m"), 6).as("j"))
       .head().getDouble(0)
   }

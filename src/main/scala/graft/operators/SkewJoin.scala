@@ -24,6 +24,13 @@ import org.apache.spark.sql.functions._
   */
 object SkewJoin {
 
+  /** Deterministic salt in [0, salts) from row identity: a hash, not
+    * rand(), so a retried task gives every row the same salt and no row
+    * is lost or duplicated.
+    */
+  def salt(from: Seq[Column], salts: Int): Column =
+    pmod(hash(from: _*), lit(salts))
+
   /** `probe ⋈ build` on `key`, with probe-side salt derived from
     * `saltFrom` (any probe column with per-row variety, e.g. a line
     * number or a hash of the whole row).
@@ -35,7 +42,7 @@ object SkewJoin {
       saltFrom: Column,
       salts: Int): DataFrame = {
     require(salts >= 1, s"salts must be >= 1, got $salts")
-    val salted = probe.withColumn("__salt", pmod(hash(saltFrom), lit(salts)))
+    val salted = probe.withColumn("__salt", salt(Seq(saltFrom), salts))
     val replicated = build.withColumn("__salt",
       explode(array((0 until salts).map(lit): _*)))
     // shuffle_hash, pinned (r21): left to size estimates Catalyst

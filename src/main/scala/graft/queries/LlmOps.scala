@@ -3136,20 +3136,18 @@ object LlmOps {
     val qRows = querySample(s, dir)
     val qIds = array(qRows.map(r => lit(r._1)): _*)
     val qLabels = array(qRows.map(r => lit(r._3)): _*)
-    val qUnits = Similarity.unitLiterals(qRows.map(_._2))
     val topk = udaf(new graft.agg.TopKAgg(3))
     emb.filter(col("vec_id") >= 8)
       .withColumn("ne",
         sqrt(graft.functions.DotF64.dotf64(col("e"), col("e"))))
-      .select(col("vec_id"), col("label"),
-        posexplode(transform(qUnits, qu =>
-          graft.functions.DotF64.dotf64(col("e"), qu) / col("ne")))
-          .as(Seq("qi", "cos")))
+      .select(col("vec_id"), col("label"), col("ne"),
+        posexplode(Similarity.unitDots(col("e"), qRows.map(_._2)))
+          .as(Seq("qi", "dot")))
       .filter(element_at(qLabels, col("qi") + 1) =!= col("label"))
       .select(element_at(qIds, col("qi") + 1).as("q_id"),
         element_at(qLabels, col("qi") + 1).as("q_label"),
         col("vec_id"), col("label").as("neg_label"),
-        (-floor(col("cos") * lit(1e6))).cast(LongType).as("rk"))
+        (-floor(col("dot") / col("ne") * lit(1e6))).cast(LongType).as("rk"))
       .groupBy(col("q_id"), col("q_label"))
       .agg(topk(col("rk"), col("vec_id")).as("picks"))
       .select(col("q_id"), col("q_label"),
@@ -3209,16 +3207,14 @@ object LlmOps {
     val emb = embVectors(s, dir)
     val qRows = querySample(s, dir)
     val qIds = array(qRows.map(r => lit(r._1)): _*)
-    val qUnits = Similarity.unitLiterals(qRows.map(_._2))
     val topk = udaf(new graft.agg.TopKAgg(3))
     emb.filter(col("vec_id") >= 8)
       .withColumn("ne",
         sqrt(graft.functions.DotF64.dotf64(col("e"), col("e"))))
-      .select(col("vec_id"), posexplode(transform(qUnits, qu =>
-        graft.functions.DotF64.dotf64(col("e"), qu) / col("ne")))
-        .as(Seq("qi", "cos")))
+      .select(col("vec_id"), col("ne"),
+        posexplode(Similarity.unitDots(col("e"), qRows.map(_._2))).as(Seq("qi", "dot")))
       .select(element_at(qIds, col("qi") + 1).as("q_id"), col("vec_id"),
-        (-floor(col("cos") * lit(1e6))).cast(LongType).as("rk"))
+        (-floor(col("dot") / col("ne") * lit(1e6))).cast(LongType).as("rk"))
       .groupBy(col("q_id"))
       .agg(topk(col("rk"), col("vec_id")).as("picks"))
       .select(col("q_id"), posexplode(col("picks")).as(Seq("pos", "pick")))

@@ -1056,8 +1056,7 @@ object StreamingGate {
           .select(col("vec_id"), col("e").as("embedding")),
           LlmOps.ivfCentroids(s, dir), mn, mx)
         .select(col("vec_id"), col("cell_id"),
-          graft.ArrCanon.joined(expr("transform(codes, c -> CAST(c AS INT))"))
-            .as("codes_str")),
+          graft.ArrCanon.joinedInts(col("codes")).as("codes_str")),
       sink("gate_ivfsq8enc"), mode = "append")
   }
 

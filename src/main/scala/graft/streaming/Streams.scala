@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -502,9 +503,10 @@ object Streams {
   /** Streaming SemDeDup — the streaming twin of the batch
     * `dedup_semantic_keep` operator (Abbas et al. 2023,
     * arXiv:2303.09540). Each arriving vector is assigned to its nearest
-    * k-means cell MAP-SIDE (the same unit-normalized literal-centroid
-    * DotF64 argmax as `Similarity.assignCellsWithSim` — a stateless
-    * projection, so the only exchange is the per-cell state shuffle);
+    * k-means cell MAP-SIDE (the same unit-normalized centroid fan-out
+    * and argmax as `Similarity.assignCellsWithSim`, `unitDots` and
+    * `nearestCell` — a stateless projection, so the only exchange is the
+    * per-cell state shuffle);
     * the state machine is keyed by cell_id and a vector is KEPT iff no
     * EARLIER vector of its cell within the state horizon has cosine
     * ≥ τ. First-seen-wins is the honest streaming policy (the batch
@@ -535,22 +537,16 @@ object Streams {
       cRows: IndexedSeq[(Int, Seq[Double])], tau: Double): DataFrame = {
     import spark.implicits._
     require(cRows.nonEmpty, "semanticDedupStream: empty centroid set")
-    val cellIds = array(cRows.map(r => lit(r._1)): _*)
-    val unitCents = graft.operators.Similarity.unitLiterals(cRows.map(_._2))
     def dotLoop(a: Array[Double], b: Array[Double]): Double = {
       var acc = 0.0; var j = 0
       while (j < a.length) { acc += a(j) * b(j); j += 1 }
       acc
     }
     emb
+      .select(col("vec_id"), col("ts"), Similarity.embDouble.as("e"))
+      .withColumn("sims", Similarity.unitDots(col("e"), cRows.map(_._2)))
       .select(col("vec_id"), col("ts"),
-        transform(col("embedding"), x => x.cast("double")).as("e"))
-      .withColumn("sims",
-        transform(unitCents, cu => graft.functions.DotF64.dotf64(col("e"), cu)))
-      .select(col("vec_id"), col("ts"),
-        element_at(cellIds,
-          array_position(col("sims"), array_max(col("sims"))).cast("int"))
-          .as("cell_id"),
+        Similarity.nearestCell(col("sims"), cRows).as("cell_id"),
         col("e"))
       .withWatermark("ts", "10 minutes")
       // the watermark column itself must reach the grouped Dataset or

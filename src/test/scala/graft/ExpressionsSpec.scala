@@ -170,6 +170,25 @@ class ExpressionsSpec extends AnyFunSuite {
       assert(row.getAs[scala.collection.Seq[Long]]("mm").length == 2)
       assert(row.getAs[org.apache.spark.sql.Row]("ph")
         .getAs[scala.collection.Seq[Long]]("pp").length == 2)
+      // the ANN codec kernels, over a non-foldable vector from a range
+      // scan so that the projection is generated code
+      val e = array(col("id").cast("double"), lit(-0.5), lit(0.25), lit(1.0))
+      val words = IndexedSeq(IndexedSeq(0.0, 0.0), IndexedSeq(-0.5, 0.25))
+      val mn = IndexedSeq(-1.0, -1.0, 0.0, 1.0)
+      val mx = IndexedSeq(1.0, 1.0, 1.0, 1.0)
+      val k = spark.range(1).select(
+          graft.functions.PqEncode.pqEncode(e, words, 1).as("pq"),
+          graft.functions.Sq8Encode.sq8Encode(e, mn, mx).as("sq"),
+          graft.functions.Sq8Decode.sq8Decode(
+            graft.functions.Sq8Encode.sq8Encode(e, mn, mx), mn, mx).as("xhat"),
+          graft.functions.BinaryPack.binaryPack(e, IndexedSeq(0.0, 0.0), 2).as("bp"),
+          graft.functions.DotRows.dotRows(e, words).as("dots"))
+        .head()
+      assert(k.getInt(0) == 1)
+      assert(k.getSeq[Byte](1) == Seq[Byte](0, -64, -64, -128))
+      assert(k.getSeq[Double](2).length == 4)
+      assert(k.getLong(3) == 3L)
+      assert(k.getSeq[Double](4) == Seq(0.0, -0.125))
     } finally {
       prevFactory.fold(conf.unset("spark.sql.codegen.factoryMode"))(v =>
         conf.set("spark.sql.codegen.factoryMode", v))
@@ -334,5 +353,198 @@ class ExpressionsSpec extends AnyFunSuite {
       assert(java.lang.Double.doubleToRawLongBits(f) ==
         java.lang.Double.doubleToRawLongBits(c), s"$f != $c bitwise")
     }
+  }
+
+  // ------------------------------------------------- ANN codec kernels
+  // Each kernel must give, bit for bit, the value of the composed
+  // higher-order chain it replaced (restated here verbatim), on random
+  // vectors and on the edge cases the chain's semantics decide: tied
+  // distances, -0.0 against 0.0, NaN, a constant SQ8 dimension, null
+  // elements and arrays shorter or longer than the literal side.
+
+  private val vecSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("e",
+      org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.DoubleType, containsNull = true))))
+
+  /** Vectors (a null entry is a null element) as an RDD-backed frame,
+    * so the projection is code-generated rather than folded into a
+    * local relation.
+    */
+  private def vectors(vs: Seq[Seq[java.lang.Double]]): org.apache.spark.sql.DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(vs.map(v => org.apache.spark.sql.Row(v)), 2), vecSchema)
+
+  private def boxed(v: Seq[Double]): Seq[java.lang.Double] = v.map(Double.box)
+
+  private def bits(v: Any): Any = v match {
+    case null => null
+    case d: Double => ("d", java.lang.Double.doubleToRawLongBits(d))
+    case xs: scala.collection.Seq[_] => xs.map(bits).toList
+    case other => other
+  }
+
+  /** `kernel` and `chain` agree on every row of `df`, bit for bit, both
+    * code-generated and interpreted.
+    */
+  private def assertSameBits(df: org.apache.spark.sql.DataFrame,
+      kernel: org.apache.spark.sql.Column, chain: org.apache.spark.sql.Column): Unit =
+    Seq(Seq.empty[(String, String)],
+      Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")).foreach { conf =>
+      val rows = withConf(conf: _*) {
+        df.select(col("e"), kernel.as("k"), chain.as("c")).collect()
+      }
+      assert(rows.nonEmpty)
+      rows.foreach { r =>
+        assert(bits(r.get(1)) == bits(r.get(2)),
+          s"${conf.toMap}: e=${r.get(0)} kernel=${r.get(1)} chain=${r.get(2)}")
+      }
+    }
+
+  private def lits(v: Seq[Double]): org.apache.spark.sql.Column = array(v.map(lit): _*)
+
+  private def chainL2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, v) => acc + v)
+
+  test("pq_encode is bit-identical to the composed argmin over l2 folds") {
+    import graft.functions.PqEncode.pqEncode
+    val rnd = new scala.util.Random(11)
+    val dsub = 4
+    // far random words, plus a ±1 pair, a signed-zero pair and a duplicate
+    val cb: IndexedSeq[IndexedSeq[Double]] = (0 until 16).map {
+      case 2 => IndexedSeq(-1.0, 0.0, 0.0, 0.0)
+      case 5 => IndexedSeq(1.0, 0.0, 0.0, 0.0)
+      case 11 => IndexedSeq(0.0, -0.0, 0.0, 0.0)
+      case 12 => IndexedSeq(-0.0, 0.0, -0.0, 0.0)
+      case _ => IndexedSeq.fill(dsub)(2.0 + rnd.nextDouble())
+    }.toIndexedSeq
+    val cbTied = cb.updated(9, cb(4))
+    val random = (1 to 96).map(_ => Seq.fill(8)(rnd.nextDouble() * 6 - 2))
+    val edge = Seq(
+      Seq(0.0, 0.0, 0.0, 0.0, 0.5, 0.0, 0.0, 0.0),     // 0 at 11 and 12; 0.25 at 5 and 11
+      Seq(-0.0, -0.0, -0.0, -0.0, -0.5, 0.0, 0.0, 0.0),
+      cbTied(4) ++ cbTied(9),                          // duplicate words: first wins
+      Seq(Double.NaN, 0.0, 0.0, 0.0, 3.0, 3.0, 3.0, 3.0))
+    val df = vectors((random ++ edge).map(boxed) ++ Seq(
+      Seq[java.lang.Double](0.0, null, 0.0, 0.0, 1.0, 0.0, 0.0, 0.0), // null element
+      boxed(Seq(1.0, 0.0, 0.0, 0.0, 1.0, 0.0)),                     // short
+      boxed(Seq(1.0, 0.0, 0.0)),
+      null))
+    for (book <- Seq(cb, cbTied); offset <- Seq(0, dsub)) {
+      val sub = slice(col("e"), offset + 1, dsub)
+      val d = array(book.map(w => chainL2(sub, lits(w))): _*)
+      assertSameBits(df, pqEncode(col("e"), book, offset),
+        (array_position(d, array_min(d)) - 1).cast("int"))
+    }
+    // the tie cases pick the first index
+    val codes = df.select(pqEncode(col("e"), cbTied, 0)).collect().map(r =>
+      if (r.isNullAt(0)) -1 else r.getInt(0))
+    assert(codes.slice(96, 99).toSeq == Seq(11, 11, 4))
+  }
+
+  private def chainSq8(mn: Seq[Double], mx: Seq[Double]) = {
+    val mnArr = lits(mn)
+    val scArr = array(mn.indices.map(j => lit(mx(j) - mn(j))): _*)
+    zip_with(col("e"), sequence(lit(0), lit(mn.size - 1)), (x, j) => {
+      val m = element_at(mnArr, j.cast("int") + 1)
+      val sc = element_at(scArr, j.cast("int") + 1)
+      when(sc === 0d, lit(-128))
+        .otherwise(floor((x - m) / sc * 255d + 0.5d) - 128L)
+        .cast("tinyint")
+    })
+  }
+
+  // dims 2 and 5 are constant (sc = 0)
+  private val sqMn = Seq(-1.0, 0.25, 0.5, -3.0, 0.0, -0.0)
+  private val sqMx = Seq(1.0, 0.75, 0.5, 4.0, 1e-3, -0.0)
+
+  test("sq8_encode is bit-identical to the composed zip_with quantizer") {
+    import graft.functions.Sq8Encode.sq8Encode
+    val rnd = new scala.util.Random(13)
+    def inside(j: Int) = sqMn(j) + rnd.nextDouble() * (sqMx(j) - sqMn(j))
+    val random = (1 to 96).map(_ => sqMn.indices.map(inside))
+    val df = vectors((random :+ sqMn :+ sqMx :+ Seq(0.0, 0.5, 0.5, -0.0, 5e-4, 0.0))
+      .map(boxed) ++ Seq(
+        Seq[java.lang.Double](0.0, 0.5, null, 0.0, 0.0, 0.0), // null in a constant dim
+        Seq[java.lang.Double](null, 0.5, 0.5, 0.0, 0.0, 0.0),
+        boxed(Seq(0.0, 0.5, 0.5, 0.0)),                     // short: dim 4 null, dim 5 -128
+        boxed(Seq(0.0, 0.5, 0.5, 0.0, 0.0, 0.0, 7.0, 8.0)), // long: extra elements null
+        null))
+    assertSameBits(df, sq8Encode(col("e"), sqMn.toIndexedSeq, sqMx.toIndexedSeq),
+      chainSq8(sqMn, sqMx))
+    val codes = df.select(sq8Encode(col("e"), sqMn.toIndexedSeq, sqMx.toIndexedSeq))
+      .collect().map(_.getSeq[java.lang.Byte](0))
+    assert(codes.take(96).forall(c => c(2) == -128 && c(5) == -128), "constant dims encode as -128")
+    assert(codes(96).map(_.toInt) == Seq(-128, -128, -128, -128, -128, -128))
+    assert(codes(97).map(_.toInt) == Seq(127, 127, -128, 127, 127, -128))
+  }
+
+  test("sq8_decode is bit-identical to the composed zip_with dequantizer") {
+    import graft.functions.Sq8Decode.sq8Decode
+    val rnd = new scala.util.Random(17)
+    val byteSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("e",
+        org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.ByteType, containsNull = true))))
+    def row(v: Seq[java.lang.Byte]) = org.apache.spark.sql.Row(v)
+    val random = (1 to 96).map(_ =>
+      Seq.fill(sqMn.size)(java.lang.Byte.valueOf((rnd.nextInt(256) - 128).toByte)))
+    def b(xs: Int*): Seq[java.lang.Byte] = xs.map(x => java.lang.Byte.valueOf(x.toByte))
+    val edge = Seq(b(-128, -128, -128, -128, -128, -128), b(127, 127, 127, 127, 127, 127),
+      b(0, 1, -1, 0, 1, -1), b(0, 0, 5, 0, 0, 0).updated(1, null),
+      b(1, 2, 3), b(1, 2, 3, 4, 5, 6, 7, 8), null)
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize((random ++ edge).map(row), 2), byteSchema)
+    val mnArr = lits(sqMn)
+    val scArr = array(sqMn.indices.map(j => lit(sqMx(j) - sqMn(j))): _*)
+    val chain = zip_with(col("e"), sequence(lit(0), lit(sqMn.size - 1)),
+      (c, j) => element_at(mnArr, j.cast("int") + 1) +
+        (c.cast("double") + 128d) / 255d * element_at(scArr, j.cast("int") + 1))
+    assertSameBits(df, sq8Decode(col("e"), sqMn.toIndexedSeq, sqMx.toIndexedSeq), chain)
+  }
+
+  test("binary_pack is bit-identical to the composed sign-bit fold, both halves") {
+    import graft.functions.BinaryPack.binaryPack
+    val rnd = new scala.util.Random(19)
+    val thr = IndexedSeq(0.0, -0.0, 0.5, -0.25, 0.1, 0.0, -0.0, 0.3)
+    val half = thr.size / 2
+    val random = (1 to 96).map(_ => Seq.fill(thr.size)(rnd.nextDouble() * 2 - 1))
+    val edge = Seq(
+      Seq(-0.0, 0.0, 0.5, -0.25, 0.1, -0.0, 0.0, 0.3),  // equal to every threshold: all 0
+      Seq(1e-300, 1e-300, 0.6, 0.0, 0.2, 1e-300, 1e-300, 0.4), // just above: all 1
+      Seq(Double.NaN, 0.0, Double.NaN, 0.0, 0.0, Double.NaN, 0.0, Double.NaN),
+      Seq(1.0, 1.0, 1.0, 1.0, 1.0),                     // short: hi half partly missing
+      Seq(1.0, 1.0))                                    // short: hi slice empty
+    val df = vectors((random ++ edge).map(boxed) ++ Seq(
+      Seq[java.lang.Double](1.0, null, 1.0, 1.0, null, 1.0, 1.0, 1.0), null))
+    for (offset <- Seq(0, half)) {
+      val chain = aggregate(
+        zip_with(slice(col("e"), offset + 1, half), lits(thr.slice(offset, offset + half)),
+          (x, t) => when(x > t, 1L).otherwise(0L)),
+        lit(0L), (acc, b) => acc * 2L + b)
+      assertSameBits(df, binaryPack(col("e"), thr.slice(offset, offset + half), offset), chain)
+    }
+    val packed = df.select(binaryPack(col("e"), thr.take(half), 0),
+      binaryPack(col("e"), thr.drop(half), half)).collect().take(99)
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(packed(96) == ((0L, 0L)) && packed(97) == ((15L, 15L)))
+    assert(packed(98) == ((11L, 5L)), "NaN packs as 1 (NaN sorts greatest)")
+  }
+
+  test("dot_rows is bit-identical to the composed transform of dotf64") {
+    import graft.functions.DotF64.dotf64
+    import graft.functions.DotRows.dotRows
+    val rnd = new scala.util.Random(23)
+    val rows = operators.Similarity.unitRows(
+      (1 to 6).map(_ => Seq.fill(8)(rnd.nextGaussian())) :+ Seq.fill(8)(0.0))
+    val random = (1 to 96).map(_ => Seq.fill(8)(rnd.nextGaussian()))
+    val df = vectors((random :+ Seq.fill(8)(-0.0) :+ Seq(1.0, -1.0, 2.0)).map(boxed) ++
+      Seq(Seq[java.lang.Double](1.0, null, 2.0, 0.0, 0.0, 0.0, 0.0, 3.0), null))
+    assertSameBits(df, dotRows(col("e"), rows),
+      transform(array(rows.map(lits): _*), r => dotf64(col("e"), r)))
+    val nulls = df.filter(col("e").isNull).select(dotRows(col("e"), rows)).head()
+    assert(!nulls.isNullAt(0) && nulls.getSeq[java.lang.Double](0).forall(_ == null),
+      "a null vector gives a non-null array of nulls")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Similarity, Skew}
+import graft.operators.{Similarity, SkewJoin}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,14 +13,14 @@ class ScaleOpsSpec extends AnyFunSuite {
 
   test("salted join returns exactly the plain join's rows") {
     val li = Tables.lineitem(spark, sf)
-    val o = Tables.orders(spark, sf).select(col("o_orderkey"), col("o_totalprice"))
+    val o = Tables.orders(spark, sf)
+      .select(col("o_orderkey").as("l_orderkey"), col("o_totalprice"))
     val plain = li
-      .join(o, li("l_orderkey") === o("o_orderkey"))
+      .join(o, Seq("l_orderkey"))
       .select(col("l_orderkey"), col("l_linenumber"), col("o_totalprice"))
-    val salted = Skew
-      .saltedJoin(li, o, "l_orderkey", "o_orderkey",
-        leftIdCols = Seq("l_orderkey", "l_linenumber", "l_partkey"),
-        buckets = 8)
+    val salted = SkewJoin
+      .saltedEquiJoin(li, o, "l_orderkey",
+        hash(col("l_orderkey"), col("l_linenumber"), col("l_partkey")), salts = 8)
       .select(col("l_orderkey"), col("l_linenumber"), col("o_totalprice"))
     assert(salted.count() == plain.count())
     assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
@@ -29,7 +29,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   test("salted join spreads a hot key over buckets") {
     val li = Tables.lineitem(spark, sf)
     val salts = li
-      .select(Skew.salt(Seq(col("l_orderkey"), col("l_linenumber"), col("l_partkey")), 8).as("s"))
+      .select(SkewJoin.salt(Seq(col("l_orderkey"), col("l_linenumber"), col("l_partkey")), 8).as("s"))
       .groupBy(col("s")).count().collect()
     assert(salts.length == 8)
     val counts = salts.map(_.getLong(1).toDouble)
