@@ -2,7 +2,6 @@ package graft.pipeline
 
 import graft.Materialize
 import graft.operators.Dedup
-import graft.queries.LlmOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -73,7 +72,7 @@ object TrainingDataPipeline {
     * pass.
     */
   def nearDedup(docs: DataFrame, cfg: Config): DataFrame = Materialize.releasing {
-    Dedup.dedupCorpus(docs, LlmOps.lshCandidatePairs(docs, maxBucket = cfg.lshMaxBucket)
+    Dedup.dedupCorpus(docs, Dedup.lshCandidatePairs(docs, maxBucket = cfg.lshMaxBucket)
       .filter(col("est_jaccard") >= cfg.lshJaccardThreshold)
       .select(col("id_a"), col("id_b")))
   }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.{Banding, Similarity}
+import graft.operators.{Banding, Dedup, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -11,6 +11,11 @@ import org.apache.spark.sql.types._
   * jaccard — cf. nvtext minhash.hpp:72, jaccard.hpp:73), similarity
   * search over embeddings (brute-force cosine + LSH-bucketed ANN), and
   * multimodal binary-column plumbing.
+  *
+  * This is the query catalogue: the `dedup_*` rows and their oracle
+  * statements live here, while shingles, signatures, band hashes, pair
+  * verifiers and their DuckDB twins are [[graft.operators.Dedup]]'s;
+  * vector search is [[graft.operators.Similarity]]'s.
   *
   * 100 TB posture: every pipeline is blocked/bucketed — candidate pairs
   * come from LSH band buckets or blocking keys, never a full cross join;
@@ -35,48 +40,15 @@ object LlmOps {
       |  count(*) AS n_copies
       |FROM documents GROUP BY md5(text)""".stripMargin
 
-  /** MinHash signature (minhash.hpp:72): k permutations in a single pass
+  /** MinHash signature (minhash.hpp:72): 16 permutations in a single pass
     * via the native [[graft.functions.MinHash64]] expression (one XXH64
     * per shingle + cheap per-permutation mixing; no per-row temporary
     * arrays, unlike the composed transform/array_min formulation).
     */
-  private[graft] def minhashSig(k: Int): Column =
-    graft.functions.MinHash64.minhash64(col("tk"), k)
-
-  /** Distinct word-3-gram shingles over an already-materialized token
-    * array column — the discriminative unit for MinHash (unigram token
-    * sets are near-identical under a small vocabulary).
-    *
-    * Callers must project the tokens into their own column first
-    * (see [[withShingles]]): referencing `split(text)` inside the lambda
-    * would re-split the text per element — O(tokens²) per document,
-    * measured ~20× slower at sf0.1. A multi-referenced alias survives
-    * CollapseProject, so the split really runs once per row.
-    */
-  private[graft] def shinglesOfToks(toks: Column): Column =
-    // Docs with <3 tokens have no 3-shingles. The guard is load-bearing:
-    // sequence(1, 0) defaults its step to -1 and yields [1, 0], whose
-    // element_at(toks, 0) throws under ANSI mode (and diverges from the
-    // oracle's empty range(1, 1)).
-    when(size(toks) < 3, array().cast("array<string>"))
-      .otherwise(array_distinct(
-        transform(
-          sequence(lit(1), size(toks) - 2),
-          i => concat_ws("_", element_at(toks, i), element_at(toks, i + 1),
-            element_at(toks, i + 2)))))
-
-  /** documents → (doc_id, tk = distinct 3-gram shingles), split run once. */
-  private[graft] def withShingles(df: DataFrame): DataFrame =
-    df.select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"), shinglesOfToks(col("toks")).as("tk"))
-
-  /** Back-compat helper for specs: shingles of a text column (two-step). */
-  private[graft] def shingles3(textCol: String): Column =
-    shinglesOfToks(split(col(textCol), " "))
-
   private def minhashSignatures(s: SparkSession, dir: String): DataFrame =
-    withShingles(Tables.documents(s, dir))
-      .select(col("doc_id"), graft.ArrCanon.joined(minhashSig(16)).as("minhash"))
+    Dedup.withShingles(Tables.documents(s, dir))
+      .select(col("doc_id"),
+        graft.ArrCanon.joined(graft.functions.MinHash64.minhash64(col("tk"), 16)).as("minhash"))
 
   /** Oracled twin of the MinHash signature path (ref `nvtext/minhash.hpp:72`
     * semantics: per-permutation min over the shingle set): the permutation
@@ -88,162 +60,41 @@ object LlmOps {
     * empty shingle set → all-null signature) a full hash-checked row.
     */
   private def dedupMinhashPortable(s: SparkSession, dir: String): DataFrame =
-    withShingles(Tables.documents(s, dir))
-      // one NATIVE char fold per shingle (PolyHash31 codegen pass); the
-      // seeded fold factors as (p·31^len + P) mod M — see
-      // polyBandBuckets for the algebra. ph is materialized in its own
-      // projection so both field extractions share one evaluation.
+    Dedup.prehashed(Tables.documents(s, dir))
       .select(col("doc_id"),
-        graft.functions.PolyHash31.polyhash31(col("tk")).as("ph"))
-      .select(col("doc_id"), col("ph.pp").as("pp"), col("ph.ww").as("ww"))
-      .select(col("doc_id"),
-        graft.ArrCanon.joined(expr(
-          """transform(sequence(0, 15), p ->
-            |  array_min(zip_with(pp, ww,
-            |    (h, w) -> (CAST(p AS BIGINT) * w + h) % 1000000007)))""".stripMargin))
-          .as("minhash_portable"))
+        graft.ArrCanon.joined(Dedup.seededPolyMin(16)).as("minhash_portable"))
 
   private val dedupMinhashPortableSql =
-    s"""WITH ${prehashCtes("documents")}
+    s"""WITH ${Dedup.prehashCtes("documents")}
       |SELECT doc_id,
-      |  ${graft.ArrCanon.joinedSql(
-        """list_transform(range(0, 16), p ->
-          |    list_min(list_transform(range(1, len(pp) + 1),
-          |      i -> (CAST(p AS BIGINT) * ww[i] + pp[i]) % 1000000007)))""".stripMargin)} AS minhash_portable
+      |  ${graft.ArrCanon.joinedSql(Dedup.seededPolyMinSql(16))} AS minhash_portable
       |FROM prehashed""".stripMargin
 
-  /** MinHash-LSH near-dup candidate pairs: 4 bands × 4 rows; docs sharing
-    * any band bucket become candidates; est. jaccard = matching minhash
-    * fraction. Scales as O(n · bands) shuffle on band keys. Banding, the
-    * hot-bucket cap (buckets holding more than `maxBucket` docs are
-    * dropped) and the pair distinct are [[Banding.candidatePairs]].
+  /** MinHash-LSH near-dup candidate pairs ([[Dedup.lshCandidatePairs]]:
+    * 4 bands × 4 rows, hot-bucket cap 1000) at est. jaccard ≥ 0.75.
     */
-  private[graft] def lshCandidatePairs(docs: DataFrame, maxBucket: Int): DataFrame =
-    bandAgreement(Banding.candidatePairs(
-      withShingles(graft.Scans.fanOut(docs)).select(col("doc_id"), minhashSig(16).as("mh")),
-      "doc_id", Seq("mh"),
-      expr("transform(sequence(0, 3), b -> xxhash64(mh[b*4], mh[b*4+1], mh[b*4+2], mh[b*4+3]))"),
-      maxBucket))
-
-  /** (id_a, id_b, est_jaccard): the fraction of the 16 signature slots
-    * on which the pair's `mh_a` and `mh_b` agree.
-    */
-  private def bandAgreement(pairs: DataFrame): DataFrame =
-    pairs.select(col("id_a"), col("id_b"),
-      expr("size(filter(zip_with(mh_a, mh_b, (x, y) -> x = y), v -> v)) / CAST(16 AS DOUBLE)")
-        .as("est_jaccard"))
-
   private def dedupMinhashLsh(s: SparkSession, dir: String): DataFrame =
-    lshCandidatePairs(Tables.documents(s, dir), maxBucket = 1000)
+    Dedup.lshCandidatePairs(Tables.documents(s, dir), maxBucket = 1000)
       .filter(col("est_jaccard") >= 0.75)
 
   /** Fully-oracled twin of the COMPLETE MinHash-LSH pipeline — the same
-    * shape as [[lshCandidatePairs]] (4 bands × 4 rows, the shared
-    * banding core, signature agreement as the jaccard estimate, 0.75
-    * threshold) with the portable polynomial permutation family in
-    * place of native XXH64, so DuckDB replicates signatures, buckets,
-    * cap, candidate generation, AND the estimate bit-for-bit.
-    * `dedup_minhash_lsh` stays as the native-speed path; this row
-    * proves the pipeline.
+    * shape as `dedup_minhash_lsh` (4 bands × 4 rows, the shared banding
+    * core, signature agreement as the jaccard estimate, 0.75 threshold)
+    * with the portable polynomial permutation family in place of native
+    * XXH64, so DuckDB replicates signatures, buckets, cap, candidate
+    * generation, AND the estimate bit-for-bit
+    * ([[Dedup.lshPortablePairs]]). `dedup_minhash_lsh` stays as the
+    * native-speed path; this row proves the pipeline.
     */
   private def dedupMinhashLshPortable(s: SparkSession, dir: String): DataFrame =
-    lshPortablePairs(Tables.documents(s, dir))
-
-  /** The portable LSH candidate pipeline over ANY (doc_id, text) corpus —
-    * exposed so compositions (the oracled end-to-end funnel in
-    * [[PipelineOps]]) run the identical signatures/bands/cap/threshold on
-    * a filtered corpus.
-    */
-  private[queries] def lshPortablePairs(docs: DataFrame): DataFrame = {
-    val sigs = withShingles(graft.Scans.fanOut(docs))
-      .select(col("doc_id"),
-        graft.functions.PolyHash31.polyhash31(col("tk")).as("ph"))
-      .select(col("doc_id"), col("ph.pp").as("pp"), col("ph.ww").as("ww"))
-      .select(col("doc_id"), expr(
-        """transform(sequence(0, 15), p ->
-          |  array_min(zip_with(pp, ww,
-          |    (h, w) -> (CAST(p AS BIGINT) * w + h) % 1000000007)))""".stripMargin)
-        .as("mh"))
-    val buckets = expr(
-      """transform(sequence(0, 3), b ->
-        |  (((mh[b*4] * 31 + mh[b*4+1]) % 1000000007 * 31 + mh[b*4+2])
-        |    % 1000000007 * 31 + mh[b*4+3]) % 1000000007)""".stripMargin)
-    bandAgreement(Banding.candidatePairs(sigs, "doc_id", Seq("mh"), buckets, maxBucket = 1000))
-      .filter(col("est_jaccard") >= 0.75)
-  }
-
-  /** DuckDB twin of [[withShingles]] followed by the seed-0 PolyHash31
-    * fold over `src` (any CTE or table with doc_id + text):
-    * `grams(doc_id, tk)` and `prehashed(doc_id, tk, pp, ww)`, where `pp`
-    * is each shingle's char fold and `ww` its 31^len, both mod 1e9+7.
-    */
-  private[queries] def prehashCtes(src: String): String =
-    s"""grams AS (
-      |  SELECT doc_id,
-      |    list_distinct(list_transform(
-      |      range(1, greatest(len(string_split(text, ' ')) - 2, 0) + 1),
-      |      i -> concat(string_split(text, ' ')[i], '_',
-      |                  string_split(text, ' ')[i + 1], '_',
-      |                  string_split(text, ' ')[i + 2]))) AS tk
-      |  FROM $src),
-      |prehashed AS (
-      |  SELECT doc_id, tk,
-      |    list_transform(tk, g ->
-      |      list_reduce(
-      |        list_prepend(CAST(0 AS BIGINT),
-      |          list_transform(range(1, length(g) + 1),
-      |                         i -> CAST(ascii(substring(g, i, 1)) AS BIGINT))),
-      |        (h, c) -> (h * 31 + c) % 1000000007)) AS pp,
-      |    list_transform(tk, g ->
-      |      list_reduce(
-      |        list_prepend(CAST(1 AS BIGINT), range(1, length(g) + 1)),
-      |        (w, i) -> (w * 31) % 1000000007)) AS ww
-      |  FROM grams)""".stripMargin
-
-  /** The portable-LSH oracle pipeline as a CTE-chain FRAGMENT over `src`
-    * (any CTE/table with doc_id + text), ending in `lshcand(id_a, id_b,
-    * est_jaccard)` with the 0.75 threshold applied — embeddable in larger
-    * oracle statements (the funnel query composes it over a filtered
-    * corpus).
-    */
-  private[queries] def lshPortableCtes(src: String): String =
-    s"""${prehashCtes(src)},
-      |sigs AS (
-      |  SELECT doc_id,
-      |    list_transform(range(0, 16), p ->
-      |      list_min(list_transform(range(1, len(pp) + 1),
-      |        i -> (CAST(p AS BIGINT) * ww[i] + pp[i]) % 1000000007))) AS mh
-      |  FROM prehashed),
-      |banded AS (
-      |  SELECT doc_id, mh, band,
-      |    (((mh[band*4 + 1] * 31 + mh[band*4 + 2]) % 1000000007 * 31
-      |      + mh[band*4 + 3]) % 1000000007 * 31 + mh[band*4 + 4])
-      |      % 1000000007 AS bucket
-      |  FROM sigs CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) bands
-      |  WHERE mh[1] IS NOT NULL),
-      |capped AS (
-      |  SELECT * FROM banded
-      |  QUALIFY count(*) OVER (PARTITION BY band, bucket) <= 1000),
-      |lshpairs AS (
-      |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      |  FROM capped a JOIN capped b
-      |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id),
-      |lshcand AS (
-      |  SELECT p.id_a, p.id_b,
-      |    CAST(len(list_filter(list_transform(range(1, 17),
-      |      i -> sa.mh[i] = sb.mh[i]), v -> v)) AS DOUBLE) / 16 AS est_jaccard
-      |  FROM lshpairs p
-      |    JOIN sigs sa ON sa.doc_id = p.id_a
-      |    JOIN sigs sb ON sb.doc_id = p.id_b
-      |  WHERE CAST(len(list_filter(list_transform(range(1, 17),
-      |      i -> sa.mh[i] = sb.mh[i]), v -> v)) AS DOUBLE) / 16 >= 0.75)""".stripMargin
+    Dedup.lshPortablePairs(Tables.documents(s, dir))
 
   private val dedupMinhashLshPortableSql =
-    s"""WITH ${lshPortableCtes("documents")}
+    s"""WITH ${Dedup.lshPortableCtes("documents")}
       |SELECT id_a, id_b, est_jaccard FROM lshcand""".stripMargin
 
   /** Connected-component keeper resolution over the portable LSH pairs,
-    * oracle-checked end to end: Spark runs [[graft.operators.Dedup]]'s
+    * oracle-checked end to end: Spark runs [[Dedup]]'s
     * min-label propagation with pointer doubling (truly O(log diameter)
     * rounds of compact (id, label) shuffles — the 100 TB shape, covering
     * diameter 2^maxIter and FAILING loudly rather than returning partial
@@ -253,7 +104,7 @@ object LlmOps {
     * not just shallow clusters — the oracle row pins it.
     */
   private def dedupCcKeepers(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.resolveKeepers(
+    Dedup.resolveKeepers(
       dedupMinhashLshPortable(s, dir).select(col("id_a"), col("id_b")))
 
   private val dedupCcKeepersSql =
@@ -293,7 +144,7 @@ object LlmOps {
   }
 
   private val dedupSourceMatrixSql =
-    s"""WITH ${lshPortableCtes("documents")},
+    s"""WITH ${Dedup.lshPortableCtes("documents")},
        |m AS (
        |  SELECT least(da.source, db.source) AS src_lo,
        |    greatest(da.source, db.source) AS src_hi
@@ -307,9 +158,7 @@ object LlmOps {
     * signature is the majority vote of bit b across token xxhash64 values.
     */
   private def dedupSimhash(s: SparkSession, dir: String): DataFrame =
-    Tables
-      .documents(s, dir)
-      .transform(withShingles)
+    Dedup.withShingles(Tables.documents(s, dir))
       .select(
         col("doc_id"),
         expr(
@@ -330,13 +179,9 @@ object LlmOps {
     * the throughput path. Empty shingle sets sign as 0 in both engines.
     */
   private def dedupSimhashPortable(s: SparkSession, dir: String): DataFrame =
-    Tables
-      .documents(s, dir)
-      .transform(withShingles)
-      // seed-0 portable hash = PolyHash31's pp, one native pass
-      .select(col("doc_id"),
-        graft.functions.PolyHash31.polyhash31(col("tk")).as("ph"))
-      .select(col("doc_id"), col("ph.pp").as("hs"))
+    // seed-0 portable hash = PolyHash31's pp, one native pass
+    Dedup.prehashed(Tables.documents(s, dir))
+      .select(col("doc_id"), col("pp").as("hs"))
       .select(col("doc_id"), expr(
         """aggregate(sequence(0, 15), 0, (acc, b) -> acc | (CASE WHEN
           |  size(filter(hs, h -> (shiftright(h, b) & 1) = 1)) * 2 > size(hs)
@@ -344,7 +189,7 @@ object LlmOps {
         .as("simhash16"))
 
   private val dedupSimhashPortableSql =
-    s"""WITH ${prehashCtes("documents")}
+    s"""WITH ${Dedup.prehashCtes("documents")}
       |SELECT doc_id,
       |  list_reduce(list_prepend(0, list_transform(range(0, 16), b ->
       |    CASE WHEN len(list_filter(pp, h -> ((h >> b) & 1) = 1)) * 2 > len(pp)
@@ -359,84 +204,21 @@ object LlmOps {
     * The round-1 shape blocked on (lang, len_bucket); those blocks grow
     * linearly with the corpus, so the within-block self-join was
     * quadratic at scale. Candidates now come from 4 one-row minhash
-    * bands. The band hash is a portable polynomial char hash (the same
-    * fold both engines compute bit-identically) rather than the engine's
-    * native XXH64 — semantics match `lshCandidatePairs`, and the DuckDB
-    * oracle can replicate it exactly. A pair is a candidate with
-    * probability 1-(1-J)^4 — every surviving pair is then verified with
-    * exact jaccard, so false candidates cost work, never correctness.
+    * bands ([[Dedup.ngramJaccardPairs]]). The band hash is the portable
+    * seeded poly-min (the same fold both engines compute bit-identically)
+    * rather than the engine's native XXH64, so the DuckDB oracle can
+    * replicate it exactly. The verify payload is the distinct int64
+    * poly-hash set of the shingles, not the string 3-grams.
     */
   private def dedupNgramJaccard(s: SparkSession, dir: String): DataFrame =
-    ngramJaccardPairs(Tables.documents(s, dir), maxBucket = 1000)
-
-  /** Per-document distinct hashed-shingle sets: (doc_id, hs, pp, ww)
-    * where `pp`/`ww` are the seed-0 poly-hash and 31^len arrays the band
-    * hashes are derived from. Shared by the self-join dedup
-    * ([[ngramJaccardPairs]]) and the incremental index
-    * ([[dedupIncrementalLsh]]).
-    */
-  private def prehashedShingles(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .select(col("doc_id"), shinglesOfToks(col("toks")).as("g3"))
-      .select(col("doc_id"),
-        graft.functions.PolyHash31.polyhash31(col("g3")).as("ph"))
-      .select(col("doc_id"),
-        array_distinct(col("ph.pp")).as("hs"),
-        col("ph.pp").as("pp"), col("ph.ww").as("ww"))
-
-  /** One minhash per band: min over shingles of the poly-hash seeded by
-    * band. The seeded fold factors algebraically: h_b(g) = (b·31^len(g)
-    * + P(g)) mod M with P = the seed-0 fold — so each shingle is
-    * char-folded ONCE (computing P and 31^len together), and every
-    * band hash is an O(1) combination instead of its own char fold.
-    * Residues are unchanged (each fold step reduces mod M), so the
-    * bucket values — and the DuckDB oracle — are bit-identical to the
-    * naive per-band fold. The pp/ww arrays are materialized in their
-    * own projection ([[prehashedShingles]]): a lambda reference would
-    * re-run the fold per band. Null for a doc with no shingles.
-    */
-  private def polyBandBuckets: Column = expr(
-    """transform(sequence(0, 3), b ->
-      |  array_min(zip_with(pp, ww,
-      |    (p, w) -> (CAST(b AS BIGINT) * w + p) % 1000000007)))""".stripMargin)
-
-  /** Exact jaccard of the pair's hashed-shingle sets `hs_a` and `hs_b`. */
-  private def setJaccard: Column =
-    size(array_intersect(col("hs_a"), col("hs_b"))).cast(DoubleType) /
-      size(array_union(col("hs_a"), col("hs_b")))
-
-  /** See [[dedupNgramJaccard]]. The payload that rides the exchange and
-    * the verify join is the DISTINCT int64 poly-hash set of the shingles
-    * (`hs`), NOT the string 3-gram arrays — the hashes are already
-    * computed for banding, a bigint weighs a fraction of a
-    * `tokA_tokB_tokC` string, and the oracle computes the identical fold
-    * so the check stays bit-exact. Jaccard over hashed sets equals
-    * jaccard over shingle sets unless two distinct shingles of the SAME
-    * doc pair collide mod 1e9+7 (union ≤ ~2·10³ shingles → collision
-    * odds ~10⁻³ per pair, and both engines agree regardless); the verify
-    * stage was always an estimate-of-exact step, so the contract is
-    * unchanged.
-    */
-  private[graft] def ngramJaccardPairs(docs: DataFrame, maxBucket: Int): DataFrame =
-    candidatePairSets(docs, maxBucket)
-      .select(col("id_a"), col("id_b"), setJaccard.as("jaccard3"))
-      .filter(col("jaccard3") >= 0.2)
-
-  /** Shared candidate stage of the n-gram verify family: banded LSH
-    * candidate pairs with both docs' distinct hashed-shingle sets
-    * attached — (id_a, id_b, hs_a, hs_b); consumed by the jaccard and
-    * containment verifiers.
-    */
-  private def candidatePairSets(docs: DataFrame, maxBucket: Int): DataFrame =
-    Banding.candidatePairs(prehashedShingles(graft.Scans.fanOut(docs)),
-      "doc_id", Seq("hs"), polyBandBuckets, maxBucket)
+    Dedup.ngramJaccardPairs(Tables.documents(s, dir), maxBucket = 1000)
 
   /** Containment near-dup — the ASYMMETRIC verify metric over the same
-    * banded candidates as [[ngramJaccardPairs]]: cont_a = |A∩B|/|A| is
-    * ~1 when doc A is quoted wholesale inside doc B even though jaccard
-    * |A∩B|/|A∪B| stays low — the quote-extraction / boilerplate-inclusion
-    * case symmetric jaccard dedup misses (overlap coefficient; cf. the
+    * banded candidates as `dedup_ngram_jaccard`
+    * ([[Dedup.containmentPairs]]): cont_a = |A∩B|/|A| is ~1 when doc A
+    * is quoted wholesale inside doc B even though jaccard |A∩B|/|A∪B|
+    * stays low — the quote-extraction / boilerplate-inclusion case
+    * symmetric jaccard dedup misses (overlap coefficient; cf. the
     * reference's jaccard surface `nvtext/jaccard.hpp:73`).
     *
     * Declared recall contract: candidates come from the SHARED
@@ -447,49 +229,10 @@ object LlmOps {
     * emitted (direction matters downstream: cut the contained doc, keep
     * the container), thresholded on the larger one.
     */
-  private[graft] def containmentPairs(docs: DataFrame, maxBucket: Int): DataFrame =
-    candidatePairSets(docs, maxBucket)
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("hs_a"), col("hs_b"))).cast(DoubleType).as("inter"),
-        size(col("hs_a")).as("na"), size(col("hs_b")).as("nb"))
-      .select(col("id_a"), col("id_b"),
-        round(col("inter") / col("na"), 6).as("cont_a_6dp"),
-        round(col("inter") / col("nb"), 6).as("cont_b_6dp"))
-      .filter(greatest(col("cont_a_6dp"), col("cont_b_6dp")) >= 0.5)
-
   private def dedupContainment(s: SparkSession, dir: String): DataFrame =
-    containmentPairs(Tables.documents(s, dir), maxBucket = 1000)
+    Dedup.containmentPairs(Tables.documents(s, dir), maxBucket = 1000)
 
-  /** The n-gram family's DuckDB band CTEs over `documents`: the shared
-    * prehash, then `hsets(doc_id, hs)` and the uncapped
-    * `banded(doc_id, band, bucket)` — the SQL mirror of
-    * [[prehashedShingles]] and [[polyBandBuckets]].
-    */
-  private val ngramBandCtes =
-    s"""WITH ${prehashCtes("documents")},
-      |hsets AS (
-      |  SELECT doc_id, list_distinct(pp) AS hs FROM prehashed),
-      |banded AS (
-      |  SELECT doc_id, band,
-      |    list_min(list_transform(range(1, len(pp) + 1),
-      |      i -> (CAST(band AS BIGINT) * ww[i] + pp[i]) % 1000000007)) AS bucket
-      |  FROM prehashed CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS band) bands
-      |  WHERE len(tk) > 0)""".stripMargin
-
-  /** [[ngramBandCtes]] plus the capped self-join `pairs(id_a, id_b)` —
-    * the SQL mirror of [[candidatePairSets]].
-    */
-  private val ngramCandidateCtes =
-    ngramBandCtes + """,
-      |capped AS (
-      |  SELECT * FROM banded
-      |  QUALIFY count(*) OVER (PARTITION BY band, bucket) <= 1000),
-      |pairs AS (
-      |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      |  FROM capped a JOIN capped b
-      |    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id)""".stripMargin
-
-  private val dedupNgramJaccardSql = ngramCandidateCtes + "\n" +
+  private val dedupNgramJaccardSql = Dedup.ngramCandidateCtes + "\n" +
     """SELECT p.id_a, p.id_b,
       |  CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE) /
       |    len(list_distinct(ha.hs || hb.hs)) AS jaccard3
@@ -499,7 +242,7 @@ object LlmOps {
       |WHERE CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE) /
       |    len(list_distinct(ha.hs || hb.hs)) >= 0.2""".stripMargin
 
-  private val dedupContainmentSql = ngramCandidateCtes + "\n" +
+  private val dedupContainmentSql = Dedup.ngramCandidateCtes + "\n" +
     """SELECT p.id_a, p.id_b,
       |  round(CAST(len(list_intersect(ha.hs, hb.hs)) AS DOUBLE)
       |        / len(ha.hs), 6) AS cont_a_6dp,
@@ -520,10 +263,11 @@ object LlmOps {
     * capped (band, bucket, doc_id) rows plus a (doc_id, hs) signature
     * store — is built and written ONCE per dataset per JVM
     * ([[graft.DimCache]], the write-once/query-many contract shared with
-    * join_bucketed and the PQ codes index), so steady-state cost is
-    * proportional to the DELTA, not the corpus: the delta is banded
-    * map-side, joined to the bucket index on compact (band, bucket)
-    * keys, and only matched pairs touch the signature store. That is
+    * join_bucketed and the PQ codes index; [[Dedup.buildLshIndex]]), so
+    * steady-state cost is proportional to the DELTA, not the corpus
+    * ([[Dedup.incrementalLshPairs]]): the delta is banded map-side,
+    * joined to the bucket index on compact (band, bucket) keys, and only
+    * matched pairs touch the signature store. That is
     * the shape a 100 TB ingest actually runs daily — the alternative
     * (re-running self-join dedup over corpus+delta) re-pays the whole
     * corpus every batch. Hot corpus buckets are capped at index-build
@@ -536,50 +280,19 @@ object LlmOps {
   private def dedupIncrementalLsh(s: SparkSession, dir: String): DataFrame = {
     val idxDir = graft.DimCache.cached(s"lsh-index:$dir") {
       val p = graft.DimCache.artifactPath("lshidx", dir)
-      buildLshIndex(
+      Dedup.buildLshIndex(
         Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(10)) =!= 0), p)
       p
     }
-    incrementalLshPairs(s,
+    Dedup.incrementalLshPairs(s,
       Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(10)) === 0), idxDir)
-  }
-
-  /** Write the corpus LSH index: capped (band, bucket, doc_id) rows
-    * under `path`/buckets plus the (doc_id, hs) signature store under
-    * `path`/sigs. See [[dedupIncrementalLsh]].
-    */
-  private def buildLshIndex(corpus: DataFrame, path: String): Unit = {
-    val pre = prehashedShingles(corpus)
-    Banding.capHotBuckets(Banding.bands(pre, "doc_id", Nil, polyBandBuckets), 1000)
-      .write.mode("overwrite").parquet(path + "/buckets")
-    pre.select(col("doc_id"), col("hs"))
-      .write.mode("overwrite").parquet(path + "/sigs")
-  }
-
-  /** The steady-state delta query of [[dedupIncrementalLsh]]: the delta
-    * is the a side of the bucket join, the index side is compact ids (a
-    * small delta broadcasts, so the index streams map-side), and the
-    * corpus signature re-attaches by id after the pair distinct.
-    */
-  private def incrementalLshPairs(
-      s: SparkSession, deltaDocs: DataFrame, idxDir: String): DataFrame = {
-    val delta =
-      Banding.bands(prehashedShingles(deltaDocs), "doc_id", Seq("hs"), polyBandBuckets)
-        .select(col("band"), col("bucket"), col("doc_id").as("id_a"), col("hs").as("hs_a"))
-    val joined = delta.join(
-      s.read.parquet(idxDir + "/buckets").withColumnRenamed("doc_id", "id_b"),
-      Seq("band", "bucket"))
-    Banding.withB(Banding.distinctPairs(joined, Seq("hs")),
-        s.read.parquet(idxDir + "/sigs"), "doc_id", Seq("hs"))
-      .select(col("id_a").as("id_d"), col("id_b").as("id_c"), setJaccard.as("jaccard3"))
-      .filter(col("jaccard3") >= 0.2)
   }
 
   /** DuckDB twin of [[dedupIncrementalLsh]]: same prehash/band CTEs as
     * the self-join oracle, split into corpus (capped) and delta sides.
     */
   private val dedupIncrementalLshSql =
-    ngramBandCtes + """,
+    Dedup.ngramBandCtes + """,
       |corpus AS (
       |  SELECT * FROM banded WHERE doc_id % 10 != 0
       |  QUALIFY count(*) OVER (PARTITION BY band, bucket) <= 1000),
@@ -3266,7 +2979,7 @@ object LlmOps {
     * assignment is the portable Lehmer fold mod 10 → 8/1/1.
     *
     * Scale: reuses the O(log diameter) pointer-doubling components
-    * ([[graft.operators.Dedup.resolveKeepers]]); the split itself adds
+    * ([[Dedup.resolveKeepers]]); the split itself adds
     * one broadcast-or-shuffle left join on doc_id and a map-side hash.
     */
   /** The corpus near-dup PAIR set as a persisted artifact — written once
@@ -3299,7 +3012,7 @@ object LlmOps {
   private def lshKeepersDir(s: SparkSession, dir: String): String =
     graft.DimCache.cached(s"lsh-keepers:$dir") {
       val p = graft.DimCache.artifactPath("lshkeep", dir)
-      graft.operators.Dedup.resolveKeepers(
+      Dedup.resolveKeepers(
           s.read.parquet(lshPairsDir(s, dir)))
         .write.mode("overwrite").parquet(p)
       p

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.operators.Dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -70,8 +71,8 @@ object PipelineOps {
       Seq("doc_id"), "leftsemi")
     // stage 4: near-dedup — portable LSH candidates over the SURVIVING
     // corpus + component keepers (keeper = component min, singletons keep)
-    val nd = graft.operators.Dedup.dedupCorpus(ex,
-      LlmOps.lshPortablePairs(ex).select(col("id_a"), col("id_b")))
+    val nd = Dedup.dedupCorpus(ex,
+      Dedup.lshPortablePairs(ex).select(col("id_a"), col("id_b")))
     // stage 5: benchmark decontamination — drop survivors sharing any
     // 4-gram with the held-out stand-in (doc_id % 100 == 0 of the RAW
     // corpus, the decontaminate_ngrams convention)
@@ -111,7 +112,7 @@ object PipelineOps {
        |ex AS (
        |  SELECT * FROM l WHERE doc_id IN (
        |    SELECT min(doc_id) FROM l GROUP BY md5(text))),
-       |${LlmOps.lshPortableCtes("ex")},
+       |${Dedup.lshPortableCtes("ex")},
        |edges AS (
        |  SELECT id_a AS a, id_b AS b FROM lshcand
        |  UNION

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{DimCache, Q, Tables}
+import graft.operators.Dedup
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -704,21 +705,6 @@ object StreamingGate {
       |  t.tvd_micro
       |FROM cur c JOIN tvd t ON c.win_us = t.win_us""".stripMargin
 
-  // ------------------------------------------------------ stream_near_dedup
-  /** Streaming MinHash near-dedup through the watermark-bounded state
-    * store, oracled end-to-end: the replay doubles the corpus (same
-    * texts under shifted doc_ids, ≤100 s apart — inside the 10-minute
-    * horizon), the stream drops signature collisions, and the sink's
-    * surviving signature set must equal the distinct portable-minhash
-    * signatures of the doubled corpus recomputed in pure SQL (short and
-    * null docs keyed by their own doc_id — not near-dedup candidates,
-    * the batch rule). Output is (sig, n_rows) with n_rows = 1 required
-    * everywhere: a missed dedup would surface as n_rows = 2, a dropped
-    * non-duplicate as a missing sig row. Signature-set comparison makes
-    * the gate independent of WHICH collider survives (arrival order).
-    * The NUL byte in the short-doc key is re-encoded ':' for the
-    * oracle (DuckDB varchars cannot carry NUL).
-    */
   // ---------------------------------------------- stream_semantic_dedup
   /** Streaming SemDeDup (`Streams.semanticDedupStream`): the embeddings
     * table replayed as a stream (deterministic synthetic event time —
@@ -879,6 +865,21 @@ object StreamingGate {
       |  doc_id, CAST(n_shared_grams AS BIGINT) AS n_shared_grams
       |FROM contam""".stripMargin
 
+  // ------------------------------------------------------ stream_near_dedup
+  /** Streaming MinHash near-dedup through the watermark-bounded state
+    * store, oracled end-to-end: the replay doubles the corpus (same
+    * texts under shifted doc_ids, ≤100 s apart — inside the 10-minute
+    * horizon), the stream drops signature collisions, and the sink's
+    * surviving signature set must equal the distinct portable-minhash
+    * signatures of the doubled corpus recomputed in pure SQL (short and
+    * null docs keyed by their own doc_id — not near-dedup candidates,
+    * the batch rule). Output is (sig, n_rows) with n_rows = 1 required
+    * everywhere: a missed dedup would surface as n_rows = 2, a dropped
+    * non-duplicate as a missing sig row. Signature-set comparison makes
+    * the gate independent of WHICH collider survives (arrival order).
+    * The NUL byte in the short-doc key is re-encoded ':' for the
+    * oracle (DuckDB varchars cannot carry NUL).
+    */
   private def streamNearDedup(s: SparkSession, dir: String): DataFrame = {
     val d = DimCache.cached(s"gate-stage-neardup:$dir") {
       val t = DimCache.tempDir("graft-gate-neardup")
@@ -906,15 +907,11 @@ object StreamingGate {
     s"""WITH all_docs AS (
       |  SELECT doc_id, text FROM documents
       |  UNION ALL SELECT doc_id + 1000000, text FROM documents),
-      |${LlmOps.prehashCtes("all_docs")},
+      |${Dedup.prehashCtes("all_docs")},
       |sigs AS (
       |  SELECT CASE WHEN coalesce(len(pp), 0) = 0
       |    THEN 'doc:' || CAST(doc_id AS VARCHAR)
-      |    ELSE ${graft.ArrCanon.joinedSql(
-        """list_transform(range(0, 16), p ->
-          |    list_min(list_transform(range(1, len(pp) + 1),
-          |      i -> (CAST(p AS BIGINT) * ww[i] + pp[i]) % 1000000007)))"""
-          .stripMargin)} END AS sig
+      |    ELSE ${graft.ArrCanon.joinedSql(Dedup.seededPolyMinSql(16))} END AS sig
       |  FROM prehashed)
       |SELECT sig, CAST(1 AS BIGINT) AS n_rows
       |FROM (SELECT DISTINCT sig FROM sigs)""".stripMargin

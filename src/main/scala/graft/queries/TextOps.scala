@@ -494,6 +494,25 @@ object TextOps {
       |SELECT doc_id, n AS n_tokens, (s2 * 1000000) // (n * n) AS simpson_micro
       |FROM a""".stripMargin
 
+  /** The hashed word-3-grams of a document from its per-token poly-hash
+    * array `tp`: (h₁·P + h₂)·P + h₃ mod M per 3-gram, P = 1000003,
+    * M = 1e9+7. Empty below 3 tokens (sequence(1, 0) would count down).
+    * The KMV sketches' shingle universe.
+    */
+  private def tokenTrigramHashes: Column =
+    when(size(col("tp")) < 3, expr("CAST(array() AS ARRAY<BIGINT>)"))
+      .otherwise(expr(
+        """transform(sequence(1, size(tp) - 2),
+          |  i -> ((tp[i - 1] * 1000003 + tp[i]) % 1000000007 * 1000003
+          |        + tp[i + 1]) % 1000000007)""".stripMargin))
+
+  /** DuckDB twin of [[tokenTrigramHashes]]: the hash of the 3-gram at
+    * 1-based token `i`, over a row `tp` unnested with
+    * `range(1, greatest(len(tp) - 2, 0) + 1)`.
+    */
+  private val tokenTrigramHashSql =
+    "((tp[i] * 1000003 + tp[i + 1]) % 1000000007 * 1000003 + tp[i + 2]) % 1000000007"
+
   /** KMV (k-minimum-values) distinct-shingle estimate — the ORACLED member
     * of the approx-distinct sketch family. `agg_approx_distinct` (HLL) is
     * rows-only because the engine's register layout is native; KMV over
@@ -533,11 +552,7 @@ object TextOps {
       .select(split(col("text"), " ").as("toks"))
       .select(graft.functions.PolyHash31
         .polyhash31(col("toks")).getField("pp").as("tp"))
-      .select(explode(when(size(col("tp")) < 3, expr("CAST(array() AS ARRAY<BIGINT>)"))
-        .otherwise(expr(
-          """transform(sequence(1, size(tp) - 2),
-            |  i -> ((tp[i - 1] * 1000003 + tp[i]) % 1000000007 * 1000003
-            |        + tp[i + 1]) % 1000000007)""".stripMargin))).as("h"))
+      .select(explode(tokenTrigramHashes).as("h"))
       .distinct()
       .agg(topk(col("h"), col("h")).as("arr"),
         count(lit(1)).as("exact_distinct"))
@@ -552,7 +567,7 @@ object TextOps {
   }
 
   private val sketchKmvDistinctSql =
-    """WITH tp AS (
+    s"""WITH tp AS (
       |  SELECT list_transform(string_split(text, ' '), t ->
       |    list_reduce(list_prepend(CAST(0 AS BIGINT),
       |      list_transform(range(1, length(t) + 1),
@@ -560,9 +575,7 @@ object TextOps {
       |      (h, c) -> (h * 31 + c) % 1000000007)) AS tp
       |  FROM documents),
       |hashes AS (
-      |  SELECT DISTINCT
-      |    ((tp[i] * 1000003 + tp[i + 1]) % 1000000007 * 1000003
-      |     + tp[i + 2]) % 1000000007 AS h
+      |  SELECT DISTINCT $tokenTrigramHashSql AS h
       |  FROM tp, unnest(range(1, greatest(len(tp) - 2, 0) + 1)) AS u(i)),
       |kmin AS (
       |  SELECT max(h) AS kth_min, count(*) AS nk
@@ -613,11 +626,7 @@ object TextOps {
       .select(col("corpus"), graft.functions.PolyHash31
         .polyhash31(col("toks")).getField("pp").as("tp"))
       .select(col("corpus"),
-        explode(when(size(col("tp")) < 3, expr("CAST(array() AS ARRAY<BIGINT>)"))
-          .otherwise(expr(
-            """transform(sequence(1, size(tp) - 2),
-              |  i -> ((tp[i - 1] * 1000003 + tp[i]) % 1000000007 * 1000003
-              |        + tp[i + 1]) % 1000000007)""".stripMargin))).as("h"))
+        explode(tokenTrigramHashes).as("h"))
       .distinct()
     val topk = udaf(new graft.agg.TopKAgg(k))
     val sk = dfh.groupBy(col("corpus"))
@@ -654,7 +663,7 @@ object TextOps {
   }
 
   private val sketchKmvOverlapSql =
-    """WITH tp AS (
+    s"""WITH tp AS (
       |  SELECT list_reduce(list_prepend(CAST(0 AS BIGINT),
       |      list_transform(range(1, length(source) + 1),
       |        i -> CAST(ascii(substring(source, i, 1)) AS BIGINT))),
@@ -666,9 +675,7 @@ object TextOps {
       |        (h, c) -> (h * 31 + c) % 1000000007)) AS tp
       |  FROM documents),
       |dfh AS (
-      |  SELECT DISTINCT corpus,
-      |    ((tp[i] * 1000003 + tp[i + 1]) % 1000000007 * 1000003
-      |     + tp[i + 2]) % 1000000007 AS h
+      |  SELECT DISTINCT corpus, $tokenTrigramHashSql AS h
       |  FROM tp, unnest(range(1, greatest(len(tp) - 2, 0) + 1)) AS u(i)),
       |a0 AS (SELECT h FROM dfh WHERE corpus = 0 ORDER BY h LIMIT 256),
       |a1 AS (SELECT h FROM dfh WHERE corpus = 1 ORDER BY h LIMIT 256),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.Similarity
+import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -449,53 +449,40 @@ object Streams {
 
   /** Streaming NEAR-dup with bounded state: the streaming twin of the
     * MinHash dedup pipeline. Each document's 16-permutation minhash
-    * signature is computed map-side (stateless projection through the
-    * native MinHash64 expression), canonicalized to one string key, and
-    * near-duplicates -- texts whose full signatures collide -- are dropped
-    * within the watermark horizon. Signature equality is the strictest
-    * LSH band (16 of 16 rows agreeing => est. jaccard 1.0), the right
-    * streaming trade: per-band state multiplies the store xbands, while
-    * full-signature state stays one row per surviving doc inside the
-    * watermark window.
+    * signature is computed map-side (a stateless projection over
+    * [[Dedup.withShingles]], the split run once per row), canonicalized
+    * to one string key, and near-duplicates -- texts whose full
+    * signatures collide -- are dropped within the watermark horizon.
+    * Signature equality is the strictest LSH band (16 of 16 rows
+    * agreeing => est. jaccard 1.0), the right streaming trade: per-band
+    * state multiplies the store xbands, while full-signature state stays
+    * one row per surviving doc inside the watermark window.
     *
     * Documents too short to shingle (< 3 tokens, or null text) are NOT
     * candidates for near-dedup -- the batch pipeline excludes empty
     * shingle sets from candidacy, and the streaming twin must match:
     * they pass through untouched, keyed by their own `doc_id` so no two
     * distinct short documents can ever collide in the state store.
-    */
-  /** @param portable signature family: `false` (default) = the native
+    *
+    * @param portable signature family: `false` (default) = the native
     *   XXH64 MinHash64 expression (the throughput path); `true` = the
     *   seeded polynomial char-hash permutations of
-    *   `dedup_minhash_portable` -- bit-reproducible in ANSI SQL, which is
-    *   what lets the streaming gate oracle this op in DuckDB.
+    *   `dedup_minhash_portable` ([[Dedup.seededPolyMin]]) --
+    *   bit-reproducible in ANSI SQL, which is what lets the streaming
+    *   gate oracle this op in DuckDB.
     */
   def nearDedupStream(docs: DataFrame, tsCol: String,
       portable: Boolean = false): DataFrame = {
-    val toks = split(col("text"), " ")
-    val shingles = when(size(toks) < 3, array().cast("array<string>"))
-      .otherwise(array_distinct(
-        transform(sequence(lit(1), size(toks) - 2),
-          i => concat_ws("_", element_at(toks, i), element_at(toks, i + 1),
-            element_at(toks, i + 2)))))
-    val sigOfTk: DataFrame => DataFrame =
-      if (portable)
-        _.withColumn("ph", graft.functions.PolyHash31.polyhash31(col("tk")))
-          .withColumn("sigv", expr(
-            """transform(sequence(0, 15), p ->
-              |  array_min(zip_with(ph.pp, ph.ww,
-              |    (h, w) -> (CAST(p AS BIGINT) * w + h) % 1000000007)))"""
-              .stripMargin))
-          .drop("ph")
-      else
-        _.withColumn("sigv",
-          graft.functions.MinHash64.minhash64(col("tk"), 16))
-    sigOfTk(docs.withColumn("tk", shingles))
-      .withColumn("sig",
+    val cols = docs.columns.toSeq
+    val sigs =
+      if (portable) Dedup.prehashed(docs, cols).withColumn("sigv", Dedup.seededPolyMin(16))
+      else Dedup.withShingles(docs, cols)
+        .withColumn("sigv", graft.functions.MinHash64.minhash64(col("tk"), 16))
+    sigs
+      .select(cols.map(col) :+
         when(col("tk").isNull || size(col("tk")) === 0,
           concat(lit("doc\u0000"), col("doc_id").cast("string")))
-          .otherwise(graft.ArrCanon.joined(col("sigv"))))
-      .drop("tk", "sigv")
+          .otherwise(graft.ArrCanon.joined(col("sigv"))).as("sig"): _*)
       .withWatermark(tsCol, "10 minutes")
       .dropDuplicatesWithinWatermark("sig")
   }

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
 import graft.operators.{Banding, Dedup}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -44,7 +47,7 @@ class DedupBucketSpec extends AnyFunSuite {
     val doubled = AmplifiedBench.replicate(docs, 2,
       Map("doc_id" -> AmplifiedBench.keyStep(docs, "doc_id")))
     def keepers(d: org.apache.spark.sql.DataFrame): Set[Long] = {
-      val pairs = queries.LlmOps.lshCandidatePairs(d, maxBucket = 1000)
+      val pairs = Dedup.lshCandidatePairs(d, maxBucket = 1000)
         .filter(col("est_jaccard") >= 0.75)
         .select(col("id_a"), col("id_b"))
       Dedup.dedupCorpus(d, pairs).select(col("doc_id")).collect()
@@ -108,11 +111,11 @@ class DedupBucketSpec extends AnyFunSuite {
       Seq((100L, distinct1), (101L, distinct2))
     val docs = spark.createDataFrame(rows).toDF("doc_id", "text")
 
-    val uncapped = queries.LlmOps.lshCandidatePairs(docs, maxBucket = Int.MaxValue)
+    val uncapped = Dedup.lshCandidatePairs(docs, maxBucket = Int.MaxValue)
     // 40 template docs → 40*39/2 = 780 quadratic pairs without the cap
     assert(uncapped.count() >= 780)
 
-    val capped = queries.LlmOps.lshCandidatePairs(docs, maxBucket = 10)
+    val capped = Dedup.lshCandidatePairs(docs, maxBucket = 10)
     val cappedPairs = capped.collect().map(r => (r.getLong(0), r.getLong(1)))
     // the hot template bucket is dropped entirely...
     assert(!cappedPairs.exists { case (a, b) => a <= 40L && b <= 40L })
@@ -188,10 +191,10 @@ class DedupBucketSpec extends AnyFunSuite {
       Seq((100L, distinct1), (101L, distinct2))
     val docs = spark.createDataFrame(rows).toDF("doc_id", "text")
 
-    val uncapped = queries.LlmOps.ngramJaccardPairs(docs, maxBucket = Int.MaxValue)
+    val uncapped = Dedup.ngramJaccardPairs(docs, maxBucket = Int.MaxValue)
     assert(uncapped.count() >= 780)
 
-    val capped = queries.LlmOps.ngramJaccardPairs(docs, maxBucket = 10)
+    val capped = Dedup.ngramJaccardPairs(docs, maxBucket = 10)
     val cappedPairs = capped.collect().map(r => (r.getLong(0), r.getLong(1)))
     // the hot template bucket is dropped entirely...
     assert(!cappedPairs.exists { case (a, b) => a <= 40L && b <= 40L })
@@ -208,7 +211,7 @@ class DedupBucketSpec extends AnyFunSuite {
     val docs = spark
       .createDataFrame(Seq((1L, longDoc), (2L, shortDoc), (3L, noise)))
       .toDF("doc_id", "text")
-    val got = queries.LlmOps.containmentPairs(docs, maxBucket = 1000)
+    val got = Dedup.containmentPairs(docs, maxBucket = 1000)
       .collect().map(r => ((r.getLong(0), r.getLong(1)),
         (r.getDouble(2), r.getDouble(3)))).toMap
     assert(got.contains((1L, 2L)), s"pair not surfaced: $got")
@@ -217,10 +220,31 @@ class DedupBucketSpec extends AnyFunSuite {
     assert(contLong < 0.5, s"container side stays low, got $contLong")
     // the same pair's jaccard is under 0.5 — the asymmetric metric is
     // what surfaces wholesale quotation
-    val j = queries.LlmOps.ngramJaccardPairs(docs, maxBucket = 1000)
+    val j = Dedup.ngramJaccardPairs(docs, maxBucket = 1000)
       .filter(col("id_a") === 1L && col("id_b") === 2L)
       .collect().map(_.getDouble(2))
     assert(j.forall(_ < 0.5), s"jaccard ${j.toSeq}")
+  }
+
+  test("the shingle, the seeded poly-min and the prehash CTE are written once, in Dedup") {
+    // a restated copy drifts from its oracle twin and multiplies the
+    // sites a native kernel has to replace
+    val root = Paths.get("src/main/scala/graft")
+    assume(Files.isDirectory(root), s"run from the repo root (cwd=${Paths.get("").toAbsolutePath})")
+    val sources = Files.walk(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
+    val pieces = Seq(
+      "word-3-gram shingle lambda" -> """concat_ws\("_", element_at\(""".r,
+      "Spark seeded poly-min" -> """(?s)zip_with\([^%]{0,120}% 1000000007""".r,
+      "DuckDB seeded poly-min" -> """(?s)list_min\(list_transform\([^%]{0,120}% 1000000007""".r,
+      "31-fold prehash CTE" -> """prehashed AS \(""".r)
+    val sites = for ((piece, re) <- pieces) yield piece -> sources.flatMap { case (f, src) =>
+      Seq.fill(re.findAllIn(src).size)(f)
+    }
+    val wrong = sites.filter(_._2 != Seq("operators/Dedup.scala"))
+    assert(wrong.isEmpty, wrong.map { case (p, fs) => s"$p at ${fs.mkString(", ")}" }
+      .mkString("expected once, in operators/Dedup.scala: ", "; ", ""))
   }
 
   test("bucketed tables join without a shuffle exchange") {
@@ -261,7 +285,7 @@ class DedupBucketSpec extends AnyFunSuite {
     // (id_d, id_c). Caps don't bind at this scale, so equality is exact.
     val inc = SparkEntry.queries("dedup_incremental_lsh")(spark, sf)
       .select(col("id_d"), col("id_c"), col("jaccard3"))
-    val self = queries.LlmOps
+    val self = Dedup
       .ngramJaccardPairs(Tables.documents(spark, sf), maxBucket = Int.MaxValue)
       .filter((col("id_a") % 10 === 0) =!= (col("id_b") % 10 === 0))
       .select(

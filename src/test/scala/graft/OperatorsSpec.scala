@@ -54,7 +54,8 @@ class OperatorsSpec extends AnyFunSuite {
       .createDataFrame(Seq((1L, ""), (2L, "one"), (3L, "one two"),
         (4L, "one two three"), (5L, "a b c d")))
       .toDF("doc_id", "text")
-      .select(col("doc_id"), queries.LlmOps.shingles3("text").as("sh"))
+      .transform(operators.Dedup.withShingles(_))
+      .select(col("doc_id"), col("tk").as("sh"))
     val got = df.collect().map(r =>
       r.getLong(0) -> r.getAs[scala.collection.Seq[String]]("sh").toSeq).toMap
     assert(got(1L) == Nil && got(2L) == Nil && got(3L) == Nil)
@@ -69,9 +70,9 @@ class OperatorsSpec extends AnyFunSuite {
     val reshuffled = Tables
       .documents(spark, sf)
       .repartition(7, col("source"))
-      .select(col("doc_id"), queries.LlmOps.shingles3("text").as("tk"))
+      .transform(operators.Dedup.withShingles(_))
       .select(col("doc_id"),
-        graft.ArrCanon.joined(queries.LlmOps.minhashSig(16)).as("minhash2"))
+        graft.ArrCanon.joined(graft.functions.MinHash64.minhash64(col("tk"), 16)).as("minhash2"))
     val diff = direct
       .join(reshuffled, "doc_id")
       .filter(col("minhash") =!= col("minhash2"))
@@ -82,9 +83,9 @@ class OperatorsSpec extends AnyFunSuite {
   test("minhash-LSH candidates have genuinely high exact shingle jaccard") {
     val cands = SparkEntry.queries("dedup_minhash_lsh")(spark, sf).collect()
     assert(cands.nonEmpty, "LSH should find near-dup candidates")
-    val shingleMap = Tables
-      .documents(spark, sf)
-      .select(col("doc_id"), queries.LlmOps.shingles3("text").as("sh"))
+    val shingleMap = operators.Dedup
+      .withShingles(Tables.documents(spark, sf))
+      .select(col("doc_id"), col("tk").as("sh"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1).toSet)
       .toMap

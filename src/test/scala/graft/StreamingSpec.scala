@@ -2,7 +2,14 @@ package graft
 
 import graft.streaming.Streams
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction, StringSplit}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.HarnessProbes
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming tests: replay the events table through a file
@@ -189,9 +196,9 @@ class StreamingSpec extends AnyFunSuite {
       spark, Streams.nearDedupStream(stream, "ts"), "t_neardup", "append")
     val longDocs = doubled.filter(size(split(col("text"), " ")) >= 3)
     val shortRows = doubled.count() - longDocs.count() // every one survives
-    val expected = queries.LlmOps
+    val expected = operators.Dedup
       .withShingles(longDocs)
-      .select(ArrCanon.joined(queries.LlmOps.minhashSig(16)).as("sig"))
+      .select(ArrCanon.joined(graft.functions.MinHash64.minhash64(col("tk"), 16)).as("sig"))
       .select(countDistinct(col("sig")))
       .head().getLong(0) + shortRows
     assert(out.count() == expected,
@@ -200,6 +207,37 @@ class StreamingSpec extends AnyFunSuite {
       "short documents must pass through the near-dedup untouched")
     // and it genuinely deduped: the doubled corpus collapsed
     assert(out.count() <= docs.count() + 4)
+  }
+
+  test("streaming near-dedup splits each text once, outside the shingle lambda") {
+    // a split referenced inside the shingle lambda re-runs per element,
+    // O(tokens²) per document; every micro-batch's optimized plan must
+    // carry the split in a projection of its own
+    val dir = Files.createTempDirectory("graft-neardup-split").toString
+    Tables.documents(spark, sf).select(col("doc_id"), col("text")).limit(50)
+      .withColumn("ts", expr("timestamp'2026-01-01 00:00:00'"))
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val plans = new ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.optimizedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.optimizedPlan)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Streams.runToCompletion(spark,
+        Streams.nearDedupStream(
+          spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir), "ts"),
+        "t_neardup_split", "append")
+      HarnessProbes.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    def splits(e: Expression): Seq[StringSplit] = e.collect { case s: StringSplit => s }
+    val exprs = plans.asScala.toSeq.flatMap(_.flatMap(_.expressions))
+    assert(exprs.flatMap(splits).nonEmpty, "no recorded plan splits the text")
+    val inLambda = exprs.flatMap(_.collect { case l: LambdaFunction => l })
+      .filter(l => splits(l.function).nonEmpty)
+    assert(inLambda.isEmpty, s"split inside a lambda: ${inLambda.map(_.sql).mkString("; ")}")
   }
 
   test("checkpointed query recovers without reprocessing") {
@@ -274,8 +312,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.count() == distinctSigs,
       s"${out.count()} survivors but only $distinctSigs distinct signatures — " +
         "a duplicate survived the restart (state store lost)")
-    val expected = queries.LlmOps.withShingles(base)
-      .select(ArrCanon.joined(queries.LlmOps.minhashSig(16)).as("sig"))
+    val expected = operators.Dedup.withShingles(base)
+      .select(ArrCanon.joined(graft.functions.MinHash64.minhash64(col("tk"), 16)).as("sig"))
       .select(countDistinct(col("sig"))).head().getLong(0)
     assert(out.count() == expected,
       s"survivors ${out.count()} != corpus distinct-signature count $expected")
