@@ -226,14 +226,6 @@ object AmplifiedBench {
     // timed reps with a cache-clear + GC between groups, so broadcasts
     // from the 10x group never sit on the heap during the 1x group.
     def cleanup(): Unit = {
-      // Each stream_* rep registers a fresh memory-sink temp view
-      // (gate_*_N) holding its full replay result on the driver heap;
-      // drop them here so a 10x group's ~(reps+1) sinks are reclaimable
-      // before the next group runs (clearCache alone leaves the views
-      // — and their rows — referenced for the whole session).
-      spark.catalog.listTables().collect()
-        .filter(t => t.isTemporary && t.name.startsWith("gate_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
       spark.catalog.clearCache(); System.gc(); Thread.sleep(200)
     }
     // cleanup() runs OUTSIDE the caller's gc_ms sampling span: its two

@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -124,7 +128,7 @@ object ArrCanon {
     s"list_transform(($e), x -> CAST(floor(x * 1e$scale) AS BIGINT))"
 }
 
-/** Scan-shape helpers (r22). */
+/** Scan-shape helpers. */
 object Scans {
   /** Fan a NARROW scan out to the session's parallelism before an
     * expensive per-row map (shingle/minhash folds, tokenization): the
@@ -137,14 +141,33 @@ object Scans {
     * added. Round-robin repartition is deterministic under retry
     * (sortBeforeRepartition, SPARK-23207) and the downstream consumers
     * are per-row maps + key aggregates, so values are unchanged.
-    * r21 measured this LOSING on kernels whose map work was cheap or
-    * whose subtree computed multiple times (each copy re-paying the
-    * exchange); it pays exactly where a heavy map feeds ONE (usually
-    * checkpointed) materialization — the r22 call sites.
+    * It loses on kernels whose map work is cheap or whose subtree
+    * computes multiple times (each copy re-paying the exchange); it pays
+    * exactly where a heavy map feeds ONE (usually checkpointed)
+    * materialization, which is what every call site does.
+    *
+    * The partition count is read from the plan, never by running it: a
+    * frame with an exchange (its own or inside a cached relation it
+    * reads) already has the session's shuffle partitions, and only an
+    * exchange-free frame asks its RDD, which then runs no job. (With
+    * AQE on, `.rdd` of an exchange-bearing frame runs its shuffle stages
+    * in jobs of their own, which the caller's query then runs again.)
     */
   def fanOut(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 <= target) df.repartition(target) else df
+    val s = df.sparkSession
+    val target = s.sparkContext.defaultParallelism
+    val parts =
+      if (hasExchange(df.queryExecution.executedPlan))
+        s.sessionState.conf.numShufflePartitions
+      else df.rdd.getNumPartitions
+    if (parts * 2 <= target) df.repartition(target) else df
+  }
+
+  private def hasExchange(plan: SparkPlan): Boolean = plan.exists {
+    case _: Exchange | _: QueryStageExec => true
+    case a: AdaptiveSparkPlanExec => hasExchange(a.executedPlan)
+    case m: InMemoryTableScanExec => hasExchange(m.relation.cachedPlan)
+    case _ => false
   }
 }
 

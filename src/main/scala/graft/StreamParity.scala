@@ -1,8 +1,7 @@
 package graft
 
-/** RocksDB state-store parity sweep over the ENTIRE streaming gate
-  * (r18, verdict task 3 — extending the r17 single-row
-  * `StreamEvictionSpec` parity to all 25 rows).
+/** RocksDB state-store parity sweep over every streaming gate row
+  * (`StreamEvictionSpec` pins the riskiest rows in the test suite).
   *
   * For every `stream_*` gate query, run the full replay twice in one
   * JVM — default HDFSBackedStateStoreProvider, then
@@ -25,7 +24,7 @@ object StreamParity {
     // The sweep's base leg relies on the DEFAULT provider; the harness
     // env flag routes every applyStateProvider call through RocksDB, so
     // a sweep launched with it set would compare RocksDB to RocksDB and
-    // report parity:true vacuously (r18 ADVICE). Refuse to run at all.
+    // report parity:true vacuously. Refuse to run at all.
     require(!sys.env.contains("SPARK_GRAFT_STATE_PROVIDER"),
       "StreamParity must run WITHOUT SPARK_GRAFT_STATE_PROVIDER set — " +
         "the base leg would silently route through RocksDB too")

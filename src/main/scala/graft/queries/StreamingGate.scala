@@ -1,12 +1,12 @@
 package graft.queries
 
 import graft.{DimCache, Q, Tables}
-import graft.operators.Dedup
+import graft.operators.{Dedup, Similarity}
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, DateType, DoubleType, LongType, StructField, StructType, TimestampType}
 
 /** Structured-Streaming operators promoted into the driver's DuckDB
   * oracle gate (reference: custreamz's differential contract — a
@@ -14,14 +14,17 @@ import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
   * computation over the replayed input,
   * `python/custreamz/custreamz/tests/test_dataframes.py:279,545,743`).
   *
-  * Each query here RUNS the real streaming pipeline inside the query
-  * function: stage the sf table to a replay directory, execute the
-  * `Trigger.AvailableNow()` streaming query to completion against an
-  * in-memory sink, and return that sink as a batch DataFrame. The
-  * DuckDB oracle then recomputes the same answer in pure SQL over the
-  * ORIGINAL parquet tables — so a hash-green row certifies the whole
-  * streaming path (source → stateful operator → sink), not a batch
-  * re-expression of it.
+  * Each row is declared once, as one function returning a
+  * [[StreamPlan]]: it stages the sf table to a replay directory and
+  * returns the stream plan over it, how that plan runs (a
+  * `Trigger.AvailableNow()` replay to completion into an in-memory
+  * sink, or the checkpoint row's kill/resume), and how the sink reads
+  * back as the batch answer. [[queries]] runs every
+  * row that way; [[statePlans]] hands the same plans, never started, to
+  * the streaming-state smell audit. The DuckDB oracle recomputes the
+  * answer in pure SQL over the ORIGINAL parquet tables — so a
+  * hash-green row certifies the whole streaming path (source →
+  * stateful operator → sink), not a batch re-expression of it.
   *
   * Determinism contracts (why these four can be oracled at all):
   *   - `stream_cms` / `stream_kmv_window`: complete-mode aggregations
@@ -47,45 +50,76 @@ import org.apache.spark.sql.types.{DateType, LongType, TimestampType}
   */
 object StreamingGate {
 
+  /** One gate row's stream: `plan` over the row's staged replay (built,
+    * never started), `run` executing it to a sink and returning that
+    * sink as a batch frame, and `project` reading the sink back as the
+    * batch answer the oracle recomputes.
+    */
+  private final case class StreamPlan(
+      plan: DataFrame,
+      run: (SparkSession, DataFrame) => DataFrame,
+      project: DataFrame => DataFrame = identity)
+
+  private type Row = (SparkSession, String) => StreamPlan
+
   /** Unique memory-sink names: a session may run the same gate query
-    * more than once (Verify, then Explain); memory sinks are registered
-    * as session temp views, so names must never collide.
+    * more than once, and a memory sink's query name must not collide
+    * with a running one's. The `gate_` prefix names these sinks to
+    * harnesses that sweep leftover views.
     */
   private val sinkSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def sink(base: String): String =
-    s"${base}_${sinkSeq.incrementAndGet()}"
 
-  /** Stage the events table (normalized µs timestamps) as a replay dir.
-    * Cached per (dir, parts): the staged copy is a deterministic
-    * function of the immutable dataset dir, so one copy per JVM serves
-    * every gate query and every Verify/Explain re-invocation.
+  /** Run to completion into a fresh memory sink under `mode`, take the
+    * result frame, then drop the sink's temp view: the frame's analyzed
+    * plan holds the sink itself, so its rows live exactly as long as the
+    * frame does. `singleBatch` requires the whole replay to arrive in one
+    * data micro-batch (see `Streams.runToCompletion`).
     */
-  private def stageEvents(s: SparkSession, dir: String, parts: Int): String =
-    DimCache.cached(s"gate-stage-events:$dir:$parts") {
-      val d = DimCache.tempDir("graft-gate-events")
-      Tables.events(s, dir)
-        .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
-        .repartition(parts)
-        .write.mode("overwrite").parquet(d)
-      d
+  private def memory(base: String, mode: String, singleBatch: Boolean = false)
+      : (SparkSession, DataFrame) => DataFrame = (s, plan) => {
+    val name = s"${base}_${sinkSeq.incrementAndGet()}"
+    val out = Streams.runToCompletion(s, plan, name, mode,
+      requireSingleDataBatch = singleBatch)
+    s.catalog.dropTempView(name)
+    out
+  }
+
+  /** A staged replay dir: `write` fills a fresh temp dir once per
+    * (key, dataset dir) per JVM — the staged copy is a deterministic
+    * function of the immutable dataset, so one copy serves every run of
+    * every row that reads it.
+    */
+  private def staged(key: String, dir: String)(write: String => Unit): String =
+    DimCache.cached(s"gate-stage-$key:$dir") {
+      val t = DimCache.tempDir(s"graft-gate-$key")
+      write(t)
+      t
     }
 
-  /** Stage the events table as ONE (ts, event_id)-sorted file — the
+  private def eventColumns(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir).select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
+
+  /** The events table (normalized µs timestamps) staged as 4 files. */
+  private def stageEvents(s: SparkSession, dir: String): String =
+    staged("events", dir) { t =>
+      eventColumns(s, dir).repartition(4).write.mode("overwrite").parquet(t)
+    }
+
+  /** The events replayed from [[stageEvents]]. */
+  private def eventReplay(s: SparkSession, dir: String): DataFrame =
+    Streams.readEventStream(s, stageEvents(s, dir))
+
+  /** The events replayed from ONE (ts, event_id)-sorted file — the
     * ordered-replay precondition of the per-key state machines
     * (transitions, funnel): a single AvailableNow micro-batch preserves
     * per-user arrival order, so the stream equals the batch total order
     * (a Kafka deployment gets this from per-key partition ordering).
-    * Cached per dir like [[stageEvents]].
     */
-  private def stageEventsSorted(s: SparkSession, dir: String): String =
-    DimCache.cached(s"gate-stage-events-sorted:$dir") {
-      val d = DimCache.tempDir("graft-gate-events-sorted")
-      Tables.events(s, dir)
-        .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
-        .orderBy(col("ts"), col("event_id"))
-        .coalesce(1).write.mode("overwrite").parquet(d)
-      d
-    }
+  private def sortedReplay(s: SparkSession, dir: String): DataFrame =
+    Streams.readEventStream(s, staged("events-sorted", dir) { t =>
+      eventColumns(s, dir).orderBy(col("ts"), col("event_id"))
+        .coalesce(1).write.mode("overwrite").parquet(t)
+    })
 
   // ------------------------------------------------------------- stream_cms
 
@@ -93,11 +127,9 @@ object StreamingGate {
     * sink's 4×1024 cells are bit-identical to the same sketch computed
     * in batch (pure long arithmetic, order-independent adds).
     */
-  private def streamCms(s: SparkSession, dir: String): DataFrame = {
-    val stream = Streams.readEventStream(s, stageEvents(s, dir, 4))
-    Streams.runToCompletion(
-      s, Streams.cmsCounters(stream), sink("gate_cms"), mode = "complete")
-  }
+  private def streamCms(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.cmsCounters(eventReplay(s, dir)),
+      memory("gate_cms", "complete"))
 
   private val streamCmsSql =
     """SELECT r, b, count(*) AS cnt FROM (
@@ -114,16 +146,13 @@ object StreamingGate {
     * equals the SQL recomputation (exact count below k, (k−1)·P div
     * kth-smallest at or above).
     */
-  private def streamKmvWindow(s: SparkSession, dir: String): DataFrame = {
-    val stream = Streams.readEventStream(s, stageEvents(s, dir, 4))
-    Streams.runToCompletion(
-      s, Streams.kmvWindowDistinct(stream), sink("gate_kmv"),
-      mode = "complete")
+  private def streamKmvWindow(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.kmvWindowDistinct(eventReplay(s, dir)),
+      memory("gate_kmv", "complete"),
       // DATE on both sides: the driver's canonical hash needs identical
       // scalar encodings, and day-window starts are exactly dates
-      .select(col("win_start").cast(DateType).as("win_day"),
-        col("n_events"), col("est_distinct"))
-  }
+      _.select(col("win_start").cast(DateType).as("win_day"),
+        col("n_events"), col("est_distinct")))
 
   private val streamKmvWindowSql =
     """WITH hv AS (
@@ -153,9 +182,8 @@ object StreamingGate {
     * it). Replayed as one sorted file so per-key arrival order matches
     * the batch (day, seq) total order.
     */
-  private def streamScd2(s: SparkSession, dir: String): DataFrame = {
-    val d = DimCache.cached(s"gate-stage-scd2:$dir") {
-      val t = DimCache.tempDir("graft-gate-scd2")
+  private def streamScd2(s: SparkSession, dir: String): StreamPlan = {
+    val d = staged("scd2", dir) { t =>
       Tables.orders(s, dir)
         .select(col("o_custkey").as("key"),
           datediff(col("o_orderdate").cast(DateType),
@@ -164,11 +192,9 @@ object StreamingGate {
           col("o_orderpriority").as("attr"))
         .orderBy(col("key"), col("day"), col("seq"))
         .coalesce(1).write.mode("overwrite").parquet(t)
-      t
     }
-    Streams.runToCompletion(
-      s, Streams.scd2Steps(s, Streams.readChangeStream(s, d)),
-      sink("gate_scd2"), mode = "append")
+    StreamPlan(Streams.scd2Steps(s, Streams.readChangeStream(s, d)),
+      memory("gate_scd2", "append"))
   }
 
   private val streamScd2Sql =
@@ -207,25 +233,21 @@ object StreamingGate {
     * the SAME SQL as the batch `index_postings` twin: the stream must
     * converge to the batch index exactly.
     */
-  private def streamPostings(s: SparkSession, dir: String): DataFrame = {
-    val d = DimCache.cached(s"gate-stage-post:$dir") {
-      val t = DimCache.tempDir("graft-gate-post")
+  private def streamPostings(s: SparkSession, dir: String): StreamPlan = {
+    val d = staged("post", dir) { t =>
       Tables.documents(s, dir).select(col("doc_id"), col("text"))
         .repartition(6).write.mode("overwrite").parquet(t)
-      t
     }
     val stream = s.readStream.schema(Streams.docSchema)
       .option("maxFilesPerTrigger", "2").parquet(d)
-    val emissions = Streams.runToCompletion(
-      s, Streams.postingsMaintain(s, stream), sink("gate_post"),
-      mode = "update")
-    emissions
-      .withColumn("rn", row_number().over(
-        // per-token frames are the few micro-batch emissions of that
-        // token — vocabulary-keyed, never SF-funneled
-        Window.partitionBy(col("tok")).orderBy(col("df").desc)))
-      .filter(col("rn") === 1 && col("df") >= 5)
-      .select(col("tok"), col("df"), col("capped"), col("postings"))
+    StreamPlan(Streams.postingsMaintain(s, stream),
+      memory("gate_post", "update"),
+      _.withColumn("rn", row_number().over(
+          // per-token frames are the few micro-batch emissions of that
+          // token — vocabulary-keyed, never SF-funneled
+          Window.partitionBy(col("tok")).orderBy(col("df").desc)))
+        .filter(col("rn") === 1 && col("df") >= 5)
+        .select(col("tok"), col("df"), col("capped"), col("postings")))
   }
 
   // ------------------------------------------------------ stream_transitions
@@ -236,19 +258,14 @@ object StreamingGate {
     * the batch twin's SQL. The p_ppm window runs over the AGGREGATED
     * ≤|event_type|² frame (aggregate-collapsed, not the fact stream).
     */
-  private def streamTransitions(s: SparkSession, dir: String): DataFrame = {
-    val steps = Streams.runToCompletion(
-      s,
-      Streams.transitionSteps(s,
-        Streams.readEventStream(s, stageEventsSorted(s, dir))),
-      sink("gate_trans"), mode = "append")
-    steps
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
-      .withColumn("from_total",
-        sum(col("n")).over(Window.partitionBy(col("src"))))
-      .select(col("src"), col("dst"), col("n"),
-        expr("(n * 1000000) div from_total").as("p_ppm"))
-  }
+  private def streamTransitions(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.transitionSteps(s, sortedReplay(s, dir)),
+      memory("gate_trans", "append"),
+      _.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
+        .withColumn("from_total",
+          sum(col("n")).over(Window.partitionBy(col("src"))))
+        .select(col("src"), col("dst"), col("n"),
+          expr("(n * 1000000) div from_total").as("p_ppm")))
 
   // ----------------------------------------------------------- stream_funnel
 
@@ -258,20 +275,17 @@ object StreamingGate {
     * stage 1). The 1-row view-count rides a broadcast nested-loop, not
     * a cartesian.
     */
-  private def streamFunnel(s: SparkSession, dir: String): DataFrame = {
-    val stages = Streams.runToCompletion(
-      s,
-      Streams.funnelStages(s,
-        Streams.readEventStream(s, stageEventsSorted(s, dir))),
-      sink("gate_funnel"), mode = "append")
-    val counts = stages.groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
-    val nv = counts.filter(col("stage") === "1_view")
-      .select(col("n_users").as("nv"))
-    counts.crossJoin(broadcast(nv))
-      .select(col("stage"), col("n_users"),
-        when(col("stage") === "1_view", lit(1000000L))
-          .otherwise(expr("(n_users * 1000000) div nv")).as("conv_ppm"))
-  }
+  private def streamFunnel(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.funnelStages(s, sortedReplay(s, dir)),
+      memory("gate_funnel", "append"), { stages =>
+        val counts = stages.groupBy(col("stage")).agg(count(lit(1)).as("n_users"))
+        val nv = counts.filter(col("stage") === "1_view")
+          .select(col("n_users").as("nv"))
+        counts.crossJoin(broadcast(nv))
+          .select(col("stage"), col("n_users"),
+            when(col("stage") === "1_view", lit(1000000L))
+              .otherwise(expr("(n_users * 1000000) div nv")).as("conv_ppm"))
+      })
 
   // ------------------------------------------------------ stream_start_state
 
@@ -283,40 +297,31 @@ object StreamingGate {
     * `flatMapGroupsWithState(initialState)` backfill→stream handoff
     * end-to-end, not just the stateful operator.
     */
-  private def streamStartState(s: SparkSession, dir: String): DataFrame = {
+  private def streamStartState(s: SparkSession, dir: String): StreamPlan = {
     val cutoff = lit("2024-01-16 00:00:00").cast(TimestampType)
-    val ev = Tables.events(s, dir)
-    val hist = ev
+    val hist = Tables.events(s, dir)
       .filter(col("ts") < cutoff)
       .groupBy(col("event_type"))
       .agg(
         count(lit(1)).as("n0"),
         sum(floor(col("value") * 100).cast(LongType)).as("cents0"))
-    val d = DimCache.cached(s"gate-stage-start-state:$dir") {
-      val t = DimCache.tempDir("graft-gate-start-state")
-      ev.filter(col("ts") >= cutoff)
-        .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
-        .repartition(4)
-        .write
-        .mode("overwrite")
-        .parquet(t)
-      t
+    val d = staged("start-state", dir) { t =>
+      eventColumns(s, dir).filter(col("ts") >= cutoff)
+        .repartition(4).write.mode("overwrite").parquet(t)
     }
-    val sinkDf = Streams.runToCompletion(
-      s,
+    StreamPlan(
       Streams.runningAggFromInitialState(s, Streams.readEventStream(s, d),
         hist),
-      sink("gate_start_state"))
-    // State-snapshot read side: initial state OVERRIDDEN by sink
-    // updates. Update mode only emits TOUCHED keys — a key with no
-    // post-cutoff rows lives solely in the seeded state — so finals =
-    // init ∪ emissions, max per key (both fields strictly monotone).
-    sinkDf
-      .unionByName(
-        hist.select(col("event_type"), col("n0").as("n_events"),
-          col("cents0").as("cents")))
-      .groupBy(col("event_type"))
-      .agg(max(col("n_events")).as("n_events"), max(col("cents")).as("cents"))
+      memory("gate_start_state", "update"),
+      // State-snapshot read side: initial state OVERRIDDEN by sink
+      // updates. Update mode only emits TOUCHED keys — a key with no
+      // post-cutoff rows lives solely in the seeded state — so finals =
+      // init ∪ emissions, max per key (both fields strictly monotone).
+      _.unionByName(
+          hist.select(col("event_type"), col("n0").as("n_events"),
+            col("cents0").as("cents")))
+        .groupBy(col("event_type"))
+        .agg(max(col("n_events")).as("n_events"), max(col("cents")).as("cents")))
   }
 
   private val streamStartStateSql =
@@ -334,11 +339,9 @@ object StreamingGate {
     * construction ([[graft.Agg.dsum]] sums integer cents), so ANY
     * replay batching equals the batch aggregate bit-for-bit.
     */
-  private def streamRunningAgg(s: SparkSession, dir: String): DataFrame = {
-    val stream = Streams.readEventStream(s, stageEvents(s, dir, 4))
-    Streams.runToCompletion(
-      s, Streams.runningAggByType(stream), sink("gate_run"), mode = "complete")
-  }
+  private def streamRunningAgg(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.runningAggByType(eventReplay(s, dir)),
+      memory("gate_run", "complete"))
 
   private val streamRunningAggSql =
     s"""SELECT event_type, count(*) AS n,
@@ -353,16 +356,13 @@ object StreamingGate {
     * [[graft.Agg.davg]] (exact sum / exact count — replay-order
     * independent).
     */
-  private def streamTumbling(s: SparkSession, dir: String): DataFrame = {
-    val stream = Streams.readEventStream(s, stageEvents(s, dir, 4))
-    Streams.runToCompletion(
-      s, Streams.tumblingCounts(stream), sink("gate_tumble"),
-      mode = "complete")
+  private def streamTumbling(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.tumblingCounts(eventReplay(s, dir)),
+      memory("gate_tumble", "complete"),
       // µs-integer window starts: identical scalar encoding on both
       // engines (the stream_kmv DATE-cast rule, sub-day granularity)
-      .select(expr("unix_micros(win_start)").as("win_us"),
-        col("event_type"), col("n"), col("avg_value"))
-  }
+      _.select(expr("unix_micros(win_start)").as("win_us"),
+        col("event_type"), col("n"), col("avg_value")))
 
   private val streamTumblingSql =
     s"""SELECT (epoch_us(ts) // 300000000) * 300000000 AS win_us,
@@ -379,14 +379,13 @@ object StreamingGate {
     * arrival-order-INDEPENDENCE certificate (the per-key state machines
     * certify the opposite, ordered-replay, contract).
     */
-  private def streamOhlc(s: SparkSession, dir: String): DataFrame = {
+  private def streamOhlc(s: SparkSession, dir: String): StreamPlan = {
     val stream = s.readStream.schema(Streams.eventSchema)
-      .option("maxFilesPerTrigger", "2").parquet(stageEvents(s, dir, 4))
-    Streams.runToCompletion(
-      s, Streams.ohlcWindows(stream), sink("gate_ohlc"), mode = "complete")
-      .select(expr("unix_micros(win_start) div 86400000000").as("day"),
+      .option("maxFilesPerTrigger", "2").parquet(stageEvents(s, dir))
+    StreamPlan(Streams.ohlcWindows(stream), memory("gate_ohlc", "complete"),
+      _.select(expr("unix_micros(win_start) div 86400000000").as("day"),
         col("user_id"), col("open_cents"), col("high_cents"),
-        col("low_cents"), col("close_cents"), col("n"))
+        col("low_cents"), col("close_cents"), col("n")))
   }
 
   // ---------------------------------------------------------- stream_sliding
@@ -394,13 +393,10 @@ object StreamingGate {
     * lands in exactly two epoch-aligned windows, which is precisely the
     * oracle's cross join with offsets {0, 1} slide units.
     */
-  private def streamSliding(s: SparkSession, dir: String): DataFrame = {
-    val stream = Streams.readEventStream(s, stageEvents(s, dir, 4))
-    Streams.runToCompletion(
-      s, Streams.slidingCounts(stream), sink("gate_slide"),
-      mode = "complete")
-      .select(expr("unix_micros(win_start)").as("win_us"), col("n"))
-  }
+  private def streamSliding(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.slidingCounts(eventReplay(s, dir)),
+      memory("gate_slide", "complete"),
+      _.select(expr("unix_micros(win_start)").as("win_us"), col("n")))
 
   private val streamSlidingSql =
     """SELECT win_us, count(*) AS n FROM (
@@ -415,14 +411,11 @@ object StreamingGate {
     * ≥ 5 min breaks — exactly the oracle's gaps-and-islands break
     * condition. Complete mode: the final merged sessions.
     */
-  private def streamSession(s: SparkSession, dir: String): DataFrame = {
-    val stream = Streams.readEventStream(s, stageEvents(s, dir, 4))
-    Streams.runToCompletion(
-      s, Streams.sessionCounts(stream), sink("gate_sess"),
-      mode = "complete")
-      .select(expr("unix_micros(sess_start)").as("sess_us"),
-        col("user_id"), col("n_events"))
-  }
+  private def streamSession(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.sessionCounts(eventReplay(s, dir)),
+      memory("gate_sess", "complete"),
+      _.select(expr("unix_micros(sess_start)").as("sess_us"),
+        col("user_id"), col("n_events")))
 
   private val streamSessionSql =
     """WITH e AS (SELECT user_id, epoch_us(ts) AS us FROM events),
@@ -447,20 +440,16 @@ object StreamingGate {
     * untouched events table (value doubles pass through unaltered, so
     * the hash is bit-exact).
     */
-  private def streamDedupExact(s: SparkSession, dir: String): DataFrame = {
-    val d = DimCache.cached(s"gate-stage-dupes:$dir") {
-      val t = DimCache.tempDir("graft-gate-dupes")
-      val ev = Tables.events(s, dir)
-        .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
+  private def streamDedupExact(s: SparkSession, dir: String): StreamPlan = {
+    val d = staged("dupes", dir) { t =>
+      val ev = eventColumns(s, dir)
       ev.union(ev.filter(col("event_id") % 3 === 0))
         .repartition(4).write.mode("overwrite").parquet(t)
-      t
     }
-    Streams.runToCompletion(
-      s, Streams.dedupStream(Streams.readEventStream(s, d)),
-      sink("gate_dedup"), mode = "append")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"))
+    StreamPlan(Streams.dedupStream(Streams.readEventStream(s, d)),
+      memory("gate_dedup", "append"),
+      _.select(col("event_id"), col("user_id"), col("event_type"),
+        col("value")))
   }
 
   private val streamDedupExactSql =
@@ -472,15 +461,12 @@ object StreamingGate {
     * range predicate. Inner-join emissions are a pure set: any replay
     * batching yields the batch join rows exactly.
     */
-  private def streamJoin(s: SparkSession, dir: String): DataFrame = {
-    val stream = Streams.readEventStream(s, stageEvents(s, dir, 4))
-    Streams.runToCompletion(
-      s, Streams.clickViewJoin(stream, "click", "view"),
-      sink("gate_ssjoin"), mode = "append")
-      .select(col("a_event"), col("a_user"),
+  private def streamJoin(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.clickViewJoin(eventReplay(s, dir), "click", "view"),
+      memory("gate_ssjoin", "append"),
+      _.select(col("a_event"), col("a_user"),
         expr("unix_micros(a_ts)").as("a_us"),
-        col("b_event"), expr("unix_micros(b_ts)").as("b_us"))
-  }
+        col("b_event"), expr("unix_micros(b_ts)").as("b_us")))
 
   private val streamJoinSql =
     """SELECT a.event_id AS a_event, a.user_id AS a_user,
@@ -508,34 +494,30 @@ object StreamingGate {
     * past every real probe, the streaming analogue of closing a topic
     * with an end-of-stream marker.
     */
-  private def streamAsofEnrich(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-      .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
-    val sentinels = ev
-      .agg(max(col("ts")).as("mx"))
-      .select(explode(array(
-        struct(lit(-1L).as("event_id"),
-          (col("mx") + expr("INTERVAL 30 DAYS")).as("ts"),
-          lit(-1L).as("user_id"), lit("purchase").as("event_type"),
-          lit(0.0).as("value"), lit(null).cast("string").as("props")),
-        struct(lit(-2L).as("event_id"),
-          (col("mx") + expr("INTERVAL 31 DAYS")).as("ts"),
-          lit(-1L).as("user_id"), lit("click").as("event_type"),
-          lit(0.0).as("value"), lit(null).cast("string").as("props"))))
-        .as("e"))
-      .select(col("e.*"))
-    val d = DimCache.cached(s"gate-stage-asof:$dir") {
-      val t = DimCache.tempDir("graft-gate-asof")
+  private def streamAsofEnrich(s: SparkSession, dir: String): StreamPlan = {
+    val d = staged("asof", dir) { t =>
+      val ev = eventColumns(s, dir)
+      val sentinels = ev
+        .agg(max(col("ts")).as("mx"))
+        .select(explode(array(
+          struct(lit(-1L).as("event_id"),
+            (col("mx") + expr("INTERVAL 30 DAYS")).as("ts"),
+            lit(-1L).as("user_id"), lit("purchase").as("event_type"),
+            lit(0.0).as("value"), lit(null).cast("string").as("props")),
+          struct(lit(-2L).as("event_id"),
+            (col("mx") + expr("INTERVAL 31 DAYS")).as("ts"),
+            lit(-1L).as("user_id"), lit("click").as("event_type"),
+            lit(0.0).as("value"), lit(null).cast("string").as("props"))))
+          .as("e"))
+        .select(col("e.*"))
       ev.union(sentinels).repartition(4).write.mode("overwrite").parquet(t)
-      t
     }
-    val stream = Streams.readEventStream(s, d)
-    Streams.runToCompletion(
-      s, Streams.asOfEnrich(stream, "click", "purchase"),
-      sink("gate_asof"), mode = "append")
-      .select(col("p_event"), col("p_user"),
+    StreamPlan(
+      Streams.asOfEnrich(Streams.readEventStream(s, d), "click", "purchase"),
+      memory("gate_asof", "append"),
+      _.select(col("p_event"), col("p_user"),
         expr("unix_micros(p_ts)").as("p_us"),
-        col("asof_value"), expr("unix_micros(asof_ts)").as("asof_us"))
+        col("asof_value"), expr("unix_micros(asof_ts)").as("asof_us")))
   }
 
   private val streamAsofEnrichSql =
@@ -558,12 +540,9 @@ object StreamingGate {
     * length), the standard shape for attaching reference data to a
     * high-volume stream. Content-compared against the batch join.
     */
-  private def streamEnrichDim(s: SparkSession, dir: String): DataFrame = {
-    val stream = Streams.readEventStream(s, stageEvents(s, dir, 4))
-    Streams.runToCompletion(
-      s, Streams.enrichWithDim(stream, Tables.customer(s, dir)),
-      sink("gate_enrich"), mode = "append")
-  }
+  private def streamEnrichDim(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.enrichWithDim(eventReplay(s, dir), Tables.customer(s, dir)),
+      memory("gate_enrich", "append"))
 
   private val streamEnrichDimSql =
     """SELECT e.event_id, e.user_id, e.event_type, e.value, c.c_mktsegment
@@ -575,18 +554,19 @@ object StreamingGate {
     * the batch `ts_anomaly_zscore` report — same SQL oracle as the
     * batch twin.
     */
-  private def streamZscore(s: SparkSession, dir: String): DataFrame = {
-    val flags = Streams.runToCompletion(
-      s,
-      Streams.zscoreFlags(s,
-        Streams.readEventStream(s, stageEventsSorted(s, dir))),
-      sink("gate_zscore"), mode = "append")
-    flags
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_eval"), sum(col("flag")).as("n_anomalies"))
-      .select(col("event_type"), col("n_eval"), col("n_anomalies"),
-        expr("(n_anomalies * 1000000) div n_eval").as("anomaly_ppm"))
-  }
+  private def streamZscore(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.zscoreFlags(s, sortedReplay(s, dir)),
+      memory("gate_zscore", "append"),
+      _.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_eval"), sum(col("flag")).as("n_anomalies"))
+        .select(col("event_type"), col("n_eval"), col("n_anomalies"),
+          expr("(n_anomalies * 1000000) div n_eval").as("anomaly_ppm")))
+
+  /** The attribution report over a sink of (user_id, channel) credits. */
+  private def creditsByChannel(credits: DataFrame): DataFrame =
+    credits.groupBy(col("channel"))
+      .agg(count(lit(1)).as("n_purchases"),
+        countDistinct(col("user_id")).as("n_users"))
 
   // ------------------------------------------------------ stream_attribution
   /** Streaming last-touch attribution (one channel string of state per
@@ -594,17 +574,9 @@ object StreamingGate {
     * ordered, aggregated to the batch `attribution_last_touch` report —
     * same SQL oracle as the batch twin.
     */
-  private def streamAttribution(s: SparkSession, dir: String): DataFrame = {
-    val credits = Streams.runToCompletion(
-      s,
-      Streams.attributionSteps(s,
-        Streams.readEventStream(s, stageEventsSorted(s, dir))),
-      sink("gate_attr"), mode = "append")
-    credits
-      .groupBy(col("channel"))
-      .agg(count(lit(1)).as("n_purchases"),
-        countDistinct(col("user_id")).as("n_users"))
-  }
+  private def streamAttribution(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.attributionSteps(s, sortedReplay(s, dir)),
+      memory("gate_attr", "append"), creditsByChannel)
 
   // ----------------------------------------------- stream_attribution_window
   /** The WINDOWED attribution machine (event-time state eviction,
@@ -619,19 +591,11 @@ object StreamingGate {
     * correctly; the eviction (state-drop) side is pinned by
     * StreamEvictionSpec's crafted multi-batch gap.
     */
-  private def streamAttributionWindow(s: SparkSession, dir: String): DataFrame = {
-    val credits = Streams.runToCompletion(
-      s,
+  private def streamAttributionWindow(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(
       Streams.attributionStepsWindowed(s,
-        Streams.readEventStream(s, stageEventsSorted(s, dir))
-          .withWatermark("ts", "0 seconds"),
-        windowDays = 1),
-      sink("gate_attrwin"), mode = "append")
-    credits
-      .groupBy(col("channel"))
-      .agg(count(lit(1)).as("n_purchases"),
-        countDistinct(col("user_id")).as("n_users"))
-  }
+        sortedReplay(s, dir).withWatermark("ts", "0 seconds"), windowDays = 1),
+      memory("gate_attrwin", "append"), creditsByChannel)
 
   private val streamAttributionWindowSql =
     """WITH touched AS (
@@ -658,17 +622,15 @@ object StreamingGate {
     * recurring ingest runs while loading). Pure integer arithmetic —
     * the oracle recomputes baseline, proportions, and TVD in SQL.
     */
-  private def streamDrift(s: SparkSession, dir: String): DataFrame = {
+  private def streamDrift(s: SparkSession, dir: String): StreamPlan = {
     val base = Streams.driftBaseline(
       Tables.events(s, dir)
         .filter(col("ts") < lit("2024-01-16").cast("timestamp")))
-    val stream = Streams.readEventStream(s, stageEvents(s, dir, 4))
-    Streams.runToCompletion(
-      s, Streams.driftMonitor(stream, base), sink("gate_drift"),
-      mode = "update")
-      .select(expr("unix_micros(win_start)").as("win_us"), col("bucket"),
+    StreamPlan(Streams.driftMonitor(eventReplay(s, dir), base),
+      memory("gate_drift", "update"),
+      _.select(expr("unix_micros(win_start)").as("win_us"), col("bucket"),
         col("p_base_micro"), col("p_cur_micro"), col("drift_micro"),
-        col("tvd_micro"))
+        col("tvd_micro")))
   }
 
   private val streamDriftSql =
@@ -717,35 +679,28 @@ object StreamingGate {
     * against ALL seen vectors within the horizon (the same contract as
     * the signature store in `stream_near_dedup`), not only kept ones.
     */
-  private def streamSemanticDedup(s: SparkSession, dir: String): DataFrame = {
-    val d = DimCache.cached(s"gate-stage-embts:$dir") {
-      val t = DimCache.tempDir("graft-gate-embts")
+  private def streamSemanticDedup(s: SparkSession, dir: String): StreamPlan = {
+    val d = staged("embts", dir) { t =>
       Tables.embeddings(s, dir)
         .select(col("vec_id"),
           expr("timestamp'2024-01-01 00:00:00' + INTERVAL 1 SECOND * vec_id")
             .as("ts"),
-          graft.operators.Similarity.embDouble.as("embedding"))
+          Similarity.embDouble.as("embedding"))
         .orderBy(col("vec_id"))
         .coalesce(1).write.mode("overwrite").parquet(t)
-      t
     }
     // the batch operator's centroids: one build per JVM serves both twins
     val cRows = LlmOps.ivfCentroids(s, dir)
-    val stream = s.readStream.schema(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id", LongType),
-        org.apache.spark.sql.types.StructField("ts", TimestampType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))))).parquet(d)
-    // requireSingleDataBatch: the SQL twin below is HORIZON-FREE (every
-    // earlier same-cell partner counts), which equals the stream's
+    val stream = s.readStream.schema(StructType(Seq(
+      StructField("vec_id", LongType), StructField("ts", TimestampType),
+      StructField("embedding", ArrayType(DoubleType))))).parquet(d)
+    // singleBatch: the SQL twin below is HORIZON-FREE (every earlier
+    // same-cell partner counts), which equals the stream's
     // watermark-evicted semantics only while the whole replay fits in
     // one microbatch at watermark 0 — the coalesce(1) + AvailableNow
     // staging guarantees that today; this asserts it stays true.
-    Streams.runToCompletion(s,
-      Streams.semanticDedupStream(s, stream, cRows, tau = 0.35),
-      sink("gate_semdedup"), mode = "append", requireSingleDataBatch = true)
+    StreamPlan(Streams.semanticDedupStream(s, stream, cRows, tau = 0.35),
+      memory("gate_semdedup", "append", singleBatch = true))
   }
 
   /** DuckDB twin: the `dedup_semantic_keep` centroid/assignment CTEs
@@ -812,15 +767,13 @@ object StreamingGate {
     * batching equals the batch answer; a production deployment swaps
     * complete for watermark + append to evict settled windows.
     */
-  private def streamDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    val d = DimCache.cached(s"gate-stage-docts:$dir") {
-      val t = DimCache.tempDir("graft-gate-docts")
+  private def streamDecontaminate(s: SparkSession, dir: String): StreamPlan = {
+    val d = staged("docts", dir) { t =>
       Tables.documents(s, dir)
         .select(col("doc_id"), col("text"),
           expr("timestamp'2024-01-01 00:00:00' + INTERVAL 1 SECOND * doc_id")
             .as("ts"))
         .repartition(4).write.mode("overwrite").parquet(t)
-      t
     }
     val bench = Tables.documents(s, dir)
       .filter(pmod(col("doc_id"), lit(100)) === 0)
@@ -830,16 +783,16 @@ object StreamingGate {
         """transform(sequence(0, size(tk) - 4),
           |  i -> concat_ws(' ', slice(tk, i + 1, 4)))""".stripMargin)).as("g8"))
       .distinct()
-    val stream = s.readStream.schema(
-      org.apache.spark.sql.types.StructType(Streams.docSchema.fields :+
-        org.apache.spark.sql.types.StructField("ts", TimestampType)))
-      .parquet(d)
-    Streams.runToCompletion(
-      s, Streams.decontaminateStream(stream, bench), sink("gate_decon"),
-      mode = "complete")
-      .select(expr("unix_micros(win_start)").as("win_us"), col("doc_id"),
-        col("n_shared_grams"))
+    StreamPlan(Streams.decontaminateStream(docsWithTs(s, d), bench),
+      memory("gate_decon", "complete"),
+      _.select(expr("unix_micros(win_start)").as("win_us"), col("doc_id"),
+        col("n_shared_grams")))
   }
+
+  /** Documents (doc_id, text, ts) replayed from a staged dir. */
+  private def docsWithTs(s: SparkSession, d: String): DataFrame =
+    s.readStream.schema(StructType(
+      Streams.docSchema.fields :+ StructField("ts", TimestampType))).parquet(d)
 
   /** DuckDB twin: the `decontaminate_ngrams` gram/bench/count CTEs
     * verbatim, plus the synthetic ingest-time window bucket computed
@@ -880,9 +833,8 @@ object StreamingGate {
     * The NUL byte in the short-doc key is re-encoded ':' for the
     * oracle (DuckDB varchars cannot carry NUL).
     */
-  private def streamNearDedup(s: SparkSession, dir: String): DataFrame = {
-    val d = DimCache.cached(s"gate-stage-neardup:$dir") {
-      val t = DimCache.tempDir("graft-gate-neardup")
+  private def streamNearDedup(s: SparkSession, dir: String): StreamPlan = {
+    val d = staged("neardup", dir) { t =>
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val doubled = docs
         .union(docs.select((col("doc_id") + lit(1000000L)).as("doc_id"),
@@ -890,17 +842,11 @@ object StreamingGate {
         .withColumn("ts", expr(
           "timestamp'2026-01-01 00:00:00' + INTERVAL 1 SECOND * (doc_id % 300)"))
       doubled.repartition(4).write.mode("overwrite").parquet(t)
-      t
     }
-    val stream = s.readStream.schema(
-      org.apache.spark.sql.types.StructType(Streams.docSchema.fields :+
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.TimestampType))).parquet(d)
-    Streams.runToCompletion(
-      s, Streams.nearDedupStream(stream, "ts", portable = true),
-      sink("gate_neardup"), mode = "append")
-      .groupBy(replace(col("sig"), lit("\u0000"), lit(":")).as("sig"))
-      .agg(count(lit(1)).as("n_rows"))
+    StreamPlan(Streams.nearDedupStream(docsWithTs(s, d), "ts", portable = true),
+      memory("gate_neardup", "append"),
+      _.groupBy(replace(col("sig"), lit("\u0000"), lit(":")).as("sig"))
+        .agg(count(lit(1)).as("n_rows")))
   }
 
   private val streamNearDedupSql =
@@ -925,13 +871,9 @@ object StreamingGate {
     * identically-ordered value list (list_reduce), so the double is
     * bit-exact, not an envelope.
     */
-  private def streamLastNMean(s: SparkSession, dir: String): DataFrame = {
-    Streams.runToCompletion(
-      s,
-      Streams.lastNMean(s,
-        Streams.readEventStream(s, stageEventsSorted(s, dir)), 4),
-      sink("gate_lastn"), mode = "update")
-  }
+  private def streamLastNMean(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.lastNMean(s, sortedReplay(s, dir), 4),
+      memory("gate_lastn", "update"))
 
   private val streamLastNMeanSql =
     """WITH ranked AS (
@@ -953,14 +895,11 @@ object StreamingGate {
     * hash-green twins: `stream_kmv_window` (same windowed-sketch
     * shape) and `agg_tdigest_vs_exact` (the digest's accuracy oracle).
     */
-  private def streamTdigestWindow(s: SparkSession, dir: String): DataFrame = {
-    val stream = Streams.readEventStream(s, stageEvents(s, dir, 4))
-    Streams.runToCompletion(
-      s, Streams.tdigestWindowQuantiles(stream), sink("gate_td"),
-      mode = "complete")
-      .select(expr("unix_micros(win_start)").as("win_us"),
-        col("n_events"), col("p50_est"), col("p99_est"))
-  }
+  private def streamTdigestWindow(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(Streams.tdigestWindowQuantiles(eventReplay(s, dir)),
+      memory("gate_td", "complete"),
+      _.select(expr("unix_micros(win_start)").as("win_us"),
+        col("n_events"), col("p50_est"), col("p99_est")))
 
   // ------------------------------------------------ stream_checkpoint_resume
   /** Checkpointed kill-resume through the production sink shape
@@ -976,18 +915,27 @@ object StreamingGate {
     * StreamingSpec's near-dedup kill test; this gate row certifies the
     * offset-log/sink-commit contract every 100 TB ingest leans on.)
     */
-  private def streamCheckpointResume(s: SparkSession, dir: String): DataFrame = {
-    val in = DimCache.tempDir("graft-gate-cpr-in")
+  private def streamCheckpointResume(s: SparkSession, dir: String): StreamPlan = {
+    val in = staged("cpr", dir) { t =>
+      eventColumns(s, dir).repartition(6).write.mode("overwrite").parquet(t)
+    }
+    StreamPlan(
+      s.readStream.schema(Streams.eventSchema)
+        .option("maxFilesPerTrigger", "1").parquet(in)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("value"), upper(col("event_type")).as("event_type_uc")),
+      killResume)
+  }
+
+  /** The checkpoint row's runner: a first query is stopped as soon as
+    * one micro-batch has committed, a second resumes from the same
+    * checkpoint with AvailableNow and drains; returns the file sink read
+    * through its `_spark_metadata` log.
+    */
+  private def killResume(s: SparkSession, plan: DataFrame): DataFrame = {
     val out = DimCache.tempDir("graft-gate-cpr-out")
     val cp = DimCache.tempDir("graft-gate-cpr-cp")
-    Tables.events(s, dir)
-      .select(Streams.eventSchema.fieldNames.map(col).toSeq: _*)
-      .repartition(6).write.mode("overwrite").parquet(in)
-    def writer() = s.readStream.schema(Streams.eventSchema)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), upper(col("event_type")).as("event_type_uc"))
-      .writeStream.outputMode("append").format("parquet")
+    def writer() = plan.writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", cp)
     Streams.applyStateProvider(s) // same flag routing as runToCompletion
     val q1 = writer().start()
@@ -1016,21 +964,19 @@ object StreamingGate {
     * recomputes every per-subspace argmin with the identical
     * ascending-index IEEE fold and first-min tiebreak.
     */
-  private def streamPqEncode(s: SparkSession, dir: String): DataFrame =
-    Streams.runToCompletion(
-      s, graft.operators.Similarity.encodePq(stagedEmbeddings(s, dir),
+  private def streamPqEncode(s: SparkSession, dir: String): StreamPlan =
+    StreamPlan(
+      Similarity.encodePq(stagedEmbeddings(s, dir),
         LlmOps.pqCodebooks(s, dir), LlmOps.pqDsub(s, dir)).drop("e"),
-      sink("gate_pq"), mode = "append")
+      memory("gate_pq", "append"))
 
   /** The embeddings (vec_id, e) staged as a 4-file replay dir, shared by
     * the three vector-encode gate rows.
     */
   private def stagedEmbeddings(s: SparkSession, dir: String): DataFrame = {
     val emb = LlmOps.embVectors(s, dir)
-    val d = DimCache.cached(s"gate-stage-pq:$dir") {
-      val t = DimCache.tempDir("graft-gate-pq")
+    val d = staged("pq", dir) { t =>
       emb.repartition(4).write.mode("overwrite").parquet(t)
-      t
     }
     s.readStream.schema(emb.schema).parquet(d)
   }
@@ -1045,16 +991,15 @@ object StreamingGate {
     * ArrCanon-joined string (the emb_quantize array convention);
     * oracle recomputes assignment + quantizer from the raw table.
     */
-  private def streamIvfSq8Encode(s: SparkSession, dir: String): DataFrame = {
+  private def streamIvfSq8Encode(s: SparkSession, dir: String): StreamPlan = {
     val (mn, mx) = LlmOps.sq8Bounds(s, dir)
-    Streams.runToCompletion(
-      s, graft.operators.Similarity
-        .encodeIvfSq8(stagedEmbeddings(s, dir)
+    StreamPlan(
+      Similarity.encodeIvfSq8(stagedEmbeddings(s, dir)
           .select(col("vec_id"), col("e").as("embedding")),
           LlmOps.ivfCentroids(s, dir), mn, mx)
         .select(col("vec_id"), col("cell_id"),
           graft.ArrCanon.joinedInts(col("codes")).as("codes_str")),
-      sink("gate_ivfsq8enc"), mode = "append")
+      memory("gate_ivfsq8enc", "append"))
   }
 
   /** Streaming binary-quantization encode (the `stream_pq_encode` /
@@ -1066,12 +1011,12 @@ object StreamingGate {
     * bytes/row at ingest speed. The oracle recomputes bounds →
     * thresholds → pack from the raw table with identical arithmetic.
     */
-  private def streamBinaryEncode(s: SparkSession, dir: String): DataFrame = {
+  private def streamBinaryEncode(s: SparkSession, dir: String): StreamPlan = {
     val (mn, mx) = LlmOps.sq8Bounds(s, dir)
-    Streams.runToCompletion(
-      s, graft.operators.Similarity.encodeBinary(stagedEmbeddings(s, dir),
-        graft.operators.Similarity.binaryThresholds(mn, mx)),
-      sink("gate_bqenc"), mode = "append")
+    StreamPlan(
+      Similarity.encodeBinary(stagedEmbeddings(s, dir),
+        Similarity.binaryThresholds(mn, mx)),
+      memory("gate_bqenc", "append"))
   }
 
   /** DuckDB twin: the binary bounds/threshold/pack CTEs (shared with
@@ -1164,41 +1109,51 @@ object StreamingGate {
       |  CAST(max(CASE WHEN m = 7 THEN k END) AS INTEGER) AS c7
       |FROM codes GROUP BY vec_id""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "stream_pq_encode" -> Q(streamPqEncode _, streamPqEncodeSql),
-    "stream_checkpoint_resume" ->
-      Q(streamCheckpointResume _, streamCheckpointResumeSql),
-    "stream_near_dedup" -> Q(streamNearDedup _, streamNearDedupSql),
-    "stream_decontaminate" ->
-      Q(streamDecontaminate _, streamDecontaminateSql),
-    "stream_ivfsq8_encode" ->
-      Q(streamIvfSq8Encode _, streamIvfSq8EncodeSql),
-    "stream_binary_encode" ->
-      Q(streamBinaryEncode _, streamBinaryEncodeSql),
-    "stream_semantic_dedup" ->
-      Q(streamSemanticDedup _, streamSemanticDedupSql),
-    "stream_last_n_mean" -> Q(streamLastNMean _, streamLastNMeanSql),
-    "stream_tdigest_window" -> Q(streamTdigestWindow _, None),
-    "stream_cms" -> Q(streamCms _, streamCmsSql),
-    "stream_kmv_window" -> Q(streamKmvWindow _, streamKmvWindowSql),
-    "stream_scd2" -> Q(streamScd2 _, streamScd2Sql),
-    "stream_postings" -> Q(streamPostings _, Retrieval.indexPostingsSql),
-    "stream_transitions" -> Q(streamTransitions _, Extras.pathTransitionsSql),
-    "stream_funnel" -> Q(streamFunnel _, Extras.funnelConversionSql),
-    "stream_running_agg" -> Q(streamRunningAgg _, streamRunningAggSql),
-    "stream_start_state" -> Q(streamStartState _, streamStartStateSql),
-    "stream_tumbling" -> Q(streamTumbling _, streamTumblingSql),
-    "stream_sliding" -> Q(streamSliding _, streamSlidingSql),
-    "stream_ohlc" -> Q(streamOhlc _, Extras.resampleOhlcSql),
-    "stream_session" -> Q(streamSession _, streamSessionSql),
-    "stream_dedup_exact" -> Q(streamDedupExact _, streamDedupExactSql),
-    "stream_join" -> Q(streamJoin _, streamJoinSql),
-    "stream_asof_enrich" -> Q(streamAsofEnrich _, streamAsofEnrichSql),
-    "stream_enrich_dim" -> Q(streamEnrichDim _, streamEnrichDimSql),
-    "stream_zscore" -> Q(streamZscore _, Extras.tsAnomalyZscoreSql),
-    "stream_attribution" -> Q(streamAttribution _, Extras.attributionLastTouchSql),
-    "stream_attribution_window" ->
-      Q(streamAttributionWindow _, streamAttributionWindowSql),
-    "stream_drift" -> Q(streamDrift _, streamDriftSql)
+  /** Every gate row: its stream declaration and its DuckDB oracle. */
+  private val rows: Map[String, (Row, Option[String])] = Map(
+    "stream_pq_encode" -> (streamPqEncode _, Some(streamPqEncodeSql)),
+    "stream_checkpoint_resume" -> (streamCheckpointResume _, Some(streamCheckpointResumeSql)),
+    "stream_near_dedup" -> (streamNearDedup _, Some(streamNearDedupSql)),
+    "stream_decontaminate" -> (streamDecontaminate _, Some(streamDecontaminateSql)),
+    "stream_ivfsq8_encode" -> (streamIvfSq8Encode _, Some(streamIvfSq8EncodeSql)),
+    "stream_binary_encode" -> (streamBinaryEncode _, Some(streamBinaryEncodeSql)),
+    "stream_semantic_dedup" -> (streamSemanticDedup _, Some(streamSemanticDedupSql)),
+    "stream_last_n_mean" -> (streamLastNMean _, Some(streamLastNMeanSql)),
+    "stream_tdigest_window" -> (streamTdigestWindow _, None),
+    "stream_cms" -> (streamCms _, Some(streamCmsSql)),
+    "stream_kmv_window" -> (streamKmvWindow _, Some(streamKmvWindowSql)),
+    "stream_scd2" -> (streamScd2 _, Some(streamScd2Sql)),
+    "stream_postings" -> (streamPostings _, Some(Retrieval.indexPostingsSql)),
+    "stream_transitions" -> (streamTransitions _, Some(Extras.pathTransitionsSql)),
+    "stream_funnel" -> (streamFunnel _, Some(Extras.funnelConversionSql)),
+    "stream_running_agg" -> (streamRunningAgg _, Some(streamRunningAggSql)),
+    "stream_start_state" -> (streamStartState _, Some(streamStartStateSql)),
+    "stream_tumbling" -> (streamTumbling _, Some(streamTumblingSql)),
+    "stream_sliding" -> (streamSliding _, Some(streamSlidingSql)),
+    "stream_ohlc" -> (streamOhlc _, Some(Extras.resampleOhlcSql)),
+    "stream_session" -> (streamSession _, Some(streamSessionSql)),
+    "stream_dedup_exact" -> (streamDedupExact _, Some(streamDedupExactSql)),
+    "stream_join" -> (streamJoin _, Some(streamJoinSql)),
+    "stream_asof_enrich" -> (streamAsofEnrich _, Some(streamAsofEnrichSql)),
+    "stream_enrich_dim" -> (streamEnrichDim _, Some(streamEnrichDimSql)),
+    "stream_zscore" -> (streamZscore _, Some(Extras.tsAnomalyZscoreSql)),
+    "stream_attribution" -> (streamAttribution _, Some(Extras.attributionLastTouchSql)),
+    "stream_attribution_window" -> (streamAttributionWindow _, Some(streamAttributionWindowSql)),
+    "stream_drift" -> (streamDrift _, Some(streamDriftSql))
   )
+
+  def queries: Map[String, Q] = rows.map { case (name, (row, oracle)) =>
+    name -> Q({ (s, dir) =>
+      val p = row(s, dir)
+      p.project(p.run(s, p.plan))
+    }, oracle)
+  }
+
+  /** The gate rows named in `want`, each as the stream plan its query
+    * runs — built over the same staged replay, never started — sorted by
+    * name: the plans the streaming-state smell audit reads.
+    */
+  def statePlans(spark: SparkSession, dir: String,
+      want: Set[String]): Seq[(String, DataFrame)] =
+    rows.keys.toSeq.filter(want).sorted.map(n => n -> rows(n)._1(spark, dir).plan)
 }

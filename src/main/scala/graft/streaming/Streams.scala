@@ -903,15 +903,13 @@ object Streams {
       .toDF("event_type", "n_events", "cents")
   }
 
-  /** State-store provider selection (r17, verdict task 4): the r16
-    * RocksDB parity experiment (SCALING.md:181-190 — bit-identical
-    * `stream_near_dedup` output, 20.4 vs 22.4 s) shipped as a doc note;
-    * this makes it a reproducible harness switch. `SPARK_GRAFT_STATE_
-    * PROVIDER=rocksdb` (env, for driver runs) or `-Dgraft.stateProvider=
-    * rocksdb` (sysprop, for in-JVM specs) routes EVERY gate/bench
-    * streaming query through RocksDBStateStoreProvider — state lives
-    * off-heap/on-disk per partition, the provider a 100 TB deployment
-    * would run to keep multi-GB key spaces out of executor heaps. Unset
+  /** State-store provider selection, a harness switch:
+    * `SPARK_GRAFT_STATE_PROVIDER=rocksdb` (env, for driver runs) or
+    * `-Dgraft.stateProvider=rocksdb` (sysprop, for in-JVM specs) routes
+    * EVERY gate/bench streaming query through RocksDBStateStoreProvider
+    * — state lives off-heap/on-disk per partition, the provider a 100 TB
+    * deployment would run to keep multi-GB key spaces out of executor
+    * heaps. Unset
     * ⇒ Spark's default HDFSBackedStateStoreProvider. The conf is
     * set-or-unset on EVERY call so one flagged run can't leak its
     * provider into a later unflagged query in the same session.
@@ -921,10 +919,9 @@ object Streams {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     "hdfs" ->
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-  // public since r18: the checkpoint-resume gate row starts its own
-  // query (kill/resume semantics need direct start() control) and the
-  // 25-row parity sweep (`graft.StreamParity`) needs every row to route
-  // through the same flag
+  // public: the checkpoint-resume gate row starts its own queries
+  // (kill/resume needs direct start() control) and routes them through
+  // the same flag as every memory-sink row
   def applyStateProvider(spark: SparkSession): Unit = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     sys.props.get("graft.stateProvider")
@@ -939,8 +936,9 @@ object Streams {
   }
 
   /** Run a streaming query to completion against a static replay dir and
-    * return the in-memory sink table (used by tests and demos;
-    * checkpointing exercised via the checkpointLocation option).
+    * return the in-memory sink table, registered as the temp view `name`
+    * (the caller owns that view and drops it when done); `checkpoint`
+    * sets the query's checkpointLocation.
     */
   def runToCompletion(
       spark: SparkSession,
@@ -964,7 +962,7 @@ object Streams {
     // eviction). That held implicitly via coalesce(1) staging +
     // AvailableNow; assert it so a future staging or trigger change
     // (second file, maxFilesPerTrigger) breaks loudly instead of
-    // silently diverging from the oracle (r18 ADVICE).
+    // silently diverging from the oracle.
     if (requireSingleDataBatch) {
       val dataBatches = q.recentProgress.count(_.numInputRows > 0)
       require(dataBatches == 1,

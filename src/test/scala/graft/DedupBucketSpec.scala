@@ -1,10 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import graft.operators.{Banding, Dedup}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.HarnessProbes
 import org.scalatest.funsuite.AnyFunSuite
 
 class DedupBucketSpec extends AnyFunSuite {
@@ -245,6 +248,36 @@ class DedupBucketSpec extends AnyFunSuite {
     val wrong = sites.filter(_._2 != Seq("operators/Dedup.scala"))
     assert(wrong.isEmpty, wrong.map { case (p, fs) => s"$p at ${fs.mkString(", ")}" }
       .mkString("expected once, in operators/Dedup.scala: ", "; ", ""))
+  }
+
+  test("Scans.fanOut reads partitions from the plan: no job on the exact-dedup shape") {
+    // pipeline_funnel's exact-dedup stage: documents semi-joined to
+    // their md5 group minima, uncached, under AQE
+    val docs = Tables.documents(spark, sf)
+    val exact = docs.join(
+      docs.groupBy(md5(col("text").cast("binary")).as("sig"))
+        .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id")),
+      Seq("doc_id"), "leftsemi")
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    withConf("spark.sql.adaptive.enabled" -> "true") {
+      HarnessProbes.drain(sc)
+      sc.addSparkListener(listener)
+      val (fannedExact, fannedScan) =
+        try {
+          val r = (Scans.fanOut(exact), Scans.fanOut(docs))
+          HarnessProbes.drain(sc)
+          r
+        } finally sc.removeSparkListener(listener)
+      assert(jobs.get == 0, s"${jobs.get} jobs inside fanOut")
+      // the exchange already gives the session's shuffle partitions;
+      // the one-file scan still fans out to the default parallelism
+      assert(fannedExact eq exact)
+      assert(fannedScan.rdd.getNumPartitions == sc.defaultParallelism)
+    }
   }
 
   test("bucketed tables join without a shuffle exchange") {

@@ -20,7 +20,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class DriverDisciplineSpec extends AnyFunSuite {
 
   private val golden = Map(
-    "AmplifiedBench.scala" -> 1, // temp-view drop list (bounded: catalog)
     "StreamParity.scala" -> 1, // parity sweep sink compare (bounded: gate sink rows at sf0.01, a diagnostic main off the query path)
     "Bench.scala" -> 1, // pruned-scan evidence: the z-order, bloom and ivfsq8 results (4..k rows, at most the ivfsq8 10-row top-k)
     "functions/Bpe.scala" -> 1, // merge table (<= 200 learned pairs)

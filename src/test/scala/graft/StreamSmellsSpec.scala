@@ -4,11 +4,13 @@ import java.nio.file.Files
 
 import graft.streaming.Streams
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Streaming-state smell audit (r14): every canonical streaming
-  * constructor in [[graft.streaming.Streams]] must be state-bounded
+/** Streaming-state smell audit: every streaming gate row's own stream
+  * plan (`StreamingGate.statePlans`, the plan its query runs) and the
+  * one `Streams` constructor no gate row runs must be state-bounded
   * under [[PlanSmells.streamSmells]] — watermarked stateful ops,
   * derived-key sketches, time-range-bounded stream-stream joins — and
   * planted unbounded-state plans (raw-key aggregate without watermark,
@@ -33,43 +35,26 @@ class StreamSmellsSpec extends AnyFunSuite {
   private def smells(df: DataFrame): Seq[String] =
     PlanSmells.streamSmells(df.queryExecution.analyzed)
 
-  test("every canonical streaming op is state-bounded under the audit") {
-    val docsDir = {
-      val d = Files.createTempDirectory("graft-smell-docs").toString
-      Tables.documents(spark, sf)
-        .select(col("doc_id"), col("text"))
-        .withColumn("ts", expr("timestamp'2026-01-01 00:00:00'"))
-        .coalesce(1).write.mode("overwrite").parquet(d)
-      d
-    }
+  test("every streaming gate row's own stream plan is state-bounded under the audit") {
+    val gate = SparkEntry.queries.keys.filter(_.startsWith("stream_")).toSet
+    val plans = queries.StreamingGate.statePlans(spark, sf, gate)
+    assert(plans.map(_._1).toSet == gate && gate.size == 29,
+      s"${plans.size} plans for ${gate.size} gate rows")
+    val flagged = plans.map { case (n, df) => n -> smells(df) }.filter(_._2.nonEmpty)
+    assert(flagged.isEmpty, flagged.map { case (n, ss) => s"$n: ${ss.mkString(",")}" }
+      .mkString("gate rows flagged: ", "; ", ""))
+  }
+
+  test("the native near-dedup stream, which no gate row runs, is state-bounded") {
+    val d = Files.createTempDirectory("graft-smell-docs").toString
+    Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text"))
+      .withColumn("ts", expr("timestamp'2026-01-01 00:00:00'"))
+      .coalesce(1).write.mode("overwrite").parquet(d)
     val docStream = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(
-        Streams.docSchema.fields :+ org.apache.spark.sql.types.StructField(
-          "ts", org.apache.spark.sql.types.TimestampType)))
-      .parquet(docsDir)
-    val ops: Seq[(String, DataFrame)] = Seq(
-      "running_agg" -> Streams.runningAggByType(events),
-      "tumbling" -> Streams.tumblingCounts(events),
-      "sliding" -> Streams.slidingCounts(events),
-      "session" -> Streams.sessionCounts(events),
-      "cms" -> Streams.cmsCounters(events),
-      "kmv_window" -> Streams.kmvWindowDistinct(events),
-      "tdigest_window" -> Streams.tdigestWindowQuantiles(events),
-      "dedup_exact" -> Streams.dedupStream(events),
-      "near_dedup" -> Streams.nearDedupStream(docStream, "ts"),
-      "near_dedup_portable" ->
-        Streams.nearDedupStream(docStream, "ts", portable = true),
-      "click_view_join" -> Streams.clickViewJoin(events, "click", "view"),
-      "asof_enrich" -> Streams.asOfEnrich(events, "click", "purchase"),
-      "drift_monitor" ->
-        Streams.driftMonitor(events, Seq(("click", 500000L), ("view", 500000L))),
-      "enrich_dim" ->
-        Streams.enrichWithDim(events, Tables.customer(spark, sf))
-    )
-    ops.foreach { case (name, df) =>
-      assert(smells(df).isEmpty,
-        s"$name flagged: ${smells(df).mkString(",")}")
-    }
+      .schema(StructType(Streams.docSchema.fields :+ StructField("ts", TimestampType)))
+      .parquet(d)
+    assert(smells(Streams.nearDedupStream(docStream, "ts")).isEmpty)
   }
 
   test("raw-key streaming aggregate without watermark is caught") {
