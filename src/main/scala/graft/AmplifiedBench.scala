@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The scale sweep: runs a selected query set at 1× and at an
+/** The scale sweep: runs the [[Tag.Sweep]] rows at 1× and at an
   * N×-amplified copy of the same scale factor, reporting per-query wall
   * seconds and the scaling ratio (reference benches SF ∈ {0.01, 0.1, 1},
   * `cpp/benchmarks/ndsh/q01.cpp:182`; /root/testdata is read-only with
@@ -29,91 +29,13 @@ import org.apache.spark.sql.functions._
   * does.
   *
   * Usage: runMain graft.AmplifiedBench [sfDir] [factor] [reps] [q1,q2,...]
-  * (the last argument restricts the sweep to those selection rows).
+  * (the last argument restricts the sweep to those rows).
   * Output: one JSON line per (query, factor); any row whose ratio
   * exceeds [[AdjudicationRatio]] gets a SECOND line at the end of the
   * run (`"adjudication_deferred":true`) carrying the fresh-JVM child's
   * own base/amp/ratio, measured after the sweep drained.
   */
 object AmplifiedBench {
-
-  /** NDS-H 22 + the six r13 grouped-scan rewires + the five most
-    * expensive driver-bench entries + the round-14 pandas-API shapes
-    * (fine-grained-key windows, GlobalOrder stride/ngroup, one-scan
-    * searchsorted).
-    */
-  val selection: Seq[String] =
-    (1 to 22).map(i => s"ndsh_q$i") ++ Seq(
-      "agg_weighted_median", "win_rank_family", "sample_balanced_labels",
-      "mix_token_budget", "qcut_bins", "clean_winsorize",
-      "graph_pagerank", "join_skew_salted", "dedup_substring_spans",
-      "retrieval_rrf_fusion", "dedup_ngram_jaccard",
-      "win_pct_change", "win_rank_ties", "win_cumprod",
-      "sort_searchsorted", "slice_stride", "group_head_tail",
-      "decontaminate_bloom", "reshape_hconcat", "emb_gram_matrix",
-      // r15: the heavy retrieval/sketch/graph rows the r14 sweep lacked
-      "text_bm25_topk", "index_postings", "sketch_cms_topk",
-      "emb_pca_power", "graph_triangles",
-      // r18: the new SQ8 byte-code ANN — bounds are d min/max pairs
-      // (scale-free dimension, DimCache'd in the warmup with the codes
-      // write), so the timed reps measure the map-only byte-scan top-k;
-      // expect ~linear-or-below in corpus size
-      "sim_sq8_topk",
-      // r19: the SQ8 recall certification — two broadcast-query map
-      // passes (raw corpus + byte index) + per-query top-10 windows;
-      // expect ~linear in corpus size with the same fixed-overhead
-      // amortization as the other ANN rows
-      "sim_sq8_recall",
-      // r19: the IVF,SQ8 composed read path — cell-partitioned byte
-      // codes (index write DimCache'd in the warmup), probe =
-      // partition-pruned scan of 2/8 cells; expect sublinear (the
-      // pruned fraction is constant, per-cell population grows
-      // linearly) with byte-scan fixed-overhead amortization
-      "sim_ivfsq8_topk",
-      // r19: the 1-bit binary index read path — thresholds + 16-byte
-      // codes write DimCache'd in the warmup; timed reps measure the
-      // integer XOR+popcount Hamming cut + 64-candidate exact rerank;
-      // expect ~linear-or-below (two-long scan, fixed-overhead heavy)
-      "sim_binary_topk",
-      // r19: the matryoshka d/4-prefix retrieve-and-refine — prefix
-      // index write in the warmup; timed reps measure the
-      // quarter-width stage-1 scan + broadcast rerank; expect ~linear
-      // in corpus with a 4× smaller byte base than the raw scan
-      "sim_matryoshka_topk",
-      // r20 (r19 verdict task 5): the IVF,SQ8 two-stage
-      // retrieve-and-refine — stage 1 is sim_ivfsq8_topk's
-      // partition-pruned byte scan (expect its sublinear curve), stage
-      // 2 a 50-row broadcast-semi refine read whose cost is the raw
-      // scan of the candidate rows — so expect ~sim_ivfsq8_topk plus a
-      // near-constant rerank term
-      "sim_ivfsq8_rerank",
-      // r15: streaming-gate replays — the state-store-bound trio. Each
-      // gate query stages its replay dir ONCE per (JVM, dataset dir)
-      // via DimCache (r15 change), so the warmup pays the staging write
-      // and the timed reps measure the AvailableNow replay itself:
-      // source scan → stateful operator (state store) → memory sink.
-      "stream_near_dedup", "stream_postings", "stream_kmv_window",
-      // r16: the arrival-order-independent windowed OHLC face
-      "stream_ohlc",
-      // r17: the bloom point-lookup. Rows MATERIALIZED stay ~one row
-      // group at any corpus size; what grows is the per-row-group
-      // metadata work (footer entries + one bloom check each), which is
-      // linear in group count — and the demo layout's fixed 64 KB
-      // groups make group count itself linear in corpus size, so the
-      // measured 10× ratio is ~2.9 (sublinear), not flat. Production
-      // 128 MB groups grow ~2000× slower, pushing the same curve toward
-      // flat. A ratio approaching 10 would mean the bloom stopped
-      // pruning and DATA reads went linear — the regression this row
-      // exists to catch.
-      "scan_bloom_pruned",
-      // The scale axes these rows carry: the greedy packer's one forward
-      // scan per lang stream, tf-idf's df aggregate and tok join, the
-      // persisted-index delta query (its index builds in the warmup, so
-      // expect the delta's cost to grow far slower than the corpus),
-      // LSH dedup on a corpus whose salted replicas share no shingle,
-      // and the fixed-size stream CMS state.
-      "pack_sequences", "text_tfidf_topk", "dedup_incremental_lsh",
-      "dedup_minhash_lsh", "stream_cms")
 
   /** A sweep row whose ratio exceeds this re-runs in a fresh JVM after
     * the sweep has drained.
@@ -199,7 +121,8 @@ object AmplifiedBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val only = args.lift(3).map(_.split(",").map(_.trim).toSet)
+    val only = args.lift(3)
+    val selected = SparkEntry.restrict(SparkEntry.tagged(Tag.Sweep), only)
     val child = args.lift(4).contains(ChildFlag)
     val spark = Harness.session()
 
@@ -222,37 +145,26 @@ object AmplifiedBench {
         -1.0
       }
 
-    // Bench.scala's group harness shape: per-(query, dir) warmup then
-    // timed reps with a cache-clear + GC between groups, so broadcasts
-    // from the 10x group never sit on the heap during the 1x group.
-    def cleanup(): Unit = {
-      spark.catalog.clearCache(); System.gc(); Thread.sleep(200)
-    }
-    // cleanup() runs OUTSIDE the caller's gc_ms sampling span: its two
-    // forced System.gc() full collections are deliberate harness pauses,
-    // not the organic GC pressure the telemetry column exists to expose.
+    // Bench's group shape: per-(query, dir) warmup then timed reps, with
+    // a Harness.settle between groups so broadcasts from the Nx group
+    // never sit on the heap during the 1x group. The settle runs OUTSIDE
+    // the gc_ms sampling spans: its forced System.gc() is a deliberate
+    // harness pause, not the organic GC pressure the column exposes.
     def medianSecs(name: String, dir: String): Double = {
       run(name, dir)
       val ts = Seq.fill(reps)(run(name, dir))
       if (ts.exists(_ < 0)) -1.0 else ts.sorted.apply(reps / 2)
     }
 
-    // Per-row heap/GC telemetry: a high ratio WITH a gc jump is sweep
-    // context (late-sweep GC pressure), without one it is the plan.
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
     // Adjudication: any sweep row whose ratio exceeds AdjudicationRatio
     // re-runs in a fresh child JVM on the identical amplified dataset.
     // A child launched INSIDE the sweep competed with the parent's hot
     // heap and busy threads (join_skew_salted read 8.66 there where a
     // standalone run read 4.72), so adjudication queues during the sweep
-    // and the children run only AFTER the sweep fully drains: temp views
-    // dropped, cache cleared, the parent's SparkSession STOPPED, heap
-    // GC'd, and a settle pause — the parent is an idle waiter while each
-    // child measures. The child re-measures BASE and AMP itself, so its
+    // and the children run only AFTER the sweep fully drains: cache
+    // cleared, the parent's SparkSession STOPPED, heap GC'd, and a pause
+    // — the parent is an idle waiter while each child measures. The
+    // child re-measures BASE and AMP itself, so its
     // ratio is internally consistent (same JVM, same dataset, fresh heap).
     // child row: (base_secs, amp_secs, ratio) parsed from its one data line
     def freshJvmRun(query: String): Option[(Double, Double, Double)] = {
@@ -283,34 +195,33 @@ object AmplifiedBench {
           yield (b, a, r)
       }
     }
-    // Inclusion-rule header: the sweep covers a SELECTION, not the full
-    // bench headline, so the first output line names the rule and lists
-    // the headline queries NOT swept, computed at runtime so it can never
-    // drift from the actual sets.
+    // The sweep covers the Sweep rows, not the whole headline, so the
+    // first output line names the rule and lists the headline rows NOT
+    // swept.
     if (only.isEmpty) {
-      val excluded = Bench.headline.filterNot(selection.contains)
+      val excluded = Bench.headline.filterNot(selected.contains)
       println(
-        s"""{"meta":"selection_rule","swept":${selection.size},""" +
+        s"""{"meta":"selection_rule","swept":${selected.size},""" +
           s""""headline_excluded_n":${excluded.size},""" +
-          s""""rule":"sweep = NDS-H 22 + grouped-scan rewires + heaviest driver-bench rows + pandas-API shapes + ANN index read paths + state-store streaming replays + the packing, tf-idf, LSH dedup and stream-CMS scale rows; excluded headline families: recall-certification rows (8-query broadcast windows, work bounded by the fixed query set), light fixed-overhead-dominated scan/agg/join rows, and DimCache'd bounded-result rows",""" +
+          s""""rule":"sweep = ${Tag.Sweep.rule}",""" +
           s""""headline_excluded":[${excluded.map("\"" + _ + "\"").mkString(",")}]}""")
     }
     val pending = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val rows = selection.filter(n => only.forall(_.contains(n))).map { n =>
-      val gc0 = gcMs()
+    // Per-row heap/GC telemetry: a high ratio WITH a gc jump is sweep
+    // context (late-sweep GC pressure), without one it is the plan. The
+    // gc_base_ms/gc_amp_ms split says which side the pressure hit: a
+    // base-side spike deflates the ratio, an amp-side spike inflates it.
+    val rows = selected.map { n =>
+      val gc0 = Harness.gcMs
       val base = medianSecs(n, sfDir)
-      val gcBase = gcMs() - gc0
-      cleanup()
-      val gc1 = gcMs()
+      val gcBase = Harness.gcMs - gc0
+      Harness.settle(spark)
+      val gc1 = Harness.gcMs
       val amp = medianSecs(n, ampDir)
-      val gcAmp = gcMs() - gc1
-      cleanup()
+      val gcAmp = Harness.gcMs - gc1
+      Harness.settle(spark)
       val ratio = if (base > 0 && amp > 0) amp / base else -1.0
-      val rt = Runtime.getRuntime
-      val heapMb = (rt.totalMemory - rt.freeMemory) / 1048576
-      // gc_base_ms/gc_amp_ms split: a base-side GC spike DEFLATES the
-      // ratio, an amp-side spike inflates it — one summed column could
-      // not say which group the pressure hit.
+      val heapMb = Harness.heapUsedMb
       if (!child && ratio > AdjudicationRatio) {
         System.err.println(
           f"[amp] $n sweep ratio $ratio%.2f > $AdjudicationRatio%.1f — " +
@@ -325,7 +236,7 @@ object AmplifiedBench {
       f"$n=$r%.1f" }.mkString(", "))
     if (pending.nonEmpty) {
       // drain: the children must see an idle box, not the sweep's tail
-      cleanup()
+      Harness.settle(spark)
       spark.stop()
       System.gc()
       System.err.println(

@@ -19,7 +19,7 @@ import org.apache.spark.sql.graftbridge.HarnessProbes
   * completed noop write.
   *
   * As a main it is the per-stage profiler: each named query runs cold,
-  * then warm, then once more after a cache clear and GC, and the last
+  * then warm, then once more after a [[settle]], and the last
   * run's stages print as a table (wall, executor run and GC time,
   * shuffle read/write bytes and rows, input bytes, spill, tasks).
   *
@@ -111,6 +111,30 @@ object Harness {
   def timed(name: String)(build: => DataFrame): Sample =
     measure(name)(build.write.format("noop").mode("overwrite").save())._2
 
+  /** Cumulative collection milliseconds over every JVM collector. */
+  def gcMs: Long =
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .map(_.getCollectionTime).sum
+
+  /** Heap in use, MB. */
+  def heapUsedMb: Long = {
+    val rt = Runtime.getRuntime
+    (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
+  }
+
+  /** The settle between measured groups: drop cached frames, then force
+    * a GC. Spark's ContextCleaner reclaims a dead broadcast only when the
+    * JVM collects its weak reference, and its own periodic GC (30 min)
+    * never fires inside a run, so without this every broadcast an
+    * earlier group made (tokenizer vocabs, hinted dims) stays on the
+    * heap. The pause lets the cleaner thread drain its queue.
+    */
+  def settle(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    System.gc()
+    Thread.sleep(200)
+  }
+
   /** Rows the parquet scans of an executed `df` produced, after row-group
     * and partition pruning.
     */
@@ -133,7 +157,7 @@ object Harness {
       def run(): Sample = timed(name)(SparkEntry.queries(name)(spark, sfDir))
       val cold = run()
       run()
-      spark.catalog.clearCache(); System.gc()
+      settle(spark)
       val s = run()
       println(f"\n===== $name wall=${s.secs}%.3fs stages=${s.stages.size} " +
         f"compiles=${s.compiles} (${s.compileMs}%.0f ms); cold: wall=${cold.secs}%.3fs " +

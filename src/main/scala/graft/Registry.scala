@@ -14,15 +14,76 @@ import org.apache.spark.sql.types._
   * The driver hash-compares the Spark result against DuckDB on the same
   * parquet tables, sorting rows canonically and matching columns BY NAME —
   * every computed column must carry the same alias on both sides.
+  *
+  * `tags` say which harnesses run the row (see [[Tag]]); a row declares
+  * them on its registration line with [[tag]].
   */
 final case class Q(
     fn: (SparkSession, String) => DataFrame,
-    sql: Option[String]
-)
+    sql: Option[String],
+    tags: Set[Tag] = Set.empty
+) {
+  def tag(ts: Tag*): Q = copy(tags = tags ++ ts)
+}
 
 object Q {
   def apply(fn: (SparkSession, String) => DataFrame, sql: String): Q =
     Q(fn, Some(sql))
+}
+
+/** A row set a harness or an audit selects from the catalogue
+  * (`SparkEntry.tagged`). Each tag's doc states its inclusion rule.
+  */
+sealed trait Tag
+
+object Tag {
+  /** The rows `graft.Bench` measures: the 22 NDS-H ports plus the
+    * heavier pipeline operators — LSH, n-gram, embedding, substring and
+    * CDC dedup, the ANN tiers' read paths and recall checks, the
+    * scale-join and layout read paths, the iterative graph and spectral
+    * rows, the curation sketches, retrieval, and the grouped prefix-scan
+    * rows. `sim_mmr_rerank` is not benched: its bounded greedy answer is
+    * DimCache'd whole, so a rep would time a LocalRelation scan.
+    */
+  case object Headline extends Tag
+
+  /** The headline rows `shared_set_total` sums over. The set is frozen,
+    * so the total compares across bench records: a row benched later is
+    * Headline only. The bloom-filter point lookup and the twelve SQ8,
+    * IVF-SQ8, binary, matryoshka and PQ-recall ANN rows were benched
+    * after the basis was pinned, so they are outside it.
+    */
+  case object Basis extends Tag
+
+  /** The rows `graft.AmplifiedBench` sweeps at 1x and Nx. `rule`, which
+    * the sweep's header line prints, is the inclusion rule.
+    */
+  case object Sweep extends Tag {
+    val rule: String =
+      "NDS-H 22 + grouped-scan rewires + heaviest driver-bench rows + pandas-API " +
+        "shapes + ANN index read paths + state-store streaming replays + the " +
+        "packing, tf-idf, LSH dedup and stream-CMS scale rows; excluded headline " +
+        "families: recall-certification rows (8-query broadcast windows, work " +
+        "bounded by the fixed query set), light fixed-overhead-dominated " +
+        "scan/agg/join rows, and DimCache'd bounded-result rows"
+  }
+
+  /** Rows whose returned plan has no whole-stage codegen by construction,
+    * which `graft.Explain` does not flag: an eager native op
+    * (`reshape_transpose`), a sorted-partition mapPartitions scan
+    * (`pack_sequences`), or a bounded result assembled on the driver and
+    * returned as a LocalRelation, whose distributed jobs run eagerly
+    * inside the query function and are spec-audited (`sim_mmr_rerank`,
+    * `text_bpe_trainer_steps`, `emb_pca_power`, `emb_pca_two`,
+    * `agg_weighted_median`).
+    */
+  case object NoCodegen extends Tag
+
+  /** The streaming gate rows, every row of `queries.StreamingGate`: each
+    * runs a replay and returns its sink, so `graft.Explain` audits their
+    * stream plans instead of the sink scan.
+    */
+  case object Gate extends Tag
 }
 
 /** Helpers shared by query modules.

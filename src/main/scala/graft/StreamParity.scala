@@ -3,7 +3,7 @@ package graft
 /** RocksDB state-store parity sweep over every streaming gate row
   * (`StreamEvictionSpec` pins the riskiest rows in the test suite).
   *
-  * For every `stream_*` gate query, run the full replay twice in one
+  * For every [[Tag.Gate]] row, run the full replay twice in one
   * JVM — default HDFSBackedStateStoreProvider, then
   * RocksDBStateStoreProvider via the same `graft.stateProvider` sysprop
   * the harness env flag (`SPARK_GRAFT_STATE_PROVIDER`) routes through —
@@ -31,7 +31,7 @@ object StreamParity {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = Harness.session()
 
-    val names = SparkEntry.queries.keys.filter(_.startsWith("stream_")).toSeq.sorted
+    val names = SparkEntry.tagged(Tag.Gate)
     var failures = 0
     names.foreach { n =>
       def rows(): Seq[String] =

@@ -7,13 +7,10 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // Local-iteration filter: comma-separated query names. The driver
-    // never sets this, so the contract (run everything) is unchanged.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    // SPARK_GRAFT_ONLY cuts the run to the named queries; unset, every
+    // query runs, as the contract requires.
+    SparkEntry.restrict(SparkEntry.queries.keys.toSeq, SparkEntry.only).foreach { name =>
+      val fn = SparkEntry.queries(name)
       // name echo BEFORE execution so any engine WARN in the log tail
       // (e.g. WindowExec single-partition) attributes to its query
       System.err.println(s"[verify] running $name")
@@ -25,7 +22,7 @@ object Verify {
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    // reader's json.load fail and silently zero the run's correctness.
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"

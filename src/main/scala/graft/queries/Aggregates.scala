@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Agg, Q, Tables}
+import graft.Tag.{Basis, Headline, NoCodegen, Sweep}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -785,17 +786,18 @@ object Aggregates {
       |GROUP BY p.i, p.j""".stripMargin
 
   def queries: Map[String, Q] = Map(
-    "emb_gram_matrix" -> Q(gramMatrix _, gramMatrixSql),
+    "emb_gram_matrix" -> Q(gramMatrix _, gramMatrixSql).tag(Sweep),
     "frame_corr_matrix" -> Q(frameCorrMatrix _, frameCorrMatrixSql),
-    "agg_weighted_median" -> Q(weightedMedian _, weightedMedianSql),
+    "agg_weighted_median" ->
+      Q(weightedMedian _, weightedMedianSql).tag(Headline, Basis, Sweep, NoCodegen),
     "agg_tdigest_quantiles" -> Q(aggTdigestQuantiles _, None),
     "agg_tdigest_vs_exact" -> Q(aggTdigestVsExact _, aggTdigestVsExactSql),
-    "reg_ols_group" -> Q(regOlsGroup _, regOlsGroupSql),
+    "reg_ols_group" -> Q(regOlsGroup _, regOlsGroupSql).tag(Headline, Basis),
     "agg_mode" -> Q(modeAgg _, modeAggSql),
     "agg_skew_kurt" -> Q(skewKurt _, skewKurtSql),
     "agg_grouping_sets" -> Q(groupingSetsAgg _, groupingSetsAggSql),
     "agg_cube" -> Q(cubeAgg _, cubeAggSql),
-    "agg_basic_stats" -> Q(basicStats _, basicStatsSql),
+    "agg_basic_stats" -> Q(basicStats _, basicStatsSql).tag(Headline, Basis),
     "agg_count_null_policy" -> Q(countNullPolicy _, countNullPolicySql),
     "agg_count_distinct" -> Q(countDistinct_ _, countDistinctSql),
     "agg_any_all" -> Q(anyAll _, anyAllSql),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.Tag.{Basis, Headline, Sweep}
 import graft.Agg.{dsum, dsumSql}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -535,8 +536,8 @@ object Conversions {
     "dt_tz_ops" -> Q(dtTzOps _, dtTzOpsSql),
     "dt_business_days" -> Q(dtBusinessDays _, dtBusinessDaysSql),
     "conv_zorder" -> Q(zorderCode _, zorderCodeSql),
-    "scan_zorder_pruned" -> Q(scanZorderPruned _, scanZorderPrunedSql),
-    "scan_bloom_pruned" -> Q(scanBloomPruned _, scanBloomPrunedSql),
+    "scan_zorder_pruned" -> Q(scanZorderPruned _, scanZorderPrunedSql).tag(Headline, Basis),
+    "scan_bloom_pruned" -> Q(scanBloomPruned _, scanBloomPrunedSql).tag(Headline, Sweep),
     "conv_byte_cast" -> Q(byteCast _, byteCastSql),
     "conv_cast_roundtrip" -> Q(castRoundtrip _, castRoundtripSql),
     "conv_ipv4" -> Q(ipv4Conv _, ipv4ConvSql),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.Tag.{Basis, Headline, Sweep}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -398,10 +399,10 @@ object Curation {
        |FROM chunks""".stripMargin
 
   def queries: Map[String, Q] = Map(
-    "sketch_cms_topk" -> Q(sketchCmsTopk _, sketchCmsTopkSql),
-    "dsir_importance" -> Q(dsirImportance _, dsirImportanceSql),
-    "mix_temperature" -> Q(mixTemperature _, mixTemperatureSql),
+    "sketch_cms_topk" -> Q(sketchCmsTopk _, sketchCmsTopkSql).tag(Headline, Basis, Sweep),
+    "dsir_importance" -> Q(dsirImportance _, dsirImportanceSql).tag(Headline, Basis),
+    "mix_temperature" -> Q(mixTemperature _, mixTemperatureSql).tag(Headline, Basis),
     "mix_epoch_schedule" -> Q(mixEpochSchedule _, mixEpochScheduleSql),
-    "chunk_cdc_dedup" -> Q(chunkCdcDedup _, chunkCdcDedupSql)
+    "chunk_cdc_dedup" -> Q(chunkCdcDedup _, chunkCdcDedupSql).tag(Headline, Basis)
   )
 }

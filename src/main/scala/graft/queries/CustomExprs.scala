@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.Tag.{Basis, Headline, NoCodegen}
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -573,13 +574,13 @@ object CustomExprs {
     "custom_string_exprs" -> Q(customStrings _, None),
     "custom_string_ascii" -> Q(customStringsAscii _, customStringsAsciiSql),
     "agg_ewma" -> Q(ewmaPerUser _, ewmaPerUserSql),
-    "win_ewma_stream" -> Q(winEwmaStream _, winEwmaStreamSql),
-    "text_wordpiece" -> Q(wordpieceTokens _, wordpieceSql),
+    "win_ewma_stream" -> Q(winEwmaStream _, winEwmaStreamSql).tag(Headline, Basis),
+    "text_wordpiece" -> Q(wordpieceTokens _, wordpieceSql).tag(Headline, Basis),
     "text_fertility" -> Q(textFertility _, textFertilitySql),
     "text_bpe" -> Q(bpeTokens _, None),
-    "text_bpe_portable" -> Q(bpePortable _, bpePortableSql),
-    "text_bpe_pair_stats" -> Q(bpePairStats _, bpePairStatsSql),
-    "text_bpe_trainer_steps" -> Q(bpeTrainerSteps _, bpeTrainerStepsSql),
+    "text_bpe_portable" -> Q(bpePortable _, bpePortableSql).tag(Headline, Basis),
+    "text_bpe_pair_stats" -> Q(bpePairStats _, bpePairStatsSql).tag(Headline, Basis),
+    "text_bpe_trainer_steps" -> Q(bpeTrainerSteps _, bpeTrainerStepsSql).tag(NoCodegen),
     "agg_percentile_approx" -> Q(percentileApprox _, None),
     "agg_gk_vs_exact" -> Q(aggGkVsExact _, aggGkVsExactSql),
     "agg_gk_single_summary" -> Q(aggGkSingleSummary _, aggGkSingleSummarySql)

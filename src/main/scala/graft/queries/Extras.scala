@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.Tag.{Basis, Headline, Sweep}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1618,16 +1619,16 @@ object Extras {
       |GROUP BY 1""".stripMargin
 
   def queries: Map[String, Q] = Map(
-    "sort_searchsorted" -> Q(searchSorted _, searchSortedSql),
+    "sort_searchsorted" -> Q(searchSorted _, searchSortedSql).tag(Sweep),
     "attribution_last_touch" -> Q(attributionLastTouch _, attributionLastTouchSql),
     "resample_ohlc" -> Q(resampleOhlc _, resampleOhlcSql),
     "ts_anomaly_zscore" -> Q(tsAnomalyZscore _, tsAnomalyZscoreSql),
     "drift_tvd" -> Q(driftTvd _, driftTvdSql),
     "drift_window_tvd" -> Q(driftWindowTvd _, driftWindowTvdSql),
     "outlier_mad" -> Q(outlierMad _, outlierMadSql),
-    "clean_winsorize" -> Q(cleanWinsorize _, cleanWinsorizeSql),
+    "clean_winsorize" -> Q(cleanWinsorize _, cleanWinsorizeSql).tag(Headline, Basis, Sweep),
     "funnel_conversion" -> Q(funnelConversion _, funnelConversionSql),
-    "cohort_retention" -> Q(cohortRetention _, cohortRetentionSql),
+    "cohort_retention" -> Q(cohortRetention _, cohortRetentionSql).tag(Headline, Basis),
     "path_transitions" -> Q(pathTransitions _, pathTransitionsSql),
     "twap_daily" -> Q(twapDaily _, twapDailySql),
     "ab_welch_t" -> Q(abWelchT _, abWelchTSql),
@@ -1641,7 +1642,7 @@ object Extras {
     "str_partition_points" -> Q(strPartitionPoints _, strPartitionPointsSql),
     "interval_overlap" -> Q(intervalOverlap _, intervalOverlapSql),
     "resample_asfreq" -> Q(resampleAsfreq _, resampleAsfreqSql),
-    "resample_interpolate" -> Q(resampleInterpolate _, resampleInterpolateSql),
+    "resample_interpolate" -> Q(resampleInterpolate _, resampleInterpolateSql).tag(Headline, Basis),
     "filter_isin" -> Q(filterIsin _, filterIsinSql),
     "win_sessionize" -> Q(sessionize _, sessionizeSql),
     "agg_quantile_modes" -> Q(quantileModes _, quantileModesSql),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.Tag.{Basis, Headline, Sweep}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -639,8 +640,8 @@ object GraphOps {
 
   def queries: Map[String, Q] = Map(
     "graph_adamic_adar" -> Q(graphAdamicAdar _, graphAdamicAdarSql),
-    "graph_pagerank" -> Q(graphPagerank _, graphPagerankSql),
-    "graph_triangles" -> Q(graphTriangles _, graphTrianglesSql),
+    "graph_pagerank" -> Q(graphPagerank _, graphPagerankSql).tag(Headline, Basis, Sweep),
+    "graph_triangles" -> Q(graphTriangles _, graphTrianglesSql).tag(Headline, Basis, Sweep),
     "graph_label_prop" -> Q(graphLabelProp _, graphLabelPropSql),
     "graph_modularity" -> Q(graphModularity _, graphModularitySql),
     "graph_link_predict" -> Q(graphLinkPredict _, graphLinkPredictSql)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.Tag.{Basis, Headline, NoCodegen, Sweep}
 import graft.operators.{Banding, Dedup, Similarity}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -3909,66 +3910,69 @@ object LlmOps {
 
   def queries: Map[String, Q] = Map(
     "corpus_shard_shuffle" -> Q(corpusShardShuffle _, corpusShardShuffleSql),
-    "dedup_exact" -> Q(dedupExact _, dedupExactSql),
+    "dedup_exact" -> Q(dedupExact _, dedupExactSql).tag(Headline, Basis),
     "dedup_minhash_sig" -> Q(minhashSignatures _, None),
     "dedup_minhash_portable" -> Q(dedupMinhashPortable _, dedupMinhashPortableSql),
-    "dedup_minhash_lsh" -> Q(dedupMinhashLsh _, None),
+    "dedup_minhash_lsh" -> Q(dedupMinhashLsh _, None).tag(Headline, Basis, Sweep),
     "dedup_minhash_lsh_portable" -> Q(dedupMinhashLshPortable _, dedupMinhashLshPortableSql),
     "dedup_cc_keepers" -> Q(dedupCcKeepers _, dedupCcKeepersSql),
     "dedup_simhash" -> Q(dedupSimhash _, None),
     "dedup_simhash_portable" -> Q(dedupSimhashPortable _, dedupSimhashPortableSql),
-    "dedup_ngram_jaccard" -> Q(dedupNgramJaccard _, dedupNgramJaccardSql),
+    "dedup_ngram_jaccard" ->
+      Q(dedupNgramJaccard _, dedupNgramJaccardSql).tag(Headline, Basis, Sweep),
     "dedup_containment" -> Q(dedupContainment _, dedupContainmentSql),
-    "dedup_incremental_lsh" -> Q(dedupIncrementalLsh _, dedupIncrementalLshSql),
-    "dedup_substring_spans" -> Q(dedupSubstringSpans _, dedupSubstringSpansSql),
+    "dedup_incremental_lsh" ->
+      Q(dedupIncrementalLsh _, dedupIncrementalLshSql).tag(Headline, Basis, Sweep),
+    "dedup_substring_spans" ->
+      Q(dedupSubstringSpans _, dedupSubstringSpansSql).tag(Headline, Basis, Sweep),
     "dedup_substring_cut" -> Q(dedupSubstringCut _, dedupSubstringCutSql),
-    "mix_token_budget" -> Q(mixTokenBudget _, mixTokenBudgetSql),
-    "dedup_emb_cosine" -> Q(dedupEmbCosine _, dedupEmbCosineSql),
+    "mix_token_budget" -> Q(mixTokenBudget _, mixTokenBudgetSql).tag(Headline, Basis, Sweep),
+    "dedup_emb_cosine" -> Q(dedupEmbCosine _, dedupEmbCosineSql).tag(Headline, Basis),
     "dedup_semantic_keep" -> Q(dedupSemanticKeep _, dedupSemanticKeepSql),
     "sample_stratified" -> Q(sampleStratified _, sampleStratifiedSql),
     "sample_weighted" -> Q(sampleWeighted _, sampleWeightedSql),
-    "text_tfidf_topk" -> Q(textTfidfTopk _, textTfidfTopkSql),
-    "pack_sequences" -> Q(packSequences _, packSequencesSql),
+    "text_tfidf_topk" -> Q(textTfidfTopk _, textTfidfTopkSql).tag(Headline, Basis, Sweep),
+    "pack_sequences" -> Q(packSequences _, packSequencesSql).tag(Headline, Basis, Sweep, NoCodegen),
     "chunk_documents" -> Q(chunkDocuments _, chunkDocumentsSql),
     "decontaminate_ngrams" -> Q(decontaminateNgrams _, decontaminateNgramsSql),
-    "decontaminate_bloom" -> Q(decontaminateBloom _, None),
+    "decontaminate_bloom" -> Q(decontaminateBloom _, None).tag(Sweep),
     "decontaminate_bloom_vs_exact" ->
       Q(decontaminateBloomVsExact _, decontaminateBloomVsExactSql),
     "decontaminate_semantic" ->
       Q(decontaminateSemantic _, decontaminateSemanticSql),
-    "sim_cosine_topk" -> Q(simCosineTopk _, simCosineTopkSql),
+    "sim_cosine_topk" -> Q(simCosineTopk _, simCosineTopkSql).tag(Headline, Basis),
     "sim_ann_lsh_buckets" -> Q(simAnnLshBuckets _, simAnnLshBucketsSql),
-    "sim_ivf_topk" -> Q(simIvfTopk _, simIvfTopkSql),
-    "sim_knn_join" -> Q(simKnnJoin _, simKnnJoinSql),
-    "emb_pca_power" -> Q(embPcaPower _, embPcaPowerSql),
-    "emb_pca_two" -> Q(embPcaTwo _, embPcaTwoSql),
+    "sim_ivf_topk" -> Q(simIvfTopk _, simIvfTopkSql).tag(Headline, Basis),
+    "sim_knn_join" -> Q(simKnnJoin _, simKnnJoinSql).tag(Headline, Basis),
+    "emb_pca_power" -> Q(embPcaPower _, embPcaPowerSql).tag(Headline, Basis, Sweep, NoCodegen),
+    "emb_pca_two" -> Q(embPcaTwo _, embPcaTwoSql).tag(NoCodegen),
     "cluster_kmeans_step" -> Q(clusterKmeansStep _, clusterKmeansStepSql),
-    "split_leakage_safe" -> Q(splitLeakageSafe _, splitLeakageSafeSql),
+    "split_leakage_safe" -> Q(splitLeakageSafe _, splitLeakageSafeSql).tag(Headline, Basis),
     "split_leakage_audit" -> Q(splitLeakageAudit _, splitLeakageAuditSql),
     "sample_balanced_labels" ->
-      Q(sampleBalancedLabels _, sampleBalancedLabelsSql),
+      Q(sampleBalancedLabels _, sampleBalancedLabelsSql).tag(Headline, Basis, Sweep),
     "dedup_component_stats" -> Q(dedupComponentStats _, dedupComponentStatsSql),
     "dedup_source_matrix" -> Q(dedupSourceMatrix _, dedupSourceMatrixSql),
-    "sim_ivfpq_topk" -> Q(simIvfpqTopk _, simIvfpqTopkSql),
-    "sim_pq_recall" -> Q(simPqRecall _, simPqRecallSql),
-    "sim_pq_rerank_recall" -> Q(simPqRerankRecall _, simPqRerankRecallSql),
-    "sim_sq8_topk" -> Q(simSq8Topk _, simSq8TopkSql),
-    "sim_sq8_recall" -> Q(simSq8Recall _, simSq8RecallSql),
-    "sim_ivfsq8_topk" -> Q(simIvfSq8Topk _, simIvfSq8TopkSql),
-    "sim_ivfsq8_recall" -> Q(simIvfSq8Recall _, simIvfSq8RecallSql),
-    "sim_ivfsq8_rerank" -> Q(simIvfSq8Rerank _, simIvfSq8RerankSql),
-    "sim_binary_topk" -> Q(simBinaryTopk _, simBinaryTopkSql),
-    "sim_binary_recall" -> Q(simBinaryRecall _, simBinaryRecallSql),
-    "sim_matryoshka_topk" -> Q(simMatryoshkaTopk _, simMatryoshkaTopkSql),
-    "sim_matryoshka_recall" -> Q(simMatryoshkaRecall _, simMatryoshkaRecallSql),
-    "sim_ivf_recall" -> Q(simIvfRecall _, simIvfRecallSql),
-    "sim_lsh_recall" -> Q(simLshRecall _, simLshRecallSql),
-    "sim_mmr_rerank" -> Q(simMmrRerank _, simMmrRerankSql),
+    "sim_ivfpq_topk" -> Q(simIvfpqTopk _, simIvfpqTopkSql).tag(Headline, Basis),
+    "sim_pq_recall" -> Q(simPqRecall _, simPqRecallSql).tag(Headline),
+    "sim_pq_rerank_recall" -> Q(simPqRerankRecall _, simPqRerankRecallSql).tag(Headline),
+    "sim_sq8_topk" -> Q(simSq8Topk _, simSq8TopkSql).tag(Headline, Sweep),
+    "sim_sq8_recall" -> Q(simSq8Recall _, simSq8RecallSql).tag(Headline, Sweep),
+    "sim_ivfsq8_topk" -> Q(simIvfSq8Topk _, simIvfSq8TopkSql).tag(Headline, Sweep),
+    "sim_ivfsq8_recall" -> Q(simIvfSq8Recall _, simIvfSq8RecallSql).tag(Headline),
+    "sim_ivfsq8_rerank" -> Q(simIvfSq8Rerank _, simIvfSq8RerankSql).tag(Headline, Sweep),
+    "sim_binary_topk" -> Q(simBinaryTopk _, simBinaryTopkSql).tag(Headline, Sweep),
+    "sim_binary_recall" -> Q(simBinaryRecall _, simBinaryRecallSql).tag(Headline),
+    "sim_matryoshka_topk" -> Q(simMatryoshkaTopk _, simMatryoshkaTopkSql).tag(Headline, Sweep),
+    "sim_matryoshka_recall" -> Q(simMatryoshkaRecall _, simMatryoshkaRecallSql).tag(Headline),
+    "sim_ivf_recall" -> Q(simIvfRecall _, simIvfRecallSql).tag(Headline),
+    "sim_lsh_recall" -> Q(simLshRecall _, simLshRecallSql).tag(Headline, Basis),
+    "sim_mmr_rerank" -> Q(simMmrRerank _, simMmrRerankSql).tag(NoCodegen),
     "sim_hard_negatives" -> Q(simHardNegatives _, simHardNegativesSql),
     "emb_label_quality" -> Q(embLabelQuality _, embLabelQualitySql),
     "emb_quantize" -> Q(embQuantize _, embQuantizeSql),
     "dedup_semantic" -> Q(dedupSemantic _, dedupSemanticSql),
     "multimodal_meta" -> Q(multimodalMeta _, multimodalMetaSql),
-    "multimodal_headers" -> Q(multimodalHeaders _, multimodalHeadersSql)
+    "multimodal_headers" -> Q(multimodalHeaders _, multimodalHeadersSql).tag(Headline, Basis)
   )
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Agg, Q, Tables}
+import graft.Tag.{Basis, Headline, Sweep}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -987,27 +988,27 @@ object Ndsh {
       |GROUP BY s_name ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin
 
   def queries: Map[String, Q] = Map(
-    "ndsh_q1" -> Q(q1 _, q1Sql),
-    "ndsh_q2" -> Q(q2 _, q2Sql),
-    "ndsh_q11" -> Q(q11 _, q11Sql),
-    "ndsh_q16" -> Q(q16 _, q16Sql),
-    "ndsh_q20" -> Q(q20 _, q20Sql),
-    "ndsh_q21" -> Q(q21 _, q21Sql),
-    "ndsh_q7" -> Q(q7 _, q7Sql),
-    "ndsh_q8" -> Q(q8 _, q8Sql),
-    "ndsh_q13" -> Q(q13 _, q13Sql),
-    "ndsh_q15" -> Q(q15 _, q15Sql),
-    "ndsh_q17" -> Q(q17 _, q17Sql),
-    "ndsh_q19" -> Q(q19 _, q19Sql),
-    "ndsh_q22" -> Q(q22 _, q22Sql),
-    "ndsh_q3" -> Q(q3 _, q3Sql),
-    "ndsh_q4" -> Q(q4 _, q4Sql),
-    "ndsh_q5" -> Q(q5 _, q5Sql),
-    "ndsh_q6" -> Q(q6 _, q6Sql),
-    "ndsh_q9" -> Q(q9 _, q9Sql),
-    "ndsh_q10" -> Q(q10 _, q10Sql),
-    "ndsh_q12" -> Q(q12 _, q12Sql),
-    "ndsh_q14" -> Q(q14 _, q14Sql),
-    "ndsh_q18" -> Q(q18 _, q18Sql)
+    "ndsh_q1" -> Q(q1 _, q1Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q2" -> Q(q2 _, q2Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q11" -> Q(q11 _, q11Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q16" -> Q(q16 _, q16Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q20" -> Q(q20 _, q20Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q21" -> Q(q21 _, q21Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q7" -> Q(q7 _, q7Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q8" -> Q(q8 _, q8Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q13" -> Q(q13 _, q13Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q15" -> Q(q15 _, q15Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q17" -> Q(q17 _, q17Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q19" -> Q(q19 _, q19Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q22" -> Q(q22 _, q22Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q3" -> Q(q3 _, q3Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q4" -> Q(q4 _, q4Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q5" -> Q(q5 _, q5Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q6" -> Q(q6 _, q6Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q9" -> Q(q9 _, q9Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q10" -> Q(q10 _, q10Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q12" -> Q(q12 _, q12Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q14" -> Q(q14 _, q14Sql).tag(Headline, Basis, Sweep),
+    "ndsh_q18" -> Q(q18 _, q18Sql).tag(Headline, Basis, Sweep)
   )
 }

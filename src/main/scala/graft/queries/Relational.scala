@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Agg, Q, Tables}
+import graft.Tag.{Basis, Headline, Sweep}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1148,20 +1149,20 @@ object Relational {
       |GROUP BY attr""".stripMargin
 
   def queries: Map[String, Q] = Map(
-    "scd2_history" -> Q(scd2History _, scd2HistorySql),
+    "scd2_history" -> Q(scd2History _, scd2HistorySql).tag(Headline, Basis),
     "join_point_in_time" -> Q(joinPointInTime _, joinPointInTimeSql),
-    "join_asof" -> Q(joinAsof _, joinAsofSql),
+    "join_asof" -> Q(joinAsof _, joinAsofSql).tag(Headline, Basis),
     "join_asof_fwd" -> Q(joinAsofFwd _, joinAsofFwdSql),
     "join_asof_nearest" -> Q(joinAsofNearest _, joinAsofNearestSql),
     "join_asof_tolerance" -> Q(joinAsofTol _, joinAsofTolSql),
-    "qcut_bins" -> Q(qcutBins _, qcutBinsSql),
+    "qcut_bins" -> Q(qcutBins _, qcutBinsSql).tag(Headline, Basis, Sweep),
     "join_range" -> Q(joinRange _, joinRangeSql),
     "filter_project" -> Q(filterProject _, filterProjectSql),
     "drop_nulls" -> Q(dropNulls _, dropNullsSql),
     "copy_if_else" -> Q(copyIfElse _, copyIfElseSql),
     "slice_offset_limit" -> Q(sliceOffsetLimit _, sliceOffsetLimitSql),
-    "slice_stride" -> Q(sliceStride _, sliceStrideSql),
-    "group_head_tail" -> Q(groupHeadTail _, groupHeadTailSql),
+    "slice_stride" -> Q(sliceStride _, sliceStrideSql).tag(Sweep),
+    "group_head_tail" -> Q(groupHeadTail _, groupHeadTailSql).tag(Sweep),
     "sequence_range" -> Q((s, _) => sequenceRange(s), sequenceRangeSql),
     "repeat_rows" -> Q(repeatRows _, repeatRowsSql),
     "tile_rows" -> Q(tileRows _, tileRowsSql),
@@ -1175,9 +1176,9 @@ object Relational {
     "join_mixed" -> Q(joinMixed _, joinMixedSql),
     "join_null_safe" -> Q(joinNullSafe _, joinNullSafeSql),
     "join_merge_indicator" -> Q(joinMergeIndicator _, joinMergeIndicatorSql),
-    "join_bucketed" -> Q(joinBucketed _, joinBucketedSql),
-    "merge_upsert" -> Q(mergeUpsert _, mergeUpsertSql),
-    "join_skew_salted" -> Q(joinSkewSalted _, joinSkewSaltedSql),
+    "join_bucketed" -> Q(joinBucketed _, joinBucketedSql).tag(Headline, Basis),
+    "merge_upsert" -> Q(mergeUpsert _, mergeUpsertSql).tag(Headline, Basis),
+    "join_skew_salted" -> Q(joinSkewSalted _, joinSkewSaltedSql).tag(Headline, Basis, Sweep),
     "sort_rank_nulls" -> Q(sortRankNulls _, sortRankNullsSql),
     "top_k" -> Q(topK _, topKSql),
     "quantile_points" -> Q(quantilePoints _, quantilePointsSql),

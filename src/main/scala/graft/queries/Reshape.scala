@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Agg, Q, Tables}
+import graft.Tag.{NoCodegen, Sweep}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -235,9 +236,9 @@ object Reshape {
       |FROM a FULL JOIN b ON rn_a = rn_b""".stripMargin
 
   def queries: Map[String, Q] = Map(
-    "reshape_hconcat" -> Q(hconcat _, hconcatSql),
+    "reshape_hconcat" -> Q(hconcat _, hconcatSql).tag(Sweep),
     "agg_product" -> Q(aggProduct _, aggProductSql),
-    "reshape_transpose" -> Q(reshapeTranspose _, reshapeTransposeSql),
+    "reshape_transpose" -> Q(reshapeTranspose _, reshapeTransposeSql).tag(NoCodegen),
     "reshape_unstack" -> Q(reshapeUnstack _, reshapeUnstackSql),
     "conv_durations" -> Q(convDurations _, convDurationsSql),
     "conv_fixed_point" -> Q(convFixedPoint _, convFixedPointSql)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{ArrCanon, Q, Tables}
+import graft.Tag.{Basis, Headline, Sweep}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -761,12 +762,13 @@ object Retrieval {
        |FROM dcg CROSS JOIN idcg""".stripMargin
 
   def queries: Map[String, Q] = Map(
-    "index_postings" -> Q(indexPostings _, indexPostingsSql),
+    "index_postings" -> Q(indexPostings _, indexPostingsSql).tag(Headline, Basis, Sweep),
     "index_postings_delta" -> Q(indexPostingsDelta _, indexPostingsDeltaSql),
-    "text_bm25_topk" -> Q(textBm25Topk _, textBm25TopkSql),
+    "text_bm25_topk" -> Q(textBm25Topk _, textBm25TopkSql).tag(Headline, Basis, Sweep),
     "text_snippet_extract" -> Q(textSnippetExtract _, textSnippetExtractSql),
     "text_query_expansion" -> Q(textQueryExpansion _, textQueryExpansionSql),
     "eval_retrieval_ndcg" -> Q(evalRetrievalNdcg _, evalRetrievalNdcgSql),
-    "retrieval_rrf_fusion" -> Q(retrievalRrfFusion _, retrievalRrfFusionSql)
+    "retrieval_rrf_fusion" ->
+      Q(retrievalRrfFusion _, retrievalRrfFusionSql).tag(Headline, Basis, Sweep)
   )
 }

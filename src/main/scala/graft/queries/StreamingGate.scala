@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.{DimCache, Q, Tables}
+import graft.{DimCache, Q, Tag, Tables}
+import graft.Tag.{Gate, Sweep}
 import graft.operators.{Dedup, Similarity}
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -1109,44 +1110,51 @@ object StreamingGate {
       |  CAST(max(CASE WHEN m = 7 THEN k END) AS INTEGER) AS c7
       |FROM codes GROUP BY vec_id""".stripMargin
 
-  /** Every gate row: its stream declaration and its DuckDB oracle. */
-  private val rows: Map[String, (Row, Option[String])] = Map(
-    "stream_pq_encode" -> (streamPqEncode _, Some(streamPqEncodeSql)),
-    "stream_checkpoint_resume" -> (streamCheckpointResume _, Some(streamCheckpointResumeSql)),
-    "stream_near_dedup" -> (streamNearDedup _, Some(streamNearDedupSql)),
-    "stream_decontaminate" -> (streamDecontaminate _, Some(streamDecontaminateSql)),
-    "stream_ivfsq8_encode" -> (streamIvfSq8Encode _, Some(streamIvfSq8EncodeSql)),
-    "stream_binary_encode" -> (streamBinaryEncode _, Some(streamBinaryEncodeSql)),
-    "stream_semantic_dedup" -> (streamSemanticDedup _, Some(streamSemanticDedupSql)),
-    "stream_last_n_mean" -> (streamLastNMean _, Some(streamLastNMeanSql)),
-    "stream_tdigest_window" -> (streamTdigestWindow _, None),
-    "stream_cms" -> (streamCms _, Some(streamCmsSql)),
-    "stream_kmv_window" -> (streamKmvWindow _, Some(streamKmvWindowSql)),
-    "stream_scd2" -> (streamScd2 _, Some(streamScd2Sql)),
-    "stream_postings" -> (streamPostings _, Some(Retrieval.indexPostingsSql)),
-    "stream_transitions" -> (streamTransitions _, Some(Extras.pathTransitionsSql)),
-    "stream_funnel" -> (streamFunnel _, Some(Extras.funnelConversionSql)),
-    "stream_running_agg" -> (streamRunningAgg _, Some(streamRunningAggSql)),
-    "stream_start_state" -> (streamStartState _, Some(streamStartStateSql)),
-    "stream_tumbling" -> (streamTumbling _, Some(streamTumblingSql)),
-    "stream_sliding" -> (streamSliding _, Some(streamSlidingSql)),
-    "stream_ohlc" -> (streamOhlc _, Some(Extras.resampleOhlcSql)),
-    "stream_session" -> (streamSession _, Some(streamSessionSql)),
-    "stream_dedup_exact" -> (streamDedupExact _, Some(streamDedupExactSql)),
-    "stream_join" -> (streamJoin _, Some(streamJoinSql)),
-    "stream_asof_enrich" -> (streamAsofEnrich _, Some(streamAsofEnrichSql)),
-    "stream_enrich_dim" -> (streamEnrichDim _, Some(streamEnrichDimSql)),
-    "stream_zscore" -> (streamZscore _, Some(Extras.tsAnomalyZscoreSql)),
-    "stream_attribution" -> (streamAttribution _, Some(Extras.attributionLastTouchSql)),
-    "stream_attribution_window" -> (streamAttributionWindow _, Some(streamAttributionWindowSql)),
-    "stream_drift" -> (streamDrift _, Some(streamDriftSql))
+  /** A gate row's registration: its stream declaration, its DuckDB
+    * oracle, and the tags it carries besides `Gate`.
+    */
+  private final case class GateRow(decl: Row, oracle: Option[String], tags: Tag*)
+
+  /** Every gate row. */
+  private val rows: Map[String, GateRow] = Map(
+    "stream_pq_encode" -> GateRow(streamPqEncode _, Some(streamPqEncodeSql)),
+    "stream_checkpoint_resume" ->
+      GateRow(streamCheckpointResume _, Some(streamCheckpointResumeSql)),
+    "stream_near_dedup" -> GateRow(streamNearDedup _, Some(streamNearDedupSql), Sweep),
+    "stream_decontaminate" -> GateRow(streamDecontaminate _, Some(streamDecontaminateSql)),
+    "stream_ivfsq8_encode" -> GateRow(streamIvfSq8Encode _, Some(streamIvfSq8EncodeSql)),
+    "stream_binary_encode" -> GateRow(streamBinaryEncode _, Some(streamBinaryEncodeSql)),
+    "stream_semantic_dedup" -> GateRow(streamSemanticDedup _, Some(streamSemanticDedupSql)),
+    "stream_last_n_mean" -> GateRow(streamLastNMean _, Some(streamLastNMeanSql)),
+    "stream_tdigest_window" -> GateRow(streamTdigestWindow _, None),
+    "stream_cms" -> GateRow(streamCms _, Some(streamCmsSql), Sweep),
+    "stream_kmv_window" -> GateRow(streamKmvWindow _, Some(streamKmvWindowSql), Sweep),
+    "stream_scd2" -> GateRow(streamScd2 _, Some(streamScd2Sql)),
+    "stream_postings" -> GateRow(streamPostings _, Some(Retrieval.indexPostingsSql), Sweep),
+    "stream_transitions" -> GateRow(streamTransitions _, Some(Extras.pathTransitionsSql)),
+    "stream_funnel" -> GateRow(streamFunnel _, Some(Extras.funnelConversionSql)),
+    "stream_running_agg" -> GateRow(streamRunningAgg _, Some(streamRunningAggSql)),
+    "stream_start_state" -> GateRow(streamStartState _, Some(streamStartStateSql)),
+    "stream_tumbling" -> GateRow(streamTumbling _, Some(streamTumblingSql)),
+    "stream_sliding" -> GateRow(streamSliding _, Some(streamSlidingSql)),
+    "stream_ohlc" -> GateRow(streamOhlc _, Some(Extras.resampleOhlcSql), Sweep),
+    "stream_session" -> GateRow(streamSession _, Some(streamSessionSql)),
+    "stream_dedup_exact" -> GateRow(streamDedupExact _, Some(streamDedupExactSql)),
+    "stream_join" -> GateRow(streamJoin _, Some(streamJoinSql)),
+    "stream_asof_enrich" -> GateRow(streamAsofEnrich _, Some(streamAsofEnrichSql)),
+    "stream_enrich_dim" -> GateRow(streamEnrichDim _, Some(streamEnrichDimSql)),
+    "stream_zscore" -> GateRow(streamZscore _, Some(Extras.tsAnomalyZscoreSql)),
+    "stream_attribution" -> GateRow(streamAttribution _, Some(Extras.attributionLastTouchSql)),
+    "stream_attribution_window" ->
+      GateRow(streamAttributionWindow _, Some(streamAttributionWindowSql)),
+    "stream_drift" -> GateRow(streamDrift _, Some(streamDriftSql))
   )
 
-  def queries: Map[String, Q] = rows.map { case (name, (row, oracle)) =>
+  def queries: Map[String, Q] = rows.map { case (name, r) =>
     name -> Q({ (s, dir) =>
-      val p = row(s, dir)
+      val p = r.decl(s, dir)
       p.project(p.run(s, p.plan))
-    }, oracle)
+    }, r.oracle).tag(Gate +: r.tags: _*)
   }
 
   /** The gate rows named in `want`, each as the stream plan its query
@@ -1155,5 +1163,5 @@ object StreamingGate {
     */
   def statePlans(spark: SparkSession, dir: String,
       want: Set[String]): Seq[(String, DataFrame)] =
-    rows.keys.toSeq.filter(want).sorted.map(n => n -> rows(n)._1(spark, dir).plan)
+    rows.keys.toSeq.filter(want).sorted.map(n => n -> rows(n).decl(spark, dir).plan)
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Agg, Q, Tables}
+import graft.Tag.{Basis, Headline}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1242,7 +1243,7 @@ object TextOps {
     "text_token_count" -> Q(tokenCount _, tokenCountSql),
     "text_top_tokens" -> Q(topTokens _, topTokensSql),
     "text_heavy_hitters" -> Q(heavyHitters _, heavyHittersSql),
-    "sketch_kmv_distinct" -> Q(sketchKmvDistinct _, sketchKmvDistinctSql),
+    "sketch_kmv_distinct" -> Q(sketchKmvDistinct _, sketchKmvDistinctSql).tag(Headline, Basis),
     "sketch_kmv_overlap" -> Q(sketchKmvOverlap _, sketchKmvOverlapSql),
     "text_char_ngrams" -> Q(charNgrams _, charNgramsSql),
     "text_word_ngrams" -> Q(wordNgrams _, wordNgramsSql),

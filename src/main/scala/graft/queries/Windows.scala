@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Agg, Q, Tables}
+import graft.Tag.{Basis, Headline, Sweep}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -588,16 +589,16 @@ object Windows {
 
   def queries: Map[String, Q] = Map(
     "win_percentile_bands" -> Q(percentileBands _, percentileBandsSql),
-    "win_pct_change" -> Q(pctChange _, pctChangeSql),
-    "win_rank_ties" -> Q(rankTies _, rankTiesSql),
-    "win_cumprod" -> Q(cumProd _, cumProdSql),
+    "win_pct_change" -> Q(pctChange _, pctChangeSql).tag(Sweep),
+    "win_rank_ties" -> Q(rankTies _, rankTiesSql).tag(Sweep),
+    "win_cumprod" -> Q(cumProd _, cumProdSql).tag(Sweep),
     "win_rolling_rows" -> Q(rollingRows _, rollingRowsSql),
     "win_rolling_var" -> Q(rollingVar _, rollingVarSql),
     "win_rolling_autocorr" -> Q(rollingAutocorr _, rollingAutocorrSql),
     "win_range_days" -> Q(rangeWindow _, rangeWindowSql),
     "win_lead_lag" -> Q(leadLag _, leadLagSql),
-    "win_rank_family" -> Q(rankFamily _, rankFamilySql),
-    "win_group_scan" -> Q(groupScan _, groupScanSql),
+    "win_rank_family" -> Q(rankFamily _, rankFamilySql).tag(Headline, Basis, Sweep),
+    "win_group_scan" -> Q(groupScan _, groupScanSql).tag(Headline, Basis),
     "win_group_ffill" -> Q(groupFfill _, groupFfillSql),
     "win_resample_3min" -> Q(resample3min _, resample3minSql)
   )

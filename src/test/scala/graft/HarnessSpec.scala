@@ -41,15 +41,23 @@ class HarnessSpec extends AnyFunSuite {
     assert(s.stageUnionMs == 25)
   }
 
-  test("src/main builds one session and times one noop write, both in Harness") {
+  private lazy val sources: Seq[(String, String)] = {
     val root = Paths.get("src/main/scala")
     assume(Files.isDirectory(root), s"run from the repo root (cwd=${Paths.get("").toAbsolutePath})")
-    val sources = Files.walk(root).iterator().asScala.toSeq
+    Files.walk(root).iterator().asScala.toSeq
       .filter(_.toString.endsWith(".scala"))
       .map(p => p.getFileName.toString -> new String(Files.readAllBytes(p), "UTF-8"))
-    def sites(pattern: String): Seq[String] =
-      sources.flatMap { case (f, src) => Seq.fill(pattern.r.findAllIn(src).size)(f) }
+  }
+  private def sites(pattern: String): Seq[String] =
+    sources.flatMap { case (f, src) => Seq.fill(pattern.r.findAllIn(src).size)(f) }
+
+  test("src/main builds one session and times one noop write, both in Harness") {
     assert(sites("""SparkSession\s*\.\s*builder""") == Seq("Harness.scala"))
     assert(sites("""format\("noop"\)""") == Seq("Harness.scala"))
+  }
+
+  test("src/main reads GC time and settles between groups only in Harness") {
+    assert(sites("""getGarbageCollectorMXBeans""") == Seq("Harness.scala"))
+    assert(sites("""\.clearCache\(\)""") == Seq("Harness.scala"))
   }
 }

@@ -36,7 +36,7 @@ class StreamSmellsSpec extends AnyFunSuite {
     PlanSmells.streamSmells(df.queryExecution.analyzed)
 
   test("every streaming gate row's own stream plan is state-bounded under the audit") {
-    val gate = SparkEntry.queries.keys.filter(_.startsWith("stream_")).toSet
+    val gate = SparkEntry.tagged(Tag.Gate).toSet
     val plans = queries.StreamingGate.statePlans(spark, sf, gate)
     assert(plans.map(_._1).toSet == gate && gate.size == 29,
       s"${plans.size} plans for ${gate.size} gate rows")
