@@ -217,11 +217,11 @@ object Bench {
     // minute-scale bandwidth episode inside the sweep. A light all-cores
     // stream probe (~10 ms clean, ~100 ms during an episode), sampled
     // right after each group's timed reps, stamps the conditions that
-    // group measured under; `clean` derives from the absolute quiet-box
-    // baseline (~200 GB/s all-cores, SCALING.md), so episode readings
-    // can be discarded mechanically. The probe runs between groups,
+    // group measured under; a group reads clean at 0.7 × this run's own
+    // pre-sweep all-cores bandwidth, so episode readings can be
+    // discarded mechanically on any box. The probe runs between groups,
     // never inside a query's number.
-    val groupBwCleanGbps = 140.0 // 0.7 × the ~200 GB/s quiet-box baseline
+    val groupBwCleanGbps = 0.7 * bwAll
     def groupBwGbps(): Double =
       memBwGbps(Runtime.getRuntime.availableProcessors(), bwArray())
     // Per-query organic gc/heap deltas: gc_ms spans only the five timed

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{Aggregates, Conversions, Curation, CustomExprs, Extras, Functions, GraphOps, LlmOps, Ndsh, PipelineOps, Relational, Reshape, Retrieval, StreamingGate, TextOps, UdfSurface, Windows}
+import graft.queries.{Aggregates, Ann, Conversions, Curation, CustomExprs, Extras, Functions, GraphOps, LlmOps, Ndsh, PipelineOps, Relational, Reshape, Retrieval, StreamingGate, TextOps, UdfSurface, Windows}
 
 /** The entry-point contract — see SURVEY.md §7.
   *
@@ -16,7 +16,7 @@ object SparkEntry {
   lazy val registry: Map[String, Q] =
     Ndsh.queries ++ Relational.queries ++ Aggregates.queries ++
       Windows.queries ++ Functions.queries ++ TextOps.queries ++
-      LlmOps.queries ++ CustomExprs.queries ++ Conversions.queries ++
+      LlmOps.queries ++ Ann.queries ++ CustomExprs.queries ++ Conversions.queries ++
       UdfSurface.queries ++ Extras.queries ++ Reshape.queries ++
       GraphOps.queries ++ Curation.queries ++ Retrieval.queries ++
       PipelineOps.queries ++ StreamingGate.queries

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Similarity search, written once: every ANN tier (IVF, SQ8, IVF,SQ8,
-  * PQ/ADC, binary, matryoshka prefix, and the SRP-LSH buckets in
-  * LlmOps) supplies only its own encoder and approximate score, and
-  * shares one core for the rest:
+  * PQ/ADC, binary, matryoshka prefix, and the SRP-LSH buckets; the rows
+  * are [[graft.queries.Ann]]'s) supplies only its own encoder and
+  * approximate score, and shares one core for the rest:
   *   - [[cosine]], the one cosine expression (DotF64 folds);
   *   - [[bruteForceTopK]], the exact single-query baseline;
   *   - [[refineTopK]], the retrieve-and-refine stage 2 (candidates ⋈
@@ -19,6 +19,11 @@ import org.apache.spark.sql.types._
   *   - [[literal]], the query-side literal array, and [[unitDots]],
   *     the native dot fan-out against unit-normalized centroid or
   *     query rows.
+  *
+  * Each piece's DuckDB twin (`...Sql`, `...Ctes`) sits beside it, and
+  * every vector oracle reads these twins: the embedding cast, the dot,
+  * norm, cosine and L2 folds, the recall certifier, the IVF assignment,
+  * the PQ codes, the SQ8 bounds and quantizer and the binary pack.
   *
   * IVF: k centroids are chosen deterministically from the data (strided
   * sample), broadcast, and every vector is assigned to its nearest
@@ -34,6 +39,14 @@ object Similarity {
     */
   def embDouble: Column = col("embedding").cast(ArrayType(DoubleType))
 
+  /** DuckDB twin of [[embDouble]]: a CTE body selecting `cols` of the
+    * embeddings table and the embedding as `e DOUBLE[]`.
+    */
+  def embDoubleSql(cols: String = "vec_id"): String =
+    s"""(
+      |  SELECT $cols, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+      |  FROM embeddings)""".stripMargin
+
   // native codegen dot (graft.functions.DotF64) — ~6× the composed
   // aggregate(zip_with) HOF formulation on candidate-pair scoring
   private def dot(a: Column, b: Column): Column =
@@ -47,6 +60,91 @@ object Similarity {
     * gives the same double as the per-pair form.
     */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+
+  // DuckDB twins of the folds. Each sums its terms from 0.0 in list
+  // order, one rounding per multiply and one per add, which is the
+  // DotF64/L2SqF64 loop, so every score is the same double in both
+  // engines. `a` and `b` are SQL list expressions.
+
+  /** The ascending double fold of the list `terms`. */
+  def foldSql(terms: String): String =
+    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), $terms), (acc, y) -> acc + y)"
+
+  /** dot(a, b). */
+  def dotSql(a: String, b: String): String =
+    foldSql(s"list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i])")
+
+  /** ‖a‖², the squared norm fold. */
+  def sqNormSql(a: String): String = foldSql(s"list_transform($a, x -> x * x)")
+
+  /** ‖a‖. */
+  def normSql(a: String): String = s"sqrt(${sqNormSql(a)})"
+
+  /** DuckDB twin of [[cosine]]. */
+  def cosineSql(a: String, b: String): String =
+    s"${dotSql(a, b)} / (${normSql(a)} * ${normSql(b)})"
+
+  /** Squared L2 between `a` and `b` (the L2SqF64 fold), over indexes
+    * 1..`n` (default len(a)) shifted by `offset` (a subvector).
+    */
+  def l2SqSql(a: String, b: String, n: String = "", offset: String = ""): String = {
+    val len = if (n.isEmpty) s"len($a)" else n
+    val j = if (offset.isEmpty) "j" else s"$offset + j"
+    foldSql(s"list_transform(range(1, $len + 1), j -> ($a[$j] - $b[$j]) * ($a[$j] - $b[$j]))")
+  }
+
+  /** `a` scaled to unit length by its norm `n` (a zero vector stays
+    * zero): the DuckDB twin of [[unitRows]].
+    */
+  def unitSql(a: String, n: String): String =
+    s"list_transform($a, x -> CASE WHEN $n = 0 THEN CAST(0.0 AS DOUBLE) ELSE x / $n END)"
+
+  // ------------------------------------------------- random hyperplanes
+
+  /** The ±1 weight of dimension j in random hyperplane p: bit 16 of the
+    * portable LCG value at `p * stride + j` (the stride keeps per-plane
+    * seed ranges disjoint while dims <= stride). The same integer
+    * expression the DuckDB twins evaluate inline.
+    */
+  def hyperplaneSign(p: Int, j: Int, stride: Int): Double =
+    if ((((1103515245L * (p * stride + j) + 12345L) % 2147483648L >> 16) & 1L) == 1L)
+      1.0 else -1.0
+
+  /** DuckDB twin of [[hyperplaneSign]] at the seed index `seed`, an SQL
+    * expression such as `p * 1024 + j`.
+    */
+  def hyperplaneSignSql(seed: String): String =
+    s"(CASE WHEN ((1103515245 * ($seed) + 12345) % 2147483648 >> 16) & 1 = 1 " +
+      "THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)"
+
+  /** Planes 0 until n as literal arrays of their `dims` signs: each
+    * projection is then one native DotF64 pass instead of a `dims`-term
+    * interpreted fold; e[j]*(±1.0) multiplies exactly like the oracle's
+    * term and DotF64 folds ascending, so the buckets are bit-identical.
+    */
+  def hyperplanes(n: Int, dims: Int, stride: Int): IndexedSeq[Column] =
+    (0 until n).map(p => array((0 until dims).map(j => lit(hyperplaneSign(p, j, stride))): _*))
+
+  /** The sign bits of vector `v` against `planes`, plane i at bit
+    * weight `bit(i)`.
+    */
+  def signBits(v: Column, planes: Seq[Column], bit: Int => Int): Column =
+    planes.zipWithIndex
+      .map { case (plane, i) =>
+        (dot(v, plane) > lit(0.0)).cast(IntegerType) * lit(bit(i))
+      }
+      .reduce(_ + _)
+
+  /** DuckDB twin of [[signBits]] over `e`: `n` planes indexed by `p`,
+    * each projecting dimensions 0 until `dims` with the weights at seed
+    * index `seed` (an SQL expression of p and the dimension j); plane p
+    * sets the bit `bit` (an SQL expression of p).
+    */
+  def signBitsSql(n: Int, dims: String, seed: String, bit: String): String =
+    s"""list_reduce(list_prepend(0, list_transform(range(0, $n), p ->
+      |      CASE WHEN ${foldSql(s"list_transform(range(0, $dims), j -> e[j + 1] * ${hyperplaneSignSql(seed)})")}
+      |        > CAST(0.0 AS DOUBLE) THEN CAST(1 AS INTEGER) << ($bit) ELSE 0 END)),
+      |      (acc, y) -> acc + y)""".stripMargin
 
   /** A vector as a literal array column (a query shipped to the scan). */
   def literal(v: Seq[Double]): Column = array(v.map(lit): _*)
@@ -88,6 +186,16 @@ object Similarity {
       .limit(k)
   }
 
+  /** DuckDB twin of the single-query ranking every top-k tier ends in
+    * ([[bruteForceTopK]], [[refineTopK]], [[sq8TopK]], [[ivfSq8TopK]],
+    * [[ivfTopK]]): `cols` of `from` plus `cosine`, the cosine of the
+    * query `qe` to the list `v`, top-k by (cosine desc, vec_id).
+    */
+  def cosineTopKSql(cols: String, v: String, from: String, k: Int): String =
+    s"""SELECT $cols, ${cosineSql("qe", v)} AS cosine
+      |  FROM $from
+      |  ORDER BY cosine DESC, vec_id LIMIT $k""".stripMargin
+
   /** Retrieve-and-refine stage 2: the candidate set `cand` (vec_id plus
     * the tier's stage-1 columns, carried through) joins the raw vectors
     * `emb` (vec_id, e) and is re-scored by exact cosine to `query` →
@@ -109,11 +217,14 @@ object Similarity {
   /** A pair score over (query, vector) arrays and the direction it
     * ranks in.
     */
-  final case class Metric(score: (Column, Column) => Column, ascending: Boolean) {
+  final case class Metric(score: (Column, Column) => Column,
+      scoreSql: (String, String) => String, ascending: Boolean) {
     def order: Column = if (ascending) col("score").asc else col("score").desc
+    def orderSql: String = if (ascending) "score" else "score DESC"
   }
-  val CosineMetric: Metric = Metric(cosine, ascending = false)
-  val L2Metric: Metric = Metric(graft.functions.L2SqF64.l2sqf64, ascending = true)
+  val CosineMetric: Metric = Metric(cosine, cosineSql(_, _), ascending = false)
+  val L2Metric: Metric =
+    Metric(graft.functions.L2SqF64.l2sqf64, l2SqSql(_, _), ascending = true)
 
   /** The exact arm: every corpus vector (vec_id, e) scored against every
     * query (qid, qe) of a broadcast sample → (qid, vec_id, score).
@@ -121,6 +232,13 @@ object Similarity {
   def exactScores(corpus: DataFrame, queries: DataFrame, metric: Metric): DataFrame =
     corpus.crossJoin(broadcast(queries))
       .select(col("qid"), col("vec_id"), metric.score(col("qe"), col("e")).as("score"))
+
+  /** DuckDB twin of [[exactScores]] over the relations `corpus` (vec_id,
+    * e) and `queries` (qid, qe).
+    */
+  def exactScoresSql(corpus: String, queries: String, metric: Metric): String =
+    s"SELECT q.qid, c.vec_id, ${metric.scoreSql("q.qe", "c.e")} AS score\n" +
+      s"  FROM $corpus c CROSS JOIN $queries q"
 
   /** Per-query top-k window: the k best (qid, vec_id) rows of `scored`
     * under `by`, ties to the lower vec_id.
@@ -132,6 +250,11 @@ object Similarity {
       .filter(col("rn") <= k)
       .select(col("qid"), col("vec_id"))
 
+  /** DuckDB twin of [[topKPerQuery]] over the relation `scored`. */
+  def topKPerQuerySql(scored: String, k: Int, by: String): String =
+    s"SELECT qid, vec_id FROM $scored\n" +
+      s"  QUALIFY row_number() OVER (PARTITION BY qid ORDER BY $by, vec_id) <= $k"
+
   /** Multi-query refine: per-query candidates (qid, vec_id) ⋈ raw
     * vectors ⋈ their query → (qid, vec_id, score) at full precision.
     */
@@ -140,6 +263,13 @@ object Similarity {
     emb.join(broadcast(cand), "vec_id")
       .join(broadcast(queries), "qid")
       .select(col("qid"), col("vec_id"), metric.score(col("qe"), col("e")).as("score"))
+
+  /** DuckDB twin of [[refineScores]] over the relations `cand` (qid,
+    * vec_id), `emb` (vec_id, e) and `queries` (qid, qe).
+    */
+  def refineScoresSql(cand: String, emb: String, queries: String, metric: Metric): String =
+    s"SELECT qid, vec_id, ${metric.scoreSql("qe", "e")} AS score\n" +
+      s"  FROM $cand JOIN $emb USING (vec_id) JOIN $queries USING (qid)"
 
   /** Recall@k certification: per query, the overlap of the exact and the
     * approximate top-k (each a (qid, vec_id, score) frame ranked by
@@ -157,6 +287,23 @@ object Similarity {
       .select(col("qid"), coalesce(col("nh"), lit(0L)).as("n_hits"))
       .withColumn("recall_ppm", expr(s"(n_hits * 1000000) div $k"))
   }
+
+  /** DuckDB twin of [[recallAt]] over the relations `queries` (qid) and
+    * `exact`/`approx` (qid, vec_id, score): CTEs ending in
+    * `recall(qid, n_hits, recall_ppm)`.
+    */
+  def recallAtSql(queries: String, exact: String, approx: String, k: Int,
+      metric: Metric): String =
+    s"""hits AS (
+      |  SELECT qid, count(*) AS nh FROM (
+      |    ${topKPerQuerySql(exact, k, metric.orderSql)}) x
+      |  JOIN (
+      |    ${topKPerQuerySql(approx, k, metric.orderSql)}) a USING (qid, vec_id)
+      |  GROUP BY qid),
+      |recall AS (
+      |  SELECT q.qid, CAST(coalesce(nh, 0) AS BIGINT) AS n_hits,
+      |    (CAST(coalesce(nh, 0) AS BIGINT) * 1000000) // $k AS recall_ppm
+      |  FROM $queries q LEFT JOIN hits h ON q.qid = h.qid)""".stripMargin
 
   /** Deterministic IVF centroids: a pseudo-random (hash-ordered, so
     * stable across runs) pick of nCells vectors. Robust to sparse /
@@ -187,6 +334,37 @@ object Similarity {
           .cast(IntegerType))
       .select(col("cell_id"), embDouble.as("centroid"))
   }
+
+  /** DuckDB twin of the strided pick shared by [[centroids]] and
+    * [[pqCodebooks]]: the first `n` rows of `ev` (vec_id, e) in Lehmer
+    * order.
+    */
+  def lehmerPickSql(n: Int): String =
+    s"""SELECT vec_id, e FROM ev
+      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT $n""".stripMargin
+
+  /** DuckDB twin of [[centroids]] and [[assignCellsWithSim]] over `ev`:
+    * CTEs `cents(cell_id, centroid)` and `assigned(vec_id, e, cell_id,
+    * top_sim)`. The centroids are unit-normalized like [[unitRows]] and
+    * the argmax takes the first maximum, the lowest cell id.
+    */
+  def ivfAssignCtes(nCells: Int): String =
+    s"""picked AS (
+      |  ${lehmerPickSql(nCells)}),
+      |cents AS (
+      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cell_id,
+      |    e AS centroid
+      |  FROM picked),
+      |unit AS (
+      |  SELECT cell_id, ${unitSql("centroid", "n")} AS cu
+      |  FROM (SELECT cell_id, centroid, ${normSql("centroid")} AS n FROM cents)),
+      |cl AS (SELECT list(cu ORDER BY cell_id) AS cus FROM unit),
+      |assigned AS (
+      |  SELECT vec_id, e, list_position(sims, list_max(sims)) - 1 AS cell_id,
+      |    list_max(sims) AS top_sim
+      |  FROM (
+      |    SELECT vec_id, e, list_transform(cus, cu -> ${dotSql("e", "cu")}) AS sims
+      |    FROM ev CROSS JOIN cl))""".stripMargin
 
   /** Assign every vector to its nearest centroid — a TRUE map-side argmax.
     *
@@ -341,6 +519,22 @@ object Similarity {
     emb.select(Seq(col("vec_id"), col("e")) ++ cb.indices.map(m =>
       graft.functions.PqEncode.pqEncode(col("e"), cb(m), m * dsub).as(s"c$m")): _*)
 
+  /** DuckDB twin of [[pqCodebooks]] and [[encodePq]] over `ev` for
+    * d = 64 (M = 8 subspaces of 8): CTEs `cw(k, e)`, the codewords'
+    * source vectors, and `codes(vec_id, m, k)`, the nearest codeword per
+    * subspace with ties to the lowest k.
+    */
+  def pqCodesCtes(k: Int): String =
+    s"""picked AS (
+      |  ${lehmerPickSql(k)}),
+      |cw AS (
+      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS k, e FROM picked),
+      |codes AS (
+      |  SELECT vec_id, m, k FROM (
+      |    SELECT v.vec_id, ms.m, c.k, ${l2SqSql("v.e", "c.e", "8", "ms.m * 8")} AS d
+      |    FROM ev v CROSS JOIN cw c CROSS JOIN (SELECT unnest(range(0, 8)) AS m) ms)
+      |  QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY d, k) = 1)""".stripMargin
+
   /** The query-side ADC lookup table — `T(m)(c)` = squared-L2 between
     * the query's m-th subvector and codeword c, computed driver-side in
     * the same ascending-index IEEE fold the engines use (FAISS practice:
@@ -383,6 +577,21 @@ object Similarity {
       .select(col("vec_id"), round(col("adc"), 6).as("adc_dist_6dp"))
   }
 
+  /** DuckDB twin of the ADC score over [[pqCodesCtes]]: CTE `adc(qid,
+    * vec_id, a)`, each (query, code) subspace distance of [[adcTable]]
+    * summed in subspace order, for every query of `queries` (qid, qe)
+    * and the coded vectors passing `keep` (a predicate on `co.vec_id`).
+    */
+  def adcSql(queries: String, keep: String): String =
+    s"""terms AS (
+      |  SELECT q.qid, co.vec_id, co.m,
+      |    ${l2SqSql("q.qe", "c.e", "8", "co.m * 8")} AS t
+      |  FROM codes co JOIN cw c ON c.k = co.k CROSS JOIN $queries q
+      |  WHERE $keep),
+      |adc AS (
+      |  SELECT qid, vec_id, ${foldSql("list(t ORDER BY m)")} AS a
+      |  FROM terms GROUP BY qid, vec_id)""".stripMargin
+
   /** Per-dimension [min, max] bounds for SQ8 scalar quantization — the
     * train step (FAISS `ScalarQuantizer` QT_8bit practice: one corpus
     * pass, d pairs of doubles). Bounded collect: d rows, a design
@@ -397,6 +606,16 @@ object Similarity {
       .sortBy(_.getInt(0))
     (rows.map(_.getDouble(1)).toIndexedSeq, rows.map(_.getDouble(2)).toIndexedSeq)
   }
+
+  /** DuckDB twin of [[sq8Bounds]] over `ev`: CTEs `d(nd)`, the width,
+    * and `bounds(dim, mn, mx)`.
+    */
+  val boundsCtes: String =
+    """d AS (SELECT CAST(min(len(e)) AS BIGINT) AS nd FROM ev),
+      |bounds AS (
+      |  SELECT ix.i AS dim, min(e[ix.i]) AS mn, max(e[ix.i]) AS mx
+      |  FROM ev, (SELECT unnest(range(1, (SELECT nd + 1 FROM d))) AS i) ix
+      |  GROUP BY ix.i)""".stripMargin
 
   /** Map-side SQ8 encode: each vector gains `codes` — one SIGNED BYTE
     * per dimension (code −128..127 = the 0..255 bucket of the
@@ -426,6 +645,31 @@ object Similarity {
     */
   def sq8Codes(mn: IndexedSeq[Double], mx: IndexedSeq[Double]): Column =
     graft.functions.Sq8Encode.sq8Encode(col("e"), mn, mx)
+
+  /** The quantizer's grid lists over [[boundsCtes]]: CTE `mnl(mnl, scl)`,
+    * the per-dimension minimum and span.
+    */
+  val sq8GridCte: String =
+    """mnl AS (SELECT list(mn ORDER BY dim) AS mnl,
+      |               list(mx - mn ORDER BY dim) AS scl FROM bounds)""".stripMargin
+
+  /** Dimension i's code of the list `x` on the [[sq8GridCte]] grid. */
+  private def sq8CodeSql(x: String): String =
+    s"floor(($x[i] - mnl[i]) / scl[i] * 255 + 0.5) - 128"
+
+  /** DuckDB twin of [[sq8Codes]]: `x`'s codes as an INTEGER list. */
+  def sq8CodesSql(x: String): String =
+    s"""list_transform(range(1, len($x) + 1), i ->
+      |      CASE WHEN scl[i] = 0 THEN -128
+      |      ELSE CAST(${sq8CodeSql(x)} AS INTEGER) END)""".stripMargin
+
+  /** DuckDB twin of [[sq8Codes]] then [[sq8Dequantize]]: `x` quantized
+    * and reconstructed, x̂.
+    */
+  def sq8RoundTripSql(x: String): String =
+    s"""list_transform(range(1, len($x) + 1), i ->
+      |      CASE WHEN scl[i] = 0 THEN mnl[i]
+      |      ELSE mnl[i] + (CAST(${sq8CodeSql(x)} AS DOUBLE) + 128) / 255 * scl[i] END)""".stripMargin
 
   // ------------------------------------------------------------- IVF,SQ8
 
@@ -466,6 +710,15 @@ object Similarity {
       (id, d / (cn * qn))
     }.sortBy { case (id, sim) => (-sim, id) }.take(nProbe).map(_._1)
   }
+
+  /** DuckDB twin of [[probeCellIds]] for every query of `queries` (qid,
+    * qe) against `cents`: the (qid, cell_id) rows of its nProbe nearest
+    * cells.
+    */
+  def probeCellsSql(queries: String, nProbe: Int): String =
+    s"""SELECT q.qid, c.cell_id FROM cents c CROSS JOIN $queries q
+      |  QUALIFY row_number() OVER (PARTITION BY q.qid
+      |    ORDER BY ${cosineSql("c.centroid", "q.qe")} DESC, c.cell_id) <= $nProbe""".stripMargin
 
   /** IVF,SQ8 top-k: filter the persisted index to the probed cells
     * (partition-pruned at planning time — the cell list is literal),
@@ -547,6 +800,28 @@ object Similarity {
       graft.functions.BinaryPack.binaryPack(col("e"), thr.slice(offset, offset + half), offset)
     emb.select(col("vec_id"), pack(0).as("lo"), pack(half).as("hi"))
   }
+
+  /** DuckDB twin of [[binaryThresholds]] and [[encodeBinary]] over
+    * [[boundsCtes]]: CTEs `thr(thrl)` and `codes(vec_id, lo, hi)`, each
+    * half the ascending-dim fold acc·2 + bit.
+    */
+  val binaryCodesCtes: String = {
+    def pack(from: String, to: String): String =
+      s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
+        |      list_transform(range($from, $to), i ->
+        |        CASE WHEN e[i] > thrl[i] THEN 1 ELSE 0 END)),
+        |      (a, b) -> a * 2 + b)""".stripMargin
+    s"""thr AS (SELECT list((mn + mx) / 2 ORDER BY dim) AS thrl FROM bounds),
+      |codes AS (
+      |  SELECT vec_id,
+      |    ${pack("1", "(SELECT nd FROM d) // 2 + 1")} AS lo,
+      |    ${pack("(SELECT nd FROM d) // 2 + 1", "(SELECT nd FROM d) + 1")} AS hi
+      |  FROM ev, thr)""".stripMargin
+  }
+
+  /** The Hamming distance between the packed codes of `a` and `b`. */
+  def hammingSql(a: String, b: String): String =
+    s"bit_count(xor($a.lo, $b.lo)) + bit_count(xor($a.hi, $b.hi))"
 
   /** Driver-side twin of [[encodeBinary]] for query vectors: the same
     * ascending-dim fold in plain Scala (integer arithmetic — exactly

@@ -9,14 +9,15 @@ import org.apache.spark.sql.types._
 
 /** LLM-data-pipeline operators (the engine's north-star extensions,
   * BASELINE.json): deduplication (exact, MinHash+LSH, SimHash, n-gram
-  * jaccard — cf. nvtext minhash.hpp:72, jaccard.hpp:73), similarity
-  * search over embeddings (brute-force cosine + LSH-bucketed ANN), and
-  * multimodal binary-column plumbing.
+  * jaccard — cf. nvtext minhash.hpp:72, jaccard.hpp:73), embedding-space
+  * dedup, clustering and decontamination, and multimodal binary-column
+  * plumbing.
   *
   * This is the query catalogue: the `dedup_*` rows and their oracle
   * statements live here, while shingles, signatures, band hashes, pair
   * verifiers and their DuckDB twins are [[graft.operators.Dedup]]'s;
-  * vector search is [[graft.operators.Similarity]]'s.
+  * the `sim_*` rows are [[Ann]]'s, and vector search and its twins
+  * [[graft.operators.Similarity]]'s.
   *
   * 100 TB posture: every pipeline is blocked/bucketed — candidate pairs
   * come from LSH band buckets or blocking keys, never a full cross join;
@@ -552,266 +553,6 @@ object LlmOps {
       |  coalesce(len(c.cv), 0) AS n_removed
       |FROM documents d LEFT JOIN cov c ON d.doc_id = c.doc_id""".stripMargin
 
-  // -------------------------------------------------------- similarity
-
-  /** (min, max) embedding width of the dataset's embeddings table — the
-    * shared input of the ragged-dims guards below. One 1-row aggregate
-    * per dataset per JVM ([[graft.DimCache]]): the guards run at query
-    * *construction* time, so an uncached form charges every builder
-    * invocation (bench rep, verify run) a full Spark job.
-    */
-  private def embDims(s: SparkSession, dir: String): (Int, Int) =
-    graft.DimCache.cached(s"emb-dims:$dir") {
-      val r = Tables
-        .embeddings(s, dir)
-        .select(Similarity.embDouble.as("e"))
-        .agg(min(size(col("e"))), max(size(col("e"))))
-        .head()
-      (r.getInt(0), r.getInt(1))
-    }
-
-  /** The one embedding width of the dataset, for a tier that assumes a
-    * single dimensionality (a table mixing widths is a data bug a
-    * silent min(len) fold would hide), divisible by `multipleOf`. The
-    * error names the tier and the widths it saw.
-    */
-  private def uniformDims(s: SparkSession, dir: String, tier: String,
-      multipleOf: Int = 1): Int = {
-    val (dmin, dmax) = embDims(s, dir)
-    require(dmin == dmax && dmin % multipleOf == 0,
-      s"$tier needs uniform dims" +
-        (if (multipleOf > 1) s" divisible by $multipleOf" else "") +
-        s", got [$dmin,$dmax]")
-    dmin
-  }
-
-  // The ANN dimensions of a dataset's embeddings table. Each is the ONE
-  // definition of its DimCache key: the batch builders here, the
-  // streaming twins in StreamingGate and Explain's streaming audit all
-  // read these, so a gate run and a batch run share one build.
-
-  /** The embeddings as (vec_id, e: array<double>). */
-  private[graft] def embVectors(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir).select(col("vec_id"), Similarity.embDouble.as("e"))
-
-  /** The 8 IVF centroids (strided Lehmer pick) as driver arrays: a
-    * bounded dimension whose uncached form cost every builder
-    * invocation two driver jobs (the pick and the collect).
-    */
-  private[graft] def ivfCentroids(s: SparkSession,
-      dir: String): IndexedSeq[(Int, Seq[Double])] =
-    graft.DimCache.cached(s"ivf-centroids:$dir:8") {
-      Similarity.centroidArrays(
-        Similarity.centroids(
-          embVectors(s, dir).select(col("vec_id"), col("e").as("embedding")),
-          nCells = 8))
-    }
-
-  /** Per-dimension (min, max): the SQ8 quantizer and the binary
-    * thresholds.
-    */
-  private[graft] def sq8Bounds(s: SparkSession,
-      dir: String): (IndexedSeq[Double], IndexedSeq[Double]) =
-    graft.DimCache.cached(s"sq8-bounds:$dir") {
-      Similarity.sq8Bounds(embVectors(s, dir))
-    }
-
-  /** The query sample: vec_id < 8 as (vec_id, e, label), sorted by
-    * vec_id and collected once per (JVM, dataset) — a bounded 8×d
-    * dimension. The recall rows, the k-NN join and hard-negative
-    * mining query with all 8; the single-query rows use vec_id 0.
-    */
-  private def querySample(s: SparkSession,
-      dir: String): IndexedSeq[(Long, IndexedSeq[Double], Int)] =
-    graft.DimCache.cached(s"query-sample:$dir:8") {
-      Tables.embeddings(s, dir).filter(col("vec_id") < 8)
-        .select(col("vec_id"), Similarity.embDouble.as("e"), col("label")).collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toIndexedSeq, r.getInt(2)))
-        .sortBy(_._1).toIndexedSeq
-    }
-
-  /** The single-query top-k rows' query vector (vec_id = 0). */
-  private def queryVector(s: SparkSession, dir: String): IndexedSeq[Double] =
-    querySample(s, dir).collectFirst { case (0L, e, _) => e }
-      .getOrElse(throw new NoSuchElementException(s"no vec_id 0 in $dir"))
-
-  /** The recall rows' queries as a broadcastable (qid, qe) frame: the
-    * sample's rows, read from the scan so qid keeps its nullable type.
-    */
-  private def recallQueries(s: SparkSession, dir: String): DataFrame =
-    embVectors(s, dir).filter(col("vec_id") < 8)
-      .select(col("vec_id").as("qid"), col("e").as("qe"))
-
-  /** Recall@10 of a tier's approximate arm (qid, vec_id, score) against
-    * the exact arm over the corpus (vec_id ≥ 8) for the 8 sample
-    * queries.
-    */
-  private def recallAt10(s: SparkSession, dir: String, approx: DataFrame,
-      metric: Similarity.Metric): DataFrame = {
-    val q = recallQueries(s, dir)
-    val corpus = embVectors(s, dir).filter(col("vec_id") >= 8)
-    Similarity.recallAt(q, Similarity.exactScores(corpus, q, metric), approx, 10, metric)
-  }
-
-  /** The persisted ANN indexes: a tier's codes, encoded once per (JVM,
-    * dataset) and written as parquet at `DimCache.artifactPath(kind,
-    * dir)`, are read back by its top-k and recall rows (FAISS persists
-    * its codes for the same reason). `partitionBy` lays the files out
-    * by a column, so a filter on it skips whole files. The path is
-    * under this JVM's artifact root, so concurrent JVMs on the same
-    * dataset each write their own copy.
-    */
-  private def annIndex(s: SparkSession, kind: String, dir: String,
-      partitionBy: Option[String] = None)(encode: => DataFrame): DataFrame = {
-    val path = graft.DimCache.cached(s"ann-index:$kind:$dir") {
-      val p = graft.DimCache.artifactPath(kind, dir)
-      val w = encode.write.mode("overwrite")
-      partitionBy.fold(w)(c => w.partitionBy(c)).parquet(p)
-      p
-    }
-    s.read.parquet(path)
-  }
-
-  /** Product quantization shape: M subspaces of K codewords, each
-    * subspace `pqDsub` = d / M wide.
-    */
-  private val PqM = 8
-  private val PqK = 16
-  private[graft] def pqDsub(s: SparkSession, dir: String): Int =
-    embDims(s, dir)._1 / PqM
-
-  /** PQ codebooks: the strided-pick exemplars per subspace. */
-  private[graft] def pqCodebooks(s: SparkSession,
-      dir: String): IndexedSeq[IndexedSeq[IndexedSeq[Double]]] =
-    graft.DimCache.cached(s"pq-codebooks:$dir:$PqM:$PqK") {
-      Similarity.pqCodebooks(
-        embVectors(s, dir), PqM, PqK, pqDsub(s, dir))
-    }
-
-  /** The PQ index: codes only, the 8-bytes-per-vector contract. */
-  private def pqIndex(s: SparkSession, dir: String): DataFrame =
-    annIndex(s, "pqcodes", dir) {
-      Similarity.encodePq(embVectors(s, dir), pqCodebooks(s, dir), pqDsub(s, dir)).drop("e")
-    }
-
-  /** Brute-force cosine top-k against a query vector (vec_id = 0) —
-    * the correctness baseline for ANN. The query side is a 1-row
-    * broadcast; scoring is a single map-side pass + TakeOrdered(k).
-    */
-  private def simCosineTopk(s: SparkSession, dir: String): DataFrame =
-    Similarity.bruteForceTopK(Tables.embeddings(s, dir), queryVecId = 0L, k = 10)
-      .select(col("vec_id"), round(col("cosine"), 6).as("cosine_6dp"))
-
-  private val simCosineTopkSql =
-    """WITH e AS (SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |q AS (SELECT e AS qe FROM e WHERE vec_id = 0),
-      |scored AS (
-      |  SELECT vec_id,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(range(1, len(e) + 1), i -> e[i] * qe[i])),
-      |      (a, v) -> a + v) /
-      |    (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(e, x -> x * x)), (a, v) -> a + v)) *
-      |     sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(qe, x -> x * x)), (a, v) -> a + v))) AS cosine
-      |  FROM e, q WHERE vec_id <> 0)
-      |SELECT vec_id, round(cosine, 6) AS cosine_6dp
-      |FROM scored ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
-
-  /** LSH-bucketed ANN scale path: 8 signed random hyperplanes → 8-bit
-    * bucket; neighbors are sought only within a bucket. Output: bucket
-    * sizes — the candidate-set statistics of the ANN index.
-    *
-    * The ±1 plane weights come from the same portable LCG parity as
-    * `dedup_emb_cosine` (bit 16 of the LCG value at `p * 1024 + j`;
-    * 1024 is only a seed stride keeping per-plane inputs disjoint), so
-    * the whole bucketing is replicated in DuckDB and the query is fully
-    * oracle-checked — candidate statistics, not just row counts.
-    */
-  private def simAnnLshBuckets(s: SparkSession, dir: String): DataFrame =
-    Tables
-      .embeddings(s, dir)
-      .select(col("vec_id"), Similarity.embDouble.as("e"))
-      .select(col("vec_id"), planeBucket8(s, dir).as("bucket"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("n_vectors"), min(col("vec_id")).as("min_vec_id"))
-
-  /** The ±1 weight of dimension j in random hyperplane p: bit 16 of the
-    * portable LCG value at `p * stride + j` (the stride keeps per-plane
-    * seed ranges disjoint while dims <= stride). The same integer
-    * expression the DuckDB twins evaluate inline.
-    */
-  private def hyperplaneSign(p: Int, j: Int, stride: Int): Double =
-    if ((((1103515245L * (p * stride + j) + 12345L) % 2147483648L >> 16) & 1L) == 1L)
-      1.0 else -1.0
-
-  /** DuckDB twin of [[hyperplaneSign]] at the seed index `seed`, an SQL
-    * expression such as `p * 1024 + j`.
-    */
-  private def hyperplaneSignSql(seed: String): String =
-    s"(CASE WHEN ((1103515245 * ($seed) + 12345) % 2147483648 >> 16) & 1 = 1 " +
-      "THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)"
-
-  /** Planes 0 until n as literal arrays of their `dims` signs: each
-    * projection is then one native DotF64 pass instead of a `dims`-term
-    * interpreted fold; e[j]*(±1.0) multiplies exactly like the oracle's
-    * term and DotF64 folds ascending, so the buckets are bit-identical.
-    */
-  private def hyperplanes(n: Int, dims: Int, stride: Int): IndexedSeq[Column] =
-    (0 until n).map(p => array((0 until dims).map(j => lit(hyperplaneSign(p, j, stride))): _*))
-
-  /** The sign bits of vector `v` against `planes`, plane i at bit
-    * weight `bit(i)`.
-    */
-  private def signBits(v: Column, planes: Seq[Column], bit: Int => Int): Column =
-    planes.zipWithIndex
-      .map { case (plane, i) =>
-        (graft.functions.DotF64.dotf64(v, plane) > lit(0.0))
-          .cast(IntegerType) * lit(bit(i))
-      }
-      .reduce(_ + _)
-
-  /** The 8-plane bucket of `sim_ann_lsh_buckets` and `dedup_semantic`:
-    * plane p at bit weight 2^p, seed stride 1024.
-    */
-  private def planeBucket8(s: SparkSession, dir: String): Column = {
-    val dims = uniformDims(s, dir, "hyperplane bucketing")
-    // Wider embeddings would silently correlate the hyperplanes (both
-    // engines agree, so the oracle would stay green while bucket
-    // quality degrades). dims >= 1 also keeps the per-row index folds
-    // off the sequence(0, -1) ANSI trap.
-    require(dims >= 1 && dims <= 1024,
-      s"plane seed stride supports 1 <= dims <= 1024, got $dims")
-    signBits(col("e"), hyperplanes(8, dims, 1024), p => 1 << p)
-  }
-
-  /** DuckDB twin of the hyperplane bucketing: the per-plane dot product
-    * is the same ascending-index fold DotF64 runs, the ±1 weight is the
-    * same LCG-parity integer expression, and the 8 sign bits assemble
-    * with plane p at bit weight 2^p exactly as the Spark side's
-    * `(dot > 0) * (1 << p)` sum.
-    */
-  private val simAnnLshBucketsSql =
-    s"""WITH e AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |b AS (
-      |  SELECT vec_id,
-      |    list_reduce(list_prepend(0, list_transform(range(0, 8), p ->
-      |      CASE WHEN
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(0, len(e)), j ->
-      |            e[j + 1] * ${hyperplaneSignSql("p * 1024 + j")})),
-      |          (a, v) -> a + v) > CAST(0.0 AS DOUBLE)
-      |      THEN CAST(1 AS INTEGER) << p ELSE 0 END)),
-      |      (a, v) -> a + v) AS bucket
-      |  FROM e)
-      |SELECT CAST(bucket AS INTEGER) AS bucket, count(*) AS n_vectors,
-      |  min(vec_id) AS min_vec_id
-      |FROM b GROUP BY bucket""".stripMargin
-
   /** Embedding-cosine near-duplicate pairs, LSH-banded: candidates come
     * from 2 bands × 4 signed-random-hyperplane bits (so the self-join is
     * per-bucket, never corpus²), then every candidate pair is verified
@@ -833,19 +574,19 @@ object LlmOps {
     import graft.functions.DotF64.dotf64
     // 2 bands × 4 planes of stride 64, the first plane of a band at the
     // highest bit (the oracle's acc*2+bit fold)
-    val planes = hyperplanes(8, 64, 64)
+    val planes = Similarity.hyperplanes(8, 64, 64)
     def bandBucket(band: Int): Column =
-      signBits(col("e"), planes.slice(band * 4, band * 4 + 4), i => 1 << (3 - i))
+      Similarity.signBits(col("e"), planes.slice(band * 4, band * 4 + 4), i => 1 << (3 - i))
     // The plane arrays are exactly 64-wide: DotF64 folds min(len) terms,
     // so a wider embedding table would SILENTLY project onto the first
     // 64 dims (both engines agree — the oracle stays green while bucket
     // quality quietly degrades). Fail loudly instead.
-    val dims = uniformDims(s, dir, "dedupEmbCosine planes")
+    val dims = Ann.uniformDims(s, dir, "dedupEmbCosine planes")
     require(dims == 64, s"dedupEmbCosine planes are built for 64-dim embeddings, got $dims")
     // squared norm hoisted per vector (identical arithmetic to the
     // per-pair form, just computed once); native dot = the oracle's
     // ascending-index fold, bit for bit
-    val sigs = embVectors(s, dir).select(col("vec_id"), col("e"), dotf64(col("e"), col("e")).as("n2"))
+    val sigs = Ann.embVectors(s, dir).select(col("vec_id"), col("e"), dotf64(col("e"), col("e")).as("n2"))
     Banding.verifiedPairs(sigs, "vec_id", Seq("e", "n2"),
         array(bandBucket(0), bandBucket(1)), maxBucket = 200) {
       _.select(col("id_a"), col("id_b"),
@@ -856,282 +597,21 @@ object LlmOps {
   }
 
   private val dedupEmbCosineSql =
-    s"""WITH e00 AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |e0 AS (
-      |  SELECT vec_id, e,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(e, x -> x * x)), (a, v) -> a + v) AS n2
-      |  FROM e00),
+    s"""WITH ev AS ${Similarity.embDoubleSql()},
       |banded AS (
-      |  SELECT vec_id, e, n2, band,
-      |    list_reduce(list_prepend(0, list_transform(range(0, 4), i ->
-      |      CASE WHEN
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(0, 64), j ->
-      |            e[j + 1] * ${hyperplaneSignSql("(band * 4 + i) * 64 + j")})),
-      |          (a, v) -> a + v)
-      |        > CAST(0.0 AS DOUBLE) THEN 1 ELSE 0 END)),
-      |      (acc, bit) -> acc * 2 + bit) AS bucket
-      |  FROM e0 CROSS JOIN (SELECT unnest([0, 1]) AS band) bands),
+      |  SELECT vec_id, e, ${Similarity.sqNormSql("e")} AS n2, band,
+      |    ${Similarity.signBitsSql(4, "64", "(band * 4 + p) * 64 + j", "3 - p")} AS bucket
+      |  FROM ev CROSS JOIN (SELECT unnest([0, 1]) AS band) bands),
       |capped AS (
       |  SELECT * FROM banded
       |  QUALIFY count(*) OVER (PARTITION BY band, bucket) <= 200),
-      |cand AS (
-      |  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.e AS ea, b.e AS eb,
-      |    a.n2 AS na2, b.n2 AS nb2
-      |  FROM capped a JOIN capped b
-      |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
       |scored AS (
-      |  SELECT id_a, id_b,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(range(1, len(ea) + 1), i -> ea[i] * eb[i])),
-      |      (a, v) -> a + v) /
-      |    (sqrt(na2) * sqrt(nb2)) AS cos
-      |  FROM cand)
+      |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+      |    ${Similarity.dotSql("a.e", "b.e")} / (sqrt(a.n2) * sqrt(b.n2)) AS cos
+      |  FROM capped a JOIN capped b
+      |    ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id)
       |SELECT DISTINCT id_a, id_b, round(cos, 6) AS cosine_6dp
       |FROM scored WHERE cos >= 0.4""".stripMargin
-
-  /** IVF ANN top-k (the index-probe scale path for similarity search,
-    * complementing the hyperplane buckets of `sim_ann_lsh_buckets`):
-    * query probes the nProbe nearest centroid cells and scores only
-    * inside them. Fully oracle-checked since the centroid pick moved to
-    * a portable Lehmer fold ((vec_id * 48271) % 2147483647) — the DuckDB
-    * twin replicates pick, unit-normalization, map-side argmax
-    * assignment, probe, and scoring with the same IEEE op order
-    * (ascending-index dot folds = DotF64). Recall vs brute force is
-    * additionally pinned by `ScaleOpsSpec`.
-    */
-  private def simIvfTopk(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), Similarity.embDouble.as("embedding"))
-    // the cached arrays rebuild `cents` as a LocalRelation, so the probe
-    // stage plans with zero extra jobs
-    val cRows = ivfCentroids(s, dir)
-    val cents = cRows.toDF("cell_id", "centroid")
-    // assignCells already carries each row's embedding as `e` — no
-    // re-join against the scan needed
-    val assigned = Similarity.assignCells(emb, cRows)
-    Similarity
-      .ivfTopK(assigned, cents, queryVecId = 0L, k = 10, nProbe = 2)
-      .select(col("vec_id"), round(col("cosine"), 6).as("cosine_6dp"))
-  }
-
-  /** MMR (maximal-marginal-relevance) diversity rerank — Carbonell &
-    * Goldstein 1998, the standard redundancy-vs-relevance rerank a RAG
-    * retrieval stack runs between candidate generation and the context
-    * window: greedily pick 10 of the top-50 cosine candidates maximizing
-    * λ·rel − (1−λ)·max-sim-to-already-picked with λ = 0.7.
-    *
-    * Exactness: relevance and all pairwise candidate similarities are
-    * floored cosine micro-units (the engine-identical IEEE tree of the
-    * sim family), and the greedy objective is scaled through by 10 —
-    * `mmr_micro = 7·rel − 3·maxsim` in pure long arithmetic (first pick:
-    * maxsim = 0, so argmax rel) with ties to the lowest vec_id. The
-    * DuckDB twin replays the greedy EXACTLY by unrolling the 10 steps as
-    * chained CTEs (the PCA-oracle unrolling pattern), each picking via
-    * ORDER BY score DESC, id LIMIT 1 against the accumulated picked
-    * list.
-    *
-    * Scale shape: the distributed work is the corpus scan + broadcast
-    * query + TakeOrdered(50); the rerank itself is O(k²) = 50² over a
-    * BOUNDED collected dimension (the same exemption as query vectors /
-    * centroids) — exactly where production MMR runs (rerank happens on
-    * the retrieved page, never corpus-side).
-    */
-  private def simMmrRerank(s: SparkSession, dir: String): DataFrame = {
-    val emb = embVectors(s, dir)
-    val qv = emb.filter(col("vec_id") === 0).select(col("e").as("qe"))
-    val cand = emb
-      .filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(qv))
-      .select(col("vec_id"), col("e"),
-        floor(Similarity.cosine(col("e"), col("qe")) * lit(1e6))
-          .cast(LongType).as("rel"))
-      .orderBy(col("rel").desc, col("vec_id"))
-      .limit(50)
-    val picked = graft.DimCache.cached(s"mmr-rerank:$dir:50:10") {
-      val rows = cand.collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getLong(2)))
-        .sortBy(t => (-t._3, t._1))
-        .toIndexedSeq
-      def simMicro(a: Array[Double], b: Array[Double]): Long = {
-        var dot = 0d; var na = 0d; var nb = 0d; var i = 0
-        while (i < a.length) {
-          dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-        }
-        math.floor(dot / (math.sqrt(na) * math.sqrt(nb)) * 1e6).toLong
-      }
-      val sel = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      val remaining = scala.collection.mutable.ArrayBuffer(rows: _*)
-      while (sel.length < 10 && remaining.nonEmpty) {
-        val scored = remaining.map { c =>
-          val maxSim =
-            if (sel.isEmpty) 0L
-            else sel.map(p => simMicro(c._2,
-              rows.find(_._1 == p._2).get._2)).max
-          (c._1, c._3, 7L * c._3 - 3L * maxSim)
-        }
-        val best = scored.minBy(t => (-t._3, t._1))
-        sel += ((sel.length + 1L, best._1, best._3))
-        remaining --= remaining.filter(_._1 == best._1)
-      }
-      sel.map { case (rank, id, score) =>
-        (rank, id, rows.find(_._1 == id).get._3, score)
-      }.toIndexedSeq
-    }
-    import s.implicits._
-    picked.toDF("rank", "vec_id", "rel_micro", "mmr_micro")
-  }
-
-  /** The chained greedy steps MUST be `AS MATERIALIZED`: DuckDB inlines
-    * CTEs by default, and step k references p(k-1) twice (the candidate
-    * filter and the list append), so the un-materialized plan tree
-    * doubles per step — 2¹⁰ copies of the corpus scan (observed as a
-    * >10-minute oracle before the hint; milliseconds after).
-    */
-  private val simMmrRerankSql = {
-    val candPrefix =
-      """WITH ev AS MATERIALIZED (SELECT vec_id,
-        |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        |  FROM embeddings),
-        |qv AS MATERIALIZED (SELECT e AS qe FROM ev WHERE vec_id = 0),
-        |cand AS MATERIALIZED (
-        |  SELECT vec_id AS id, e,
-        |    CAST(floor((list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |        list_transform(range(1, len(e) + 1), i -> e[i] * qe[i])),
-        |        (a, v) -> a + v) /
-        |      (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |          list_transform(e, x -> x * x)), (a, v) -> a + v)) *
-        |       sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |          list_transform(qe, x -> x * x)), (a, v) -> a + v)))) * 1e6)
-        |      AS BIGINT) AS rel
-        |  FROM ev, qv WHERE vec_id <> 0
-        |  ORDER BY rel DESC, vec_id LIMIT 50),
-        |psim AS MATERIALIZED (
-        |  SELECT a.id AS ia, b.id AS ib,
-        |    CAST(floor((list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |        list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i])),
-        |        (x, v) -> x + v) /
-        |      (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |          list_transform(a.e, x -> x * x)), (x, v) -> x + v)) *
-        |       sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |          list_transform(b.e, x -> x * x)), (x, v) -> x + v)))) * 1e6)
-        |      AS BIGINT) AS s
-        |  FROM cand a JOIN cand b ON a.id <> b.id),
-        |cand2 AS MATERIALIZED (
-        |  SELECT c.id, c.rel, list(struct_pack(o := p.ib, s := p.s)) AS sims
-        |  FROM cand c JOIN psim p ON p.ia = c.id GROUP BY c.id, c.rel),
-        |s1 AS MATERIALIZED (SELECT id, rel, CAST(7 * rel AS BIGINT) AS score
-        |  FROM cand2 ORDER BY rel DESC, id LIMIT 1),
-        |p1 AS MATERIALIZED (SELECT list(id) AS ids FROM s1)""".stripMargin
-    val steps = (2 to 10).map { k =>
-      s"""s$k AS MATERIALIZED (
-         |  SELECT id, rel,
-         |    CAST(7 * rel - 3 * list_max(list_transform(
-         |      list_filter(sims, x -> list_contains(ids, x.o)),
-         |      x -> x.s)) AS BIGINT) AS score
-         |  FROM cand2, p${k - 1} WHERE NOT list_contains(ids, id)
-         |  ORDER BY score DESC, id LIMIT 1),
-         |p$k AS MATERIALIZED (SELECT list(id) AS ids FROM (
-         |  SELECT unnest(ids) AS id FROM p${k - 1}
-         |  UNION ALL SELECT id FROM s$k) t)""".stripMargin
-    }.mkString(",\n")
-    val sel = (1 to 10).map { k =>
-      s"""SELECT CAST($k AS BIGINT) AS rank, id AS vec_id,
-         |  rel AS rel_micro, score AS mmr_micro FROM s$k""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    s"$candPrefix,\n$steps\n$sel"
-  }
-
-  /** ANN recall audit: recall@10 of single-probe SRP-LSH retrieval vs
-    * the exact brute-force top-10, per query vector (vec_id < 8 are the
-    * queries, the rest the corpus) — the self-certification number every
-    * ANN deployment reports. Buckets are 4 signed-hyperplane bits (16
-    * buckets — sized so the synthetic near-orthogonal corpus still puts
-    * tens of candidates per bucket; production uses 16-24 bits + multi-
-    * probe, same shape). The ±1 plane weights are the portable LCG
-    * parity of [[dedupEmbCosine]] (plane index p·64+j), so candidate
-    * generation, scoring, ranking, and the recall arithmetic are ALL
-    * replicated by the DuckDB twin — the audit itself is oracle-checked.
-    *
-    * Exactness: both engines fold dots ascending (DotF64 = list_reduce),
-    * so scores are bit-identical IEEE doubles and the (cos desc, vec_id)
-    * ranking matches; recall counts are integers.
-    *
-    * Scale shape: bucket assignment is map-side (literal planes); the 8
-    * queries broadcast; the exact side is one corpus scan × |Q| with a
-    * qid-partitioned top-k window (bounded by the AUDIT's query-sample
-    * size by design — auditing recall on a sample, not the full query
-    * log, is the production pattern); the LSH side only scores the
-    * bucket-matched slice. No corpus×corpus joins anywhere.
-    */
-  private def simLshRecall(s: SparkSession, dir: String): DataFrame = {
-    val dims = uniformDims(s, dir, "simLshRecall planes")
-    require(dims == 64, s"simLshRecall planes are built for 64-dim embeddings, got $dims")
-    val planes = hyperplanes(4, 64, 64)
-    def bucketOf(v: Column): Column = signBits(v, planes, i => 1 << (3 - i))
-    val q = recallQueries(s, dir).withColumn("qbucket", bucketOf(col("qe")))
-    val approx = embVectors(s, dir)
-      .filter(col("vec_id") >= 8)
-      .withColumn("bucket", bucketOf(col("e")))
-      .crossJoin(broadcast(q))
-      .filter(col("bucket") === col("qbucket"))
-      .select(col("qid"), col("vec_id"),
-        Similarity.cosine(col("qe"), col("e")).as("score"))
-    val nCand = approx.groupBy(col("qid")).agg(count(lit(1)).as("nc"))
-    recallAt10(s, dir, approx, Similarity.CosineMetric)
-      .join(nCand, Seq("qid"), "left")
-      .select(col("qid"), coalesce(col("nc"), lit(0L)).as("n_candidates"),
-        col("n_hits"), col("recall_ppm"))
-  }
-
-  private val simLshRecallSql =
-    s"""WITH e0 AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |e1 AS (
-      |  SELECT vec_id, e,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(e, x -> x * x)), (a, v) -> a + v) AS n2,
-      |    list_reduce(list_prepend(0, list_transform(range(0, 4), i ->
-      |      CASE WHEN
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(0, 64), j ->
-      |            e[j + 1] * ${hyperplaneSignSql("i * 64 + j")})),
-      |          (a, v) -> a + v)
-      |        > CAST(0.0 AS DOUBLE) THEN 1 ELSE 0 END)),
-      |      (acc, bit) -> acc * 2 + bit) AS bucket
-      |  FROM e0),
-      |q AS (SELECT vec_id AS qid, e AS qe, n2 AS qn2, bucket AS qbucket
-      |  FROM e1 WHERE vec_id < 8),
-      |scored AS (
-      |  SELECT qid, c.vec_id,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(range(1, len(e) + 1), i -> e[i] * qe[i])),
-      |      (a, v) -> a + v) / (sqrt(n2) * sqrt(qn2)) AS cos,
-      |    c.bucket = qbucket AS in_bucket
-      |  FROM (SELECT * FROM e1 WHERE vec_id >= 8) c CROSS JOIN q),
-      |exact AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
-      |    FROM scored) t WHERE rn <= 10),
-      |cand AS (SELECT * FROM scored WHERE in_bucket),
-      |approx AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
-      |    FROM cand) t WHERE rn <= 10),
-      |nc AS (SELECT qid, count(*) AS nc FROM cand GROUP BY qid),
-      |h AS (SELECT qid, count(*) AS nh
-      |  FROM exact JOIN approx USING (qid, vec_id) GROUP BY qid)
-      |SELECT q.qid, coalesce(nc, 0) AS n_candidates,
-      |  coalesce(nh, 0) AS n_hits,
-      |  (coalesce(nh, 0) * 1000000) // 10 AS recall_ppm
-      |FROM q LEFT JOIN nc ON q.qid = nc.qid
-      |LEFT JOIN h ON q.qid = h.qid""".stripMargin
 
   /** Cluster-quality audit over the labeled embedding table: per label,
     * the member count and the average cosine of members to their own
@@ -1197,1305 +677,12 @@ object LlmOps {
        |    list(CAST(sx AS BIGINT) // n ORDER BY dim) AS cent
        |  FROM dims GROUP BY label),
        |j AS (
-       |  SELECT xq.label,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list_transform(range(1, len(xq) + 1),
-       |        i -> CAST(xq[i] AS DOUBLE) * CAST(cent[i] AS DOUBLE))),
-       |      (a, v) -> a + v) AS dot,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list_transform(xq, a -> CAST(a AS DOUBLE) * CAST(a AS DOUBLE))),
-       |      (a, v) -> a + v) AS na,
-       |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |      list_transform(cent, b -> CAST(b AS DOUBLE) * CAST(b AS DOUBLE))),
-       |      (a, v) -> a + v) AS nb
+       |  SELECT xq.label, CAST(xq AS DOUBLE[]) AS xd, CAST(cent AS DOUBLE[]) AS cd
        |  FROM xq JOIN cent ON xq.label = cent.label),
-       |c AS (SELECT label, dot / (sqrt(na) * sqrt(nb)) AS cos FROM j)
+       |c AS (SELECT label, ${Similarity.cosineSql("xd", "cd")} AS cos FROM j)
        |SELECT label, count(*) AS n_vecs,
        |  round(${graft.Agg.dsumSql("cos", 6)} / count(*), 6) AS avg_cos_6dp
        |FROM c GROUP BY label""".stripMargin
-
-  /** SQ8 scalar-quantization ANN (FAISS QT_8bit practice): train
-    * per-dimension [min, max] bounds once (DimCache'd — d pairs, a
-    * design dimension), encode the corpus to one signed byte per
-    * dimension (4× smaller than f32 where PQ is 32×, but with
-    * per-dimension fidelity), persist the codes as the index
-    * (write-once/query-many like the PQ codes and the bucketed layout),
-    * and rank by ASYMMETRIC cosine — exact query vector against
-    * dequantized corpus. The oracle recomputes bounds + codes +
-    * dequantization from the RAW embeddings with the identical IEEE
-    * arithmetic, so the green row proves the stored byte index
-    * faithful end to end.
-    */
-  private def simSq8Topk(s: SparkSession, dir: String): DataFrame = {
-    uniformDims(s, dir, "SQ8")
-    val (mn, mx) = sq8Bounds(s, dir)
-    Similarity.sq8TopK(sq8Index(s, dir), queryVector(s, dir), mn, mx,
-      queryVecId = 0L, k = 10)
-  }
-
-  /** The SQ8 index: codes only, the byte-per-dimension contract (shared
-    * by `sim_sq8_topk` and its recall row).
-    */
-  private def sq8Index(s: SparkSession, dir: String): DataFrame =
-    annIndex(s, "sq8codes", dir) {
-      val (mn, mx) = sq8Bounds(s, dir)
-      Similarity.encodeSq8(embVectors(s, dir), mn, mx).drop("e")
-    }
-
-  /** SQ8 recall self-certification (`sim_lsh_recall` precedent, r18
-    * verdict task 3): per query vector (vec_id < 8, exact), the top-10
-    * overlap between (a) asymmetric cosine over the PERSISTED byte-code
-    * index and (b) exact brute-force cosine over the raw corpus
-    * (vec_id ≥ 8). Both rankings use the identical ascending-index IEEE
-    * fold, so the oracle — which recomputes bounds → codes → dequantize
-    * → both rankings from the raw table — pins the exact hit counts.
-    * The green row IS the quantitative "recall ≈ exact" claim of
-    * `Similarity.sq8TopK`, measured per query, hash-checked at the
-    * gate instead of floor-bounded in a spec.
-    *
-    * Scale shape: two broadcast-query map passes over the corpus (one
-    * on raw vectors, one on the byte index) + two per-query top-10
-    * windows over 8 partitions — no corpus self-join, no shuffle wider
-    * than the 8-query fanout.
-    */
-  private def simSq8Recall(s: SparkSession, dir: String): DataFrame = {
-    uniformDims(s, dir, "SQ8")
-    val (mn, mx) = sq8Bounds(s, dir)
-    val approx = sq8Index(s, dir)
-      .filter(col("vec_id") >= 8)
-      .withColumn("xhat", Similarity.sq8Dequantize(mn, mx))
-      .crossJoin(broadcast(recallQueries(s, dir)))
-      .select(col("qid"), col("vec_id"),
-        Similarity.cosine(col("qe"), col("xhat")).as("score"))
-    recallAt10(s, dir, approx, Similarity.CosineMetric)
-  }
-
-  /** DuckDB twin: the `sim_sq8_topk` bounds/quantize/dequantize CTEs
-    * verbatim, the `sim_lsh_recall` exact-vs-approx overlap shape —
-    * every cosine the identical ascending list_reduce fold over the
-    * identical doubles, so both engines rank identically and the hit
-    * counts are integer-exact.
-    */
-  private val simSq8RecallSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |d AS (SELECT CAST(min(len(e)) AS BIGINT) AS nd FROM ev),
-      |bounds AS (
-      |  SELECT ix.i AS dim, min(e[ix.i]) AS mn, max(e[ix.i]) AS mx
-      |  FROM ev, (SELECT unnest(range(1, (SELECT nd + 1 FROM d))) AS i) ix
-      |  GROUP BY ix.i),
-      |mnl AS (SELECT list(mn ORDER BY dim) AS mnl,
-      |               list(mx - mn ORDER BY dim) AS scl FROM bounds),
-      |q AS (SELECT vec_id AS qid, e AS qe,
-      |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |    list_transform(e, x -> x * x)), (a, v) -> a + v) AS qn2
-      |  FROM ev WHERE vec_id < 8),
-      |corpus AS (SELECT vec_id, e FROM ev WHERE vec_id >= 8),
-      |xh AS (
-      |  SELECT vec_id,
-      |    list_transform(range(1, len(e) + 1), i ->
-      |      CASE WHEN scl[i] = 0 THEN mnl[i]
-      |      ELSE mnl[i] +
-      |        (CAST(floor((e[i] - mnl[i]) / scl[i] * 255 + 0.5) - 128
-      |          AS DOUBLE) + 128) / 255 * scl[i] END) AS xhat
-      |  FROM corpus, mnl),
-      |exact AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, c.vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> qe[i] * e[i])),
-      |          (a, v) -> a + v) /
-      |        (sqrt(qn2) *
-      |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(e, x -> x * x)), (a, v) -> a + v)))
-      |        DESC, c.vec_id) AS rn
-      |    FROM corpus c CROSS JOIN q) t WHERE rn <= 10),
-      |approx AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, x.vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(xhat) + 1), i -> qe[i] * xhat[i])),
-      |          (a, v) -> a + v) /
-      |        (sqrt(qn2) *
-      |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(xhat, x -> x * x)), (a, v) -> a + v)))
-      |        DESC, x.vec_id) AS rn
-      |    FROM xh x CROSS JOIN q) t WHERE rn <= 10),
-      |h AS (SELECT qid, count(*) AS nh
-      |  FROM exact JOIN approx USING (qid, vec_id) GROUP BY qid)
-      |SELECT q.qid, CAST(coalesce(nh, 0) AS BIGINT) AS n_hits,
-      |  (CAST(coalesce(nh, 0) AS BIGINT) * 1000000) // 10 AS recall_ppm
-      |FROM q LEFT JOIN h ON q.qid = h.qid""".stripMargin
-
-  /** DuckDB twin of the SQ8 pipeline: per-dimension min/max bounds from
-    * the raw table, the identical quantize → dequantize arithmetic
-    * (floor(y·255 + 0.5) − 128, then mn + (c + 128)/255·sc — every
-    * intermediate the same IEEE double), and the same asymmetric
-    * cosine with ascending folds.
-    */
-  private val simSq8TopkSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |d AS (SELECT CAST(min(len(e)) AS BIGINT) AS nd FROM ev),
-      |bounds AS (
-      |  SELECT ix.i AS dim, min(e[ix.i]) AS mn, max(e[ix.i]) AS mx
-      |  FROM ev, (SELECT unnest(range(1, (SELECT nd + 1 FROM d))) AS i) ix
-      |  GROUP BY ix.i),
-      |mnl AS (SELECT list(mn ORDER BY dim) AS mnl,
-      |               list(mx - mn ORDER BY dim) AS scl FROM bounds),
-      |q AS (SELECT e AS qe FROM ev WHERE vec_id = 0),
-      |xh AS (
-      |  SELECT vec_id,
-      |    list_transform(range(1, len(e) + 1), i ->
-      |      CASE WHEN scl[i] = 0 THEN mnl[i]
-      |      ELSE mnl[i] +
-      |        (CAST(floor((e[i] - mnl[i]) / scl[i] * 255 + 0.5) - 128
-      |          AS DOUBLE) + 128) / 255 * scl[i] END) AS xhat
-      |  FROM ev, mnl WHERE vec_id <> 0),
-      |scored AS (
-      |  SELECT vec_id,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(range(1, len(xhat) + 1), i -> qe[i] * xhat[i])),
-      |      (a, v) -> a + v) /
-      |    (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(qe, x -> x * x)), (a, v) -> a + v)) *
-      |     sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(xhat, x -> x * x)), (a, v) -> a + v))) AS cosine
-      |  FROM xh, q)
-      |SELECT vec_id, round(cosine, 6) AS sq8_cosine_6dp
-      |FROM scored ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
-
-  // ----------------------------------------------- binary quantization
-
-  /** The binary quantization thresholds: the midpoints of the SQ8
-    * bounds, so the binary index shares SQ8's train pass.
-    */
-  private def binaryThresholds(s: SparkSession, dir: String): IndexedSeq[Double] = {
-    val (mn, mx) = sq8Bounds(s, dir)
-    Similarity.binaryThresholds(mn, mx)
-  }
-
-  /** The binary (1-bit/dim) index: two packed BIGINT halves per vector —
-    * 16 bytes/row where the raw table stores 64 floats (16×), queried
-    * by pure integer XOR+popcount. Shared by `sim_binary_topk` and its
-    * recall row.
-    */
-  private def binaryIndex(s: SparkSession, dir: String): DataFrame =
-    annIndex(s, "bqcodes", dir) {
-      Similarity.encodeBinary(embVectors(s, dir), binaryThresholds(s, dir))
-    }
-
-  /** Binary-quantization retrieve-and-refine (the vector-DB "BQ +
-    * rescoring" pipeline; FAISS IndexBinaryFlat + refine practice):
-    * stage 1 ranks the persisted 16-byte/row bit index by Hamming
-    * distance — integer XOR+popcount, no float math — and keeps 64
-    * candidates; stage 2 re-scores only those with exact cosine
-    * against the raw vectors. Thresholds are the (mn+mx)/2 midpoints
-    * of the SQ8 bounds, so the binary index shares SQ8's train pass.
-    * The oracle recomputes thresholds → bit-packing → Hamming →
-    * rerank from the raw table in identical integer/IEEE arithmetic,
-    * proving the stored bit index end to end.
-    */
-  private def simBinaryTopk(s: SparkSession, dir: String): DataFrame = {
-    uniformDims(s, dir, "binary quantization", 2)
-    Similarity.binaryTopK(binaryIndex(s, dir), embVectors(s, dir),
-      queryVector(s, dir), binaryThresholds(s, dir),
-      queryVecId = 0L, nCand = 64, k = 10)
-  }
-
-  /** Shared CTE prefix of the binary oracles: per-dimension bounds →
-    * midpoint thresholds → packed lo/hi codes, all recomputed from the
-    * raw embeddings (the same bounds CTEs as the SQ8 oracles; the pack
-    * is the ascending-dim fold acc*2+bit, each half < 2^32).
-    */
-  private[queries] val bqCodesCte =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |d AS (SELECT CAST(min(len(e)) AS BIGINT) AS nd FROM ev),
-      |bounds AS (
-      |  SELECT ix.i AS dim, min(e[ix.i]) AS mn, max(e[ix.i]) AS mx
-      |  FROM ev, (SELECT unnest(range(1, (SELECT nd + 1 FROM d))) AS i) ix
-      |  GROUP BY ix.i),
-      |thr AS (SELECT list((mn + mx) / 2 ORDER BY dim) AS thrl FROM bounds),
-      |codes AS (
-      |  SELECT vec_id,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |      list_transform(range(1, (SELECT nd FROM d) // 2 + 1), i ->
-      |        CASE WHEN e[i] > thrl[i] THEN 1 ELSE 0 END)),
-      |      (a, b) -> a * 2 + b) AS lo,
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |      list_transform(range((SELECT nd FROM d) // 2 + 1,
-      |                           (SELECT nd FROM d) + 1), i ->
-      |        CASE WHEN e[i] > thrl[i] THEN 1 ELSE 0 END)),
-      |      (a, b) -> a * 2 + b) AS hi
-      |  FROM ev, thr)""".stripMargin
-
-  /** DuckDB twin of the binary pipeline: thresholds/pack CTEs above,
-    * Hamming candidate cut at 64 (ties to the lower vec_id), exact
-    * ascending-fold cosine rerank — rankings match Spark's
-    * integer-for-integer and fold-for-fold.
-    */
-  private val simBinaryTopkSql = bqCodesCte +
-    """,
-      |qc AS (SELECT lo AS qlo, hi AS qhi FROM codes WHERE vec_id = 0),
-      |q AS (SELECT e AS qe FROM ev WHERE vec_id = 0),
-      |cand AS (
-      |  SELECT vec_id,
-      |    CAST(bit_count(xor(lo, qlo)) + bit_count(xor(hi, qhi)) AS BIGINT)
-      |      AS hamming
-      |  FROM codes, qc WHERE vec_id <> 0
-      |  ORDER BY hamming, vec_id LIMIT 64),
-      |scored AS (
-      |  SELECT c.vec_id, c.hamming,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(range(1, len(e) + 1), i -> qe[i] * e[i])),
-      |      (a, v) -> a + v) /
-      |    (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(qe, x -> x * x)), (a, v) -> a + v)) *
-      |     sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(e, x -> x * x)), (a, v) -> a + v))) AS cosine
-      |  FROM cand c JOIN ev USING (vec_id) CROSS JOIN q)
-      |SELECT vec_id, hamming, round(cosine, 6) AS bq_cosine_6dp
-      |FROM scored ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
-
-  /** Binary-quantization recall certification (the `sim_sq8_recall`
-    * precedent): per query vector (vec_id < 8), top-10 overlap between
-    * the two-stage binary pipeline (Hamming-64 retrieve → exact
-    * rerank) and global exact brute force over the corpus
-    * (vec_id ≥ 8) — so the number measures exactly what the 1-bit cut
-    * loses: true neighbors whose Hamming distance fell outside the
-    * 64-candidate budget. Hash-checked at the gate like every ANN
-    * family's recall row.
-    */
-  private def simBinaryRecall(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    uniformDims(s, dir, "binary quantization", 2)
-    val thr = binaryThresholds(s, dir)
-    val qcodes = querySample(s, dir).map { case (qid, qv, _) =>
-      val (lo, hi) = Similarity.binaryCode(qv, thr)
-      (qid, lo, hi)
-    }.toDF("qid", "qlo", "qhi")
-    val cand = Similarity.topKPerQuery(binaryIndex(s, dir)
-      .filter(col("vec_id") >= 8)
-      .crossJoin(broadcast(qcodes))
-      .select(col("qid"), col("vec_id"),
-        (bit_count(col("lo").bitwiseXOR(col("qlo"))) +
-          bit_count(col("hi").bitwiseXOR(col("qhi"))))
-          .cast(LongType).as("hamming")),
-      64, col("hamming").asc)
-    val approx = Similarity.refineScores(cand, embVectors(s, dir),
-      recallQueries(s, dir), Similarity.CosineMetric)
-    recallAt10(s, dir, approx, Similarity.CosineMetric)
-  }
-
-  /** DuckDB twin: the binary pack CTEs, per-qid Hamming-64 windows,
-    * exact rerank and the overlap count — hit counts integer-exact.
-    */
-  private val simBinaryRecallSql = bqCodesCte +
-    """,
-      |q AS (SELECT vec_id AS qid, e AS qe,
-      |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |    list_transform(e, x -> x * x)), (a, v) -> a + v) AS qn2
-      |  FROM ev WHERE vec_id < 8),
-      |qc AS (SELECT vec_id AS qid, lo AS qlo, hi AS qhi
-      |  FROM codes WHERE vec_id < 8),
-      |cand AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qc.qid, c.vec_id,
-      |      row_number() OVER (PARTITION BY qc.qid ORDER BY
-      |        bit_count(xor(c.lo, qc.qlo)) + bit_count(xor(c.hi, qc.qhi)),
-      |        c.vec_id) AS rn
-      |    FROM codes c CROSS JOIN qc WHERE c.vec_id >= 8) t
-      |  WHERE rn <= 64),
-      |exact AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, c.vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> qe[i] * e[i])),
-      |          (a, v) -> a + v) /
-      |        (sqrt(qn2) *
-      |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(e, x -> x * x)), (a, v) -> a + v)))
-      |        DESC, c.vec_id) AS rn
-      |    FROM (SELECT vec_id, e FROM ev WHERE vec_id >= 8) c CROSS JOIN q) t
-      |  WHERE rn <= 10),
-      |approx AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT q.qid, c.vec_id,
-      |      row_number() OVER (PARTITION BY q.qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> qe[i] * e[i])),
-      |          (a, v) -> a + v) /
-      |        (sqrt(qn2) *
-      |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(e, x -> x * x)), (a, v) -> a + v)))
-      |        DESC, c.vec_id) AS rn
-      |    FROM cand JOIN ev c USING (vec_id) JOIN q ON cand.qid = q.qid) t
-      |  WHERE rn <= 10),
-      |h AS (SELECT qid, count(*) AS nh
-      |  FROM exact JOIN approx USING (qid, vec_id) GROUP BY qid)
-      |SELECT q.qid, CAST(coalesce(nh, 0) AS BIGINT) AS n_hits,
-      |  (CAST(coalesce(nh, 0) AS BIGINT) * 1000000) // 10 AS recall_ppm
-      |FROM q LEFT JOIN h ON q.qid = h.qid""".stripMargin
-
-  // ------------------------------------------------ matryoshka prefix ANN
-
-  /** The matryoshka prefix index: the first d/4 dimensions as their
-    * own stored column — stage-1 scans read a quarter of the float
-    * bytes (shared by `sim_matryoshka_topk` and its recall row).
-    */
-  private def prefixIndex(s: SparkSession, dir: String, dPrefix: Int): DataFrame =
-    annIndex(s, "mrlprefix", dir) {
-      Similarity.encodePrefix(embVectors(s, dir), dPrefix)
-    }
-
-  /** Matryoshka retrieve-and-refine (Kusupati et al. 2022 MRL;
-    * OpenAI text-embedding-3 "dimensions" practice): stage 1 ranks the
-    * persisted d/4-prefix index by 16-dim cosine — a quarter of the
-    * scan bytes and the dot-product flops — keeps 64 candidates, and
-    * stage 2 re-scores only those with exact full-dimension cosine.
-    * Output carries both scores (what the index saw, what the user
-    * gets). The oracle recomputes truncation → both rankings from the
-    * raw table with identical ascending IEEE folds.
-    */
-  private def simMatryoshkaTopk(s: SparkSession, dir: String): DataFrame = {
-    val dPrefix = uniformDims(s, dir, "matryoshka prefix", 4) / 4
-    Similarity.matryoshkaTopK(prefixIndex(s, dir, dPrefix), embVectors(s, dir),
-      queryVector(s, dir), dPrefix, queryVecId = 0L, nCand = 64, k = 10)
-  }
-
-  /** DuckDB twin: prefix truncation in SQL, the prefix-cosine
-    * candidate cut at 64, the exact rerank — every fold ascending
-    * IEEE over identical doubles.
-    */
-  private val simMatryoshkaTopkSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |d AS (SELECT CAST(min(len(e)) AS BIGINT) AS nd FROM ev),
-      |q AS (SELECT e AS qe FROM ev WHERE vec_id = 0),
-      |cand AS (
-      |  SELECT vec_id, pcos FROM (
-      |    SELECT vec_id,
-      |      list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, (SELECT nd FROM d) // 4 + 1),
-      |            i -> qe[i] * e[i])), (a, v) -> a + v) /
-      |      (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, (SELECT nd FROM d) // 4 + 1),
-      |            i -> qe[i] * qe[i])), (a, v) -> a + v)) *
-      |       sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, (SELECT nd FROM d) // 4 + 1),
-      |            i -> e[i] * e[i])), (a, v) -> a + v))) AS pcos
-      |    FROM ev CROSS JOIN q WHERE vec_id <> 0) t
-      |  ORDER BY pcos DESC, vec_id LIMIT 64),
-      |scored AS (
-      |  SELECT c.vec_id, c.pcos,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(range(1, len(e) + 1), i -> qe[i] * e[i])),
-      |      (a, v) -> a + v) /
-      |    (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(qe, x -> x * x)), (a, v) -> a + v)) *
-      |     sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(e, x -> x * x)), (a, v) -> a + v))) AS cosine
-      |  FROM cand c JOIN ev USING (vec_id) CROSS JOIN q)
-      |SELECT vec_id, round(pcos, 6) AS prefix_cosine_6dp,
-      |  round(cosine, 6) AS mrl_cosine_6dp
-      |FROM scored ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
-
-  /** Matryoshka recall certification: per query vector (vec_id < 8),
-    * top-10 overlap between the two-stage prefix pipeline
-    * (16-dim-cosine-64 retrieve → exact rerank) and global exact brute
-    * force (vec_id ≥ 8) — measuring exactly what the dimension
-    * truncation loses at the candidate cut.
-    */
-  private def simMatryoshkaRecall(s: SparkSession, dir: String): DataFrame = {
-    val dPrefix = uniformDims(s, dir, "matryoshka prefix", 4) / 4
-    val q = recallQueries(s, dir)
-    val qp = q.select(col("qid"), slice(col("qe"), 1, dPrefix).as("qp"))
-    val cand = Similarity.topKPerQuery(prefixIndex(s, dir, dPrefix)
-      .filter(col("vec_id") >= 8)
-      .crossJoin(broadcast(qp))
-      .select(col("qid"), col("vec_id"),
-        Similarity.cosine(col("qp"), col("ep")).as("pcos")),
-      64, col("pcos").desc)
-    val approx = Similarity.refineScores(cand, embVectors(s, dir), q,
-      Similarity.CosineMetric)
-    recallAt10(s, dir, approx, Similarity.CosineMetric)
-  }
-
-  /** DuckDB twin: per-qid prefix-cosine-64 windows over the truncated
-    * lists, exact rerank, overlap count — integer-exact hit counts.
-    */
-  private val simMatryoshkaRecallSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |d AS (SELECT CAST(min(len(e)) AS BIGINT) AS nd FROM ev),
-      |q AS (SELECT vec_id AS qid, e AS qe,
-      |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |    list_transform(e, x -> x * x)), (a, v) -> a + v) AS qn2,
-      |  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |    list_transform(range(1, (SELECT nd FROM d) // 4 + 1),
-      |      i -> e[i] * e[i])), (a, v) -> a + v) AS qpn2
-      |  FROM ev WHERE vec_id < 8),
-      |cand AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, c.vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, (SELECT nd FROM d) // 4 + 1),
-      |            i -> qe[i] * e[i])), (a, v) -> a + v) /
-      |        (sqrt(qpn2) *
-      |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(range(1, (SELECT nd FROM d) // 4 + 1),
-      |             i -> e[i] * e[i])), (a, v) -> a + v)))
-      |        DESC, c.vec_id) AS rn
-      |    FROM (SELECT vec_id, e FROM ev WHERE vec_id >= 8) c CROSS JOIN q) t
-      |  WHERE rn <= 64),
-      |exact AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, c.vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> qe[i] * e[i])),
-      |          (a, v) -> a + v) /
-      |        (sqrt(qn2) *
-      |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(e, x -> x * x)), (a, v) -> a + v)))
-      |        DESC, c.vec_id) AS rn
-      |    FROM (SELECT vec_id, e FROM ev WHERE vec_id >= 8) c CROSS JOIN q) t
-      |  WHERE rn <= 10),
-      |approx AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT q.qid, c.vec_id,
-      |      row_number() OVER (PARTITION BY q.qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> qe[i] * e[i])),
-      |          (a, v) -> a + v) /
-      |        (sqrt(qn2) *
-      |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(e, x -> x * x)), (a, v) -> a + v)))
-      |        DESC, c.vec_id) AS rn
-      |    FROM cand JOIN ev c USING (vec_id) JOIN q ON cand.qid = q.qid) t
-      |  WHERE rn <= 10),
-      |h AS (SELECT qid, count(*) AS nh
-      |  FROM exact JOIN approx USING (qid, vec_id) GROUP BY qid)
-      |SELECT q.qid, CAST(coalesce(nh, 0) AS BIGINT) AS n_hits,
-      |  (CAST(coalesce(nh, 0) AS BIGINT) * 1000000) // 10 AS recall_ppm
-      |FROM q LEFT JOIN h ON q.qid = h.qid""".stripMargin
-
-  /** The persisted IVF,SQ8 composed index (cell-partitioned byte
-    * codes): built once per (JVM, dataset) — one Project over the scan
-    * computes the cell argmax AND the quantizer — and written
-    * `partitionBy(cell_id)`, so a probe's cell filter is a
-    * PartitionFilter that skips index FILES, not rows (shared by
-    * `sim_ivfsq8_topk` and its recall certification).
-    */
-  private def ivfSq8Index(s: SparkSession, dir: String): DataFrame =
-    annIndex(s, "ivfsq8", dir, partitionBy = Some("cell_id")) {
-      val (mn, mx) = sq8Bounds(s, dir)
-      Similarity.encodeIvfSq8(
-        embVectors(s, dir).select(col("vec_id"), col("e").as("embedding")),
-        ivfCentroids(s, dir), mn, mx)
-    }
-
-  /** IVF,SQ8 composed ANN (FAISS `IVF8,SQ8` practice): the coarse
-    * quantizer prunes to nProbe = 2 of 8 cells — driver-side over the
-    * bounded centroid set, so the cell list is LITERAL and the scan is
-    * partition-pruned at planning time — and the fine ranking
-    * dequantizes the surviving byte codes for asymmetric cosine. The
-    * multiplicative 100 TB pair: nProbe/nCells of the IO × 4×
-    * compression on what remains, with the same no-join no-shuffle
-    * Project → TakeOrdered plan as `sim_sq8_topk`. Fully oracled: the
-    * DuckDB twin recomputes centroid pick → assignment → probe →
-    * bounds → quantize → dequantize → ranking from the raw table in
-    * identical IEEE arithmetic, so the green row proves the PERSISTED
-    * partitioned index end-to-end.
-    */
-  private def simIvfSq8Topk(s: SparkSession, dir: String): DataFrame =
-    ivfSq8Probe(s, dir, k = 10)
-      .select(col("vec_id"), round(col("cosine"), 6).as("ivfsq8_cosine_6dp"))
-
-  /** The single-query IVF,SQ8 top-k (vec_id 0, nProbe = 2 of 8). */
-  private def ivfSq8Probe(s: SparkSession, dir: String, k: Int): DataFrame = {
-    uniformDims(s, dir, "SQ8")
-    val (mn, mx) = sq8Bounds(s, dir)
-    val q0 = queryVector(s, dir)
-    val probed = Similarity.probeCellIds(q0, ivfCentroids(s, dir), nProbe = 2)
-    Similarity.ivfSq8TopK(ivfSq8Index(s, dir), q0, mn, mx, probed,
-      queryVecId = 0L, k = k)
-  }
-
-  /** The recall rows' per-query probes: (qid, cell_id, qe) for the
-    * nProbe = 2 nearest cells of each sample query.
-    */
-  private def recallProbes(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val cRows = ivfCentroids(s, dir)
-    querySample(s, dir).flatMap { case (qid, qv, _) =>
-      Similarity.probeCellIds(qv, cRows, nProbe = 2).map(c => (qid, c, qv))
-    }.toDF("qid", "cell_id", "qe")
-  }
-
-  /** Recall certification for the plain IVF index (completing the ANN
-    * self-certification matrix: SRP-LSH r10, SQ8 r18, IVF,SQ8 r19 —
-    * this row covers the remaining un-quantized coarse index): per
-    * query vector (vec_id < 8), top-10 overlap between the
-    * nProbe = 2-of-8 cell-restricted exact-cosine ranking (the
-    * `sim_ivf_topk` parameterization) and global exact brute force —
-    * so the number measures PURE probe loss, the quantity the k ∝ N
-    * cell-training contract exists to control. Same plan shape as the
-    * composed row: per-query probes ship as a 16-row broadcast
-    * literal, no corpus self-join.
-    */
-  private def simIvfRecall(s: SparkSession, dir: String): DataFrame = {
-    val approx = Similarity
-      .assignCells(embVectors(s, dir).select(col("vec_id"), col("e").as("embedding")),
-        ivfCentroids(s, dir))
-      .filter(col("vec_id") >= 8)
-      .join(broadcast(recallProbes(s, dir)), Seq("cell_id"))
-      .select(col("qid"), col("vec_id"),
-        Similarity.cosine(col("qe"), col("e")).as("score"))
-    recallAt10(s, dir, approx, Similarity.CosineMetric)
-  }
-
-  /** DuckDB twin: the `sim_ivfsq8_recall` CTEs with the quantize /
-    * dequantize stage removed — candidates score from raw vectors.
-    */
-  private val simIvfRecallSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 8),
-      |cents AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cell_id,
-      |    e AS centroid
-      |  FROM picked),
-      |unitc AS (
-      |  SELECT cell_id, centroid,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(centroid, x -> x * x)), (acc, v) -> acc + v)) AS n
-      |  FROM cents),
-      |unit AS (
-      |  SELECT cell_id,
-      |    list_transform(centroid,
-      |      x -> CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE) ELSE x / n END) AS cu
-      |  FROM unitc),
-      |cl AS (SELECT list(cu ORDER BY cell_id) AS cus FROM unit),
-      |assigned AS (
-      |  SELECT vec_id, e, list_position(sims, list_max(sims)) - 1 AS cell_id
-      |  FROM (
-      |    SELECT vec_id, e,
-      |      list_transform(cus, cu ->
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> e[i] * cu[i])),
-      |          (acc, v) -> acc + v)) AS sims
-      |    FROM ev CROSS JOIN cl)),
-      |q AS (SELECT vec_id AS qid, e AS qe,
-      |  sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |    list_transform(e, x -> x * x)), (a, v) -> a + v)) AS qn
-      |  FROM ev WHERE vec_id < 8),
-      |probe AS (
-      |  SELECT qid, cell_id FROM (
-      |    SELECT qid, cell_id,
-      |      row_number() OVER (PARTITION BY qid
-      |        ORDER BY sim DESC, cell_id) AS rn
-      |    FROM (
-      |      SELECT q.qid, c.cell_id,
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(c.centroid) + 1),
-      |            i -> c.centroid[i] * q.qe[i])), (acc, v) -> acc + v) /
-      |        (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(c.centroid, x -> x * x)), (acc, v) -> acc + v))
-      |         * q.qn) AS sim
-      |      FROM cents c CROSS JOIN q)) t WHERE rn <= 2),
-      |exact AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, c.vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> qe[i] * e[i])),
-      |          (a, v) -> a + v) /
-      |        (qn *
-      |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(e, x -> x * x)), (a, v) -> a + v)))
-      |        DESC, c.vec_id) AS rn
-      |    FROM (SELECT vec_id, e FROM ev WHERE vec_id >= 8) c
-      |    CROSS JOIN q) t WHERE rn <= 10),
-      |approx AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT p.qid, a.vec_id,
-      |      row_number() OVER (PARTITION BY p.qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(a.e) + 1), i -> qe[i] * a.e[i])),
-      |          (acc2, v) -> acc2 + v) /
-      |        (qn *
-      |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(a.e, x -> x * x)), (acc2, v) -> acc2 + v)))
-      |        DESC, a.vec_id) AS rn
-      |    FROM assigned a JOIN probe p USING (cell_id)
-      |    JOIN q ON p.qid = q.qid
-      |    WHERE a.vec_id >= 8) t WHERE rn <= 10),
-      |h AS (SELECT qid, count(*) AS nh
-      |  FROM exact JOIN approx USING (qid, vec_id) GROUP BY qid)
-      |SELECT q.qid, CAST(coalesce(nh, 0) AS BIGINT) AS n_hits,
-      |  (CAST(coalesce(nh, 0) AS BIGINT) * 1000000) // 10 AS recall_ppm
-      |FROM q LEFT JOIN h ON q.qid = h.qid""".stripMargin
-
-  /** Recall certification for the COMPOSED index (the `sim_lsh_recall`
-    * / `sim_sq8_recall` precedent): per query vector (vec_id < 8),
-    * top-10 overlap between the partition-pruned IVF,SQ8 ranking and
-    * exact brute force over the raw corpus — so probe loss (did the
-    * 2-of-8 coarse quantizer keep the true neighbors' cells?) and
-    * quantization loss are measured TOGETHER, per query, hash-checked
-    * at the gate. Each query probes its own cells; the (qid, cell,
-    * query-vector) fanout ships as a 16-row broadcast literal against
-    * the persisted index — no corpus self-join, no shuffle wider than
-    * the 8-query window.
-    */
-  private def simIvfSq8Recall(s: SparkSession, dir: String): DataFrame = {
-    uniformDims(s, dir, "SQ8")
-    val (mn, mx) = sq8Bounds(s, dir)
-    val approx = ivfSq8Index(s, dir)
-      .filter(col("vec_id") >= 8)
-      .join(broadcast(recallProbes(s, dir)), Seq("cell_id"))
-      .withColumn("xhat", Similarity.sq8Dequantize(mn, mx))
-      .select(col("qid"), col("vec_id"),
-        Similarity.cosine(col("qe"), col("xhat")).as("score"))
-    recallAt10(s, dir, approx, Similarity.CosineMetric)
-  }
-
-  /** DuckDB twin of the composed pipeline: the `sim_ivf_topk` centroid
-    * pick / assignment / probe CTEs (probe now per-query via a
-    * windowed rank) chained into the `sim_sq8_topk` bounds / quantize
-    * / dequantize CTEs — every fold ascending IEEE, so rankings match
-    * and hit counts are integer-exact.
-    */
-  private val simIvfSq8RecallSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 8),
-      |cents AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cell_id,
-      |    e AS centroid
-      |  FROM picked),
-      |unitc AS (
-      |  SELECT cell_id, centroid,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(centroid, x -> x * x)), (acc, v) -> acc + v)) AS n
-      |  FROM cents),
-      |unit AS (
-      |  SELECT cell_id,
-      |    list_transform(centroid,
-      |      x -> CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE) ELSE x / n END) AS cu
-      |  FROM unitc),
-      |cl AS (SELECT list(cu ORDER BY cell_id) AS cus FROM unit),
-      |assigned AS (
-      |  SELECT vec_id, e, list_position(sims, list_max(sims)) - 1 AS cell_id
-      |  FROM (
-      |    SELECT vec_id, e,
-      |      list_transform(cus, cu ->
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> e[i] * cu[i])),
-      |          (acc, v) -> acc + v)) AS sims
-      |    FROM ev CROSS JOIN cl)),
-      |d AS (SELECT CAST(min(len(e)) AS BIGINT) AS nd FROM ev),
-      |bounds AS (
-      |  SELECT ix.i AS dim, min(e[ix.i]) AS mn, max(e[ix.i]) AS mx
-      |  FROM ev, (SELECT unnest(range(1, (SELECT nd + 1 FROM d))) AS i) ix
-      |  GROUP BY ix.i),
-      |mnl AS (SELECT list(mn ORDER BY dim) AS mnl,
-      |               list(mx - mn ORDER BY dim) AS scl FROM bounds),
-      |q AS (SELECT vec_id AS qid, e AS qe,
-      |  sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |    list_transform(e, x -> x * x)), (a, v) -> a + v)) AS qn
-      |  FROM ev WHERE vec_id < 8),
-      |probe AS (
-      |  SELECT qid, cell_id FROM (
-      |    SELECT qid, cell_id,
-      |      row_number() OVER (PARTITION BY qid
-      |        ORDER BY sim DESC, cell_id) AS rn
-      |    FROM (
-      |      SELECT q.qid, c.cell_id,
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(c.centroid) + 1),
-      |            i -> c.centroid[i] * q.qe[i])), (acc, v) -> acc + v) /
-      |        (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(c.centroid, x -> x * x)), (acc, v) -> acc + v))
-      |         * q.qn) AS sim
-      |      FROM cents c CROSS JOIN q)) t WHERE rn <= 2),
-      |cand AS (
-      |  SELECT p.qid, a.vec_id, a.e
-      |  FROM assigned a JOIN probe p USING (cell_id)
-      |  WHERE a.vec_id >= 8),
-      |xh AS (
-      |  SELECT qid, vec_id,
-      |    list_transform(range(1, len(e) + 1), i ->
-      |      CASE WHEN scl[i] = 0 THEN mnl[i]
-      |      ELSE mnl[i] +
-      |        (CAST(floor((e[i] - mnl[i]) / scl[i] * 255 + 0.5) - 128
-      |          AS DOUBLE) + 128) / 255 * scl[i] END) AS xhat
-      |  FROM cand, mnl),
-      |exact AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, c.vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> qe[i] * e[i])),
-      |          (a, v) -> a + v) /
-      |        (qn *
-      |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(e, x -> x * x)), (a, v) -> a + v)))
-      |        DESC, c.vec_id) AS rn
-      |    FROM (SELECT vec_id, e FROM ev WHERE vec_id >= 8) c
-      |    CROSS JOIN q) t WHERE rn <= 10),
-      |approx AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT x.qid, x.vec_id,
-      |      row_number() OVER (PARTITION BY x.qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(xhat) + 1), i -> qe[i] * xhat[i])),
-      |          (a, v) -> a + v) /
-      |        (qn *
-      |         sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |           list_transform(xhat, x -> x * x)), (a, v) -> a + v)))
-      |        DESC, x.vec_id) AS rn
-      |    FROM xh x JOIN q ON x.qid = q.qid) t WHERE rn <= 10),
-      |h AS (SELECT qid, count(*) AS nh
-      |  FROM exact JOIN approx USING (qid, vec_id) GROUP BY qid)
-      |SELECT q.qid, CAST(coalesce(nh, 0) AS BIGINT) AS n_hits,
-      |  (CAST(coalesce(nh, 0) AS BIGINT) * 1000000) // 10 AS recall_ppm
-      |FROM q LEFT JOIN h ON q.qid = h.qid""".stripMargin
-
-  /** Two-stage retrieve-and-refine over the composed index (FAISS
-    * `IndexRefine` practice): stage 1 ranks the partition-pruned byte
-    * codes by asymmetric cosine and keeps 50 candidates (5× the final
-    * k — the standard refine multiplier); stage 2 re-scores ONLY those
-    * 50 from the raw vectors at full precision and returns the exact
-    * top-10. This is the production ANN stack: the quantized index
-    * bounds the candidate set cheaply, the refine pass erases
-    * quantization error from the final ranking — recall limited only
-    * by stage-1 candidate recall, while raw-vector IO drops from
-    * |corpus| to k'. Plan: pruned byte scan → TakeOrdered(50) →
-    * broadcast join against the raw scan (the id-keyed refine read,
-    * [[Similarity.refineTopK]]) → exact cosine → TakeOrdered(10); the
-    * only join is against a 50-row broadcast.
-    */
-  private def simIvfSq8Rerank(s: SparkSession, dir: String): DataFrame =
-    Similarity.refineTopK(ivfSq8Probe(s, dir, k = 50).select(col("vec_id")),
-      embVectors(s, dir), queryVector(s, dir), k = 10)
-      .select(col("vec_id"), round(col("cosine"), 6).as("rerank_cosine_6dp"))
-
-  /** DuckDB twin: the `sim_ivfsq8_topk` CTEs with the scored stage
-    * LIMIT 50 (identical quantized ordering, so the candidate SET
-    * matches), then the exact-cosine refine over the raw vectors with
-    * the same ascending folds as the brute-force family.
-    */
-  private val simIvfSq8RerankSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 8),
-      |cents AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cell_id,
-      |    e AS centroid
-      |  FROM picked),
-      |unitc AS (
-      |  SELECT cell_id, centroid,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(centroid, x -> x * x)), (acc, v) -> acc + v)) AS n
-      |  FROM cents),
-      |unit AS (
-      |  SELECT cell_id,
-      |    list_transform(centroid,
-      |      x -> CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE) ELSE x / n END) AS cu
-      |  FROM unitc),
-      |cl AS (SELECT list(cu ORDER BY cell_id) AS cus FROM unit),
-      |assigned AS (
-      |  SELECT vec_id, e, list_position(sims, list_max(sims)) - 1 AS cell_id
-      |  FROM (
-      |    SELECT vec_id, e,
-      |      list_transform(cus, cu ->
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> e[i] * cu[i])),
-      |          (acc, v) -> acc + v)) AS sims
-      |    FROM ev CROSS JOIN cl)),
-      |d AS (SELECT CAST(min(len(e)) AS BIGINT) AS nd FROM ev),
-      |bounds AS (
-      |  SELECT ix.i AS dim, min(e[ix.i]) AS mn, max(e[ix.i]) AS mx
-      |  FROM ev, (SELECT unnest(range(1, (SELECT nd + 1 FROM d))) AS i) ix
-      |  GROUP BY ix.i),
-      |mnl AS (SELECT list(mn ORDER BY dim) AS mnl,
-      |               list(mx - mn ORDER BY dim) AS scl FROM bounds),
-      |q AS (
-      |  SELECT e AS qe,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(e, x -> x * x)), (acc, v) -> acc + v)) AS qn
-      |  FROM ev WHERE vec_id = 0),
-      |probe AS (
-      |  SELECT cell_id FROM (
-      |    SELECT c.cell_id,
-      |      list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(range(1, len(c.centroid) + 1),
-      |          i -> c.centroid[i] * q.qe[i])), (acc, v) -> acc + v) /
-      |      (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(c.centroid, x -> x * x)), (acc, v) -> acc + v))
-      |       * q.qn) AS sim
-      |    FROM cents c CROSS JOIN q)
-      |  ORDER BY sim DESC, cell_id LIMIT 2),
-      |cand AS (
-      |  SELECT a.vec_id, a.e
-      |  FROM assigned a JOIN probe USING (cell_id)
-      |  WHERE a.vec_id <> 0),
-      |xh AS (
-      |  SELECT vec_id,
-      |    list_transform(range(1, len(e) + 1), i ->
-      |      CASE WHEN scl[i] = 0 THEN mnl[i]
-      |      ELSE mnl[i] +
-      |        (CAST(floor((e[i] - mnl[i]) / scl[i] * 255 + 0.5) - 128
-      |          AS DOUBLE) + 128) / 255 * scl[i] END) AS xhat
-      |  FROM cand, mnl),
-      |stage1 AS (
-      |  SELECT vec_id FROM (
-      |    SELECT vec_id,
-      |      list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(xhat) + 1), i -> qe[i] * xhat[i])),
-      |        (a, v) -> a + v) /
-      |      (qn *
-      |       sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(xhat, x -> x * x)), (a, v) -> a + v))) AS qcos
-      |    FROM xh, q
-      |    ORDER BY qcos DESC, vec_id LIMIT 50)),
-      |refined AS (
-      |  SELECT ev.vec_id,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(range(1, len(e) + 1), i -> qe[i] * e[i])),
-      |      (a, v) -> a + v) /
-      |    (qn *
-      |     sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(e, x -> x * x)), (a, v) -> a + v))) AS cosine
-      |  FROM ev JOIN stage1 USING (vec_id) CROSS JOIN q)
-      |SELECT vec_id, round(cosine, 6) AS rerank_cosine_6dp
-      |FROM refined ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
-
-  private val simIvfSq8TopkSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 8),
-      |cents AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cell_id,
-      |    e AS centroid
-      |  FROM picked),
-      |unitc AS (
-      |  SELECT cell_id, centroid,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(centroid, x -> x * x)), (acc, v) -> acc + v)) AS n
-      |  FROM cents),
-      |unit AS (
-      |  SELECT cell_id,
-      |    list_transform(centroid,
-      |      x -> CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE) ELSE x / n END) AS cu
-      |  FROM unitc),
-      |cl AS (SELECT list(cu ORDER BY cell_id) AS cus FROM unit),
-      |assigned AS (
-      |  SELECT vec_id, e, list_position(sims, list_max(sims)) - 1 AS cell_id
-      |  FROM (
-      |    SELECT vec_id, e,
-      |      list_transform(cus, cu ->
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> e[i] * cu[i])),
-      |          (acc, v) -> acc + v)) AS sims
-      |    FROM ev CROSS JOIN cl)),
-      |d AS (SELECT CAST(min(len(e)) AS BIGINT) AS nd FROM ev),
-      |bounds AS (
-      |  SELECT ix.i AS dim, min(e[ix.i]) AS mn, max(e[ix.i]) AS mx
-      |  FROM ev, (SELECT unnest(range(1, (SELECT nd + 1 FROM d))) AS i) ix
-      |  GROUP BY ix.i),
-      |mnl AS (SELECT list(mn ORDER BY dim) AS mnl,
-      |               list(mx - mn ORDER BY dim) AS scl FROM bounds),
-      |q AS (
-      |  SELECT e AS qe,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(e, x -> x * x)), (acc, v) -> acc + v)) AS qn
-      |  FROM ev WHERE vec_id = 0),
-      |probe AS (
-      |  SELECT cell_id FROM (
-      |    SELECT c.cell_id,
-      |      list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(range(1, len(c.centroid) + 1),
-      |          i -> c.centroid[i] * q.qe[i])), (acc, v) -> acc + v) /
-      |      (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(c.centroid, x -> x * x)), (acc, v) -> acc + v))
-      |       * q.qn) AS sim
-      |    FROM cents c CROSS JOIN q)
-      |  ORDER BY sim DESC, cell_id LIMIT 2),
-      |cand AS (
-      |  SELECT a.vec_id, a.e
-      |  FROM assigned a JOIN probe USING (cell_id)
-      |  WHERE a.vec_id <> 0),
-      |xh AS (
-      |  SELECT vec_id,
-      |    list_transform(range(1, len(e) + 1), i ->
-      |      CASE WHEN scl[i] = 0 THEN mnl[i]
-      |      ELSE mnl[i] +
-      |        (CAST(floor((e[i] - mnl[i]) / scl[i] * 255 + 0.5) - 128
-      |          AS DOUBLE) + 128) / 255 * scl[i] END) AS xhat
-      |  FROM cand, mnl),
-      |scored AS (
-      |  SELECT vec_id,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(range(1, len(xhat) + 1), i -> qe[i] * xhat[i])),
-      |      (a, v) -> a + v) /
-      |    (qn *
-      |     sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(xhat, x -> x * x)), (a, v) -> a + v))) AS cosine
-      |  FROM xh, q)
-      |SELECT vec_id, round(cosine, 6) AS ivfsq8_cosine_6dp
-      |FROM scored ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
-
-  /** IVF-PQ-style product quantization (FAISS practice, public
-    * algorithm): 8 subspaces × 16 codewords from the deterministic
-    * Lehmer exemplar pick, map-side encode (8 small ints replace the
-    * 64-float vector — the 32× memory lever that keeps ANN candidate
-    * state in executor memory at 100 TB), then ADC top-k: the query at
-    * full precision, every corpus row scored from codes alone. Fully
-    * oracled — every fold, argmin tie, and subspace-sum order is
-    * mirrored bit-exact in the DuckDB twin (see pqTopK scaladoc).
-    */
-  private def simIvfpqTopk(s: SparkSession, dir: String): DataFrame = {
-    val dsub = uniformDims(s, dir, "PQ", PqM) / PqM
-    // the ADC table is a bounded query-side dimension (M×K Scala
-    // folds), cached like the codebooks
-    val table = graft.DimCache.cached(s"pq-adc:$dir:$PqM:$PqK:0") {
-      Similarity.adcTable(queryVector(s, dir), pqCodebooks(s, dir), dsub)
-    }
-    // the oracle recomputes codes from the RAW embeddings, so the green
-    // row also proves the stored index faithful
-    Similarity.pqTopK(pqIndex(s, dir), table, queryVecId = 0L, k = 10)
-  }
-
-  /** ADC distances of every corpus vector (vec_id ≥ 8) to each sample
-    * query from the PQ index alone → (qid, vec_id, score): per-qid ADC
-    * tables flattened m-major (index m·K + c), the same driver-side
-    * IEEE folds adcTable always runs, shipped as one broadcast 8-row
-    * frame.
-    */
-  private def pqRecallAdc(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // d = 64 exactly (not just divisible by M): the DuckDB twins
-    // hardcode dsub = 8 (range(1, 9), e[m*8+j]), so any other
-    // M-divisible dim would pass a looser guard yet silently diverge
-    // from the oracle
-    val dims = uniformDims(s, dir, "PQ recall", PqM)
-    require(dims == 64, s"PQ recall twins assume d = 64 (dsub = 8 literal in SQL), got $dims")
-    val cb = pqCodebooks(s, dir)
-    val qtbl = querySample(s, dir).map { case (qid, qv, _) =>
-      (qid, Similarity.adcTable(qv, cb, dims / PqM).flatten)
-    }.toDF("qid", "tbl")
-    val adc = (0 until PqM)
-      .map(m => element_at(col("tbl"), col(s"c$m") + lit(m * PqK) + 1))
-      .reduce(_ + _)
-    pqIndex(s, dir)
-      .filter(col("vec_id") >= 8)
-      .crossJoin(broadcast(qtbl))
-      .select(col("qid"), col("vec_id"), adc.as("score"))
-  }
-
-  /** PQ/ADC recall certification — the LAST un-certified tier of the
-    * ANN matrix (SRP-LSH r10, SQ8 / IVF / IVF,SQ8 / binary /
-    * matryoshka since): per query vector (vec_id < 8), top-10 overlap
-    * between the ADC ranking over the PERSISTED 8-byte codes and exact
-    * squared-L2 brute force over the raw corpus (vec_id ≥ 8). The
-    * truth metric is L2 — the metric ADC approximates — so the number
-    * measures PURE quantization loss, not an L2-vs-cosine metric
-    * mismatch. Per-query ADC tables are bounded driver dimensions
-    * (8 × M·K doubles, the adcTable convention) shipped as one
-    * broadcast 8-row frame; no corpus self-join, the usual 8-query
-    * window fanout.
-    */
-  private def simPqRecall(s: SparkSession, dir: String): DataFrame =
-    recallAt10(s, dir, pqRecallAdc(s, dir), Similarity.L2Metric)
-
-  /** PQ retrieve-and-refine recall — the quantitative answer to
-    * `sim_pq_recall`'s 0.30: the SAME persisted 8-byte codes retrieve
-    * 50 candidates by ADC (5× final k, the `sim_ivfsq8_rerank`
-    * budget), then exact squared-L2 re-scores only those 50 from the
-    * raw vectors. The overlap vs global exact top-10 measures what
-    * the refine stage RECOVERS — together the two rows give an
-    * operator the full tradeoff: raw ADC recall at 32× compression,
-    * and refined recall at 32× + 50 raw-vector reads per query.
-    */
-  private def simPqRerankRecall(s: SparkSession, dir: String): DataFrame = {
-    val cand = Similarity.topKPerQuery(pqRecallAdc(s, dir), 50, col("score").asc)
-    val approx = Similarity.refineScores(cand, embVectors(s, dir),
-      recallQueries(s, dir), Similarity.L2Metric)
-    recallAt10(s, dir, approx, Similarity.L2Metric)
-  }
-
-  /** DuckDB twin: the `sim_pq_recall` CTEs with an ADC-50 candidate
-    * window inserted before the exact-L2 rerank window.
-    */
-  private val simPqRerankRecallSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 16),
-      |cw AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS k, e FROM picked),
-      |ms AS (SELECT unnest(range(0, 8)) AS m),
-      |dists AS (
-      |  SELECT v.vec_id, ms.m, c.k,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, 9), j ->
-      |        (v.e[ms.m * 8 + j] - c.e[ms.m * 8 + j])
-      |          * (v.e[ms.m * 8 + j] - c.e[ms.m * 8 + j]))),
-      |      (acc, x) -> acc + x) AS d
-      |  FROM ev v CROSS JOIN cw c CROSS JOIN ms),
-      |codes AS (
-      |  SELECT vec_id, m, k FROM dists
-      |  QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY d, k) = 1),
-      |qv AS (SELECT vec_id AS qid, e AS qe FROM ev WHERE vec_id < 8),
-      |terms AS (
-      |  SELECT q.qid, co.vec_id, co.m,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, 9), j ->
-      |        (q.qe[co.m * 8 + j] - c.e[co.m * 8 + j])
-      |          * (q.qe[co.m * 8 + j] - c.e[co.m * 8 + j]))),
-      |      (acc, x) -> acc + x) AS t
-      |  FROM codes co JOIN cw c ON c.k = co.k CROSS JOIN qv q
-      |  WHERE co.vec_id >= 8),
-      |adc AS (
-      |  SELECT qid, vec_id,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(t ORDER BY m)),
-      |      (acc, x) -> acc + x) AS a
-      |  FROM terms GROUP BY qid, vec_id),
-      |cand AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY a, vec_id) AS rn
-      |    FROM adc) t WHERE rn <= 50),
-      |approx AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT cand.qid, c.vec_id,
-      |      row_number() OVER (PARTITION BY cand.qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), j ->
-      |            (qe[j] - e[j]) * (qe[j] - e[j]))),
-      |          (acc, x) -> acc + x), c.vec_id) AS rn
-      |    FROM cand JOIN ev c USING (vec_id)
-      |      JOIN qv q ON cand.qid = q.qid) t
-      |  WHERE rn <= 10),
-      |exact AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT q.qid, c.vec_id,
-      |      row_number() OVER (PARTITION BY q.qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), j ->
-      |            (qe[j] - e[j]) * (qe[j] - e[j]))),
-      |          (acc, x) -> acc + x), c.vec_id) AS rn
-      |    FROM (SELECT vec_id, e FROM ev WHERE vec_id >= 8) c
-      |      CROSS JOIN qv q) t
-      |  WHERE rn <= 10),
-      |h AS (SELECT qid, count(*) AS nh
-      |  FROM exact JOIN approx USING (qid, vec_id) GROUP BY qid)
-      |SELECT qv.qid, CAST(coalesce(nh, 0) AS BIGINT) AS n_hits,
-      |  (CAST(coalesce(nh, 0) AS BIGINT) * 1000000) // 10 AS recall_ppm
-      |FROM qv LEFT JOIN h ON qv.qid = h.qid""".stripMargin
-
-  /** DuckDB twin: the PQ codebook/encode CTEs of `sim_ivfpq_topk`,
-    * per-qid ADC terms (codes ⋈ codewords ⨯ the 8 queries) folded in
-    * subspace order, exact squared-L2 truth with the identical
-    * ascending folds — hit counts integer-exact.
-    */
-  private val simPqRecallSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 16),
-      |cw AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS k, e FROM picked),
-      |ms AS (SELECT unnest(range(0, 8)) AS m),
-      |dists AS (
-      |  SELECT v.vec_id, ms.m, c.k,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, 9), j ->
-      |        (v.e[ms.m * 8 + j] - c.e[ms.m * 8 + j])
-      |          * (v.e[ms.m * 8 + j] - c.e[ms.m * 8 + j]))),
-      |      (acc, x) -> acc + x) AS d
-      |  FROM ev v CROSS JOIN cw c CROSS JOIN ms),
-      |codes AS (
-      |  SELECT vec_id, m, k FROM dists
-      |  QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY d, k) = 1),
-      |qv AS (SELECT vec_id AS qid, e AS qe FROM ev WHERE vec_id < 8),
-      |terms AS (
-      |  SELECT q.qid, co.vec_id, co.m,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, 9), j ->
-      |        (q.qe[co.m * 8 + j] - c.e[co.m * 8 + j])
-      |          * (q.qe[co.m * 8 + j] - c.e[co.m * 8 + j]))),
-      |      (acc, x) -> acc + x) AS t
-      |  FROM codes co JOIN cw c ON c.k = co.k CROSS JOIN qv q
-      |  WHERE co.vec_id >= 8),
-      |adc AS (
-      |  SELECT qid, vec_id,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(t ORDER BY m)),
-      |      (acc, x) -> acc + x) AS a
-      |  FROM terms GROUP BY qid, vec_id),
-      |approx AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT qid, vec_id,
-      |      row_number() OVER (PARTITION BY qid ORDER BY a, vec_id) AS rn
-      |    FROM adc) t WHERE rn <= 10),
-      |exact AS (
-      |  SELECT qid, vec_id FROM (
-      |    SELECT q.qid, c.vec_id,
-      |      row_number() OVER (PARTITION BY q.qid ORDER BY
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), j ->
-      |            (qe[j] - e[j]) * (qe[j] - e[j]))),
-      |          (acc, x) -> acc + x), c.vec_id) AS rn
-      |    FROM (SELECT vec_id, e FROM ev WHERE vec_id >= 8) c
-      |      CROSS JOIN qv q) t
-      |  WHERE rn <= 10),
-      |h AS (SELECT qid, count(*) AS nh
-      |  FROM exact JOIN approx USING (qid, vec_id) GROUP BY qid)
-      |SELECT qv.qid, CAST(coalesce(nh, 0) AS BIGINT) AS n_hits,
-      |  (CAST(coalesce(nh, 0) AS BIGINT) * 1000000) // 10 AS recall_ppm
-      |FROM qv LEFT JOIN h ON qv.qid = h.qid""".stripMargin
-
-  /** DuckDB twin of the PQ pipeline: exemplar pick = the IVF centroid
-    * CTE, per-(vector, subspace, codeword) distances via the same
-    * ascending list_reduce fold, argmin tie to the lowest codeword
-    * (ORDER BY d, k = array_position first-match), and the ADC sum
-    * folded in subspace order (list(t ORDER BY m) — matches the fixed
-    * left-to-right Spark reduce; 0.0 + t0 ≡ t0 in IEEE for the
-    * non-negative distances here).
-    */
-  private val simIvfpqTopkSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 16),
-      |cw AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS k, e FROM picked),
-      |ms AS (SELECT unnest(range(0, 8)) AS m),
-      |dists AS (
-      |  SELECT v.vec_id, ms.m, c.k,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, 9), j ->
-      |        (v.e[ms.m * 8 + j] - c.e[ms.m * 8 + j])
-      |          * (v.e[ms.m * 8 + j] - c.e[ms.m * 8 + j]))),
-      |      (acc, x) -> acc + x) AS d
-      |  FROM ev v CROSS JOIN cw c CROSS JOIN ms),
-      |codes AS (
-      |  SELECT vec_id, m, k FROM dists
-      |  QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY d, k) = 1),
-      |qv AS (SELECT e AS qe FROM ev WHERE vec_id = 0),
-      |terms AS (
-      |  SELECT co.vec_id, co.m,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, 9), j ->
-      |        (q.qe[co.m * 8 + j] - c.e[co.m * 8 + j])
-      |          * (q.qe[co.m * 8 + j] - c.e[co.m * 8 + j]))),
-      |      (acc, x) -> acc + x) AS t
-      |  FROM codes co JOIN cw c ON c.k = co.k CROSS JOIN qv q
-      |  WHERE co.vec_id <> 0),
-      |adc AS (
-      |  SELECT vec_id,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(t ORDER BY m)),
-      |      (acc, x) -> acc + x) AS a
-      |  FROM terms GROUP BY vec_id)
-      |SELECT vec_id, round(a, 6) AS adc_dist_6dp
-      |FROM adc ORDER BY a, vec_id LIMIT 10""".stripMargin
-
-  /** DuckDB twin of the whole IVF pipeline. Every dot product is the
-    * same ascending-index fold DotF64 runs (one rounding per multiply,
-    * one per add), the centroid unit-normalization mirrors the
-    * driver-side Scala arithmetic op for op, and argmax ties resolve to
-    * the first (lowest-cell) maximum in both engines
-    * (array_position / list_position both return the first match).
-    */
-  private val simIvfTopkSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 8),
-      |cents AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cell_id,
-      |    e AS centroid
-      |  FROM picked),
-      |unitc AS (
-      |  SELECT cell_id, centroid,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(centroid, x -> x * x)), (acc, v) -> acc + v)) AS n
-      |  FROM cents),
-      |unit AS (
-      |  SELECT cell_id,
-      |    list_transform(centroid,
-      |      x -> CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE) ELSE x / n END) AS cu
-      |  FROM unitc),
-      |cl AS (SELECT list(cu ORDER BY cell_id) AS cus FROM unit),
-      |assigned AS (
-      |  SELECT vec_id, e, list_position(sims, list_max(sims)) - 1 AS cell_id
-      |  FROM (
-      |    SELECT vec_id, e,
-      |      list_transform(cus, cu ->
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> e[i] * cu[i])),
-      |          (acc, v) -> acc + v)) AS sims
-      |    FROM ev CROSS JOIN cl)),
-      |q AS (
-      |  SELECT e AS qe,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(e, x -> x * x)), (acc, v) -> acc + v)) AS qn
-      |  FROM ev WHERE vec_id = 0),
-      |probe AS (
-      |  SELECT cell_id FROM (
-      |    SELECT c.cell_id,
-      |      list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(range(1, len(c.centroid) + 1),
-      |          i -> c.centroid[i] * q.qe[i])), (acc, v) -> acc + v) /
-      |      (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(c.centroid, x -> x * x)), (acc, v) -> acc + v))
-      |       * q.qn) AS sim
-      |    FROM cents c CROSS JOIN q)
-      |  ORDER BY sim DESC, cell_id LIMIT 2),
-      |scored AS (
-      |  SELECT a.vec_id,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, len(a.e) + 1), i -> a.e[i] * q.qe[i])),
-      |      (acc, v) -> acc + v) /
-      |    (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(a.e, x -> x * x)), (acc, v) -> acc + v)) * q.qn)
-      |      AS cosine
-      |  FROM assigned a JOIN probe USING (cell_id) CROSS JOIN q
-      |  WHERE a.vec_id <> 0)
-      |SELECT vec_id, round(cosine, 6) AS cosine_6dp
-      |FROM scored ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
 
   // -------------------------------------------------- k-means / knn / split
 
@@ -2516,7 +703,7 @@ object LlmOps {
   private def clusterKmeansStep(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), Similarity.embDouble.as("embedding"))
-    val cRows = ivfCentroids(s, dir)
+    val cRows = Ann.ivfCentroids(s, dir)
     Similarity.assignCells(emb, cRows)
       .select(col("cell_id"), posexplode(col("e")).as(Seq("dim", "x")))
       .groupBy(col("cell_id"), col("dim"))
@@ -2529,41 +716,13 @@ object LlmOps {
         (floor(col("sx") / col("n") * lit(1e6)) / lit(1e6)).as("c_new"))
   }
 
-  /** DuckDB twin: the `sim_ivf_topk` centroid/assignment CTEs verbatim
-    * (same folds, same argmax-first tie), then per-(cell, dim) count +
-    * fixed-point mean via the lateral `unnest(range(...))` index walk.
+  /** DuckDB twin: the IVF assignment ([[Similarity.ivfAssignCtes]]),
+    * then per-(cell, dim) count + fixed-point mean via the lateral
+    * `unnest(range(...))` index walk.
     */
   private val clusterKmeansStepSql =
-    s"""WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 8),
-      |cents AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cell_id,
-      |    e AS centroid
-      |  FROM picked),
-      |unitc AS (
-      |  SELECT cell_id, centroid,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(centroid, x -> x * x)), (acc, v) -> acc + v)) AS n
-      |  FROM cents),
-      |unit AS (
-      |  SELECT cell_id,
-      |    list_transform(centroid,
-      |      x -> CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE) ELSE x / n END) AS cu
-      |  FROM unitc),
-      |cl AS (SELECT list(cu ORDER BY cell_id) AS cus FROM unit),
-      |assigned AS (
-      |  SELECT vec_id, e, list_position(sims, list_max(sims)) - 1 AS cell_id
-      |  FROM (
-      |    SELECT vec_id, e,
-      |      list_transform(cus, cu ->
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> e[i] * cu[i])),
-      |          (acc, v) -> acc + v)) AS sims
-      |    FROM ev CROSS JOIN cl))
+    s"""WITH ev AS ${Similarity.embDoubleSql()},
+      |${Similarity.ivfAssignCtes(8)}
       |SELECT CAST(cell_id AS INTEGER) AS cell_id,
       |  CAST(u.i - 1 AS INTEGER) AS dim, count(*) AS n,
       |  floor(${graft.Agg.dsumSql("a.e[u.i]", 6)} / count(*) * 1e6) / 1e6 AS c_new
@@ -2603,63 +762,27 @@ object LlmOps {
     * centroid cosine is rounded for display.
     */
   private def dedupSemanticKeep(s: SparkSession, dir: String): DataFrame = {
-    uniformDims(s, dir, "dedupSemanticKeep")
+    Ann.uniformDims(s, dir, "dedupSemanticKeep")
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), Similarity.embDouble.as("embedding"))
-    val cRows = ivfCentroids(s, dir)
+    val cRows = Ann.ivfCentroids(s, dir)
     Similarity.semanticDedupKeep(emb, cRows, tau = 0.35)
   }
 
-  /** DuckDB twin: the `cluster_kmeans_step` centroid/assignment CTEs
-    * verbatim (same Lehmer pick, same unit-normalization, same
-    * ascending folds), extended with the winning sim (`list_max`) and
-    * the within-cell pair/dominance logic.
+  /** DuckDB twin: the IVF assignment ([[Similarity.ivfAssignCtes]],
+    * with its winning sim) and the within-cell pair/dominance logic.
     */
   private val dedupSemanticKeepSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 8),
-      |cents AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cell_id,
-      |    e AS centroid
-      |  FROM picked),
-      |unitc AS (
-      |  SELECT cell_id, centroid,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(centroid, x -> x * x)), (acc, v) -> acc + v)) AS n
-      |  FROM cents),
-      |unit AS (
-      |  SELECT cell_id,
-      |    list_transform(centroid,
-      |      x -> CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE) ELSE x / n END) AS cu
-      |  FROM unitc),
-      |cl AS (SELECT list(cu ORDER BY cell_id) AS cus FROM unit),
-      |assigned AS (
-      |  SELECT vec_id, e, list_position(sims, list_max(sims)) - 1 AS cell_id,
-      |    list_max(sims) AS top_sim
-      |  FROM (
-      |    SELECT vec_id, e,
-      |      list_transform(cus, cu ->
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> e[i] * cu[i])),
-      |          (acc, v) -> acc + v)) AS sims
-      |    FROM ev CROSS JOIN cl)),
+    s"""WITH ev AS ${Similarity.embDoubleSql()},
+      |${Similarity.ivfAssignCtes(8)},
       |m AS (
-      |  SELECT vec_id, cell_id, e,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(e, x -> x * x)), (acc, v) -> acc + v) AS n2,
-      |    top_sim / sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(e, x -> x * x)), (acc, v) -> acc + v)) AS cc
+      |  SELECT vec_id, cell_id, e, ${Similarity.sqNormSql("e")} AS n2,
+      |    top_sim / ${Similarity.normSql("e")} AS cc
       |  FROM assigned),
       |near AS (
       |  SELECT a.vec_id AS id_a, a.cc AS ca, b.vec_id AS id_b, b.cc AS cb
       |  FROM m a JOIN m b ON a.cell_id = b.cell_id AND a.vec_id <> b.vec_id
-      |  WHERE list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i])),
-      |      (acc, v) -> acc + v) / (sqrt(a.n2) * sqrt(b.n2)) >= 0.35),
+      |  WHERE ${Similarity.dotSql("a.e", "b.e")} / (sqrt(a.n2) * sqrt(b.n2)) >= 0.35),
       |v AS (
       |  SELECT id_a AS vec_id, count(*) AS n_near,
       |    max(CASE WHEN cb < ca OR (cb = ca AND id_b < id_a)
@@ -2706,22 +829,13 @@ object LlmOps {
   }
 
   private val decontaminateSemanticSql =
-    """WITH e AS (SELECT vec_id, label,
-      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |b AS (SELECT e AS be,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(e, x -> x * x)), (a, v) -> a + v)) AS bn
+    s"""WITH e AS ${Similarity.embDoubleSql("vec_id, label")},
+      |b AS (SELECT e AS be, ${Similarity.normSql("e")} AS bn
       |  FROM e WHERE label = 7),
-      |c AS (SELECT vec_id, e,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(e, x -> x * x)), (a, v) -> a + v)) AS en
+      |c AS (SELECT vec_id, e, ${Similarity.normSql("e")} AS en
       |  FROM e WHERE label <> 7),
       |m AS (
-      |  SELECT vec_id,
-      |    max(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(range(1, len(e) + 1), i -> e[i] * be[i])),
-      |      (a, v) -> a + v) / (en * bn)) AS mc
+      |  SELECT vec_id, max(${Similarity.dotSql("e", "be")} / (en * bn)) AS mc
       |  FROM c, b GROUP BY vec_id)
       |SELECT vec_id, round(mc, 6) AS max_cos_6dp,
       |  round(mc, 6) >= 0.35 AS contaminated
@@ -2833,143 +947,6 @@ object LlmOps {
        |        AS v2_micro FROM bu5, bm5) b USING (dim)""".stripMargin
   }
 
-  /** Hard-negative mining for contrastive training — for every query
-    * vector (vec_id < 8), the 3 most-cosine-similar corpus vectors with
-    * a DIFFERENT label: the "looks like the anchor but isn't its class"
-    * examples an embedding-model trainer pairs against each anchor (the
-    * in-batch-negatives upgrade every retrieval-model pipeline runs).
-    * Same machinery as `sim_knn_join` (queries a bounded collected
-    * dimension shipped as literals, map-side scoring, [[graft.agg
-    * .TopKAgg]] O(k) ranking, fixed-point floor ties to lowest vec_id)
-    * plus the label-mismatch predicate — so at 100 TB it stays one
-    * corpus scan with ≤ |Q|×k pairs per map partition in the exchange.
-    */
-  private def simHardNegatives(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), Similarity.embDouble.as("e"), col("label"))
-    val qRows = querySample(s, dir)
-    val qIds = array(qRows.map(r => lit(r._1)): _*)
-    val qLabels = array(qRows.map(r => lit(r._3)): _*)
-    val topk = udaf(new graft.agg.TopKAgg(3))
-    emb.filter(col("vec_id") >= 8)
-      .withColumn("ne",
-        sqrt(graft.functions.DotF64.dotf64(col("e"), col("e"))))
-      .select(col("vec_id"), col("label"), col("ne"),
-        posexplode(Similarity.unitDots(col("e"), qRows.map(_._2)))
-          .as(Seq("qi", "dot")))
-      .filter(element_at(qLabels, col("qi") + 1) =!= col("label"))
-      .select(element_at(qIds, col("qi") + 1).as("q_id"),
-        element_at(qLabels, col("qi") + 1).as("q_label"),
-        col("vec_id"), col("label").as("neg_label"),
-        (-floor(col("dot") / col("ne") * lit(1e6))).cast(LongType).as("rk"))
-      .groupBy(col("q_id"), col("q_label"))
-      .agg(topk(col("rk"), col("vec_id")).as("picks"))
-      .select(col("q_id"), col("q_label"),
-        posexplode(col("picks")).as(Seq("pos", "pick")))
-      .select(col("q_id"), col("q_label").cast(LongType).as("q_label"),
-        col("pick._2").as("vec_id"),
-        (col("pos") + 1).cast(LongType).as("rn"),
-        ((-col("pick._1")).cast(DoubleType) / 1e6).as("sim6"))
-  }
-
-  private val simHardNegativesSql =
-    """WITH ev AS (
-      |  SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e, label
-      |  FROM embeddings),
-      |q AS (
-      |  SELECT vec_id AS q_id, label AS q_label,
-      |    list_transform(e, x -> CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE)
-      |      ELSE x / n END) AS qu
-      |  FROM (
-      |    SELECT vec_id, label, e,
-      |      sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(e, x -> x * x)), (acc, v) -> acc + v)) AS n
-      |    FROM ev WHERE vec_id < 8)),
-      |c AS (
-      |  SELECT vec_id, label, e,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(e, x -> x * x)), (acc, v) -> acc + v)) AS ne
-      |  FROM ev WHERE vec_id >= 8),
-      |scored AS (
-      |  SELECT q.q_id, q.q_label, c.vec_id,
-      |    CAST(floor((list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, len(c.e) + 1), i -> c.e[i] * q.qu[i])),
-      |      (acc, v) -> acc + v) / c.ne) * 1e6) AS BIGINT) AS fp
-      |  FROM c CROSS JOIN q WHERE c.label <> q.q_label)
-      |SELECT q_id, CAST(q_label AS BIGINT) AS q_label, vec_id,
-      |  CAST(rn AS BIGINT) AS rn,
-      |  CAST(fp AS DOUBLE) / 1e6 AS sim6
-      |FROM (SELECT *, row_number() OVER (
-      |    PARTITION BY q_id ORDER BY fp DESC, vec_id) AS rn FROM scored)
-      |WHERE rn <= 3""".stripMargin
-
-  /** Batched k-NN similarity join — top-3 cosine neighbors for EVERY
-    * query in a query set at once (vec_id < 8 here), the shape batch
-    * inference / RAG retrieval actually runs, vs the single-query
-    * `sim_cosine_topk`. Query vectors are a bounded dimension: collected
-    * once ([[graft.DimCache]]), unit-normalized driver-side, shipped as
-    * literals, so scoring is a pure Project over the corpus scan — one
-    * dot per (row, query), no join, no row explosion surviving past the
-    * aggregation. Ranking is the bounded [[graft.agg.TopKAgg]] (O(k)
-    * state, map-side combine): the exchange moves ≤ |Q|×k pairs per map
-    * partition, never scored rows — the 100 TB contract. Scores rank on
-    * the 6-dp fixed-point floor so cross-engine order is exact by
-    * construction (ties → lowest vec_id).
-    */
-  private def simKnnJoin(s: SparkSession, dir: String): DataFrame = {
-    val emb = embVectors(s, dir)
-    val qRows = querySample(s, dir)
-    val qIds = array(qRows.map(r => lit(r._1)): _*)
-    val topk = udaf(new graft.agg.TopKAgg(3))
-    emb.filter(col("vec_id") >= 8)
-      .withColumn("ne",
-        sqrt(graft.functions.DotF64.dotf64(col("e"), col("e"))))
-      .select(col("vec_id"), col("ne"),
-        posexplode(Similarity.unitDots(col("e"), qRows.map(_._2))).as(Seq("qi", "dot")))
-      .select(element_at(qIds, col("qi") + 1).as("q_id"), col("vec_id"),
-        (-floor(col("dot") / col("ne") * lit(1e6))).cast(LongType).as("rk"))
-      .groupBy(col("q_id"))
-      .agg(topk(col("rk"), col("vec_id")).as("picks"))
-      .select(col("q_id"), posexplode(col("picks")).as(Seq("pos", "pick")))
-      .select(col("q_id"), col("pick._2").as("vec_id"),
-        (col("pos") + 1).cast(LongType).as("rn"),
-        ((-col("pick._1")).cast(DoubleType) / 1e6).as("sim6"))
-  }
-
-  /** DuckDB twin: same unit-normalize fold on the query side, same
-    * ascending dot fold, rank on the identical fixed-point floor with
-    * the identical (score desc, vec_id asc) tie.
-    */
-  private val simKnnJoinSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |q AS (
-      |  SELECT vec_id AS q_id,
-      |    list_transform(e, x -> CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE)
-      |      ELSE x / n END) AS qu
-      |  FROM (
-      |    SELECT vec_id, e,
-      |      sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |        list_transform(e, x -> x * x)), (acc, v) -> acc + v)) AS n
-      |    FROM ev WHERE vec_id < 8)),
-      |c AS (
-      |  SELECT vec_id, e,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(e, x -> x * x)), (acc, v) -> acc + v)) AS ne
-      |  FROM ev WHERE vec_id >= 8),
-      |scored AS (
-      |  SELECT q.q_id, c.vec_id,
-      |    CAST(floor((list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, len(c.e) + 1), i -> c.e[i] * q.qu[i])),
-      |      (acc, v) -> acc + v) / c.ne) * 1e6) AS BIGINT) AS fp
-      |  FROM c CROSS JOIN q)
-      |SELECT q_id, vec_id, CAST(rn AS BIGINT) AS rn,
-      |  CAST(fp AS DOUBLE) / 1e6 AS sim6
-      |FROM (SELECT *, row_number() OVER (
-      |    PARTITION BY q_id ORDER BY fp DESC, vec_id) AS rn FROM scored)
-      |WHERE rn <= 3""".stripMargin
 
   /** Leakage-safe train/valid/test split: the split key is the doc's
     * near-dup COMPONENT representative (min id over the LSH connected
@@ -3221,9 +1198,7 @@ object LlmOps {
     * IEEE expression over identical inputs; no cross-row accumulation).
     */
   private val embQuantizeSql =
-    s"""WITH e0 AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-       |  FROM embeddings),
+    s"""WITH e0 AS ${Similarity.embDoubleSql()},
        |s AS (
        |  SELECT vec_id, e,
        |    list_max(list_transform(e, x -> abs(x))) AS scale
@@ -3265,7 +1240,7 @@ object LlmOps {
     */
   private def dedupSemantic(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bucket = planeBucket8(s, dir)
+    val bucket = Ann.planeBucket8(s, dir)
     val emb = Tables
       .embeddings(s, dir)
       .select(col("vec_id"), Similarity.embDouble.as("e"))
@@ -3300,20 +1275,8 @@ object LlmOps {
     * same ascending dist² fold, same (dist2, vec_id) keeper ranking.
     */
   private val dedupSemanticSql =
-    s"""WITH e0 AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |b AS (
-      |  SELECT vec_id, e,
-      |    list_reduce(list_prepend(0, list_transform(range(0, 8), p ->
-      |      CASE WHEN
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(0, len(e)), j ->
-      |            e[j + 1] * ${hyperplaneSignSql("p * 1024 + j")})),
-      |          (a, v) -> a + v) > CAST(0.0 AS DOUBLE)
-      |      THEN CAST(1 AS INTEGER) << p ELSE 0 END)),
-      |      (a, v) -> a + v) AS bucket
-      |  FROM e0),
+    s"""WITH e0 AS ${Similarity.embDoubleSql()},
+      |b AS (SELECT vec_id, e, ${Ann.planeBucket8Sql} AS bucket FROM e0),
       |ex0 AS (SELECT bucket, e, unnest(range(0, len(e))) AS j FROM b),
       |ex AS (SELECT bucket, j,
       |  CAST(floor(e[j + 1] * 1e6) AS BIGINT) AS fx FROM ex0),
@@ -3326,10 +1289,7 @@ object LlmOps {
       |  FROM cent),
       |d AS (
       |  SELECT b.bucket, ct.n, b.vec_id,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(0, len(b.e)),
-      |        j -> (b.e[j + 1] - ct.cv[j + 1]) * (b.e[j + 1] - ct.cv[j + 1]))),
-      |      (a, v) -> a + v) AS dist2
+      |    ${Similarity.l2SqSql("b.e", "ct.cv")} AS dist2
       |  FROM b JOIN ct ON b.bucket = ct.bucket)
       |SELECT CAST(bucket AS INTEGER) AS bucket, n AS n_vectors,
       |  vec_id AS keep_vec_id, dist2
@@ -3940,10 +1900,6 @@ object LlmOps {
       Q(decontaminateBloomVsExact _, decontaminateBloomVsExactSql),
     "decontaminate_semantic" ->
       Q(decontaminateSemantic _, decontaminateSemanticSql),
-    "sim_cosine_topk" -> Q(simCosineTopk _, simCosineTopkSql).tag(Headline, Basis),
-    "sim_ann_lsh_buckets" -> Q(simAnnLshBuckets _, simAnnLshBucketsSql),
-    "sim_ivf_topk" -> Q(simIvfTopk _, simIvfTopkSql).tag(Headline, Basis),
-    "sim_knn_join" -> Q(simKnnJoin _, simKnnJoinSql).tag(Headline, Basis),
     "emb_pca_power" -> Q(embPcaPower _, embPcaPowerSql).tag(Headline, Basis, Sweep, NoCodegen),
     "emb_pca_two" -> Q(embPcaTwo _, embPcaTwoSql).tag(NoCodegen),
     "cluster_kmeans_step" -> Q(clusterKmeansStep _, clusterKmeansStepSql),
@@ -3953,22 +1909,6 @@ object LlmOps {
       Q(sampleBalancedLabels _, sampleBalancedLabelsSql).tag(Headline, Basis, Sweep),
     "dedup_component_stats" -> Q(dedupComponentStats _, dedupComponentStatsSql),
     "dedup_source_matrix" -> Q(dedupSourceMatrix _, dedupSourceMatrixSql),
-    "sim_ivfpq_topk" -> Q(simIvfpqTopk _, simIvfpqTopkSql).tag(Headline, Basis),
-    "sim_pq_recall" -> Q(simPqRecall _, simPqRecallSql).tag(Headline),
-    "sim_pq_rerank_recall" -> Q(simPqRerankRecall _, simPqRerankRecallSql).tag(Headline),
-    "sim_sq8_topk" -> Q(simSq8Topk _, simSq8TopkSql).tag(Headline, Sweep),
-    "sim_sq8_recall" -> Q(simSq8Recall _, simSq8RecallSql).tag(Headline, Sweep),
-    "sim_ivfsq8_topk" -> Q(simIvfSq8Topk _, simIvfSq8TopkSql).tag(Headline, Sweep),
-    "sim_ivfsq8_recall" -> Q(simIvfSq8Recall _, simIvfSq8RecallSql).tag(Headline),
-    "sim_ivfsq8_rerank" -> Q(simIvfSq8Rerank _, simIvfSq8RerankSql).tag(Headline, Sweep),
-    "sim_binary_topk" -> Q(simBinaryTopk _, simBinaryTopkSql).tag(Headline, Sweep),
-    "sim_binary_recall" -> Q(simBinaryRecall _, simBinaryRecallSql).tag(Headline),
-    "sim_matryoshka_topk" -> Q(simMatryoshkaTopk _, simMatryoshkaTopkSql).tag(Headline, Sweep),
-    "sim_matryoshka_recall" -> Q(simMatryoshkaRecall _, simMatryoshkaRecallSql).tag(Headline),
-    "sim_ivf_recall" -> Q(simIvfRecall _, simIvfRecallSql).tag(Headline),
-    "sim_lsh_recall" -> Q(simLshRecall _, simLshRecallSql).tag(Headline, Basis),
-    "sim_mmr_rerank" -> Q(simMmrRerank _, simMmrRerankSql).tag(NoCodegen),
-    "sim_hard_negatives" -> Q(simHardNegatives _, simHardNegativesSql),
     "emb_label_quality" -> Q(embLabelQuality _, embLabelQualitySql),
     "emb_quantize" -> Q(embQuantize _, embQuantizeSql),
     "dedup_semantic" -> Q(dedupSemantic _, dedupSemanticSql),
@@ -3976,3 +1916,4 @@ object LlmOps {
     "multimodal_headers" -> Q(multimodalHeaders _, multimodalHeadersSql).tag(Headline, Basis)
   )
 }
+

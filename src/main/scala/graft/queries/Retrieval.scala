@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{ArrCanon, Q, Tables}
 import graft.Tag.{Basis, Headline, Sweep}
+import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -263,19 +264,31 @@ object Retrieval {
   private[graft] def bm25ScoresOver(documents: DataFrame): DataFrame =
     bm25ScoresOverTf(tfOverShared(documents))
 
-  private def bm25ScoresOverTf(tf: DataFrame): DataFrame = {
+  private def bm25ScoresOverTf(tf: DataFrame): DataFrame =
+    termScores(tf, tf, corpusQueryTerms(tf))
+      .groupBy(col("doc_id"))
+      .agg(
+        count(lit(1)).as("n_terms"),
+        sum(col("score_micro")).as("bm25_micro"))
+
+  /** The BM25 micro-score of every (doc, query term) row of `rows`, a
+    * slice of the corpus tf frame `tf`, matching `qterms` (tok, df) →
+    * (doc_id, score_micro): the cleared-fraction integer formula of
+    * [[textBm25Topk]], with doc lengths and corpus scalars from `tf`.
+    *
+    * Corpus scalars come from the doc-level rollup, not token-level tf:
+    * countDistinct(doc_id) over tf expanded every (doc, tok) row
+    * through a two-phase distinct; dl already holds one row per
+    * distinct doc_id with its exact token sum, so n_docs = count(dl)
+    * and sl = Σ dl — identical long values, doc-cardinality input.
+    */
+  private def termScores(tf: DataFrame, rows: DataFrame, qterms: DataFrame): DataFrame = {
     val d38 = DecimalType(38, 0)
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val qterms = corpusQueryTerms(tf)
-    // Corpus scalars from the doc-level rollup, not token-level tf
-    // (r21): countDistinct(doc_id) over tf expanded every (doc, tok)
-    // row through a two-phase distinct; dl already holds one row per
-    // distinct doc_id with its exact token sum, so n_docs = count(dl)
-    // and sl = Σ dl — identical long values, doc-cardinality input.
     val scalars = dl.agg(
       count(lit(1)).as("n_docs"),
       sum(col("dl")).as("sl"))
-    tf.join(broadcast(qterms), Seq("tok"))
+    rows.join(broadcast(qterms), Seq("tok"))
       .join(dl, Seq("doc_id"))
       .crossJoin(broadcast(scalars))
       .select(
@@ -288,40 +301,59 @@ object Retrieval {
             lit(9L).cast(d38) * col("dl") * col("n_docs"))).as("den"))
       .select(col("doc_id"),
         expr("num div den").cast(LongType).as("score_micro"))
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_terms"),
-        sum(col("score_micro")).as("bm25_micro"))
   }
+
+  /** DuckDB twin of the tf frame, its doc lengths and document
+    * frequencies: CTEs `tf(doc_id, tok, tf)`, `dl(doc_id, dl)` and
+    * `dfq(tok, df)`.
+    */
+  private val tfCtes =
+    s"""tf AS (
+       |  SELECT doc_id, tok, count(*) AS tf FROM (
+       |    $tokensSqlFrom) t
+       |  WHERE length(tok) > 0 GROUP BY doc_id, tok),
+       |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id),
+       |dfq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok)""".stripMargin
+
+  /** DuckDB twin of [[termScores]]' corpus scalars: CTE `scalars(n_docs,
+    * sl)`.
+    */
+  private val scalarsCte =
+    """scalars AS (
+      |  SELECT count(DISTINCT doc_id) AS n_docs, sum(tf) AS sl FROM tf)""".stripMargin
+
+  /** DuckDB twin of [[termScores]]' micro-score, a HUGEINT expression
+    * over one `tf ⋈ qterms ⋈ dl ⨯ scalars` row ([[termRowsSql]]).
+    */
+  private val scoreMicroSql =
+    """(CAST(22000000 AS HUGEINT) * tf * sl * n_docs) //
+      |      (CAST(df AS HUGEINT) *
+      |        (CAST(10 AS HUGEINT) * tf * sl + CAST(3 AS HUGEINT) * sl +
+      |         CAST(9 AS HUGEINT) * dl * n_docs))""".stripMargin
+
+  /** The rows [[scoreMicroSql]] scores. */
+  private val termRowsSql =
+    """FROM tf JOIN qterms USING (tok) JOIN dl ON tf.doc_id = dl.doc_id
+      |  CROSS JOIN scalars""".stripMargin
 
   /** The BM25 oracle pipeline as a CTE fragment ending in
     * `docscore(doc_id, n_terms, bm25_micro)` — shared by the top-10
     * ranking and the snippet stage built on it.
     */
   private val bm25Ctes =
-    s"""tf AS (
-       |  SELECT doc_id, tok, count(*) AS tf FROM (
-       |    $tokensSqlFrom) t
-       |  WHERE length(tok) > 0 GROUP BY doc_id, tok),
-       |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id),
-       |dfq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok),
+    s"""$tfCtes,
        |qterms AS (
        |  SELECT tok, df FROM (
        |    SELECT tok, df,
        |      row_number() OVER (ORDER BY df DESC, tok) AS qrn
        |    FROM dfq WHERE length(tok) >= 4) r
        |  WHERE qrn BETWEEN 10 AND 14),
-       |scalars AS (
-       |  SELECT count(DISTINCT doc_id) AS n_docs, sum(tf) AS sl FROM tf),
+       |$scalarsCte,
        |scored AS (
        |  SELECT tf.doc_id,
-       |    CAST((CAST(22000000 AS HUGEINT) * tf * sl * n_docs) //
-       |      (CAST(df AS HUGEINT) *
-       |        (CAST(10 AS HUGEINT) * tf * sl + CAST(3 AS HUGEINT) * sl +
-       |         CAST(9 AS HUGEINT) * dl * n_docs)) AS BIGINT)
+       |    CAST($scoreMicroSql AS BIGINT)
        |      AS score_micro
-       |  FROM tf JOIN qterms USING (tok) JOIN dl ON tf.doc_id = dl.doc_id
-       |  CROSS JOIN scalars),
+       |  $termRowsSql),
        |docscore AS (
        |  SELECT doc_id, count(*) AS n_terms,
        |    CAST(sum(score_micro) AS BIGINT) AS bm25_micro
@@ -440,11 +472,9 @@ object Retrieval {
     * agreement audit.
     */
   private def doc0Bm25Scores(documents: DataFrame): DataFrame = {
-    val d38 = DecimalType(38, 0)
     // one tf materialization for the four consumers below (q0, dfq, dl,
     // the scoring join) — r22, see tfOverShared
     val tf = tfOverShared(documents)
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
     // Document frequencies only for doc 0's candidate terms (r21): dfq
     // fed nothing but the qterms join, so count the full-corpus df for
     // the one query document's ≥4-char tokens instead of the whole
@@ -462,24 +492,7 @@ object Retrieval {
       .orderBy(col("df").asc, col("tok"))
       .limit(16)
       .select(col("tok"), col("df"))
-    // scalars from the doc-level rollup — see bm25ScoresOver (r21).
-    val scalars = dl.agg(
-      count(lit(1)).as("n_docs"),
-      sum(col("dl")).as("sl"))
-    tf.filter(col("doc_id") =!= 0)
-      .join(broadcast(qterms), Seq("tok"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(scalars))
-      .select(
-        col("doc_id"),
-        (lit(22000000L).cast(d38) * col("tf") * col("sl") * col("n_docs"))
-          .as("num"),
-        (col("df").cast(d38) *
-          (lit(10L).cast(d38) * col("tf") * col("sl") +
-            lit(3L).cast(d38) * col("sl") +
-            lit(9L).cast(d38) * col("dl") * col("n_docs"))).as("den"))
-      .select(col("doc_id"),
-        expr("num div den").cast(LongType).as("score_micro"))
+    termScores(tf, tf.filter(col("doc_id") =!= 0), qterms)
       .groupBy(col("doc_id"))
       .agg(sum(col("score_micro")).as("bm25_micro"))
   }
@@ -488,12 +501,7 @@ object Retrieval {
     * `lex(doc_id, bm25_micro)` — shared by the RRF and nDCG twins.
     */
   private val doc0LexCtes =
-    s"""tf AS (
-       |  SELECT doc_id, tok, count(*) AS tf FROM (
-       |    $tokensSqlFrom) t
-       |  WHERE length(tok) > 0 GROUP BY doc_id, tok),
-       |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id),
-       |dfq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok),
+    s"""$tfCtes,
        |qterms AS (
        |  SELECT tok, df FROM (
        |    SELECT q.tok, d.df,
@@ -502,17 +510,12 @@ object Retrieval {
        |          WHERE doc_id = 0 AND length(tok) >= 4) q
        |    JOIN dfq d USING (tok) WHERE d.df >= 5) r
        |  WHERE rn <= 16),
-       |scalars AS (
-       |  SELECT count(DISTINCT doc_id) AS n_docs, sum(tf) AS sl FROM tf),
+       |$scalarsCte,
        |lex AS (
        |  SELECT tf.doc_id,
-       |    CAST(sum(CAST((CAST(22000000 AS HUGEINT) * tf * sl * n_docs) //
-       |      (CAST(df AS HUGEINT) *
-       |        (CAST(10 AS HUGEINT) * tf * sl + CAST(3 AS HUGEINT) * sl +
-       |         CAST(9 AS HUGEINT) * dl * n_docs)) AS BIGINT)) AS BIGINT)
+       |    CAST(sum(CAST($scoreMicroSql AS BIGINT)) AS BIGINT)
        |      AS bm25_micro
-       |  FROM tf JOIN qterms USING (tok) JOIN dl ON tf.doc_id = dl.doc_id
-       |  CROSS JOIN scalars
+       |  $termRowsSql
        |  WHERE tf.doc_id <> 0 GROUP BY tf.doc_id)""".stripMargin
 
   private def retrievalRrfFusion(s: SparkSession, dir: String): DataFrame =
@@ -541,7 +544,7 @@ object Retrieval {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("lex_rank"))
     val emb = Tables.embeddings(s, dir).select(col("vec_id"),
-      graft.operators.Similarity.embDouble.as("e"))
+      Similarity.embDouble.as("e"))
     // query norm hoisted into the 1-row broadcast (r21): sqrt(qe·qe) is
     // constant per query but was re-evaluated for every corpus row; the
     // product sqrt(e·e) * qn multiplies the same two doubles in the
@@ -599,20 +602,11 @@ object Retrieval {
        |  SELECT doc_id,
        |    row_number() OVER (ORDER BY bm25_micro DESC, doc_id) AS lex_rank
        |  FROM lex QUALIFY lex_rank <= 50),
-       |ev AS (SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-       |  FROM embeddings),
+       |ev AS ${Similarity.embDoubleSql()},
        |qv AS (SELECT e AS qe FROM ev WHERE vec_id = 0),
        |dense AS (
        |  SELECT vec_id AS doc_id,
-       |    CAST(floor((list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |        list_transform(range(1, len(e) + 1), i -> e[i] * qe[i])),
-       |        (a, v) -> a + v) /
-       |      (sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |          list_transform(e, x -> x * x)), (a, v) -> a + v)) *
-       |       sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-       |          list_transform(qe, x -> x * x)), (a, v) -> a + v)))) * 1e6)
-       |      AS BIGINT) AS fp
+       |    CAST(floor(${Similarity.cosineSql("e", "qe")} * 1e6) AS BIGINT) AS fp
        |  FROM ev, qv WHERE vec_id <> 0),
        |denser AS (
        |  SELECT doc_id,

@@ -691,7 +691,7 @@ object StreamingGate {
         .coalesce(1).write.mode("overwrite").parquet(t)
     }
     // the batch operator's centroids: one build per JVM serves both twins
-    val cRows = LlmOps.ivfCentroids(s, dir)
+    val cRows = Ann.ivfCentroids(s, dir)
     val stream = s.readStream.schema(StructType(Seq(
       StructField("vec_id", LongType), StructField("ts", TimestampType),
       StructField("embedding", ArrayType(DoubleType))))).parquet(d)
@@ -704,54 +704,19 @@ object StreamingGate {
       memory("gate_semdedup", "append", singleBatch = true))
   }
 
-  /** DuckDB twin: the `dedup_semantic_keep` centroid/assignment CTEs
-    * verbatim (same Lehmer pick, unit-normalization, ascending folds),
+  /** DuckDB twin: the IVF assignment ([[Similarity.ivfAssignCtes]]),
     * with the pair stage restricted to EARLIER partners (b.vec_id <
     * a.vec_id = arrival order under the synthetic event time) — the
     * first-seen-wins verdict, no dominance ranking.
     */
   private val streamSemanticDedupSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 8),
-      |cents AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cell_id,
-      |    e AS centroid
-      |  FROM picked),
-      |unitc AS (
-      |  SELECT cell_id, centroid,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(centroid, x -> x * x)), (acc, v) -> acc + v)) AS n
-      |  FROM cents),
-      |unit AS (
-      |  SELECT cell_id,
-      |    list_transform(centroid,
-      |      x -> CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE) ELSE x / n END) AS cu
-      |  FROM unitc),
-      |cl AS (SELECT list(cu ORDER BY cell_id) AS cus FROM unit),
-      |assigned AS (
-      |  SELECT vec_id, e, list_position(sims, list_max(sims)) - 1 AS cell_id
-      |  FROM (
-      |    SELECT vec_id, e,
-      |      list_transform(cus, cu ->
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> e[i] * cu[i])),
-      |          (acc, v) -> acc + v)) AS sims
-      |    FROM ev CROSS JOIN cl)),
-      |m AS (
-      |  SELECT vec_id, cell_id, e,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(e, x -> x * x)), (acc, v) -> acc + v) AS n2
-      |  FROM assigned),
+    s"""WITH ev AS ${Similarity.embDoubleSql()},
+      |${Similarity.ivfAssignCtes(8)},
+      |m AS (SELECT vec_id, cell_id, e, ${Similarity.sqNormSql("e")} AS n2 FROM assigned),
       |near AS (
       |  SELECT a.vec_id AS id_a, count(*) AS n_near
       |  FROM m a JOIN m b ON a.cell_id = b.cell_id AND b.vec_id < a.vec_id
-      |  WHERE list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, len(a.e) + 1), i -> a.e[i] * b.e[i])),
-      |      (acc, v) -> acc + v) / (sqrt(a.n2) * sqrt(b.n2)) >= 0.35
+      |  WHERE ${Similarity.dotSql("a.e", "b.e")} / (sqrt(a.n2) * sqrt(b.n2)) >= 0.35
       |  GROUP BY a.vec_id)
       |SELECT m.vec_id, CAST(m.cell_id AS INTEGER) AS cell_id,
       |  coalesce(near.n_near, 0) = 0 AS kept,
@@ -968,14 +933,14 @@ object StreamingGate {
   private def streamPqEncode(s: SparkSession, dir: String): StreamPlan =
     StreamPlan(
       Similarity.encodePq(stagedEmbeddings(s, dir),
-        LlmOps.pqCodebooks(s, dir), LlmOps.pqDsub(s, dir)).drop("e"),
+        Ann.pqCodebooks(s, dir), Ann.pqDsub(s, dir)).drop("e"),
       memory("gate_pq", "append"))
 
   /** The embeddings (vec_id, e) staged as a 4-file replay dir, shared by
     * the three vector-encode gate rows.
     */
   private def stagedEmbeddings(s: SparkSession, dir: String): DataFrame = {
-    val emb = LlmOps.embVectors(s, dir)
+    val emb = Ann.embVectors(s, dir)
     val d = staged("pq", dir) { t =>
       emb.repartition(4).write.mode("overwrite").parquet(t)
     }
@@ -993,11 +958,11 @@ object StreamingGate {
     * oracle recomputes assignment + quantizer from the raw table.
     */
   private def streamIvfSq8Encode(s: SparkSession, dir: String): StreamPlan = {
-    val (mn, mx) = LlmOps.sq8Bounds(s, dir)
+    val (mn, mx) = Ann.sq8Bounds(s, dir)
     StreamPlan(
       Similarity.encodeIvfSq8(stagedEmbeddings(s, dir)
           .select(col("vec_id"), col("e").as("embedding")),
-          LlmOps.ivfCentroids(s, dir), mn, mx)
+          Ann.ivfCentroids(s, dir), mn, mx)
         .select(col("vec_id"), col("cell_id"),
           graft.ArrCanon.joinedInts(col("codes")).as("codes_str")),
       memory("gate_ivfsq8enc", "append"))
@@ -1013,92 +978,40 @@ object StreamingGate {
     * thresholds → pack from the raw table with identical arithmetic.
     */
   private def streamBinaryEncode(s: SparkSession, dir: String): StreamPlan = {
-    val (mn, mx) = LlmOps.sq8Bounds(s, dir)
+    val (mn, mx) = Ann.sq8Bounds(s, dir)
     StreamPlan(
       Similarity.encodeBinary(stagedEmbeddings(s, dir),
         Similarity.binaryThresholds(mn, mx)),
       memory("gate_bqenc", "append"))
   }
 
-  /** DuckDB twin: the binary bounds/threshold/pack CTEs (shared with
-    * `sim_binary_topk`) emitted verbatim.
+  /** DuckDB twin: the bounds and binary pack CTEs
+    * ([[Similarity.binaryCodesCtes]]).
     */
   private val streamBinaryEncodeSql =
-    LlmOps.bqCodesCte + "\nSELECT vec_id, lo, hi FROM codes"
+    s"""WITH ev AS ${Similarity.embDoubleSql()},
+      |${Similarity.boundsCtes},
+      |${Similarity.binaryCodesCtes}
+      |SELECT vec_id, lo, hi FROM codes""".stripMargin
 
-  /** DuckDB twin: the `sim_ivfsq8_topk` assignment CTEs + the SQ8
-    * quantizer emitted as the joined INT list.
+  /** DuckDB twin: the IVF assignment and the SQ8 quantizer
+    * ([[Similarity.sq8CodesSql]]) emitted as the joined INT list.
     */
   private val streamIvfSq8EncodeSql =
-    s"""WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 8),
-      |cents AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cell_id,
-      |    e AS centroid
-      |  FROM picked),
-      |unitc AS (
-      |  SELECT cell_id, centroid,
-      |    sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(centroid, x -> x * x)), (acc, v) -> acc + v)) AS n
-      |  FROM cents),
-      |unit AS (
-      |  SELECT cell_id,
-      |    list_transform(centroid,
-      |      x -> CASE WHEN n = 0 THEN CAST(0.0 AS DOUBLE) ELSE x / n END) AS cu
-      |  FROM unitc),
-      |cl AS (SELECT list(cu ORDER BY cell_id) AS cus FROM unit),
-      |assigned AS (
-      |  SELECT vec_id, e, list_position(sims, list_max(sims)) - 1 AS cell_id
-      |  FROM (
-      |    SELECT vec_id, e,
-      |      list_transform(cus, cu ->
-      |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |          list_transform(range(1, len(e) + 1), i -> e[i] * cu[i])),
-      |          (acc, v) -> acc + v)) AS sims
-      |    FROM ev CROSS JOIN cl)),
-      |d AS (SELECT CAST(min(len(e)) AS BIGINT) AS nd FROM ev),
-      |bounds AS (
-      |  SELECT ix.i AS dim, min(e[ix.i]) AS mn, max(e[ix.i]) AS mx
-      |  FROM ev, (SELECT unnest(range(1, (SELECT nd + 1 FROM d))) AS i) ix
-      |  GROUP BY ix.i),
-      |mnl AS (SELECT list(mn ORDER BY dim) AS mnl,
-      |               list(mx - mn ORDER BY dim) AS scl FROM bounds),
+    s"""WITH ev AS ${Similarity.embDoubleSql()},
+      |${Similarity.ivfAssignCtes(8)},
+      |${Similarity.boundsCtes},
+      |${Similarity.sq8GridCte},
       |codes AS (
-      |  SELECT vec_id, cell_id,
-      |    list_transform(range(1, len(e) + 1), i ->
-      |      CASE WHEN scl[i] = 0 THEN -128
-      |      ELSE CAST(floor((e[i] - mnl[i]) / scl[i] * 255 + 0.5) - 128
-      |        AS INTEGER) END) AS c
+      |  SELECT vec_id, cell_id, ${Similarity.sq8CodesSql("e")} AS c
       |  FROM assigned, mnl)
       |SELECT vec_id, CAST(cell_id AS INTEGER) AS cell_id,
       |  ${graft.ArrCanon.joinedSql("c")} AS codes_str
       |FROM codes""".stripMargin
 
   private val streamPqEncodeSql =
-    """WITH ev AS (
-      |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-      |  FROM embeddings),
-      |picked AS (
-      |  SELECT vec_id, e FROM ev
-      |  ORDER BY (vec_id * 48271) % 2147483647, vec_id LIMIT 16),
-      |cw AS (
-      |  SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS k, e FROM picked),
-      |ms AS (SELECT unnest(range(0, 8)) AS m),
-      |dists AS (
-      |  SELECT v.vec_id, ms.m, c.k,
-      |    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      |      list_transform(range(1, 9), j ->
-      |        (v.e[ms.m * 8 + j] - c.e[ms.m * 8 + j])
-      |          * (v.e[ms.m * 8 + j] - c.e[ms.m * 8 + j]))),
-      |      (acc, x) -> acc + x) AS d
-      |  FROM ev v CROSS JOIN cw c CROSS JOIN ms),
-      |codes AS (
-      |  SELECT vec_id, m, k FROM dists
-      |  QUALIFY row_number() OVER (PARTITION BY vec_id, m ORDER BY d, k) = 1)
+    s"""WITH ev AS ${Similarity.embDoubleSql()},
+      |${Similarity.pqCodesCtes(Ann.PqK)}
       |SELECT vec_id,
       |  CAST(max(CASE WHEN m = 0 THEN k END) AS INTEGER) AS c0,
       |  CAST(max(CASE WHEN m = 1 THEN k END) AS INTEGER) AS c1,

@@ -26,8 +26,8 @@ class DriverDisciplineSpec extends AnyFunSuite {
     "functions/Wordpiece.scala" -> 1, // vocab page (capped broadcast)
     "operators/GlobalOrder.scala" -> 5, // offsets maps (O(P+G), probed r16; r21 adds groupedRankFamily's partials — same #partitions × #groups bound, executor-capped like the others; r22 adds groupedOrderStats' partials (same bound) and its crossing results (≤ #groups × #targets rows))
     "operators/Similarity.scala" -> 5, // centroids/codebooks (k x dim) + sq8Bounds (d min/max pairs)
+    "queries/Ann.scala" -> 2, // the ANN query sample (8 rows x d: recall rows, knn join, hard negatives, vec_id 0) + the MMR rerank page (50 candidates)
     "queries/Conversions.scala" -> 1, // bloom probe ids (4)
-    "queries/LlmOps.scala" -> 2, // the ANN query sample (8 rows x d: recall rows, knn join, hard negatives, vec_id 0) + the MMR rerank page (50 candidates)
     "streaming/Streams.scala" -> 1 // replay staging file list (bounded)
   )
 

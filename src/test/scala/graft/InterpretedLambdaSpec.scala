@@ -17,11 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * code in Spark, so each one evaluates its lambda per element through
   * the interpreter. The ANN codecs and fan-outs are native kernels
   * (`graft.functions.AnnCodecs`); this spec keeps them so. It runs every
-  * `sim_*` row and the three streaming encode rows twice at sf0.01,
-  * cold (building the persisted indexes) and warm, records every plan
-  * the session executes (queries, index writes, streaming micro-batches)
-  * and walks each one, through command results, adaptive plans and
-  * query stages, for those four expressions.
+  * row of `queries.Ann` (the 20 `sim_*` rows) and the three streaming
+  * encode rows twice at sf0.01, cold (building the persisted indexes)
+  * and warm, records every plan the session executes (queries, index
+  * writes, streaming micro-batches) and walks each one, through command
+  * results, adaptive plans and query stages, for those four expressions.
   */
 class InterpretedLambdaSpec extends AnyFunSuite {
   import TestSpark._
@@ -29,7 +29,7 @@ class InterpretedLambdaSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.01"
 
   private val rows: Seq[String] =
-    SparkEntry.queries.keys.filter(_.startsWith("sim_")).toSeq.sorted ++
+    queries.Ann.queries.keys.toSeq.sorted ++
       Seq("stream_pq_encode", "stream_ivfsq8_encode", "stream_binary_encode")
 
   /** Every physical node of `plan`, including the plans a command result,

@@ -7,10 +7,13 @@ Parquet bytes differ between any two JVM runs of the same query (the
 column-chunk encodings list is written in set order), so a byte diff
 reports false changes. This compares what a query returned instead: its
 decoded rows in row order, and the Spark schema footer
-(`org.apache.spark.sql.parquet.row.metadata`) of its part files. Every
-query that differs, or that is in one dir only, is listed; the exit code
-is 1 if there is any.
+(`org.apache.spark.sql.parquet.row.metadata`) of its part files. It also
+compares the DuckDB oracle statements of the two dirs' `oracle_sql.json`
+text for text. Every query whose result differs, or that is in one dir
+only, is listed, and so is every query whose oracle text differs or
+exists on one side only; the exit code is 1 if there is any.
 """
+import json
 import math
 import sys
 from pathlib import Path
@@ -66,10 +69,27 @@ def diff(a, b):
     return None
 
 
+def oracles(root):
+    """Query name -> oracle SQL text of a Verify dir."""
+    return json.loads((root / "oracle_sql.json").read_text())
+
+
+def oracle_diff(oa, ob):
+    """(name, why) for every query whose oracle text differs."""
+    out = []
+    for name in sorted(oa.keys() | ob.keys()):
+        if name not in oa or name not in ob:
+            out.append((name, f"oracle only in {'A' if name in oa else 'B'}"))
+        elif oa[name] != ob[name]:
+            out.append((name, "oracle text"))
+    return out
+
+
 def main(argv):
     if len(argv) != 3:
         sys.exit(__doc__)
-    qa, qb = queries(Path(argv[1])), queries(Path(argv[2]))
+    a, b = Path(argv[1]), Path(argv[2])
+    qa, qb = queries(a), queries(b)
     differ = []
     for name in sorted(qa.keys() | qb.keys()):
         if name not in qa or name not in qb:
@@ -82,7 +102,13 @@ def main(argv):
         print(f"DIFF {name}: {why}")
     same = len(qa.keys() | qb.keys()) - len(differ)
     print(f"{same} identical, {len(differ)} differ")
-    return 1 if differ else 0
+    oa, ob = oracles(a), oracles(b)
+    odiffer = oracle_diff(oa, ob)
+    for name, why in odiffer:
+        print(f"ORACLE {name}: {why}")
+    print(f"{len(oa.keys() | ob.keys()) - len(odiffer)} oracles identical, "
+          f"{len(odiffer)} differ")
+    return 1 if differ or odiffer else 0
 
 
 if __name__ == "__main__":
