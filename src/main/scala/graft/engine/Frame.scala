@@ -1,7 +1,6 @@
 package graft.engine
 
-import graft.functions.GraftFunctions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -10,7 +9,7 @@ import org.apache.spark.sql.types._
   * `engine/Frame.scala`) — the migration surface for a reference user:
   * familiar verbs (`merge`, `query`, `assign`, `dropDuplicates` with
   * keep, `fillna`/`ffill`, `rolling`, `resample`, `valueCounts`,
-  * `nlargest`, `explode`, `melt`, `pivot`, `getDummies`, `cut`) that
+  * `nlargest`, `melt`, `pivot`, `getDummies`, `cut`) that
   * each lower to the idiomatic Catalyst plan (nothing eager, no driver
   * state; every method returns a lazy Frame).
   *
@@ -27,8 +26,6 @@ final case class Frame(df: DataFrame) {
   def filter(c: Column): Frame = Frame(df.filter(c))
   def assign(name: String, c: Column): Frame = Frame(df.withColumn(name, c))
   def drop(cols: String*): Frame = Frame(df.drop(cols: _*))
-  def rename(from: String, to: String): Frame =
-    Frame(df.withColumnRenamed(from, to))
   def head(n: Int): Frame = Frame(df.limit(n))
 
   // --- joins ----------------------------------------------------------
@@ -95,9 +92,6 @@ final case class Frame(df: DataFrame) {
     })
   }
 
-  def dropna(minNonNulls: Int, cols: Seq[String]): Frame =
-    Frame(df.na.drop(minNonNulls, cols))
-
   /** group-wise forward fill (groupby.hpp:373 replace_nulls FORWARD). */
   def ffill(valueCol: String, partitionBy: Seq[String], orderBy: Seq[Column]): Frame = {
     val w = Window.partitionBy(partitionBy.map(col): _*).orderBy(orderBy: _*)
@@ -115,13 +109,7 @@ final case class Frame(df: DataFrame) {
   def nlargest(n: Int, c: String, tiebreak: Seq[String] = Nil): Frame =
     Frame(df.orderBy((col(c).desc +: tiebreak.map(col(_).asc)): _*).limit(n))
 
-  def nsmallest(n: Int, c: String, tiebreak: Seq[String] = Nil): Frame =
-    Frame(df.orderBy((col(c).asc +: tiebreak.map(col(_).asc)): _*).limit(n))
-
   // --- reshape --------------------------------------------------------
-  def explodeCol(c: String, out: String): Frame =
-    Frame(df.withColumn(out, explode(col(c))).drop(c))
-
   def melt(ids: Seq[String], values: Seq[String]): Frame =
     Frame(df.unpivot(ids.map(col).toArray, values.map(col).toArray,
       "variable", "value"))
@@ -184,7 +172,7 @@ final case class Frame(df: DataFrame) {
     GroupedFrame(bucketed, Seq("__bucket"))
   }
 
-  // --- elementwise / reshape verbs (round-3 widening) ----------------
+  // --- elementwise / reshape verbs -----------------------------------
   /** pandas sort_values with na_position (cudf sorting null_order). */
   def sortValues(cols: Seq[String], ascending: Boolean = true,
       naPosition: String = "last"): Frame = {
@@ -298,12 +286,6 @@ final case class Frame(df: DataFrame) {
     */
   def zorderBy(cols: Seq[String], numFiles: Int): Frame =
     Frame(graft.operators.ZOrder.clusterByZ(df, cols, numFiles))
-
-  // --- text namespace (nvtext ops) -----------------------------------
-  def strSwapcase(c: String, out: String): Frame =
-    Frame(df.withColumn(out, GraftFunctions.swapcase(col(c))))
-  def tokenize(c: String, out: String): Frame =
-    Frame(df.withColumn(out, split(col(c), "\\s+")))
 }
 
 final case class GroupedFrame(df: DataFrame, keys: Seq[String]) {
@@ -322,14 +304,4 @@ final case class GroupedFrame(df: DataFrame, keys: Seq[String]) {
   def transformAgg(aggExpr: Column, out: String): Frame =
     Frame(df.withColumn(out,
       aggExpr.over(Window.partitionBy(keys.map(col): _*))))
-}
-
-object Frame {
-  def readParquet(spark: SparkSession, path: String): Frame =
-    Frame(spark.read.parquet(path))
-  def readCsv(spark: SparkSession, path: String, header: Boolean = true): Frame =
-    Frame(spark.read.option("header", header.toString)
-      .option("inferSchema", "true").csv(path))
-  def readJson(spark: SparkSession, path: String): Frame =
-    Frame(spark.read.json(path))
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -71,4 +72,25 @@ object PolyHash31 {
 
   def polyhash31(a: Column): Column =
     ExprUtil.col(PolyHash31(ExprUtil.expr(a)))
+
+  private val step = s"(h, c) -> (h * 31 + c) % $M"
+
+  /** DuckDB twin of one `pp` element: the code point fold of the SQL
+    * string expression `t`. Pure BIGINT arithmetic, so the value is
+    * [[hashAll]]'s bit for bit.
+    */
+  def foldSql(t: String): String =
+    s"""list_reduce(
+       |        list_prepend(CAST(0 AS BIGINT),
+       |          list_transform(range(1, length($t) + 1),
+       |                         i -> CAST(ascii(substring($t, i, 1)) AS BIGINT))),
+       |        $step)""".stripMargin
+
+  /** The same fold as a Spark higher-order `aggregate` over the string
+    * column named `t`: interpreted, where `polyhash31(array(t))` gives
+    * the same `pp` in generated code.
+    */
+  def foldLambda(t: String): Column = expr(
+    s"aggregate(transform(sequence(1, length($t)), i -> ascii(substring($t, i, 1))), " +
+      s"CAST(0 AS BIGINT), $step)")
 }

@@ -65,7 +65,7 @@ object Dedup {
     * of `text`, with the split run once in its own projection.
     */
   def withShingles(df: DataFrame, keep: Seq[String] = Seq("doc_id")): DataFrame =
-    df.select(keep.map(col) :+ split(col("text"), " ").as("toks"): _*)
+    df.select(keep.map(col) :+ Text.words(col("text")).as("toks"): _*)
       .select(keep.map(col) :+ shinglesOfToks(col("toks")).as("tk"): _*)
 
   /** [[withShingles]] plus the portable prehash of every shingle:
@@ -88,19 +88,15 @@ object Dedup {
     s"""grams AS (
       |  SELECT doc_id,
       |    list_distinct(list_transform(
-      |      range(1, greatest(len(string_split(text, ' ')) - 2, 0) + 1),
-      |      i -> concat(string_split(text, ' ')[i], '_',
-      |                  string_split(text, ' ')[i + 1], '_',
-      |                  string_split(text, ' ')[i + 2]))) AS tk
+      |      range(1, greatest(len(${Text.wordsSql}) - 2, 0) + 1),
+      |      i -> concat(${Text.wordsSql}[i], '_',
+      |                  ${Text.wordsSql}[i + 1], '_',
+      |                  ${Text.wordsSql}[i + 2]))) AS tk
       |  FROM $src),
       |prehashed AS (
       |  SELECT doc_id, tk,
       |    list_transform(tk, g ->
-      |      list_reduce(
-      |        list_prepend(CAST(0 AS BIGINT),
-      |          list_transform(range(1, length(g) + 1),
-      |                         i -> CAST(ascii(substring(g, i, 1)) AS BIGINT))),
-      |        (h, c) -> (h * 31 + c) % 1000000007)) AS pp,
+      |      ${PolyHash31.foldSql("g")}) AS pp,
       |    list_transform(tk, g ->
       |      list_reduce(
       |        list_prepend(CAST(1 AS BIGINT), range(1, length(g) + 1)),

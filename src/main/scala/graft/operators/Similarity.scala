@@ -64,18 +64,31 @@ object Similarity {
   // DuckDB twins of the folds. Each sums its terms from 0.0 in list
   // order, one rounding per multiply and one per add, which is the
   // DotF64/L2SqF64 loop, so every score is the same double in both
-  // engines. `a` and `b` are SQL list expressions.
+  // engines. `a` and `b` are SQL list expressions. The BIGINT folds of
+  // the fixed-point power loop sum the same terms from 0.
+
+  private def sumFromSql(zero: String, terms: String): String =
+    s"list_reduce(list_prepend($zero, $terms), (acc, y) -> acc + y)"
+
+  private def dotTermsSql(a: String, b: String): String =
+    s"list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i])"
+
+  private def sqTermsSql(a: String): String = s"list_transform($a, x -> x * x)"
 
   /** The ascending double fold of the list `terms`. */
-  def foldSql(terms: String): String =
-    s"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), $terms), (acc, y) -> acc + y)"
+  def foldSql(terms: String): String = sumFromSql("CAST(0.0 AS DOUBLE)", terms)
 
   /** dot(a, b). */
-  def dotSql(a: String, b: String): String =
-    foldSql(s"list_transform(range(1, len($a) + 1), i -> $a[i] * $b[i])")
+  def dotSql(a: String, b: String): String = foldSql(dotTermsSql(a, b))
 
   /** ‖a‖², the squared norm fold. */
-  def sqNormSql(a: String): String = foldSql(s"list_transform($a, x -> x * x)")
+  def sqNormSql(a: String): String = foldSql(sqTermsSql(a))
+
+  /** dot(a, b) over BIGINT lists: the DotI64 loop. */
+  private def longDotSql(a: String, b: String): String = sumFromSql("CAST(0 AS BIGINT)", dotTermsSql(a, b))
+
+  /** ‖a‖² over a BIGINT list. */
+  private def longSqNormSql(a: String): String = sumFromSql("CAST(0 AS BIGINT)", sqTermsSql(a))
 
   /** ‖a‖. */
   def normSql(a: String): String = s"sqrt(${sqNormSql(a)})"
@@ -1093,7 +1106,7 @@ object Similarity {
     // overhead even though execution was already linear). Values are
     // unchanged: checkpointing only truncates lineage.
     val xqc = graft.Materialize.step(xq, "Similarity.pcaInput")
-    // r21 iteration shape. Two changes, values bit-identical throughout:
+    // Two choices of the iteration shape, values bit-identical throughout:
     //   1. the projection `ds` is the fused codegen dot (DotI64 — the
     //      same long multiply-add the interpreted zip_with fold
     //      performed) and the mat-vec step u = Σ xq·ds is ONE
@@ -1182,6 +1195,80 @@ object Similarity {
       powerIterate(x2, d2, iters).withColumnRenamed("v_micro", "v2_micro"),
       "dim")
   }
+
+  // DuckDB twins of the fixed-point power loop. Every op is BIGINT
+  // (floor, //, abs, max, sum), so each value is the Spark loop's long.
+  // DuckDB's recursive CTEs forbid aggregates in the recursive arm, so
+  // the loop is unrolled into one CTE trio per iteration. Each CTE is
+  // MATERIALIZED: the next iteration and the deflation read its rows,
+  // not a re-expansion of its plan.
+
+  /** Twin of [[quantized]] plus the loop's dimensions: `dd(d)`, `xq(xq)`
+    * and `dims(dim)`, 0 until d.
+    */
+  private val pcaInputCtes =
+    """dd AS MATERIALIZED (SELECT min(len(embedding)) AS d FROM embeddings),
+      |xq AS MATERIALIZED (
+      |  SELECT list_transform(embedding,
+      |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS xq
+      |  FROM embeddings),
+      |dims AS MATERIALIZED (SELECT unnest(range(0, (SELECT d FROM dd))) AS dim)""".stripMargin
+
+  /** v = u div greatest(max|u| div 10⁶, 1), over a `u` row and its `m`. */
+  private val renormSql = "u // greatest(m // 1000000, 1)"
+
+  /** Twin of [[powerIterate]] over the `xq` lists of `src`, every CTE
+    * name prefixed `p`: the start vector `v0`, then per iteration i the
+    * projections `di`, the mat-vec `ui(dim, u)`, its L∞ norm `mi` and
+    * the next direction `vi`.
+    */
+  private def powerIterateCtes(src: String, p: String, iters: Int): String = {
+    val step = (i: Int) =>
+      s"""${p}d$i AS MATERIALIZED (
+         |  SELECT xq, ${longDotSql("xq", "v")} // 10000000 AS ds
+         |  FROM $src, ${p}v${i - 1}),
+         |${p}u$i AS MATERIALIZED (
+         |  SELECT dim, sum(xq[dim + 1] * ds) AS u FROM ${p}d$i, dims GROUP BY dim),
+         |${p}m$i AS MATERIALIZED (SELECT greatest(max(abs(u)), 1) AS m FROM ${p}u$i),
+         |${p}v$i AS MATERIALIZED (
+         |  SELECT list(($renormSql) ORDER BY dim) AS v
+         |  FROM ${p}u$i, ${p}m$i GROUP BY m)""".stripMargin
+    s"""${p}v0 AS MATERIALIZED (
+       |  SELECT list_transform(range(1, d + 1), i -> CAST(1000000 AS BIGINT)) AS v
+       |  FROM dd),
+       |${(1 to iters).map(step).mkString(",\n")}""".stripMargin
+  }
+
+  /** The last direction of the loop prefixed `p`, as (dim, `as`). */
+  private def directionSql(p: String, iters: Int, as: String): String =
+    s"SELECT dim, CAST($renormSql AS BIGINT) AS $as FROM ${p}u$iters, ${p}m$iters"
+
+  /** DuckDB twin of [[pcaPowerTopComponent]]: (dim, v_micro). */
+  def pcaPowerTopComponentSql(iters: Int): String =
+    s"""WITH $pcaInputCtes,
+       |${powerIterateCtes("xq", "", iters)}
+       |${directionSql("", iters, "v_micro")}""".stripMargin
+
+  /** DuckDB twin of [[pcaPowerTwoComponents]]: the loop, the fixed-point
+    * deflation of every row out of v₁, and the loop again on the
+    * residual; (dim, v1_micro, v2_micro).
+    */
+  def pcaPowerTwoComponentsSql(iters: Int): String =
+    s"""WITH $pcaInputCtes,
+       |${powerIterateCtes("xq", "", iters)},
+       |n1 AS MATERIALIZED (
+       |  SELECT greatest(${longSqNormSql("v")} // 1000000, 1) AS den
+       |  FROM v$iters),
+       |xq2 AS MATERIALIZED (
+       |  SELECT list_transform(range(1, len(xq) + 1),
+       |      j -> xq[j] - (c * v[j]) // den) AS xq
+       |  FROM (
+       |    SELECT xq, v, den, ${longDotSql("xq", "v")} // 1000000 AS c
+       |    FROM xq, v$iters, n1)),
+       |${powerIterateCtes("xq2", "b", iters)}
+       |SELECT a.dim, a.v1_micro, b.v2_micro
+       |FROM (${directionSql("", iters, "v1_micro")}) a
+       |JOIN (${directionSql("b", iters, "v2_micro")}) b USING (dim)""".stripMargin
 
   /** Spherical k-means objective Σᵢ max_c eᵢ·ĉ (higher is better),
     * fixed-point-summed for cross-run determinism. The monotonicity

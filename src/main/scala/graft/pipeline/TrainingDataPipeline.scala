@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.Materialize
-import graft.operators.Dedup
+import graft.operators.{Dedup, Text}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -47,7 +47,7 @@ object TrainingDataPipeline {
   /** Stage 1-2: quality + language gate. */
   def qualityFilter(docs: DataFrame, cfg: Config): DataFrame =
     docs
-      .withColumn("__toks", split(col("text"), " "))
+      .withColumn("__toks", Text.words(col("text")))
       .withColumn("__n", size(col("__toks")))
       .withColumn("__short",
         expr("size(filter(__toks, t -> length(t) <= 2))"))
@@ -83,7 +83,7 @@ object TrainingDataPipeline {
     graft.functions.Wordpiece
       .tokenize(spark, docs, vocab)
       .join(docs, "doc_id")
-      .withColumn("n_tokens", size(split(col("text"), " ")))
+      .withColumn("n_tokens", size(Text.words(col("text"))))
       .withColumn("n_pieces", size(col("pieces")))
   }
 
@@ -118,12 +118,7 @@ object TrainingDataPipeline {
   def decontaminate(docs: DataFrame, bench: DataFrame,
       gramLen: Int = 4): DataFrame = {
     def grams(df: DataFrame): DataFrame =
-      df.select(col("doc_id"),
-          split(coalesce(col("text"), lit("")), " ").as("__tk"))
-        .filter(size(col("__tk")) >= gramLen)
-        .select(col("doc_id"), explode(expr(
-          s"transform(sequence(0, size(__tk) - $gramLen), " +
-            s"i -> concat_ws(' ', slice(__tk, i + 1, $gramLen)))")).as("__g"))
+      Text.wordNgrams(df, gramLen, Seq("doc_id"), tk = "__tk", as = "__g")
     // No pre-join distinct: the semi join is map-side (bounded bench
     // grams broadcast), and only doc_id survives — the one distinct
     // runs on the contaminated id set, never on corpus-scale grams.
@@ -140,8 +135,7 @@ object TrainingDataPipeline {
   def packStage(docs: DataFrame, budget: Long): DataFrame =
     graft.operators.Packing.packGreedy(
       docs.select(col("doc_id"), col("lang"),
-        size(split(coalesce(col("text"), lit("")), " ")).cast("long")
-          .as("n_toks")),
+        size(Text.tokens(col("text"))).cast("long").as("n_toks")),
       "lang", Seq("doc_id"), "n_toks", budget)
 
   /** Full pipeline; returns (clean corpus with tokens, per-stage counts). */

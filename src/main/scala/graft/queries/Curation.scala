@@ -2,15 +2,17 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.Tag.{Basis, Headline, Sweep}
+import graft.functions.PolyHash31
+import graft.operators.Text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Corpus-curation operators round 10 adds on top of the dedup/quality
-  * families: a Count-Min frequency sketch, DSIR-style hashed-feature
-  * importance weighting (Xie et al. 2023, "Data Selection for Language
-  * Models via Importance Resampling"), temperature-based multilingual
+/** Corpus-curation operators on top of the dedup/quality families: a
+  * Count-Min frequency sketch, DSIR-style hashed-feature importance
+  * weighting (Xie et al. 2023, "Data Selection for Language Models via
+  * Importance Resampling"), temperature-based multilingual
   * mixture rebalancing (the p_l^α sampling of mBERT/XLM-R), and
   * content-defined chunking with chunk-level duplicate accounting (the
   * rolling-boundary dedup granularity of storage systems, applied to a
@@ -26,20 +28,6 @@ import org.apache.spark.sql.types._
 object Curation {
 
   private val P = 1000000007L
-
-  /** Non-empty whitespace tokens of `text` (both engines' shared cut;
-    * `split` never yields a null element, so removing '' is the cut).
-    */
-  private def toks = expr("array_remove(split(coalesce(text, ''), ' '), '')")
-
-  /** DuckDB mirror of [[graft.functions.PolyHash31]] for one token
-    * expression: fold codepoints through (h*31 + c) mod P.
-    */
-  private def foldSql(t: String): String =
-    s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |      list_transform(range(1, length($t) + 1),
-       |        i -> CAST(ascii(substring($t, i, 1)) AS BIGINT))),
-       |      (h, c) -> (h * 31 + c) % $P)""".stripMargin
 
   // ------------------------------------------------------ count-min sketch
 
@@ -69,7 +57,7 @@ object Curation {
     */
   private def cmsCellCounts(docs: DataFrame): DataFrame =
     docs
-      .select(graft.functions.PolyHash31.polyhash31(toks)
+      .select(PolyHash31.polyhash31(Text.nonEmptyTokens(col("text")))
         .getField("pp").as("hs"))
       .select(explode(col("hs")).as("h"))
       .select(explode(array(cmsRowBuckets: _*)).as("rb"))
@@ -80,11 +68,11 @@ object Curation {
     val rows = cmsRowBuckets
     val cms = cmsCellCounts(Tables.documents(s, dir))
     val top = Tables.documents(s, dir)
-      .select(explode(toks).as("tok"))
+      .select(explode(Text.nonEmptyTokens(col("text"))).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("n_exact"))
       .orderBy(col("n_exact").desc, col("tok"))
       .limit(20)
-      .withColumn("h", element_at(graft.functions.PolyHash31
+      .withColumn("h", element_at(PolyHash31
         .polyhash31(array(col("tok"))).getField("pp"), 1))
     top.select(col("tok"), col("n_exact"),
         explode(array(rows: _*)).as("rb"))
@@ -101,11 +89,10 @@ object Curation {
     val bucket = (h: String) =>
       s"(($h * (1000003 + 2 * r) + 12289 * r) % $P) % 1024"
     s"""WITH d AS (
-       |  SELECT list_filter(string_split(coalesce(text, ''), ' '),
-       |           t -> length(t) > 0) AS tk
+       |  SELECT ${Text.nonEmptyTokensSql()} AS tk
        |  FROM documents),
        |th AS (
-       |  SELECT unnest(list_transform(tk, t -> ${foldSql("t")})) AS h
+       |  SELECT unnest(list_transform(tk, t -> ${PolyHash31.foldSql("t")})) AS h
        |  FROM d),
        |cms AS (
        |  SELECT r, ${bucket("h")} AS b, count(*) AS cnt
@@ -116,7 +103,7 @@ object Curation {
        |  FROM (SELECT unnest(tk) AS tok FROM d)
        |  GROUP BY tok ORDER BY n_exact DESC, tok LIMIT 20),
        |tb AS (
-       |  SELECT tok, n_exact, r, ${bucket(s"(${foldSql("tok")})")} AS b
+       |  SELECT tok, n_exact, r, ${bucket(s"(${PolyHash31.foldSql("tok")})")} AS b
        |  FROM top, unnest([0, 1, 2, 3]) AS u(r))
        |SELECT tok, n_exact, min(cnt) AS cms_est,
        |  min(cnt) - n_exact AS overcount
@@ -147,14 +134,14 @@ object Curation {
   private def dsirImportance(s: SparkSession, dir: String): DataFrame = {
     // The hashed-gram frame feeds BOTH the distribution build and the
     // scoring join; neither branch has an exchange below it, so without
-    // a lineage cut the per-token polyhash ran twice per run (r21, like
-    // the signature cut of Banding.candidatePairs). Cut the compact
+    // a lineage cut the per-token polyhash runs twice per run (like the
+    // signature cut of Banding.candidatePairs). Cut the compact
     // pre-explode frame (doc-cardinality rows carrying the hash arrays).
     // Lazy: an eager cut cost a job and 8% of the cold call (sf0.1, 4
     // cores), and the lazy cut logged no accumulator-update error.
     val hashed = graft.Materialize.step(Tables.documents(s, dir)
       .select(col("doc_id"), col("lang"),
-        graft.functions.PolyHash31.polyhash31(toks).getField("pp").as("hs")),
+        PolyHash31.polyhash31(Text.nonEmptyTokens(col("text"))).getField("pp").as("hs")),
       "Curation.dsirHashed")
     val grams = hashed
       .select(col("doc_id"), col("lang"), explode(col("hs")).as("h"))
@@ -184,10 +171,8 @@ object Curation {
   private val dsirImportanceSql =
     s"""WITH g AS (
        |  SELECT doc_id, lang,
-       |    unnest(list_transform(
-       |      list_filter(string_split(coalesce(text, ''), ' '),
-       |        t -> length(t) > 0),
-       |      t -> ${foldSql("t")})) % 1024 AS b
+       |    unnest(list_transform(${Text.nonEmptyTokensSql()},
+       |      t -> ${PolyHash31.foldSql("t")})) % 1024 AS b
        |  FROM documents),
        |dist AS (
        |  SELECT b, count(*) AS rc,
@@ -225,7 +210,7 @@ object Curation {
     */
   private def mixTemperature(s: SparkSession, dir: String): DataFrame = {
     val perLang = Tables.documents(s, dir)
-      .select(col("lang"), size(toks).cast(LongType).as("n"))
+      .select(col("lang"), size(Text.nonEmptyTokens(col("text"))).cast(LongType).as("n"))
       .groupBy(col("lang")).agg(sum(col("n")).as("n_tokens"))
       .withColumn("w",
         floor(sqrt(col("n_tokens").cast(DoubleType)) * lit(1e6)).cast(LongType))
@@ -240,10 +225,8 @@ object Curation {
   }
 
   private val mixTemperatureSql =
-    """WITH pl AS (
-      |  SELECT lang, CAST(sum(len(list_filter(
-      |      string_split(coalesce(text, ''), ' '),
-      |      t -> length(t) > 0))) AS BIGINT) AS n_tokens
+    s"""WITH pl AS (
+      |  SELECT lang, CAST(sum(len(${Text.nonEmptyTokensSql()})) AS BIGINT) AS n_tokens
       |  FROM documents GROUP BY lang),
       |w AS (
       |  SELECT lang, n_tokens,
@@ -273,7 +256,7 @@ object Curation {
   private def mixEpochSchedule(s: SparkSession, dir: String): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     val perLang = Tables.documents(s, dir)
-      .select(col("lang"), size(toks).cast(LongType).as("n"))
+      .select(col("lang"), size(Text.nonEmptyTokens(col("text"))).cast(LongType).as("n"))
       .groupBy(col("lang")).agg(sum(col("n")).as("n_tokens"))
       .withColumn("w",
         floor(sqrt(col("n_tokens").cast(DoubleType)) * lit(1e6)).cast(LongType))
@@ -292,10 +275,8 @@ object Curation {
   }
 
   private val mixEpochScheduleSql =
-    """WITH pl AS (
-      |  SELECT lang, CAST(sum(len(list_filter(
-      |      string_split(coalesce(text, ''), ' '),
-      |      t -> length(t) > 0))) AS BIGINT) AS n_tokens
+    s"""WITH pl AS (
+      |  SELECT lang, CAST(sum(len(${Text.nonEmptyTokensSql()})) AS BIGINT) AS n_tokens
       |  FROM documents GROUP BY lang),
       |w AS (
       |  SELECT lang, n_tokens,
@@ -340,7 +321,7 @@ object Curation {
     */
   private[graft] def chunkFingerprints(docs: DataFrame): DataFrame = {
     val tok = docs
-      .select(col("doc_id"), graft.functions.PolyHash31.polyhash31(toks)
+      .select(col("doc_id"), PolyHash31.polyhash31(Text.nonEmptyTokens(col("text")))
         .getField("pp").as("hs"))
       .select(col("doc_id"), posexplode(col("hs")).as(Seq("pos", "h")))
     val win = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -373,10 +354,8 @@ object Curation {
        |  SELECT doc_id, i - 1 AS pos, tp[i] AS h
        |  FROM (
        |    SELECT doc_id,
-       |      list_transform(
-       |        list_filter(string_split(coalesce(text, ''), ' '),
-       |          t -> length(t) > 0),
-       |        t -> ${foldSql("t")}) AS tp
+       |      list_transform(${Text.nonEmptyTokensSql()},
+       |        t -> ${PolyHash31.foldSql("t")}) AS tp
        |    FROM documents),
        |    unnest(range(1, len(tp) + 1)) AS u(i)),
        |cid AS (

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.Tag.{Basis, Headline, NoCodegen}
 import graft.functions.GraftFunctions._
+import graft.operators.Text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -373,7 +374,7 @@ object CustomExprs {
     */
   private def bpePairStats(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
-      .select(explode(split(coalesce(col("text"), lit("")), " ")).as("w"))
+      .select(explode(Text.tokens(col("text"))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w"))
       .agg(count(lit(1)).as("c"))
@@ -389,9 +390,9 @@ object CustomExprs {
       .limit(20)
 
   private val bpePairStatsSql =
-    """WITH w AS (
+    s"""WITH w AS (
       |  SELECT w, count(*) AS c FROM (
-      |    SELECT unnest(string_split(coalesce(text, ''), ' ')) AS w
+      |    SELECT unnest(${Text.tokensSql()}) AS w
       |    FROM documents) t
       |  WHERE length(w) > 0 GROUP BY w
       |  HAVING count(*) >= 50),
@@ -459,7 +460,7 @@ object CustomExprs {
     val steps = (1 to 3).map(trainerStepSql).mkString(",\n")
     s"""WITH w AS (
        |  SELECT w, CAST(count(*) AS BIGINT) AS c FROM (
-       |    SELECT unnest(string_split(coalesce(text, ''), ' ')) AS w
+       |    SELECT unnest(${Text.tokensSql()}) AS w
        |    FROM documents) t
        |  WHERE length(w) > 0 GROUP BY w HAVING count(*) >= 50),
        |e0 AS (

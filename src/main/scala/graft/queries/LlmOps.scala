@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.Tag.{Basis, Headline, NoCodegen, Sweep}
-import graft.operators.{Banding, Dedup, Similarity}
+import graft.operators.{Banding, Dedup, Similarity, Text}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -853,38 +853,6 @@ object LlmOps {
     Similarity.pcaPowerTopComponent(
       Tables.embeddings(s, dir), iters = 5)
 
-  private val embPcaPowerSql = {
-    // one CTE trio per iteration, unrolled (DuckDB recursive CTEs forbid
-    // aggregates in the recursive arm — same constraint as the PageRank
-    // oracle); every op is BIGINT (floor / // / abs / max / sum), so the
-    // values are bit-identical to the Spark loop.
-    val step = (i: Int) =>
-      s"""d$i AS (
-         |  SELECT xq,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |        list_transform(range(1, len(xq) + 1), i -> xq[i] * v[i])),
-         |      (a, t) -> a + t) // 10000000 AS ds
-         |  FROM xq, v${i - 1}),
-         |u$i AS (
-         |  SELECT dim, sum(xq[dim + 1] * ds) AS u FROM d$i, dims GROUP BY dim),
-         |m$i AS (SELECT greatest(max(abs(u)), 1) AS m FROM u$i),
-         |v$i AS (
-         |  SELECT list((u // greatest(m // 1000000, 1)) ORDER BY dim) AS v
-         |  FROM u$i, m$i GROUP BY m)""".stripMargin
-    s"""WITH dd AS (SELECT min(len(embedding)) AS d FROM embeddings),
-       |xq AS (
-       |  SELECT list_transform(embedding,
-       |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS xq
-       |  FROM embeddings),
-       |v0 AS (
-       |  SELECT list_transform(range(1, d + 1), i -> CAST(1000000 AS BIGINT)) AS v
-       |  FROM dd),
-       |dims AS (SELECT unnest(range(0, (SELECT d FROM dd))) AS dim),
-       |${(1 to 5).map(step).mkString(",\n")}
-       |SELECT dim, CAST(u // greatest(m // 1000000, 1) AS BIGINT) AS v_micro
-       |FROM u5, m5""".stripMargin
-  }
-
   /** Top TWO principal directions by fixed-point deflation
     * ([[graft.operators.Similarity.pcaPowerTwoComponents]]): v₁ from the
     * power loop, the corpus projected out of v₁ in exact integer
@@ -898,76 +866,14 @@ object LlmOps {
     Similarity.pcaPowerTwoComponents(
       Tables.embeddings(s, dir), iters = 5)
 
-  private val embPcaTwoSql = {
-    val step = (src: String, p: String, i: Int) =>
-      s"""${p}d$i AS MATERIALIZED (
-         |  SELECT xq,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |        list_transform(range(1, len(xq) + 1), i -> xq[i] * v[i])),
-         |      (a, t) -> a + t) // 10000000 AS ds
-         |  FROM $src, ${p}v${i - 1}),
-         |${p}u$i AS MATERIALIZED (
-         |  SELECT dim, sum(xq[dim + 1] * ds) AS u FROM ${p}d$i, dims GROUP BY dim),
-         |${p}m$i AS MATERIALIZED (SELECT greatest(max(abs(u)), 1) AS m FROM ${p}u$i),
-         |${p}v$i AS MATERIALIZED (
-         |  SELECT list((u // greatest(m // 1000000, 1)) ORDER BY dim) AS v
-         |  FROM ${p}u$i, ${p}m$i GROUP BY m)""".stripMargin
-    s"""WITH dd AS MATERIALIZED (SELECT min(len(embedding)) AS d FROM embeddings),
-       |xq AS MATERIALIZED (
-       |  SELECT list_transform(embedding,
-       |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS xq
-       |  FROM embeddings),
-       |v0 AS MATERIALIZED (
-       |  SELECT list_transform(range(1, d + 1), i -> CAST(1000000 AS BIGINT)) AS v
-       |  FROM dd),
-       |dims AS MATERIALIZED (SELECT unnest(range(0, (SELECT d FROM dd))) AS dim),
-       |${(1 to 5).map(step("xq", "", _)).mkString(",\n")},
-       |n1 AS MATERIALIZED (
-       |  SELECT greatest(list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |      list_transform(v, x -> x * x)), (a, t) -> a + t) // 1000000, 1)
-       |    AS den
-       |  FROM v5),
-       |xq2 AS MATERIALIZED (
-       |  SELECT list_transform(range(1, len(xq) + 1),
-       |      j -> xq[j] - (c * v[j]) // den) AS xq
-       |  FROM (
-       |    SELECT xq, v, den,
-       |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-       |        list_transform(range(1, len(xq) + 1), i -> xq[i] * v[i])),
-       |        (a, t) -> a + t) // 1000000 AS c
-       |    FROM xq, v5, n1)),
-       |bv0 AS MATERIALIZED (
-       |  SELECT list_transform(range(1, d + 1), i -> CAST(1000000 AS BIGINT)) AS v
-       |  FROM dd),
-       |${(1 to 5).map(step("xq2", "b", _)).mkString(",\n")}
-       |SELECT a.dim, a.v1_micro, b.v2_micro
-       |FROM (SELECT dim, CAST(u // greatest(m // 1000000, 1) AS BIGINT)
-       |        AS v1_micro FROM u5, m5) a
-       |JOIN (SELECT dim, CAST(u // greatest(m // 1000000, 1) AS BIGINT)
-       |        AS v2_micro FROM bu5, bm5) b USING (dim)""".stripMargin
-  }
-
-
-  /** Leakage-safe train/valid/test split: the split key is the doc's
-    * near-dup COMPONENT representative (min id over the LSH connected
-    * component, singleton docs represent themselves), not the doc
-    * itself — so every near-duplicate lands in the same split and the
-    * eval set can never contain a paraphrase of a training doc (the
-    * contamination mode a doc-keyed hash split is blind to). Split
-    * assignment is the portable Lehmer fold mod 10 → 8/1/1.
-    *
-    * Scale: reuses the O(log diameter) pointer-doubling components
-    * ([[Dedup.resolveKeepers]]); the split itself adds
-    * one broadcast-or-shuffle left join on doc_id and a map-side hash.
-    */
   /** The corpus near-dup PAIR set as a persisted artifact — written once
     * per dataset per JVM ([[graft.DimCache]], the same write-once/
     * query-many contract as the incremental LSH index and the PQ codes).
     * A real pipeline materializes candidate pairs exactly once and
     * derives BOTH dedup decisions and leakage-safe splits from them;
     * re-running the full shingle→minhash→band pipeline for every
-    * consumer re-pays the whole corpus each time (the r9 bench measured
-    * that shape at 11.9 s/rep — the pipeline cost, not the split cost).
+    * consumer re-pays the whole corpus each time: the pipeline cost, not
+    * the split cost.
     */
   private def lshPairsDir(s: SparkSession, dir: String): String =
     graft.DimCache.cached(s"lsh-pairs:$dir") {
@@ -996,6 +902,18 @@ object LlmOps {
       p
     }
 
+  /** Leakage-safe train/valid/test split: the split key is the doc's
+    * near-dup COMPONENT representative (min id over the LSH connected
+    * component, singleton docs represent themselves), not the doc
+    * itself — so every near-duplicate lands in the same split and the
+    * eval set can never contain a paraphrase of a training doc (the
+    * contamination mode a doc-keyed hash split is blind to). Split
+    * assignment is the portable Lehmer fold mod 10 → 8/1/1.
+    *
+    * Scale: reuses the O(log diameter) pointer-doubling components
+    * ([[Dedup.resolveKeepers]]); the split itself adds
+    * one broadcast-or-shuffle left join on doc_id and a map-side hash.
+    */
   private def splitLeakageSafe(s: SparkSession, dir: String): DataFrame = {
     val rep = coalesce(col("keeper"), col("doc_id"))
     val keepers = s.read.parquet(lshKeepersDir(s, dir))
@@ -1401,7 +1319,7 @@ object LlmOps {
     import org.apache.spark.sql.expressions.Window
     val tf = documents
       .select(col("doc_id"),
-        explode(split(coalesce(col("text"), lit("")), " ")).as("tok"))
+        explode(Text.tokens(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("cnt"))
@@ -1431,9 +1349,9 @@ object LlmOps {
   }
 
   private val textTfidfTopkSql =
-    """WITH tf AS (
+    s"""WITH tf AS (
       |  SELECT doc_id, tok, count(*) AS cnt FROM (
-      |    SELECT doc_id, unnest(string_split(coalesce(text, ''), ' ')) AS tok
+      |    SELECT doc_id, unnest(${Text.tokensSql()}) AS tok
       |    FROM documents) t
       |  WHERE length(tok) > 0 GROUP BY doc_id, tok),
       |wl AS (
@@ -1464,8 +1382,7 @@ object LlmOps {
     val docs = Tables
       .documents(s, dir)
       .select(col("doc_id"), col("lang"),
-        size(split(coalesce(col("text"), lit("")), " ")).cast("long")
-          .as("n_toks"))
+        size(Text.tokens(col("text"))).cast("long").as("n_toks"))
     graft.operators.Packing
       .packGreedy(docs, "lang", Seq("doc_id"), "n_toks", budget = 200L)
       .select(col("doc_id"), col("lang"), col("n_toks"),
@@ -1473,9 +1390,9 @@ object LlmOps {
   }
 
   private val packSequencesSql =
-    """WITH RECURSIVE docs AS (
+    s"""WITH RECURSIVE docs AS (
       |  SELECT doc_id, lang,
-      |    CAST(len(string_split(coalesce(text, ''), ' ')) AS BIGINT) AS n_toks,
+      |    CAST(len(${Text.tokensSql()}) AS BIGINT) AS n_toks,
       |    row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
       |  FROM documents),
       |walk AS (
@@ -1502,8 +1419,7 @@ object LlmOps {
   private def chunkDocuments(s: SparkSession, dir: String): DataFrame =
     Tables
       .documents(s, dir)
-      .select(col("doc_id"),
-        split(coalesce(col("text"), lit("")), " ").as("tk"))
+      .select(col("doc_id"), Text.tokens(col("text")).as("tk"))
       .select(col("doc_id"), col("tk"), size(col("tk")).as("n"))
       .select(col("doc_id"), col("n"),
         posexplode(expr(
@@ -1519,8 +1435,8 @@ object LlmOps {
 
   private val chunkDocumentsSql =
     s"""WITH t AS (
-       |  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS tk,
-       |    len(string_split(coalesce(text, ''), ' ')) AS n
+       |  SELECT doc_id, ${Text.tokensSql()} AS tk,
+       |    len(${Text.tokensSql()}) AS n
        |  FROM documents),
        |c AS (
        |  SELECT doc_id,
@@ -1547,15 +1463,7 @@ object LlmOps {
     * count aggregation groups on (doc_id), compact keys.
     */
   private def decontaminateNgrams(s: SparkSession, dir: String): DataFrame = {
-    def grams(df: DataFrame): DataFrame =
-      df.select(col("doc_id"),
-          split(coalesce(col("text"), lit("")), " ").as("tk"))
-        .filter(size(col("tk")) >= 4)
-        .select(col("doc_id"),
-          explode(expr(
-            """transform(sequence(0, size(tk) - 4),
-              |  i -> concat_ws(' ', slice(tk, i + 1, 4)))""".stripMargin))
-            .as("g8"))
+    def grams(df: DataFrame): DataFrame = Text.wordNgrams(df, 4, Seq("doc_id"))
     val docs = Tables.documents(s, dir)
     val bench = grams(docs.filter(pmod(col("doc_id"), lit(100)) === 0))
       .select(col("g8")).distinct()
@@ -1587,24 +1495,15 @@ object LlmOps {
     * the superset + FP-bound contract against it.
     */
   private def decontaminateBloom(s: SparkSession, dir: String): DataFrame = {
-    def grams(df: DataFrame): DataFrame =
-      df.select(col("doc_id"),
-          split(coalesce(col("text"), lit("")), " ").as("tk"))
-        .filter(size(col("tk")) >= 4)
-        .select(col("doc_id"),
-          explode(expr(
-            """transform(sequence(0, size(tk) - 4),
-              |  i -> concat_ws(' ', slice(tk, i + 1, 4)))""".stripMargin))
-            .as("g8"))
+    def grams(df: DataFrame): DataFrame = Text.wordNgrams(df, 4, Seq("doc_id"))
     val docs = Tables.documents(s, dir)
-    // Native Catalyst bloom (r14): the sketch is built by the same
+    // Native Catalyst bloom: the sketch is built by the same
     // BloomFilterAggregate Spark's runtime row-filters use (a
     // distributed partial/final aggregate over xxhash64 of each gram)
-    // and probed with BloomFilterMightContain — which, unlike the
-    // previous per-gram Scala UDF, evaluates INSIDE whole-stage
-    // codegen with no string boxing: the 100 TB probe side is a pure
-    // generated-code scan. Not public SQL surface in Spark 4, so the
-    // expressions are wrapped via graftbridge.ColumnBridge (the
+    // and probed with BloomFilterMightContain, which evaluates INSIDE
+    // whole-stage codegen with no string boxing: the 100 TB probe side
+    // is a pure generated-code scan. Not public SQL surface in Spark 4,
+    // so the expressions are wrapped via graftbridge.ColumnBridge (the
     // custom-expression path every native kernel here uses).
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
@@ -1707,14 +1606,9 @@ object LlmOps {
   }
 
   private val decontaminateBloomVsExactSql =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT DISTINCT doc_id, g8 FROM (
-      |    SELECT doc_id,
-      |      unnest(list_transform(range(0, len(tk) - 3),
-      |        i -> array_to_string(list_slice(tk, i + 1, i + 4), ' '))) AS g8
-      |    FROM (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS tk
-      |          FROM documents) t0
-      |    WHERE len(tk) >= 4) t1),
+      |    ${Text.wordNgramsSql("documents", 4)}) t1),
       |bench AS (SELECT DISTINCT g8 FROM g WHERE doc_id % 100 = 0),
       |train AS (SELECT doc_id, g8 FROM g WHERE doc_id % 100 <> 0)
       |SELECT doc_id, count(*) AS n_shared_grams,
@@ -1723,14 +1617,9 @@ object LlmOps {
       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
   private val decontaminateNgramsSql =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT DISTINCT doc_id, g8 FROM (
-      |    SELECT doc_id,
-      |      unnest(list_transform(range(0, len(tk) - 3),
-      |        i -> array_to_string(list_slice(tk, i + 1, i + 4), ' '))) AS g8
-      |    FROM (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS tk
-      |          FROM documents) t0
-      |    WHERE len(tk) >= 4) t1),
+      |    ${Text.wordNgramsSql("documents", 4)}) t1),
       |bench AS (SELECT DISTINCT g8 FROM g WHERE doc_id % 100 = 0),
       |train AS (SELECT doc_id, g8 FROM g WHERE doc_id % 100 <> 0)
       |SELECT doc_id, count(*) AS n_shared_grams
@@ -1900,8 +1789,8 @@ object LlmOps {
       Q(decontaminateBloomVsExact _, decontaminateBloomVsExactSql),
     "decontaminate_semantic" ->
       Q(decontaminateSemantic _, decontaminateSemanticSql),
-    "emb_pca_power" -> Q(embPcaPower _, embPcaPowerSql).tag(Headline, Basis, Sweep, NoCodegen),
-    "emb_pca_two" -> Q(embPcaTwo _, embPcaTwoSql).tag(NoCodegen),
+    "emb_pca_power" -> Q(embPcaPower _, Similarity.pcaPowerTopComponentSql(5)).tag(Headline, Basis, Sweep, NoCodegen),
+    "emb_pca_two" -> Q(embPcaTwo _, Similarity.pcaPowerTwoComponentsSql(5)).tag(NoCodegen),
     "cluster_kmeans_step" -> Q(clusterKmeansStep _, clusterKmeansStepSql),
     "split_leakage_safe" -> Q(splitLeakageSafe _, splitLeakageSafeSql).tag(Headline, Basis),
     "split_leakage_audit" -> Q(splitLeakageAudit _, splitLeakageAuditSql),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.Dedup
+import graft.operators.{Dedup, Text}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -35,7 +35,7 @@ import org.apache.spark.sql.types._
 object PipelineOps {
 
   private def nTokens: Column =
-    size(split(coalesce(col("text"), lit("")), " ")).cast(LongType)
+    size(Text.tokens(col("text"))).cast(LongType)
 
   private def stageRow(df: DataFrame, ord: Int, name: String): DataFrame =
     df.agg(count(lit(1)).as("n_docs"),
@@ -56,7 +56,7 @@ object PipelineOps {
     // stage 1: quality gate (>= 10 tokens, short-token ratio <= 0.4) —
     // TrainingDataPipeline.qualityFilter's exact predicate
     val q = docs
-      .withColumn("__tk", split(col("text"), " "))
+      .withColumn("__tk", Text.words(col("text")))
       .filter(size(col("__tk")) >= 10 &&
         expr("size(filter(__tk, t -> length(t) <= 2))") / size(col("__tk"))
           <= 0.4)
@@ -77,12 +77,8 @@ object PipelineOps {
     // 4-gram with the held-out stand-in (doc_id % 100 == 0 of the RAW
     // corpus, the decontaminate_ngrams convention)
     val bench = docs.filter(pmod(col("doc_id"), lit(100)) === 0)
-    def grams(df: DataFrame): DataFrame = df
-      .select(col("doc_id"), split(coalesce(col("text"), lit("")), " ").as("__tk"))
-      .filter(size(col("__tk")) >= 4)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(__tk) - 4), " +
-          "i -> concat_ws(' ', slice(__tk, i + 1, 4)))")).as("__g"))
+    def grams(df: DataFrame): DataFrame =
+      Text.wordNgrams(df, 4, Seq("doc_id"), tk = "__tk", as = "__g")
     val contaminated = grams(nd)
       .join(grams(bench).select(col("__g")).distinct(), Seq("__g"), "left_semi")
       .select(col("doc_id"))
@@ -100,14 +96,14 @@ object PipelineOps {
     def stat(ord: Int, name: String, src: String) =
       s"""SELECT CAST($ord AS BIGINT) AS stage_ord, '$name' AS stage,
          |  count(*) AS n_docs,
-         |  CAST(coalesce(sum(len(string_split(coalesce(text, ''), ' '))), 0)
+         |  CAST(coalesce(sum(len(${Text.tokensSql()})), 0)
          |    AS BIGINT) AS n_tokens
          |FROM $src""".stripMargin
     s"""WITH RECURSIVE q AS (
        |  SELECT * FROM documents
-       |  WHERE len(string_split(text, ' ')) >= 10
-       |    AND len(list_filter(string_split(text, ' '), t -> length(t) <= 2))
-       |        / len(string_split(text, ' ')) <= 0.4),
+       |  WHERE len(${Text.wordsSql}) >= 10
+       |    AND len(list_filter(${Text.wordsSql}, t -> length(t) <= 2))
+       |        / len(${Text.wordsSql}) <= 0.4),
        |l AS (SELECT * FROM q WHERE lang = 'en'),
        |ex AS (
        |  SELECT * FROM l WHERE doc_id IN (
@@ -127,21 +123,12 @@ object PipelineOps {
        |  WHERE k.keeper IS NULL OR k.keeper = ex.doc_id),
        |bench AS (SELECT * FROM documents WHERE doc_id % 100 = 0),
        |dg AS (
-       |  SELECT doc_id,
-       |    unnest(list_transform(range(0, len(tk) - 3),
-       |      i -> array_to_string(list_slice(tk, i + 1, i + 4), ' '))) AS g
-       |  FROM (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS tk
-       |        FROM nd) t
-       |  WHERE len(tk) >= 4),
+       |  ${Text.wordNgramsSql("nd", 4)}),
        |bg AS (
-       |  SELECT DISTINCT
-       |    unnest(list_transform(range(0, len(tk) - 3),
-       |      i -> array_to_string(list_slice(tk, i + 1, i + 4), ' '))) AS g
-       |  FROM (SELECT string_split(coalesce(text, ''), ' ') AS tk
-       |        FROM bench) t
-       |  WHERE len(tk) >= 4),
+       |  SELECT DISTINCT g8 FROM (
+       |    ${Text.wordNgramsSql("bench", 4)}) t1),
        |contaminated AS (
-       |  SELECT DISTINCT doc_id FROM dg WHERE g IN (SELECT g FROM bg)),
+       |  SELECT DISTINCT doc_id FROM dg WHERE g8 IN (SELECT g8 FROM bg)),
        |dc AS (
        |  SELECT * FROM nd
        |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated))

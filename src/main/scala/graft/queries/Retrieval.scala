@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{ArrCanon, Q, Tables}
 import graft.Tag.{Basis, Headline, Sweep}
-import graft.operators.Similarity
+import graft.operators.{Similarity, Text}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,17 +27,6 @@ import org.apache.spark.sql.types._
   */
 object Retrieval {
 
-  /** Shared token cut (same contract as tf-idf): split on single space,
-    * drop empties. `split` never yields a null element, so removing ''
-    * keeps exactly the non-empty tokens without an interpreted lambda.
-    */
-  private def tokens(c: org.apache.spark.sql.Column) =
-    array_remove(split(coalesce(c, lit("")), " "), "")
-
-  private val tokensSqlFrom =
-    """SELECT doc_id, unnest(string_split(coalesce(text, ''), ' ')) AS tok
-      |    FROM documents""".stripMargin
-
   // --------------------------------------------------------------- postings
 
   /** Inverted-index build: token → ordered posting list of doc_ids,
@@ -61,7 +50,7 @@ object Retrieval {
   /** The postings build over any (doc_id, text) corpus. */
   private[graft] def postingsOver(documents: DataFrame): DataFrame = {
     val pairs = documents
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
+      .select(col("doc_id"), explode(Text.nonEmptyTokens(col("text"))).as("tok"))
       .distinct()
     val w = Window.partitionBy(col("tok"))
     val ranked = pairs
@@ -82,7 +71,8 @@ object Retrieval {
   private[queries] val indexPostingsSql =
     s"""WITH pairs AS (
        |  SELECT DISTINCT doc_id, tok FROM (
-       |    $tokensSqlFrom) t
+       |    SELECT doc_id, unnest(${Text.tokensSql()}) AS tok
+       |    FROM documents) t
        |  WHERE length(tok) > 0),
        |ranked AS (
        |  SELECT tok, doc_id,
@@ -124,7 +114,7 @@ object Retrieval {
       val base = Tables.documents(s, dir)
         .filter(pmod(col("doc_id"), lit(10)) =!= 0)
       val pairs = base
-        .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
+        .select(col("doc_id"), explode(Text.nonEmptyTokens(col("text"))).as("tok"))
         .distinct()
       val w = Window.partitionBy(col("tok"))
       pairs
@@ -139,7 +129,7 @@ object Retrieval {
     }
     val deltaPairs = Tables.documents(s, dir)
       .filter(pmod(col("doc_id"), lit(10)) === 0)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
+      .select(col("doc_id"), explode(Text.nonEmptyTokens(col("text"))).as("tok"))
       .distinct()
     val deltaDf = deltaPairs.groupBy(col("tok"))
       .agg(count(lit(1)).as("d_df"))
@@ -166,7 +156,8 @@ object Retrieval {
   private val indexPostingsDeltaSql =
     s"""WITH pairs AS (
        |  SELECT DISTINCT doc_id, tok FROM (
-       |    $tokensSqlFrom) t
+       |    SELECT doc_id, unnest(${Text.tokensSql()}) AS tok
+       |    FROM documents) t
        |  WHERE length(tok) > 0),
        |dt AS (SELECT DISTINCT tok FROM pairs WHERE doc_id % 10 = 0),
        |ranked AS (
@@ -238,21 +229,21 @@ object Retrieval {
   }
 
   /** Per-doc term frequencies (doc_id, tok, tf), as one SHARED
-    * materialization (r22): the stage profile caught the
-    * tokenize+aggregate subtree executing FOUR times inside
-    * text_bm25_topk — corpusQueryTerms' `length(tok) >= 4` filter pushes
-    * below the tf aggregate and SPECIALIZES that branch's subtree (no
-    * exchange to reuse against the unfiltered branches), and even the
-    * two unfiltered branches planned as separate exchanges. The lineage
-    * cut makes every consumer (dl, dfq, the scoring join, the snippet's
-    * query-term pick) read one materialization — the same r21 cut the
-    * LSH family uses; values unchanged (the filter now applies above
-    * the read, same rows survive). A `Materialize.shared` cut: eager,
-    * so no consumer job materializes it under its siblings.
+    * materialization. Without the cut the tokenize+aggregate subtree
+    * executes FOUR times inside text_bm25_topk: corpusQueryTerms'
+    * `length(tok) >= 4` filter pushes below the tf aggregate and
+    * SPECIALIZES that branch's subtree (no exchange to reuse against the
+    * unfiltered branches), and even the two unfiltered branches plan as
+    * separate exchanges. The lineage cut makes every consumer (dl, dfq,
+    * the scoring join, the snippet's query-term pick) read one
+    * materialization, the same cut the LSH family uses; values are
+    * unchanged (the filter applies above the read, the same rows
+    * survive). A `Materialize.shared` cut: eager, so no consumer job
+    * materializes it under its siblings.
     */
   private def tfOverShared(documents: DataFrame): DataFrame =
     graft.Materialize.shared(documents
-      .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
+      .select(col("doc_id"), explode(Text.nonEmptyTokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("tf")), "Retrieval.tf")
 
@@ -310,7 +301,8 @@ object Retrieval {
   private val tfCtes =
     s"""tf AS (
        |  SELECT doc_id, tok, count(*) AS tf FROM (
-       |    $tokensSqlFrom) t
+       |    SELECT doc_id, unnest(${Text.tokensSql()}) AS tok
+       |    FROM documents) t
        |  WHERE length(tok) > 0 GROUP BY doc_id, tok),
        |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id),
        |dfq AS (SELECT tok, count(*) AS df FROM tf GROUP BY tok)""".stripMargin
@@ -383,7 +375,7 @@ object Retrieval {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
     // one tf materialization feeds the ranking AND the query-term pick
-    // (r22 — see tfOverShared)
+    // (see tfOverShared)
     val tfShared = tfOverShared(docs)
     val topDocs = bm25ScoresOverTf(tfShared)
       .orderBy(col("bm25_micro").desc, col("doc_id"))
@@ -393,7 +385,7 @@ object Retrieval {
       .agg(sort_array(collect_list(col("tok"))).as("qts"))
     docs
       .join(topDocs, Seq("doc_id"), "leftsemi")
-      .select(col("doc_id"), tokens(col("text")).as("tk"))
+      .select(col("doc_id"), Text.nonEmptyTokens(col("text")).as("tk"))
       .crossJoin(broadcast(qts))
       .select(col("doc_id"), col("tk"), col("qts"),
         explode(expr("sequence(0, greatest(size(tk) - 16, 0))")).as("start"))
@@ -416,8 +408,7 @@ object Retrieval {
        |qt AS (SELECT list(tok ORDER BY tok) AS qts FROM qterms),
        |dtk AS (
        |  SELECT d.doc_id,
-       |    list_filter(string_split(coalesce(d.text, ''), ' '),
-       |      t -> length(t) > 0) AS tk
+       |    ${Text.nonEmptyTokensSql("d.text")} AS tk
        |  FROM documents d JOIN top10 USING (doc_id)),
        |starts AS (
        |  SELECT doc_id, tk,
@@ -473,10 +464,10 @@ object Retrieval {
     */
   private def doc0Bm25Scores(documents: DataFrame): DataFrame = {
     // one tf materialization for the four consumers below (q0, dfq, dl,
-    // the scoring join) — r22, see tfOverShared
+    // the scoring join), see tfOverShared
     val tf = tfOverShared(documents)
-    // Document frequencies only for doc 0's candidate terms (r21): dfq
-    // fed nothing but the qterms join, so count the full-corpus df for
+    // Document frequencies only for doc 0's candidate terms: dfq feeds
+    // nothing but the qterms join, so count the full-corpus df for
     // the one query document's ≥4-char tokens instead of the whole
     // vocabulary — a broadcast semi-filter ahead of the tok shuffle.
     // Per-token counts are unchanged (filtering WHICH toks are counted

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{DimCache, Q, Tag, Tables}
 import graft.Tag.{Gate, Sweep}
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Similarity, Text}
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -741,13 +741,8 @@ object StreamingGate {
             .as("ts"))
         .repartition(4).write.mode("overwrite").parquet(t)
     }
-    val bench = Tables.documents(s, dir)
-      .filter(pmod(col("doc_id"), lit(100)) === 0)
-      .select(split(coalesce(col("text"), lit("")), " ").as("tk"))
-      .filter(size(col("tk")) >= 4)
-      .select(explode(expr(
-        """transform(sequence(0, size(tk) - 4),
-          |  i -> concat_ws(' ', slice(tk, i + 1, 4)))""".stripMargin)).as("g8"))
+    val bench = Text.wordNgrams(
+      Tables.documents(s, dir).filter(pmod(col("doc_id"), lit(100)) === 0), 4, Nil)
       .distinct()
     StreamPlan(Streams.decontaminateStream(docsWithTs(s, d), bench),
       memory("gate_decon", "complete"),
@@ -766,14 +761,9 @@ object StreamingGate {
     * epoch-aligned tumble — exactly Spark's `window()` start).
     */
   private val streamDecontaminateSql =
-    """WITH g AS (
+    s"""WITH g AS (
       |  SELECT DISTINCT doc_id, g8 FROM (
-      |    SELECT doc_id,
-      |      unnest(list_transform(range(0, len(tk) - 3),
-      |        i -> array_to_string(list_slice(tk, i + 1, i + 4), ' '))) AS g8
-      |    FROM (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS tk
-      |          FROM documents) t0
-      |    WHERE len(tk) >= 4) t1),
+      |    ${Text.wordNgramsSql("documents", 4)}) t1),
       |bench AS (SELECT DISTINCT g8 FROM g WHERE doc_id % 100 = 0),
       |contam AS (
       |  SELECT doc_id, count(*) AS n_shared_grams

@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.{Agg, Q, Tables}
 import graft.Tag.{Basis, Headline}
+import graft.functions.PolyHash31
+import graft.operators.Text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,16 +20,14 @@ import org.apache.spark.sql.types._
   */
 object TextOps {
 
-  private def toks(c: Column): Column = split(c, " ")
-
   /** tokenize + count_tokens (tokenize.hpp:61,97). */
   private def tokenCount(s: SparkSession, dir: String): DataFrame =
     Tables
       .documents(s, dir)
       .select(
         col("doc_id"),
-        size(toks(col("text"))).as("n_tokens"),
-        size(array_distinct(toks(col("text")))).as("n_unique_tokens"),
+        size(Text.words(col("text"))).as("n_tokens"),
+        size(array_distinct(Text.words(col("text")))).as("n_unique_tokens"),
         length(col("text")).as("n_chars_computed"))
 
   private val tokenCountSql =
@@ -69,7 +69,7 @@ object TextOps {
   private def wordNgrams(s: SparkSession, dir: String): DataFrame =
     Tables
       .documents(s, dir)
-      .select(col("doc_id"), slice(toks(col("text")), 1, 12).as("tk"))
+      .select(col("doc_id"), slice(Text.words(col("text")), 1, 12).as("tk"))
       .select(
         col("doc_id"),
         graft.ArrCanon.joined(expr(
@@ -94,20 +94,11 @@ object TextOps {
       .select(col("doc_id"), substring(col("text"), 1, 64).as("t"))
       .select(
         col("doc_id"),
-        expr(
-          """aggregate(
-            |  transform(sequence(1, length(t)), i -> ascii(substring(t, i, 1))),
-            |  CAST(0 AS BIGINT),
-            |  (h, c) -> (h * 31 + c) % 1000000007)""".stripMargin)
-          .as("fingerprint"))
+        PolyHash31.foldLambda("t").as("fingerprint"))
 
   private val fingerprintSql =
-    """SELECT doc_id,
-      |  list_reduce(
-      |    list_prepend(CAST(0 AS BIGINT),
-      |      list_transform(range(1, length(t) + 1),
-      |                     i -> CAST(ascii(substring(t, i, 1)) AS BIGINT))),
-      |    (h, c) -> (h * 31 + c) % 1000000007) AS fingerprint
+    s"""SELECT doc_id,
+      |  ${PolyHash31.foldSql("t")} AS fingerprint
       |FROM (SELECT doc_id, substring(text, 1, 64) AS t FROM documents)
       |""".stripMargin
 
@@ -118,7 +109,7 @@ object TextOps {
     val stop = Seq("the", "a", "of", "and", "to", "in")
     Tables
       .documents(s, dir)
-      .select(col("doc_id"), col("n_chars"), toks(col("text")).as("tk"))
+      .select(col("doc_id"), col("n_chars"), Text.words(col("text")).as("tk"))
       .select(
         col("doc_id"),
         size(col("tk")).as("n_tokens"),
@@ -169,7 +160,7 @@ object TextOps {
     val stop = Seq("the", "a", "of", "and", "to", "in")
     val q = Tables
       .documents(s, dir)
-      .select(col("doc_id"), col("lang"), toks(col("text")).as("tk"))
+      .select(col("doc_id"), col("lang"), Text.words(col("text")).as("tk"))
       .select(
         col("doc_id"),
         col("lang"),
@@ -216,7 +207,7 @@ object TextOps {
       "de" -> Seq("der", "und", "die", "das", "ein", "ist", "nicht"))
     val base = Tables
       .documents(s, dir)
-      .select(col("doc_id"), col("lang"), toks(col("text")).as("tk"))
+      .select(col("doc_id"), col("lang"), Text.words(col("text")).as("tk"))
     val scored = profiles.foldLeft(base) { case (df, (code, words)) =>
       df.withColumn(
         s"score_$code",
@@ -349,9 +340,9 @@ object TextOps {
   /** jaccard_index (jaccard.hpp:73) on token sets of adjacent-id pairs. */
   private def jaccardPairs(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
-    val a = d.select(col("doc_id").as("id_a"), toks(col("text")).as("ta"))
+    val a = d.select(col("doc_id").as("id_a"), Text.words(col("text")).as("ta"))
     val b = d.select((col("doc_id") - 1).as("id_a"), col("doc_id").as("id_b"),
-      toks(col("text")).as("tb"))
+      Text.words(col("text")).as("tb"))
     a.join(b, "id_a")
       .select(
         col("id_a"),
@@ -406,7 +397,7 @@ object TextOps {
     Tables
       .documents(s, dir)
       .select(col("source"), col("lang"), col("n_chars"),
-        toks(col("text")).as("tk"))
+        Text.words(col("text")).as("tk"))
       .select(col("source"), col("lang"), col("n_chars"),
         size(col("tk")).cast("long").as("nt"),
         expr(s"size(filter(tk, t -> t IN (${stop.map("'" + _ + "'").mkString(",")})))")
@@ -550,9 +541,8 @@ object TextOps {
     val topk = udaf(new graft.agg.TopKAgg(k))
     graft.Tables
       .documents(s, dir)
-      .select(split(col("text"), " ").as("toks"))
-      .select(graft.functions.PolyHash31
-        .polyhash31(col("toks")).getField("pp").as("tp"))
+      .select(Text.words(col("text")).as("toks"))
+      .select(PolyHash31.polyhash31(col("toks")).getField("pp").as("tp"))
       .select(explode(tokenTrigramHashes).as("h"))
       .distinct()
       .agg(topk(col("h"), col("h")).as("arr"),
@@ -569,11 +559,8 @@ object TextOps {
 
   private val sketchKmvDistinctSql =
     s"""WITH tp AS (
-      |  SELECT list_transform(string_split(text, ' '), t ->
-      |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |      list_transform(range(1, length(t) + 1),
-      |                     i -> CAST(ascii(substring(t, i, 1)) AS BIGINT))),
-      |      (h, c) -> (h * 31 + c) % 1000000007)) AS tp
+      |  SELECT list_transform(${Text.wordsSql}, t ->
+      |    ${PolyHash31.foldSql("t")}) AS tp
       |  FROM documents),
       |hashes AS (
       |  SELECT DISTINCT $tokenTrigramHashSql AS h
@@ -620,12 +607,10 @@ object TextOps {
         // failure modes on format drift (Spark's cast NULLs and silently
         // drops rows, DuckDB's throws) — a hash-of-whatever-string is
         // format-agnostic and fails identically or not at all.
-        pmod(element_at(graft.functions.PolyHash31
-          .polyhash31(array(col("source"))).getField("pp"), 1), lit(2))
+        pmod(element_at(PolyHash31.polyhash31(array(col("source"))).getField("pp"), 1), lit(2))
           .as("corpus"),
-        split(col("text"), " ").as("toks"))
-      .select(col("corpus"), graft.functions.PolyHash31
-        .polyhash31(col("toks")).getField("pp").as("tp"))
+        Text.words(col("text")).as("toks"))
+      .select(col("corpus"), PolyHash31.polyhash31(col("toks")).getField("pp").as("tp"))
       .select(col("corpus"),
         explode(tokenTrigramHashes).as("h"))
       .distinct()
@@ -665,15 +650,9 @@ object TextOps {
 
   private val sketchKmvOverlapSql =
     s"""WITH tp AS (
-      |  SELECT list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |      list_transform(range(1, length(source) + 1),
-      |        i -> CAST(ascii(substring(source, i, 1)) AS BIGINT))),
-      |      (h, c) -> (h * 31 + c) % 1000000007) % 2 AS corpus,
-      |    list_transform(string_split(text, ' '), t ->
-      |      list_reduce(list_prepend(CAST(0 AS BIGINT),
-      |        list_transform(range(1, length(t) + 1),
-      |                       i -> CAST(ascii(substring(t, i, 1)) AS BIGINT))),
-      |        (h, c) -> (h * 31 + c) % 1000000007)) AS tp
+      |  SELECT ${PolyHash31.foldSql("source")} % 2 AS corpus,
+      |    list_transform(${Text.wordsSql}, t ->
+      |      ${PolyHash31.foldSql("t")}) AS tp
       |  FROM documents),
       |dfh AS (
       |  SELECT DISTINCT corpus, $tokenTrigramHashSql AS h
@@ -754,7 +733,7 @@ object TextOps {
     */
   private def heavyHitters(s: SparkSession, dir: String): DataFrame = {
     def toksOf(df: DataFrame): DataFrame = df
-      .select(explode(split(coalesce(col("text"), lit("")), " ")).as("tok"))
+      .select(explode(Text.tokens(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
     val toks = toksOf(Tables.documents(s, dir))
     val cands = graft.DimCache.cached(s"heavyHitters:$dir") {
@@ -770,8 +749,8 @@ object TextOps {
   }
 
   private val heavyHittersSql =
-    """WITH t AS (
-      |  SELECT unnest(string_split(coalesce(text, ''), ' ')) AS tok
+    s"""WITH t AS (
+      |  SELECT unnest(${Text.tokensSql()}) AS tok
       |  FROM documents),
       |t2 AS (SELECT tok FROM t WHERE length(tok) > 0),
       |n AS (SELECT count(*) AS n_total FROM t2)
@@ -796,7 +775,7 @@ object TextOps {
       // size(null) = -1 would fabricate n_tokens = -1 / dup_word_ratio = 0
       // while the twin yields NULLs — a divergence the null-free synthetic
       // corpus can't catch but real corpora would.
-      .select(col("doc_id"), toks(coalesce(col("text"), lit(""))).as("tk"))
+      .select(col("doc_id"), Text.tokens(col("text")).as("tk"))
       .select(
         col("doc_id"),
         size(col("tk")).as("n_tokens"),
@@ -829,7 +808,7 @@ object TextOps {
     * same single IEEE divisions.
     */
   private val textRepetitionSql =
-    """WITH t AS (SELECT doc_id, string_split(coalesce(text, ''), ' ') AS tk FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${Text.tokensSql()} AS tk FROM documents),
       |g AS (
       |  SELECT doc_id, len(tk) AS n_tokens, len(list_distinct(tk)) AS n_distinct,
       |    CASE WHEN len(tk) >= 2 THEN
@@ -911,7 +890,7 @@ object TextOps {
     val pairs = Tables
       .documents(s, dir)
       .select(col("doc_id"),
-        explode(split(coalesce(col("text"), lit("")), " ")).as("tok"))
+        explode(Text.tokens(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
       .distinct()
     val dfTab = pairs.groupBy(col("tok")).agg(count(lit(1)).as("df"))
@@ -923,9 +902,9 @@ object TextOps {
     Tables
       .documents(s, dir)
       .crossJoin(broadcast(commons))
+      .select(col("doc_id"), Text.tokens(col("text")).as("tk"), col("commons"))
       .select(col("doc_id"),
-        expr("filter(split(coalesce(text, ''), ' '), " +
-          "t -> length(t) > 0 AND NOT array_contains(commons, t))").as("kept"))
+        expr("filter(tk, t -> length(t) > 0 AND NOT array_contains(commons, t))").as("kept"))
       .select(col("doc_id"),
         size(col("kept")).cast(LongType).as("n_kept"),
         graft.ArrCanon.joined(slice(col("kept"), 1, 8)).as("head_kept"))
@@ -934,7 +913,7 @@ object TextOps {
   private val dfPruneSql =
     s"""WITH pairs AS (
        |  SELECT DISTINCT doc_id, tok FROM (
-       |    SELECT doc_id, unnest(string_split(coalesce(text, ''), ' ')) AS tok
+       |    SELECT doc_id, unnest(${Text.tokensSql()}) AS tok
        |    FROM documents) t
        |  WHERE length(tok) > 0),
        |dfq AS (SELECT tok, count(*) AS df FROM pairs GROUP BY tok),
@@ -946,7 +925,7 @@ object TextOps {
        |  ${graft.ArrCanon.joinedSql("list_slice(kept, 1, 8)")} AS head_kept
        |FROM (
        |  SELECT doc_id,
-       |    list_filter(string_split(coalesce(text, ''), ' '),
+       |    list_filter(${Text.tokensSql()},
        |      t -> length(t) > 0 AND NOT list_contains(commons, t)) AS kept
        |  FROM documents, common)""".stripMargin
 
@@ -972,7 +951,7 @@ object TextOps {
   private def textLmScore(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables
       .documents(s, dir)
-      .select(col("doc_id"), toks(coalesce(col("text"), lit(""))).as("tk"))
+      .select(col("doc_id"), Text.tokens(col("text")).as("tk"))
     // exploded bigram stream: (doc_id, first token, "w1 w2")
     val e = docs
       .filter(size(col("tk")) >= 2)
@@ -1017,7 +996,7 @@ object TextOps {
   private val textLmScoreSql = {
     val lp = "ln(CAST(c12 + 1 AS DOUBLE) / (c1 + v))"
     s"""WITH d AS (
-       |  SELECT doc_id, string_split(coalesce(text, ''), ' ') AS tk
+       |  SELECT doc_id, ${Text.tokensSql()} AS tk
        |  FROM documents),
        |e AS (
        |  SELECT doc_id, tk[i + 1] AS w1, tk[i + 1] || ' ' || tk[i + 2] AS g
@@ -1058,7 +1037,7 @@ object TextOps {
     val freq = graft.operators.GlobalOrder.rowNumber(
       Tables
         .documents(s, dir)
-        .select(explode(toks(coalesce(col("text"), lit(""))))
+        .select(explode(Text.tokens(col("text")))
           .as("tok"))
         .filter(length(col("tok")) > 0)
         .groupBy(col("tok"))
@@ -1072,9 +1051,9 @@ object TextOps {
   }
 
   private val zipfOlsSql =
-    """WITH freq AS (
+    s"""WITH freq AS (
       |  SELECT tok, count(*) AS c FROM (
-      |    SELECT unnest(string_split(coalesce(text, ''), ' ')) AS tok
+      |    SELECT unnest(${Text.tokensSql()}) AS tok
       |    FROM documents) t
       |  WHERE length(tok) > 0 GROUP BY tok),
       |pts AS (
@@ -1124,7 +1103,7 @@ object TextOps {
   private def collocationPmi(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables
       .documents(s, dir)
-      .select(toks(coalesce(col("text"), lit(""))).as("tk"))
+      .select(Text.tokens(col("text")).as("tk"))
     val e = docs
       .filter(size(col("tk")) >= 2)
       .select(explode(sequence(lit(0), size(col("tk")) - 2)).as("i"),
@@ -1148,8 +1127,8 @@ object TextOps {
   }
 
   private val collocationPmiSql =
-    """WITH d AS (
-      |  SELECT string_split(coalesce(text, ''), ' ') AS tk FROM documents),
+    s"""WITH d AS (
+      |  SELECT ${Text.tokensSql()} AS tk FROM documents),
       |e AS (
       |  SELECT tk[i + 1] AS w1, tk[i + 2] AS w2
       |  FROM d, unnest(range(0, len(tk) - 1)) AS u(i)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Similarity, Text}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -777,9 +777,6 @@ object Streams {
     StructField("doc_id", LongType, nullable = false),
     StructField("text", StringType)))
 
-  def readDocStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(docSchema).parquet(dir)
-
   /** Ingest-time benchmark decontamination — the streaming face of
     * `decontaminate_ngrams` (reference semantics:
     * `python/cudf/cudf/core/column/string.py` n-gram surface composed
@@ -802,17 +799,9 @@ object Streams {
     * batch answer).
     */
   def decontaminateStream(docs: DataFrame, benchGrams: DataFrame): DataFrame =
-    docs
-      .filter(pmod(col("doc_id"), lit(100)) =!= 0)
-      .withWatermark("ts", "10 minutes")
-      .select(col("doc_id"), col("ts"),
-        split(coalesce(col("text"), lit("")), " ").as("tk"))
-      .filter(size(col("tk")) >= 4)
-      .select(col("doc_id"), col("ts"),
-        explode(array_distinct(expr(
-          """transform(sequence(0, size(tk) - 4),
-            |  i -> concat_ws(' ', slice(tk, i + 1, 4)))""".stripMargin)))
-          .as("g8"))
+    Text.distinctWordNgrams(
+        docs.filter(pmod(col("doc_id"), lit(100)) =!= 0).withWatermark("ts", "10 minutes"),
+        4, Seq("doc_id", "ts"))
       .join(benchGrams, Seq("g8"), "left_semi")
       .groupBy(window(col("ts"), "10 minutes"), col("doc_id"))
       .agg(count(lit(1)).as("n_shared_grams"))
@@ -836,8 +825,7 @@ object Streams {
   def postingsMaintain(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
     val pairs = docs
-      .select(col("doc_id"), explode(expr(
-        "array_distinct(array_remove(split(coalesce(text, ''), ' '), ''))"))
+      .select(col("doc_id"), explode(array_distinct(Text.nonEmptyTokens(col("text"))))
         .as("tok"))
       .as[(Long, String)]
     pairs

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
-import scala.jdk.CollectionConverters._
 
 import graft.operators.{Banding, Dedup}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -232,22 +230,11 @@ class DedupBucketSpec extends AnyFunSuite {
   test("the shingle, the seeded poly-min and the prehash CTE are written once, in Dedup") {
     // a restated copy drifts from its oracle twin and multiplies the
     // sites a native kernel has to replace
-    val root = Paths.get("src/main/scala/graft")
-    assume(Files.isDirectory(root), s"run from the repo root (cwd=${Paths.get("").toAbsolutePath})")
-    val sources = Files.walk(root).iterator().asScala.toSeq
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
-    val pieces = Seq(
+    SourceAudit.writtenOnce("operators/Dedup.scala",
       "word-3-gram shingle lambda" -> """concat_ws\("_", element_at\(""".r,
       "Spark seeded poly-min" -> """(?s)zip_with\([^%]{0,120}% 1000000007""".r,
       "DuckDB seeded poly-min" -> """(?s)list_min\(list_transform\([^%]{0,120}% 1000000007""".r,
       "31-fold prehash CTE" -> """prehashed AS \(""".r)
-    val sites = for ((piece, re) <- pieces) yield piece -> sources.flatMap { case (f, src) =>
-      Seq.fill(re.findAllIn(src).size)(f)
-    }
-    val wrong = sites.filter(_._2 != Seq("operators/Dedup.scala"))
-    assert(wrong.isEmpty, wrong.map { case (p, fs) => s"$p at ${fs.mkString(", ")}" }
-      .mkString("expected once, in operators/Dedup.scala: ", "; ", ""))
   }
 
   test("Scans.fanOut reads partitions from the plan: no job on the exact-dedup shape") {
