@@ -1,22 +1,25 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.graftbridge.HarnessProbes
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The harness mains' one engine session and one timing core.
   *
   * `session()` is the only place the library builds a `SparkSession`.
-  * `measure` is its one timer: it returns the wall of a span with the
-  * per-stage task metrics and codegen compilations inside it. `timed`
-  * is the one query span on top of it — the builder call through the
-  * completed noop write.
+  * `measure` is its one timer and its one recorder: it returns the wall
+  * of a span with the stages, jobs, codegen compilations and executed
+  * plans inside it. `timed` is the one query span on top of it — the
+  * builder call through the completed noop write. `nodes` is the one
+  * walk over an executed plan.
   *
   * As a main it is the per-stage profiler: each named query runs cold,
   * then warm, then once more after a [[settle]], and the last
@@ -53,11 +56,13 @@ object Harness {
     def wallMs: Long = endMs - submitMs
   }
 
-  /** What one timed call cost: its wall, the stages it ran, and the
-    * generated classes it compiled (codegen-cache misses).
+  /** What one timed call cost: its wall, the stages it ran, the
+    * generated classes it compiled (codegen-cache misses), the jobs it
+    * started, and the query executions it ran (queries, writes and
+    * streaming micro-batches, failed ones included) in completion order.
     */
   final case class Sample(name: String, secs: Double, stages: Seq[Stage],
-      compiles: Long, compileMs: Double) {
+      compiles: Long, compileMs: Double, jobs: Int, plans: Seq[QueryExecution]) {
 
     /** Milliseconds in which at least one stage was running. */
     def stageUnionMs: Long =
@@ -68,8 +73,14 @@ object Harness {
         }._1
   }
 
-  private final class StageLog extends SparkListener {
+  /** The span recorder: completed stages and started jobs from the
+    * listener bus, and the session's query executions.
+    */
+  private final class Recorder extends SparkListener with QueryExecutionListener {
     val stages = new ConcurrentLinkedQueue[Stage]()
+    val jobs = new AtomicInteger(0)
+    val plans = new ConcurrentLinkedQueue[QueryExecution]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       val i = e.stageInfo
       val m = i.taskMetrics
@@ -81,6 +92,10 @@ object Harness {
         m.inputMetrics.bytesRead, m.memoryBytesSpilled + m.diskBytesSpilled,
         i.numTasks))
     }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      plans.add(qe)
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+      plans.add(qe)
   }
 
   /** Runs `body` on the active session and returns its value with the
@@ -89,10 +104,12 @@ object Harness {
     * drain is inside the wall.
     */
   def measure[T](name: String)(body: => T): (T, Sample) = {
-    val sc = SparkSession.active.sparkContext
+    val spark = SparkSession.active
+    val sc = spark.sparkContext
     HarnessProbes.drain(sc)
-    val log = new StageLog
-    sc.addSparkListener(log)
+    val rec = new Recorder
+    sc.addSparkListener(rec)
+    spark.listenerManager.register(rec)
     try {
       val (c0, n0) = (HarnessProbes.compiles, HarnessProbes.compileNanos)
       val t0 = System.nanoTime()
@@ -100,9 +117,12 @@ object Harness {
       val secs = (System.nanoTime() - t0) / 1e9
       val (c1, n1) = (HarnessProbes.compiles, HarnessProbes.compileNanos)
       HarnessProbes.drain(sc)
-      (out, Sample(name, secs, log.stages.asScala.toSeq.sortBy(_.id),
-        c1 - c0, (n1 - n0) / 1e6))
-    } finally sc.removeSparkListener(log)
+      (out, Sample(name, secs, rec.stages.asScala.toSeq.sortBy(_.id),
+        c1 - c0, (n1 - n0) / 1e6, rec.jobs.get, rec.plans.asScala.toSeq))
+    } finally {
+      spark.listenerManager.unregister(rec)
+      sc.removeSparkListener(rec)
+    }
   }
 
   /** Times a query: the builder call through the completed noop write
@@ -135,18 +155,25 @@ object Harness {
     Thread.sleep(200)
   }
 
+  /** Every physical node of `plan`, including the plans a command result,
+    * an adaptive plan or a query stage wraps, and subqueries.
+    */
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = {
+    val inner = plan match {
+      case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => Nil
+    }
+    plan +: (plan.children ++ inner ++ plan.subqueries).flatMap(nodes)
+  }
+
   /** Rows the parquet scans of an executed `df` produced, after row-group
     * and partition pruning.
     */
-  def rowsScanned(df: DataFrame): Long = {
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
-    scans(df.queryExecution.executedPlan).map(_.metrics("numOutputRows").value).sum
-  }
+  def rowsScanned(df: DataFrame): Long =
+    nodes(df.queryExecution.executedPlan)
+      .collect { case f: FileSourceScanExec => f.metrics("numOutputRows").value }.sum
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.Harness <sfDir> [q1,q2,...]")

@@ -4,9 +4,9 @@ package graft
   * (`StreamEvictionSpec` pins the riskiest rows in the test suite).
   *
   * For every [[Tag.Gate]] row, run the full replay twice in one
-  * JVM — default HDFSBackedStateStoreProvider, then
-  * RocksDBStateStoreProvider via the same `graft.stateProvider` sysprop
-  * the harness env flag (`SPARK_GRAFT_STATE_PROVIDER`) routes through —
+  * JVM — the session's own provider, which must be Spark's default
+  * HDFSBackedStateStoreProvider, then RocksDBStateStoreProvider, set as
+  * `spark.sql.streaming.stateStore.providerClass` for that leg only —
   * and assert sink equality row for row (canonical sort; values
   * compared verbatim). The `flatMapGroupsWithState` shapes (sessionize,
   * SCD2, z-score ring, start-state handoff) are where a provider swap
@@ -20,14 +20,11 @@ package graft
   * Usage: `sbt "runMain graft.StreamParity [sfDir]"` (default sf0.01).
   */
 object StreamParity {
+  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+  private val rocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   def main(args: Array[String]): Unit = {
-    // The sweep's base leg relies on the DEFAULT provider; the harness
-    // env flag routes every applyStateProvider call through RocksDB, so
-    // a sweep launched with it set would compare RocksDB to RocksDB and
-    // report parity:true vacuously. Refuse to run at all.
-    require(!sys.env.contains("SPARK_GRAFT_STATE_PROVIDER"),
-      "StreamParity must run WITHOUT SPARK_GRAFT_STATE_PROVIDER set — " +
-        "the base leg would silently route through RocksDB too")
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = Harness.session()
 
@@ -36,24 +33,17 @@ object StreamParity {
     names.foreach { n =>
       def rows(): Seq[String] =
         SparkEntry.queries(n)(spark, sfDir).collect().map(_.toString).sorted.toSeq
-      System.clearProperty("graft.stateProvider")
       val (base, sBase) = Harness.measure(s"$n default")(rows())
-      // symmetric to provider_applied below: the base leg must NOT have
-      // routed through RocksDB (applyStateProvider unsets the conf when
-      // no flag is present, so any RocksDB residue here is a leak)
-      val baseDefault = !spark.conf
-        .getOption("spark.sql.streaming.stateStore.providerClass")
-        .exists(_.contains("RocksDBStateStoreProvider"))
-      System.setProperty("graft.stateProvider", "rocksdb")
-      val (rocks, sRocks) =
-        try Harness.measure(s"$n rocksdb")(rows())
-        finally System.clearProperty("graft.stateProvider")
-      // the flagged run really routed through the provider switch:
-      // applyStateProvider sets the conf inside the query's own replay
-      // and nothing unsets it until the next unflagged run
-      val applied = spark.conf
-        .getOption("spark.sql.streaming.stateStore.providerClass")
-        .exists(_.contains("RocksDBStateStoreProvider"))
+      // the base leg ran on the default provider: a RocksDB provider set
+      // on the session would make the sweep compare RocksDB to itself
+      val baseDefault = !spark.conf.getOption(providerKey).exists(_.contains("RocksDB"))
+      spark.conf.set(providerKey, rocksDb)
+      val (rocks, sRocks, applied) =
+        try {
+          val (r, sr) = Harness.measure(s"$n rocksdb")(rows())
+          // nothing in the row's run replaced the session's provider
+          (r, sr, spark.conf.getOption(providerKey).contains(rocksDb))
+        } finally spark.conf.unset(providerKey)
       val parity = base == rocks
       if (!parity || !applied || !baseDefault) failures += 1
       val firstDiff =

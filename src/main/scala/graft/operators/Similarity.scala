@@ -1061,10 +1061,19 @@ object Similarity {
     powerIterate(xq, d0, iters)
   }
 
-  /** floor(x·10⁶) quantization of the embedding column. */
-  private def quantized(emb: DataFrame): DataFrame = emb.select(
+  /** floor(x·10⁶) of each `embedding` element as a BIGINT array: the
+    * fixed-point input of the PCA power loop and of the label centroids.
+    */
+  def quantizedEmb: Column =
     expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000D) AS BIGINT))")
-      .as("xq"))
+
+  /** DuckDB twin of [[quantizedEmb]]. */
+  val quantizedEmbSql: String =
+    """list_transform(embedding,
+      |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT))""".stripMargin
+
+  /** The `xq` frame of [[quantizedEmb]]. */
+  private def quantized(emb: DataFrame): DataFrame = emb.select(quantizedEmb.as("xq"))
 
   /** One-row scan: (dims, rows, max|xq|) — the same scan that sizes the
     * start vector, so the envelope guard costs no extra corpus pass.
@@ -1207,10 +1216,9 @@ object Similarity {
     * and `dims(dim)`, 0 until d.
     */
   private val pcaInputCtes =
-    """dd AS MATERIALIZED (SELECT min(len(embedding)) AS d FROM embeddings),
+    s"""dd AS MATERIALIZED (SELECT min(len(embedding)) AS d FROM embeddings),
       |xq AS MATERIALIZED (
-      |  SELECT list_transform(embedding,
-      |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS xq
+      |  SELECT $quantizedEmbSql AS xq
       |  FROM embeddings),
       |dims AS MATERIALIZED (SELECT unnest(range(0, (SELECT d FROM dd))) AS dim)""".stripMargin
 

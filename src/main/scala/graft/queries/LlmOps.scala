@@ -620,7 +620,8 @@ object LlmOps {
     * training consumes it). Centroids are integer fixed-point: per-dim
     * member sums of floor(x·10⁶) divided (div) by the member count, so
     * both engines hold the IDENTICAL centroid; the member↔centroid
-    * cosine is then the same IEEE expression over those integers, and
+    * cosine is then `Similarity.cosine` (and its DuckDB twin) over
+    * those integers cast to double, and
     * the per-label average rides the floored-micro sum (order-
     * independent). Hash-exact end to end.
     *
@@ -631,11 +632,7 @@ object LlmOps {
     * |labels|-group aggregate. The corpus never self-joins.
     */
   private def embLabelQuality(s: SparkSession, dir: String): DataFrame = {
-    val xq = Tables
-      .embeddings(s, dir)
-      .select(col("label"),
-        expr("transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000D) AS BIGINT))")
-          .as("xq"))
+    val xq = Tables.embeddings(s, dir).select(col("label"), Similarity.quantizedEmb.as("xq"))
     val cent = xq
       .select(col("label"), posexplode(col("xq")).as(Seq("dim", "x")))
       .groupBy(col("label"), col("dim"))
@@ -643,19 +640,11 @@ object LlmOps {
       .select(col("label"), col("dim"), expr("sx div n").as("c"))
       .groupBy(col("label"))
       .agg(sort_array(collect_list(struct(col("dim"), col("c")))).as("dc"))
-      .select(col("label"),
-        expr("transform(dc, p -> p.c)").as("cent"))
+      .select(col("label"), col("dc.c").as("cent"))
+    val doubles = ArrayType(DoubleType)
     xq.join(broadcast(cent), Seq("label"))
       .select(col("label"),
-        expr("""aggregate(zip_with(xq, cent, (a, b) ->
-            CAST(a AS DOUBLE) * CAST(b AS DOUBLE)),
-            CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""").as("dot"),
-        expr("""aggregate(transform(xq, a -> CAST(a AS DOUBLE) * CAST(a AS DOUBLE)),
-            CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""").as("na"),
-        expr("""aggregate(transform(cent, b -> CAST(b AS DOUBLE) * CAST(b AS DOUBLE)),
-            CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""").as("nb"))
-      .select(col("label"),
-        (col("dot") / (sqrt(col("na")) * sqrt(col("nb")))).as("cos"))
+        Similarity.cosine(col("xq").cast(doubles), col("cent").cast(doubles)).as("cos"))
       .groupBy(col("label"))
       .agg(count(lit(1)).as("n_vecs"),
         graft.Agg.dsum(col("cos"), 6).as("avg_raw"))
@@ -665,8 +654,7 @@ object LlmOps {
 
   private val embLabelQualitySql =
     s"""WITH xq AS (
-       |  SELECT label, list_transform(embedding,
-       |    x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS xq
+       |  SELECT label, ${Similarity.quantizedEmbSql} AS xq
        |  FROM embeddings),
        |dims AS (
        |  SELECT label, u.dim, sum(xq[u.dim + 1]) AS sx, count(*) AS n

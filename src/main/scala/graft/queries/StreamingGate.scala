@@ -893,7 +893,6 @@ object StreamingGate {
     val cp = DimCache.tempDir("graft-gate-cpr-cp")
     def writer() = plan.writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", cp)
-    Streams.applyStateProvider(s) // same flag routing as runToCompletion
     val q1 = writer().start()
     val deadline = System.currentTimeMillis() + 60000
     while (q1.recentProgress.count(_.numInputRows > 0) < 1 &&

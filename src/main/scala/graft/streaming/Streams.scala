@@ -891,38 +891,6 @@ object Streams {
       .toDF("event_type", "n_events", "cents")
   }
 
-  /** State-store provider selection, a harness switch:
-    * `SPARK_GRAFT_STATE_PROVIDER=rocksdb` (env, for driver runs) or
-    * `-Dgraft.stateProvider=rocksdb` (sysprop, for in-JVM specs) routes
-    * EVERY gate/bench streaming query through RocksDBStateStoreProvider
-    * — state lives off-heap/on-disk per partition, the provider a 100 TB
-    * deployment would run to keep multi-GB key spaces out of executor
-    * heaps. Unset
-    * ⇒ Spark's default HDFSBackedStateStoreProvider. The conf is
-    * set-or-unset on EVERY call so one flagged run can't leak its
-    * provider into a later unflagged query in the same session.
-    */
-  private val providerClasses = Map(
-    "rocksdb" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    "hdfs" ->
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-  // public: the checkpoint-resume gate row starts its own queries
-  // (kill/resume needs direct start() control) and routes them through
-  // the same flag as every memory-sink row
-  def applyStateProvider(spark: SparkSession): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    sys.props.get("graft.stateProvider")
-      .orElse(sys.env.get("SPARK_GRAFT_STATE_PROVIDER")) match {
-      case Some(p) =>
-        val cls = providerClasses.getOrElse(p.toLowerCase,
-          sys.error(s"unknown state provider '$p' " +
-            s"(expected one of ${providerClasses.keys.mkString("/")})"))
-        spark.conf.set(key, cls)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Run a streaming query to completion against a static replay dir and
     * return the in-memory sink table, registered as the temp view `name`
     * (the caller owns that view and drops it when done); `checkpoint`
@@ -935,7 +903,6 @@ object Streams {
       mode: String = "update",
       checkpoint: Option[String] = None,
       requireSingleDataBatch: Boolean = false): DataFrame = {
-    applyStateProvider(spark)
     var w = df.writeStream
       .outputMode(mode)
       .format("memory")

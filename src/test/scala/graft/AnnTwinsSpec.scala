@@ -15,6 +15,8 @@ class AnnTwinsSpec extends AnyFunSuite {
       "per-dimension bounds CTE" -> """min\(e\[ix\.i\]\)""".r,
       "SQ8 quantize" -> """floor\(\(\$?[a-z]+\[i\] - mnl\[i\]\)""".r,
       "recall tail" -> """count\(\*\) AS nh""".r,
-      "power-step renormalization" -> """u // greatest\(m // 1000000, 1\)""".r)
+      "power-step renormalization" -> """u // greatest\(m // 1000000, 1\)""".r,
+      "Spark fixed-point quantize" -> """floor\(CAST\(x AS DOUBLE\) \* 1000000D\)""".r,
+      "DuckDB fixed-point quantize" -> """floor\(CAST\(x AS DOUBLE\) \* 1000000\)""".r)
   }
 }

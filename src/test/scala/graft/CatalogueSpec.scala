@@ -86,6 +86,17 @@ class CatalogueSpec extends AnyFunSuite {
       s"amp10x rows without Headline: ${amp.filterNot(tagged(Headline))}")
   }
 
+  test("the rows with no oracle SQL are the pinned 12") {
+    // each one's answer is checked by a spec case instead of a hash: a
+    // 13th row without an oracle fails here
+    val noOracle = Set(
+      "agg_approx_distinct", "agg_percentile_approx", "agg_tdigest_quantiles",
+      "custom_string_exprs", "decontaminate_bloom", "dedup_minhash_lsh",
+      "dedup_minhash_sig", "dedup_simhash", "hash_spark_native", "sample_rows",
+      "stream_tdigest_window", "text_bpe")
+    assert(SparkEntry.registry.keySet -- SparkEntry.oracleSql.keySet == noOracle)
+  }
+
   test("a row filter names every stray row and keeps the harness order") {
     val rows = Seq("ndsh_q9", "ndsh_q1", "sim_cosine_topk")
     assert(SparkEntry.restrict(rows, None) == rows)

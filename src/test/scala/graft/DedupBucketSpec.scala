@@ -1,11 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.operators.{Banding, Dedup}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.HarnessProbes
 import org.scalatest.funsuite.AnyFunSuite
 
 class DedupBucketSpec extends AnyFunSuite {
@@ -245,25 +241,14 @@ class DedupBucketSpec extends AnyFunSuite {
       docs.groupBy(md5(col("text").cast("binary")).as("sig"))
         .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id")),
       Seq("doc_id"), "leftsemi")
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     withConf("spark.sql.adaptive.enabled" -> "true") {
-      HarnessProbes.drain(sc)
-      sc.addSparkListener(listener)
-      val (fannedExact, fannedScan) =
-        try {
-          val r = (Scans.fanOut(exact), Scans.fanOut(docs))
-          HarnessProbes.drain(sc)
-          r
-        } finally sc.removeSparkListener(listener)
-      assert(jobs.get == 0, s"${jobs.get} jobs inside fanOut")
+      val ((fannedExact, fannedScan), sample) =
+        Harness.measure("fanOut")((Scans.fanOut(exact), Scans.fanOut(docs)))
+      assert(sample.jobs == 0, s"${sample.jobs} jobs inside fanOut")
       // the exchange already gives the session's shuffle partitions;
       // the one-file scan still fans out to the default parallelism
       assert(fannedExact eq exact)
-      assert(fannedScan.rdd.getNumPartitions == sc.defaultParallelism)
+      assert(fannedScan.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
     }
   }
 

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
@@ -48,15 +47,8 @@ class DimCacheSpec extends AnyFunSuite {
     assert(Paths.get(DimCache.artifactPath("other", "/elsewhere")).getParent == jvmRoot)
   }
 
-  private val root = Paths.get("src/main/scala/graft")
-
-  /** (path relative to `root`, contents) of every main source file. */
-  private def sources: Seq[(String, String)] = {
-    assume(Files.isDirectory(root), s"run from the repo root (cwd=${Paths.get("").toAbsolutePath})")
-    Files.walk(root).iterator().asScala.toSeq
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
-  }
+  /** (path relative to `src/main/scala/graft`, contents) of every main source file. */
+  private def sources: Seq[(String, String)] = SourceAudit.sources("src/main/scala/graft")
 
   test("every DimCache key prefix has exactly one definition site") {
     val call = """DimCache\.cached\(""".r

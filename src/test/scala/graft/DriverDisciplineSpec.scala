@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Driver-discipline audit: every `.collect()` in src/main is a
@@ -32,16 +29,8 @@ class DriverDisciplineSpec extends AnyFunSuite {
   )
 
   test("src/main .collect() inventory matches the audited golden") {
-    val root = Paths.get("src/main/scala/graft")
-    assume(Files.isDirectory(root), s"run from the repo root (cwd=${Paths.get("").toAbsolutePath})")
-    val found = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .map { p =>
-        val rel = root.relativize(p).toString
-        val n = "\\.collect\\(\\)".r
-          .findAllIn(new String(Files.readAllBytes(p), "UTF-8")).size
-        rel -> n
-      }
+    val found = SourceAudit.sources("src/main/scala/graft")
+      .map { case (rel, src) => rel -> "\\.collect\\(\\)".r.findAllIn(src).size }
       .filter(_._2 > 0)
       .toMap
     val added = found.toSeq.filter { case (f, n) => golden.getOrElse(f, 0) < n }

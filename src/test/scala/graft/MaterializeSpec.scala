@@ -1,8 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -88,18 +85,14 @@ class MaterializeSpec extends AnyFunSuite {
   }
 
   test("only Materialize cuts, caches or releases in the main sources") {
-    val root = Paths.get("src/main/scala")
-    assume(Files.isDirectory(root), s"run from the repo root (cwd=${Paths.get("").toAbsolutePath})")
     val call = """\.(localCheckpoint|cache|persist|unpersist|cacheQuery|uncacheQuery)\b|getPersistentRDDs""".r
     val comment = """^\s*(//|\*|/\*)""".r
-    val hits = Files.walk(root).iterator().asScala.toSeq
-      .filter(_.toString.endsWith(".scala"))
-      .flatMap { p =>
-        Files.readAllLines(p).asScala.zipWithIndex.collect {
-          case (line, i) if comment.findFirstIn(line).isEmpty && call.findFirstIn(line).nonEmpty =>
-            s"${root.relativize(p)}:${i + 1}"
-        }
+    val hits = SourceAudit.sources("src/main/scala").flatMap { case (f, src) =>
+      src.linesIterator.zipWithIndex.collect {
+        case (line, i) if comment.findFirstIn(line).isEmpty && call.findFirstIn(line).nonEmpty =>
+          s"$f:${i + 1}"
       }
+    }
     assert(hits.nonEmpty && hits.forall(_.startsWith("graft/Materialize.scala:")),
       s"materialization outside Materialize: ${hits.filterNot(_.startsWith("graft/Materialize.scala:"))}")
   }

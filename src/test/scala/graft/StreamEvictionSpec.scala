@@ -19,6 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamEvictionSpec extends AnyFunSuite {
   import TestSpark._
 
+  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
+  private val rocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   private def eventRows(rows: Seq[(Long, String, Long, String)]): DataFrame = {
     // (event_id, ts-literal, user_id, event_type)
     import spark.implicits._
@@ -189,17 +193,6 @@ class StreamEvictionSpec extends AnyFunSuite {
     assert(windowed == unbounded, s"$windowed vs $unbounded")
   }
 
-  /** RocksDB state-store parity (r17, promoting the r16 SCALING.md
-    * experiment to a harness-enforced contract): the SAME gate query —
-    * `stream_near_dedup`, the largest-state row (~1.2M signature keys)
-    * — must produce bit-identical output under
-    * HDFSBackedStateStoreProvider (default) and RocksDBStateStoreProvider
-    * (`-Dgraft.stateProvider=rocksdb`, the switch a 100 TB deployment
-    * flips to move state off-heap). Routed through the same
-    * `Streams.applyStateProvider` hook the driver's
-    * SPARK_GRAFT_STATE_PROVIDER env flag uses, so this spec certifies
-    * the exact code path the harness flag exercises.
-    */
   /** RocksDB parity, build-enforced on the `flatMapGroupsWithState`
     * shapes (r18, extending the single-row r17 test): sessionize, SCD2,
     * z-score ring, and start-state handoff round-trip rich case-class
@@ -216,36 +209,47 @@ class StreamEvictionSpec extends AnyFunSuite {
       SparkEntry.queries(n)(spark, sf).collect().map(_.toString).sorted.toSeq
     val defaults = shapes.map(n => n -> rows(n)).toMap
     defaults.foreach { case (n, r) => assert(r.nonEmpty, s"$n empty sink") }
-    System.setProperty("graft.stateProvider", "rocksdb")
-    try shapes.foreach { n =>
-      val rocks = rows(n)
-      assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        .contains("RocksDBStateStoreProvider"))
-      assert(rocks == defaults(n),
-        s"$n diverged under rocksdb: ${rocks.size} vs ${defaults(n).size} rows")
-    } finally System.clearProperty("graft.stateProvider")
+    withConf(providerKey -> rocksDb) {
+      shapes.foreach { n =>
+        val rocks = rows(n)
+        assert(spark.conf.get(providerKey).contains("RocksDBStateStoreProvider"))
+        assert(rocks == defaults(n),
+          s"$n diverged under rocksdb: ${rocks.size} vs ${defaults(n).size} rows")
+      }
+    }
   }
 
+  /** `stream_near_dedup`, the largest-state row (~1.2M signature keys),
+    * gives the same output under HDFSBackedStateStoreProvider (the
+    * default) and RocksDBStateStoreProvider, the provider a large
+    * deployment sets to move state off-heap.
+    */
   test("rocksdb state store: stream_near_dedup output is bit-identical") {
     def sigCounts(): Set[(String, Long)] =
       SparkEntry.queries("stream_near_dedup")(spark, sf).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
     val default = sigCounts()
     assert(default.nonEmpty)
-    System.setProperty("graft.stateProvider", "rocksdb")
-    try {
+    withConf(providerKey -> rocksDb) {
       val rocks = sigCounts()
-      // The rocksdb run really used the provider: the conf is set by
-      // applyStateProvider inside runToCompletion and persists on the
-      // session until the next (unflagged) call unsets it.
-      assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        .contains("RocksDBStateStoreProvider"))
+      // the rocksdb run kept the provider the session set
+      assert(spark.conf.get(providerKey).contains("RocksDBStateStoreProvider"))
       assert(rocks == default,
         s"provider changed results: ${rocks.size} vs ${default.size} sigs")
-    } finally System.clearProperty("graft.stateProvider")
-    // and an unflagged run restores the default provider
+    }
+    // and the session is back on the default provider
     sigCounts()
-    assert(!spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      .exists(_.contains("RocksDB")))
+    assert(!spark.conf.getOption(providerKey).exists(_.contains("RocksDB")))
+  }
+
+  test("a state-store provider set on the session survives a gate row's run") {
+    // the provider is plain session conf: neither the memory-sink runner
+    // nor the checkpoint row's own runner may reset or unset it
+    withConf(providerKey -> rocksDb) {
+      Seq("stream_session", "stream_checkpoint_resume").foreach { n =>
+        assert(SparkEntry.queries(n)(spark, sf).count() > 0, n)
+        assert(spark.conf.getOption(providerKey).contains(rocksDb), n)
+      }
+    }
   }
 }

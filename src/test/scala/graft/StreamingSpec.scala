@@ -2,14 +2,9 @@ package graft
 
 import graft.streaming.Streams
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, LambdaFunction, StringSplit}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.HarnessProbes
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming tests: replay the events table through a file
@@ -217,23 +212,15 @@ class StreamingSpec extends AnyFunSuite {
     Tables.documents(spark, sf).select(col("doc_id"), col("text")).limit(50)
       .withColumn("ts", expr("timestamp'2026-01-01 00:00:00'"))
       .coalesce(1).write.mode("overwrite").parquet(dir)
-    val plans = new ConcurrentLinkedQueue[LogicalPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(qe.optimizedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        plans.add(qe.optimizedPlan)
-    }
-    spark.listenerManager.register(listener)
-    try {
+    assert(spark eq SparkSession.active) // measure records on the active session
+    val plans = Harness.measure("t_neardup_split") {
       Streams.runToCompletion(spark,
         Streams.nearDedupStream(
           spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir), "ts"),
         "t_neardup_split", "append")
-      HarnessProbes.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
+    }._2.plans.map(_.optimizedPlan)
     def splits(e: Expression): Seq[StringSplit] = e.collect { case s: StringSplit => s }
-    val exprs = plans.asScala.toSeq.flatMap(_.flatMap(_.expressions))
+    val exprs = plans.flatMap(_.flatMap(_.expressions))
     assert(exprs.flatMap(splits).nonEmpty, "no recorded plan splits the text")
     val inLambda = exprs.flatMap(_.collect { case l: LambdaFunction => l })
       .filter(l => splits(l.function).nonEmpty)
@@ -474,31 +461,39 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming per-window t-digest quantiles stay inside the rank envelope") {
+    // two inputs: the operator over this spec's replay, and the
+    // registered rows-only gate row, which has no oracle to hash against
     val stream = Streams.readEventStream(spark, replayDir)
-    val got = Streams
+    val operator = Streams
       .runToCompletion(spark, Streams.tdigestWindowQuantiles(stream),
         "t_tdig", mode = "complete")
-    assert(got.count() > 0)
-    // exact per-window values for rank checking
+      .select(expr("unix_micros(win_start)").as("win_us"),
+        col("n_events"), col("p50_est"), col("p99_est"))
+    val gateRow = SparkEntry.queries("stream_tdigest_window")(spark, sf)
+    // exact per-window values for rank checking, keyed by window start
     val exact = Tables.events(spark, sf)
       .groupBy(window(col("ts"), "1 day"))
       .agg(collect_list(col("value")).as("vs"))
-      .select(col("window.start").as("win_start"), col("vs"))
+      .select(expr("unix_micros(window.start)").as("win_us"), col("vs"))
       .collect()
-      .map(r => r.getTimestamp(0) -> r.getSeq[Double](1).sorted.toIndexedSeq)
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).sorted.toIndexedSeq)
       .toMap
     def rankOf(sorted: IndexedSeq[Double], x: Double): Double = {
       val i = sorted.count(_ <= x)
       i.toDouble / sorted.length
     }
-    got.collect().foreach { r =>
-      val w = r.getTimestamp(0)
-      val vs = exact(w)
-      assert(r.getLong(1) == vs.length, s"window $w event count off")
-      val e50 = math.abs(rankOf(vs, r.getDouble(2)) - 0.5)
-      val e99 = math.abs(rankOf(vs, r.getDouble(3)) - 0.99)
-      assert(e50 <= 0.03, s"window $w p50 rank err $e50")
-      assert(e99 <= 0.03, s"window $w p99 rank err $e99")
+    Seq("tdigestWindowQuantiles" -> operator, "stream_tdigest_window" -> gateRow).foreach {
+      case (input, got) =>
+        assert(got.count() > 0, input)
+        got.collect().foreach { r =>
+          val w = r.getLong(0)
+          val vs = exact(w)
+          assert(r.getLong(1) == vs.length, s"$input window $w event count off")
+          val e50 = math.abs(rankOf(vs, r.getDouble(2)) - 0.5)
+          val e99 = math.abs(rankOf(vs, r.getDouble(3)) - 0.99)
+          assert(e50 <= 0.03, s"$input window $w p50 rank err $e50")
+          assert(e99 <= 0.03, s"$input window $w p99 rank err $e99")
+        }
     }
   }
 

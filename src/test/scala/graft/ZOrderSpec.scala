@@ -167,27 +167,17 @@ class ZOrderSpec extends AnyFunSuite {
     * same evidence metric Bench reports for the z-order scan.
     */
   test("parquet bloom filter prunes row groups where stats and dictionary cannot") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val dir = "/root/testdata/sf0.01" // 10k events -> several row groups
     val bloomPath = queries.Conversions.bloomedEventsPath(spark, dir, bloom = true)
     val plainPath = queries.Conversions.bloomedEventsPath(spark, dir, bloom = false)
     val probes = queries.Conversions.bloomProbeIds(spark, dir)
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(scans)
-    }
     def read(path: String, id: Long,
              opts: Map[String, String] = Map.empty): (Long, Seq[(Long, Long)]) = {
       val df = spark.read.options(opts).parquet(path)
         .filter(col("event_id") === id)
         .select(col("event_id"), col("user_id"))
       val out = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val rowsRead = scans(df.queryExecution.executedPlan)
-        .map(_.metrics("numOutputRows").value).sum
-      (rowsRead, out)
+      (Harness.rowsScanned(df), out)
     }
     val total = spark.read.parquet(plainPath).count()
     var bloomRead = 0L; var plainRead = 0L; var bloomOffRead = 0L
